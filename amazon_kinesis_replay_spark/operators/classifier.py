@@ -32,6 +32,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text import tokens_expr
+
 
 def hashed_features(df: DataFrame, id_col: str, text_col: str,
                     dim: int = 1024) -> DataFrame:
@@ -41,10 +43,9 @@ def hashed_features(df: DataFrame, id_col: str, text_col: str,
     normalization passes; collisions are part of the hashing-trick
     contract (they cost accuracy, never correctness of the pipeline).
     """
-    toks = F.array_distinct(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-    return (df.select(F.col(id_col).alias("id"),
-                      F.explode(toks).alias("__t"))
+    return (df.selectExpr(f"{id_col} AS id",
+                          f"explode(array_distinct({tokens_expr(text_col)}))"
+                          " AS __t")
             .select("id", F.pmod(F.xxhash64("__t"), F.lit(dim))
                     .alias("idx"))
             .distinct())

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .scanwidth import widen_if_narrow
+from .text import tokens_expr
 
 
 def _bt(name: str) -> str:
@@ -48,30 +49,12 @@ def distinct_rows(df: DataFrame, key_cols: list[str]) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _tokens(text_col: Column) -> Column:
-    return F.split(F.trim(F.lower(text_col)), r"\s+")
-
-
-def word_shingles(text_col: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles as an array column — computed with
-    transform over an index sequence, no explode needed until the op
-    requires per-shingle rows. Given a column NAME, composes one parsed
-    SQL expression (r13 construction-cost pass; value-equal by the same
-    ops — pinned via the oracle gates of every shingle consumer)."""
-    if isinstance(text_col, str):
-        return F.expr(word_shingles_expr(text_col, k))
-    toks = _tokens(text_col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
-    return F.array_distinct(
-        F.when(n >= k, grams).otherwise(F.array(F.concat_ws(" ", toks))))
-
-
 def word_shingles_expr(c: str, k: int = 3) -> str:
-    """SQL twin of `word_shingles` (c: column name / SQL fragment)."""
-    toks = f"split(trim(lower({c})), '\\\\s+')"
+    """Distinct word k-shingles of `c` (column name / SQL fragment) as an
+    array — computed with transform over an index sequence, no explode
+    needed until the op requires per-shingle rows. Documents shorter than
+    k tokens yield their whole token string as the single shingle."""
+    toks = tokens_expr(c)
     grams = (f"transform(sequence(0, greatest(size({toks}) - {k}, 0)), "
              f"i -> concat_ws(' ', slice({toks}, i + 1, {k})))")
     return (f"array_distinct(CASE WHEN size({toks}) >= {k} THEN {grams} "
@@ -308,7 +291,7 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str,
     # persist the result once and feed every leg from it.
     return df.select(
         F.col(id_col).alias("id"),
-        word_shingles(text_col, k).alias("shs"),
+        F.expr(word_shingles_expr(text_col, k)).alias("shs"),
         *[c.alias(n) for n, c in (extra or {}).items()])
 
 
@@ -517,7 +500,8 @@ def cross_split_contamination(df: DataFrame, id_col: str, text_col: str,
     # the hash build dedupes internally — a pre-distinct would only add a
     # full extra shuffle of the train shingles (measured r7: one fewer
     # shuffle stage, same pair set; per-doc shingles are already distinct
-    # from word_shingles, so only cross-doc repeats reach the build side).
+    # from word_shingles_expr, so only cross-doc repeats reach the build
+    # side).
     train_g = sh.filter(is_train).select("sid", "shingle")
     hits = (sh.filter(f"NOT {is_train}")
             .join(train_g, ["sid", "shingle"], "left_semi")
@@ -545,8 +529,8 @@ def simhash64(df: DataFrame, id_col: str, text_col: str,
     One explode + one groupBy with 64 integer sums — map-side combinable,
     scales linearly.
     """
-    toks = df.select(F.col(id_col).alias("id"),
-                     F.explode(_tokens(F.col(text_col))).alias("tok"))
+    toks = df.selectExpr(f"{id_col} AS id",
+                         f"explode({tokens_expr(text_col)}) AS tok")
     h = toks.withColumn("h", F.xxhash64("tok"))
     bit_sums = h.groupBy("id").agg(*[
         F.sum(F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1,
@@ -680,7 +664,7 @@ def _sign_band_keys(src: DataFrame, n_bands: int,
     paid ~8 py4j round trips per sign bit (~500 per call at 8x8) of
     plan-construction latency the bench bills to the query. Bucket
     VALUES are unchanged — same left-associated (bit*2+bit) chain, same
-    INT cast (pinned by test_sql_twin_builders_bit_equal)."""
+    INT cast (pinned by test_sign_band_keys_match_reference)."""
     def band_bucket_sql(b: int) -> str:
         bucket = "0"
         for j in range(band_bits):
@@ -717,7 +701,7 @@ def _verify_cosine_pairs(withn: DataFrame, cand_ids: DataFrame,
     no pair with exact cosine >= threshold can score below the margin
     (the tree-shaped fixed-width dot is pairwise summation — error at
     most the sequential bound). The expensive exact cosine then runs
-    only on survivors. Pre-filter dot: `_fast_dot_fixed` balanced tree
+    only on survivors. Pre-filter dot: `_fast_dot_fixed_sql` balanced tree
     when the caller pins `dim` (codegen'd; measured r7 0.69 s vs HOF
     0.87 s on the sf0.1 verify stage) — the left-deep unrolled chain and
     an Arrow pandas-UDF dot both MEASURED slower (chain 0.88 s; UDF
@@ -1206,10 +1190,10 @@ def window_occurrences(df: DataFrame, id_col: str, text_col: str,
     than `window` tokens emit nothing (a doc-length duplicate of a short
     doc is exact dedup's job, not substring dedup's).
 
-    Tokenization matches the module convention (`_tokens`: lower, trim,
+    Tokenization is the package tokenizer (`text.tokens_expr`: lower, trim,
     split on whitespace) so the same oracle CTE text applies.
     """
-    toks = _tokens(F.col(text_col))
+    toks = F.expr(tokens_expr(text_col))
     n = F.size(toks)
     idx = F.sequence(F.lit(0), n - F.lit(window))
     wins = F.transform(
@@ -1323,7 +1307,7 @@ def remove_duplicate_spans(df: DataFrame, spans: DataFrame, id_col: str,
     """
     agg = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans"))
-    toks = _tokens(F.col(text_col))
+    toks = F.expr(tokens_expr(text_col))
     joined = df.join(agg, id_col, "left")
     spans_arr = F.coalesce(
         F.col("__spans"),

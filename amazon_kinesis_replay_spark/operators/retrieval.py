@@ -46,7 +46,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens
+from .text import token_count_expr, tokens_expr
 
 #: Okapi defaults (public BM25 formulation).
 K1 = 1.2
@@ -59,11 +59,11 @@ def postings(docs: DataFrame, id_col: str = "doc_id",
              text_col: str = "text") -> DataFrame:
     """Inverted index rows (term, id, tf): one explode + one groupBy
     (map-side combinable — tf partials fold before the shuffle). Uses
-    the package-wide tokenizer (`text.tokens`: split(trim(lower),
+    the package-wide tokenizer (`text.tokens_expr`: split(trim(lower),
     \\s+)), so retrieval, dedup shingles, and classifier features all
     agree on token boundaries."""
-    return (docs.select(F.col(id_col).alias("id"),
-                        F.explode(tokens(F.col(text_col))).alias("term"))
+    return (docs.selectExpr(f"{id_col} AS id",
+                            f"explode({tokens_expr(text_col)}) AS term")
             .groupBy("term", "id")
             .agg(F.count("*").cast("long").alias("tf")))
 
@@ -73,9 +73,9 @@ def doc_lengths(docs: DataFrame, id_col: str = "doc_id",
     """(id, dl) token counts — the BM25 length-normalization table.
     Pure projection (no shuffle); dl counts ALL tokens, consistent with
     `postings` (Σ tf per doc == dl, an invariant the tests pin)."""
-    return docs.select(F.col(id_col).alias("id"),
-                       F.size(tokens(F.col(text_col)))
-                       .cast("long").alias("dl"))
+    return docs.selectExpr(
+        f"{id_col} AS id",
+        f"CAST({token_count_expr(text_col)} AS BIGINT) AS dl")
 
 
 def df_table(post: DataFrame) -> DataFrame:

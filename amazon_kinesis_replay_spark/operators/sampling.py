@@ -44,10 +44,11 @@ _SAMPLE_MULT = 2246822519
 _PPM = 1_000_000
 
 
-def hash_ppm(id_col: Column) -> Column:
+def hash_ppm_expr(id_sql: str) -> str:
     """Deterministic uniform-ish value in [0, 1e6) from an integer id —
     multiplicative hashing, the same family as the train/valid/test
-    split bucket. Pure column arithmetic, no RNG.
+    split bucket. Pure arithmetic, no RNG; the multiplier parses as
+    BIGINT, 1000000 as INT.
 
     Overflow-safe for the FULL long id range (r8 advice item): the
     double-pmod identity (id*M) % 1e6 == ((id%1e6)*M) % 1e6 keeps the
@@ -55,13 +56,6 @@ def hash_ppm(id_col: Column) -> Column:
     ids >= ~4.1e9, exactly the id spaces a 100 TB corpus has. Values
     are unchanged wherever the old form didn't overflow; the
     doc_train_split oracle SQL mirrors the same rewrite."""
-    return F.pmod(F.pmod(id_col.cast("long"), F.lit(_PPM))
-                  * F.lit(_SAMPLE_MULT), F.lit(_PPM))
-
-
-def hash_ppm_expr(id_sql: str) -> str:
-    """SQL twin of `hash_ppm` (r13 construction-cost pass; same types —
-    the multiplier parses as BIGINT, {_PPM} as INT, like the lits)."""
     return (f"pmod(pmod(CAST({id_sql} AS BIGINT), {_PPM}) "
             f"* {_SAMPLE_MULT}, {_PPM})")
 
@@ -69,10 +63,10 @@ def hash_ppm_expr(id_sql: str) -> str:
 def deterministic_sample(df: DataFrame, id_col: str,
                          rate: float) -> DataFrame:
     """Uniform deterministic subsample: keep iff
-    hash_ppm(id) < floor(rate * 1e6). Stable under reruns, resumable,
+    hash_ppm_expr(id) < floor(rate * 1e6). Stable under reruns, resumable,
     and engine-portable — the property a 100 TB pipeline needs from a
     sample (a Bernoulli RNG sample is none of those)."""
-    return df.filter(hash_ppm(F.col(id_col)) < int(rate * _PPM))
+    return df.filter(f"{hash_ppm_expr(id_col)} < {int(rate * _PPM)}")
 
 
 def temperature_mixture_rates(df: DataFrame, domain_col: str,
@@ -188,7 +182,7 @@ def dsir_stats(df: DataFrame, id_col: str, text_col: str,
     """
     from . import text as _text
     g = (df.select(F.col(id_col).alias("__id"),
-                   F.explode(_text._word_ngrams(F.col(text_col), n))
+                   F.explode(_text._word_ngrams(text_col, n))
                    .alias("g"))
          .select("__id", "g.context", "g.token"))
     t = target_lm.select("context", "token", F.col("cnt").alias("__tc"))
@@ -235,7 +229,7 @@ def dsir_log_weights(df: DataFrame, id_col: str, text_col: str,
     r_ctx = raw_lm.groupBy("context").agg(
         F.sum("cnt").alias("__rctx"))
     g = (df.select(F.col(id_col).alias("__id"),
-                   F.explode(_text._word_ngrams(F.col(text_col), n))
+                   F.explode(_text._word_ngrams(text_col, n))
                    .alias("g"))
          .select("__id", "g.context", "g.token"))
     t = target_lm.select("context", "token", F.col("cnt").alias("__tc"))
@@ -260,7 +254,7 @@ def dsir_log_weights(df: DataFrame, id_col: str, text_col: str,
                     "log_w"))
 
 
-def _hashed_gram_buckets(text_col: Column, n_buckets: int,
+def _hashed_gram_buckets(text_col: str, n_buckets: int,
                          ns: tuple = (1, 2)) -> Column:
     """array<long> of hashed word-n-gram bucket ids — the DSIR paper's
     feature map (Xie et al. 2023, §2.2: hashed unigram+bigram counts
@@ -299,7 +293,7 @@ def dsir_hashed_counts(df: DataFrame, text_col: str,
     re-scanning history. One explode + one map-side-combinable groupBy;
     the corpus model is at most n_buckets rows regardless of input."""
     cols = ([F.col(id_col)] if id_col else []) + [
-        F.explode(_hashed_gram_buckets(F.col(text_col), n_buckets, ns))
+        F.explode(_hashed_gram_buckets(text_col, n_buckets, ns))
         .alias("bucket")]
     keys = ([id_col] if id_col else []) + ["bucket"]
     return (df.select(*cols).groupBy(*keys)
@@ -426,7 +420,7 @@ def perplexity_bucket_sample(scores: DataFrame, id_col: str,
     """The CCNet sampling step over the buckets: keep each bucket at its
     own rate (default: all of head, half of middle, a tenth of tail —
     the classic downweight-the-noisy-tail mixture). Membership is the
-    deterministic hash_ppm verdict, so the sample is rerun-stable and
+    deterministic hash_ppm_expr verdict, so the sample is rerun-stable and
     needs no RNG state. NULL-bucket docs (short texts) are dropped with
     rate 0 unless `keep` maps None explicitly. Output adds
     (ppl_bucket, ppl_rate_ppm, ppl_kept)."""
@@ -441,8 +435,8 @@ def perplexity_bucket_sample(scores: DataFrame, id_col: str,
         else:
             rate = F.when(F.col("ppl_bucket") == name, ppm).otherwise(rate)
     return (b.withColumn("ppl_rate_ppm", rate.cast("long"))
-            .withColumn("ppl_kept",
-                        hash_ppm(F.col(id_col)) < F.col("ppl_rate_ppm")))
+            .withColumn("ppl_kept", F.expr(
+                f"{hash_ppm_expr(id_col)} < ppl_rate_ppm")))
 
 
 def dsir_sample(weights: DataFrame, id_col: str, k: int,
@@ -452,7 +446,7 @@ def dsir_sample(weights: DataFrame, id_col: str, k: int,
     log_w + Gumbel noise, take the k largest — equivalent to sampling k
     items without replacement with probability proportional to w (the
     Gumbel-max trick). The noise is DERIVED from the id hash
-    (u = (hash_ppm + 0.5) / 1e6, g = -ln(-ln u)) so the sample is
+    (u = (hash_ppm_expr + 0.5) / 1e6, g = -ln(-ln u)) so the sample is
     deterministic and rerun-stable; NULL-weight rows (short docs) are
     excluded. The global top-k is a TakeOrdered — no full sort.
 
@@ -461,8 +455,8 @@ def dsir_sample(weights: DataFrame, id_col: str, k: int,
     extreme-ratio documents would otherwise be sampled almost surely
     and dominate the draw; clipped docs still rank above unclipped ones
     of lower weight, but compete on noise among themselves)."""
-    u = (hash_ppm(F.col(id_col)).cast("double") + F.lit(0.5)) \
-        / F.lit(float(_PPM))
+    u = F.expr(f"(CAST({hash_ppm_expr(id_col)} AS DOUBLE) + 0.5D) "
+               f"/ {float(_PPM)}D")
     gumbel = -F.log(-F.log(u))
     w = F.col(log_w_col)
     if clip_log_w is not None:

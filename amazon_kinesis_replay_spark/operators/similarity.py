@@ -34,48 +34,70 @@ def _qprod(v: Column) -> Column:
     return F.floor(v * F.lit(_Q_SCALE) + F.lit(0.5))
 
 
-# --- SQL-string twins of the Column builders below (r13 optimization) ----
+# --- Expression builders ----------------------------------------------------
 #
-# Plan construction is billed to the query by the bench, and each py4j
-# round trip costs ~0.8 ms on this box; the Column forms of these
-# expressions paid tens of round trips per use. The _sql twins take the
-# operand's SQL text (a column name or a composed sub-expression) and
-# return one string a caller parses with a single F.expr/selectExpr call.
-# Every numeric literal carries the type the Column form produced
-# (D-suffixed doubles for F.lit(float), 0L for F.lit(0).cast("long")),
-# so the parsed tree computes bit-identical values — asserted against
-# the Column forms over real embedding pairs in
-# tests/test_pipeline_ops.py::test_sql_twin_builders_bit_equal.
+# The vector expressions are SQL-string builders: each takes its operands'
+# SQL text (a column name or a composed sub-expression) and returns one
+# string the caller parses once with F.expr/selectExpr — a Column chain
+# paid tens of py4j round trips (~0.8 ms each, r13 cProfile) per use,
+# billed to the query by the bench. Literal types are spelled out:
+# D-suffixed doubles, 0L for the long accumulator.
 
 def _exact_dot_sql(a: str, b: str) -> str:
-    """SQL twin of `_exact_dot` (values bit-identical)."""
+    """Order-independent, engine-exact dot product -> double: quantized
+    products (64 of them, each |q| <= ~4e12; see _Q_SCALE) sum exactly
+    in a long, and the long casts to double exactly (< 2^53)."""
     return (f"(CAST(aggregate(zip_with({a}, {b}, (x, y) -> "
             f"floor(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * 1.0E12D + 0.5D)), "
             f"0L, (acc, v) -> acc + v) AS DOUBLE) / 1.0E12D)")
 
 
 def _norm_sql(a: str) -> str:
-    """SQL twin of `_norm`."""
     return f"sqrt({_exact_dot_sql(a, a)})"
 
 
 def cosine_sql(a: str, b: str) -> str:
-    """SQL twin of `cosine`."""
+    """Engine-exact cosine: anything whose VALUES reach an oracle-checked
+    output scores with this. Three array traversals per call; the pair
+    and assignment joins hoist the norms (`_with_norm`)."""
     return f"({_exact_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}))"
 
 
 def _fast_dot_sql(a: str, b: str) -> str:
-    """SQL twin of `_fast_dot`."""
+    """Double-precision HOF dot product — per-row deterministic (arrays
+    fold in fixed order) but not cross-engine exact, ~4x cheaper than
+    `_exact_dot_sql`. The fastest JVM-side form for wide arrays: an
+    unrolled element_at chain falls out of whole-stage codegen at 64
+    terms and measured 2.4x SLOWER; an Arrow pandas-UDF dot only ties it
+    (transfer-bound). Keep pre-filter / training math on this; anything
+    whose VALUES reach an oracle-checked output uses `cosine_sql`."""
     return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
             f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
             f"(acc, v) -> acc + v)")
 
 
 def _fast_dot_fixed_sql(a: str, b: str, dim: int) -> str:
-    """SQL twin of `_fast_dot_fixed`: the identical balanced tree of
-    element_at products (explicit parentheses pin the same association,
-    so the pairwise summation is bit-identical), plus the same loud
-    width guard."""
+    """Double-precision dot for a KNOWN vector width, as a BALANCED TREE of
+    element_at products (explicit parentheses pin the association):
+    unlike the left-deep unrolled chain (measured 2.4x slower — codegen
+    splits it into a deep call chain) and the interpreted HOF
+    `_fast_dot_sql`, the log-depth tree stays inside whole-stage
+    codegen's method-split limits (measured r7 at sf0.1, 15k candidate
+    pairs: verify stage 0.69 s tree vs 0.87 s HOF vs 0.88 s chain).
+    Numerically at least as tight as the sequential fold (pairwise
+    summation), so every pre-filter margin argument for `_fast_dot_sql`
+    holds unchanged. Use when the corpus pins the dimension (embedding
+    tables do); dims ≳ a few hundred should stay on `_fast_dot_sql` —
+    expression size grows linearly and analysis cost eventually
+    dominates.
+
+    Width guard (r7 review): dim SMALLER than the true vector width
+    would silently truncate the dot (a pre-filter computed over a prefix
+    but normalized by full norms under-scores true pairs and drops them
+    before exact verification — silent recall loss). dim larger already
+    throws under ANSI element_at; the assert_true makes the short case
+    just as loud. It returns NULL when the predicate holds, so the
+    coalesce adds exactly 0.0 to the dot."""
     terms = [f"(CAST(element_at({a}, {i + 1}) AS DOUBLE) * "
              f"CAST(element_at({b}, {i + 1}) AS DOUBLE))"
              for i in range(dim)]
@@ -88,101 +110,20 @@ def _fast_dot_fixed_sql(a: str, b: str, dim: int) -> str:
     return f"({terms[0]} + {chk})"
 
 
-def _exact_dot(a: Column, b: Column) -> Column:
-    """Order-independent, engine-exact dot product -> double: quantized
-    products (64 of them, each |q| <= ~4e12) sum exactly in a long, and
-    the long casts to double exactly (< 2^53)."""
-    prods = F.zip_with(
-        a, b, lambda x, y: _qprod(x.cast("double") * y.cast("double")))
-    s = F.aggregate(prods, F.lit(0).cast("long"), lambda acc, v: acc + v)
-    return s.cast("double") / F.lit(_Q_SCALE)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(_exact_dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _exact_dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _fast_dot(a: Column, b: Column) -> Column:
-    """Double-precision HOF dot product — per-row deterministic (arrays
-    fold in fixed order) but not cross-engine exact. The fastest JVM-side
-    form for wide arrays: an unrolled element_at chain falls out of
-    whole-stage codegen at 64 terms and measured 2.4x SLOWER; an Arrow
-    pandas-UDF dot only ties it (transfer-bound). Keep pre-filter /
-    training math on this; anything whose VALUES reach an oracle-checked
-    output uses `_exact_dot`/`cosine`."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda p, q: p.cast("double") * q.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _fast_dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Double-precision dot for a KNOWN vector width, as a BALANCED TREE of
-    element_at products: unlike the left-deep unrolled chain (measured 2.4x
-    slower — codegen splits it into a deep call chain) and the interpreted
-    HOF `_fast_dot`, the log-depth tree stays inside whole-stage codegen's
-    method-split limits (measured r7 at sf0.1, 15k candidate pairs: verify
-    stage 0.69 s tree vs 0.87 s HOF vs 0.88 s chain). Numerically at least
-    as tight as the sequential fold (pairwise summation), so every
-    pre-filter margin argument for `_fast_dot` holds unchanged. Use when
-    the corpus pins the dimension (embedding tables do); dims ≳ a few
-    hundred should stay on `_fast_dot` — expression size grows linearly
-    and analysis cost eventually dominates."""
-    terms = [F.element_at(a, i + 1).cast("double")
-             * F.element_at(b, i + 1).cast("double") for i in range(dim)]
-    while len(terms) > 1:
-        terms = [terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-                 for i in range(0, len(terms), 2)]
-    # Width guard (r7 review): dim SMALLER than the true vector width
-    # would silently truncate the dot (a pre-filter computed over a
-    # prefix but normalized by full norms under-scores true pairs and
-    # drops them before exact verification — silent recall loss). dim
-    # larger already throws under ANSI element_at; make the short case
-    # just as loud. assert_true returns NULL when the predicate holds,
-    # so the coalesce adds exactly 0.0 to the dot.
-    chk = F.assert_true(
-        (F.size(a) == dim) & (F.size(b) == dim),
-        F.lit(f"_fast_dot_fixed: vector width != pinned dim={dim}"))
-    return terms[0] + F.coalesce(chk.cast("double"), F.lit(0.0))
-
-
-def _fast_cosine(a: Column, b: Column) -> Column:
-    """Double-precision cosine for TRAINING-internal scoring (k-means
-    assignment): ~4x cheaper than the decimal-exact `cosine`. When either
-    side's norm is reused across many pairs, hoist it with `_fast_dot`
-    instead of calling this (the embedding-dedup pre-filter does)."""
-    return _fast_dot(a, b) / (F.sqrt(_fast_dot(a, a)) * F.sqrt(_fast_dot(b, b)))
-
-
-def _dot_fn(scorer):
-    """The dot kernel matching a module scorer — the r13 norm-hoisting
-    hook. `cosine(a, b)` evaluates THREE array traversals per call
-    (dot + both norms); every pair/assignment join in this module reuses
-    each row's norm across many pairs, so the hoisted form computes
-    sqrt(dot(v, v)) once per ROW in a projection below the join and
-    scores pairs as dot(a, b) / (na * nb) — the same three
-    sub-expressions combined by the same division/multiplication tree,
-    hence bit-identical values (nothing is reassociated; only the
-    evaluation COUNT of each norm changes). Measured at sf0.1:
-    semantic-dedup pair marking 6.2 -> 1.9 s (n_assign=1), 13.6 -> 4.7 s
-    (n_assign=2). Returns None for a foreign scorer so callers keep the
-    unhoisted per-pair form."""
-    if scorer is cosine:
-        return _exact_dot
-    if scorer is _fast_cosine:
-        return _fast_dot
-    return None
-
-
 def _with_norm(df: DataFrame, vec_col: str, dot, out: str = "__n") -> DataFrame:
-    """Append sqrt(dot(vec, vec)) as `out` — the per-row hoisted norm.
-    Kept in its own projection (below whatever join consumes it);
-    CollapseProject cannot re-inline it across the join boundary, so the
-    norm is evaluated once per row, not once per pair."""
-    return df.withColumn(out, F.sqrt(dot(F.col(vec_col), F.col(vec_col))))
+    """Append sqrt(dot(vec, vec)) as `out` — the per-row hoisted norm
+    (r13), for `dot` = `_exact_dot_sql` or `_fast_dot_sql`. A cosine
+    evaluates THREE array traversals per call (dot + both norms); every
+    pair/assignment join in this module reuses each row's norm across
+    many pairs, so it computes the norm here once per ROW, in a
+    projection below the join, and scores pairs as
+    dot(a, b) / (na * nb) — the same three sub-expressions combined by
+    the same division/multiplication tree as `cosine_sql`, hence
+    bit-identical values (nothing is reassociated; only the evaluation
+    COUNT of each norm changes). Measured at sf0.1: semantic-dedup pair
+    marking 6.2 -> 1.9 s (n_assign=1), 13.6 -> 4.7 s (n_assign=2).
+    CollapseProject cannot re-inline the norm across the join boundary."""
+    return df.withColumn(out, F.expr(f"sqrt({dot(vec_col, vec_col)})"))
 
 
 def brute_force_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
@@ -297,7 +238,7 @@ def lsh_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
     probed = bucketed.join(F.broadcast(probes),
                            F.col("bucket") == F.col("p_bucket"))
     scored = probed.select(
-        F.col(id_col), cosine(F.col(vec_col), F.col("q_vec")).alias("cosine"))
+        F.col(id_col), F.expr(cosine_sql(vec_col, "q_vec")).alias("cosine"))
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
@@ -323,7 +264,7 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 16,
 
     exact=True makes the whole training CROSS-ENGINE EXACT (the
     ann_ivf_topk oracle relies on it): assignment uses the decimal-exact
-    ``cosine`` instead of the ~4x-cheaper ``_fast_cosine``, and the
+    ``_exact_dot_sql`` instead of the ~4x-cheaper ``_fast_dot_sql``, and the
     centroid update keeps per-dimension DECIMAL SUMS cast to double
     instead of float means — no division (cosine is scale-invariant, so
     sum and mean are interchangeable as directions) and no
@@ -331,23 +272,22 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 16,
     iterations computes bit-identical centroids and assignments.
     """
     spark = emb.sparkSession
-    dot = _exact_dot if exact else _fast_dot
+    dot = _exact_dot_sql if exact else _fast_dot_sql
     cents = _seed_centroids(emb, n_centroids, id_col, vec_col)
     if exact:
         cents = cents.select(
             "centroid_id",
             F.transform("c_vec", lambda x: x.cast("double")).alias("c_vec"))
     from pyspark.sql import Window
-    # r13 norm hoist (see _dot_fn): bit-identical sim values, each
+    # r13 norm hoist (see _with_norm): bit-identical sim values, each
     # side's norm evaluated per row instead of per (vector, centroid)
     emb_n = _with_norm(emb, vec_col, dot, out="__nv")
+    sim = f"{dot(vec_col, 'c_vec')} / (__nv * __nc) AS sim"
     for _ in range(n_iters):
         cents_n = _with_norm(cents, "c_vec", dot, out="__nc")
         scored = (emb_n.crossJoin(F.broadcast(cents_n))
-                  .select(F.col(id_col).alias("id"),
-                          F.col(vec_col).alias("vec"), "centroid_id",
-                          (dot(F.col(vec_col), F.col("c_vec"))
-                           / (F.col("__nv") * F.col("__nc"))).alias("sim")))
+                  .selectExpr(f"{id_col} AS id", f"{vec_col} AS vec",
+                              "centroid_id", sim))
         w = Window.partitionBy("id").orderBy(F.col("sim").desc(),
                                              F.col("centroid_id").asc())
         assigned = (scored.withColumn("rn", F.row_number().over(w))
@@ -421,14 +361,14 @@ def ivf_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
                           exact=exact)
     probe = (cents.crossJoin(F.broadcast(query_df))
              .select("centroid_id",
-                     cosine(F.col("c_vec"), F.col("q_vec")).alias("sim"))
+                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
              .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
              .limit(n_probe)
              .select("centroid_id"))
     probed = assigned.join(F.broadcast(probe), "centroid_id")
     scored = (probed.crossJoin(F.broadcast(query_df))
               .select(F.col("id").alias(id_col),
-                      cosine(F.col("vec"), F.col("q_vec")).alias("cosine")))
+                      F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
@@ -667,7 +607,7 @@ def ivf_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
     cents = spark.read.parquet(base + "/centroids")
     probe = (cents.crossJoin(F.broadcast(query_df))
              .select("centroid_id",
-                     cosine(F.col("c_vec"), F.col("q_vec")).alias("sim"))
+                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
              .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
              .limit(n_probe))
     lists = [r["centroid_id"] for r in probe.collect()]
@@ -675,7 +615,7 @@ def ivf_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
             .filter(F.col("centroid_id").isin(lists)))
     scored = (vecs.crossJoin(F.broadcast(query_df))
               .select(F.col("id").alias(id_col),
-                      cosine(F.col("vec"), F.col("q_vec")).alias("cosine")))
+                      F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
@@ -691,7 +631,7 @@ def pairwise_topk_per_label(emb: DataFrame, k: int = 3,
                    F.col(vec_col).alias("vb"))
     pairs = a.join(b, "lbl").filter(F.col("id_a") < F.col("id_b"))
     scored = pairs.select("lbl", "id_a", "id_b",
-                          cosine(F.col("va"), F.col("vb")).alias("cosine"))
+                          F.expr(cosine_sql("va", "vb")).alias("cosine"))
     from pyspark.sql import Window
     w = Window.partitionBy("lbl").orderBy(F.col("cosine").desc(),
                                           F.col("id_a").asc(), F.col("id_b").asc())
@@ -744,34 +684,34 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.4,
     cents = centroids if centroids is not None else kmeans_centroids(
         emb, n_centroids=n_centroids, n_iters=n_iters, id_col=id_col,
         vec_col=vec_col, exact=exact)
-    scorer = cosine if exact else _fast_cosine
     if ranked is not None:
         asg = (ranked.filter(F.col("assign_rank") == 1)
                .select("id", "vec", "centroid_id"))
         if n_assign <= 1:
-            return _mark_semantic_dups(asg, threshold, scorer)
+            return _mark_semantic_dups(asg, threshold, exact)
         pair_asg = (ranked.filter(F.col("assign_rank") <= n_assign)
                     .select("id", "vec", "centroid_id"))
-        return _mark_semantic_dups(asg, threshold, scorer,
+        return _mark_semantic_dups(asg, threshold, exact,
                                    pair_asg=pair_asg)
     if n_assign <= 1:
         asg = ivf_assign(emb, n_centroids=n_centroids, id_col=id_col,
                          vec_col=vec_col, centroids=cents, exact=exact)
-        return _mark_semantic_dups(asg, threshold, scorer)
+        return _mark_semantic_dups(asg, threshold, exact)
     multi = _ranked_assign(emb, cents, n_assign, id_col=id_col,
                            vec_col=vec_col, exact=exact).localCheckpoint()
     asg = (multi.filter(F.col("assign_rank") == 1)
            .select("id", "vec", "centroid_id"))
     pair_asg = multi.select("id", "vec", "centroid_id")
-    return _mark_semantic_dups(asg, threshold, scorer,
+    return _mark_semantic_dups(asg, threshold, exact,
                                pair_asg=pair_asg)
 
 
-def _mark_semantic_dups(asg: DataFrame, threshold: float,
-                        scorer, pair_asg: DataFrame | None = None)         -> DataFrame:
+def _mark_semantic_dups(asg: DataFrame, threshold: float, exact: bool,
+                        pair_asg: DataFrame | None = None) -> DataFrame:
     """Min-id-wins duplicate marking over an (id, vec, centroid_id)
     assignment: is_dup iff some lower-id vector in the SAME cluster has
-    cosine >= threshold. Shared by the flat and two-level SemDeDup.
+    cosine >= threshold (engine-exact with `exact`, double-precision
+    otherwise). Shared by the flat and two-level SemDeDup.
     `pair_asg` optionally supplies a WIDER (multi-assignment) table for
     candidate-pair generation only — base rows still come from `asg`."""
     # The assignment feeds THREE plan branches (both self-join sides +
@@ -780,24 +720,14 @@ def _mark_semantic_dups(asg: DataFrame, threshold: float,
     # three times (review finding). localCheckpoint needs no caller-side
     # unpersist — the ContextCleaner reclaims it once unreferenced.
     asg = asg.localCheckpoint()
-    pairs_src = asg if pair_asg is None else pair_asg
-    dot = _dot_fn(scorer)
-    if dot is not None:
-        # r13: norm-hoisted pair scoring (see _dot_fn — bit-identical,
-        # each row's norm evaluated once instead of once per pair)
-        src = _with_norm(pairs_src, "vec", dot)
-        a = src.select(F.col("centroid_id"), F.col("id").alias("id_a"),
-                       F.col("vec").alias("va"), F.col("__n").alias("na"))
-        b = src.select(F.col("centroid_id"), F.col("id").alias("id_b"),
-                       F.col("vec").alias("vb"), F.col("__n").alias("nb"))
-        score = (dot(F.col("va"), F.col("vb"))
-                 / (F.col("na") * F.col("nb")))
-    else:
-        a = pairs_src.select(F.col("centroid_id"), F.col("id").alias("id_a"),
-                             F.col("vec").alias("va"))
-        b = pairs_src.select(F.col("centroid_id"), F.col("id").alias("id_b"),
-                             F.col("vec").alias("vb"))
-        score = scorer(F.col("va"), F.col("vb"))
+    dot = _exact_dot_sql if exact else _fast_dot_sql
+    # norm-hoisted pair scoring (see _with_norm)
+    src = _with_norm(asg if pair_asg is None else pair_asg, "vec", dot)
+    a = src.select(F.col("centroid_id"), F.col("id").alias("id_a"),
+                   F.col("vec").alias("va"), F.col("__n").alias("na"))
+    b = src.select(F.col("centroid_id"), F.col("id").alias("id_b"),
+                   F.col("vec").alias("vb"), F.col("__n").alias("nb"))
+    score = F.expr(f"{dot('va', 'vb')} / (na * nb)")
     dup_ids = (a.join(b, "centroid_id")
                .filter(F.col("id_b") < F.col("id_a"))
                .filter(score >= threshold)
@@ -848,7 +778,7 @@ def kmeans_centroids_two_level(
     """
     from pyspark.sql import Window
     spark = emb.sparkSession
-    dot = _exact_dot if exact else _fast_dot
+    dot = _exact_dot_sql if exact else _fast_dot_sql
     elem = "double" if exact else "float"
     train = emb
     if train_mod is not None and train_mod > 1:
@@ -868,14 +798,13 @@ def kmeans_centroids_two_level(
             .select("coarse_id", (F.col("rn") - 1).alias("fine_id"),
                     F.transform("vec", lambda x: x.cast(elem))
                     .alias("c_vec")))
-    # r13 norm hoist (see _dot_fn): bit-identical sim values
+    # r13 norm hoist (see _with_norm): bit-identical sim values
     asg1_n = _with_norm(asg1, "vec", dot, out="__nv")
+    sim = f"{dot('vec', 'c_vec')} / (__nv * __nc) AS sim"
     for _ in range(n_iters):
         fine_n = _with_norm(fine, "c_vec", dot, out="__nc")
         scored = (asg1_n.join(F.broadcast(fine_n), "coarse_id")
-                  .select("coarse_id", "id", "vec", "fine_id",
-                          (dot(F.col("vec"), F.col("c_vec"))
-                           / (F.col("__nv") * F.col("__nc"))).alias("sim")))
+                  .selectExpr("coarse_id", "id", "vec", "fine_id", sim))
         w = Window.partitionBy("id").orderBy(F.col("sim").desc(),
                                              F.col("fine_id").asc())
         assigned = (scored.withColumn("rn", F.row_number().over(w))
@@ -932,17 +861,16 @@ def ivf_assign_two_level(emb: DataFrame, coarse: DataFrame,
     `assign_rank` column (1 = primary) — existing callers see the
     unchanged 3-column shape at the default."""
     from pyspark.sql import Window
-    dot = _exact_dot if exact else _fast_dot
+    dot = _exact_dot_sql if exact else _fast_dot_sql
     asg1 = ivf_assign(emb, id_col=id_col, vec_col=vec_col,
                       centroids=coarse, exact=exact) \
         .select("id", "vec", F.col("centroid_id").alias("coarse_id"))
-    # r13 norm hoist (see _dot_fn): bit-identical sim values
+    # r13 norm hoist (see _with_norm): bit-identical sim values
     asg1_n = _with_norm(asg1, "vec", dot, out="__nv")
     fine_n = _with_norm(fine, "c_vec", dot, out="__nc")
     scored = (asg1_n.join(F.broadcast(fine_n), "coarse_id")
-              .select("id", "vec", "centroid_id",
-                      (dot(F.col("vec"), F.col("c_vec"))
-                       / (F.col("__nv") * F.col("__nc"))).alias("sim")))
+              .selectExpr("id", "vec", "centroid_id",
+                          f"{dot('vec', 'c_vec')} / (__nv * __nc) AS sim"))
     w = Window.partitionBy("id").orderBy(F.col("sim").desc(),
                                          F.col("centroid_id").asc())
     ranked = scored.withColumn("rn", F.row_number().over(w))
@@ -974,11 +902,10 @@ def semantic_dedup_two_level(emb: DataFrame, threshold: float = 0.4,
     fine, coarse = kmeans_centroids_two_level(
         emb, n_coarse=n_coarse, n_fine=n_fine, n_iters=n_iters,
         id_col=id_col, vec_col=vec_col, train_mod=train_mod, exact=exact)
-    scorer = cosine if exact else _fast_cosine
     if n_assign <= 1:
         asg = ivf_assign_two_level(emb, coarse, fine, id_col=id_col,
                                    vec_col=vec_col, exact=exact)
-        return _mark_semantic_dups(asg, threshold, scorer)
+        return _mark_semantic_dups(asg, threshold, exact)
     # n_assign > 1 (r11): same counter to the leaf-confinement miss
     # mode as flat semantic_dedup — extra leaf assignments within the
     # coarse cell generate candidate pairs only; output rows and the
@@ -989,7 +916,7 @@ def semantic_dedup_two_level(emb: DataFrame, threshold: float = 0.4,
     asg = (multi.filter(F.col("assign_rank") == 1)
            .select("id", "vec", "centroid_id"))
     pair_asg = multi.select("id", "vec", "centroid_id")
-    return _mark_semantic_dups(asg, threshold, scorer,
+    return _mark_semantic_dups(asg, threshold, exact,
                                pair_asg=pair_asg)
 
 
@@ -998,29 +925,21 @@ def semantic_dedup_two_level(emb: DataFrame, threshold: float = 0.4,
 # --------------------------------------------------------------------------
 
 
-def _cell_pairs(a_side: DataFrame, b_side: DataFrame, scorer,
+def _cell_pairs(a_side: DataFrame, b_side: DataFrame, exact: bool,
                 threshold: float) -> DataFrame:
     """Same-cell (id_a < id_b, cosine >= threshold) pairs between two
     (centroid_id, id, vec) tables — an equi-join on centroid_id, so the
-    pairwise term stays confined to clusters. Norm-hoisted (r13, see
-    _dot_fn): per-row norms below the join, bit-identical scores."""
-    dot = _dot_fn(scorer)
-    if dot is None:
-        a, b = a_side.alias("a"), b_side.alias("b")
-        return (a.join(b, (F.col("a.centroid_id") == F.col("b.centroid_id"))
-                       & (F.col("a.id") < F.col("b.id")))
-                .select(F.col("a.id").alias("id_a"),
-                        F.col("b.id").alias("id_b"),
-                        scorer(F.col("a.vec"), F.col("b.vec")).alias("cosine"))
-                .filter(F.col("cosine") >= threshold))
+    pairwise term stays confined to clusters. Norm-hoisted (see
+    _with_norm): per-row norms below the join, bit-identical scores."""
+    dot = _exact_dot_sql if exact else _fast_dot_sql
     a = _with_norm(a_side, "vec", dot).alias("a")
     b = _with_norm(b_side, "vec", dot).alias("b")
     return (a.join(b, (F.col("a.centroid_id") == F.col("b.centroid_id"))
                    & (F.col("a.id") < F.col("b.id")))
             .select(F.col("a.id").alias("id_a"),
                     F.col("b.id").alias("id_b"),
-                    (dot(F.col("a.vec"), F.col("b.vec"))
-                     / (F.col("a.__n") * F.col("b.__n"))).alias("cosine"))
+                    F.expr(f"{dot('a.vec', 'b.vec')} / (a.__n * b.__n)")
+                    .alias("cosine"))
             .filter(F.col("cosine") >= threshold))
 
 
@@ -1033,17 +952,16 @@ def _ranked_assign(emb: DataFrame, cents: DataFrame, n_assign: int,
     ivf_assign output — the multi-assignment generalization every
     n_assign consumer (batch SemDeDup, the v2 semantic index) shares."""
     from pyspark.sql import Window
-    dot = _exact_dot if exact else _fast_dot
-    # r13 norm hoist (see _dot_fn): each vector's norm once per row,
+    dot = _exact_dot_sql if exact else _fast_dot_sql
+    # r13 norm hoist (see _with_norm): each vector's norm once per row,
     # each centroid's once per broadcast row — not once per (vector,
     # centroid) score; bit-identical sim values, same tie-break.
     emb_n = _with_norm(emb, vec_col, dot, out="__nv")
     cents_n = _with_norm(cents, "c_vec", dot, out="__nc")
     scored = (emb_n.crossJoin(F.broadcast(cents_n))
-              .select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("vec"), "centroid_id",
-                      (dot(F.col(vec_col), F.col("c_vec"))
-                       / (F.col("__nv") * F.col("__nc"))).alias("sim")))
+              .selectExpr(f"{id_col} AS id", f"{vec_col} AS vec",
+                          "centroid_id",
+                          f"{dot(vec_col, 'c_vec')} / (__nv * __nc) AS sim"))
     w = Window.partitionBy("id").orderBy(F.col("sim").desc(),
                                          F.col("centroid_id").asc())
     return (scored.withColumn("rn", F.row_number().over(w))
@@ -1090,7 +1008,7 @@ def semantic_pairs(emb: DataFrame, threshold: float = 0.4,
     asg = ivf_assign(emb, id_col=id_col, vec_col=vec_col,
                      centroids=cents).localCheckpoint()
     side = asg.select("centroid_id", "id", "vec")
-    return _cell_pairs(side, side, _fast_cosine, threshold)
+    return _cell_pairs(side, side, False, threshold)
 
 
 def semantic_index_write(emb: DataFrame, path: str, n_centroids: int = 16,
@@ -1327,11 +1245,9 @@ def semantic_dedup_incremental(spark, new_emb: DataFrame, path: str,
             "run semantic_index_maybe_retrain to repair the meta")
     old_side = members.select("centroid_id", "id", "vec")
     new_side = probe_new.select("centroid_id", "id", "vec")
-    out = (_cell_pairs(new_side, new_side, _fast_cosine, threshold)
-           .unionAll(_cell_pairs(new_side, old_side, _fast_cosine,
-                                 threshold))
-           .unionAll(_cell_pairs(old_side, new_side, _fast_cosine,
-                                 threshold)))
+    out = (_cell_pairs(new_side, new_side, False, threshold)
+           .unionAll(_cell_pairs(new_side, old_side, False, threshold))
+           .unionAll(_cell_pairs(old_side, new_side, False, threshold)))
     if probe_w > 1 or idx_w > 1:
         out = out.dropDuplicates(["id_a", "id_b"])
     if append:
@@ -1361,9 +1277,9 @@ def semantic_dedup_incremental(spark, new_emb: DataFrame, path: str,
 # and the re-rank metric agrees with the coarse metric.
 
 
-def _unit(vec: Column) -> Column:
+def _unit(vec: str) -> Column:
     """L2-normalized copy of an array<float/double> column (double)."""
-    n = F.sqrt(_fast_dot(vec, vec))
+    n = F.expr(f"sqrt({_fast_dot_sql(vec, vec)})")
     return F.transform(vec, lambda x: x.cast("double") / n)
 
 
@@ -1381,7 +1297,7 @@ def _pq_subvectors(emb: DataFrame, n_subs: int, dim: int,
         raise ValueError(f"dim {dim} not divisible by n_subs {n_subs}")
     d = dim // n_subs
     unit = emb.select(F.col(id_col).alias("id"),
-                      _unit(F.col(vec_col)).alias("u"))
+                      _unit(vec_col).alias("u"))
     return unit.select(
         "id",
         F.posexplode(F.array(*[
@@ -1479,7 +1395,7 @@ def pq_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
         emb, cb, n_subs, dim=dim, id_col=id_col, vec_col=vec_col)
 
     d = dim // n_subs
-    qsubs = (query_df.select(_unit(F.col("q_vec")).alias("qu"))
+    qsubs = (query_df.select(_unit("q_vec").alias("qu"))
              .select(F.posexplode(F.array(*[
                  F.slice("qu", j * d + 1, d) for j in range(n_subs)
              ])).alias("sub_id", "qv")))
@@ -1498,7 +1414,7 @@ def pq_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
                            F.col(vec_col).alias("v"))
     rer = (cand.join(originals, "id").crossJoin(F.broadcast(query_df))
            .select(F.col("id").alias(id_col),
-                   cosine(F.col("v"), F.col("q_vec")).alias("cosine")))
+                   F.expr(cosine_sql("v", "q_vec")).alias("cosine")))
     return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
@@ -1577,13 +1493,13 @@ def ivf_pq_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
     cents = spark.read.parquet(path + "/centroids")
     probe = (cents.crossJoin(F.broadcast(query_df))
              .select("centroid_id",
-                     cosine(F.col("c_vec"), F.col("q_vec")).alias("sim"))
+                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
              .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
              .limit(n_probe))
     lists = [r["centroid_id"] for r in probe.collect()]
 
     cb = spark.read.parquet(path + "/pq_codebooks")
-    qsubs = (query_df.select(_unit(F.col("q_vec")).alias("qu"))
+    qsubs = (query_df.select(_unit("q_vec").alias("qu"))
              .select(F.posexplode(F.array(*[
                  F.slice("qu", j * d + 1, d) for j in range(n_subs)
              ])).alias("sub_id", "qv")))
@@ -1603,13 +1519,17 @@ def ivf_pq_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
     floats = spark.read.parquet(path + "/floats")
     rer = (cand.join(floats, "id").crossJoin(F.broadcast(query_df))
            .select(F.col("id").alias(id_col),
-                   cosine(F.col("vec"), F.col("q_vec")).alias("cosine")))
+                   F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
     return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
 # ===========================================================================
 # Scalar quantization (SQ8) — int8-range codes, asymmetric scoring + rescore
 # ===========================================================================
+
+#: Asymmetric SQ8 score of float query `qd` against a row's int8 `codes`.
+_SQ8_APPROX_SQL = f"scale * {_fast_dot_sql('qd', 'codes')} AS approx"
+
 
 def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
                vec_col: str = "embedding",
@@ -1673,7 +1593,7 @@ def sq8_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
 
         approx = scale_doc * sum_i q_i * code_i  ~=  dot(q, x_doc)
 
-    computed with the codegen'd `_fast_dot` over the codes array; the
+    computed with the codegen'd `_fast_dot_sql` over the codes array; the
     top k*rerank_factor candidates are rescored with the exact decimal
     cosine and deterministically re-ranked. Candidate selection is a
     TakeOrderedAndProject (no global sort); the rescore join touches
@@ -1694,14 +1614,13 @@ def sq8_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
     enc = sq8_encode(emb, id_col, vec_col)
     qd = query_df.select(F.col("q_vec").cast("array<double>").alias("qd"))
     approx = (enc.crossJoin(F.broadcast(qd))
-              .select("id", (F.col("scale") * _fast_dot(
-                  F.col("qd"), F.col("codes"))).alias("approx")))
+              .selectExpr("id", _SQ8_APPROX_SQL))
     cand = (approx.orderBy(F.col("approx").desc(), F.col("id").asc())
             .limit(k * rerank_factor))
     rer = (cand.join(emb.select(F.col(id_col).alias("id"), vec_col), "id")
            .crossJoin(F.broadcast(query_df))
            .select(F.col("id").alias(id_col),
-                   cosine(F.col(vec_col), F.col("q_vec")).alias("cosine")))
+                   F.expr(cosine_sql(vec_col, "q_vec")).alias("cosine")))
     return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
@@ -1724,7 +1643,7 @@ def _sq8_batch_rank(approx: DataFrame, floats: DataFrame,
            .join(F.broadcast(query_df.select("query_id", "q_vec")),
                  "query_id")
            .select("query_id", F.col("id").alias(id_col),
-                   cosine(F.col("vec"), F.col("q_vec")).alias("cosine")))
+                   F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
     w2 = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col(id_col).asc())
     return (rer.withColumn("rank", F.row_number().over(w2))
@@ -1751,9 +1670,7 @@ def sq8_topk_batch(emb: DataFrame, query_df: DataFrame, k: int = 10,
     qd = query_df.select(
         "query_id", F.col("q_vec").cast("array<double>").alias("qd"))
     approx = (enc.crossJoin(F.broadcast(qd))
-              .select("query_id", "id",
-                      (F.col("scale") * _fast_dot(
-                          F.col("qd"), F.col("codes"))).alias("approx")))
+              .selectExpr("query_id", "id", _SQ8_APPROX_SQL))
     floats = emb.select(F.col(id_col).alias("id"),
                         F.col(vec_col).alias("vec"))
     return _sq8_batch_rank(approx, floats, query_df, k, rerank_factor,
@@ -1779,7 +1696,7 @@ def ivf_sq_probe_topk_batch(spark, path: str, query_df: DataFrame,
         F.col("sim").desc(), F.col("centroid_id").asc())
     probe = (cents.crossJoin(F.broadcast(query_df))
              .select("query_id", "centroid_id",
-                     cosine(F.col("c_vec"), F.col("q_vec")).alias("sim"))
+                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
              .withColumn("__r", F.row_number().over(wq))
              .filter(F.col("__r") <= n_probe)
              .select("query_id", "centroid_id"))
@@ -1794,9 +1711,7 @@ def ivf_sq_probe_topk_batch(spark, path: str, query_df: DataFrame,
              .filter(F.col("centroid_id").isin([int(x) for x in lists]))
              .join(F.broadcast(pair_df), "centroid_id"))
     approx = (codes.join(F.broadcast(qd), "query_id")
-              .select("query_id", "id",
-                      (F.col("scale") * _fast_dot(
-                          F.col("qd"), F.col("codes"))).alias("approx")))
+              .selectExpr("query_id", "id", _SQ8_APPROX_SQL))
     floats = spark.read.parquet(base + "/floats")
     return _sq8_batch_rank(approx, floats, query_df, k, rerank_factor,
                            id_col)
@@ -1854,7 +1769,7 @@ def ivf_sq_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
     cents = spark.read.parquet(base + "/centroids")
     probe = (cents.crossJoin(F.broadcast(query_df))
              .select("centroid_id",
-                     cosine(F.col("c_vec"), F.col("q_vec")).alias("sim"))
+                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
              .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
              .limit(n_probe))
     lists = [r["centroid_id"] for r in probe.collect()]
@@ -1862,14 +1777,13 @@ def ivf_sq_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
     codes = (spark.read.parquet(base + "/codes")
              .filter(F.col("centroid_id").isin(lists)))
     approx = (codes.crossJoin(F.broadcast(qd))
-              .select("id", (F.col("scale") * _fast_dot(
-                  F.col("qd"), F.col("codes"))).alias("approx")))
+              .selectExpr("id", _SQ8_APPROX_SQL))
     cand = (approx.orderBy(F.col("approx").desc(), F.col("id").asc())
             .limit(k * rerank_factor))
     floats = spark.read.parquet(base + "/floats")
     rer = (cand.join(floats, "id").crossJoin(F.broadcast(query_df))
            .select(F.col("id").alias(id_col),
-                   cosine(F.col("vec"), F.col("q_vec")).alias("cosine")))
+                   F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
     return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 

@@ -51,19 +51,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _tokens
 from .replay_ops import with_global_cumsum
+from .text import tokens_expr
 
 
 def corpus_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Tokenize every document (module-canonical lower/trim/\\s+ family)
+    """Tokenize every document (the package tokenizer, `text.tokens_expr`)
     into one row per token with BOTH per-doc and global positions:
     (id, pos, gpos, token), plus one NULL-token sentinel row per doc
     (pos = doc length) terminating it in the global stream. Global
     positions come from the distributed exclusive cumsum of doc lengths
     in id order — no single-task window."""
     t = (df.filter(F.col(text_col).isNotNull())
-         .select(F.col(id_col), _tokens(F.col(text_col)).alias("__t")))
+         .select(F.col(id_col), F.expr(tokens_expr(text_col)).alias("__t")))
     lens = t.select(F.col(id_col),
                     (F.size("__t") + 1).cast("long").alias("__len"))
     # out_col must avoid with_global_cumsum's INTERNAL __off/__local_cum

@@ -17,20 +17,23 @@ from pyspark.sql import functions as F
 #: Tiny English function-word list for the n-gram/stopword heuristic.
 EN_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
-# -- Spark-SQL string twins (r13 optimization) -----------------------------
+# -- Expression builders -----------------------------------------------------
 #
-# The scalar text features accept a COLUMN NAME (str) besides a Column:
-# the str path composes ONE SQL string parsed with a single F.expr call,
-# where the Column path paid a py4j round trip (~0.8 ms of driver latency
-# on this box, billed to the query by the bench) per builder call —
-# hundreds per profile query. The strings spell every literal with the
-# type the Column form produced (D-suffixed doubles, '\\s+' so the
-# parser's escape pass yields the same regex) and are pinned value-equal
-# to the Column forms in tests/test_pipeline_ops.py::test_text_expr_twins_value_equal.
+# Every scalar text feature is a SQL-string builder: it takes its operand's
+# SQL text (a column name or a composed sub-expression) and returns ONE
+# string the caller parses once (F.expr / selectExpr). A Column tree paid a
+# py4j round trip per node (~0.8 ms of driver latency each, r13 cProfile),
+# hundreds per profile query, billed to the query by the bench. Literal
+# types are spelled out: D-suffixed doubles (a bare 0.02 parses DECIMAL),
+# '\\s+' in the SQL text so the parser's escape pass yields the regex \s+.
 
 
 def tokens_expr(c: str) -> str:
-    """SQL twin of `tokens` (c: column name / SQL fragment)."""
+    """The package tokenizer: split(trim(lower(c)), '\\s+') with Java
+    semantics (trim strips spaces only; \\s is ASCII-only). Every Spark
+    path that tokenizes text (features, shingles, retrieval, classifier,
+    suffix windows) goes through this string; its Python twin is
+    `functions.xxh.tokens_spark`."""
     return f"split(trim(lower({c})), '\\\\s+')"
 
 
@@ -39,30 +42,16 @@ def _sq(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
-def tokens(text_col: Column | str) -> Column:
-    if isinstance(text_col, str):
-        return F.expr(tokens_expr(text_col))
-    return F.split(F.trim(F.lower(text_col)), r"\s+")
-
-
-def token_count(text_col: Column | str) -> Column:
+def token_count_expr(c: str) -> str:
     """Whitespace token count."""
-    if isinstance(text_col, str):
-        return F.expr(f"size({tokens_expr(text_col)})")
-    return F.size(tokens(text_col))
+    return f"size({tokens_expr(c)})"
 
 
-def bpe_token_estimate(text_col: Column | str) -> Column:
-    """BPE-ish token-count estimate: word-piece regex matches plus the
-    classic chars/4 correction for long words, all integer arithmetic."""
-    if isinstance(text_col, str):
-        return F.expr(
-            f"greatest(size({tokens_expr(text_col)}), "
-            f"CAST(ceil(length({text_col}) / 4) AS INT))"
-        ).alias("bpe_tokens")
-    words = token_count(text_col)
-    chars = F.length(text_col)
-    return F.greatest(words, F.ceil(chars / F.lit(4)).cast("int")).alias("bpe_tokens")
+def bpe_token_estimate_expr(c: str) -> str:
+    """BPE-ish token-count estimate: the whitespace token count, raised to
+    the classic chars/4 bound for long words — all integer arithmetic."""
+    return (f"greatest({token_count_expr(c)}, "
+            f"CAST(ceil(length({c}) / 4) AS INT))")
 
 
 #: GPT-2-style pre-tokenizer pattern (public), simplified to constructs
@@ -77,7 +66,7 @@ def bpe_pretoken_count(text_col: Column) -> Column:
     """Pre-tokenizer token count with the (public) GPT-2-style split
     regex — the piece count BEFORE byte-pair merges, an upper bound on
     and strong correlate of the true BPE token count. JVM regexp_count,
-    whole-stage codegen; the chars/4 `bpe_token_estimate` remains the
+    whole-stage codegen; the chars/4 `bpe_token_estimate_expr` remains the
     cheap estimate."""
     return F.regexp_count(text_col, F.lit(BPE_PRETOKEN_PATTERN))
 
@@ -335,14 +324,14 @@ def unigram_encode(df: DataFrame, text_col: str,
     return out
 
 
-def _word_ngrams(text_col: Column, n: int) -> Column:
+def _word_ngrams(text_col: str, n: int) -> Column:
     """array<struct<context,token>> of word n-grams: context = the n-1
     preceding words space-joined (empty for unigrams), token = the n-th.
     Pure column expression (transform/slice/array_join — whole-stage
     codegen); documents shorter than n words yield an empty array."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    toks = tokens(text_col)
+    toks = F.expr(tokens_expr(text_col))
     idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
     grams = F.transform(idx, lambda i: F.struct(
         (F.array_join(F.slice(toks, i, n - 1), " ") if n > 1
@@ -362,7 +351,7 @@ def ngram_lm_counts(df: DataFrame, text_col: str, n: int = 2) -> DataFrame:
     Kneser-Ney, the Spark plan shape is identical). The model is itself
     a DataFrame — persist it or write it to parquet; it never has to fit
     on the driver."""
-    return (df.select(F.explode(_word_ngrams(F.col(text_col), n))
+    return (df.select(F.explode(_word_ngrams(text_col, n))
                       .alias("g"))
             .groupBy(F.col("g.context").alias("context"),
                      F.col("g.token").alias("token"))
@@ -405,7 +394,7 @@ def ngram_lm_score(df: DataFrame, id_col: str, text_col: str,
     vocab = lm.select("token").distinct().count()
     ctx_tot = lm.groupBy("context").agg(F.sum("cnt").alias("ctx_cnt"))
     g = (df.select(F.col(id_col).alias("__id"),
-                   F.explode(_word_ngrams(F.col(text_col), n)).alias("g"))
+                   F.explode(_word_ngrams(text_col, n)).alias("g"))
          .select("__id", "g.context", "g.token"))
     p = ((F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(float(k)))
          / (F.coalesce(F.col("ctx_cnt"), F.lit(0))
@@ -427,32 +416,20 @@ def ngram_lm_score(df: DataFrame, id_col: str, text_col: str,
 
 def stopword_ratio_expr(c: str,
                         stopwords: tuple[str, ...] = EN_STOPWORDS) -> str:
-    """SQL twin of `stopword_ratio`."""
+    """Fraction of `c`'s tokens that are stopwords (int count / int count
+    double division)."""
     toks = tokens_expr(c)
     words = ",".join(_sq(w) for w in stopwords)
     return (f"(CAST(size(filter({toks}, t -> t IN ({words}))) AS DOUBLE)"
             f" / size({toks}))")
 
 
-def stopword_ratio(text_col: Column | str,
-                   stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    if isinstance(text_col, str):
-        return F.expr(stopword_ratio_expr(text_col, stopwords))
-    toks = tokens(text_col)
-    stops = F.filter(toks, lambda t: t.isin(*stopwords))
-    return F.size(stops).cast("double") / F.size(toks)
-
-
-def lang_id(text_col: Column | str, threshold: float = 0.02) -> Column:
+def lang_id_expr(c: str, threshold: float = 0.02) -> str:
     """Heuristic language-ID: English iff stopword ratio >= threshold.
     (Real pipelines swap in fastText/CLD3 via a Pandas UDF; the surrounding
     plan — a narrow projection — is identical.)"""
-    if isinstance(text_col, str):
-        return F.expr(
-            f"CASE WHEN {stopword_ratio_expr(text_col)} >= {threshold}D "
+    return (f"CASE WHEN {stopword_ratio_expr(c)} >= {threshold}D "
             f"THEN 'en' ELSE 'unknown' END")
-    return F.when(stopword_ratio(text_col) >= threshold, F.lit("en")) \
-        .otherwise(F.lit("unknown"))
 
 
 #: Highest-frequency English character trigrams (classic TextCat-style
@@ -477,7 +454,7 @@ def lang_id_ngram(text_col: Column, threshold: float = 0.05,
     profile tuple for other languages; a multi-language argmax is a
     greatest() over per-profile scores.
 
-    Complements `lang_id` (stopword-ratio): n-gram profiles survive
+    Complements `lang_id_expr` (stopword-ratio): n-gram profiles survive
     texts with few function words (headlines, code-mixed) where the
     stopword heuristic under-triggers."""
     t = F.regexp_replace(F.lower(text_col), r"\s+", " ")
@@ -511,9 +488,8 @@ LANG_TRIGRAMS: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_scores(text_col: Column,
-                profiles: dict[str, tuple[str, ...]] | None = None,
-                pre_normalized: bool = False) -> dict[str, Column]:
+def lang_scores_exprs(c: str, profiles: dict[str, tuple[str, ...]],
+                       pre_normalized: bool) -> dict[str, str]:
     r"""Per-language profile-coverage scores (|doc ∩ profile| /
     |profile| — the `lang_id_ngram` term, one per language). Exact
     cross-engine: an integer hit count divided by the profile size, so
@@ -521,7 +497,13 @@ def lang_scores(text_col: Column,
     dict) produces bit-identical doubles — ORACLE-GATED as the
     lang_en/de/fr/es columns of doc_text_profile.
 
-    pre_normalized=True treats `text_col` as ALREADY holding
+    ONE higher-order filter over the literal gram array per language: a
+    CASE-WHEN chain per gram (the r8c3 first cut) put ~240 expression
+    nodes in the projection and pushed the whole doc_text_profile entry
+    out of healthy codegen (0.68 -> 3.3 s measured); 4 HOF nodes keep
+    it flat.
+
+    pre_normalized=True treats `c` as ALREADY holding
     regexp_replace(lower(text), \s+, ' '). When probing many profiles,
     materialize the normalized text behind a Generate barrier
     (explode(array(norm)) — the registry query does) and pass it here:
@@ -529,31 +511,6 @@ def lang_scores(text_col: Column,
     probe, re-running the regexp |profiles|x|grams| times per row
     (measured +2 s on the bench entry; the documented MinHash-trap
     class)."""
-    profiles = profiles or LANG_TRIGRAMS
-    if isinstance(text_col, str):
-        return {lang: F.expr(s) for lang, s in lang_scores_exprs(
-            text_col, profiles, pre_normalized).items()}
-    t = (text_col if pre_normalized
-         else F.regexp_replace(F.lower(text_col), r"\s+", " "))
-    out = {}
-    for lang, grams in profiles.items():
-        # ONE higher-order filter over the literal gram array per
-        # language — a CASE-WHEN chain per gram (the r8c3 first cut)
-        # put ~240 expression nodes in the projection and pushed the
-        # whole doc_text_profile entry out of healthy codegen
-        # (0.68 -> 3.3 s measured); 4 HOF nodes keep it flat.
-        lits = F.array(*[F.lit(g.replace("_", " ")) for g in grams])
-        hits = F.size(F.filter(lits, lambda g: t.contains(g)))
-        out[lang] = hits.cast("double") / F.lit(float(len(grams)))
-    return out
-
-
-def lang_scores_exprs(c: str, profiles: dict[str, tuple[str, ...]],
-                       pre_normalized: bool) -> dict[str, str]:
-    """Spark-SQL twins of the per-language coverage scores (the str fast
-    path of lang_scores / lang_id_multi): same HOF-filter-over-literal-
-    array shape, same double division — one parsed expression per
-    language instead of ~2 py4j round trips per gram literal."""
     t = (c if pre_normalized
          else f"regexp_replace(lower({c}), '\\\\s+', ' ')")
     out = {}
@@ -568,7 +525,7 @@ def lang_scores_exprs(c: str, profiles: dict[str, tuple[str, ...]],
 def lang_scores_sql(norm_col: str,
                     profiles: dict[str, tuple[str, ...]] | None = None
                     ) -> dict[str, str]:
-    """DuckDB SQL for `lang_scores`, emitted from the same profile dict
+    """DuckDB SQL for `lang_scores_exprs`, emitted from the same profile dict
     (the zvalue_sql single-source-of-truth pattern). `norm_col` must
     already hold regexp_replace(lower(text), '\\s+', ' ', 'g')."""
     profiles = profiles or LANG_TRIGRAMS
@@ -582,11 +539,11 @@ def lang_scores_sql(norm_col: str,
     return out
 
 
-def lang_id_multi(text_col: Column,
-                  profiles: dict[str, tuple[str, ...]] | None = None,
-                  min_score: float = 0.05,
-                  pre_normalized: bool = False) -> Column:
-    """Multi-language n-gram language ID: the argmax of `lang_scores`
+def lang_id_multi_expr(c: str,
+                       profiles: dict[str, tuple[str, ...]] | None = None,
+                       min_score: float = 0.05,
+                       pre_normalized: bool = False) -> str:
+    """Multi-language n-gram language ID: the argmax of `lang_scores_exprs`
     over `profiles` (default: built-in en/de/fr/es). Returns the
     winning language code, or 'unknown' when the best coverage is below
     `min_score`. Deterministic tie-break: the earliest profile in dict
@@ -594,30 +551,6 @@ def lang_id_multi(text_col: Column,
     comparison is lexicographic, so equal scores fall to the index).
     Pure codegen'd scalar expressions like the single-profile form:
     O(Σ|profiles|) contains-probes per row, no shuffle, no UDF."""
-    profiles = profiles or LANG_TRIGRAMS
-    if isinstance(text_col, str):
-        return F.expr(lang_id_multi_expr(text_col, profiles, min_score,
-                                         pre_normalized))
-    cands = []
-    for i, (lang, score) in enumerate(
-            lang_scores(text_col, profiles,
-                        pre_normalized=pre_normalized).items()):
-        cands.append(F.struct(score.alias("s"),
-                              F.lit(-i).alias("i"),
-                              F.lit(lang).alias("l")))
-    best = F.greatest(*cands) if len(cands) > 1 else cands[0]
-    return F.when(best["s"] >= F.lit(min_score), best["l"]) \
-        .otherwise(F.lit("unknown"))
-
-
-def lang_id_multi_expr(c: str,
-                       profiles: dict[str, tuple[str, ...]] | None = None,
-                       min_score: float = 0.05,
-                       pre_normalized: bool = False) -> str:
-    """SQL twin of `lang_id_multi` (the str fast path): the same
-    greatest-over-(score, -index, lang) structs argmax. `best` appears
-    twice (condition + value) exactly as the Column tree references its
-    `best` node twice."""
     profiles = profiles or LANG_TRIGRAMS
     scores = lang_scores_exprs(c, profiles, pre_normalized)
     cands = ",".join(
@@ -628,33 +561,35 @@ def lang_id_multi_expr(c: str,
             f"THEN {best}.l ELSE 'unknown' END")
 
 
+def punct_ratio_expr(c: str) -> str:
+    """Fraction of characters that are neither word nor whitespace."""
+    return (f"(CAST(length({c}) - length(regexp_replace({c}, "
+            f"'[^\\\\w\\\\s]', '')) AS DOUBLE) / length({c}))")
+
+
+def quality_score_expr(c: str) -> str:
+    """Composite quality score
+    0.4*len_ok + 0.3*(1-punct_ratio) + 0.3*min(10*stop_ratio, 1) —
+    every term a deterministic double from integer counts."""
+    n_tok = token_count_expr(c)
+    len_ok = (f"(CASE WHEN {n_tok} >= 10 AND {n_tok} <= 100000 "
+              "THEN 1.0D ELSE 0.0D END)")
+    return (f"(0.4D * {len_ok} + 0.3D * (1.0D - {punct_ratio_expr(c)}) "
+            f"+ 0.3D * least({stopword_ratio_expr(c)} * 10, 1.0D))")
+
+
 def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document quality features + composite score.
-
-    score = 0.4*len_ok + 0.3*(1-punct_ratio) + 0.3*stop_ratio_capped —
-    every term a deterministic double from integer counts.
-    """
-    t = F.col(text_col)
-    n_tok = token_count(t)
-    n_chars = F.length(t)
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
-    punct_ratio = n_punct.cast("double") / n_chars
-    stop_ratio = stopword_ratio(t)
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
-    score = (F.lit(0.4) * len_ok
-             + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
-             + F.lit(0.3) * F.least(stop_ratio * 10, F.lit(1.0)))
-    return df.select(
-        F.col(id_col),
-        n_tok.alias("n_tokens"),
-        n_chars.alias("n_chars_measured"),
-        punct_ratio.alias("punct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        score.alias("quality_score"),
-    )
+    """Per-document quality features + the `quality_score_expr` score."""
+    return df.selectExpr(
+        id_col,
+        f"{token_count_expr(text_col)} AS n_tokens",
+        f"length({text_col}) AS n_chars_measured",
+        f"{punct_ratio_expr(text_col)} AS punct_ratio",
+        f"{stopword_ratio_expr(text_col)} AS stopword_ratio",
+        f"{quality_score_expr(text_col)} AS quality_score")
 
 
-def repetition_features(text_col: Column) -> dict[str, Column]:
+def repetition_features_exprs(c: str) -> dict[str, str]:
     """Gopher/RefinedWeb-style repetition + structure quality signals,
     all O(doc length) array/regex expressions (no explode, no shuffle —
     the profile query stays one narrow codegen'd projection):
@@ -668,35 +603,9 @@ def repetition_features(text_col: Column) -> dict[str, Column]:
       >0.90 / >0.30) — listicle/truncation shapes.
     - mean_word_len: non-whitespace chars per whitespace token; degenerate
       corpora fall far outside the 3..10 band real pipelines keep.
-    """
-    if isinstance(text_col, str):
-        return {k: F.expr(s)
-                for k, s in repetition_features_exprs(text_col).items()}
-    lines = F.split(text_col, "\n")
-    paras = F.split(text_col, r"\n\s*\n")
-    n_lines = F.size(lines)
-    n_paras = F.size(paras)
 
-    def dup_frac(arr: Column, n: Column) -> Column:
-        return (n - F.size(F.array_distinct(arr))).cast("double") / n
-
-    bullet = F.size(F.filter(lines, lambda ln: ln.rlike(r"^\s*[-*•]")))
-    ellips = F.size(F.filter(lines, lambda ln: ln.rlike(r"\.\.\.\s*$")))
-    n_tok = token_count(text_col)
-    solid = F.length(F.regexp_replace(text_col, r"\s+", ""))
-    return {
-        "dup_line_frac": dup_frac(lines, n_lines),
-        "dup_para_frac": dup_frac(paras, n_paras),
-        "bullet_line_frac": bullet.cast("double") / n_lines,
-        "ellipsis_line_frac": ellips.cast("double") / n_lines,
-        "mean_word_len": solid.cast("double") / n_tok,
-    }
-
-
-def repetition_features_exprs(c: str) -> dict[str, str]:
-    """SQL twins of `repetition_features` (str fast path; same regexes —
-    '\\\\n' parses to the \\n escape, matching the literal-newline split
-    of the Column form — same double-division shapes)."""
+    '\\\\n' in the SQL text parses to the \\n escape, a literal-newline
+    split."""
     lines = f"split({c}, '\\\\n')"
     paras = f"split({c}, '\\\\n\\\\s*\\\\n')"
 
@@ -712,7 +621,7 @@ def repetition_features_exprs(c: str) -> dict[str, str]:
         "bullet_line_frac": f"(CAST({bullet} AS DOUBLE) / size({lines}))",
         "ellipsis_line_frac": f"(CAST({ellips} AS DOUBLE) / size({lines}))",
         "mean_word_len": (f"(CAST(length(regexp_replace({c}, '\\\\s+', '')) "
-                          f"AS DOUBLE) / size({tokens_expr(c)}))"),
+                          f"AS DOUBLE) / {token_count_expr(c)})"),
     }
 
 
@@ -796,7 +705,7 @@ def chunk_documents(df: DataFrame, id_col: str, text_col: str,
     downstream embed/index join cannot silently drop short docs).
 
     Tokenization is the canonical split(trim(text), \\s+) family
-    (case-PRESERVED — chunks are payload, not features; `tokens()` keeps
+    (case-PRESERVED — chunks are payload, not features; `tokens_expr` keeps
     lower() for feature paths). Everything is codegen'd array arithmetic
     (split/sequence/explode/slice/array_join) — no UDF, no shuffle: the
     operator is a pure per-row projection that parallelizes with the
@@ -840,15 +749,11 @@ def chunk_documents(df: DataFrame, id_col: str, text_col: str,
                              chunk_tokens), " ").alias("chunk_text"))
 
 
-def fingerprint(text_col: Column | str) -> Column:
+def fingerprint_expr(c: str) -> str:
     """Document fingerprint: md5 of whitespace-normalized lowercased text.
     (Content-defined rolling-hash chunking reduces to the same normalize+
     hash shape; md5 keeps the oracle cross-engine checkable.)"""
-    if isinstance(text_col, str):
-        return F.expr(f"md5(regexp_replace(trim(lower({text_col})), "
-                      f"'\\\\s+', ' '))")
-    norm = F.regexp_replace(F.trim(F.lower(text_col)), r"\s+", " ")
-    return F.md5(norm)
+    return f"md5(regexp_replace(trim(lower({c})), '\\\\s+', ' '))"
 
 
 # --------------------------------------------------------------------------

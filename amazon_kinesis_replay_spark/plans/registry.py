@@ -1435,7 +1435,7 @@ def q_doc_text_profile(spark, sf_dir):
     substring / trim-length / regexp replace / levenshtein), and the
     Gopher/RefinedWeb repetition + structure signals (duplicate line /
     paragraph fractions, bullet / ellipsis line fractions, mean word
-    length — text.repetition_features). All pure column expressions —
+    length — text.repetition_features_exprs). All pure column expressions —
     one narrow projection, whole-stage codegen, zero Python."""
     ensure_engine_conf(spark)
     # r13 opt: the ~120-probe expression forest below is pure per-row CPU;
@@ -1447,39 +1447,29 @@ def q_doc_text_profile(spark, sf_dir):
     # row behind a Generate barrier (explode of a 1-element array):
     # CollapseProject would otherwise re-inline the regexp into every
     # one of the 120 contains probes (measured +2 s on this entry —
-    # the MinHash-trap class; see lang_scores docstring).
+    # the MinHash-trap class; see lang_scores_exprs docstring).
     #
-    # r13 opt: the whole ~120-probe forest is composed as SQL strings in
-    # ONE selectExpr (plus one for the Generate barrier) — the Column
-    # form paid ~2,400 py4j round trips of plan-construction latency per
-    # bench run (measured; the expr twins are pinned value-equal in
-    # tests/test_text_ops.py::test_text_expr_twins).
+    # r13 opt: the whole ~120-probe forest is composed from the text
+    # builders' SQL strings in ONE selectExpr (plus one for the Generate
+    # barrier) — the Column form paid ~2,400 py4j round trips of
+    # plan-construction latency per bench run (measured). The
+    # doc_text_profile oracle gates the values of every builder here.
     d = d.selectExpr(
         "doc_id", "text",
         "explode(array(regexp_replace(lower(text), '\\\\s+', ' '))) AS __nt")
-    n_tok = f"size({text.tokens_expr('text')})"
-    punct_ratio = ("(CAST(length(text) - length(regexp_replace(text, "
-                   "'[^\\\\w\\\\s]', '')) AS DOUBLE) / length(text))")
-    stop_ratio = text.stopword_ratio_expr("text")
-    len_ok = (f"(CASE WHEN {n_tok} >= 10 AND {n_tok} <= 100000 "
-              "THEN 1.0D ELSE 0.0D END)")
-    score = (f"(0.4D * {len_ok} + 0.3D * (1.0D - {punct_ratio}) "
-             f"+ 0.3D * least({stop_ratio} * 10, 1.0D))")
     rep = text.repetition_features_exprs("text")
     head = "substring(text, 1, 24)"
     return d.selectExpr(
         "doc_id",
-        f"CAST({n_tok} AS BIGINT) AS n_tokens",
-        f"CAST(greatest({n_tok}, CAST(ceil(length(text) / 4) AS INT)) "
-        "AS BIGINT) AS bpe_tokens",
+        f"CAST({text.token_count_expr('text')} AS BIGINT) AS n_tokens",
+        f"CAST({text.bpe_token_estimate_expr('text')} AS BIGINT) "
+        "AS bpe_tokens",
         "CAST(length(text) AS BIGINT) AS n_chars",
-        f"{punct_ratio} AS punct_ratio",
-        f"{stop_ratio} AS stop_ratio",
-        f"CASE WHEN {stop_ratio} >= 0.02D THEN 'en' ELSE 'unknown' END "
-        "AS lang_pred",
-        f"{score} AS quality_score",
-        "md5(regexp_replace(trim(lower(text)), '\\\\s+', ' ')) "
-        "AS fingerprint",
+        f"{text.punct_ratio_expr('text')} AS punct_ratio",
+        f"{text.stopword_ratio_expr('text')} AS stop_ratio",
+        f"{text.lang_id_expr('text')} AS lang_pred",
+        f"{text.quality_score_expr('text')} AS quality_score",
+        f"{text.fingerprint_expr('text')} AS fingerprint",
         f"upper({head}) AS head_upper",
         "CAST(length(trim(text)) AS BIGINT) AS len_trimmed",
         f"regexp_replace({head}, 'a', '@') AS head_subst",
@@ -1487,7 +1477,7 @@ def q_doc_text_profile(spark, sf_dir):
         "AS lev_to_probe",
         *[f"{s} AS {k}" for k, s in rep.items()],
         # r8 3rd continuation: multi-language trigram-profile coverage
-        # scores + argmax (text.lang_id_multi) — exact int/|profile|
+        # scores + argmax (text.lang_id_multi_expr) — exact int/|profile|
         # doubles, so the oracle rederives them from the SAME profile
         # dict via text.lang_scores_sql (single source of truth)
         *[f"{s} AS lang_{lang}"
@@ -1561,7 +1551,7 @@ def q_doc_pii_redact(spark, sf_dir):
     raw = text.ngram_lm_counts(d, "text", n=2) \
         .withColumnRenamed("cnt", "rcnt")
     g = (d.select("doc_id",
-                  F.explode(text._word_ngrams(F.col("text"), 2)).alias("g"))
+                  F.explode(text._word_ngrams("text", 2)).alias("g"))
          .select("doc_id", "g.context", "g.token"))
     per = (g.join(lm, ["context", "token"], "left")
            .join(raw, ["context", "token"], "left")
@@ -1644,7 +1634,7 @@ def q_doc_train_split(spark, sf_dir):
     cont = dedup.cross_split_contamination(
         split, "doc_id", "text", "split", k=3)
     packed = text.pack_sequences(
-        split.withColumn("__n_tok", text.token_count("text")),
+        split.withColumn("__n_tok", F.expr(text.token_count_expr("text"))),
         "doc_id", "__n_tok", seq_len=512)
     # r7c: temperature mixture sampling rides this entry (it is the
     # registry's sampling/split surface): per-source sqrt-temperature
@@ -1747,7 +1737,7 @@ def _pii_bpe_oracle() -> str:
     # late r8: hashed-bucket DSIR stats (dsir_hashed_stats twin). The
     # bucket is Spark's pmod(xxhash64(gram), m) — SIGNED 64-bit
     # interpretation of the unsigned python xxh64, then python's
-    # positive %. Tokenization mirrors text.tokens() EXACTLY:
+    # positive %. Tokenization mirrors text.tokens_expr EXACTLY:
     # trim() strips SPACES only (both engines), so .strip(' ') — a
     # bare .strip() would also eat \\n/\\t and silently diverge.
     import re as _re
@@ -1837,7 +1827,7 @@ def _pii_bpe_oracle() -> str:
 #: profile dict as the Spark expressions (text.LANG_TRIGRAMS via
 #: text.lang_scores_sql; the zvalue_sql single-source-of-truth class).
 #: Scores are exact int/|profile| doubles, so the argmax CASE chain
-#: (first profile wins ties, matching lang_id_multi's struct-greatest)
+#: (first profile wins ties, matching lang_id_multi_expr's struct-greatest)
 #: compares identical doubles in both engines.
 _LANG_SQL = text.lang_scores_sql("nt")
 _LANG_COLS_SQL = ",\n               ".join(
@@ -2673,7 +2663,7 @@ _ORACLES_DEDUP["dedup_exact"] = _dedup_exact_oracle
 
 
 def _dot_sql(a: str, b: str) -> str:
-    # Mirror of similarity._exact_dot (r10: floor-quantized longs — see
+    # Mirror of similarity._exact_dot_sql (r10: floor-quantized longs — see
     # similarity._Q_SCALE for why the mirrored double->decimal cast was
     # replaced: Spark rounds the double's shortest repr, DuckDB the exact
     # binary value, and they disagree on shortest-repr midpoint ties; a
@@ -3397,17 +3387,14 @@ def q_training_data_pipeline(spark, sf_dir):
     per-document features. One Catalyst plan end to end."""
     ensure_engine_conf(spark)
     d = load(spark, sf_dir, "documents")
-    # r13 opt: feature forest as ONE selectExpr of the pinned expr twins
-    # (construction round trips; values unchanged — see doc_text_profile)
-    sr = text.stopword_ratio_expr("text")
+    # r13 opt: feature forest as ONE selectExpr of the text builders'
+    # strings (construction round trips — see doc_text_profile)
     enriched = d.selectExpr(
         "doc_id",
-        f"CASE WHEN {sr} >= 0.02D THEN 'en' ELSE 'unknown' END "
-        "AS lang_pred",
-        f"CAST(size({text.tokens_expr('text')}) AS BIGINT) AS n_tokens",
-        "md5(regexp_replace(trim(lower(text)), '\\\\s+', ' ')) "
-        "AS fingerprint",
-        f"{sr} AS stop_ratio",
+        f"{text.lang_id_expr('text')} AS lang_pred",
+        f"CAST({text.token_count_expr('text')} AS BIGINT) AS n_tokens",
+        f"{text.fingerprint_expr('text')} AS fingerprint",
+        f"{text.stopword_ratio_expr('text')} AS stop_ratio",
         f"{text.repetition_features_exprs('text')['dup_line_frac']} "
         "AS dup_line_frac")
     kept = enriched.filter(

@@ -781,8 +781,7 @@ def _near_dup_semantic_processor(index_path: str, sink, id_col: str,
         # the pair key when widened (two shared cells emit twice).
         asg = (batch_df.sparkSession.read.parquet(index_path + "/members")
                .select("centroid_id", "id", "vec"))
-        pairs = similarity._cell_pairs(asg, asg, similarity._fast_cosine,
-                                       threshold)
+        pairs = similarity._cell_pairs(asg, asg, False, threshold)
         if (n_assign or 1) > 1:
             pairs = pairs.dropDuplicates(["id_a", "id_b"])
         return pairs

@@ -106,10 +106,10 @@ def test_lang_id_multi_classifies_and_tie_breaks(spark):
         (5, "zzz qqq xxx"),
     ]
     from amazon_kinesis_replay_spark.operators.text import (
-        LANG_TRIGRAMS, lang_id_multi)
+        LANG_TRIGRAMS, lang_id_multi_expr)
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r["doc_id"]: r["lang"] for r in df.select(
-        "doc_id", lang_id_multi(F.col("text")).alias("lang")).collect()}
+    got = {r["doc_id"]: r["lang"] for r in df.selectExpr(
+        "doc_id", f"{lang_id_multi_expr('text')} AS lang").collect()}
 
     import re as _re
     def _twin(s):

@@ -14,6 +14,7 @@ Each rule encodes a 100 TB scale invariant:
   fixed.
 """
 
+import ast
 import re
 from pathlib import Path
 
@@ -108,6 +109,79 @@ def test_no_row_at_a_time_python_udf():
             if re.search(r"\bF\.udf\(|\budf\(lambda", line):
                 offenders.append(f"{_rel(p)}:{i + 1}")
     assert not offenders, f"row-at-a-time Python UDF: {offenders}"
+
+
+#: Modules whose expressions have ONE body each, a SQL-string builder.
+SINGLE_FORM_MODULES = ("operators/text.py", "operators/dedup.py",
+                       "operators/sampling.py", "operators/similarity.py")
+
+#: The Spark tokenizer spelled out — outside text.tokens_expr it is a copy.
+_SPARK_TOKENIZER = re.compile(
+    r"(?<![\w.])(?:F\.)?split\(\s*(?:F\.)?trim\(\s*(?:F\.)?lower\(")
+
+
+def _code_text(p: Path) -> str:
+    """The file's source with every docstring blanked (lines kept)."""
+    src = p.read_text()
+    lines = src.splitlines()
+    for node in ast.walk(ast.parse(src)):
+        if (isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                              ast.AsyncFunctionDef))
+                and ast.get_docstring(node, clean=False) is not None):
+            doc = node.body[0]
+            for i in range(doc.lineno - 1, doc.end_lineno):
+                lines[i] = ""
+    return "\n".join(lines)
+
+
+def _union_members(ann) -> set[str]:
+    """The members of an `A | B | ...` annotation, unparsed."""
+    if isinstance(ann, ast.BinOp) and isinstance(ann.op, ast.BitOr):
+        return _union_members(ann.left) | _union_members(ann.right)
+    return {ast.unparse(ann)} if ann is not None else set()
+
+
+def test_expression_builders_have_one_form():
+    """No Column/SQL-string twin may reappear: a builder parameter typed
+    `Column | str`, or an `isinstance(..., str)` branch inside a function
+    returning a Column or a SQL string, in the single-form modules."""
+    offenders = []
+    for rel in SINGLE_FORM_MODULES:
+        tree = ast.parse((PKG / rel).read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for arg in fn.args.args + fn.args.kwonlyargs:
+                if {"Column", "str"} <= _union_members(arg.annotation):
+                    offenders.append(f"{rel}:{arg.lineno} Column | str")
+            ret = ast.unparse(fn.returns) if fn.returns else ""
+            if "Column" not in ret and "str" not in ret:
+                continue
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Call)
+                        and getattr(node.func, "id", "") == "isinstance"
+                        and ast.unparse(node.args[1]) == "str"):
+                    offenders.append(f"{rel}:{node.lineno} isinstance")
+    assert not offenders, (
+        f"Column/SQL twin builder: {offenders} — build the SQL string "
+        "once and F.expr it at the call site")
+
+
+def test_spark_tokenizer_only_in_text_builder():
+    """split(trim(lower(x)), '\\s+') is text.tokens_expr; a second copy
+    in package or tools/ code can drift from the oracles' tokenizer
+    (docstrings and the DuckDB regexp_split_to_array oracles aside)."""
+    offenders = []
+    sources = _py_sources() + sorted((PKG.parent / "tools").glob("*.py"))
+    for p in sources:
+        if p == PKG / "operators" / "text.py":
+            continue
+        code = _code_text(p)
+        for m in _SPARK_TOKENIZER.finditer(code):
+            line = code[:m.start()].count("\n") + 1
+            offenders.append(f"{p.relative_to(PKG.parent)}:{line}")
+    assert not offenders, (
+        f"inline Spark tokenizer: {offenders} — use text.tokens_expr")
 
 
 def test_bench_attempt_quiet_predicate_is_steal_proof():

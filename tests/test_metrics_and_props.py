@@ -415,21 +415,21 @@ def test_qhist_buckets_property_match_twin(values):
     st.text(alphabet="ab \t\n\x0b\f\r é", min_size=0, max_size=30),
     min_size=1, max_size=8))
 def test_tokens_spark_twin_property(texts):
-    """tokens_spark == Spark's split(trim(lower), \\s+) on adversarial
-    whitespace: tabs/newlines at the edges (F.trim strips spaces ONLY),
+    """tokens_spark == the package tokenizer (text.tokens_expr) on
+    adversarial whitespace: tabs/newlines at the edges (trim strips
+    spaces ONLY),
     vertical tab / form feed (Java \\s includes \\x0b), and NBSP +
     non-ASCII letters (Java \\s is ASCII-only — python's unicode \\s
     would split on NBSP and silently diverge). Every trainer/retrieval
     twin tokenizes through this one function, so this property is the
     floor under all of them."""
     from amazon_kinesis_replay_spark.functions.xxh import tokens_spark
+    from amazon_kinesis_replay_spark.operators.text import tokens_expr
     from amazon_kinesis_replay_spark.session import build_spark
-    from pyspark.sql import functions as F
     spark = build_spark("engine-tests", shuffle_partitions=8)
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "i LONG, t STRING")
-    got = {r["i"]: r["toks"] for r in df.select(
-        "i", F.split(F.trim(F.lower(F.col("t"))), r"\s+").alias("toks"))
-        .collect()}
+    got = {r["i"]: r["toks"] for r in df.selectExpr(
+        "i", f"{tokens_expr('t')} AS toks").collect()}
     for i, t in enumerate(texts):
         assert got[i] == tokens_spark(t), repr(t)

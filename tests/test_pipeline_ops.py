@@ -403,9 +403,8 @@ def test_ivf_index_append_serves_new_vectors(spark, sf_dir, tmp_path):
 def _probe_lists(spark, index, query_df, n_probe):
     cents = spark.read.parquet(index + "/centroids")
     probe = (cents.crossJoin(F.broadcast(query_df))
-             .select("centroid_id",
-                     similarity.cosine(F.col("c_vec"),
-                                       F.col("q_vec")).alias("sim"))
+             .selectExpr("centroid_id",
+                         f"{similarity.cosine_sql('c_vec', 'q_vec')} AS sim")
              .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
              .limit(n_probe))
     return [r["centroid_id"] for r in probe.collect()]
@@ -746,7 +745,7 @@ def test_lang_id_ngram_profiles(spark, sf_dir):
     d = load(spark, sf_dir, "documents").limit(100)
     out = d.select(
         "doc_id",
-        textops.lang_id(F.col("text")).alias("stopword_pred"),
+        F.expr(textops.lang_id_expr("text")).alias("stopword_pred"),
         textops.lang_id_ngram(F.col("text")).alias("ngram_pred"))
     rows = out.collect()
     en_ngram = sum(r["ngram_pred"] == "en" for r in rows)
@@ -2318,9 +2317,9 @@ def test_repetition_features_crafted(spark):
         (4, "just one line of text"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    rep = T.repetition_features(F.col("text"))
-    out = {r["doc_id"]: r for r in df.select(
-        "doc_id", *[v.alias(k) for k, v in rep.items()]).collect()}
+    rep = T.repetition_features_exprs("text")
+    out = {r["doc_id"]: r for r in df.selectExpr(
+        "doc_id", *[f"{v} AS {k}" for k, v in rep.items()]).collect()}
 
     assert out[1]["dup_line_frac"] == 0.25            # 1 dup of 4 lines
     assert out[1]["dup_para_frac"] == 0.0
@@ -2590,7 +2589,7 @@ def test_write_training_shards(spark, sf_dir, tmp_path):
     from amazon_kinesis_replay_spark.operators import text as T
     d = load(spark, sf_dir, "documents")
     packed = T.pack_sequences(
-        d.withColumn("__n_tok", T.token_count(F.col("text"))),
+        d.withColumn("__n_tok", F.expr(T.token_count_expr("text"))),
         "doc_id", "__n_tok", seq_len=256)
     df = (packed.withColumn(
         "split", F.when(F.pmod("doc_id", 10) < 8, "train").otherwise("valid"))
@@ -2636,7 +2635,7 @@ def test_write_training_shards_deterministic_shuffle(spark, sf_dir,
     from amazon_kinesis_replay_spark.operators import text as T
     d = load(spark, sf_dir, "documents")
     packed = T.pack_sequences(
-        d.withColumn("__n_tok", T.token_count(F.col("text"))),
+        d.withColumn("__n_tok", F.expr(T.token_count_expr("text"))),
         "doc_id", "__n_tok", seq_len=256)
     df = (packed.withColumn("split", F.lit("train"))
           .select("doc_id", "pack_id", "split"))
@@ -5069,7 +5068,7 @@ def _batch_pair_set(emb, cents, n_assign, threshold) -> set:
     multi = similarity._ranked_assign(emb, cents, n_assign)
     side = multi.select("centroid_id", "id", "vec")
     return _v2_pair_set(
-        similarity._cell_pairs(side, side, similarity._fast_cosine,
+        similarity._cell_pairs(side, side, False,
                                threshold).dropDuplicates(["id_a", "id_b"]))
 
 
@@ -5104,7 +5103,7 @@ def test_semantic_index_v2_two_sided_batch_parity(spark, sf_dir,
     # build-time pairs (what the streaming bootstrap emits), append b1/b2
     side = members.select("centroid_id", "id", "vec")
     p0 = _v2_pair_set(similarity._cell_pairs(
-        side, side, similarity._fast_cosine, 0.4)
+        side, side, False, 0.4)
         .dropDuplicates(["id_a", "id_b"]))
     p1 = _v2_pair_set(similarity.semantic_dedup_incremental(
         spark, b, path, threshold=0.4, append=True, delta_name="b1"))
@@ -5625,50 +5624,70 @@ def test_image_codecs_raise_only_skip_tuple_under_mutation():
                 pass
 
 
-def test_sql_twin_builders_bit_equal(spark, sf_dir):
-    """The r13 _sql twins of the similarity expression builders (added to
-    cut py4j plan-construction round trips) must compute BIT-identical
-    doubles to the Column forms they replace — the exact-dot family
-    feeds oracle-gated outputs, and the sign-band buckets decide the
-    candidate set. Checked over every fixture embedding pair against a
-    reference vector plus the self-pair (norm path)."""
+def test_dot_builders_match_python_reference(spark, sf_dir):
+    """The similarity dot/cosine builders compute BIT-identical doubles to
+    a plain-Python recomputation of their documented arithmetic, over
+    every fixture embedding against a reference vector: the engine-exact
+    quantized sum (feeds oracle-gated outputs), the sequential double
+    fold, and the balanced-tree fixed-width form (pre-filter math)."""
+    import math
     import struct
 
     from amazon_kinesis_replay_spark.operators import similarity as S
-    from amazon_kinesis_replay_spark.operators.dedup import _sign_band_keys
 
     emb = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     q = emb.filter("id = 0").selectExpr("v AS q_vec")
-    pairs = emb.crossJoin(F.broadcast(q))
-
-    old = pairs.select(
-        "id",
-        S._exact_dot(F.col("v"), F.col("q_vec")).alias("d"),
-        S.cosine(F.col("v"), F.col("q_vec")).alias("c"),
-        S._fast_dot(F.col("v"), F.col("q_vec")).alias("f"),
-        S._fast_dot_fixed(F.col("v"), F.col("q_vec"), 64).alias("fx"),
-    ).orderBy("id").collect()
-    new = pairs.selectExpr(
-        "id",
+    rows = emb.crossJoin(F.broadcast(q)).selectExpr(
+        "id", "v", "q_vec",
         f"{S._exact_dot_sql('v', 'q_vec')} AS d",
         f"{S.cosine_sql('v', 'q_vec')} AS c",
         f"{S._fast_dot_sql('v', 'q_vec')} AS f",
         f"{S._fast_dot_fixed_sql('v', 'q_vec', 64)} AS fx",
-    ).orderBy("id").collect()
+    ).collect()
+
+    def exact(a, b):
+        return float(sum(math.floor(x * y * 1e12 + 0.5)
+                         for x, y in zip(a, b))) / 1e12
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def tree(a, b):
+        t = [x * y for x, y in zip(a, b)]
+        while len(t) > 1:
+            t = [t[i] + t[i + 1] if i + 1 < len(t) else t[i]
+                 for i in range(0, len(t), 2)]
+        return t[0] + 0.0
 
     def bits(x):
         return struct.pack("<d", x)
 
-    assert len(old) == len(new) > 0
-    for o, n in zip(old, new):
-        assert o["id"] == n["id"]
-        for col in ("d", "c", "f", "fx"):
-            assert bits(o[col]) == bits(n[col]), (o["id"], col)
+    assert len(rows) > 0
+    for r in rows:
+        v, qv = r["v"], r["q_vec"]
+        cos = exact(v, qv) / (math.sqrt(exact(v, v))
+                              * math.sqrt(exact(qv, qv)))
+        want = {"d": exact(v, qv), "c": cos, "f": fold(v, qv),
+                "fx": tree(v, qv)}
+        for col, w in want.items():
+            assert bits(r[col]) == bits(w), (r["id"], col, r[col], w)
 
-    # sign-band buckets: the selectExpr inline form must reproduce the
-    # Column form's (id, band, bucket) rows exactly (8 bands x 8 bits)
-    def old_band_keys(src, n_bands, band_bits):
+
+def test_sign_band_keys_match_reference(spark, sf_dir):
+    """The sign-band LSH keys decide the embedding-dedup candidate set:
+    `_sign_band_keys` must reproduce a reference built from explicit
+    per-bit CASE columns — the same (id, band, bucket) rows exactly
+    (8 bands x 8 bits over every fixture embedding)."""
+    from amazon_kinesis_replay_spark.operators.dedup import _sign_band_keys
+
+    emb = load(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+
+    def ref_band_keys(src, n_bands, band_bits):
         def band_bucket_v(b):
             bucket = F.lit(0)
             for j in range(band_bits):
@@ -5687,51 +5706,8 @@ def test_sql_twin_builders_bit_equal(spark, sf_dir):
         ).select("id", "bb.band", "bb.bucket")
 
     got = sorted(map(tuple, _sign_band_keys(emb, 8, 8).collect()))
-    want = sorted(map(tuple, old_band_keys(emb, 8, 8).collect()))
+    want = sorted(map(tuple, ref_band_keys(emb, 8, 8).collect()))
     assert got == want and len(got) > 0
-
-
-def test_text_expr_twins_value_equal(spark, sf_dir):
-    """The r13 str fast paths of the text feature builders (one parsed
-    SQL string instead of a py4j round trip per Column call) must be
-    value-equal to the Column forms over every fixture document —
-    these feed the oracle-gated doc_text_profile / training pipeline
-    columns."""
-    import struct
-
-    from amazon_kinesis_replay_spark.operators import text as T
-
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", "text",
-        F.explode(F.array(F.regexp_replace(
-            F.lower("text"), r"\s+", " "))).alias("__nt"))
-
-    def cols(use_str):
-        t = "text" if use_str else F.col("text")
-        nt = "__nt" if use_str else F.col("__nt")
-        rep = T.repetition_features(t)
-        return [
-            T.token_count(t).alias("tc"),
-            T.bpe_token_estimate(t).alias("bpe"),
-            T.stopword_ratio(t).alias("sr"),
-            T.lang_id(t).alias("li"),
-            T.fingerprint(t).alias("fp"),
-            *[v.alias("r_" + k) for k, v in rep.items()],
-            *[s.alias("lang_" + l) for l, s in
-              T.lang_scores(nt, pre_normalized=True).items()],
-            T.lang_id_multi(nt, pre_normalized=True).alias("lm"),
-        ]
-
-    old = d.select("doc_id", *cols(False)).orderBy("doc_id").collect()
-    new = d.select("doc_id", *cols(True)).orderBy("doc_id").collect()
-
-    def canon(v):
-        return struct.pack("<d", v) if isinstance(v, float) else v
-
-    assert len(old) == len(new) > 0
-    for o, n in zip(old, new):
-        for k in o.asDict():
-            assert canon(o[k]) == canon(n[k]), (o["doc_id"], k, o[k], n[k])
 
 
 def test_minhash_signature_struct_agg_bit_equal(spark, sf_dir):

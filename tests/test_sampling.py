@@ -65,7 +65,7 @@ def test_hash_ppm_large_ids_no_ansi_overflow(spark):
            9_223_372_036_854_775_807]
     df = spark.createDataFrame([(i,) for i in ids], "id long")
     got = {r["id"]: r["ppm"] for r in
-           df.select("id", sampling.hash_ppm(F.col("id")).alias("ppm"))
+           df.selectExpr("id", f"{sampling.hash_ppm_expr('id')} AS ppm")
            .collect()}
     for i in ids:
         assert got[i] == (i * _M) % _PPM, i

@@ -696,7 +696,7 @@ def test_near_dup_semantic_stream_two_sided_n_assign(spark, sf_dir,
     side = S._ranked_assign(emb, cents, 2) \
         .select("centroid_id", "id", "vec").localCheckpoint()
     want = {(r["id_a"], r["id_b"]) for r in
-            S._cell_pairs(side, side, S._fast_cosine, 0.4)
+            S._cell_pairs(side, side, False, 0.4)
             .dropDuplicates(["id_a", "id_b"]).collect()}
     assert got[0] | got[1] == want
     # and the widened set is a strict superset of the primary-only one
@@ -704,7 +704,7 @@ def test_near_dup_semantic_stream_two_sided_n_assign(spark, sf_dir,
         S.ivf_assign(emb, centroids=cents).select("id", "centroid_id"),
         ["id", "centroid_id"], "left_semi")
     want1 = {(r["id_a"], r["id_b"]) for r in
-             S._cell_pairs(prim, prim, S._fast_cosine, 0.4).collect()}
+             S._cell_pairs(prim, prim, False, 0.4).collect()}
     assert want1 < want
 
 

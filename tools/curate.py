@@ -519,8 +519,7 @@ def main():
     # cardinality (HLL) + corpus-membership filter (Bloom) with a
     # self-check that every exported doc probes present (the exact
     # negative side is the filter's contract)
-    toks = clean.select(F.explode(
-        F.split(F.trim(F.lower("text")), r"\s+")).alias("tok"))
+    toks = clean.selectExpr(f"explode({text.tokens_expr('text')}) AS tok")
     regs = sketches.hll_register_table(toks, "tok", p=12)
     summary["distinct_token_estimate"] = int(
         sketches.hll_estimate(regs, 12))
@@ -541,7 +540,7 @@ def main():
     from amazon_kinesis_replay_spark.operators import layout
     audit = (clean.join(probs, "doc_id")
              .select("doc_id", "split", "prob",
-                     text.token_count(F.col("text")).alias("dl")))
+                     F.expr(text.token_count_expr("text")).alias("dl")))
     qcols = [layout.quantize(F.col("prob"), 0.0, 1.0, bits=8),
              layout.quantize(F.col("dl"), 0, 4096, bits=8)]
     layout.layout_hilbert(audit, qcols, bits=8, n_partitions=8) \
