@@ -59,7 +59,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "--reorder-state-path")
     p.add_argument("--reorder-state-path", default=None,
                    help="durable held-state dir for the partitioned-mode "
-                        "reorder gate (parquet epochs + applied marker)")
+                        "reorder gate (parquet epochs with commit markers)")
     p.add_argument("--codec", choices=["text", "sniff"], default="text",
                    help="'text' = extension-dispatched Hadoop codecs (fast "
                         "JVM path, .gz/.bz2); 'sniff' = content-sniffed "

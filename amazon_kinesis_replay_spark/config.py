@@ -52,10 +52,11 @@ class ReplayConfig:
     #: its in-memory pandas buffer and ignores this; partitioned mode
     #: REQUIRES it when reorder_across_batches is set — the held tail
     #: (at least reader_buffer_size rows) lives as parquet under
-    #: held/epoch=<batch_id> with an applied-batch marker, the same
-    #: overwrite-by-batch-id idempotency as the near-dup pair sink, so
-    #: a redelivered micro-batch cannot corrupt the buffer (emission to
-    #: the sink stays at-least-once, like every replay sink path).
+    #: held/gen=<batch_id>, and an epoch is applied once its commit
+    #: marker file exists (written last, like fsutil.gen_commit), so a
+    #: redelivered micro-batch either skips or recomputes from the
+    #: previous committed epoch and cannot corrupt the buffer (emission
+    #: to the sink stays at-least-once, like every replay sink path).
     reorder_state_path: str | None = None
 
     # -- sink (OP-SINK-*) -----------------------------------------------------

@@ -61,9 +61,12 @@ def has_committed_output(spark, path: str) -> bool:
 def read_applied_batch(spark, path: str) -> int:
     """The applied-batch-id marker of an index directory (-1 when absent
     or unreadable) — the replay guard every index-backed incremental
-    consults. One shared reader (r8 review: three copies had grown)."""
+    consults. One shared reader (r8 review: three copies had grown).
+    The explicit schema makes it one Spark job (the `head`), with no
+    schema-inference job over the marker's footer first."""
     try:
-        row = spark.read.parquet(path + "/applied").head()
+        row = spark.read.schema("batch_id long") \
+            .parquet(path + "/applied").head()
         return int(row["batch_id"]) if row is not None else -1
     except Exception:
         return -1
@@ -139,6 +142,12 @@ GEN_MARKER = "_GEN_COMMITTED"
 _GEN_PREFIX = "gen="
 
 
+def gen_path(path: str, number: int) -> str:
+    """Directory of generation `number` under `path` (zero-padded, so
+    names sort like numbers)."""
+    return f"{path}/{_GEN_PREFIX}{number:010d}"
+
+
 def gen_list(spark, path: str) -> list[tuple[int, str, bool]]:
     """(number, child name, committed?) for every generation directory
     under `path`, ascending by number. Tolerates unpadded names."""
@@ -179,7 +188,7 @@ def gen_begin(spark, path: str) -> str:
         if not committed:
             delete(spark, f"{path}/{name}")
     nxt = (max(n for n, _, _ in gens) + 1) if gens else 1
-    return f"{path}/{_GEN_PREFIX}{nxt:010d}"
+    return gen_path(path, nxt)
 
 
 def gen_commit(spark, build_dir: str) -> None:

@@ -100,6 +100,11 @@ class ReplayStats:
             self._window_events = 0
 
 
+class LegacyReorderStateError(RuntimeError):
+    """The reorder state dir was written in the old layout (a root
+    `applied/` marker), which this gate does not read."""
+
+
 class ReplayEngine:
     """Stateful cross-batch replay: holds the ingestion anchor exactly like
     the reference's parser (first parsed event + wall clock at construction,
@@ -134,6 +139,7 @@ class ReplayEngine:
         self._first_event_ts = None        # event-time anchor
         self._ingestion_start = None       # wall-clock anchor
         self._held = None                  # cross-batch reorder buffer (pdf)
+        self._spark = None                 # session of the last gated batch
 
     # -- anchor management (OP-PROJ-INGEST) --------------------------------
 
@@ -244,7 +250,9 @@ class ReplayEngine:
         Partitioned mode drains the durable held state and then deletes
         the state directory (the stream is over); a crash between the
         drain emit and the delete redelivers on the next finalize —
-        at-least-once, like every sink path here."""
+        at-least-once, like every sink path here. It reads the state
+        with the session of the last `process_batch`, and raises when
+        no batch has run on this engine."""
         if self.mode == "partitioned":
             self._finalize_partitioned()
             return
@@ -255,8 +263,33 @@ class ReplayEngine:
 
     # -- partitioned-mode distributed reorder gate (late r8) ----------------
 
-    def _reorder_root(self) -> str:
-        return self.cfg.reorder_state_path.rstrip("/")
+    #: Schema of the held state, given explicitly so reading an epoch
+    #: needs no schema-inference job.
+    _HELD_SCHEMA = "payload string, ts timestamp"
+
+    def _state_root(self, spark) -> str:
+        """`reorder_state_path`; the held epochs live under its `held/`.
+        Refuses a state dir in the old layout (a root `applied/` parquet
+        marker beside `held/epoch=<id>` dirs): its epochs carry no commit
+        marker, so reading on would silently drop the held rows."""
+        from .. import fsutil
+        root = self.cfg.reorder_state_path.rstrip("/")
+        if fsutil.exists(spark, root + "/applied"):
+            raise LegacyReorderStateError(
+                f"{root} holds reorder state in the old applied-marker "
+                "layout; drain it with the release that wrote it, or "
+                "delete it to start the gate empty")
+        return root
+
+    @staticmethod
+    def _last_committed(spark, held_root: str):
+        """(batch id, directory) of the newest committed epoch, or
+        (-1, None) when no epoch has committed yet."""
+        from .. import fsutil
+        for n, name, committed in reversed(fsutil.gen_list(spark, held_root)):
+            if committed:
+                return n, f"{held_root}/{name}"
+        return -1, None
 
     def _process_partitioned_reordered(self, batch_df: DataFrame,
                                        batch_id: int):
@@ -276,31 +309,31 @@ class ReplayEngine:
           not row count: a row-count split of a distributed frame is
           nondeterministic under ties, a ts cutoff is not. Ties at the
           cutoff ride the buffer (window >= bound rows, never < bound).
-        - state is parquet under held/epoch=<batch_id> with the
-          applied-batch marker written AFTER the emit: a redelivered
-          batch either skips entirely (marker present — state and emit
-          already done) or recomputes bit-identically from the previous
-          epoch and overwrites its own output. Sink emission stays
-          at-least-once (crash between emit and marker re-emits), the
-          same contract as send_with_retry.
+        - state is one parquet epoch per batch, held/gen=<batch_id>, and
+          an epoch is APPLIED iff it holds the generation commit marker
+          (`fsutil.gen_commit`), written after both the emit and the
+          held write. A redelivered batch either skips entirely (its
+          epoch is committed: state and emit already done) or recomputes
+          bit-identically from the previous committed epoch and
+          overwrites its own uncommitted one. The marker and the state
+          share one directory, so they cannot disagree. Sink emission
+          stays at-least-once (a crash between emit and commit re-emits),
+          the same contract as send_with_retry.
         """
         from .. import fsutil
-        spark = batch_df.sparkSession
-        root = self._reorder_root()
-        applied = fsutil.read_applied_batch(spark, root)
+        spark = self._spark = batch_df.sparkSession
+        held_root = self._state_root(spark) + "/held"
+        applied, prev = self._last_committed(spark, held_root)
         if applied >= batch_id:
             return                      # redelivery of an applied batch
-        batch = batch_df.select("payload", "ts") \
+        combined = batch_df.select("payload", "ts") \
             .filter(F.col("ts").isNotNull())
-        prev = f"{root}/held/epoch={applied}"
-        if applied >= 0 and fsutil.has_committed_output(spark, prev):
-            combined = (spark.read.parquet(prev)
-                        .select("payload", "ts").unionByName(batch))
-        else:
-            combined = batch
-        # four downstream actions (cutoff, emit, state write, anchor agg)
-        # over one frame: materialize once; ContextCleaner reclaims the
-        # blocks when the frame goes out of scope (localCheckpoint, not
+        if prev is not None:
+            combined = (spark.read.schema(self._HELD_SCHEMA).parquet(prev)
+                        .unionByName(combined))
+        # three downstream actions (cutoff, emit, state write) over one
+        # frame: materialize once; ContextCleaner reclaims the blocks
+        # when the frame goes out of scope (localCheckpoint, not
         # persist: each branch would otherwise embed the full lineage)
         combined = combined.localCheckpoint()
         bound = max(1, self.cfg.reader_buffer_size)
@@ -311,38 +344,35 @@ class ReplayEngine:
         if int(head["k"] or 0) < bound:
             emit, held = None, combined   # window not yet full: hold all
         else:
-            cutoff = head["cutoff"]
-            emit = combined.filter(F.col("ts") < F.lit(cutoff))
-            held = combined.filter(F.col("ts") >= F.lit(cutoff))
-        held.write.mode("overwrite").parquet(f"{root}/held/epoch={batch_id}")
+            # the literal from epoch micros: F.lit of the naive-UTC
+            # pandas Timestamp would go through time.mktime and shift by
+            # the host's UTC offset
+            cutoff = F.timestamp_micros(F.lit(head["cutoff"].value // 1000))
+            emit = combined.filter(F.col("ts") < cutoff)
+            held = combined.filter(F.col("ts") >= cutoff)
+        out = fsutil.gen_path(held_root, batch_id)
+        held.write.mode("overwrite").parquet(out)
         if emit is not None:
             self._process_partitioned(emit)
-        spark.createDataFrame([(batch_id,)], "batch_id long") \
-            .write.mode("overwrite").parquet(root + "/applied")
-        # best-effort old-epoch sweep: delete EVERY non-current epoch,
-        # not just prev — a crash between a past marker write and its
-        # cleanup leaves an orphan no later batch would otherwise touch
-        # (self-review finding)
-        for name in fsutil.listdir(spark, root + "/held"):
-            if name.startswith("epoch=") and name != f"epoch={batch_id}":
-                fsutil.delete(spark, f"{root}/held/{name}")
+        fsutil.gen_commit(spark, out)
+        fsutil.gen_gc(spark, held_root, keep=1)
 
     def _finalize_partitioned(self):
         if not (self.cfg.reorder_across_batches
                 and self.cfg.reorder_state_path):
             return
-        from pyspark.sql import SparkSession
-
         from .. import fsutil
-        spark = SparkSession.getActiveSession()
+        spark = self._spark
         if spark is None:
-            return
-        root = self._reorder_root()
-        applied = fsutil.read_applied_batch(spark, root)
-        tail = f"{root}/held/epoch={applied}"
-        if applied >= 0 and fsutil.has_committed_output(spark, tail):
-            self._process_partitioned(spark.read.parquet(tail)
-                                      .select("payload", "ts"))
+            raise RuntimeError(
+                "finalize() drains the partitioned reorder state with the "
+                "SparkSession of the last process_batch; no batch has run "
+                "on this engine")
+        root = self._state_root(spark)
+        _, tail = self._last_committed(spark, root + "/held")
+        if tail is not None:
+            self._process_partitioned(
+                spark.read.schema(self._HELD_SCHEMA).parquet(tail))
         fsutil.delete(spark, root)        # stream over: clear the state
 
     def _emit_pdf(self, pdf):
@@ -508,26 +538,23 @@ class ReplayEngine:
                 "sent": [part_stats.records_sent],
                 "mn": [mn], "mx": [mx]})
 
-        # toPandas, not collect(): the mx timestamp must come back through
-        # Arrow as naive-UTC to stay comparable with driver-mode watermarks
-        tot = (shaped.mapInPandas(
-            _emit, "n long, requests long, retried long, sent long, "
-                   "mn timestamp, mx timestamp")
-            .agg(F.sum("n").alias("n"), F.sum("requests").alias("req"),
-                 F.sum("retried").alias("ret"), F.sum("sent").alias("sent"),
-                 F.max("mx").alias("mx"))
-            .toPandas().iloc[0])
         import pandas as pd
 
-        def _i(v):
-            return 0 if pd.isna(v) else int(v)
-        n_events = _i(tot["n"])
-        self.stats.sink.requests += _i(tot["req"])
-        self.stats.sink.retried_records += _i(tot["ret"])
-        self.stats.sink.records_sent += _i(tot["sent"])
-        batch_mx = None if pd.isna(tot["mx"]) else tot["mx"]
-        if batch_mx is not None and (self.stats.max_emitted_ts is None
-                                     or batch_mx > self.stats.max_emitted_ts):
+        # one stats row per sender partition, summed here on the driver:
+        # a Spark-side agg would add a final shuffle (and, under AQE, a
+        # job) to every batch for `sender_threads` rows. toPandas, not
+        # collect(): the mx timestamp must come back through Arrow as
+        # naive-UTC to stay comparable with driver-mode watermarks
+        parts = shaped.mapInPandas(
+            _emit, "n long, requests long, retried long, sent long, "
+                   "mn timestamp, mx timestamp").toPandas()
+        n_events = int(parts["n"].sum())
+        self.stats.sink.requests += int(parts["requests"].sum())
+        self.stats.sink.retried_records += int(parts["retried"].sum())
+        self.stats.sink.records_sent += int(parts["sent"].sum())
+        batch_mx = parts["mx"].max()
+        if not pd.isna(batch_mx) and (self.stats.max_emitted_ts is None
+                                      or batch_mx > self.stats.max_emitted_ts):
             self.stats.max_emitted_ts = batch_mx        # OP-AGG-MAXWM
         self.stats.tick(n_events, self.clock(),
                         cfg.statistics_frequency_ms)

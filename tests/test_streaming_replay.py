@@ -410,14 +410,88 @@ def test_reorder_flag_rejected_in_partitioned_mode_without_state():
     ReplayEngine(cfg2, lambda: InMemorySink(), mode="partitioned")
 
 
+#: Minute-spaced gate inputs: b0 holds minutes 10-99, and each batch
+#: leaks its 10 earliest minutes into the next one.
+GATE_BATCHES = [list(range(10, 100)),
+                list(range(110, 200)) + list(range(0, 10)),
+                list(range(200, 300)) + list(range(100, 110))]
+GATE_BOUND = 150
+
+
+def _minute_frame(spark, minutes):
+    """(payload, ts) rows, payload = the minute, ts = 2020-09-13T12:26:40Z
+    plus that many minutes. The timestamps are made on the JVM side, so
+    no Python datetime, and no host timezone, is involved."""
+    return (spark.createDataFrame([(str(m), m) for m in minutes],
+                                  "payload string, m long")
+            .select("payload", F.timestamp_seconds(
+                F.lit(1_600_000_000) + F.col("m") * 60).alias("ts")))
+
+
+def _gate_twin(batches, bound=GATE_BOUND):
+    """Pure-python twin of the partitioned gate: cutoff = the bound-th
+    largest value of held + batch, emit the values below it, hold the
+    rest. Returns (per-batch emits, tail)."""
+    held, per_batch = [], []
+    for batch in batches:
+        comb = sorted(held + list(batch))
+        if len(comb) < bound:
+            held, emit = comb, []
+        else:
+            cutoff = comb[len(comb) - bound]
+            emit = [m for m in comb if m < cutoff]
+            held = [m for m in comb if m >= cutoff]
+        per_batch.append(emit)
+    return per_batch, held
+
+
+def _request_journal(rec_dir):
+    """Sink factory that journals one line per request: the payloads and
+    ts strings it was handed. Defined in a function so cloudpickle ships
+    it to the Python workers by value."""
+    import json as js
+    import os
+    os.makedirs(rec_dir, exist_ok=True)
+
+    class RequestJournal:
+        def __init__(self):
+            self.f = open(os.path.join(
+                rec_dir, f"{os.getpid()}-{id(self)}.jsonl"), "a")
+
+        def put_records(self, records):
+            self.f.write(js.dumps([[r["payload"], r["ts"]]
+                                   for r in records]) + "\n")
+            self.f.flush()
+            return []
+
+    def read():
+        import glob
+        return [js.loads(line) for fp in glob.glob(rec_dir + "/*.jsonl")
+                for line in open(fp)]
+
+    return RequestJournal, read
+
+
+def _gate_engine(tmp_path, sink):
+    return ReplayEngine(
+        ReplayConfig(speedup_factor=1e12, sender_threads=2,
+                     reader_buffer_size=GATE_BOUND,
+                     reorder_across_batches=True,
+                     anchor_ts="2020-09-13T12:26:40Z",
+                     reorder_state_path=str(tmp_path / "reorder-state")),
+        sink, mode="partitioned")
+
+
+def _emitted_minutes(requests):
+    return sorted(int(p) for req in requests for p, _ in req)
+
+
 def test_reorder_distributed_gate_partitioned(spark, sf_dir, tmp_path):
     """late r8: the reorder buffer carried into PARTITIONED mode — held
-    state as parquet epochs + applied-batch marker. Pins, against a
-    pure-python twin of the ts-cutoff poll-when-full rule:
+    state as parquet epochs, each applied once its commit marker exists.
+    Pins, against a pure-python twin of the ts-cutoff poll-when-full rule:
     per-batch emit multisets, redelivery idempotence (marker skip),
     finalize drain (nothing dropped) and state-dir cleanup."""
-    import glob
-    import json as js
     import os
 
     events = (load(spark, sf_dir, "events")
@@ -431,47 +505,18 @@ def test_reorder_distributed_gate_partitioned(spark, sf_dir, tmp_path):
     leak1, b[1] = b[1][:10], b[1][10:] + leak0
     b[2] = b[2] + leak1
 
-    BOUND = 150
-    rec_dir = str(tmp_path / "reorder-rec")
-    os.makedirs(rec_dir, exist_ok=True)
-
-    class JournalSink:
-        def __init__(self):
-            self.f = open(os.path.join(
-                rec_dir, f"{os.getpid()}-{id(self)}.jsonl"), "a")
-
-        def put_records(self, records):
-            for r in records:
-                self.f.write(js.dumps({"ts": r["ts"]}) + "\n")
-            self.f.flush()
-            return []
+    JournalSink, read = _request_journal(str(tmp_path / "reorder-rec"))
 
     def emitted():
-        out = []
-        for fp in glob.glob(rec_dir + "/*.jsonl"):
-            out.extend(js.loads(line)["ts"] for line in open(fp))
-        return sorted(out)
+        return sorted(t for req in read() for _, t in req)
 
-    # pure-python twin of the gate: cutoff = the BOUND-th largest ts,
-    # emit ts < cutoff, hold ts >= cutoff (ties ride the buffer)
-    def twin(batches):
-        held, per_batch = [], []
-        for batch in batches:
-            comb = sorted(held + [r["ts"].isoformat() for r in batch])
-            if len(comb) < BOUND:
-                held, emit = comb, []
-            else:
-                cutoff = comb[len(comb) - BOUND]
-                emit = [t for t in comb if t < cutoff]
-                held = [t for t in comb if t >= cutoff]
-            per_batch.append(emit)
-        return per_batch, held
-
-    want_batches, want_tail = twin(b)
+    # ties at the cutoff ride the buffer
+    want_batches, want_tail = _gate_twin(
+        [[r["ts"].isoformat() for r in batch] for batch in b])
     assert want_batches[0] == [] and want_batches[1], "fixture sanity"
 
     cfg = ReplayConfig(speedup_factor=1e12, sender_threads=2,
-                       reader_buffer_size=BOUND,
+                       reader_buffer_size=GATE_BOUND,
                        reorder_across_batches=True,
                        reorder_state_path=str(tmp_path / "reorder-state"))
     engine = ReplayEngine(cfg, JournalSink, mode="partitioned")
@@ -479,23 +524,27 @@ def test_reorder_distributed_gate_partitioned(spark, sf_dir, tmp_path):
     seen: list = []
     for i, batch in enumerate(b):
         if i == 2:
-            # orphan epoch from a simulated crashed cleanup: the next
-            # batch's sweep must remove every non-current epoch
-            os.makedirs(state_root + "/held/epoch=0", exist_ok=True)
-            open(state_root + "/held/epoch=0/junk", "w").write("x")
+            # orphan epoch from a simulated crash between a past commit
+            # and its sweep: the next batch's sweep must remove every
+            # non-current epoch
+            orphan = state_root + "/held/gen=0000000000"
+            os.makedirs(orphan, exist_ok=True)
+            open(orphan + "/junk", "w").write("x")
+            open(orphan + "/_GEN_COMMITTED", "w").write("committed\n")
         engine.process_batch(
             spark.createDataFrame(batch, events.schema), i)
         if i == 2:
             held_dirs = [d for d in os.listdir(state_root + "/held")
-                         if d.startswith("epoch=")]
-            assert held_dirs == ["epoch=2"], held_dirs
+                         if d.startswith("gen=")]
+            assert held_dirs == ["gen=0000000002"], held_dirs
         now = emitted()
         # this batch's emissions = difference vs what was seen before
         import collections
         diff = collections.Counter(now) - collections.Counter(seen)
         assert sorted(diff.elements()) == sorted(want_batches[i]), i
         seen = now
-    # redelivery of an already-applied batch: marker skips, nothing new
+    # redelivery of an already-applied batch: commit marker skips,
+    # nothing new
     engine.process_batch(spark.createDataFrame(b[1], events.schema), 1)
     assert emitted() == seen
     # finalize drains the held tail and clears the state dir
@@ -509,6 +558,149 @@ def test_reorder_distributed_gate_partitioned(spark, sf_dir, tmp_path):
     # a second finalize is a no-op
     engine.finalize()
     assert len(emitted()) == 300
+
+
+def test_reorder_gate_cutoff_ignores_host_timezone(spark, tmp_path):
+    """The gate's ts cutoff comes back from Spark as a naive-UTC pandas
+    Timestamp. Turned into a literal through the host clock
+    (time.mktime), it moved by the host's UTC offset: under New York
+    time, 4 hours later, so the gate emitted rows it should hold. Pins
+    the per-batch emitted payloads against the pure-python twin with a
+    non-UTC host TZ, and checks that the stats summed on the driver
+    (records sent, requests, watermark) match the sink's journal after
+    every batch."""
+    import os
+    import time
+
+    sink, read = _request_journal(str(tmp_path / "journal"))
+    engine = _gate_engine(tmp_path, sink)
+    want, want_tail = _gate_twin(GATE_BATCHES)
+    assert want[0] == [] and want[1] and want[2], "fixture sanity"
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        seen = []
+        for i, minutes in enumerate(GATE_BATCHES):
+            engine.process_batch(_minute_frame(spark, minutes), i)
+            requests = read()
+            now = _emitted_minutes(requests)
+            assert sorted(set(now) - set(seen)) == want[i], i
+            assert len(now) == len(set(now)), "re-emitted a row"
+            seen = now
+            st = engine.stats
+            assert st.sink.records_sent == len(now)
+            assert st.sink.requests == len(requests)
+            if now:
+                assert st.max_emitted_ts.isoformat() == max(
+                    t for req in requests for _, t in req)
+        engine.finalize()
+        assert _emitted_minutes(read()) == list(range(300))
+        assert sorted(set(_emitted_minutes(read())) - set(seen)) \
+            == want_tail
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+
+def test_reorder_gate_crash_before_commit(spark, tmp_path, monkeypatch):
+    """The crash window of the gate: a batch whose emit and held epoch
+    are written but whose commit marker is not. That epoch must be
+    ignored; the redelivered batch recomputes from the previous
+    committed epoch (re-emitting, at-least-once) and nothing is lost.
+    Once committed, a redelivery skips."""
+    import os
+
+    from amazon_kinesis_replay_spark import fsutil
+
+    sink, read = _request_journal(str(tmp_path / "journal"))
+    engine = _gate_engine(tmp_path, sink)
+    want, want_tail = _gate_twin(GATE_BATCHES)
+    b = [_minute_frame(spark, m) for m in GATE_BATCHES]
+    held = str(tmp_path / "reorder-state" / "held")
+    engine.process_batch(b[0], 0)
+    engine.process_batch(b[1], 1)
+    before = _emitted_minutes(read())
+    assert before == sorted(want[0] + want[1])
+
+    def crash(spark, build_dir):
+        raise RuntimeError("simulated crash before the commit marker")
+
+    real_commit = fsutil.gen_commit
+    monkeypatch.setattr(fsutil, "gen_commit", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        engine.process_batch(b[2], 2)
+    monkeypatch.setattr(fsutil, "gen_commit", real_commit)
+    assert sorted(os.listdir(held)) == ["gen=0000000001", "gen=0000000002"]
+    assert not os.path.exists(held + "/gen=0000000002/_GEN_COMMITTED")
+    assert _emitted_minutes(read()) == sorted(before + want[2])
+
+    # redelivery: the uncommitted epoch 2 is ignored, batch 2 recomputes
+    # from epoch 1 and emits the same rows again
+    engine.process_batch(b[2], 2)
+    assert _emitted_minutes(read()) == sorted(before + want[2] + want[2])
+    assert os.listdir(held) == ["gen=0000000002"]
+    assert os.path.exists(held + "/gen=0000000002/_GEN_COMMITTED")
+    # committed: redeliveries of batch 2 (and of older batches) skip
+    settled = read()
+    engine.process_batch(b[2], 2)
+    engine.process_batch(b[1], 1)
+    assert len(read()) == len(settled)
+    engine.finalize()
+    got = _emitted_minutes(read())
+    assert sorted(set(got)) == list(range(300))        # nothing lost
+    assert sorted(set(got) - set(before + want[2])) == want_tail
+
+
+def test_reorder_gate_job_budget(spark, tmp_path):
+    """The gate's bookkeeping runs no Spark jobs: the commit is one
+    marker-file create, held state is read with an explicit schema, and
+    the per-sender stats are summed on the driver. With AQE off, a
+    steady gated batch is four jobs (localCheckpoint of held ∪ batch,
+    the cutoff, the held write, the emit) and finalize() one (the
+    emit of the held tail). The applied-marker gate ran 8 and 4."""
+    from amazon_kinesis_replay_spark.streaming.sinks import FileSink
+    out = str(tmp_path / "sink")
+    engine = _gate_engine(tmp_path, lambda: FileSink(out))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        engine.process_batch(_minute_frame(spark, GATE_BATCHES[0]), 0)
+        steady = []
+        for i in (1, 2):
+            sc.setJobGroup(f"gate-steady-{i}", "steady gated batch")
+            engine.process_batch(_minute_frame(spark, GATE_BATCHES[i]), i)
+            steady.append(len(tracker.getJobIdsForGroup(f"gate-steady-{i}")))
+        sc.setJobGroup("gate-finalize", "drain the held tail")
+        engine.finalize()
+        fin = len(tracker.getJobIdsForGroup("gate-finalize"))
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert steady == [4, 4], f"jobs per steady gated batch: {steady}"
+    assert fin == 1, f"jobs in finalize(): {fin}"
+    assert engine.stats.sink.records_sent == 300
+
+
+def test_reorder_gate_refuses_old_layout_and_sessionless_finalize(
+        spark, tmp_path):
+    """A state dir in the applied-marker layout raises a named error
+    instead of being read as empty, and finalize() before any batch
+    raises instead of leaving the held tail undrained."""
+    import os
+
+    from amazon_kinesis_replay_spark.streaming.replay import (
+        LegacyReorderStateError)
+    engine = _gate_engine(tmp_path, lambda: InMemorySink())
+    with pytest.raises(RuntimeError, match="no batch has run"):
+        engine.finalize()
+    os.makedirs(tmp_path / "reorder-state" / "applied")
+    with pytest.raises(LegacyReorderStateError, match="applied-marker"):
+        engine.process_batch(_minute_frame(spark, range(10)), 0)
 
 
 @pytest.mark.slow

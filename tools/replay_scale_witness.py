@@ -7,7 +7,7 @@ engine stage composed in one run over the full sf0.1 events table:
     -> streaming source with maxFilesPerTrigger backpressure
        (OP-SRC-* / OP-FLOW-BACKPRESSURE)
     -> durable distributed reorder gate (OP-SORT-EVENTTIME,
-       reorder_state_path= parquet epochs + applied marker)
+       reorder_state_path= parquet epochs, each with a commit marker)
     -> partitioned per-sender pacing (OP-RATE-PACE / OP-PAR-SENDERS)
     -> Kinesis-shaped sink: <=500-record requests, per-instance
        first-request failure exercising send_with_retry
