@@ -162,13 +162,19 @@ def gen_list(spark, path: str) -> list[tuple[int, str, bool]]:
     return sorted(out)
 
 
+def gen_latest(spark, path: str) -> tuple[int, str | None]:
+    """(number, directory) of the latest COMMITTED generation, or
+    (-1, None) when none has committed."""
+    for n, name, committed in reversed(gen_list(spark, path)):
+        if committed:
+            return n, f"{path}/{name}"
+    return -1, None
+
+
 def gen_current(spark, path: str):
     """Directory of the latest COMMITTED generation, or None (no pointer
     layout yet — callers fall back to the legacy root)."""
-    for n, name, committed in reversed(gen_list(spark, path)):
-        if committed:
-            return f"{path}/{name}"
-    return None
+    return gen_latest(spark, path)[1]
 
 
 def gen_resolve(spark, path: str) -> str:

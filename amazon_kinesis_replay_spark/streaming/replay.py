@@ -251,8 +251,9 @@ class ReplayEngine:
         the state directory (the stream is over); a crash between the
         drain emit and the delete redelivers on the next finalize —
         at-least-once, like every sink path here. It reads the state
-        with the session of the last `process_batch`, and raises when
-        no batch has run on this engine."""
+        with the session of the last `process_batch`, else the active
+        session (a restart with no new input runs no batch), and raises
+        when there is neither."""
         if self.mode == "partitioned":
             self._finalize_partitioned()
             return
@@ -280,16 +281,6 @@ class ReplayEngine:
                 "layout; drain it with the release that wrote it, or "
                 "delete it to start the gate empty")
         return root
-
-    @staticmethod
-    def _last_committed(spark, held_root: str):
-        """(batch id, directory) of the newest committed epoch, or
-        (-1, None) when no epoch has committed yet."""
-        from .. import fsutil
-        for n, name, committed in reversed(fsutil.gen_list(spark, held_root)):
-            if committed:
-                return n, f"{held_root}/{name}"
-        return -1, None
 
     def _process_partitioned_reordered(self, batch_df: DataFrame,
                                        batch_id: int):
@@ -323,7 +314,7 @@ class ReplayEngine:
         from .. import fsutil
         spark = self._spark = batch_df.sparkSession
         held_root = self._state_root(spark) + "/held"
-        applied, prev = self._last_committed(spark, held_root)
+        applied, prev = fsutil.gen_latest(spark, held_root)
         if applied >= batch_id:
             return                      # redelivery of an applied batch
         combined = batch_df.select("payload", "ts") \
@@ -361,15 +352,19 @@ class ReplayEngine:
         if not (self.cfg.reorder_across_batches
                 and self.cfg.reorder_state_path):
             return
+        from pyspark.sql import SparkSession
+
         from .. import fsutil
-        spark = self._spark
+        # a restarted stream with no new input runs no batch, yet its
+        # committed tail must still drain: fall back to the active session
+        spark = self._spark or SparkSession.getActiveSession()
         if spark is None:
             raise RuntimeError(
                 "finalize() drains the partitioned reorder state with the "
-                "SparkSession of the last process_batch; no batch has run "
-                "on this engine")
+                "SparkSession of the last process_batch or the active one; "
+                "no batch has run on this engine and no session is active")
         root = self._state_root(spark)
-        _, tail = self._last_committed(spark, root + "/held")
+        _, tail = fsutil.gen_latest(spark, root + "/held")
         if tail is not None:
             self._process_partitioned(
                 spark.read.schema(self._HELD_SCHEMA).parquet(tail))

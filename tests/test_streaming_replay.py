@@ -686,18 +686,50 @@ def test_reorder_gate_job_budget(spark, tmp_path):
     assert engine.stats.sink.records_sent == 300
 
 
-def test_reorder_gate_refuses_old_layout_and_sessionless_finalize(
+def test_reorder_gate_restart_finalize_drains_committed_tail(
         spark, tmp_path):
-    """A state dir in the applied-marker layout raises a named error
-    instead of being read as empty, and finalize() before any batch
-    raises instead of leaving the held tail undrained."""
+    """A restart on an existing state dir with no new input runs no
+    batch before finalize(), as an availableNow stream that crashed
+    after its last commit does. The fresh engine must still drain the
+    committed held tail with the active session, then delete the state
+    dir."""
     import os
+
+    sink, read = _request_journal(str(tmp_path / "journal"))
+    first = _gate_engine(tmp_path, sink)
+    for i in (0, 1):
+        first.process_batch(_minute_frame(spark, GATE_BATCHES[i]), i)
+    emitted = _emitted_minutes(read())
+    want, want_tail = _gate_twin(GATE_BATCHES[:2])
+    assert emitted == sorted(want[0] + want[1])
+    assert os.path.exists(str(tmp_path / "reorder-state" / "held"
+                              / "gen=0000000001" / "_GEN_COMMITTED"))
+
+    restarted = _gate_engine(tmp_path, sink)
+    restarted.finalize()
+    assert _emitted_minutes(read()) == sorted(emitted + want_tail)
+    assert restarted.stats.sink.records_sent == len(want_tail)
+    assert not os.path.exists(str(tmp_path / "reorder-state"))
+
+
+def test_reorder_gate_refuses_old_layout_and_sessionless_finalize(
+        spark, tmp_path, monkeypatch):
+    """A state dir in the applied-marker layout raises a named error
+    instead of being read as empty, and finalize() with no batch run and
+    no active session raises instead of leaving the held tail
+    undrained."""
+    import os
+
+    from pyspark.sql import SparkSession
 
     from amazon_kinesis_replay_spark.streaming.replay import (
         LegacyReorderStateError)
     engine = _gate_engine(tmp_path, lambda: InMemorySink())
-    with pytest.raises(RuntimeError, match="no batch has run"):
-        engine.finalize()
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "getActiveSession",
+                  classmethod(lambda cls: None))
+        with pytest.raises(RuntimeError, match="no session is active"):
+            engine.finalize()
     os.makedirs(tmp_path / "reorder-state" / "applied")
     with pytest.raises(LegacyReorderStateError, match="applied-marker"):
         engine.process_batch(_minute_frame(spark, range(10)), 0)
