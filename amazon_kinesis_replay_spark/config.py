@@ -6,7 +6,7 @@ replay/RePlayer.java:20-28; option names follow RePlayer.java:64-76.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -15,7 +15,7 @@ class ReplayConfig:
 
     Reference defaults: RePlayer.java:20-28 (speedup 6480, timestamp attr
     ``dropoff_datetime``, stats every 20 s, 100k reorder buffer, 5k sink
-    buffer, 4 sender threads); Kinesis constants KinesisProducer.java:24-28.
+    buffer, 4 sender threads); Kinesis constants KinesisProducer.java:25-28.
     """
 
     # -- source (OP-SRC-*) ---------------------------------------------------
@@ -65,15 +65,11 @@ class ReplayConfig:
     max_retries: int = 100                     # KinesisProducer.java:27
     max_backoff_ms: int = 2_000                # KinesisProducer.java:26
     backoff_base_ms: int = 100                 # KinesisProducer.java:28,147
-    idle_poll_ms: int = 500                    # KinesisProducer.java:24
 
     # -- monitoring (OP-AGG-*) -------------------------------------------------
     statistics_frequency_ms: int = 20_000      # RePlayer.java:24
 
     # -- spark-side tuning (no reference analogue; scale knobs) ---------------
-    watermark_delay: str = "10 minutes"        # bounded-disorder window
-    shuffle_partitions: int = 32
-    extra_spark_conf: dict = field(default_factory=dict)
     #: Driver-mode replay collect()s each micro-batch for exact global-order
     #: pacing — correct only at small scale. Batches above this row count are
     #: refused with guidance to use partitioned mode (which never collects)

@@ -1,12 +1,12 @@
 """Hadoop FileSystem helpers for index/state directories.
 
-Index paths (MinHash/embedding/IVF state, streaming markers) may live on
-HDFS or an object store, not the driver's local disk — `os.path` probes
-are silently wrong there (always False, so every batch "bootstraps" and
-discards history; see the round-6 ADVICE on `near_dup_stream`). These
-helpers route every existence/list/rename through the JVM-side Hadoop
-FileSystem resolved FOR the path's scheme, so the same code is correct on
-file://, hdfs:// and s3a://.
+Index paths (IVF/semantic/retrieval state, reorder-gate epochs) may live
+on HDFS or an object store, not the driver's local disk — `os.path`
+probes are silently wrong there (always False, so every batch
+"bootstraps" and discards history). These helpers route every
+existence/list/rename through the JVM-side Hadoop FileSystem resolved
+FOR the path's scheme, so the same code is correct on file://, hdfs://
+and s3a://.
 """
 
 from __future__ import annotations
@@ -44,7 +44,8 @@ def has_committed_output(spark, path: str) -> bool:
     a crashed write leaves the directory (with only _temporary/ inside)
     before the commit, and treating that as a complete table would make
     a bootstrap-completeness probe route to the incremental path against
-    broken state."""
+    broken state. No package module calls it; perfbench's replay tracer
+    wraps it by name, so it stays."""
     fs, jpath = _fs(spark, path)
     d = jpath(path)
     if not fs.exists(d):

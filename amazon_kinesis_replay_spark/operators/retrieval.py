@@ -30,9 +30,8 @@ exact integers, hash-gated cross-engine (dedup_exact kind='bm25' — the
 oracle rebuilds the postings table in DuckDB with the same
 trim(lower)/\\s+ tokenization the span oracle already uses). The float
 BM25 scoring and the fusion arithmetic are pinned against driver-only
-python twins at 1e-9 (the classifier-twin pattern: ln() may differ in
-the last ulp across engines, so cross-ENGINE hashing of scores would
-gate libm, not the plan).
+python twins at 1e-9 (ln() may differ in the last ulp across engines,
+so cross-ENGINE hashing of scores would gate libm, not the plan).
 
 Reference scope note: the reference engine (S3→Kinesis replay) has no
 search surface; this module is part of the SURVEY §6 LLM-pipeline
@@ -60,8 +59,8 @@ def postings(docs: DataFrame, id_col: str = "doc_id",
     """Inverted index rows (term, id, tf): one explode + one groupBy
     (map-side combinable — tf partials fold before the shuffle). Uses
     the package-wide tokenizer (`text.tokens_expr`: split(trim(lower),
-    \\s+)), so retrieval, dedup shingles, and classifier features all
-    agree on token boundaries."""
+    \\s+)), so retrieval and dedup shingles agree on token
+    boundaries."""
     return (docs.selectExpr(f"{id_col} AS id",
                             f"explode({tokens_expr(text_col)}) AS term")
             .groupBy("term", "id")

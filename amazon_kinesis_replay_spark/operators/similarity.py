@@ -1189,10 +1189,10 @@ def semantic_dedup_incremental(spark, new_emb: DataFrame, path: str,
                                delta_name: str | None = None,
                                n_assign: int | None = None) -> DataFrame:
     """Same-cluster pairs INVOLVING the new batch (new x new plus
-    new x indexed) against the FROZEN index centroids — the semantic
-    twin of embedding_dedup_incremental, at per-batch cost: assign the
-    batch (broadcast centroid scan), then one equi-join per direction
-    against the member table, partition-pruned to the batch's cells.
+    new x indexed) against the FROZEN index centroids, at per-batch
+    cost: assign the batch (broadcast centroid scan), then one equi-join
+    per direction against the member table, partition-pruned to the
+    batch's cells.
 
     Appends land in their OWN partition directory
     members/part=<delta_name> (fresh uuid when None) via mode=overwrite

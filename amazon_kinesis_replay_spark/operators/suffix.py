@@ -108,8 +108,8 @@ def suffix_ranks(tok: DataFrame, upto: int) -> DataFrame:
     EQUALITY semantics only (min-gpos class ids, not order-dense — see
     `_class_ids`). Prefix doubling: log2(upto) rounds, each = one
     shifted self-join + one class-id aggregation; per-round
-    localCheckpoint cuts the iterative lineage (the k-means/classifier
-    convention — plan analysis must not grow with round count)."""
+    localCheckpoint cuts the iterative lineage (the k-means convention
+    — plan analysis must not grow with round count)."""
     if upto < 1 or upto & (upto - 1):
         raise ValueError(f"upto must be a positive power of two: {upto}")
     real = _class_ids(tok.filter(F.col("token").isNotNull())

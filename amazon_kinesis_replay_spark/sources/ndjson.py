@@ -190,8 +190,8 @@ def _decode_lines(pdf_iter):
                 text = decompress_auto(bytes(content), path=str(path))
                 # errors="replace", NOT strict (r7 review): one bad byte
                 # must not silently drop the whole object — the text path
-                # (spark.read.text), sources/kinesis.py, and the
-                # reference's InputStreamReader all substitute U+FFFD,
+                # (spark.read.text) and the reference's
+                # InputStreamReader both substitute U+FFFD,
                 # and the malformed-JSON row is then dropped PER ROW by
                 # the parse tail, matching every other ingest path.
                 lines = text.decode("utf-8", "replace").splitlines()

@@ -95,10 +95,8 @@ class KinesisSink:
         # Emulated endpoints accept any credentials, but partitioned-mode
         # sinks are constructed INSIDE executor Python workers, which may
         # have been forked before the test/driver set AWS_* env vars —
-        # resolve explicit values here exactly like
-        # sources/kinesis.read_kinesis_batch does (r7 review: without
-        # this the sink factory hits NoCredentialsError on every task
-        # while the source against the same endpoint works). Real
+        # resolve explicit values here (r7 review: without this the
+        # sink factory hits NoCredentialsError on every task). Real
         # endpoints keep the default provider chain.
         creds = {}
         if endpoint:

@@ -34,27 +34,19 @@ SLOW_TESTS = {
     "tests/test_asof_join.py::test_asof_join_matches_python_twin",
     "tests/test_asof_join.py::test_asof_join_randomized_against_twin",
     "tests/test_asof_join.py::test_asof_join_timestamp_tolerance",
-    "tests/test_classifier.py::test_drop_side_calibrated_junk_gate_on_planted_junk",
-    "tests/test_classifier.py::test_logreg_lbfgs_matches_twin_and_beats_gd",
-    "tests/test_classifier.py::test_logreg_minibatch_matches_twin",
-    "tests/test_classifier.py::test_logreg_separates_and_is_deterministic",
-    "tests/test_classifier.py::test_logreg_train_matches_python_reference",
     "tests/test_cli.py::test_cli_end_to_end_lz4_sniffed_partitioned",
     "tests/test_gc_endurance.py::test_gc_endurance_four_families",
     "tests/test_gen_layout.py::test_gen_gc_retention_keeps_inflight_reader_alive",
     "tests/test_gen_layout.py::test_ivf_retrain_crash_before_commit_keeps_old_generation",
-    "tests/test_gen_layout.py::test_semantic_stream_probe_survives_retrain_generation",
     "tests/test_metrics_and_props.py::test_global_index_is_a_permutation",
     "tests/test_metrics_and_props.py::test_global_index_string_first_key",
     "tests/test_metrics_and_props.py::test_jaccard_pairs_invariants",
     "tests/test_pipeline_ops.py::test_assemble_sequences",
     "tests/test_pipeline_ops.py::test_dedup_clusters_pairs_path_and_chained_check",
-    "tests/test_pipeline_ops.py::test_embedding_incremental_matches_batch",
     "tests/test_pipeline_ops.py::test_ivf_imbalance_retrain_trigger",
     "tests/test_pipeline_ops.py::test_ivf_index_retrain_policy",
     "tests/test_pipeline_ops.py::test_ivf_pq_index_append",
     "tests/test_pipeline_ops.py::test_ivf_pq_index_probe",
-    "tests/test_pipeline_ops.py::test_minhash_incremental_matches_batch",
     "tests/test_pipeline_ops.py::test_pq_ann_recall_and_determinism",
     "tests/test_pipeline_ops.py::test_semantic_dedup_multi_assign",
     "tests/test_pipeline_ops.py::test_semantic_dedup_two_level_multi_assign",
@@ -68,24 +60,12 @@ SLOW_TESTS = {
     "tests/test_pipeline_ops.py::test_semantic_index_v1_backcompat",
     "tests/test_pipeline_ops.py::test_semantic_index_v2_retrain_trainer_dedup",
     "tests/test_pipeline_ops.py::test_semantic_index_v2_two_sided_batch_parity",
-    "tests/test_pipeline_ops.py::test_simhash_incremental_matches_batch",
     "tests/test_retrieval.py::test_index_compact_generation_publish",
     "tests/test_retrieval.py::test_indexed_append_folds_batches",
     "tests/test_sources_and_sinks.py::test_zstd_seeded_mutation_fuzz_never_crashes",
     "tests/test_sq8.py::test_ivf_sq_append_equals_full_rebuild",
     "tests/test_sq8.py::test_ivf_sq_probe_topk_batch_matches_per_query_loop",
     "tests/test_sq8.py::test_ivf_sq_retrain_policy",
-    "tests/test_stateful_streaming.py::test_asof_enrich_stream_point_in_time",
-    "tests/test_stateful_streaming.py::test_near_dup_embedding_processor_stream_and_replay",
-    "tests/test_stateful_streaming.py::test_near_dup_processor_replay_is_idempotent",
-    "tests/test_stateful_streaming.py::test_near_dup_semantic_processor_stream_and_replay",
-    "tests/test_stateful_streaming.py::test_near_dup_semantic_stream_two_sided_n_assign",
-    "tests/test_stateful_streaming.py::test_near_dup_simhash_processor_stream_and_replay",
-    "tests/test_stateful_streaming.py::test_near_dup_stream_matches_batch",
-    "tests/test_stateful_streaming.py::test_near_dup_substring_processor_stream_and_replay",
-    "tests/test_stateful_streaming.py::test_pairs_parquet_sink_is_idempotent",
-    "tests/test_stateful_streaming.py::test_reorder_gate_stream_drains_on_timeout",
-    "tests/test_stateful_streaming.py::test_substring_delta_overwrite_closes_crash_window",
     "tests/test_streaming_replay.py::test_composed_replay_witness_small",
     "tests/test_suffix.py::test_longest_duplicated_run",
     "tests/test_suffix.py::test_suffix_ranks_equality_classes",

@@ -178,55 +178,6 @@ def test_substring_compact_crash_after_commit_sweep_finishes(
     dedup.clear_staging(spark, path)
 
 
-def test_semantic_stream_probe_survives_retrain_generation(
-        spark, sf_dir, tmp_path):
-    """The stream processor's bootstrap probe must resolve the pointer
-    layout: after a retrain publishes a generation, a replayed batch
-    must take the incremental path (probe finds the committed gen), NOT
-    silently re-bootstrap over the index history."""
-    from amazon_kinesis_replay_spark.streaming.stateful import (
-        _near_dup_semantic_processor)
-
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    b0 = emb.filter(F.col("vec_id") < 250)
-    b1 = emb.filter(F.col("vec_id") >= 250)
-    got: dict[int, list[set]] = {}
-
-    def sink(pairs, batch_id):
-        got.setdefault(batch_id, []).append(
-            {(r["id_a"], r["id_b"], r["cosine"]) for r in pairs.collect()})
-
-    index = str(tmp_path / "sem-gen-stream")
-    proc = _near_dup_semantic_processor(index, sink, "vec_id",
-                                        "embedding", 0.4, 8, 1)
-    proc(b0, 0)
-    proc(b1, 1)
-    assert similarity.semantic_index_maybe_retrain(
-        spark, index, growth_threshold=0.5)
-    gen = fsutil.gen_current(spark, index)
-    assert gen is not None
-    n_members = spark.read.parquet(gen + "/members").count()
-    assert n_members == emb.count()
-
-    # marker-confirmed replay: must NOT re-bootstrap (members unchanged,
-    # applied marker still at 1). Pair VALUES may differ from the
-    # pre-retrain emission — the retrain legitimately moved cell
-    # boundaries — but the sink's overwrite-by-batch-id keeps that
-    # idempotent; what must never happen is a silent fresh bootstrap.
-    proc(b1, 1)
-    assert fsutil.gen_current(spark, index) == gen
-    assert spark.read.parquet(gen + "/members").count() == n_members
-    assert fsutil.read_applied_batch(spark, index) == 1
-
-    # a NEW batch appends into the committed generation
-    b2 = b0.limit(20).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding")
-    proc(b2, 2)
-    assert spark.read.parquet(gen + "/members").count() \
-        == n_members + 20
-    assert fsutil.read_applied_batch(spark, index) == 2
-
-
 def test_gen_gc_retention_keeps_inflight_reader_alive(
         spark, sf_dir, tmp_path):
     """The r8-verdict retention contract: a reader that pinned gen N-1

@@ -24,7 +24,6 @@ PKG = Path(__file__).resolve().parents[1] / "amazon_kinesis_replay_spark"
 #: frame is bounded-small by construction (NOT corpus-scale). Growing this
 #: list requires the same justification in the file's docstring.
 COLLECT_ALLOWED = {
-    "operators/classifier.py",   # dim-sized gradient vector per iteration
     "operators/similarity.py",   # centroid / codebook / k-means tables
     "operators/text.py",         # vocab-capped BPE merge aggregate
     "operators/sampling.py",     # len(cuts)-row quantile cut points off
@@ -289,3 +288,133 @@ def test_ensure_engine_conf_memoized_per_session(spark):
         assert spark.conf.get(key) == "false"
     finally:
         spark.conf.set(key, orig)
+
+
+#: Files a user or harness runs directly; every package module must be
+#: imported (at module level or lazily inside a function) from one of
+#: them, or it is code nothing runs.
+ENTRY_POINTS = ("amazon_kinesis_replay_spark/cli.py",
+                "amazon_kinesis_replay_spark/plans/registry.py",
+                "bench.py", "__spark_entry__.py", "perfbench/*.py")
+
+#: Package modules no entry point imports, each mapped to a one-line
+#: reason it stays.
+REACH_ALLOWED: dict[str, str] = {
+    "amazon_kinesis_replay_spark.export":
+        "training-shard writer and manifest verifier; library API with "
+        "its own tests, no CLI verb yet",
+}
+
+
+def _module_file(root: Path, name: str) -> Path | None:
+    """The source file of dotted module `name` under `root`, if any."""
+    p = root.joinpath(*name.split("."))
+    for cand in (p / "__init__.py", p.with_suffix(".py")):
+        if cand.is_file():
+            return cand
+    return None
+
+
+def _module_name(root: Path, p: Path) -> str:
+    parts = p.relative_to(root).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported_modules(root: Path, p: Path) -> set[str]:
+    """Every module under `root` that file `p` imports anywhere in its
+    body (function-level imports included), with the parent packages
+    Python imports on the way."""
+    pkg = _module_name(root, p).split(".")
+    if p.name != "__init__.py":
+        pkg = pkg[:-1]
+    names = set()
+    for node in ast.walk(ast.parse(p.read_text())):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                up = pkg[:len(pkg) - node.level + 1]
+                base = ".".join(up + ([base] if base else []))
+            names.add(base)
+            names.update(f"{base}.{a.name}" for a in node.names)
+    out = set()
+    for n in names:
+        parts = n.split(".")
+        out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return {n for n in out if _module_file(root, n) is not None}
+
+
+def _unreached_modules(root: Path) -> set[str]:
+    """Package modules the import walk from ENTRY_POINTS never reaches."""
+    todo = [_module_name(root, f) for pat in ENTRY_POINTS
+            for f in sorted(root.glob(pat))]
+    seen: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo.extend(_imported_modules(root, _module_file(root, name)))
+    pkg = {_module_name(root, f) for f in (root / PKG.name).rglob("*.py")}
+    return pkg - seen
+
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    """A module no entry point imports is code no user path runs; delete
+    it, or allowlist it with the reason it stays."""
+    unreached = _unreached_modules(PKG.parent)
+    assert unreached <= set(REACH_ALLOWED), (
+        f"modules no entry point imports: "
+        f"{sorted(unreached - set(REACH_ALLOWED))}")
+    assert set(REACH_ALLOWED) <= unreached, (
+        f"stale REACH_ALLOWED entries (now reached or gone): "
+        f"{sorted(set(REACH_ALLOWED) - unreached)}")
+
+
+def _top_level_names(p: Path) -> set[str]:
+    """Names a module binds at top level (defs, classes, assignments and
+    imports) — what `from module import name` can fetch."""
+    names = set()
+    for node in ast.parse(p.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+            for t in targets:
+                names.update(n.id for n in ast.walk(t)
+                             if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0]
+                         for a in node.names)
+    return names
+
+
+def test_tool_imports_resolve():
+    """Every `from amazon_kinesis_replay_spark... import name` in tools/
+    names an existing module and an attribute it defines (or a
+    submodule), checked from source — no Spark, no import side effects.
+    A tool importing deleted code fails here instead of at its next
+    manual run."""
+    root = PKG.parent
+    broken = []
+    for tool in sorted((root / "tools").glob("*.py")):
+        for node in ast.walk(ast.parse(tool.read_text())):
+            where = f"tools/{tool.name}:{getattr(node, 'lineno', '')}"
+            if isinstance(node, ast.Import):
+                broken += [f"{where} {a.name}" for a in node.names
+                           if a.name.startswith(PKG.name)
+                           and _module_file(root, a.name) is None]
+            elif (isinstance(node, ast.ImportFrom) and node.module
+                  and node.module.startswith(PKG.name)):
+                src = _module_file(root, node.module)
+                if src is None:
+                    broken.append(f"{where} {node.module}")
+                    continue
+                defined = _top_level_names(src)
+                broken += [f"{where} {node.module}.{a.name}"
+                           for a in node.names
+                           if a.name not in defined and _module_file(
+                               root, f"{node.module}.{a.name}") is None]
+    assert not broken, f"tool imports that do not resolve: {broken}"

@@ -1,45 +1,7 @@
-"""Streaming progress listener + property-based operator invariants."""
-
-import json
+"""Property-based operator invariants."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
-
-from amazon_kinesis_replay_spark.config import ReplayConfig
-from amazon_kinesis_replay_spark.sources import ndjson
-from amazon_kinesis_replay_spark.streaming.metrics import ReplayProgressListener
-
-
-def test_progress_listener_counts(spark, sf_dir, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    from amazon_kinesis_replay_spark.tables import load
-    rows = (load(spark, sf_dir, "events").select("ts")
-            .orderBy("ts").limit(100).collect())
-    with open(src / "e.json", "w") as fh:
-        for r in rows:
-            fh.write(json.dumps(
-                {"dropoff_datetime": r["ts"].isoformat()}) + "\n")
-
-    listener = ReplayProgressListener(printer=None)
-    spark.streams.addListener(listener)
-    try:
-        ev = ndjson.read_events_stream(
-            spark, ReplayConfig(source_path=str(src)), max_files_per_trigger=1)
-        q = (ev.writeStream.format("memory").queryName("mtest")
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        # listener events arrive asynchronously
-        import time
-        deadline = time.monotonic() + 30
-        while time.monotonic() < deadline and listener.total_events < 100:
-            time.sleep(0.5)
-    finally:
-        spark.streams.removeListener(listener)
-    assert listener.total_events == 100
-    assert any(s["batch_events"] > 0 for s in listener.history)
 
 
 # -- property-based invariants (hypothesis) ---------------------------------

@@ -2690,93 +2690,6 @@ def test_write_training_shards_deterministic_shuffle(spark, sf_dir,
         .exceptAll(df).count() == 0
 
 
-def test_minhash_incremental_matches_batch(spark, sf_dir, tmp_path):
-    """Incremental MinHash dedup must emit EXACTLY the batch pipeline's
-    pairs that touch the new documents — across two consecutive batches
-    (the second sees the first through the appended index) — without
-    re-shingling the indexed corpus."""
-    d = load(spark, sf_dir, "documents")
-    base = d.filter(F.col("doc_id") < 300)
-    b1 = d.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
-    b2 = d.filter(F.col("doc_id") >= 400)
-    index = str(tmp_path / "mh")
-    dedup.minhash_index_write(base, index)
-
-    def pairset(df):
-        return {(r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()}
-
-    got1 = pairset(dedup.minhash_dedup_incremental(spark, b1, index))
-    got2 = pairset(dedup.minhash_dedup_incremental(spark, b2, index))
-
-    full = pairset(dedup.minhash_dedup(d, "doc_id", "text", 32, 16, 3, 0.5))
-    new1 = {r["doc_id"] for r in b1.select("doc_id").collect()}
-    new2 = {r["doc_id"] for r in b2.select("doc_id").collect()}
-    want1 = {p for p in full
-             if (p[0] in new1 or p[1] in new1)
-             and p[0] not in new2 and p[1] not in new2}
-    want2 = {p for p in full if p[0] in new2 or p[1] in new2}
-    assert got1 == want1
-    assert got2 == want2
-    # index grew by both batches
-    n_arrays = spark.read.parquet(index + "/arrays").count()
-    assert n_arrays == d.count()
-
-
-def test_embedding_incremental_matches_batch(spark, sf_dir, tmp_path):
-    """Incremental embedding dedup must emit exactly the batch pipeline's
-    pairs touching the new vectors, across two consecutive batches, with
-    bit-identical cosines."""
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < 300)
-    b1 = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400))
-    b2 = emb.filter(F.col("vec_id") >= 400)
-    index = str(tmp_path / "elsh")
-    dedup.embedding_index_write(base, index)
-
-    def pairset(df):
-        return {(r["id_a"], r["id_b"], r["cosine"]) for r in df.collect()}
-
-    got1 = pairset(dedup.embedding_dedup_incremental(spark, b1, index))
-    got2 = pairset(dedup.embedding_dedup_incremental(spark, b2, index))
-    full = pairset(dedup.embedding_cosine_dedup(emb, 0.4, 8, 8))
-    new1 = {r["vec_id"] for r in b1.select("vec_id").collect()}
-    new2 = {r["vec_id"] for r in b2.select("vec_id").collect()}
-    want1 = {p for p in full
-             if (p[0] in new1 or p[1] in new1)
-             and p[0] not in new2 and p[1] not in new2}
-    want2 = {p for p in full if p[0] in new2 or p[1] in new2}
-    assert got1 == want1
-    assert got2 == want2
-    assert spark.read.parquet(index + "/vectors").count() == emb.count()
-
-
-def test_simhash_incremental_matches_batch(spark, sf_dir, tmp_path):
-    """Incremental SimHash dedup across two consecutive batches must emit
-    exactly the batch pipeline's pairs touching the new documents, with
-    identical Hamming distances."""
-    d = load(spark, sf_dir, "documents")
-    base = d.filter(F.col("doc_id") < 300)
-    b1 = d.filter((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
-    b2 = d.filter(F.col("doc_id") >= 400)
-    index = str(tmp_path / "sh")
-    dedup.simhash_index_write(base, index)
-
-    def pairset(df):
-        return {(r["id_a"], r["id_b"], r["hamming"]) for r in df.collect()}
-
-    got1 = pairset(dedup.simhash_dedup_incremental(spark, b1, index))
-    got2 = pairset(dedup.simhash_dedup_incremental(spark, b2, index))
-    full = pairset(dedup.simhash_near_dups(d, "doc_id", "text", 3))
-    new1 = {r["doc_id"] for r in b1.select("doc_id").collect()}
-    new2 = {r["doc_id"] for r in b2.select("doc_id").collect()}
-    want1 = {p for p in full
-             if (p[0] in new1 or p[1] in new1)
-             and p[0] not in new2 and p[1] not in new2}
-    want2 = {p for p in full if p[0] in new2 or p[1] in new2}
-    assert got1 == want1
-    assert got2 == want2
-
-
 def test_exact_dedup_incremental(spark, tmp_path):
     """Incremental exact dedup: batch rows duplicating an indexed key
     point at the indexed representative; within-batch dups collapse to

@@ -106,17 +106,6 @@ def test_sniffed_path_skips_truncated_gzip_and_corrupt_xz(spark, tmp_path):
     assert out.count() == 15                  # only the good object survives
 
 
-def test_kinesis_source_is_gated(spark):
-    """Without a connector on the classpath the Kinesis source raises
-    NotImplementedError with packaging guidance (never a cryptic py4j
-    error)."""
-    from amazon_kinesis_replay_spark.sources.kinesis import read_kinesis_stream
-    cfg = ReplayConfig(
-        stream_arn="arn:aws:kinesis:us-east-1:123456789012:stream/x")
-    with pytest.raises(NotImplementedError, match="connector"):
-        read_kinesis_stream(spark, cfg)
-
-
 def test_send_with_retry_failed_subset():
     cfg = ReplayConfig(backoff_base_ms=1, max_backoff_ms=2)
     # request 0 fails records 1 and 3; request 1 (the retry of those 2)
@@ -330,112 +319,6 @@ def test_kinesis_sink_e2e_emulated():
         assert len(payloads) == 1203
         got_ids = sorted(js.loads(p)["event_id"] for p in payloads)
         assert got_ids == list(range(1203))             # integrity, no loss
-
-
-def test_kinesis_roundtrip_sink_to_distributed_source(spark):
-    """Full loop against an out-of-process emulated Kinesis (moto server
-    mode, so executor-side Python workers hit it over HTTP like a real
-    endpoint): KinesisSink writes 700 replay payloads through the
-    chunk+retry loop; read_kinesis_batch drains the stream with one
-    mapInPandas task per shard and must recover every payload with parsed
-    event timestamps. Skipped without boto3/moto[server]."""
-    import json as js
-    import os
-
-    boto3 = pytest.importorskip("boto3")
-    pytest.importorskip("moto")
-    try:
-        from moto.server import ThreadedMotoServer
-    except ImportError:
-        pytest.skip("moto server mode unavailable")
-
-    from amazon_kinesis_replay_spark.sources import kinesis as ksrc
-
-    os.environ.setdefault("AWS_ACCESS_KEY_ID", "testing")
-    os.environ.setdefault("AWS_SECRET_ACCESS_KEY", "testing")
-    server = ThreadedMotoServer(port=0)
-    server.start()
-    try:
-        port = server._server.socket.getsockname()[1]
-        endpoint = f"http://127.0.0.1:{port}"
-        client = boto3.client("kinesis", region_name="us-east-1",
-                              endpoint_url=endpoint)
-        client.create_stream(StreamName="replay-rt", ShardCount=3)
-        arn = client.describe_stream(StreamName="replay-rt")[
-            "StreamDescription"]["StreamARN"]
-
-        cfg = ReplayConfig(stream_arn=arn)
-        sink = sinks.KinesisSink(arn, endpoint_url=endpoint)
-        records = [{"payload": js.dumps(
-            {"event_id": i,
-             "dropoff_datetime": f"2024-01-01T00:{i // 60:02d}:{i % 60:02d}"})}
-            for i in range(700)]
-        for chunk in sinks.chunked(records, cfg.max_records_per_request):
-            sinks.send_with_retry(sink, chunk, cfg)
-
-        out = ksrc.read_kinesis_batch(spark, cfg, endpoint_url=endpoint)
-        rows = out.collect()
-        assert len(rows) == 700
-        got_ids = sorted(js.loads(r["payload"])["event_id"] for r in rows)
-        assert got_ids == list(range(700))
-        assert all(r["ts"] is not None for r in rows)   # timestamps parsed
-        assert out.rdd.getNumPartitions() == 3          # one task per shard
-    finally:
-        server.stop()
-
-
-def test_kinesis_batch_source_arrival_seek(spark):
-    """Stream-side OP-FILTER-SEEK: AT_TIMESTAMP shard iterators skip the
-    pre-seek prefix server-side — the source never fetches it. Two write
-    phases around a captured cut; a seeked read returns only phase two."""
-    import datetime
-    import json as js
-    import os
-    import time
-
-    boto3 = pytest.importorskip("boto3")
-    pytest.importorskip("moto")
-    try:
-        from moto.server import ThreadedMotoServer
-    except ImportError:
-        pytest.skip("moto server mode unavailable")
-
-    from amazon_kinesis_replay_spark.sources import kinesis as ksrc
-
-    os.environ.setdefault("AWS_ACCESS_KEY_ID", "testing")
-    os.environ.setdefault("AWS_SECRET_ACCESS_KEY", "testing")
-    server = ThreadedMotoServer(port=0)
-    server.start()
-    try:
-        port = server._server.socket.getsockname()[1]
-        endpoint = f"http://127.0.0.1:{port}"
-        client = boto3.client("kinesis", region_name="us-east-1",
-                              endpoint_url=endpoint)
-        client.create_stream(StreamName="replay-seek", ShardCount=2)
-        arn = client.describe_stream(StreamName="replay-seek")[
-            "StreamDescription"]["StreamARN"]
-        sink = sinks.KinesisSink(arn, endpoint_url=endpoint)
-
-        def put(lo, hi):
-            sink.put_records([{"payload": js.dumps(
-                {"event_id": i,
-                 "dropoff_datetime": f"2024-01-01T00:00:{i % 60:02d}"})}
-                for i in range(lo, hi)])
-
-        put(0, 40)
-        time.sleep(1.2)
-        cut = datetime.datetime.now(datetime.timezone.utc).isoformat()
-        time.sleep(1.2)
-        put(40, 70)
-
-        cfg = ReplayConfig(stream_arn=arn)
-        rows = ksrc.read_kinesis_batch(
-            spark, cfg, endpoint_url=endpoint,
-            seek_to_approximate_arrival=cut).collect()
-        got = sorted(js.loads(r["payload"])["event_id"] for r in rows)
-        assert got == list(range(40, 70))      # pre-cut records never read
-    finally:
-        server.stop()
 
 
 def test_kinesis_sink_e2e_driver_replay():
@@ -972,37 +855,16 @@ def test_brotli_decoder_matches_libbrotli():
 
 
 def test_brotli_http_payload_and_br_ingest(spark, sf_dir, tmp_path):
-    """WARC-side Content-Encoding decode (identity / gzip / deflate /
-    br) via py_http_payload, and `.jsonl.br` shard ingest through the
-    sniffing source — brotli has no magic, so the `.br` path suffix
-    dispatches it (never overriding a sniffed codec); a corrupt .br
-    shard skips whole."""
+    """`.jsonl.br` shard ingest through the sniffing source — brotli has
+    no magic, so the `.br` path suffix dispatches it (never overriding a
+    sniffed codec); a corrupt .br shard skips whole."""
     import gzip as _gzip
-    import zlib as _zlib
 
     from amazon_kinesis_replay_spark.config import ReplayConfig
     from amazon_kinesis_replay_spark.sources.ndjson import (
         read_events_sniffed)
-    from amazon_kinesis_replay_spark.sources.warc import py_http_payload
 
     compress, _d = _libbrotli()
-    body = b'{"k": 1}\nplain text body'
-
-    def resp(enc, payload):
-        hdr = b"HTTP/1.1 200 OK\r\n"
-        if enc:
-            hdr += b"Content-Encoding: " + enc + b"\r\n"
-        return hdr + b"\r\n" + payload
-
-    assert py_http_payload(resp(None, body)) == body
-    assert py_http_payload(resp(b"identity", body)) == body
-    assert py_http_payload(resp(b"gzip", _gzip.compress(body))) == body
-    assert py_http_payload(resp(b"deflate",
-                                _zlib.compress(body))) == body
-    raw_deflate = _zlib.compress(body)[2:-4]
-    assert py_http_payload(resp(b"deflate", raw_deflate)) == body
-    assert py_http_payload(resp(b"br", compress(body, 9))) == body
-    assert py_http_payload(resp(b"unknown-enc", body)) == body
 
     rows = (load(spark, sf_dir, "events")
             .select("event_id", "ts").orderBy("ts").limit(120).collect())

@@ -28,9 +28,6 @@ near-linear curve is the evidence the plans have no quadratic term:
 - mixture_dsir   : domain-count groupBy + broadcast rate join, then the
                    DSIR LM join shape + Gumbel-top-k (vs any per-domain
                    driver loop or corpus-scale weight sort)
-- classifier     : per-iteration cost is one margin join + one gradient
-                   aggregate over the corpus — linear per iteration,
-                   driver traffic stays dim-sized
 - sketches       : grouped-HLL register build + Count-Min counters —
                    map-side-combinable groupBys whose outputs are
                    SKETCH-sized, not data-sized
@@ -125,8 +122,8 @@ def main():
 
     from amazon_kinesis_replay_spark import export
     from amazon_kinesis_replay_spark.operators import (
-        classifier, dedup, intervals, layout, retrieval, sampling,
-        similarity, sketches, text)
+        dedup, intervals, layout, retrieval, sampling, similarity,
+        sketches, text)
     from amazon_kinesis_replay_spark.session import build_spark
     from amazon_kinesis_replay_spark.tables import load
 
@@ -236,14 +233,6 @@ def main():
         sampled = sampling.dsir_sample(w, "doc_id",
                                        k=max(50, n // 10)).count()
         return f"{n} docs -> {kept} mixture-kept, {sampled} DSIR-sampled"
-
-    def run_classifier(mult):
-        corpus = _expand_docs(docs, mult).withColumn(
-            "label", F.pmod(F.col("doc_id"), F.lit(2)).cast("int"))
-        n = corpus.count()
-        weights = classifier.logreg_train(corpus, "doc_id", "text",
-                                          "label", dim=256, n_iters=5)
-        return f"{n} docs -> {len(weights)} weights (5 iters)"
 
     def run_sketches(mult):
         parts = [events]
@@ -422,7 +411,6 @@ def main():
         ("semdedup", run_semdedup),
         ("semdedup_2l", run_semdedup_2l),
         ("mixture_dsir", run_mixture_dsir),
-        ("classifier", run_classifier),
         ("sketches", run_sketches),
         ("contamination", run_contamination),
         ("embedding_dedup", run_embedding),
