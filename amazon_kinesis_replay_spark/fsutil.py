@@ -1,12 +1,11 @@
 """Hadoop FileSystem helpers for index/state directories.
 
-Index paths (IVF/semantic/retrieval state, reorder-gate epochs) may live
-on HDFS or an object store, not the driver's local disk — `os.path`
-probes are silently wrong there (always False, so every batch
-"bootstraps" and discards history). These helpers route every
-existence/list/rename through the JVM-side Hadoop FileSystem resolved
-FOR the path's scheme, so the same code is correct on file://, hdfs://
-and s3a://.
+Index paths (IVF/IVF×SQ8/BM25 state, reorder-gate epochs) may live on
+HDFS or an object store, not the driver's local disk — `os.path` probes
+are silently wrong there (always False, so every batch "bootstraps" and
+discards history). These helpers route every existence/list/delete
+through the JVM-side Hadoop FileSystem resolved FOR the path's scheme,
+so the same code is correct on file://, hdfs:// and s3a://.
 """
 
 from __future__ import annotations
@@ -32,12 +31,6 @@ def delete(spark, path: str) -> None:
     fs.delete(jpath(path), True)
 
 
-def rename(spark, src: str, dst: str) -> bool:
-    """Filesystem rename (atomic on HDFS/local; copy on object stores)."""
-    fs, jpath = _fs(spark, src)
-    return bool(fs.rename(jpath(src), jpath(dst)))
-
-
 def has_committed_output(spark, path: str) -> bool:
     """True iff `path` holds COMMITTED job output: the _SUCCESS marker,
     or at least one non-hidden file. A bare `exists()` is optimistic —
@@ -61,10 +54,10 @@ def has_committed_output(spark, path: str) -> bool:
 
 def read_applied_batch(spark, path: str) -> int:
     """The applied-batch-id marker of an index directory (-1 when absent
-    or unreadable) — the replay guard every index-backed incremental
-    consults. One shared reader (r8 review: three copies had grown).
-    The explicit schema makes it one Spark job (the `head`), with no
-    schema-inference job over the marker's footer first."""
+    or unreadable). The explicit schema makes it one Spark job (the
+    `head`), with no schema-inference job over the marker's footer
+    first. No package module calls it; perfbench's replay tracer wraps
+    it by name, so it stays."""
     try:
         row = spark.read.schema("batch_id long") \
             .parquet(path + "/applied").head()
@@ -114,12 +107,10 @@ def listdir(spark, path: str) -> list[str]:
 # Generation-pointer index layout (r8)
 # ---------------------------------------------------------------------------
 #
-# Persisted-index rebuilds (IVF/semantic re-train, substring compaction)
-# previously published a new index generation by a rename-ASIDE swap of each
-# data subdirectory plus a heal routine per layout to disambiguate its crash
-# windows — correct, but the most subtle code in the repo, and rename-based,
-# so unsafe on object stores where rename is copy+delete. The generation
-# layout replaces every swap with one commit primitive:
+# Persisted-index rebuilds (IVF and IVF×SQ8 re-train, BM25 compaction) and
+# the durable reorder gate's held epochs publish with one commit primitive —
+# no rename anywhere, so it is as safe on object stores (where rename is
+# copy+delete) as on HDFS:
 #
 #   <index>/gen=0000000001/<subs...>/_GEN_COMMITTED
 #   <index>/gen=0000000002/<subs...>          <- crashed build: no marker
@@ -130,11 +121,9 @@ def listdir(spark, path: str) -> list[str]:
 # anywhere on the commit path). Readers resolve to the highest-numbered
 # COMMITTED generation; a crash anywhere before the marker leaves the
 # previous generation untouched and the partial build garbage-collected by
-# the next writer. Cross-generation state (the `applied/` batch marker,
-# result staging) stays at the index ROOT — only the rebuilt data subs live
-# inside generations. An index with no committed generation resolves to the
-# root itself: the pre-gen ("legacy") single-generation layout keeps
-# working, and the first rebuild migrates it in place.
+# the next writer. An index with no committed generation resolves to the
+# root itself: the first IVF, IVF×SQ8 and BM25 writes build there, and the
+# first rebuild moves the index into generations.
 
 #: Marker file whose presence makes a generation directory visible to
 #: readers. Written last; never listed by Spark (leading underscore).
@@ -211,15 +200,15 @@ def gen_gc(spark, path: str, legacy_subs=(), keep: int = 2) -> None:
     in-flight reader that resolved gen N-1 just before a commit never
     has files deleted under it — readers pin a generation directory at
     `gen_resolve` time, and keep>=2 gives them a full rebuild cycle to
-    finish (the Iceberg/Delta snapshot-retention contract). The pre-gen
-    LEGACY ROOT is NOT retention-protected: it drops as soon as a
-    committed generation shadows it, because the substring-index
-    migration sweep parks in-flight deltas there and its fold rule
-    requires the legacy root gone once carried (one-time migration,
-    not a steady-state rebuild cycle). Uncommitted husks older than the
-    latest committed generation are collected (a crashed build is
-    recomputable by contract); a build newer than the latest commit is
-    in progress and untouched.
+    finish (the Iceberg/Delta snapshot-retention contract). The ROOT
+    layout's data subs (`legacy_subs`) are NOT retention-protected: the
+    first IVF, IVF×SQ8 and BM25 writes build at the index root, and the
+    first committed generation supersedes that root copy for every
+    reader (`gen_resolve` never returns the root again), so it drops at
+    once — a one-time move into generations, not a steady-state rebuild
+    cycle. Uncommitted husks older than the latest committed generation
+    are collected (a crashed build is recomputable by contract); a build
+    newer than the latest commit is in progress and untouched.
     Idempotent and metadata-only; called from write paths after
     `gen_commit` — a crash between commit and GC just leaves the
     superseded generation for the next writer to collect."""

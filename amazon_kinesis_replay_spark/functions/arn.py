@@ -29,14 +29,6 @@ def extract_region(arn: str) -> str:
     return m.group(1)
 
 
-def extract_stream_name(arn: str) -> str:
-    """Stream name = the path after 'stream/' (KinesisProducer.java:61-72)."""
-    m = _ARN_RE.match(arn)
-    if not m:
-        raise ValueError(f"invalid Kinesis stream ARN: {arn!r}")
-    return m.group(3)
-
-
 def region_col(arn_col: Column) -> Column:
     return F.regexp_extract(arn_col, ARN_PATTERN, 1)
 

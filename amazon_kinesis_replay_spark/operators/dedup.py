@@ -39,11 +39,6 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     ).select("keep_id", "dup_count")
 
 
-def distinct_rows(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """dropDuplicates over the key columns."""
-    return df.dropDuplicates(key_cols)
-
-
 # --------------------------------------------------------------------------
 # Shingling
 # --------------------------------------------------------------------------
@@ -740,35 +735,6 @@ def _verify_cosine_pairs(withn: DataFrame, cand_ids: DataFrame,
     return scored.filter(F.col("cosine") >= threshold)
 
 
-def _staged_result(out: DataFrame, path: str) -> DataFrame:
-    """Read-before-append barrier WITHOUT driver materialization (r6
-    verdict item 5): the incremental paths must fully compute their
-    result from the PRE-append index state before mutating the index —
-    a lazy consumer would otherwise double-count the new entries. The
-    former collect()+createDataFrame fence collected the batch's
-    duplicate pairs onto the driver, unbounded under mass duplication;
-    writing to a staging parquet under the index path and re-reading is
-    the same barrier with no driver bytes, and works on any Hadoop
-    filesystem the index itself lives on. Staging dirs are batch-scoped
-    (uuid-named) and NOT auto-deleted — the returned DataFrame stays
-    backed by them; call `clear_staging(spark, path)` once results are
-    no longer referenced (a per-batch caller must do this after every
-    batch: without it a long-running job leaks one result dataset per
-    batch into the index directory forever)."""
-    import uuid
-    staging = f"{path}/_staging/{uuid.uuid4().hex}"
-    out.write.parquet(staging)
-    return out.sparkSession.read.parquet(staging)
-
-
-def clear_staging(spark, path: str) -> None:
-    """Remove every `_staged_result` barrier dataset under an index path.
-    Safe whenever no returned incremental-result DataFrame is still
-    referenced (they are lazily backed by these files)."""
-    from .. import fsutil
-    fsutil.delete(spark, path + "/_staging")
-
-
 # --------------------------------------------------------------------------
 # Dedup cluster formation (connected components + representative choice)
 # --------------------------------------------------------------------------
@@ -788,15 +754,14 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
     HIGHEST-SCORING member instead (ties and unscored-only clusters fall
     back to min id; unscored members never beat a scored one) — the
     curation shape where dedup keeps the best-quality copy (score from
-    `text.quality_features`, `ngram_lm_score` negated perplexity, ...)
+    `text.quality_score_expr`, `ngram_lm_score` negated perplexity, ...)
     rather than an arbitrary one. One extra metadata-scale join + one
     map-side-combinable agg; nothing touches the pair pipeline.
 
     `pairs` is an (id_a, id_b) DataFrame OR a parquet path string of one
     — the path form is the cold-start entry (r6 verdict item 7): a
-    pipeline that already materialized its duplicate pairs (batch output,
-    or the incremental paths' `_staging` results) clusters them without
-    re-running any shingle/LSH pipeline.
+    pipeline that already materialized its duplicate pairs clusters them
+    without re-running any shingle/LSH pipeline.
 
     Connected components by iterative min-label propagation: every node
     starts labeled with its own id; each round, a node's label becomes the
@@ -923,59 +888,6 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
 
 
 # --------------------------------------------------------------------------
-# Incremental exact dedup (persisted fingerprint set + per-batch anti-join)
-# --------------------------------------------------------------------------
-
-
-def exact_index_write(df: DataFrame, path: str, key_cols: list[str],
-                      id_col: str) -> None:
-    """Persist the exact-dedup fingerprint set: one (key-hash, keep_id)
-    row per distinct key. xxhash64 keys shuffle as 8-byte longs; the raw
-    key columns ride along so verification never depends on collision
-    freedom (same rule as every other hashed join in this module)."""
-    (df.groupBy(*key_cols)
-     .agg(F.min(id_col).alias("keep_id"))
-     .withColumn("__kh", F.xxhash64(*key_cols))
-     .write.mode("overwrite").parquet(path + "/keys"))
-
-
-def exact_dedup_incremental(spark, new_df: DataFrame, path: str,
-                            key_cols: list[str], id_col: str,
-                            append: bool = True) -> DataFrame:
-    """Classify a new batch against the persisted fingerprint set:
-    (id, is_new, keep_id) — is_new=False rows duplicate an indexed key
-    (keep_id = the indexed representative); within-batch duplicates
-    collapse to the batch's min id first. Cost ∝ the batch plus one
-    equi-join on the 8-byte key hash (raw-key equality as residual);
-    with append, only the batch's genuinely new keys are added."""
-    batch = (new_df.groupBy(*key_cols)
-             .agg(F.min(id_col).alias("batch_keep"),
-                  F.collect_list(id_col).alias("__ids"))
-             .withColumn("__kh", F.xxhash64(*key_cols)))
-    old = spark.read.parquet(path + "/keys")
-    cond = [batch["__kh"] == old["__kh"]] + [
-        batch[c].eqNullSafe(old[c]) for c in key_cols]
-    joined = batch.join(old, cond, "left") \
-        .select(batch["__kh"].alias("__kh"),
-                *[batch[c] for c in key_cols],
-                "batch_keep", "__ids",
-                old["keep_id"].alias("__old_keep"))
-    out = (joined.select(
-        F.explode("__ids").alias("id"),
-        F.col("__old_keep").isNull().alias("__key_new"),
-        F.coalesce("__old_keep", "batch_keep").alias("keep_id"))
-        .select("id",
-                (F.col("__key_new") & (F.col("id") == F.col("keep_id")))
-                .alias("is_new"), "keep_id"))
-    if append:
-        out = _staged_result(out, path)   # barrier: compute pre-append
-        (joined.filter(F.col("__old_keep").isNull())
-         .select(*key_cols, F.col("batch_keep").alias("keep_id"), "__kh")
-         .write.mode("append").parquet(path + "/keys"))
-    return out
-
-
-# --------------------------------------------------------------------------
 # Exact substring-span dedup (Lee et al. 2021, "Deduplicating Training
 # Data Makes Language Models Better" — the ExactSubstr variant, at token
 # granularity)
@@ -1088,315 +1000,3 @@ def _merge_islands(occ: DataFrame, id_col: str, window: int) -> DataFrame:
                  F.count("*").alias("n_windows"))
             .drop("__g")
             .select(id_col, "span_start", "span_end", "n_windows"))
-
-
-def remove_duplicate_spans(df: DataFrame, spans: DataFrame, id_col: str,
-                           text_col: str) -> DataFrame:
-    """Rewrite each document with every duplicated span's tokens removed
-    (ALL occurrences — the behavior of the released ExactSubstr tool; a
-    keep-one policy would need a global per-window occurrence ranking
-    that merged spans make ill-defined). Returns
-    (id_col, clean_text, n_removed_tokens); every doc comes back in the
-    module's normalized token form (lower/trim, single-space joined —
-    the convention the spans were computed under), spans-free docs with
-    n_removed_tokens = 0.
-
-    Spans aggregate to one array per doc (bounded by doc length / window)
-    and join back on the id — one equi-join, token filtering is a JVM
-    higher-order filter/exists over the token array, no Python.
-    """
-    agg = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("__spans"))
-    toks = F.expr(tokens_expr(text_col))
-    joined = df.join(agg, id_col, "left")
-    spans_arr = F.coalesce(
-        F.col("__spans"),
-        F.array().cast("array<struct<span_start:bigint,span_end:bigint>>"))
-    idxed = F.zip_with(
-        toks,
-        F.sequence(F.lit(0), F.size(toks) - 1),
-        lambda t, i: F.struct(t.alias("t"), i.alias("i")))
-    kept = F.filter(
-        idxed,
-        lambda p: ~F.exists(
-            spans_arr,
-            lambda s: (p["i"] >= s["span_start"]) &
-                      (p["i"] < s["span_end"])))
-    return joined.select(
-        id_col,
-        F.concat_ws(" ", F.transform(kept, lambda p: p["t"]))
-         .alias("clean_text"),
-        (F.size(toks) - F.size(kept)).cast("long")
-         .alias("n_removed_tokens"))
-
-
-def substring_index_write(df: DataFrame, path: str, id_col: str = "doc_id",
-                          text_col: str = "text",
-                          window: int = 12) -> None:
-    """Persist the substring-dedup window index: one row per DISTINCT
-    window string — (__h, win, cnt). The hash column shuffles joins as
-    8-byte longs; the string rides along so incremental confirmation
-    never depends on collision freedom (module rule). Index size is
-    ∝ distinct windows × window tokens — the same order as the corpus
-    itself, which is what any exact-substring method pays (a suffix
-    array is corpus-sized too); store it columnar-compressed and cold.
-
-    Layout: every writer owns a PARTITION DIRECTORY under wins/
-    (part=base here, part=<delta_name> for incremental deltas) so each
-    write is an idempotent directory overwrite — re-delivering a batch
-    replaces its own delta instead of double-appending counts into the
-    sum-on-read index (review finding: a crash between a plain append
-    and the stream's applied-marker write would otherwise corrupt
-    every future count).
-    """
-    rows = window_occurrences(df, id_col, text_col, window)
-    (rows.groupBy("win").agg(F.count("*").alias("cnt"))
-     .withColumn("__h", F.xxhash64("win"))
-     .write.mode("overwrite").parquet(path + "/wins/part=base"))
-
-
-def duplicate_spans_incremental(spark, new_df: DataFrame, path: str,
-                                id_col: str = "doc_id",
-                                text_col: str = "text", window: int = 12,
-                                append: bool = True,
-                                replay: bool = False,
-                                delta_name: str | None = None) -> DataFrame:
-    """Duplicated spans for a NEW batch against the persisted window
-    index: a batch window is duplicated iff its corpus-wide count
-    (index + batch) exceeds 1 — so the spans returned for batch docs are
-    IDENTICAL to what a full-corpus `duplicate_spans` re-run would
-    return for them (proven by test), at per-batch cost: the batch's
-    windows join the index on (__h, win) — 8-byte hash key with string
-    residual — and nothing rescans history. Docs already in the corpus
-    whose text becomes retroactively duplicated by this batch are NOT
-    re-flagged (same new-vs-old contract as every incremental twin in
-    this module); a periodic full `duplicate_spans` compaction picks
-    those up.
-
-    With append, the batch's window counts land in their OWN partition
-    directory wins/part=<delta_name> (a fresh uuid name when None) via
-    an idempotent mode=overwrite write — re-running the same
-    delta_name REPLACES the delta instead of double-counting it, which
-    closes the crash window between a streaming batch's append and its
-    applied-marker write (review finding: with a plain file append,
-    one crash there would permanently inflate every count). The index
-    is sum-on-read (the groupBy below), so appends stay ∝ batch;
-    compact by rewriting part=base from the summed table when delta
-    dirs accumulate. The result rides the `_staged_result` barrier
-    (computed against the PRE-append index); call `clear_staging` when
-    done.
-
-    replay=True is the at-least-once re-delivery mode for UNNAMED
-    deltas: the index already holds this batch's delta, so the
-    duplicate condition is the index count alone — adding the batch's
-    counts again would flag every unique batch window as duplicated
-    (count 1+1), a WRONG answer, not merely a duplicated row. When
-    delta_name IS given, self-exclusion (filter own partition, always
-    add the batch once) supersedes it — one formula that is also
-    correct in the crash window where the delta landed but the marker
-    did not, which the replay flag alone cannot distinguish.
-    """
-    rows = window_occurrences(new_df, id_col, text_col, window)
-    rows = rows.withColumn("__h", F.xxhash64("win"))
-    rows = rows.persist()            # generate-feeds-join barrier
-    base = _wins_dir(spark, path)    # resolve gen layout / heal legacy
-    idx_raw = spark.read.parquet(base + "/wins")
-    if delta_name is not None:
-        # SELF-EXCLUSION: drop this batch's own delta partition from
-        # the sum-on-read, then always add the batch's counts once —
-        # correct on the first run (no such partition), on a replay
-        # after the marker (own delta present), AND in the crash
-        # window between delta write and marker (own delta present,
-        # append re-runs) — the three cases collapse to one formula,
-        # so `replay` is ignored when deltas are named.
-        idx_raw = idx_raw.filter(F.col("part") != delta_name)
-        replay = False
-    idx = idx_raw.groupBy("__h", "win").agg(F.sum("cnt").alias("cnt"))
-    bc = rows.groupBy("__h", "win").agg(F.count("*").alias("bcnt"))
-    total = (F.lit(0) if replay else F.col("bcnt")) \
-        + F.coalesce(F.col("cnt"), F.lit(0))
-    dup_wins = (bc.join(idx, ["__h", "win"], "left")
-                .filter(total > 1)
-                .select("__h", "win"))
-    occ = rows.join(dup_wins, ["__h", "win"], "left_semi")
-    out = _staged_result(_merge_islands(occ, id_col, window), path)
-    if append:
-        import uuid
-        name = delta_name if delta_name is not None else uuid.uuid4().hex
-        (bc.select("win", F.col("bcnt").alias("cnt"), "__h")
-         .write.mode("overwrite").parquet(f"{base}/wins/part={name}"))
-    rows.unpersist()
-    return out
-
-
-#: Hidden (never scanned by Spark) manifest the compaction writes into the
-#: NEW generation listing the partitions it folded into part=base — the
-#: fact a crash-recovery needs to finish the carry-over without
-#: double-counting (r8 advice item).
-_FOLDED_MANIFEST = "_folded.txt"
-
-
-def _heal_wins(spark, path: str) -> None:
-    """Auto-heal the two `substring_index_compact` crash windows (r8
-    advice item — previously a crash between the wins->wins.old rename
-    and the staging->wins rename left NO live wins/, every incremental
-    read failed, and a compact re-run silently no-op'd on the empty
-    snapshot instead of recovering):
-
-    1. wins/ absent or empty, wins.old present: the rename-aside
-       happened but the staging swap did not — the complete previous
-       generation is wins.old; rename it back.
-    2. both present: the swap happened but the in-flight-delta
-       carry-over did not finish — finish it from the folded manifest
-       the compaction wrote into the new generation (children of
-       wins.old NOT in the manifest are unfolded deltas; move them in),
-       then drop wins.old. Without a manifest (pre-manifest state) the
-       split is unknowable, so the heal leaves wins.old untouched
-       rather than risk double-counting a folded delta.
-
-    Idempotent and cheap (directory listings + renames, no data reads);
-    called at compact entry and before every incremental index read.
-    """
-    from .. import fsutil
-    wins, old = path + "/wins", path + "/wins.old"
-    if not fsutil.exists(spark, old):
-        return
-    live = [n for n in fsutil.listdir(spark, wins)
-            if not n.startswith(("_", "."))]
-    if not live:
-        fsutil.delete(spark, wins)          # empty husk blocks the rename
-        if not fsutil.rename(spark, old, wins):
-            raise RuntimeError(
-                f"heal: could not restore {old} to {wins}; index "
-                "unavailable until manual recovery")
-        return
-    manifest = fsutil.read_text(spark, f"{wins}/{_FOLDED_MANIFEST}")
-    if manifest is None:
-        return                              # unknowable split — keep .old
-    folded = set(manifest.split())
-    for name in fsutil.listdir(spark, old):
-        if name.startswith(("_", ".")):
-            continue
-        if name not in folded and not fsutil.exists(spark, f"{wins}/{name}"):
-            fsutil.rename(spark, f"{old}/{name}", f"{wins}/{name}")
-    fsutil.delete(spark, old)
-
-
-def _wins_dir(spark, path: str) -> str:
-    """Resolved directory holding the window index's wins/ data: the
-    latest committed generation when the pointer layout is present
-    (`fsutil.gen_*` — every compaction since r8 publishes one), else the
-    legacy root, healed first (`_heal_wins` — only the pre-gen
-    rename-aside compaction could have left a crashed swap there).
-    Resolving a generation also finishes a superseded generation's
-    carry-over (`_wins_finish_gc`), so it runs before every read."""
-    from .. import fsutil
-    cur = fsutil.gen_current(spark, path)
-    if cur is None:
-        _heal_wins(spark, path)
-        return path
-    _wins_finish_gc(spark, path)
-    return cur
-
-
-def _wins_finish_gc(spark, path: str) -> None:
-    """Post-commit half of the generation-pointer compaction: carry into
-    the CURRENT generation every wins/ child of superseded state (an
-    older generation, or the legacy root being migrated) that the
-    compaction did not fold — in-flight deltas and deltas that landed
-    after its snapshot, identified as 'absent from the current
-    generation's folded manifest' — then drop the superseded state.
-    Idempotent and metadata-only (listings + renames); a crash at any
-    point re-runs cleanly, which is why this can live on the read path
-    where the old three-state wins/wins.old/staging disambiguation
-    (`_heal_wins`) needed a per-generation manifest AND a refusal case.
-    """
-    from .. import fsutil
-    cur = fsutil.gen_current(spark, path)
-    if cur is None:
-        return
-    manifest = fsutil.read_text(spark, f"{cur}/wins/{_FOLDED_MANIFEST}")
-    if manifest is None:
-        # a generation without a manifest was not written by the
-        # compaction — nothing to finish, and deleting superseded state
-        # without knowing the folded set could double-count; leave it
-        return
-    folded = set(manifest.split())
-    cur_n = int(cur.rsplit("=", 1)[1])
-    prevs = [f"{path}/{name}"
-             for n, name, _ in fsutil.gen_list(spark, path) if n < cur_n]
-    if fsutil.exists(spark, path + "/wins"):
-        prevs.append(path)                    # legacy root, mid-migration
-    for prev in prevs:
-        for name in fsutil.listdir(spark, f"{prev}/wins"):
-            if name.startswith(("_", ".")):
-                continue
-            if (name not in folded
-                    and not fsutil.exists(spark, f"{cur}/wins/{name}")):
-                fsutil.rename(spark, f"{prev}/wins/{name}",
-                              f"{cur}/wins/{name}")
-    fsutil.gen_gc(spark, path, legacy_subs=("wins",))
-
-
-def substring_index_compact(spark, path: str) -> None:
-    """Compact the sum-on-read window index: fold the committed
-    partitions into one summed part=base inside the NEXT GENERATION
-    directory (`fsutil.gen_*`), publish it with one atomic marker-file
-    create, and let `_wins_finish_gc` carry the unfolded remainder over
-    and drop the superseded generation. Run it when delta directories
-    accumulate (each adds a read-side union + re-aggregation); cost is
-    one scan of the index, never the corpus.
-
-    Streaming-safety:
-    - IN-FLIGHT deltas are NEVER folded: with an `applied/` marker
-      present, any part=bN with N > the recorded batch_id is in the
-      crash window between its delta write and the marker — folding it
-      into base would defeat that batch's self-exclusion on redelivery
-      (unique windows flagged duplicated AND double-counted forever).
-      They are carried over by the finish-gc sweep (they are absent
-      from the folded manifest), as is anything a concurrent writer
-      lands after the snapshot.
-    - Crash anywhere before `gen_commit`: the old generation is still
-      the one readers resolve; the partial build is collected by the
-      next `gen_begin`. Crash after commit: the sweep is idempotent and
-      re-runs at every subsequent resolve. There is no rename on the
-      commit path and no unrecoverable window — the legacy compaction's
-      wins.old machinery survives only to heal indexes crashed under
-      the pre-gen code.
-    """
-    from .. import fsutil
-    base = _wins_dir(spark, path)   # heal legacy / sweep superseded gens
-    if fsutil.exists(spark, path + "/wins.old"):
-        # _heal_wins deliberately preserved it (pre-manifest crash, split
-        # unknowable) — compacting now would strand any unfolded delta
-        # forever (r8 review finding). Refuse instead.
-        raise RuntimeError(
-            f"compact: unresolved {path}/wins.old from a pre-manifest "
-            "crash — fold or remove it manually before compacting")
-    snapshot = set(fsutil.listdir(spark, base + "/wins"))
-    last = fsutil.read_applied_batch(spark, path)
-    fold: list[str] = []
-    for name in snapshot:
-        if name.startswith(("_", ".")):
-            continue
-        val = name.split("=", 1)[1] if "=" in name else name
-        if (val.startswith("b") and val[1:].isdigit()
-                and int(val[1:]) > last):
-            pass                                # in-flight: sweep carries
-        else:
-            fold.append(name)
-    if not fold:
-        return
-    summed = (spark.read.parquet(
-                  *[f"{base}/wins/{n}" for n in fold])
-              .drop("part")
-              .groupBy("__h", "win").agg(F.sum("cnt").alias("cnt"))
-              .select("win", "cnt", "__h"))
-    build = fsutil.gen_begin(spark, path)
-    summed.write.parquet(build + "/wins/part=base")
-    # folded manifest: the fact the finish-gc sweep needs to carry the
-    # remainder over without double-counting a folded delta
-    fsutil.write_text(spark, f"{build}/wins/{_FOLDED_MANIFEST}",
-                      "\n".join(sorted(fold)))
-    fsutil.gen_commit(spark, build)
-    _wins_finish_gc(spark, path)

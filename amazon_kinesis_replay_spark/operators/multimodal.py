@@ -402,31 +402,6 @@ def encode_png(width: int, height: int, pixels: bytes, ctype: int = 2,
             + chunk(b"IEND", b""))
 
 
-def synthesize_png_media(df: DataFrame, side: int = 8) -> DataFrame:
-    """Deterministic REAL-PNG fixture synthesis: each row's binary payload
-    becomes a side x side RGB raster (payload bytes, zero-padded /
-    truncated), encoded with encode_png using a media_id-derived filter
-    type — so a downstream real decode exercises every unfilter path.
-    Arrow-batched mapInPandas; schema matches the (media_id, data) decode
-    input contract."""
-    n = side * side * 3
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                raw = bytes(data) if data is not None else b""
-                raster = (raw + bytes(n))[:n]
-                f = int(mid) % 5
-                ids.append(mid)
-                blobs.append(encode_png(side, side, raster, ctype=2,
-                                        filters=[f] * side))
-            yield pd.DataFrame({"media_id": ids, "data": blobs})
-
-    return df.select("media_id", "data").mapInPandas(
-        _synth, "media_id long, data binary")
-
-
 #: Fixed 256-entry RGB palette for synthesized GIF fixtures: index i ->
 #: (i, 255-i, i^0x55) — injective, so any payload byte string is exactly
 #: representable as indexed pixels.

@@ -18,7 +18,7 @@ Scale posture:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # --------------------------------------------------------------------------
@@ -35,11 +35,6 @@ def seek(df: DataFrame, ts_col: str, seek_to: str) -> DataFrame:
     pruning give the same skip-ahead effect without sampling.
     """
     return df.filter(F.col(ts_col) >= F.lit(seek_to).cast("timestamp"))
-
-
-def non_empty(df: DataFrame) -> bool:
-    """OP-FILTER-NONEMPTY — empty-source guard (RePlayer.java:123-126)."""
-    return not df.isEmpty()
 
 
 # --------------------------------------------------------------------------
@@ -91,13 +86,6 @@ def normalize_payload(df: DataFrame, payload_col: str,
         out, F.when(c.endswith("\n"), c).otherwise(F.concat(c, F.lit("\n"))))
 
 
-def serialize_payload(df: DataFrame, payload_col: str,
-                      out_col: str = "payload_bytes") -> DataFrame:
-    """OP-PROJ-SERIALIZE — UTF-8 payload bytes for the sink
-    (JsonEvent.java:118-124)."""
-    return df.withColumn(out_col, F.encode(F.col(payload_col), "UTF-8"))
-
-
 # --------------------------------------------------------------------------
 # Ordering (OP-SORT-*)
 # --------------------------------------------------------------------------
@@ -113,14 +101,8 @@ def order_by_event_time(df: DataFrame, ts_col: str, *tiebreak: str) -> DataFrame
     return df.orderBy(F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak])
 
 
-def head_min_event(df: DataFrame, ts_col: str) -> DataFrame:
-    """OP-PEEK-MIN — non-destructive smallest-element peek
-    (JsonEventBufferedReader.java:84-86) as a min() aggregate."""
-    return df.agg(F.min(ts_col).alias("min_ts"))
-
-
 # --------------------------------------------------------------------------
-# Global indexing + sink shaping (OP-SINK-KINESIS batching, OP-SINK-PARTKEY)
+# Global indexing + sink shaping (OP-SINK-KINESIS batching)
 # --------------------------------------------------------------------------
 
 
@@ -356,14 +338,6 @@ def assign_batches(df: DataFrame, order_cols: list[str],
     idx = with_global_index(df, order_cols, out_col="__rn")
     return idx.withColumn(
         out_col, F.floor((F.col("__rn") - 1) / max_per_batch)).drop("__rn")
-
-
-def partition_key(df: DataFrame, out_col: str = "partition_key") -> DataFrame:
-    """OP-SINK-PARTKEY — per-record random partition key
-    (KinesisProducer.java:197-199, UUID.randomUUID) for uniform shard
-    spread. Nondeterministic by design; oracle-checked queries use
-    `surrogate_shard` instead."""
-    return df.withColumn(out_col, F.expr("uuid()"))
 
 
 def surrogate_shard(df: DataFrame, key_col: str, n_shards: int,

@@ -405,8 +405,7 @@ def retrieval_index_compact(spark, path: str) -> int:
     100 TB the per-query file listing — not the data — becomes the tax.
     Postings rows are DISJOINT across deltas (the append contract), so
     compaction is a pure re-partitioned rewrite: no count summing, no
-    manifest arithmetic — simpler than the substring index's
-    sum-on-read compaction. The folded watermark (max delta id) rides
+    manifest arithmetic. The folded watermark (max delta id) rides
     the new generation so a replayed append of a compacted batch
     no-ops instead of double-counting. Crash anywhere before the
     marker: readers stay on the old generation and the husk is swept

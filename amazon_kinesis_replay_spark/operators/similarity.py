@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import fsutil
+
 #: Cross-engine-exact quantization scale (r10, replacing the mirrored
 #: double->decimal(24,12) cast): q(v) = floor(v*1e12 + 0.5) — floor,
 #: multiply and add are IEEE-deterministic doubles, so BOTH engines
@@ -406,111 +408,6 @@ def ivf_index_write(emb: DataFrame, path: str, n_centroids: int = 16,
         .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
 
 
-#: Staging directory name shared by every index swap in this module.
-_RETRAIN_STAGING = "/.retrain-staging"
-
-
-def _audited_swap(spark, path: str, staging: str, subs) -> None:
-    """Swap a staged index generation in by rename-ASIDE, not
-    delete-then-rename: move each live subdir to <sub>.old first, rename
-    the staged one in, and only then delete the .old copies. A crash at
-    any step leaves at least one COMPLETE generation on disk (live, .old,
-    or staging) — the delete-first form had a window where the live index
-    was simply gone (r6 ADVICE). Renames are atomic on HDFS/local; on
-    object stores version the whole index path instead. Crashes inside
-    this function are recovered by `_heal_index_swap`."""
-    from .. import fsutil
-    for sub in subs:
-        fsutil.delete(spark, f"{path}/{sub}.old")        # stale leftovers
-        if fsutil.exists(spark, f"{path}/{sub}"):   # pre-policy may lack one
-            # The aside rename's boolean MUST be checked (r7 review): if
-            # it silently failed, the live dir would still exist and the
-            # staging rename below would NEST the new generation inside
-            # it (Hadoop rename-into-existing-dir semantics) — a corrupt
-            # index reported as success.
-            if not fsutil.rename(spark, f"{path}/{sub}",
-                                 f"{path}/{sub}.old"):
-                raise IOError(
-                    f"index swap failed moving {sub} aside in {path}; "
-                    "the previous generation is intact (split across "
-                    "<sub> and <sub>.old) and the staged build remains "
-                    f"at {staging}")
-    for sub in subs:
-        if not fsutil.rename(spark, f"{staging}/{sub}", f"{path}/{sub}"):
-            raise IOError(
-                f"index swap failed renaming {sub} into {path}; the "
-                f"previous generation is intact under {path}/<sub>.old")
-    for sub in subs:
-        fsutil.delete(spark, f"{path}/{sub}.old")
-    fsutil.delete(spark, staging)
-
-
-def _heal_index_swap(spark, path: str, subs) -> None:
-    """Auto-heal a crashed `_audited_swap` (r8 review finding: without
-    this, a crash between the aside renames and the staging renames
-    leaves no live index — and an index whose READ path auto-bootstraps,
-    like the semantic stream processor probing meta/, would silently
-    discard the entire history instead of failing loudly).
-
-    Disambiguation: the aside loop moves EVERY sub to .old before any
-    staging rename runs, so
-    - .old COMPLETE  -> the crash was during/after the staging renames;
-      any live sub is already the NEW generation — roll FORWARD (finish
-      the staging renames, then drop .old and staging);
-    - .old PARTIAL   -> the crash was mid-aside; no staging rename ran,
-      live subs are the OLD generation — roll BACK (restore the .old
-      prefix; the staged build is recomputable and is deleted).
-
-    Idempotent, metadata-only (existence probes + renames); called at
-    retrain entry and before every index read that could bootstrap."""
-    from .. import fsutil
-    staging = path + _RETRAIN_STAGING
-    missing = [s for s in subs if not fsutil.exists(spark, f"{path}/{s}")]
-    if not missing:
-        return
-    if not any(fsutil.exists(spark, f"{path}/{s}.old") for s in subs) \
-            and not fsutil.exists(spark, staging):
-        return          # genuinely fresh path — bootstrapping is correct
-    old_complete = all(fsutil.exists(spark, f"{path}/{s}.old")
-                       for s in subs)
-    if old_complete and all(fsutil.exists(spark, f"{staging}/{s}")
-                            for s in missing):
-        for s in missing:                                 # roll FORWARD
-            if not fsutil.rename(spark, f"{staging}/{s}", f"{path}/{s}"):
-                raise IOError(
-                    f"heal: could not finish the swap of {s} into "
-                    f"{path}; recover manually from {path}/<sub>.old")
-        for s in subs:
-            fsutil.delete(spark, f"{path}/{s}.old")
-        fsutil.delete(spark, staging)
-        return
-    for s in missing:                                     # roll BACK
-        if fsutil.exists(spark, f"{path}/{s}.old"):
-            if not fsutil.rename(spark, f"{path}/{s}.old", f"{path}/{s}"):
-                raise IOError(
-                    f"heal: could not restore {s} in {path}; recover "
-                    f"manually from {path}/{s}.old")
-        else:
-            raise IOError(
-                f"index at {path} unrecoverable: {s} missing from live, "
-                ".old and staging — manual recovery required")
-    fsutil.delete(spark, staging)
-
-
-def _index_dir(spark, path: str, subs) -> str:
-    """Resolved DATA directory of a persisted index: the latest committed
-    generation when the pointer layout is present (`fsutil.gen_*` — every
-    rebuild since r8 publishes one), else the legacy root — healed first,
-    since only the pre-gen rename-aside swap could have left a crashed
-    state there. Every read/append/retrain site routes through this."""
-    from .. import fsutil
-    cur = fsutil.gen_current(spark, path)
-    if cur is not None:
-        return cur
-    _heal_index_swap(spark, path, subs)
-    return path
-
-
 def ivf_index_maybe_retrain(spark, path: str, growth_threshold: float = 0.5,
                             train_iters: int = 2,
                             max_list_share: float | None = None) -> bool:
@@ -539,12 +436,11 @@ def ivf_index_maybe_retrain(spark, path: str, growth_threshold: float = 0.5,
     create (`fsutil.gen_commit`) — readers see the old generation until
     the marker exists, a crash before it leaves the old generation
     untouched, and there is no rename anywhere on the commit path (safe
-    on object stores, where the old rename-aside swap was copy+delete).
+    on object stores, where rename is copy+delete).
 
     Returns True iff a re-train ran.
     """
-    from .. import fsutil
-    base = _index_dir(spark, path, ("vectors", "centroids", "meta"))
+    base = fsutil.gen_resolve(spark, path)
     vecs = spark.read.parquet(base + "/vectors")
     n_now = vecs.count()
     try:
@@ -586,7 +482,7 @@ def ivf_index_append(spark, emb_new: DataFrame, path: str,
     plus a partitioned append — the existing index is never read or
     rewritten. Re-train + full rewrite (ivf_index_write with train_iters)
     remains the periodic compaction path when drift accumulates."""
-    base = _index_dir(spark, path, ("vectors", "centroids", "meta"))
+    base = fsutil.gen_resolve(spark, path)
     saved = spark.read.parquet(base + "/centroids")
     rows = saved.collect()                       # tiny; pin as a literal
     cents = spark.createDataFrame(rows, saved.schema)
@@ -603,7 +499,7 @@ def ivf_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
     not data — and scan ONLY those partitions of the vectors table via a
     static centroid_id IN (...) filter, which Spark turns into partition
     pruning at file-listing time. Exact cosine within the probed lists."""
-    base = _index_dir(spark, path, ("vectors", "centroids", "meta"))
+    base = fsutil.gen_resolve(spark, path)
     cents = spark.read.parquet(base + "/centroids")
     probe = (cents.crossJoin(F.broadcast(query_df))
              .select("centroid_id",
@@ -920,29 +816,6 @@ def semantic_dedup_two_level(emb: DataFrame, threshold: float = 0.4,
                                pair_asg=pair_asg)
 
 
-# --------------------------------------------------------------------------
-# Semantic dedup: persisted index + incremental (the streaming substrate)
-# --------------------------------------------------------------------------
-
-
-def _cell_pairs(a_side: DataFrame, b_side: DataFrame, exact: bool,
-                threshold: float) -> DataFrame:
-    """Same-cell (id_a < id_b, cosine >= threshold) pairs between two
-    (centroid_id, id, vec) tables — an equi-join on centroid_id, so the
-    pairwise term stays confined to clusters. Norm-hoisted (see
-    _with_norm): per-row norms below the join, bit-identical scores."""
-    dot = _exact_dot_sql if exact else _fast_dot_sql
-    a = _with_norm(a_side, "vec", dot).alias("a")
-    b = _with_norm(b_side, "vec", dot).alias("b")
-    return (a.join(b, (F.col("a.centroid_id") == F.col("b.centroid_id"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"),
-                    F.col("b.id").alias("id_b"),
-                    F.expr(f"{dot('a.vec', 'b.vec')} / (a.__n * b.__n)")
-                    .alias("cosine"))
-            .filter(F.col("cosine") >= threshold))
-
-
 def _ranked_assign(emb: DataFrame, cents: DataFrame, n_assign: int,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    exact: bool = False) -> DataFrame:
@@ -950,7 +823,8 @@ def _ranked_assign(emb: DataFrame, cents: DataFrame, n_assign: int,
     nearest centroids, rank 1 = primary. The window tie-break (sim
     desc, centroid_id asc) is ivf_assign's exactly, so rank-1 rows ==
     ivf_assign output — the multi-assignment generalization every
-    n_assign consumer (batch SemDeDup, the v2 semantic index) shares."""
+    n_assign consumer (batch SemDeDup, the pairwise_topk_per_label gate)
+    shares."""
     from pyspark.sql import Window
     dot = _exact_dot_sql if exact else _fast_dot_sql
     # r13 norm hoist (see _with_norm): each vector's norm once per row,
@@ -968,296 +842,6 @@ def _ranked_assign(emb: DataFrame, cents: DataFrame, n_assign: int,
             .filter(F.col("rn") <= n_assign)
             .select("id", "vec", "centroid_id",
                     F.col("rn").alias("assign_rank")))
-
-
-def _index_meta(spark, base: str):
-    """(n_centroids, n_at_train, n_assign) from a semantic index's
-    meta/. n_assign is None for a pre-r13 (v1) index — the format
-    discriminator: v1 members carry no assign_rank column and appends
-    must stay schema-compatible with them.
-
-    Only a MISSING/empty meta reads as all-None (pre-r8 index, or the
-    crash window of the coalesce(1) overwrite) — transient read errors
-    PROPAGATE (r13 review finding: a swallowed fs hiccup on a v2 index
-    would misclassify it as v1 and silently append rank-less rows the
-    retrain's primary filter then drops). Callers that can't tolerate
-    all-None on a ranked members table guard on the members schema."""
-    from pyspark.errors import AnalysisException
-    try:
-        m = spark.read.parquet(base + "/meta").head()
-    except AnalysisException:          # meta/ missing / schema-less
-        return None, None, None
-    if m is None:                      # readable but zero rows
-        return None, None, None
-    nat = int(m["n_at_train"]) if "n_at_train" in m.__fields__ else None
-    na = int(m["n_assign"]) if "n_assign" in m.__fields__ else None
-    return int(m["n_centroids"]), nat, na
-
-
-def semantic_pairs(emb: DataFrame, threshold: float = 0.4,
-                   n_centroids: int = 16, n_iters: int = 2,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   centroids: DataFrame | None = None) -> DataFrame:
-    """The PAIR form of semantic_dedup: every same-cluster pair at
-    cosine >= threshold (id_a < id_b) — the batch ground truth the
-    streaming twin is tested equal to, and the edge input
-    dedup_clusters wants."""
-    cents = centroids if centroids is not None else kmeans_centroids(
-        emb, n_centroids=n_centroids, n_iters=n_iters, id_col=id_col,
-        vec_col=vec_col)
-    asg = ivf_assign(emb, id_col=id_col, vec_col=vec_col,
-                     centroids=cents).localCheckpoint()
-    side = asg.select("centroid_id", "id", "vec")
-    return _cell_pairs(side, side, False, threshold)
-
-
-def semantic_index_write(emb: DataFrame, path: str, n_centroids: int = 16,
-                         n_iters: int = 2, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         n_assign: int = 1) -> None:
-    """Persist the semantic-dedup state: trained centroids (frozen — the
-    streaming contract; retrain policy belongs to the caller, same as
-    the IVF index) and the member table written under
-    members/part=base, hive-partitioned by centroid_id so incremental
-    probes prune to the batch's cells at FILE LISTING. meta/ is written
-    LAST — the index-complete marker the stream processor probes.
-
-    Format v2 (r13): members carry `assign_rank` (1 = primary) and one
-    row PER ASSIGNED CELL — at n_assign > 1 an indexed vector is
-    probe-visible in each of its n_assign nearest cells, which is what
-    makes incremental dedup TWO-SIDED equal to the batch
-    `semantic_dedup(n_assign=)` (a boundary pair between two
-    already-indexed vectors is reachable through either side's
-    secondary cell). meta records n_assign; a pre-r13 index (no
-    n_assign in meta, no assign_rank column) keeps v1 semantics on
-    every read/append path and upgrades on its next retrain."""
-    spark = emb.sparkSession
-    cents = kmeans_centroids(emb, n_centroids=n_centroids,
-                             n_iters=n_iters, id_col=id_col,
-                             vec_col=vec_col)
-    asg = _ranked_assign(emb, cents, max(int(n_assign), 1),
-                         id_col=id_col, vec_col=vec_col)
-    (asg.select("id", "vec", "assign_rank", "centroid_id")
-        .write.partitionBy("centroid_id").mode("overwrite")
-        .parquet(path + "/members/part=base"))
-    cents.write.mode("overwrite").parquet(path + "/centroids")
-    # count from the WRITTEN parquet, not a second assignment pass over
-    # the corpus; n_at_train counts VECTORS (rank-1 rows), so growth
-    # accounting is width-independent
-    n_at_train = (spark.read.parquet(path + "/members/part=base")
-                  .filter(F.col("assign_rank") == 1).count())
-    spark.createDataFrame(
-        [(int(n_centroids), int(n_at_train), max(int(n_assign), 1))],
-        "n_centroids int, n_at_train long, n_assign int") \
-        .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-
-
-def semantic_index_maybe_retrain(spark, path: str,
-                                 growth_threshold: float = 0.5,
-                                 n_iters: int = 2,
-                                 max_cell_share: float | None = None,
-                                 n_assign: int | None = None) -> bool:
-    """Drift policy for the semantic-dedup index — the twin of
-    `ivf_index_maybe_retrain` (same triggers, same audited rename-aside
-    swap): incremental appends keep the centroid geometry FROZEN, so
-    appended mass degrades cell balance and dup recall over time.
-
-    Metadata-scale triggers (partition-column projections only):
-    - GROWTH: committed VECTORS exceed `growth_threshold` over the
-      count at last train (meta.n_at_train; a pre-r8 meta without it is
-      treated as due). On a v2 index the vector count is footer member
-      rows / min(n_assign, n_centroids) — still metadata-scale, no
-      data-column scan.
-    - IMBALANCE (`max_cell_share`, opt-in): the largest cell holds more
-      than that share of members — the near-identical-append pileup
-      growth can't see.
-
-    On trigger: re-train on ALL COMMITTED members (delta partitions fold
-    into the new part=base), EXCEPT in-flight deltas — part=bN with N
-    beyond the applied marker is in the crash window between a streaming
-    batch's append and its marker; folding it would break that batch's
-    self-exclusion on redelivery (the substring-compact rule). In-flight
-    deltas are RE-ASSIGNED under the new centroids (keeping their names,
-    so redelivery overwrite-by-name still works) INTO THE BUILD
-    generation before it is committed — the new generation is COMPLETE
-    before the single marker-file create publishes it
-    (`fsutil.gen_commit`), so there is no multi-step critical section
-    left: a crash anywhere before the marker leaves the old generation
-    live, and the partial build is collected by the next writer.
-    (`_heal_index_swap` still runs when resolving a LEGACY-layout index
-    — only the pre-gen code could have left a crashed rename-aside swap.)
-
-    `n_assign=None` (default) PRESERVES the index's assignment width
-    across the retrain; an explicit value re-publishes the index at that
-    width (r13 follow-on: a width CHANGE is just semantic_index_write at
-    the new width inside the same generation commit — a policy knob, not
-    a format change; subsequent `semantic_dedup_incremental(n_assign=
-    None)` probes/appends inherit the new width from meta).
-
-    Returns True iff a re-train ran."""
-    from .. import fsutil
-    subs = ("members", "centroids", "meta")
-    base = _index_dir(spark, path, subs)
-    last = fsutil.read_applied_batch(spark, path)
-
-    def _in_flight(p: str) -> bool:
-        return p.startswith("b") and p[1:].isdigit() and int(p[1:]) > last
-
-    part_names = [n.split("=", 1)[1]
-                  for n in fsutil.listdir(spark, base + "/members")
-                  if n.startswith("part=")]
-    keep = sorted(p for p in part_names if _in_flight(p))
-    members = spark.read.parquet(base + "/members")
-    committed = (members.filter(~F.col("part").isin(keep))
-                 if keep else members)
-    n_cent, n_at_train, idx_na = _index_meta(spark, base)
-    if idx_na is None and "assign_rank" in committed.columns:
-        # ranked members but no readable n_assign (meta lost in the
-        # crash window of its overwrite): retrain IS the repair path —
-        # derive the write width from the data so the rebuild preserves
-        # it instead of silently narrowing a v2 index to width 1
-        mx = committed.agg(F.max("assign_rank")).head()[0]
-        idx_na = int(mx) if mx is not None else None
-    # v2 members hold one row per ASSIGNED CELL, exactly
-    # min(n_assign, n_centroids) of them per vector — so the VECTOR
-    # count is footer rows / width, keeping the growth trigger
-    # metadata-scale (no data-column filter scan; r13 review finding).
-    # The trainer below still filters to rank-1 rows, but only runs
-    # when the retrain is already due.
-    width_eff = max(idx_na or 1, 1)
-    if n_cent:
-        width_eff = min(width_eff, int(n_cent))
-    n_now = committed.count() // width_eff
-    due = n_at_train is None
-    if not due:
-        due = (n_now - n_at_train) > growth_threshold * max(n_at_train, 1)
-    if not due and max_cell_share is not None:
-        # imbalance is about PROBE cost, so it counts member ROWS per
-        # cell against total member rows (at v1 that's vectors anyway)
-        st = (committed.groupBy("centroid_id")
-              .agg(F.count("*").alias("n"))
-              .agg(F.max("n").alias("mx"), F.sum("n").alias("tot")).head())
-        due = (st["mx"] or 0) > max_cell_share * max(st["tot"] or 0, 1)
-    if not due:
-        return False
-    if n_cent is None:
-        n_cent = spark.read.parquet(base + "/centroids").count()
-
-    # trainer dedup-by-id: primary (rank-1) rows feed k-means, so every
-    # vector trains exactly once — the SAME trainer input a fresh batch
-    # semantic_index_write over this corpus would see, which keeps the
-    # retrained geometry identical to the batch twin's (the v2 parity
-    # contract). The alternative (keep secondary rows, i.e. 2x-weight
-    # boundary vectors) was rejected: it pulls centroids toward cell
-    # boundaries and diverges from batch-trained centroids forever.
-    primary = (committed.filter(F.col("assign_rank") == 1)
-               if "assign_rank" in committed.columns else committed)
-    emb = primary.select(F.col("id").alias("vec_id"),
-                         F.col("vec").alias("embedding"))
-    # width policy: preserve by default; explicit n_assign re-publishes
-    # at the new width (v1 upgrades to v2 at width 1 when preserving)
-    width = (max(int(n_assign), 1) if n_assign is not None
-             else (idx_na or 1))
-    build = fsutil.gen_begin(spark, path)
-    semantic_index_write(emb, build, n_centroids=int(n_cent),
-                         n_iters=n_iters, n_assign=width)
-    # in-flight deltas re-assign into the BUILD generation (pre-commit):
-    # the published generation is complete the instant the marker exists
-    if keep:
-        cents = spark.read.parquet(build + "/centroids")
-        for p in keep:
-            old_delta = spark.read.parquet(f"{base}/members/part={p}")
-            if "assign_rank" in old_delta.columns:
-                old_delta = old_delta.filter(F.col("assign_rank") == 1)
-            reasg = _ranked_assign(
-                old_delta.select(F.col("id").alias("vec_id"),
-                                 F.col("vec").alias("embedding")),
-                cents, width)
-            (reasg.select("id", "vec", "assign_rank", "centroid_id")
-             .write.partitionBy("centroid_id").mode("overwrite")
-             .parquet(f"{build}/members/part={p}"))
-    fsutil.gen_commit(spark, build)
-    fsutil.gen_gc(spark, path, legacy_subs=subs)
-    return True
-
-
-def semantic_dedup_incremental(spark, new_emb: DataFrame, path: str,
-                               threshold: float = 0.4,
-                               id_col: str = "vec_id",
-                               vec_col: str = "embedding",
-                               append: bool = True,
-                               delta_name: str | None = None,
-                               n_assign: int | None = None) -> DataFrame:
-    """Same-cluster pairs INVOLVING the new batch (new x new plus
-    new x indexed) against the FROZEN index centroids, at per-batch
-    cost: assign the batch (broadcast centroid scan), then one equi-join
-    per direction against the member table, partition-pruned to the
-    batch's cells.
-
-    Appends land in their OWN partition directory
-    members/part=<delta_name> (fresh uuid when None) via mode=overwrite
-    — idempotent under crash-window redelivery — and the incremental
-    SELF-EXCLUDES that partition from its probe, so the returned pairs
-    are computed against the pre-append state with no staging barrier
-    at all (the substring-index delta pattern, simplified: cells have
-    no counts to sum, so exclusion alone is sufficient).
-
-    Multi-assignment (the confinement-recall counter,
-    `semantic_dedup(n_assign=)`) is TWO-SIDED on a v2 index (r13): the
-    index stores one member row per assigned cell (meta.n_assign of
-    them per vector), so a boundary pair is recovered whichever copy
-    straddles the boundary — incremental dup sets equal the batch
-    form's under the same centroids (parity-pinned by test).
-    `n_assign=None` (default) inherits the INDEX width from meta;
-    passing a value widens/narrows only this batch's PROBE. Appends
-    always write at the index width — the format invariant redelivery
-    overwrite-by-name relies on. On a pre-r13 v1 index (no n_assign in
-    meta) appends stay primary-only and rank-less (schema-compatible
-    with its existing members), so an explicit n_assign>1 there is the
-    old ONE-SIDED widening; retrain upgrades the format. Returned
-    pairs are de-duplicated on (id_a, id_b) whenever either side is
-    multi-assigned: two shared cells would otherwise emit the same
-    pair twice."""
-    import uuid
-    base = _index_dir(spark, path, ("members", "centroids", "meta"))
-    cents = spark.read.parquet(base + "/centroids")
-    _, _, idx_na = _index_meta(spark, base)
-    idx_w = idx_na or 1                      # append width (v1 -> 1)
-    probe_w = idx_w if n_assign is None else max(int(n_assign), 1)
-    name = delta_name if delta_name is not None else uuid.uuid4().hex
-    # one assignment at the widest rank needed; feeds three pair joins
-    # + the append write — cut the lineage once
-    asg = _ranked_assign(new_emb, cents,
-                         max(probe_w, idx_w if append else 1),
-                         id_col=id_col, vec_col=vec_col).localCheckpoint()
-    probe_new = asg.filter(F.col("assign_rank") <= probe_w)
-    members = (spark.read.parquet(base + "/members")
-               .filter(F.col("part") != name))       # self-exclusion
-    if idx_na is None and "assign_rank" in members.columns:
-        # ranked (v2) members but no n_assign in meta: meta is lost or
-        # empty. A rank-less append here would be silently dropped by
-        # the retrain's rank-1 trainer filter — fail loudly instead
-        # (r13 review finding; semantic_index_maybe_retrain repairs by
-        # deriving the width from the members themselves).
-        raise ValueError(
-            f"semantic index at {path!r} has ranked (v2) members but "
-            "meta/ lacks n_assign — refusing a rank-less append/probe; "
-            "run semantic_index_maybe_retrain to repair the meta")
-    old_side = members.select("centroid_id", "id", "vec")
-    new_side = probe_new.select("centroid_id", "id", "vec")
-    out = (_cell_pairs(new_side, new_side, False, threshold)
-           .unionAll(_cell_pairs(new_side, old_side, False, threshold))
-           .unionAll(_cell_pairs(old_side, new_side, False, threshold)))
-    if probe_w > 1 or idx_w > 1:
-        out = out.dropDuplicates(["id_a", "id_b"])
-    if append:
-        delta = asg.filter(F.col("assign_rank") <= idx_w)
-        cols = (["id", "vec", "assign_rank", "centroid_id"]
-                if idx_na is not None else ["id", "vec", "centroid_id"])
-        (delta.select(*cols)
-            .write.partitionBy("centroid_id").mode("overwrite")
-            .parquet(f"{base}/members/part={name}"))
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -1690,7 +1274,7 @@ def ivf_sq_probe_topk_batch(spark, path: str, query_df: DataFrame,
     output contract as `sq8_topk_batch`; per-query results identical
     to an `ivf_sq_probe_topk` loop (pinned by test)."""
     from pyspark.sql import Window
-    base = _index_dir(spark, path, ("codes", "floats", "centroids"))
+    base = fsutil.gen_resolve(spark, path)
     cents = spark.read.parquet(base + "/centroids")
     wq = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("centroid_id").asc())
@@ -1765,7 +1349,7 @@ def ivf_sq_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
     Same SINGLE-QUERY contract as `sq8_topk` (one global candidate
     limit); enforced below."""
     _require_single_query(query_df)
-    base = _index_dir(spark, path, ("codes", "floats", "centroids"))
+    base = fsutil.gen_resolve(spark, path)
     cents = spark.read.parquet(base + "/centroids")
     probe = (cents.crossJoin(F.broadcast(query_df))
              .select("centroid_id",
@@ -1798,7 +1382,7 @@ def ivf_sq_index_append(spark, emb_new: DataFrame, path: str,
     full rebuild would produce, and append == rebuild is testable
     bit-for-bit. Cost ∝ the new batch; the existing index is never read
     or rewritten."""
-    base = _index_dir(spark, path, ("codes", "floats", "centroids"))
+    base = fsutil.gen_resolve(spark, path)
     saved = spark.read.parquet(base + "/centroids")
     rows = saved.collect()                       # tiny; pin as a literal
     cents = spark.createDataFrame(rows, saved.schema)
@@ -1826,8 +1410,7 @@ def ivf_sq_index_maybe_retrain(spark, path: str,
     generation, committed by one marker-file create. A pre-meta index
     (built before this policy) is treated as due. Returns True iff a
     re-train ran."""
-    from .. import fsutil
-    base = _index_dir(spark, path, ("codes", "floats", "centroids"))
+    base = fsutil.gen_resolve(spark, path)
     codes = spark.read.parquet(base + "/codes")
     n_now = codes.count()
     try:

@@ -50,23 +50,3 @@ def running_total(df: DataFrame, ts_col: str,
     w = Window.orderBy("window_start_ms").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     return slots.withColumn("running_total", F.sum("n_events").over(w))
-
-
-def max_watermark(df: DataFrame, ts_col: str) -> DataFrame:
-    """OP-AGG-MAXWM — high-watermark of emitted event time
-    ("all events with dropoff time until {ts} have been sent",
-    RePlayer.java:153-157)."""
-    return df.agg(F.max(ts_col).alias("max_ts"))
-
-
-def replay_lag(df: DataFrame, ingestion_ms_col: str, now_ms: int) -> DataFrame:
-    """OP-AGG-LAG — how far behind the pacing schedule the pipeline is:
-    Duration.between(event.ingestionTime, now) (RePlayer.java:136,153-157).
-
-    `now_ms` is a literal (determinism rule); returns max and mean lag.
-    """
-    lag = (F.lit(now_ms) - F.col(ingestion_ms_col)).alias("lag_ms")
-    return df.select(lag).agg(
-        F.max("lag_ms").alias("max_lag_ms"),
-        (F.sum("lag_ms").cast("double") / F.count("*")).alias("avg_lag_ms"),
-    )

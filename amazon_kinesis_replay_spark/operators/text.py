@@ -578,17 +578,6 @@ def quality_score_expr(c: str) -> str:
             f"+ 0.3D * least({stopword_ratio_expr(c)} * 10, 1.0D))")
 
 
-def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document quality features + the `quality_score_expr` score."""
-    return df.selectExpr(
-        id_col,
-        f"{token_count_expr(text_col)} AS n_tokens",
-        f"length({text_col}) AS n_chars_measured",
-        f"{punct_ratio_expr(text_col)} AS punct_ratio",
-        f"{stopword_ratio_expr(text_col)} AS stopword_ratio",
-        f"{quality_score_expr(text_col)} AS quality_score")
-
-
 def repetition_features_exprs(c: str) -> dict[str, str]:
     """Gopher/RefinedWeb-style repetition + structure quality signals,
     all O(doc length) array/regex expressions (no explode, no shuffle —

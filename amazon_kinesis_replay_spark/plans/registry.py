@@ -333,27 +333,17 @@ def _one_minus(col):
     return F.lit(1).cast(_DEC_RATE) - col.cast(_DEC_RATE)
 
 
-def _one_plus(col):
-    return F.lit(1).cast(_DEC_RATE) + col.cast(_DEC_RATE)
-
-
 def _disc_price():
     return _money(F.col("l_extendedprice")) * _one_minus(F.col("l_discount"))
 
 
-def _quant(col, scale: int):
+def _quant_sql(col: str, scale: int) -> str:
     """Floor-quantize an exact-decimal-valued double to integer units
     (cents at scale 2, basis points at scale 4): floor(v*10^s + 0.5) —
     pure IEEE double ops, identical in Spark and DuckDB (the
     similarity._qprod pattern). For inputs whose true value has <= s
-    decimals this equals CAST(v AS DECIMAL(p,s)) scaled by 10^s."""
-    return F.floor(col * (10 ** scale) + F.lit(0.5)).cast("long")
-
-
-def _quant_sql(col: str, scale: int) -> str:
-    """Spark-SQL twin of `_quant` (r13 construction-cost pass): same
-    double ops, same BIGINT result — `* 100` binds an INT literal and
-    `0.5D` a double exactly like the Column form."""
+    decimals this equals CAST(v AS DECIMAL(p,s)) scaled by 10^s. `* 100`
+    binds an INT literal and `0.5D` a double."""
     return f"CAST(floor({col} * {10 ** scale} + 0.5D) AS BIGINT)"
 
 

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ReplayConfig
-from .sinks import SinkStats, chunked, send_with_retry
+from .sinks import SinkStats, send_with_retry
 
 
 def _iso_strings(ts_col):
@@ -568,15 +568,3 @@ def run_replay_stream(events: DataFrame, engine: ReplayEngine,
         writer = writer.trigger(availableNow=True)
     query = writer.start()
     return query
-
-
-def replay_batch_plan(events: DataFrame, cfg: ReplayConfig,
-                      ingestion_start_ms: int) -> DataFrame:
-    """The fully-declarative batch form of the replay dataflow (for plan
-    inspection and oracle checks): order + ingestion time + batch ids.
-    Streaming pacing is the only thing it cannot express."""
-    from ..operators import replay_ops
-    ing = replay_ops.with_ingestion_time(
-        events, "ts", ingestion_start_ms, cfg.speedup_factor)
-    return replay_ops.assign_batches(
-        ing, ["ts"], cfg.max_records_per_request)

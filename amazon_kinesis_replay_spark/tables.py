@@ -129,7 +129,3 @@ def load(spark: SparkSession, sf_dir: str, name: str,
         _DF_MEMO.clear()
     _DF_MEMO[memo_key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}

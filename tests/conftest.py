@@ -35,7 +35,7 @@ SLOW_TESTS = {
     "tests/test_asof_join.py::test_asof_join_randomized_against_twin",
     "tests/test_asof_join.py::test_asof_join_timestamp_tolerance",
     "tests/test_cli.py::test_cli_end_to_end_lz4_sniffed_partitioned",
-    "tests/test_gc_endurance.py::test_gc_endurance_four_families",
+    "tests/test_gc_endurance.py::test_gc_endurance_index_families",
     "tests/test_gen_layout.py::test_gen_gc_retention_keeps_inflight_reader_alive",
     "tests/test_gen_layout.py::test_ivf_retrain_crash_before_commit_keeps_old_generation",
     "tests/test_metrics_and_props.py::test_global_index_is_a_permutation",
@@ -50,16 +50,6 @@ SLOW_TESTS = {
     "tests/test_pipeline_ops.py::test_pq_ann_recall_and_determinism",
     "tests/test_pipeline_ops.py::test_semantic_dedup_multi_assign",
     "tests/test_pipeline_ops.py::test_semantic_dedup_two_level_multi_assign",
-    "tests/test_pipeline_ops.py::test_semantic_incremental_multi_assign",
-    "tests/test_pipeline_ops.py::test_semantic_index_retrain_growth_and_inflight",
-    # added after the r13 profile run (3 gen-commit retrains, measured
-    # 99 s solo / sibling retrain tests run 18-46 s in-suite)
-    "tests/test_pipeline_ops.py::test_semantic_index_retrain_width_change",
-    "tests/test_pipeline_ops.py::test_semantic_index_width_exceeds_centroids",
-    "tests/test_pipeline_ops.py::test_semantic_index_swap_heal_rollback_and_rollforward",
-    "tests/test_pipeline_ops.py::test_semantic_index_v1_backcompat",
-    "tests/test_pipeline_ops.py::test_semantic_index_v2_retrain_trainer_dedup",
-    "tests/test_pipeline_ops.py::test_semantic_index_v2_two_sided_batch_parity",
     "tests/test_retrieval.py::test_index_compact_generation_publish",
     "tests/test_retrieval.py::test_indexed_append_folds_batches",
     "tests/test_sources_and_sinks.py::test_zstd_seeded_mutation_fuzz_never_crashes",

@@ -2,13 +2,13 @@
 
 `fsutil.gen_gc` is crash-tested per-family in test_gen_layout.py; this
 module drives the COMPOSED long-run contract: N cycles of
-append -> retrain/compaction across all four generation-pointer index
-families (IVF x SQ8, semantic, BM25 retrieval, substring windows),
-asserting after EVERY cycle that
+append -> retrain/compaction across the generation-pointer index
+families (IVF x SQ8 and BM25 retrieval), asserting after EVERY cycle
+that
 
 - on-disk committed generations stay retention-bounded (<= keep=2),
 - NOTHING on disk lives outside the live generations except a small
-  fixed set of root aux entries (meta/applied markers): superseded
+  fixed set of root aux entries (meta, folded watermark): superseded
   generations and folded deltas are actually collected, so the
   footprint is (content of <= 2 generations) + O(1) — content growth
   is append-driven by design, never cycle-count-driven (a generation
@@ -31,7 +31,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_kinesis_replay_spark import fsutil
-from amazon_kinesis_replay_spark.operators import dedup, retrieval, similarity
+from amazon_kinesis_replay_spark.operators import retrieval, similarity
 from amazon_kinesis_replay_spark.tables import load
 
 pytestmark = pytest.mark.slow       # ~2.5 min composed lifecycle witness
@@ -47,9 +47,8 @@ def _count_files(root: str) -> int:
 
 
 #: root-level entries that legitimately live OUTSIDE generation dirs:
-#: stats/markers written once (or per batch, bounded by the applied
-#: marker contract), never per-generation.
-_AUX_OK = {"meta", "applied", "folded_max.txt", "_SUCCESS"}
+#: stats/markers written once, never per-generation.
+_AUX_OK = {"meta", "folded_max.txt", "_SUCCESS"}
 
 
 def _stray_entries(path: str) -> list[str]:
@@ -68,25 +67,18 @@ def _committed_gens(spark, path: str) -> list[int]:
             if committed]
 
 
-def test_gc_endurance_four_families(spark, sf_dir, tmp_path):
+def test_gc_endurance_index_families(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     emb200 = emb.limit(200).localCheckpoint()
     docs200 = docs.limit(200).localCheckpoint()
 
     ivf = str(tmp_path / "ivfsq")
-    sem = str(tmp_path / "sem")
     bm = str(tmp_path / "bm25")
-    sub = str(tmp_path / "substr")
     similarity.ivf_sq_index_write(emb200, ivf, n_centroids=4)
-    # n_assign=2: the v2 (multi-row-member) format runs the full
-    # generation lifecycle — retrains must preserve the width (r13)
-    similarity.semantic_index_write(emb200, sem, n_centroids=4,
-                                    n_assign=2)
     retrieval.retrieval_index_write(docs200, bm)
-    dedup.substring_index_write(docs200, sub, window=12)
 
-    paths = {"ivfsq": ivf, "sem": sem, "bm25": bm, "substr": sub}
+    paths = {"ivfsq": ivf, "bm25": bm}
     steady: dict[str, int] = {}
     pinned: dict[str, tuple] = {}      # family -> (gen_dir, lazy reader)
     q_vec = emb200.select(F.col("embedding").alias("q_vec")).limit(1) \
@@ -100,20 +92,11 @@ def test_gc_endurance_four_families(spark, sf_dir, tmp_path):
         new_docs = docs200.limit(20).select(
             (F.col("doc_id") + 10000 * c).alias("doc_id"), "text")
         retrieval.retrieval_index_append(new_docs, bm, batch_id=c)
-        dedup.duplicate_spans_incremental(spark, new_docs, sub,
-                                          delta_name=f"c{c}").count()
-        # the incremental result's read-barrier dataset is consumed —
-        # release it (the documented per-batch lifecycle; a driver that
-        # skips this leaks one staging dataset per batch forever)
-        dedup.clear_staging(spark, sub)
 
         # --- rebuild / compaction (each publishes a new generation) ---
         assert similarity.ivf_sq_index_maybe_retrain(
             spark, ivf, growth_threshold=-1.0)
-        assert similarity.semantic_index_maybe_retrain(
-            spark, sem, growth_threshold=-1.0)
         retrieval.retrieval_index_compact(spark, bm)
-        dedup.substring_index_compact(spark, sub)
 
         for fam, path in paths.items():
             gens = _committed_gens(spark, path)
@@ -129,8 +112,7 @@ def test_gc_endurance_four_families(spark, sf_dir, tmp_path):
                 assert reader.count() == n_rows, (fam, c)
             # pin this cycle's generation for the next one
             gen_dir = fsutil.gen_current(spark, path)
-            subdir = {"ivfsq": "/codes", "sem": "/members",
-                      "bm25": "/postings", "substr": "/wins"}[fam]
+            subdir = {"ivfsq": "/codes", "bm25": "/postings"}[fam]
             reader = spark.read.parquet(gen_dir + subdir)
             pinned[fam] = (gen_dir, reader, reader.count())
 
@@ -169,10 +151,3 @@ def test_gc_endurance_four_families(spark, sf_dir, tmp_path):
     for fam, path in paths.items():
         gens = _committed_gens(spark, path)
         assert max(gens) == N_CYCLES and len(gens) <= 2, (fam, gens)
-
-    # v2 format survived every retrain: width still recorded, members
-    # still one row per assigned cell (2x the vector count)
-    sem_gen = fsutil.gen_current(spark, sem)
-    assert spark.read.parquet(sem_gen + "/meta").head()["n_assign"] == 2
-    m = spark.read.parquet(sem_gen + "/members")
-    assert m.count() == 2 * m.filter("assign_rank = 1").count()

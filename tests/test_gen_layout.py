@@ -1,16 +1,15 @@
 """Generation-pointer index layout (r8): `gen=N/` directories published
-by one atomic `_GEN_COMMITTED` marker create replace every rename-aside
-index swap (IVF retrain, semantic retrain, substring compaction). These
-tests pin the commit primitive itself plus the two crash phases each
-rebuild can have — before the marker (old generation must stay live,
-partial build collected) and after it (idempotent sweep/GC finishes on
-the next resolve) — and the legacy-layout fallback."""
+by one atomic `_GEN_COMMITTED` marker create publish every index rebuild
+(IVF and IVF×SQ8 retrain, BM25 compaction). These tests pin the commit
+primitive itself, the crash before the marker (old generation must stay
+live, partial build collected), GC retention for in-flight readers, and
+the root-layout fallback."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from amazon_kinesis_replay_spark import fsutil
-from amazon_kinesis_replay_spark.operators import dedup, similarity
+from amazon_kinesis_replay_spark.operators import similarity
 from amazon_kinesis_replay_spark.tables import load
 
 
@@ -89,8 +88,7 @@ def test_ivf_retrain_crash_before_commit_keeps_old_generation(
         similarity.ivf_index_maybe_retrain(spark, index,
                                            growth_threshold=0.5)
     # old (legacy) generation still live and complete
-    d = similarity._index_dir(spark, index,
-                              ("vectors", "centroids", "meta"))
+    d = fsutil.gen_resolve(spark, index)
     assert d == index
     assert spark.read.parquet(index + "/meta").head()["n_at_train"] == n0
     assert spark.read.parquet(index + "/vectors").count() == emb.count()
@@ -101,8 +99,7 @@ def test_ivf_retrain_crash_before_commit_keeps_old_generation(
                                               growth_threshold=0.5)
     gens = fsutil.gen_list(spark, index)
     assert [(n, c) for n, _, c in gens] == [(2, True)]
-    d = similarity._index_dir(spark, index,
-                              ("vectors", "centroids", "meta"))
+    d = fsutil.gen_resolve(spark, index)
     assert d.endswith("gen=0000000002")
     assert spark.read.parquet(d + "/meta").head()["n_at_train"] \
         == emb.count()
@@ -111,71 +108,6 @@ def test_ivf_retrain_crash_before_commit_keeps_old_generation(
         F.col("embedding").alias("q_vec"))
     top = similarity.ivf_probe_topk(spark, index, q, k=1).collect()
     assert top[0]["vec_id"] == 0
-
-
-def test_substring_compact_crash_after_commit_sweep_finishes(
-        spark, sf_dir, tmp_path, monkeypatch):
-    """Crash phase 2: the generation committed but the finish-gc sweep
-    did not run. The next READ resolve must carry the unfolded in-flight
-    delta into the committed generation (manifest rule: absent from
-    folded set), drop the superseded legacy root, and answer exactly as
-    an uncrashed compaction would."""
-    W = 12
-    d = load(spark, sf_dir, "documents")
-    b1 = d.filter(F.col("doc_id") % 3 == 0)
-    b2 = d.filter(F.col("doc_id") % 3 == 1)
-    b3 = d.filter(F.col("doc_id") % 3 == 2)
-    path = str(tmp_path / "subcrash")
-    dedup.substring_index_write(b1, path, window=W)
-    spark.createDataFrame([(0,)], "batch_id long").coalesce(1) \
-        .write.mode("overwrite").parquet(path + "/applied")
-    inc = dedup.duplicate_spans_incremental(spark, b2, path, window=W,
-                                            delta_name="b7")
-    want_b2 = {(r["doc_id"], r["span_start"], r["span_end"],
-                r["n_windows"]) for r in inc.collect()}
-    before = {(r["__h"], r["win"]): r["cnt"] for r in
-              spark.read.parquet(path + "/wins")
-              .groupBy("__h", "win")
-              .agg(F.sum("cnt").alias("cnt")).collect()}
-
-    monkeypatch.setattr(dedup, "_wins_finish_gc", lambda s, p: None)
-    dedup.substring_index_compact(spark, path)
-    monkeypatch.undo()
-    # committed generation exists, but legacy root + in-flight delta
-    # were left behind by the "crash"
-    cur = fsutil.gen_current(spark, path)
-    assert cur is not None
-    assert fsutil.exists(spark, path + "/wins/part=b7")
-    assert not fsutil.exists(spark, cur + "/wins/part=b7")
-
-    # the next read resolve finishes the sweep...
-    inc2 = dedup.duplicate_spans_incremental(spark, b3, path, window=W,
-                                             append=False)
-    got_b3 = {(r["doc_id"], r["span_start"], r["span_end"],
-               r["n_windows"]) for r in inc2.collect()}
-    assert not fsutil.exists(spark, path + "/wins")       # legacy dropped
-    parts = {r["part"] for r in spark.read.parquet(cur + "/wins")
-             .select("part").distinct().collect()}
-    assert parts == {"base", "b7"}                        # delta carried
-    after = {(r["__h"], r["win"]): r["cnt"] for r in
-             spark.read.parquet(cur + "/wins")
-             .groupBy("__h", "win")
-             .agg(F.sum("cnt").alias("cnt")).collect()}
-    assert after == before                                # no double-count
-    # ...and the answers match the full-corpus recompute
-    full = dedup.duplicate_spans(d, "doc_id", "text", window=W)
-    expect_b3 = {(r["doc_id"], r["span_start"], r["span_end"],
-                  r["n_windows"])
-                 for r in full.collect() if r["doc_id"] % 3 == 2}
-    full.unpersist()
-    assert got_b3 == expect_b3
-    # crash-window redelivery of b7 still self-excludes correctly
-    again = dedup.duplicate_spans_incremental(spark, b2, path, window=W,
-                                              delta_name="b7")
-    got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-           for r in again.collect()}
-    assert got == want_b2
-    dedup.clear_staging(spark, path)
 
 
 def test_gen_gc_retention_keeps_inflight_reader_alive(

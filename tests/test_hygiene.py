@@ -28,9 +28,6 @@ COLLECT_ALLOWED = {
     "operators/text.py",         # vocab-capped BPE merge aggregate
     "operators/sampling.py",     # len(cuts)-row quantile cut points off
                                  # the <=8k-row sketch (perplexity_buckets)
-    "export.py",                 # verify_shards diffs the MANIFEST —
-                                 # one row per shard FILE (metadata-
-                                 # scale, ~10^5 at 100 TB), never data
     "sources/ndjson.py",         # sniff-fallback SUSPECT PATH list —
                                  # bounded by max_fallback_files (loud
                                  # error beyond), paths not data
@@ -299,11 +296,7 @@ ENTRY_POINTS = ("amazon_kinesis_replay_spark/cli.py",
 
 #: Package modules no entry point imports, each mapped to a one-line
 #: reason it stays.
-REACH_ALLOWED: dict[str, str] = {
-    "amazon_kinesis_replay_spark.export":
-        "training-shard writer and manifest verifier; library API with "
-        "its own tests, no CLI verb yet",
-}
+REACH_ALLOWED: dict[str, str] = {}
 
 
 def _module_file(root: Path, name: str) -> Path | None:
@@ -418,3 +411,75 @@ def test_tool_imports_resolve():
                            if a.name not in defined and _module_file(
                                root, f"{node.module}.{a.name}") is None]
     assert not broken, f"tool imports that do not resolve: {broken}"
+
+
+#: Roots of the function-level walk: the entry points, plus the tools and
+#: tests that call package code directly.
+FUNCTION_ROOTS = ENTRY_POINTS + ("tools/*.py", "tests/*.py")
+
+
+def _names_used(nodes, strings: bool = False) -> set[str]:
+    """Every name the code under `nodes` can reach a definition by: bare
+    and attribute names, imported names and, with `strings`, identifier-
+    shaped string literals (perfbench's tracer wraps package functions
+    by `getattr(module, "name")`). Inside the package a string literal is
+    data — a column or default name — not a reference."""
+    out = set()
+    for top in nodes:
+        for n in ast.walk(top):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.split(".")[-1])
+            elif (strings and isinstance(n, ast.Constant)
+                  and isinstance(n.value, str) and n.value.isidentifier()):
+                out.add(n.value)
+    return out
+
+
+def _unreached_functions(root: Path) -> set[str]:
+    """`module.name` of every top-level package function or class that no
+    reached code refers to by name. Reached code is the whole of each
+    root file outside the package, the module-level code of every
+    package module (decorators, defaults and bases included — they run
+    at import), and the body of every definition already reached."""
+    pkg = root / PKG.name
+    used = set()
+    for pat in FUNCTION_ROOTS:
+        for f in root.glob(pat):
+            if not f.is_relative_to(pkg):
+                used |= _names_used([ast.parse(f.read_text())], True)
+    defs = {}
+    for f in pkg.rglob("*.py"):
+        mod = _module_name(root, f)
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defs[f"{mod}.{node.name}"] = node
+                import_time = list(node.decorator_list)
+                if isinstance(node, ast.ClassDef):
+                    import_time += node.bases + node.keywords
+                else:
+                    import_time += node.args.defaults + [
+                        d for d in node.args.kw_defaults if d is not None]
+                used |= _names_used(import_time)
+            else:
+                used |= _names_used([node])
+    todo = set(defs)
+    while True:
+        hit = {q for q in todo if q.rsplit(".", 1)[1] in used}
+        if not hit:
+            return todo
+        todo -= hit
+        for q in hit:
+            used |= _names_used(defs[q].body)
+
+
+def test_every_package_function_is_reachable():
+    """A top-level function or class that no entry point, tool or test
+    reaches by name is code nothing runs; delete it."""
+    unreached = _unreached_functions(PKG.parent)
+    assert not unreached, (
+        f"package functions nothing refers to: {sorted(unreached)}")

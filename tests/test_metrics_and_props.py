@@ -271,10 +271,8 @@ def test_fsutil_local_roundtrip(spark, tmp_path):
     assert not fsutil.has_committed_output(spark, p)
     (d / "x" / "part-00000").write_bytes(b"data")
     assert fsutil.has_committed_output(spark, p)
-    assert fsutil.rename(spark, p, str(d / "y"))
-    assert not fsutil.exists(spark, p) and fsutil.exists(spark, str(d / "y"))
-    fsutil.delete(spark, str(d / "y"))
-    assert not fsutil.exists(spark, str(d / "y"))
+    fsutil.delete(spark, p)
+    assert not fsutil.exists(spark, p)
     # _SUCCESS alone also marks committed output
     (d / "z").mkdir()
     (d / "z" / "_SUCCESS").write_bytes(b"")

@@ -2241,8 +2241,7 @@ def test_ivf_index_retrain_policy(spark, sf_dir, tmp_path):
     # the retrain published a GENERATION (r8 pointer layout): reads
     # resolve to it, and GC removed the legacy root copies
     from amazon_kinesis_replay_spark import fsutil
-    gen = similarity._index_dir(spark, index,
-                                ("vectors", "centroids", "meta"))
+    gen = fsutil.gen_resolve(spark, index)
     assert gen != index
     assert fsutil.exists(spark, f"{gen}/{fsutil.GEN_MARKER}")
     meta1 = spark.read.parquet(gen + "/meta").head()
@@ -2252,7 +2251,6 @@ def test_ivf_index_retrain_policy(spark, sf_dir, tmp_path):
     import os
     for sub in ("vectors", "centroids", "meta"):
         assert not os.path.exists(f"{index}/{sub}")
-        assert not os.path.exists(f"{index}/{sub}.old")
 
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_vec"))
@@ -2577,148 +2575,6 @@ def test_ivf_pq_index_append(spark, sf_dir, tmp_path):
     assert {r["vec_id"] for r in top[:2]} == {0, 777777}
 
 
-def test_write_training_shards(spark, sf_dir, tmp_path):
-    """Sharded export: split=/__shard= hive directories, PACK-ALIGNED
-    file cuts — every pack lives entirely inside one shard file (the
-    contract maxRecordsPerFile could not honor, r7 review), shard sizes
-    within cap + largest-pack slack, and the round-trip preserves the
-    data exactly."""
-    import glob
-
-    from amazon_kinesis_replay_spark import export as X
-    from amazon_kinesis_replay_spark.operators import text as T
-    d = load(spark, sf_dir, "documents")
-    packed = T.pack_sequences(
-        d.withColumn("__n_tok", F.expr(T.token_count_expr("text"))),
-        "doc_id", "__n_tok", seq_len=256)
-    df = (packed.withColumn(
-        "split", F.when(F.pmod("doc_id", 10) < 8, "train").otherwise("valid"))
-        .select("doc_id", "pack_id", "split"))
-    out = str(tmp_path / "shards")
-    X.write_training_shards(df, out, rows_per_shard=100, n_tasks=4)
-
-    dirs = sorted(p.split("split=")[1] for p in glob.glob(out + "/split=*"))
-    assert dirs == ["train", "valid"]
-    max_pack = (df.groupBy("split", "pack_id").count()
-                .agg(F.max("count")).head()[0])
-    files = glob.glob(out + "/split=*/__shard=*/*.parquet")
-    assert files
-    import pyarrow.parquet as pq
-    for f in files:
-        assert pq.ParquetFile(f).metadata.num_rows <= 100 + max_pack - 1
-    back = spark.read.parquet(out)
-    assert back.count() == df.count()
-    assert (back.select("doc_id", "pack_id", "split").exceptAll(df).count()
-            == 0)
-    # THE contract: every (split, pack) lives in exactly one file
-    per = (back.withColumn("file", F.input_file_name())
-           .groupBy("split", "pack_id")
-           .agg(F.countDistinct("file").alias("nf")))
-    assert per.filter(F.col("nf") > 1).count() == 0
-    # and shards are non-degenerate: fewer files than packs
-    n_packs = df.select("split", "pack_id").distinct().count()
-    assert len(files) < n_packs
-
-
-def test_write_training_shards_deterministic_shuffle(spark, sf_dir,
-                                                     tmp_path):
-    """late r8, seeded export shuffle: pack order is a deterministic
-    hash permutation — same seed reproduces the exact shard assignment,
-    a different seed produces a different one, pack-alignment and the
-    row multiset are preserved, and the layout is genuinely shuffled
-    (shard 0 no longer holds the lowest pack ids). Twin: the expected
-    shard of every pack recomputed from the xxh64 chain + cumsum rule."""
-    import glob
-
-    from amazon_kinesis_replay_spark import export as X
-    from amazon_kinesis_replay_spark.functions.xxh import xxh64_long
-    from amazon_kinesis_replay_spark.operators import text as T
-    d = load(spark, sf_dir, "documents")
-    packed = T.pack_sequences(
-        d.withColumn("__n_tok", F.expr(T.token_count_expr("text"))),
-        "doc_id", "__n_tok", seq_len=256)
-    df = (packed.withColumn("split", F.lit("train"))
-          .select("doc_id", "pack_id", "split"))
-    CAP = 100
-
-    def shard_map(out):
-        back = (spark.read.parquet(out)
-                .select("pack_id", "__shard").distinct().collect())
-        m: dict = {}
-        for r in back:
-            assert r["pack_id"] not in m        # pack-alignment held
-            m[r["pack_id"]] = r["__shard"]
-        return m
-
-    out1 = str(tmp_path / "s1")
-    X.write_training_shards(df, out1, rows_per_shard=CAP, n_tasks=4,
-                            shuffle_seed=7)
-    m1 = shard_map(out1)
-    # python twin: packs ordered by (xxh64 chain, pack_id), exclusive
-    # cumsum of pack sizes, shard = cum div CAP
-    sizes = {r["pack_id"]: r["n"] for r in
-             df.groupBy("pack_id").agg(F.count("*").alias("n")).collect()}
-    mask = (1 << 64) - 1
-    seed = xxh64_long(7) & mask
-
-    def skey(p):
-        v = xxh64_long(p, seed=seed) & mask
-        return v - (1 << 64) if v >= 1 << 63 else v
-
-    order = sorted(sizes, key=lambda p: (skey(p), p))
-    cum, want = 0, {}
-    for p in order:
-        want[p] = cum // CAP
-        cum += sizes[p]
-    assert m1 == want
-    # same seed -> identical; different seed -> different permutation
-    out2 = str(tmp_path / "s2")
-    X.write_training_shards(df, out2, rows_per_shard=CAP, n_tasks=4,
-                            shuffle_seed=7)
-    assert shard_map(out2) == m1
-    out3 = str(tmp_path / "s3")
-    X.write_training_shards(df, out3, rows_per_shard=CAP, n_tasks=4,
-                            shuffle_seed=8)
-    assert shard_map(out3) != m1
-    # genuinely shuffled: shard 0 is not the lowest-pack-id prefix
-    first = sorted(p for p, s in m1.items() if s == 0)
-    assert first != sorted(sizes)[:len(first)]
-    # row multiset preserved
-    back = spark.read.parquet(out1)
-    assert back.count() == df.count()
-    assert back.select("doc_id", "pack_id", "split") \
-        .exceptAll(df).count() == 0
-
-
-def test_exact_dedup_incremental(spark, tmp_path):
-    """Incremental exact dedup: batch rows duplicating an indexed key
-    point at the indexed representative; within-batch dups collapse to
-    the batch min; genuinely new keys flag exactly one is_new row and
-    join the index for the NEXT batch."""
-    base = spark.createDataFrame(
-        [(1, "aa"), (2, "bb"), (3, "aa")], "id long, k string")
-    index = str(tmp_path / "ex")
-    dedup.exact_index_write(base, index, ["k"], "id")
-
-    b1 = spark.createDataFrame(
-        [(10, "bb"), (11, "cc"), (12, "cc"), (13, "dd")],
-        "id long, k string")
-    out = {r["id"]: (r["is_new"], r["keep_id"]) for r in
-           dedup.exact_dedup_incremental(spark, b1, index,
-                                         ["k"], "id").collect()}
-    assert out[10] == (False, 2)      # dup of indexed "bb"
-    assert out[11] == (True, 11)      # new key, representative
-    assert out[12] == (False, 11)     # within-batch dup of "cc"
-    assert out[13] == (True, 13)
-    # next batch sees b1's new keys through the append
-    b2 = spark.createDataFrame([(20, "cc"), (21, "ee")], "id long, k string")
-    out2 = {r["id"]: (r["is_new"], r["keep_id"]) for r in
-            dedup.exact_dedup_incremental(spark, b2, index,
-                                          ["k"], "id").collect()}
-    assert out2[20] == (False, 11)
-    assert out2[21] == (True, 21)
-
-
 def test_url_features_and_blocklist(spark):
     """URL curation signals: counts, distinct lowercased domains, and
     blocklist matching that catches exact domains AND subdomains but
@@ -3039,55 +2895,6 @@ def test_ngram_lm_merge_incremental(spark, sf_dir):
     assert flipped == full
 
 
-def test_tokenize_pack_export_end_to_end(spark, sf_dir, tmp_path):
-    """The full training-data pipeline composes: BPE-tokenize to ids ->
-    pack by REAL token count -> shard-export with packs clustered ->
-    read back. Round trip must preserve every document's ids exactly,
-    pack assignment must match the exclusive-cumsum contract on the BPE
-    counts, and each pack must live entirely inside one shard file."""
-    from amazon_kinesis_replay_spark.export import write_training_shards
-    from amazon_kinesis_replay_spark.operators import text as T
-    from amazon_kinesis_replay_spark.tables import load
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    merges = T.bpe_train(docs, "text", n_merges=48)
-    vocab = T.bpe_vocab(docs, "text", merges)
-    enc = T.bpe_encode(docs, "text", merges, vocab=vocab)
-    packed = T.pack_sequences(enc, "doc_id", "bpe_tokens_count",
-                              seq_len=256)
-    staged = packed.withColumn(
-        "split", F.when(F.pmod("doc_id", 10) < 8, "train")
-        .otherwise("valid")).select(
-        "doc_id", "split", "pack_id", "bpe_tokens_count", "bpe_tokens_ids")
-    out = str(tmp_path / "shards")
-    write_training_shards(staged, out, rows_per_shard=120)
-
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    # ids round-trip exactly (join on doc_id, compare arrays)
-    orig = enc.select("doc_id", F.col("bpe_tokens_ids").alias("want"))
-    diff = (back.join(orig, "doc_id")
-            .filter(F.col("bpe_tokens_ids") != F.col("want")).count())
-    assert diff == 0
-    # pack ids equal the exclusive running cumsum of counts in doc order
-    rows = (enc.select("doc_id", "bpe_tokens_count")
-            .orderBy("doc_id").collect())
-    run = 0
-    want_pack = {}
-    for r in rows:
-        want_pack[r["doc_id"]] = run // 256
-        run += r["bpe_tokens_count"]
-    got_pack = {r["doc_id"]: r["pack_id"] for r in
-                back.select("doc_id", "pack_id").collect()}
-    assert got_pack == want_pack
-    # each (split, pack) lives entirely inside ONE shard file
-    import pyspark.sql.functions as SF
-    f = (back.withColumn("file", SF.input_file_name())
-         .groupBy("split", "pack_id")
-         .agg(SF.countDistinct("file").alias("nf")))
-    assert f.filter(SF.col("nf") > 1).count() == 0
-
-
 def test_resize_images(spark):
     """Nearest-neighbor resize: exact expected raster for an integer
     downscale (4x4 -> 2x2 checkerboard picks the top-left of each
@@ -3260,26 +3067,6 @@ def test_duplicate_spans_crafted(spark):
     assert got == {(1, 0, 6, 3), (2, 2, 8, 3), (4, 0, 12, 9)}
 
 
-def test_remove_duplicate_spans_crafted(spark):
-    """Span removal drops exactly the span tokens (ALL occurrences) and
-    passes span-free docs through in normalized token form."""
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g h"),
-         (2, "x y a b c d e f q r"),
-         (3, "  P q R s t u  "),
-         (4, "m n o p m n o p m n o p")],
-        "doc_id long, text string")
-    spans = dedup.duplicate_spans(df, "doc_id", "text", window=4)
-    clean = {r["doc_id"]: (r["clean_text"], r["n_removed_tokens"])
-             for r in dedup.remove_duplicate_spans(
-                 df, spans, "doc_id", "text").collect()}
-    spans.unpersist()
-    assert clean[1] == ("g h", 6)
-    assert clean[2] == ("x y q r", 6)
-    assert clean[3] == ("p q r s t u", 0)    # normalized, untouched
-    assert clean[4] == ("", 12)
-
-
 def test_duplicate_spans_matches_python_reference(spark, sf_dir):
     """Fixture corpus vs an independent brute-force recompute (dict of
     window-string -> occurrence count, then island merge per doc)."""
@@ -3373,321 +3160,6 @@ def test_semantic_dedup_two_level_train_mod_covers(spark, sf_dir):
     out = similarity.semantic_dedup_two_level(
         emb, threshold=0.4, n_coarse=4, n_fine=4, n_iters=1, train_mod=7)
     assert out.count() == emb.count()
-
-
-def test_duplicate_spans_incremental_matches_batch(spark, sf_dir, tmp_path):
-    """Incremental spans for a new batch == the full-corpus batch run
-    restricted to the batch's docs; appended deltas then catch a
-    follow-up duplicate of batch text."""
-    W = 12
-    d = load(spark, sf_dir, "documents")
-    b1 = d.filter(F.col("doc_id") % 2 == 0)
-    b2 = d.filter(F.col("doc_id") % 2 == 1)
-    path = str(tmp_path / "subidx")
-    dedup.substring_index_write(b1, path, window=W)
-    inc = dedup.duplicate_spans_incremental(spark, b2, path, window=W)
-    got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-           for r in inc.collect()}
-    full = dedup.duplicate_spans(d, "doc_id", "text", window=W)
-    expect = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-              for r in full.collect() if r["doc_id"] % 2 == 1}
-    full.unpersist()
-    assert got == expect
-    # a doc repeating indexed batch-2 text is fully flagged via the
-    # appended deltas (pick a long-enough b2 doc)
-    src = b2.filter(F.size(F.split(F.trim(F.lower("text")), r"\s+")) >= W) \
-        .orderBy("doc_id").limit(1).collect()[0]
-    b3 = spark.createDataFrame([(999999, src["text"])],
-                               "doc_id long, text string")
-    inc3 = dedup.duplicate_spans_incremental(spark, b3, path, window=W)
-    n_tok = len(src["text"].strip().lower().split())
-    assert [tuple(r) for r in inc3.collect()] == \
-        [(999999, 0, n_tok, n_tok - W + 1)]
-    dedup.clear_staging(spark, path)
-
-
-def test_substring_index_compact(spark, sf_dir, tmp_path):
-    """Compaction folds base + deltas into one partition with identical
-    summed counts; incremental answers are unchanged afterwards."""
-    W = 12
-    d = load(spark, sf_dir, "documents")
-    b1 = d.filter(F.col("doc_id") % 3 == 0)
-    b2 = d.filter(F.col("doc_id") % 3 == 1)
-    b3 = d.filter(F.col("doc_id") % 3 == 2)
-    path = str(tmp_path / "subcompact")
-    dedup.substring_index_write(b1, path, window=W)
-    dedup.duplicate_spans_incremental(spark, b2, path, window=W).count()
-    before = {(r["__h"], r["win"]): r["cnt"] for r in
-              spark.read.parquet(path + "/wins")
-              .groupBy("__h", "win")
-              .agg(F.sum("cnt").alias("cnt")).collect()}
-    dedup.substring_index_compact(spark, path)
-    # the compaction published a GENERATION (r8 pointer layout): reads
-    # resolve into it, and the legacy root wins/ is gone
-    from amazon_kinesis_replay_spark import fsutil
-    gen = dedup._wins_dir(spark, path)
-    assert gen != path
-    assert not fsutil.exists(spark, path + "/wins")
-    after_parts = spark.read.parquet(gen + "/wins") \
-        .select("part").distinct().collect()
-    assert [r["part"] for r in after_parts] == ["base"]
-    after = {(r["__h"], r["win"]): r["cnt"] for r in
-             spark.read.parquet(gen + "/wins").collect()}
-    assert after == before
-    inc = dedup.duplicate_spans_incremental(spark, b3, path, window=W)
-    got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-           for r in inc.collect()}
-    full = dedup.duplicate_spans(d, "doc_id", "text", window=W)
-    expect = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-              for r in full.collect() if r["doc_id"] % 3 == 2}
-    assert got == expect
-    dedup.clear_staging(spark, path)
-
-
-def test_substring_compact_preserves_inflight_deltas(spark, sf_dir,
-                                                     tmp_path):
-    """A delta beyond the applied marker (the delta-write/marker crash
-    window) must NOT be folded — folding it would defeat that batch's
-    self-exclusion on redelivery. The carried-over delta plus the
-    compacted base must replay to exactly the original answer."""
-    W = 12
-    d = load(spark, sf_dir, "documents")
-    b1 = d.filter(F.col("doc_id") % 3 == 0)
-    b2 = d.filter(F.col("doc_id") % 3 == 1)
-    path = str(tmp_path / "subinflight")
-    dedup.substring_index_write(b1, path, window=W)
-    # applied marker says batch 0 is recorded; b7 is IN-FLIGHT
-    spark.createDataFrame([(0,)], "batch_id long").coalesce(1) \
-        .write.mode("overwrite").parquet(path + "/applied")
-    inc = dedup.duplicate_spans_incremental(spark, b2, path, window=W,
-                                            delta_name="b7")
-    want = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-            for r in inc.collect()}
-    dedup.substring_index_compact(spark, path)
-    gen = dedup._wins_dir(spark, path)
-    parts = {r["part"] for r in spark.read.parquet(gen + "/wins")
-             .select("part").distinct().collect()}
-    assert parts == {"base", "b7"}       # in-flight delta carried over
-    # crash-window redelivery: append again under the same name —
-    # self-exclusion must still work against the compacted base
-    again = dedup.duplicate_spans_incremental(spark, b2, path, window=W,
-                                              delta_name="b7")
-    got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-           for r in again.collect()}
-    assert got == want
-    dedup.clear_staging(spark, path)
-
-
-def test_substring_compact_crash_heal_rename_aside(spark, sf_dir,
-                                                   tmp_path):
-    """r8 advice item: a compact that crashes between the wins->wins.old
-    rename and the staging swap leaves NO live wins/. Both the
-    incremental read path and a compact re-run must auto-heal (rename
-    wins.old back) instead of failing / silently no-op'ing."""
-    from amazon_kinesis_replay_spark import fsutil
-    W = 12
-    d = load(spark, sf_dir, "documents")
-    b1 = d.filter(F.col("doc_id") % 3 == 0)
-    b2 = d.filter(F.col("doc_id") % 3 == 1)
-    path = str(tmp_path / "subheal1")
-    dedup.substring_index_write(b1, path, window=W)
-    want_idx = {(r["__h"], r["win"]): r["cnt"] for r in
-                spark.read.parquet(path + "/wins")
-                .groupBy("__h", "win")
-                .agg(F.sum("cnt").alias("cnt")).collect()}
-    # simulate the crash window: wins moved aside, no staging swap
-    assert fsutil.rename(spark, path + "/wins", path + "/wins.old")
-    assert not fsutil.exists(spark, path + "/wins")
-    # the incremental read path heals and answers correctly
-    inc = dedup.duplicate_spans_incremental(spark, b2, path, window=W,
-                                            append=False)
-    got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-           for r in inc.collect()}
-    full = dedup.duplicate_spans(d.filter(F.col("doc_id") % 3 != 2),
-                                 "doc_id", "text", window=W)
-    expect = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-              for r in full.collect() if r["doc_id"] % 3 == 1}
-    full.unpersist()
-    assert got == expect
-    assert not fsutil.exists(spark, path + "/wins.old")
-    after = {(r["__h"], r["win"]): r["cnt"] for r in
-             spark.read.parquet(path + "/wins")
-             .groupBy("__h", "win")
-             .agg(F.sum("cnt").alias("cnt")).collect()}
-    assert after == want_idx
-    dedup.clear_staging(spark, path)
-
-
-def test_substring_compact_crash_heal_carry_over(spark, sf_dir, tmp_path):
-    """r8 advice item, window 2: a crash AFTER the staging swap but
-    before the carry-over finished leaves wins (new gen + manifest) and
-    wins.old (folded parts + unfolded in-flight deltas). The heal must
-    move ONLY the unfolded deltas in (no double-count) and drop
-    wins.old; without a manifest it must leave everything untouched."""
-    from amazon_kinesis_replay_spark import fsutil
-    from amazon_kinesis_replay_spark.operators.dedup import (
-        _FOLDED_MANIFEST, _heal_wins)
-    W = 12
-    d = load(spark, sf_dir, "documents")
-    b1 = d.filter(F.col("doc_id") % 3 == 0)
-    b2 = d.filter(F.col("doc_id") % 3 == 1)
-    path = str(tmp_path / "subheal2")
-    dedup.substring_index_write(b1, path, window=W)
-    spark.createDataFrame([(0,)], "batch_id long").coalesce(1) \
-        .write.mode("overwrite").parquet(path + "/applied")
-    dedup.duplicate_spans_incremental(
-        spark, b2, path, window=W, delta_name="b7").count()
-    before = {(r["__h"], r["win"]): r["cnt"] for r in
-              spark.read.parquet(path + "/wins")
-              .groupBy("__h", "win")
-              .agg(F.sum("cnt").alias("cnt")).collect()}
-    # construct the mid-carry-over state by hand: compact folds ONLY
-    # part=base (b7 is in-flight), then "crashes" before moving b7
-    summed = (spark.read.parquet(path + "/wins/part=base")
-              .groupBy("__h", "win").agg(F.sum("cnt").alias("cnt"))
-              .select("win", "cnt", "__h"))
-    staging = path + "/wins.compact"
-    summed.write.parquet(staging + "/part=base")
-    fsutil.write_text(spark, f"{staging}/{_FOLDED_MANIFEST}", "part=base")
-    assert fsutil.rename(spark, path + "/wins", path + "/wins.old")
-    assert fsutil.rename(spark, staging, path + "/wins")
-    # heal finishes the carry-over: b7 moved, folded part NOT re-added
-    _heal_wins(spark, path)
-    assert not fsutil.exists(spark, path + "/wins.old")
-    parts = {r["part"] for r in spark.read.parquet(path + "/wins")
-             .select("part").distinct().collect()}
-    assert parts == {"base", "b7"}
-    after = {(r["__h"], r["win"]): r["cnt"] for r in
-             spark.read.parquet(path + "/wins")
-             .groupBy("__h", "win")
-             .agg(F.sum("cnt").alias("cnt")).collect()}
-    assert after == before
-    # manifest-absent ambiguity: heal must refuse to touch wins.old
-    (spark.read.parquet(path + "/wins/part=b7").drop("part")
-     .write.parquet(path + "/wins.old/part=b7"))   # creates parent dirs
-    fsutil.delete(spark, path + "/wins/part=b7")
-    fsutil.delete(spark, f"{path}/wins/{_FOLDED_MANIFEST}")
-    _heal_wins(spark, path)
-    assert fsutil.exists(spark, path + "/wins.old/part=b7")
-    # ...and compact must REFUSE rather than delete the preserved
-    # wins.old (its pre-swap cleanup would lose the stranded delta —
-    # r8 review finding)
-    with pytest.raises(RuntimeError, match="wins.old"):
-        dedup.substring_index_compact(spark, path)
-    assert fsutil.exists(spark, path + "/wins.old/part=b7")
-    dedup.clear_staging(spark, path)
-
-
-def test_semantic_index_retrain_growth_and_inflight(spark, sf_dir,
-                                                    tmp_path):
-    """r8, semantic index drift policy: growth past the threshold
-    triggers a re-train that folds COMMITTED deltas into the new
-    part=base but carries IN-FLIGHT deltas (beyond the applied marker)
-    over re-assigned under the new centroids — preserving both the
-    overwrite-by-name redelivery contract and geometry consistency."""
-    from amazon_kinesis_replay_spark import fsutil
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    b0 = emb.filter(F.col("vec_id") < 200)
-    b1 = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 350))
-    b2 = emb.filter(F.col("vec_id") >= 350)
-    path = str(tmp_path / "semidx")
-    similarity.semantic_index_write(b0, path, n_centroids=8, n_iters=1)
-    similarity.semantic_dedup_incremental(
-        spark, b1, path, 0.4, append=True, delta_name="b1").count()
-    spark.createDataFrame([(1,)], "batch_id long").coalesce(1) \
-        .write.mode("overwrite").parquet(path + "/applied")   # b1 committed
-    similarity.semantic_dedup_incremental(
-        spark, b2, path, 0.4, append=True, delta_name="b2").count()
-    # b2 is IN-FLIGHT (marker still 1)
-
-    # below threshold: 150 committed new members vs 200 at train
-    assert not similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=0.9)
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=0.5)
-
-    # the retrain published a GENERATION (r8 pointer layout); legacy
-    # root copies are gone and reads resolve into it
-    gen = similarity._index_dir(spark, path,
-                                ("members", "centroids", "meta"))
-    assert gen != path
-    parts = {n.split("=", 1)[1]
-             for n in fsutil.listdir(spark, gen + "/members")
-             if n.startswith("part=")}
-    assert parts == {"base", "b2"}       # committed folded, in-flight kept
-    base = spark.read.parquet(gen + "/members/part=base")
-    assert base.count() == 350
-    delta = spark.read.parquet(gen + "/members/part=b2")
-    assert delta.count() == emb.count() - 350
-    meta = spark.read.parquet(gen + "/meta").head()
-    assert meta["n_at_train"] == 350
-    # every member's cell matches an assignment under the NEW centroids
-    cents = spark.read.parquet(gen + "/centroids")
-    fresh = similarity.ivf_assign(
-        spark.read.parquet(gen + "/members")
-        .select(F.col("id").alias("vec_id"), F.col("vec").alias("embedding")),
-        centroids=cents)
-    stored = {(r["id"], r["centroid_id"]) for r in
-              spark.read.parquet(gen + "/members")
-              .select("id", "centroid_id").collect()}
-    assert {(r["id"], r["centroid_id"]) for r in fresh.collect()} == stored
-    # immediately after a re-train nothing is due
-    assert not similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=0.5)
-    assert not fsutil.exists(spark, path + "/members")
-    assert not fsutil.exists(spark, path + "/members.old")
-
-
-def test_semantic_index_swap_heal_rollback_and_rollforward(spark, sf_dir,
-                                                           tmp_path):
-    """r8 review finding: a retrain-swap crash must be auto-healed before
-    any read — especially the stream processor's bootstrap probe, which
-    would otherwise silently re-bootstrap over the recoverable history.
-    Mid-aside crash (partial .old, no staging rename ran) rolls BACK to
-    the old generation; post-aside crash (complete .old) rolls FORWARD
-    to the staged one."""
-    from amazon_kinesis_replay_spark import fsutil
-    from amazon_kinesis_replay_spark.operators.similarity import (
-        _RETRAIN_STAGING, _heal_index_swap)
-    subs = ("members", "centroids", "meta")
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    b0 = emb.filter(F.col("vec_id") < 300)
-    path = str(tmp_path / "semheal")
-    staging = path + _RETRAIN_STAGING
-    similarity.semantic_index_write(b0, path, n_centroids=4, n_iters=1)
-    n_old = spark.read.parquet(path + "/members").count()
-
-    # staged new generation (different corpus so the two are tellable)
-    similarity.semantic_index_write(emb, staging, n_centroids=4, n_iters=1)
-    n_new = spark.read.parquet(staging + "/members").count()
-    assert n_new != n_old
-
-    # mid-aside crash: members+centroids moved aside, meta still live
-    assert fsutil.rename(spark, path + "/members", path + "/members.old")
-    assert fsutil.rename(spark, path + "/centroids",
-                         path + "/centroids.old")
-    _heal_index_swap(spark, path, subs)
-    assert spark.read.parquet(path + "/members").count() == n_old
-    assert not fsutil.exists(spark, path + "/members.old")
-    assert not fsutil.exists(spark, staging)      # staged build discarded
-
-    # post-aside crash: ALL subs aside, staging complete, zero renamed in
-    similarity.semantic_index_write(emb, staging, n_centroids=4, n_iters=1)
-    for s in subs:
-        assert fsutil.rename(spark, f"{path}/{s}", f"{path}/{s}.old")
-    _heal_index_swap(spark, path, subs)
-    assert spark.read.parquet(path + "/members").count() == n_new
-    assert not fsutil.exists(spark, path + "/members.old")
-    assert not fsutil.exists(spark, staging)
-
-    # the incremental read path heals too (no silent bootstrap window)
-    similarity.semantic_index_write(emb, staging, n_centroids=4, n_iters=1)
-    for s in subs:
-        assert fsutil.rename(spark, f"{path}/{s}", f"{path}/{s}.old")
-    out = similarity.semantic_dedup_incremental(
-        spark, b0.limit(10), path, 0.4, append=False)
-    out.count()                                   # read succeeds post-heal
-    assert fsutil.exists(spark, path + "/meta")
 
 
 def _wav_bytes_fmt(rate, channels, fmt_code, bits, body,
@@ -4910,341 +4382,6 @@ def test_semantic_dedup_two_level_multi_assign(spark, sf_dir):
     assert c1 == c2
 
 
-def test_semantic_incremental_multi_assign(spark, sf_dir, tmp_path):
-    """n_assign on the INCREMENTAL face (r12): a new vector whose
-    near-dup sits in a DIFFERENT cell of the frozen index is invisible
-    to the primary-cell probe and recovered when the new side also
-    probes its second-nearest cell. The member index stays
-    primary-only (one-sided widening — the docstring states the
-    two-sided limitation), appends are format-identical, and returned
-    pairs carry no (id_a, id_b) duplicates."""
-    # centroid seeds = ids 0,1 (n_iters=0): cells at +x and +y. The
-    # indexed near-dup (3) lands in cell y; the new vector (2) lands in
-    # cell x with cell y second-nearest. cos(2,3) ~ 0.9991.
-    idx_rows = [(0, [1.0, 0.0, 0.0, 0.0]),
-                (1, [0.0, 1.0, 0.0, 0.0]),
-                (3, [0.69, 0.72, 0.0, 0.0])]
-    idx = spark.createDataFrame(idx_rows,
-                                "vec_id long, embedding array<float>")
-    new = spark.createDataFrame([(2, [0.72, 0.69, 0.0, 0.0])],
-                                "vec_id long, embedding array<float>")
-    path = str(tmp_path / "semidx-ma")
-    similarity.semantic_index_write(idx, path, n_centroids=2, n_iters=0)
-
-    p1 = similarity.semantic_dedup_incremental(
-        spark, new, path, threshold=0.99, append=False)
-    assert p1.count() == 0                    # cross-boundary: invisible
-
-    p2 = similarity.semantic_dedup_incremental(
-        spark, new, path, threshold=0.99, append=False, n_assign=2)
-    assert [(r["id_a"], r["id_b"]) for r in p2.collect()] == [(2, 3)]
-
-    # append under n_assign=2 stays PRIMARY-only: one member row for
-    # the new vector, in its nearest cell (x = the id-0 seed's cell)
-    similarity.semantic_dedup_incremental(
-        spark, new, path, threshold=0.99, append=True,
-        delta_name="b1", n_assign=2)
-    gen = similarity._index_dir(spark, path,
-                                ("members", "centroids", "meta"))
-    delta = spark.read.parquet(gen + "/members/part=b1").collect()
-    assert len(delta) == 1 and delta[0]["id"] == 2
-    prim = {r["id"]: r["centroid_id"] for r in similarity.ivf_assign(
-        new, centroids=spark.read.parquet(gen + "/centroids")).collect()}
-    assert delta[0]["centroid_id"] == prim[2]
-
-    # fixture: widened probe is a strict superset generator, duplicate-
-    # free, over a half-corpus index probed by the other half
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    half = emb.filter("vec_id % 2 = 0")
-    probe = emb.filter("vec_id % 2 = 1")
-    fpath = str(tmp_path / "semidx-fix")
-    similarity.semantic_index_write(half, fpath, n_centroids=8, n_iters=1)
-    s1 = {(r["id_a"], r["id_b"]) for r in
-          similarity.semantic_dedup_incremental(
-              spark, probe, fpath, threshold=0.4, append=False).collect()}
-    rows2 = similarity.semantic_dedup_incremental(
-        spark, probe, fpath, threshold=0.4, append=False,
-        n_assign=2).collect()
-    s2 = {(r["id_a"], r["id_b"]) for r in rows2}
-    assert len(rows2) == len(s2)              # dropDuplicates held
-    assert s1 <= s2
-
-
-def _v2_pair_set(df) -> set:
-    return {(r["id_a"], r["id_b"]) for r in df.collect()}
-
-
-def _batch_pair_set(emb, cents, n_assign, threshold) -> set:
-    """Ground-truth pair set of the batch form: widened assignment,
-    same-cell pairs, de-duplicated — what semantic_dedup(n_assign=)
-    marks dups from."""
-    multi = similarity._ranked_assign(emb, cents, n_assign)
-    side = multi.select("centroid_id", "id", "vec")
-    return _v2_pair_set(
-        similarity._cell_pairs(side, side, False,
-                               threshold).dropDuplicates(["id_a", "id_b"]))
-
-
-def test_semantic_index_v2_two_sided_batch_parity(spark, sf_dir,
-                                                  tmp_path):
-    """r13 index-format v2 (the r12-verdict top item): with multi-row
-    members (one row per assigned cell, n_assign in meta), incremental
-    dedup is TWO-SIDED — across the index build, two appends, and one
-    retrain, the union of incremental pair sets equals the batch
-    `semantic_dedup(n_assign=2)` pair/dup sets under the same frozen
-    centroids. The r12 one-sided form lost boundary pairs between two
-    already-indexed vectors; this pins that they are now visible."""
-    from amazon_kinesis_replay_spark import fsutil
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    a = emb.filter(F.col("vec_id") < 200)
-    b = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 350))
-    c = emb.filter(F.col("vec_id") >= 350)
-    full = emb
-    path = str(tmp_path / "semv2")
-    similarity.semantic_index_write(a, path, n_centroids=8, n_iters=1,
-                                    n_assign=2)
-    gen = similarity._index_dir(spark, path,
-                                ("members", "centroids", "meta"))
-    meta = spark.read.parquet(gen + "/meta").head()
-    assert meta["n_assign"] == 2
-    members = spark.read.parquet(gen + "/members")
-    n_a = a.count()
-    assert meta["n_at_train"] == n_a          # vectors, not member rows
-    assert members.count() == 2 * n_a         # one row per assigned cell
-    assert members.filter("assign_rank = 1").count() == n_a
-
-    # build-time pairs (what the streaming bootstrap emits), append b1/b2
-    side = members.select("centroid_id", "id", "vec")
-    p0 = _v2_pair_set(similarity._cell_pairs(
-        side, side, False, 0.4)
-        .dropDuplicates(["id_a", "id_b"]))
-    p1 = _v2_pair_set(similarity.semantic_dedup_incremental(
-        spark, b, path, threshold=0.4, append=True, delta_name="b1"))
-    spark.createDataFrame([(1,)], "batch_id long").coalesce(1) \
-        .write.mode("overwrite").parquet(path + "/applied")
-    p2 = _v2_pair_set(similarity.semantic_dedup_incremental(
-        spark, c, path, threshold=0.4, append=True, delta_name="b2"))
-
-    # appends carry the index width: 2 rows per appended vector
-    d1 = spark.read.parquet(gen + "/members/part=b1")
-    assert d1.count() == 2 * b.count()
-    assert d1.filter("assign_rank = 1").count() == b.count()
-
-    # batch twin under the SAME frozen centroids: pair sets AND dup sets
-    cents = spark.read.parquet(gen + "/centroids")
-    assert (p0 | p1 | p2) == _batch_pair_set(full, cents, 2, 0.4)
-    batch_dups = {r["id"] for r in similarity.semantic_dedup(
-        full, threshold=0.4, centroids=cents, n_assign=2)
-        .filter("is_dup").collect()}
-    assert {ib for _, ib in (p0 | p1 | p2)} == batch_dups
-
-    # ---- retrain (everything committed) preserves width + parity ----
-    spark.createDataFrame([(2,)], "batch_id long").coalesce(1) \
-        .write.mode("overwrite").parquet(path + "/applied")
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=0.5)
-    gen2 = similarity._index_dir(spark, path,
-                                 ("members", "centroids", "meta"))
-    meta2 = spark.read.parquet(gen2 + "/meta").head()
-    n_full = full.count()
-    assert meta2["n_assign"] == 2             # width survives the retrain
-    assert meta2["n_at_train"] == n_full      # growth counts vectors
-    m2 = spark.read.parquet(gen2 + "/members")
-    assert m2.count() == 2 * n_full
-    assert m2.filter("assign_rank = 1").count() == n_full
-
-    # a post-retrain probe batch sees exactly the batch twin's pairs
-    # under the NEW centroids (two-sided through the rebuilt members)
-    d = emb.limit(50).select((F.col("vec_id") + 10000).alias("vec_id"),
-                             "embedding")
-    pd_ = _v2_pair_set(similarity.semantic_dedup_incremental(
-        spark, d, path, threshold=0.4, append=False))
-    cents2 = spark.read.parquet(gen2 + "/centroids")
-    want = {(ia, ib) for ia, ib in
-            _batch_pair_set(full.unionByName(d), cents2, 2, 0.4)
-            if ia >= 10000 or ib >= 10000}
-    assert pd_ == want and want               # non-trivial: dups planted
-
-
-def test_semantic_index_v2_retrain_trainer_dedup(spark, tmp_path):
-    """The v2 retrain trainer de-duplicates by id (primary rows only):
-    a boundary vector indexed in two cells must train k-means ONCE —
-    the double-count alternative (keep secondary rows ≈ 2x boundary
-    weighting) would pull centroids toward cell boundaries and diverge
-    from what a fresh batch build over the same corpus trains. Crafted
-    so the two policies differ by ~0.1 in centroid space, far above
-    float noise."""
-    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]),
-            (2, [0.72, 0.69, 0.0, 0.0]), (3, [0.69, 0.72, 0.0, 0.0])]
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<float>")
-    path = str(tmp_path / "semtrain")
-    similarity.semantic_index_write(emb, path, n_centroids=2, n_iters=1,
-                                    n_assign=2)
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=-1.0, n_iters=1)
-    gen = similarity._index_dir(spark, path,
-                                ("members", "centroids", "meta"))
-    got = {r["centroid_id"]: r["c_vec"] for r in
-           spark.read.parquet(gen + "/centroids").collect()}
-    want = {r["centroid_id"]: r["c_vec"] for r in
-            similarity.kmeans_centroids(emb, n_centroids=2,
-                                        n_iters=1).collect()}
-    assert got.keys() == want.keys()
-    for cid, vec in want.items():
-        assert all(abs(x - y) < 1e-6 for x, y in zip(got[cid], vec)), cid
-
-
-def test_semantic_index_retrain_width_change(spark, tmp_path):
-    """r13 follow-on (ROADMAP candidate): `semantic_index_maybe_retrain(
-    n_assign=)` re-publishes the index at a NEW assignment width inside
-    the same generation commit — a policy knob on the v2 format, not a
-    format change. Default (None) preserves width; after a change the
-    default-width incremental probe inherits the new width from meta and
-    stays equal to the batch twin at that width."""
-    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]),
-            (2, [0.72, 0.69, 0.0, 0.0]), (3, [0.69, 0.72, 0.0, 0.0])]
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<float>")
-    probe = spark.createDataFrame([(12, [0.71, 0.70, 0.0, 0.0])],
-                                  "vec_id long, embedding array<float>")
-    path = str(tmp_path / "semwidth")
-    subs = ("members", "centroids", "meta")
-    similarity.semantic_index_write(emb, path, n_centroids=2, n_iters=1,
-                                    n_assign=1)
-
-    # widen 1 -> 2 at retrain
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=-1.0, n_iters=1, n_assign=2)
-    gen = similarity._index_dir(spark, path, subs)
-    meta = spark.read.parquet(gen + "/meta").head()
-    assert meta["n_assign"] == 2
-    assert meta["n_at_train"] == 4            # vectors, not member rows
-    m = spark.read.parquet(gen + "/members")
-    assert m.count() == 8 and m.filter("assign_rank = 1").count() == 4
-    # default probe inherits width 2: equal to the batch twin, and the
-    # boundary-straddling probe reaches BOTH near-identical vectors
-    cents = spark.read.parquet(gen + "/centroids")
-    p2 = _v2_pair_set(similarity.semantic_dedup_incremental(
-        spark, probe, path, threshold=0.99, append=False))
-    want2 = {(ia, ib) for ia, ib in
-             _batch_pair_set(emb.unionByName(probe), cents, 2, 0.99)
-             if ia == 12 or ib == 12}
-    assert p2 == want2 and {(2, 12), (3, 12)} <= p2
-
-    # default retrain PRESERVES the changed width
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=-1.0, n_iters=1)
-    gen = similarity._index_dir(spark, path, subs)
-    assert spark.read.parquet(gen + "/meta").head()["n_assign"] == 2
-
-    # narrow 2 -> 1: member rows collapse to one per vector and the
-    # default probe follows the index back down to primary-only
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=-1.0, n_iters=1, n_assign=1)
-    gen = similarity._index_dir(spark, path, subs)
-    assert spark.read.parquet(gen + "/meta").head()["n_assign"] == 1
-    m1 = spark.read.parquet(gen + "/members")
-    assert m1.count() == 4
-    assert m1.filter("assign_rank = 1").count() == 4
-    cents1 = spark.read.parquet(gen + "/centroids")
-    p1 = _v2_pair_set(similarity.semantic_dedup_incremental(
-        spark, probe, path, threshold=0.99, append=False))
-    want1 = {(ia, ib) for ia, ib in
-             _batch_pair_set(emb.unionByName(probe), cents1, 1, 0.99)
-             if ia == 12 or ib == 12}
-    assert p1 == want1
-
-
-def test_semantic_index_width_exceeds_centroids(spark, tmp_path):
-    """The v2 format carries arbitrary n_assign, but `_ranked_assign`
-    can only emit min(n_assign, n_centroids) rows per vector — pins
-    that (a) members hold exactly that many rows, (b) the retrain's
-    footer-scale growth accounting divides by the EFFECTIVE width (a
-    meta n_assign larger than k must not deflate the vector count),
-    and (c) a forced retrain preserves the declared width."""
-    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]),
-            (2, [0.72, 0.69, 0.0, 0.0]), (3, [0.69, 0.72, 0.0, 0.0])]
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<float>")
-    path = str(tmp_path / "semwide")
-    subs = ("members", "centroids", "meta")
-    similarity.semantic_index_write(emb, path, n_centroids=3, n_iters=1,
-                                    n_assign=5)
-    gen = similarity._index_dir(spark, path, subs)
-    meta = spark.read.parquet(gen + "/meta").head()
-    assert meta["n_assign"] == 5 and meta["n_at_train"] == 4
-    m = spark.read.parquet(gen + "/members")
-    assert m.count() == 12                     # min(5, 3) rows/vector
-    assert m.filter("assign_rank = 1").count() == 4
-    # growth sees 12/min(5,3) = 4 vectors == n_at_train: not due
-    assert not similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=10.0)
-    # forced retrain preserves the DECLARED width (5), still 3 rows/vec
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=-1.0, n_iters=1)
-    gen2 = similarity._index_dir(spark, path, subs)
-    assert spark.read.parquet(gen2 + "/meta").head()["n_assign"] == 5
-    m2 = spark.read.parquet(gen2 + "/members")
-    assert m2.count() == 12
-    assert m2.filter("assign_rank = 1").count() == 4
-
-
-def test_semantic_index_v1_backcompat(spark, tmp_path):
-    """A pre-r13 on-disk index (members without assign_rank, meta
-    without n_assign) keeps v1 semantics end-to-end: default probes are
-    primary-width, appends stay rank-less (schema-compatible with the
-    existing members), an explicit n_assign=2 is the old ONE-SIDED
-    widening, and the next retrain upgrades the format in place."""
-    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]),
-            (3, [0.69, 0.72, 0.0, 0.0])]
-    idx = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<float>")
-    path = str(tmp_path / "semv1")
-    cents = similarity._seed_centroids(idx, 2, "vec_id", "embedding") \
-        .localCheckpoint()
-    asg = similarity.ivf_assign(idx, centroids=cents)
-    (asg.select("id", "vec", "centroid_id")
-        .write.partitionBy("centroid_id").mode("overwrite")
-        .parquet(path + "/members/part=base"))
-    cents.write.mode("overwrite").parquet(path + "/centroids")
-    spark.createDataFrame([(2, 3)], "n_centroids int, n_at_train long") \
-        .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-
-    new = spark.createDataFrame([(2, [0.72, 0.69, 0.0, 0.0])],
-                                "vec_id long, embedding array<float>")
-    # default = index width = 1 on v1: the boundary pair is invisible
-    p = similarity.semantic_dedup_incremental(
-        spark, new, path, threshold=0.99, append=True, delta_name="b1")
-    assert p.count() == 0
-    d1 = spark.read.parquet(path + "/members/part=b1")
-    assert "assign_rank" not in d1.columns    # schema-compatible append
-    assert d1.count() == 1
-    # whole-members read stays one homogeneous schema
-    assert "assign_rank" not in \
-        spark.read.parquet(path + "/members").columns
-    # explicit n_assign=2 on v1 = the old one-sided widening
-    p2 = similarity.semantic_dedup_incremental(
-        spark, new.select((F.col("vec_id") + 10).alias("vec_id"),
-                          "embedding"),
-        path, threshold=0.99, append=False, n_assign=2)
-    # (2,12): same primary cell as the appended copy; (3,12): the
-    # boundary pair only the widened probe reaches
-    assert {(r["id_a"], r["id_b"]) for r in p2.collect()} == {(2, 12),
-                                                              (3, 12)}
-
-    # retrain upgrades the format (width 1): rank column + meta field
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=-1.0, n_iters=1)
-    gen = similarity._index_dir(spark, path,
-                                ("members", "centroids", "meta"))
-    m = spark.read.parquet(gen + "/members")
-    assert "assign_rank" in m.columns
-    assert m.filter("assign_rank = 1").count() == m.count() == 4
-    meta = spark.read.parquet(gen + "/meta").head()
-    assert meta["n_assign"] == 1
-
-
 def test_tiff_seeded_mutation_fuzz_never_crashes():
     """Corrupt-input robustness for the TIFF decoder (the zstd/brotli
     fuzz contract, extended to the r11 tiled/16-bit surface): 600
@@ -5389,55 +4526,6 @@ def test_decode_images_tiff_cap_knob_reaches_executors(spark):
         assert ok.skipped_rows.value == 0
     finally:
         tiff.MAX_SAMPLE_BYTES = old
-
-
-def test_semantic_index_meta_loss_guard_and_repair(spark, tmp_path):
-    """r13 review: a v2 (ranked-members) index whose meta/ is lost in
-    the crash window of its coalesce(1) overwrite must not be
-    misclassified as v1 — the old swallowed-exception path appended
-    RANK-LESS rows that the retrain's rank-1 trainer filter then
-    silently dropped. Pins: `_index_meta` reads an EMPTY meta as
-    all-None (no AttributeError), the incremental refuses loudly, and
-    `semantic_index_maybe_retrain` repairs by deriving the width from
-    the members themselves (a width-2 index stays width 2)."""
-    import pytest
-
-    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]),
-            (2, [0.72, 0.69, 0.0, 0.0]), (3, [0.69, 0.72, 0.0, 0.0])]
-    emb = spark.createDataFrame(rows,
-                                "vec_id long, embedding array<float>")
-    path = str(tmp_path / "semmetaloss")
-    subs = ("members", "centroids", "meta")
-    similarity.semantic_index_write(emb, path, n_centroids=2, n_iters=1,
-                                    n_assign=2)
-    gen = similarity._index_dir(spark, path, subs)
-    # simulate the crash window: meta readable but zero rows
-    spark.createDataFrame(
-        [], "n_centroids int, n_at_train long, n_assign int") \
-        .coalesce(1).write.mode("overwrite").parquet(gen + "/meta")
-    assert similarity._index_meta(spark, gen) == (None, None, None)
-
-    new = spark.createDataFrame([(12, [0.71, 0.70, 0.0, 0.0])],
-                                "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError, match="ranked .v2. members"):
-        similarity.semantic_dedup_incremental(spark, new, path,
-                                              threshold=0.99)
-
-    # retrain is the repair path: due (no n_at_train), width derived
-    # from the ranked members (2), meta rebuilt at that width
-    assert similarity.semantic_index_maybe_retrain(
-        spark, path, growth_threshold=0.5, n_iters=1)
-    gen2 = similarity._index_dir(spark, path, subs)
-    meta = spark.read.parquet(gen2 + "/meta").head()
-    assert meta["n_assign"] == 2 and meta["n_at_train"] == 4
-    m = spark.read.parquet(gen2 + "/members")
-    assert m.count() == 8 and m.filter("assign_rank = 1").count() == 4
-    # and the incremental probe works again at the inherited width
-    p = similarity.semantic_dedup_incremental(spark, new, path,
-                                              threshold=0.99,
-                                              append=False)
-    assert {(r["id_a"], r["id_b"]) for r in p.collect()} == {(2, 12),
-                                                             (3, 12)}
 
 
 def test_decode_images_on_error_skip(spark):

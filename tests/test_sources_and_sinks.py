@@ -424,75 +424,6 @@ def test_sniffed_ingest_replaces_bad_utf8_instead_of_dropping(spark,
     assert len(got) == 3
 
 
-def test_shard_manifest_write_and_verify(spark, sf_dir, tmp_path):
-    """Export integrity manifest: footer-derived counts match the data,
-    verify_shards passes on the intact tree, and flags a deleted shard
-    file as missing (the loader-preflight contract)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from amazon_kinesis_replay_spark import export
-    from amazon_kinesis_replay_spark.tables import load
-
-    docs = (load(spark, sf_dir, "documents")
-            .select("doc_id",
-                    F.size(F.split("text", r"\s+")).alias("token_count"))
-            .withColumn("split", F.when(F.col("doc_id") % 10 < 8, "train")
-                        .otherwise("test"))
-            .withColumn("pack_id", (F.col("doc_id") / 50).cast("long")))
-    out = str(tmp_path / "shards")
-    export.write_training_shards(docs, out, rows_per_shard=200)
-    export.write_manifest(spark, out)
-
-    man = export.shard_manifest(spark, out)
-    assert man.agg(F.sum("n_rows")).head()[0] == docs.count()
-    assert man.filter("split = ''").count() == 0  # hive parse worked
-
-    ok = export.verify_shards(spark, out)
-    assert ok == {"ok": True, "missing": [], "extra": [], "changed": []}
-
-    victim = man.orderBy("file").head()["file"]
-    os.remove(victim[len("file:"):] if victim.startswith("file:")
-              else victim)
-    bad = export.verify_shards(spark, out)
-    assert not bad["ok"] and bad["missing"] == [victim]
-
-
-def test_verify_shards_flags_same_rowcount_rewrite(spark, sf_dir, tmp_path):
-    """A rewrite that preserves the row count but changes content must
-    surface as 'changed' — verify_shards diffs (n_rows, footer_bytes)
-    pairs, not row counts alone (r8 advice item)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from amazon_kinesis_replay_spark import export
-    from amazon_kinesis_replay_spark.tables import load
-
-    docs = (load(spark, sf_dir, "documents")
-            .select("doc_id", F.length("text").alias("n_chars"))
-            .withColumn("split", F.lit("train"))
-            .withColumn("pack_id", (F.col("doc_id") / 50).cast("long")))
-    out = str(tmp_path / "shards")
-    export.write_training_shards(docs, out, rows_per_shard=200)
-    export.write_manifest(spark, out)
-    assert export.verify_shards(spark, out)["ok"]
-
-    victim = export.shard_manifest(spark, out).orderBy("file").head()["file"]
-    local = victim[len("file:"):] if victim.startswith("file:") else victim
-    orig = pq.read_table(local)
-    # same schema + row count, different values => same n_rows, new footer
-    cols = {n: pa.array([0] * orig.num_rows, type=orig.schema.field(n).type)
-            for n in orig.schema.names}
-    pq.write_table(pa.table(cols, schema=orig.schema), local)
-    assert pq.read_metadata(local).num_rows == orig.num_rows
-
-    bad = export.verify_shards(spark, out)
-    assert not bad["ok"] and bad["changed"] == [victim]
-    assert bad["missing"] == [] and bad["extra"] == []
-
-
 def _libzstd():
     """ctypes harness for the container's libzstd.so.1 — the foreign
     witness for functions/zstd.py. Returns (compress, compress_adv,

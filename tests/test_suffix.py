@@ -133,24 +133,6 @@ def test_suffix_args_validated(spark):
         sx.duplicated_runs(df, "doc_id", "text", min_len=0)
 
 
-def test_remove_spans_composes_with_suffix_tier(spark):
-    """`duplicated_runs` output is format-compatible with
-    `dedup.remove_duplicate_spans`: removing via the suffix-array spans
-    equals removing via the window-hash spans (same min_len/window)."""
-    df = spark.createDataFrame(CRAFTED, "doc_id long, text string")
-    via_sa = dedup.remove_duplicate_spans(
-        df, sx.duplicated_runs(df, "doc_id", "text", min_len=4),
-        "doc_id", "text")
-    via_hash = dedup.remove_duplicate_spans(
-        df, dedup.duplicate_spans(df, "doc_id", "text", window=4),
-        "doc_id", "text")
-    a = {r["doc_id"]: (r["clean_text"], r["n_removed_tokens"])
-         for r in via_sa.collect()}
-    b = {r["doc_id"]: (r["clean_text"], r["n_removed_tokens"])
-         for r in via_hash.collect()}
-    assert a == b
-
-
 def test_longest_duplicated_run(spark):
     """Exact longest-duplicated-run length vs a brute-force python scan
     over the same token streams (within + cross doc, periodic overlap,

@@ -12,11 +12,6 @@ near-linear curve is the evidence the plans have no quadratic term:
 - packing        : range-bucketed distributed exclusive cumsum (vs a
                    single-partition global window, which would flatline
                    at one core and OOM at scale)
-- export         : range-clustered sharded parquet write (write cost
-                   must track rows, with no global sort bottleneck)
-- substring      : window-hash candidate groupBy -> string confirm on
-                   >1-count survivors -> per-doc island merge (vs a
-                   corpus-wide suffix sort or all-pairs span compare)
 - semdedup       : k-means clusters confine the pairwise term; centroids
                    scale WITH the corpus (the 100 TB contract in
                    operators/similarity.semantic_dedup) so per-cluster
@@ -120,7 +115,6 @@ def main():
     only = set(sys.argv[2:])  # optional family-name filter
     from pyspark.sql import functions as F
 
-    from amazon_kinesis_replay_spark import export
     from amazon_kinesis_replay_spark.operators import (
         dedup, intervals, layout, retrieval, sampling, similarity,
         sketches, text)
@@ -164,38 +158,14 @@ def main():
             vec_col="embedding").count()
         return f"{n} vecs -> {pairs} pairs"
 
-    def _packed(mult):
+    def run_packing(mult):
         counted = _expand_docs(docs, mult).withColumn(
             "token_count", F.size(F.split(F.col("text"), r"\s+")))
-        return text.pack_sequences(counted, "doc_id", "token_count",
-                                   seq_len=512)
-
-    def run_packing(mult):
-        packed = _packed(mult)
+        packed = text.pack_sequences(counted, "doc_id", "token_count",
+                                     seq_len=512)
         row = packed.agg(F.count("*").alias("n"),
                          F.max("pack_id").alias("p")).head()
         return f"{row['n']} docs -> {int(row['p']) + 1} packs"
-
-    def run_export(mult):
-        packed = _packed(mult).withColumn(
-            "split", F.when(F.pmod(F.col("doc_id"), 10) < 8, F.lit("train"))
-            .otherwise(F.lit("test")))
-        n = packed.count()
-        tmp = tempfile.mkdtemp(prefix="scale-probe-export-")
-        try:
-            export.write_training_shards(packed, tmp + "/shards",
-                                         rows_per_shard=20_000)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return f"{n} rows sharded"
-
-    def run_substring(mult):
-        corpus = _expand_docs(docs, mult)
-        n = corpus.count()
-        spans = dedup.duplicate_spans(corpus, "doc_id", "text", window=12)
-        m = spans.count()
-        spans.unpersist()
-        return f"{n} docs -> {m} spans"
 
     def run_semdedup(mult):
         corpus = _expand_emb(emb, mult)
@@ -407,7 +377,6 @@ def main():
         ("zorder", run_zorder),
         ("hashed_dsir", run_hashed_dsir),
         ("qhist", run_qhist),
-        ("substring", run_substring),
         ("semdedup", run_semdedup),
         ("semdedup_2l", run_semdedup_2l),
         ("mixture_dsir", run_mixture_dsir),
@@ -415,7 +384,6 @@ def main():
         ("contamination", run_contamination),
         ("embedding_dedup", run_embedding),
         ("packing", run_packing),
-        ("export", run_export),
         ("asof", run_asof),
         ("sq8", run_sq8),
         ("gapfill", run_gapfill),
