@@ -27,7 +27,9 @@ def build_parser() -> argparse.ArgumentParser:
     # reference option names kept verbatim (RePlayer.java:64-76)
     p.add_argument("-streamArn", default=None,
                    help="Kinesis stream ARN to replay into")
-    p.add_argument("-bucketRegion", default="us-east-1")
+    p.add_argument("-bucketRegion", default="us-east-1",
+                   help="accepted for reference command lines; no effect "
+                        "(the s3a connector resolves the bucket region)")
     p.add_argument("-bucketName", default=None)
     p.add_argument("-objectPrefix", default="")
     p.add_argument("-speedup", type=float, default=6480.0)
@@ -35,7 +37,10 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-seek", default=None, help="ISO-8601 event-time lower bound")
     p.add_argument("-statisticsFrequency", type=int, default=20_000)
     p.add_argument("-readerBufferSize", type=int, default=100_000)
-    p.add_argument("-kinesisProducerBuffer", type=int, default=5_000)
+    p.add_argument("-kinesisProducerBuffer", type=int, default=5_000,
+                   help="accepted for reference command lines; no effect "
+                        "(--max-files-per-trigger bounds how far the source "
+                        "runs ahead of the paced sink)")
     p.add_argument("-kinesisSenderThreads", type=int, default=4)
     # engine-native conveniences (no reference analogue)
     p.add_argument("--source", default=None,
@@ -87,7 +92,6 @@ def config_from_args(args: argparse.Namespace) -> ReplayConfig:
         seek_to_epoch=args.seek,
         statistics_frequency_ms=args.statisticsFrequency,
         reader_buffer_size=args.readerBufferSize,
-        producer_buffer_size=args.kinesisProducerBuffer,
         sender_threads=args.kinesisSenderThreads,
         driver_mode_max_rows=args.driver_mode_max_rows,
         reorder_across_batches=args.reorder_across_batches,

@@ -14,8 +14,8 @@ class ReplayConfig:
     """All knobs of the reference replay job, as a config dataclass.
 
     Reference defaults: RePlayer.java:20-28 (speedup 6480, timestamp attr
-    ``dropoff_datetime``, stats every 20 s, 100k reorder buffer, 5k sink
-    buffer, 4 sender threads); Kinesis constants KinesisProducer.java:25-28.
+    ``dropoff_datetime``, stats every 20 s, 100k reorder buffer, 4 sender
+    threads); Kinesis constants KinesisProducer.java:25-28.
     """
 
     # -- source (OP-SRC-*) ---------------------------------------------------
@@ -35,7 +35,6 @@ class ReplayConfig:
 
     # -- buffering / parallelism (OP-SORT-EVENTTIME / OP-FLOW-*) -------------
     reader_buffer_size: int = 100_000          # RePlayer.java:26
-    producer_buffer_size: int = 5_000          # RePlayer.java:27
     sender_threads: int = 4                    # RePlayer.java:28
     #: r8: opt-in driver-mode mirror of the reference's 100k-event
     #: reorder PRIORITY QUEUE (JsonEventBufferedReader.java:39): hold the

@@ -29,20 +29,29 @@ from ..config import ReplayConfig
 from ..functions import jsonf
 
 
-def _finish(lines: DataFrame, cfg: ReplayConfig,
-            keep_path: bool = False) -> DataFrame:
-    """Shared tail: suffix-prune files, parse timestamp attr, drop malformed."""
+def _finish(lines: DataFrame, cfg: ReplayConfig, path=None,
+            keep: tuple[str, ...] = ()) -> DataFrame:
+    """The parse tail of every reader: suffix-prune files on the `path`
+    column (default `input_file_name()`, the text scan's), parse the
+    timestamp attribute of `value`, drop malformed rows. Returns
+    (payload, ts) plus the `keep` columns."""
     if cfg.object_suffix_to_skip:
-        lines = lines.filter(
-            ~F.input_file_name().endswith(cfg.object_suffix_to_skip))
-    cols = [
+        if path is None:
+            path = F.input_file_name()
+        lines = lines.filter(~path.endswith(cfg.object_suffix_to_skip))
+    parsed = lines.select(
         F.col("value").alias("payload"),
         jsonf.json_attr_ts(F.col("value"), cfg.timestamp_attribute).alias("ts"),
-    ]
-    if keep_path:
-        cols.append(F.col("path"))
-    parsed = lines.select(*cols)
+        *keep)
     return parsed.filter(F.col("ts").isNotNull())
+
+
+def _sniffed(files: DataFrame, cfg: ReplayConfig) -> DataFrame:
+    """binaryFile (path, content) rows -> events: content-sniffed decode
+    (`_decode_lines`), then the shared parse tail."""
+    lines = files.select("path", "content").mapInPandas(
+        _decode_lines, "value string, path string")
+    return _finish(lines, cfg, F.col("path"))
 
 
 #: scheme://host-insensitive form for joining paths across sources
@@ -128,7 +137,7 @@ def read_events(spark: SparkSession, cfg: ReplayConfig,
 
     # ONE text scan: parse with path, checkpoint, derive both legs
     parsed = _finish(text.withColumn("path", F.input_file_name()), cfg,
-                     keep_path=True).localCheckpoint()
+                     F.col("path"), keep=("path",)).localCheckpoint()
     base = parsed.select("payload", "ts")
     # files that contributed at least one parsed row to the text leg
     ok_files = (parsed
@@ -147,17 +156,8 @@ def read_events(spark: SparkSession, cfg: ReplayConfig,
             "with no text-parseable rows — the corpus is not "
             "extension-dispatchable; ingest it with read_events_sniffed "
             "instead (or raise max_fallback_files)")
-    salvage_files = (spark.read.format("binaryFile")
-                     .load([r["path"] for r in suspects])
-                     .select("path", "content"))
-    salvage_lines = salvage_files.mapInPandas(
-        _decode_lines, "value string, path string")
-    salvage = (salvage_lines
-               .select(F.col("value").alias("payload"),
-                       jsonf.json_attr_ts(F.col("value"),
-                                          cfg.timestamp_attribute)
-                       .alias("ts"))
-               .filter(F.col("ts").isNotNull()))
+    salvage = _sniffed(spark.read.format("binaryFile")
+                       .load([r["path"] for r in suspects]), cfg)
     return base.unionByName(salvage)
 
 
@@ -220,15 +220,7 @@ def read_events_sniffed(spark: SparkSession, cfg: ReplayConfig,
     reader = spark.read.format("binaryFile")
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    files = reader.load(cfg.source_path).select("path", "content")
-    lines = files.mapInPandas(_decode_lines, "value string, path string")
-    if cfg.object_suffix_to_skip:
-        lines = lines.filter(~F.col("path").endswith(cfg.object_suffix_to_skip))
-    parsed = lines.select(
-        F.col("value").alias("payload"),
-        jsonf.json_attr_ts(F.col("value"), cfg.timestamp_attribute).alias("ts"),
-    )
-    return parsed.filter(F.col("ts").isNotNull())
+    return _sniffed(reader.load(cfg.source_path), cfg)
 
 
 def _decode_lines_numbered(pdf_iter):
@@ -297,10 +289,7 @@ def read_events_sampled_seek(spark: SparkSession, cfg: ReplayConfig,
               lines.groupBy("path").agg(F.count("*").alias("n")).collect()}
     order = sorted(counts)
     if not order:
-        return lines.select(
-            F.col("value").alias("payload"),
-            jsonf.json_attr_ts(F.col("value"),
-                               cfg.timestamp_attribute).alias("ts"))
+        return _finish(lines, cfg, F.col("path"))
 
     # the reference's parse-position walk (ts-independent geometry)
     positions: list[tuple[str, int]] = []
@@ -338,11 +327,7 @@ def read_events_sampled_seek(spark: SparkSession, cfg: ReplayConfig,
     kept = lines.filter((F.col("path") > sp)
                         | ((F.col("path") == sp)
                            & (F.col("line_no") >= sl)))
-    parsed = kept.select(
-        F.col("value").alias("payload"),
-        jsonf.json_attr_ts(F.col("value"), cfg.timestamp_attribute)
-        .alias("ts"))
-    return parsed.filter(F.col("ts").isNotNull())
+    return _finish(kept, cfg, F.col("path"))
 
 
 def read_events_stream_sniffed(spark: SparkSession, cfg: ReplayConfig,
@@ -358,15 +343,7 @@ def read_events_stream_sniffed(spark: SparkSession, cfg: ReplayConfig,
               .option("maxFilesPerTrigger", str(max_files_per_trigger)))
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    files = reader.load(cfg.source_path).select("path", "content")
-    lines = files.mapInPandas(_decode_lines, "value string, path string")
-    if cfg.object_suffix_to_skip:
-        lines = lines.filter(~F.col("path").endswith(cfg.object_suffix_to_skip))
-    parsed = lines.select(
-        F.col("value").alias("payload"),
-        jsonf.json_attr_ts(F.col("value"), cfg.timestamp_attribute).alias("ts"),
-    )
-    return parsed.filter(F.col("ts").isNotNull())
+    return _sniffed(reader.load(cfg.source_path), cfg)
 
 
 def read_events_stream(spark: SparkSession, cfg: ReplayConfig,

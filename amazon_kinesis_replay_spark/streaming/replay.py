@@ -12,7 +12,8 @@ This is the inherently-streaming part of the reference (SURVEY §7.3 M4):
 - OP-SINK-KINESIS / OP-SINK-RETRY — sinks.send_with_retry
 - OP-AGG-WINDOWCOUNT/-MAXWM/-LAG  RePlayer.java:145-162 — live statistics
 
-Two emission modes:
+Two emission modes, one emission kernel (`_pace_and_send`: pacing,
+request batching, per-request stats):
 
 - ``driver``      — exact single-stream pacing, mirroring the reference's
                     sequential replay loop (its consumer thread IS single-
@@ -99,6 +100,87 @@ class ReplayStats:
             self._window_start += freq_s
             self._window_events = 0
 
+    def fold(self, max_ts, lag: float):
+        """Fold a request's (or a sender's) watermark and lag in by MAX:
+        a beyond-window straggler batch (the reorder gate's emit-late
+        path) is older than what was already emitted, and the watermark
+        must not move back (OP-AGG-MAXWM, OP-AGG-LAG). `max_ts` may be
+        None or NaT for an empty sender."""
+        import pandas as pd
+        if not pd.isna(max_ts) and (self.max_emitted_ts is None
+                                    or max_ts > self.max_emitted_ts):
+            self.max_emitted_ts = max_ts
+        if lag > self.max_lag_s:
+            self.max_lag_s = lag
+
+
+def _pace_and_send(pdfs, sink, cfg: ReplayConfig, first_ts, start: float,
+                   stats: ReplayStats) -> int:
+    """The emission kernel of both modes: pace each ts-sorted record to
+    its target wall clock `start + (ts - first_ts) / speedup`
+    (OP-RATE-PACE, RePlayer.java:132-143), hand it to a request of at
+    most `max_records_per_request` records (a request may span frames),
+    and send each request with `send_with_retry`. Returns the number of
+    records. Driver mode passes its one sorted frame; partitioned mode
+    passes a sender partition's Arrow batches.
+
+    Targets are one numpy array per frame, and the per-record sleep loop
+    runs only for a slice not yet fully due; the sleep always comes
+    before the hand-off, so no record is sent early. Each request's
+    watermark and lag are folded into `stats` BEFORE it is sent, so a
+    sink failure leaves OP-AGG-MAXWM at what was handed to the send
+    path."""
+    import numpy as np
+    cap = cfg.max_records_per_request
+    buf_p: list = []
+    buf_t: list = []
+    buf_mx, buf_lag = None, 0.0
+    n = 0
+
+    def send():
+        nonlocal buf_lag
+        stats.fold(buf_mx, buf_lag)
+        send_with_retry(sink, [{"payload": p, "ts": t}
+                               for p, t in zip(buf_p, buf_t)],
+                        cfg, stats=stats.sink)
+        buf_p.clear()
+        buf_t.clear()
+        buf_lag = 0.0
+
+    for pdf in pdfs:
+        if pdf.empty:
+            continue
+        ts_col = pdf["ts"]
+        offs = (ts_col - first_ts).dt.total_seconds().to_numpy()
+        targets = start + np.maximum(offs, 0.0) / cfg.speedup_factor
+        iso = _iso_strings(ts_col)
+        payloads = pdf["payload"].values
+        m = len(pdf)
+        n += m
+        i = 0
+        while i < m:
+            j = min(m, i + cap - len(buf_p))
+            now = time.time()
+            # the slice head has the earliest target, hence the largest
+            # lag of any record not slept for
+            lag = now - targets[i]
+            if targets[j - 1] > now:
+                for k in range(i, j):
+                    gap = targets[k] - now
+                    if gap > 0:
+                        time.sleep(gap)
+                        now = time.time()
+                        lag = max(lag, now - targets[k])
+            buf_p.extend(payloads[i:j])
+            buf_t.extend(iso[i:j])
+            buf_mx, buf_lag = ts_col.iloc[j - 1], max(buf_lag, lag)
+            if len(buf_p) >= cap:
+                send()
+            i = j
+    if buf_p:
+        send()
+    return n
+
 
 class LegacyReorderStateError(RuntimeError):
     """The reorder state dir was written in the old layout (a root
@@ -113,9 +195,7 @@ class ReplayEngine:
     Use as the foreachBatch callback: ``stream.foreachBatch(engine)``.
     """
 
-    def __init__(self, cfg: ReplayConfig, sink,
-                 mode: str = "driver",
-                 clock=time.monotonic, sleep=time.sleep):
+    def __init__(self, cfg: ReplayConfig, sink, mode: str = "driver"):
         if mode not in ("driver", "partitioned"):
             raise ValueError(f"unknown replay mode {mode!r}")
         if (cfg.reorder_across_batches and mode != "driver"
@@ -133,40 +213,39 @@ class ReplayEngine:
         self.cfg = cfg
         self.sink = sink
         self.mode = mode
-        self.clock = clock
-        self.sleep = sleep
         self.stats = ReplayStats()
         self._first_event_ts = None        # event-time anchor
-        self._ingestion_start = None       # wall-clock anchor
+        self._ingestion_start = None       # wall-clock anchor, time.time()
         self._held = None                  # cross-batch reorder buffer (pdf)
         self._spark = None                 # session of the last gated batch
 
     # -- anchor management (OP-PROJ-INGEST) --------------------------------
 
-    def _ensure_anchor(self, batch_min_ts):
+    def _ensure_anchor(self, batch_min) -> bool:
+        """Anchor once, for both modes: on `cfg.anchor_ts` (parsed as
+        UTC), else on the batch minimum `batch_min()`, and on the wall
+        clock at that moment. At 100 TB the replay start is KNOWN (you
+        seeked to it), so an explicit anchor means no scan ever runs to
+        find the minimum; `batch_min` is called only while unanchored.
+        Both modes pace on `time.time()`: partitioned mode paces in
+        executor processes, which share no monotonic clock with the
+        driver. Returns False while there is no anchor (an empty first
+        batch)."""
         if self._first_event_ts is None:
-            self._first_event_ts = self._cfg_anchor() or batch_min_ts
-            self._ingestion_start = self.clock()
-
-    def _cfg_anchor(self):
-        """Explicit anchor from config (e.g. the seek position), parsed as
-        UTC. At 100 TB the replay start is KNOWN (you seeked to it) — an
-        explicit anchor means no scan is ever needed to find the batch
-        minimum before pacing can start."""
-        if not self.cfg.anchor_ts:
-            return None
-        import pandas as pd
-        ts = pd.Timestamp(self.cfg.anchor_ts)
-        if ts.tzinfo is not None:
-            # normalize to the naive-UTC convention Arrow toPandas /
-            # mapInPandas use under the UTC session timezone
-            ts = ts.tz_convert("UTC").tz_localize(None)
-        return ts
-
-    def _ingestion_offset_s(self, ts) -> float:
-        """Seconds after ingestion_start this event should be emitted."""
-        delta = (ts - self._first_event_ts).total_seconds()
-        return max(0.0, delta) / self.cfg.speedup_factor
+            import pandas as pd
+            if self.cfg.anchor_ts:
+                anchor = pd.Timestamp(self.cfg.anchor_ts)
+                if anchor.tzinfo is not None:
+                    # normalize to the naive-UTC convention Arrow toPandas
+                    # / mapInPandas use under the UTC session timezone
+                    anchor = anchor.tz_convert("UTC").tz_localize(None)
+            else:
+                anchor = batch_min()
+            if pd.isna(anchor):
+                return False
+            self._first_event_ts = anchor
+            self._ingestion_start = time.time()
+        return True
 
     # -- foreachBatch entry --------------------------------------------------
 
@@ -371,96 +450,43 @@ class ReplayEngine:
         fsutil.delete(spark, root)        # stream over: clear the state
 
     def _emit_pdf(self, pdf):
-        import numpy as np
-        ts_col = pdf["ts"]
-        self._ensure_anchor(ts_col.iloc[0])
-        # Vectorized pacing targets (RePlayer.java:132-143 semantics, batch
-        # math): target wall clock per record, computed once as a numpy
-        # array instead of per-row Timestamp arithmetic — the r3 per-record
-        # loop was ~60% of the driver-mode emit time at 100k rows.
-        offs = (ts_col - self._first_event_ts).dt.total_seconds().to_numpy()
-        targets = (self._ingestion_start
-                   + np.maximum(offs, 0.0) / self.cfg.speedup_factor)
-        iso = _iso_strings(ts_col)
-        payloads = pdf["payload"].values
-        n, step = len(pdf), self.cfg.max_records_per_request
-        for lo in range(0, n, step):
-            hi = min(lo + step, n)
-            now = self.clock()
-            if targets[hi - 1] > now:
-                # chunk not yet fully due: pace each record (OP-RATE-PACE)
-                for i in range(lo, hi):
-                    gap = targets[i] - now
-                    if gap > 0:
-                        self.sleep(gap)
-                        now = self.clock()
-                    lag = now - targets[i]
-                    if lag > self.stats.max_lag_s:
-                        self.stats.max_lag_s = lag   # OP-AGG-LAG
-            else:
-                # whole chunk already due — no sleeps; the chunk head has
-                # the earliest target hence the largest lag
-                lag = now - targets[lo]
-                if lag > self.stats.max_lag_s:
-                    self.stats.max_lag_s = lag
-            # watermark BEFORE the flush: a sink failure must leave
-            # OP-AGG-MAXWM reflecting what was handed to the send path.
-            # MAX, not assignment (r8 review): a beyond-window straggler
-            # batch (reorder buffer's emit-late path) is entirely older
-            # than what was already emitted — the watermark must not
-            # move backward (the partitioned path already guards this).
-            chunk_mx = ts_col.iloc[hi - 1]
-            if (self.stats.max_emitted_ts is None
-                    or chunk_mx > self.stats.max_emitted_ts):
-                self.stats.max_emitted_ts = chunk_mx
-            self._flush([{"payload": p, "ts": t}
-                         for p, t in zip(payloads[lo:hi], iso[lo:hi])])
-        self.stats.tick(n, self.clock(), self.cfg.statistics_frequency_ms)
-
-    def _flush(self, records: list[dict]):
-        send_with_retry(self.sink, records, self.cfg,
-                        stats=self.stats.sink, sleep=self.sleep)
+        if not self._ensure_anchor(lambda: pdf["ts"].min()):
+            return
+        n = _pace_and_send([pdf], self.sink, self.cfg, self._first_event_ts,
+                           self._ingestion_start, self.stats)
+        self.stats.tick(n, time.time(), self.cfg.statistics_frequency_ms)
 
     # -- partitioned mode: per-sender pacing at scale ------------------------
 
     def _process_partitioned(self, batch_df: DataFrame):
-        """Round-robin repartition into `sender_threads` partitions, sorted
-        within each by ts, each paced independently against the shared
-        anchor (the reference's sender fan-out: N threads draining one
-        ts-ordered queue). The sink must be worker-constructible: a
+        """Hash-partition on ts into `sender_threads` partitions, sorted
+        within each by ts, each paced by `_pace_and_send` against the
+        shared anchor (the reference's sender fan-out: N threads draining
+        one ts-ordered queue). The sink must be worker-constructible: a
         zero-arg factory is required.
 
         ONE scan per micro-batch once the anchor exists: the emit kernel
-        is the only action, and the per-partition stats row it yields
-        carries the partition min/max ts, so the watermark (OP-AGG-MAXWM)
-        needs no separate aggregate job (the r3 min/max agg scanned every
-        batch twice). The first-ever batch runs one min-only aggregate to
-        establish the anchor — unless cfg.anchor_ts (e.g. the seek
-        position) makes even that unnecessary — a one-time cost amortized
-        over the stream."""
+        is the only action, and each partition yields one stats row
+        (counts, its max ts and its max lag), so the watermark
+        (OP-AGG-MAXWM) needs no separate aggregate job. The first-ever
+        batch runs one min-only aggregate to establish the anchor —
+        unless cfg.anchor_ts (e.g. the seek position) makes even that
+        unnecessary — a one-time cost amortized over the stream."""
         cfg = self.cfg
         sink_factory = self.sink
         if not callable(sink_factory):
             raise TypeError("partitioned mode needs a sink FACTORY "
                             "(zero-arg callable usable on executors)")
-        if self._first_event_ts is None:
-            anchor = self._cfg_anchor()
-            if anchor is None:
-                # Anchor via Arrow toPandas, NOT collect(): collect()
-                # renders timestamps as naive HOST-LOCAL datetimes
-                # (TimestampType.fromInternal), while the Arrow kernel
-                # below receives session-tz (UTC) values — mixing the two
-                # skews every pacing target by the host's UTC offset.
-                bpdf = batch_df.agg(F.min("ts").alias("mn")).toPandas()
-                anchor = bpdf["mn"].iloc[0]
-                if anchor is None or bpdf["mn"].isna().iloc[0]:
-                    return
-            self._first_event_ts = anchor
-            self._ingestion_start = self.clock()
-        first_ts = self._first_event_ts
-        ingestion_start_wall = time.time() - (self.clock() - self._ingestion_start)
-        speedup = cfg.speedup_factor
-        max_per_request = cfg.max_records_per_request
+        # Anchor via Arrow toPandas, NOT collect(): collect() renders
+        # timestamps as naive HOST-LOCAL datetimes
+        # (TimestampType.fromInternal), while the Arrow kernel below
+        # receives session-tz (UTC) values — mixing the two skews every
+        # pacing target by the host's UTC offset.
+        if not self._ensure_anchor(lambda: batch_df.agg(
+                F.min("ts").alias("ts")).toPandas()["ts"].iloc[0]):
+            return
+        # locals, so the executor closure does not pickle the engine
+        first_ts, start = self._first_event_ts, self._ingestion_start
 
         # hash-partition on ts (NOT round-robin, whose determinism guard
         # local-sorts every input partition by all columns — payload bytes
@@ -472,68 +498,16 @@ class ReplayEngine:
                   .repartition(cfg.sender_threads, F.col("ts"))
                   .sortWithinPartitions("ts"))
 
-        # Arrow-batched emit kernel: record bytes reach Python as columnar
-        # batches, pacing targets are computed as one numpy array per Arrow
-        # batch (the r3 kernel did per-row Timestamp arithmetic), and the
-        # per-record sleep loop only runs for slices not yet due. One stats
-        # row per partition (counts + min/max ts) comes back through the
-        # same action — no accumulators, no second job.
         def _emit(batches):
-            import numpy as np
             import pandas as pd
-            sink = sink_factory()
-            part_stats = SinkStats()
-            buf_p: list = []
-            buf_t: list = []
-            n = 0
-            mn = mx = None
-
-            def _flush():
-                send_with_retry(
-                    sink,
-                    [{"payload": p, "ts": t} for p, t in zip(buf_p, buf_t)],
-                    cfg, stats=part_stats)
-                buf_p.clear()
-                buf_t.clear()
-
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ts_col = pdf["ts"]
-                if mn is None:
-                    mn = ts_col.iloc[0]       # sorted within partition
-                mx = ts_col.iloc[-1]
-                offs = (ts_col - first_ts).dt.total_seconds().to_numpy()
-                targets = (ingestion_start_wall
-                           + np.maximum(offs, 0.0) / speedup)
-                iso = _iso_strings(ts_col)
-                payloads = pdf["payload"].values
-                m = len(pdf)
-                n += m
-                i = 0
-                while i < m:
-                    j = min(m, i + max_per_request - len(buf_p))
-                    now = time.time()
-                    if targets[j - 1] > now:          # OP-RATE-PACE
-                        for k in range(i, j):
-                            gap = targets[k] - now
-                            if gap > 0:
-                                time.sleep(gap)
-                                now = time.time()
-                    buf_p.extend(payloads[i:j])
-                    buf_t.extend(iso[i:j])
-                    if len(buf_p) >= max_per_request:
-                        _flush()
-                    i = j
-            if buf_p:
-                _flush()
+            st = ReplayStats()
+            n = _pace_and_send(batches, sink_factory(), cfg, first_ts, start,
+                               st)
             yield pd.DataFrame({
-                "n": [n], "requests": [part_stats.requests],
-                "retried": [part_stats.retried_records],
-                "sent": [part_stats.records_sent],
-                "mn": [mn], "mx": [mx]})
-
-        import pandas as pd
+                "n": [n], "requests": [st.sink.requests],
+                "retried": [st.sink.retried_records],
+                "sent": [st.sink.records_sent],
+                "mx": [st.max_emitted_ts], "lag": [st.max_lag_s]})
 
         # one stats row per sender partition, summed here on the driver:
         # a Spark-side agg would add a final shuffle (and, under AQE, a
@@ -542,16 +516,12 @@ class ReplayEngine:
         # naive-UTC to stay comparable with driver-mode watermarks
         parts = shaped.mapInPandas(
             _emit, "n long, requests long, retried long, sent long, "
-                   "mn timestamp, mx timestamp").toPandas()
-        n_events = int(parts["n"].sum())
+                   "mx timestamp, lag double").toPandas()
         self.stats.sink.requests += int(parts["requests"].sum())
         self.stats.sink.retried_records += int(parts["retried"].sum())
         self.stats.sink.records_sent += int(parts["sent"].sum())
-        batch_mx = parts["mx"].max()
-        if not pd.isna(batch_mx) and (self.stats.max_emitted_ts is None
-                                      or batch_mx > self.stats.max_emitted_ts):
-            self.stats.max_emitted_ts = batch_mx        # OP-AGG-MAXWM
-        self.stats.tick(n_events, self.clock(),
+        self.stats.fold(parts["mx"].max(), parts["lag"].max())
+        self.stats.tick(int(parts["n"].sum()), time.time(),
                         cfg.statistics_frequency_ms)
 
 

@@ -18,7 +18,7 @@ def test_reference_defaults_parity():
     assert cfg.timestamp_attribute == "dropoff_datetime"
     assert cfg.statistics_frequency_ms == 20_000
     assert cfg.reader_buffer_size == 100_000
-    assert cfg.producer_buffer_size == 5_000
+    assert args.kinesisProducerBuffer == 5_000
     assert cfg.sender_threads == 4
     assert cfg.reorder_across_batches is False   # opt-in (r8)
 

@@ -439,10 +439,40 @@ def _names_used(nodes, strings: bool = False) -> set[str]:
     return out
 
 
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _import_time(node) -> list:
+    """What runs when definition `node` is executed: decorators, and a
+    class's bases and keywords or a function's defaults."""
+    out = list(node.decorator_list)
+    if isinstance(node, ast.ClassDef):
+        return out + node.bases + node.keywords
+    return out + node.args.defaults + [
+        d for d in node.args.kw_defaults if d is not None]
+
+
+def _is_method(node) -> bool:
+    """A non-dunder function in a class body; dunders run implicitly."""
+    return (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not (node.name.startswith("__")
+                     and node.name.endswith("__")))
+
+
+def _body(node) -> list:
+    """The code a reached definition makes reached: a function's body, or
+    a class body less its methods (each of which must be reached by name
+    on its own)."""
+    if isinstance(node, ast.ClassDef):
+        return [b for b in node.body if not _is_method(b)]
+    return node.body
+
+
 def _unreached_functions(root: Path) -> set[str]:
-    """`module.name` of every top-level package function or class that no
-    reached code refers to by name. Reached code is the whole of each
-    root file outside the package, the module-level code of every
+    """`module.name` of every top-level package function or class, and
+    `module.Class.name` of every non-dunder method of a top-level class,
+    that no reached code refers to by name. Reached code is the whole of
+    each root file outside the package, the module-level code of every
     package module (decorators, defaults and bases included — they run
     at import), and the body of every definition already reached."""
     pkg = root / PKG.name
@@ -455,18 +485,15 @@ def _unreached_functions(root: Path) -> set[str]:
     for f in pkg.rglob("*.py"):
         mod = _module_name(root, f)
         for node in ast.parse(f.read_text()).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                 ast.ClassDef)):
-                defs[f"{mod}.{node.name}"] = node
-                import_time = list(node.decorator_list)
-                if isinstance(node, ast.ClassDef):
-                    import_time += node.bases + node.keywords
-                else:
-                    import_time += node.args.defaults + [
-                        d for d in node.args.kw_defaults if d is not None]
-                used |= _names_used(import_time)
-            else:
+            if not isinstance(node, _DEFS):
                 used |= _names_used([node])
+                continue
+            defs[f"{mod}.{node.name}"] = node
+            used |= _names_used(_import_time(node))
+            if isinstance(node, ast.ClassDef):
+                for m in filter(_is_method, node.body):
+                    defs[f"{mod}.{node.name}.{m.name}"] = m
+                    used |= _names_used(_import_time(m))
     todo = set(defs)
     while True:
         hit = {q for q in todo if q.rsplit(".", 1)[1] in used}
@@ -474,12 +501,13 @@ def _unreached_functions(root: Path) -> set[str]:
             return todo
         todo -= hit
         for q in hit:
-            used |= _names_used(defs[q].body)
+            used |= _names_used(_body(defs[q]))
 
 
 def test_every_package_function_is_reachable():
-    """A top-level function or class that no entry point, tool or test
-    reaches by name is code nothing runs; delete it."""
+    """A top-level function or class, or a method of a package class,
+    that no entry point, tool or test reaches by name is code nothing
+    runs; delete it."""
     unreached = _unreached_functions(PKG.parent)
     assert not unreached, (
         f"package functions nothing refers to: {sorted(unreached)}")

@@ -129,6 +129,30 @@ def test_partitioned_mode_replay(spark, stream_fixture, tmp_path):
     assert engine.stats.sink.records_sent == n_events
     assert engine.stats.sink.requests == len(per_file)
     assert engine.stats.max_emitted_ts is not None
+    # the senders' lag rides back in their stats rows (OP-AGG-LAG): the
+    # micro-batch launch alone makes the first records late
+    assert engine.stats.max_lag_s > 0
+
+
+def test_watermark_folds_before_send(spark):
+    """Each request's watermark is folded into the stats BEFORE it is
+    sent: a sink that fails every attempt leaves OP-AGG-MAXWM at the last
+    record of the first request, the one handed to the send path."""
+    import datetime as dt
+
+    from amazon_kinesis_replay_spark.streaming.sinks import SinkError
+    base = dt.datetime(2024, 1, 1)
+    rows = [(f"e{i}", base + dt.timedelta(seconds=i)) for i in range(10)]
+    batch = spark.createDataFrame(rows, "payload string, ts timestamp")
+    cfg = ReplayConfig(speedup_factor=1e12, max_records_per_request=4,
+                       max_retries=2, backoff_base_ms=1, max_backoff_ms=1)
+    sink = InMemorySink(fail_plan={i: list(range(4)) for i in range(3)})
+    engine = ReplayEngine(cfg, sink, mode="driver")
+    with pytest.raises(SinkError):
+        engine.process_batch(batch, 0)
+    assert engine.stats.max_emitted_ts.isoformat() == \
+        "2024-01-01T00:00:03"
+    assert engine.stats.sink.records_sent == 0
 
 
 def test_partitioned_batch_is_single_computation(spark, sf_dir, tmp_path):

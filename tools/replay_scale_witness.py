@@ -233,6 +233,7 @@ def main():
             if strag_late else None),
         "batches": engine.stats.batches,
         "max_emitted_ts": str(engine.stats.max_emitted_ts),
+        "max_lag_s": round(engine.stats.max_lag_s, 3),
     }
     print(json.dumps(summary))
     ok = (summary["multiset_exact"] and summary["per_sender_ordered"]
