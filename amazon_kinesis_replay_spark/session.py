@@ -3,12 +3,18 @@
 Single place to encode the engine's execution posture: AQE on (runtime
 re-planning, skew-join handling), UTC session timezone (deterministic
 timestamp arithmetic for the DuckDB oracle), Arrow enabled (fast Pandas-UDF
-boundary for the few operators that need Python).
+boundary for the few operators that need Python), and a codegen cache that
+holds every generated class of a full registry pass, so a repeat query
+reuses its compiled classes instead of recompiling and re-JITting them.
+The cache size is a static conf, fixed when the JVM starts: sessions built
+here set it, and on a session the driver built `ensure_engine_conf` can
+only warn when it is too small.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -40,6 +46,21 @@ ENGINE_RUNTIME_CONF = {
 }
 
 
+#: Spark's LRU cache of compiled generated classes, keyed on generated
+#: source. Its default, 100, is below one query pass: the LRU evicted every
+#: class before its query came back, so a repeat pass over the registry
+#: recompiled 1,089 classes with Janino and HotSpot JIT-compiled the new
+#: bytecode again. One full pass over the 50-query registry at sf0.01
+#: compiles 959 distinct classes (`tools/profile_queries.py`,
+#: PROFILE_r15.json). The size is twice that, rounded up to a power of two:
+#: headroom for the 90-108 classes each repeat pass still compiles anew
+#: (AQE numbers codegen stages in a run-dependent order, and the number is
+#: part of the class name), plans that change with scale, and registry
+#: growth. Static: it takes effect only when the JVM starts.
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+CODEGEN_CACHE_ENTRIES = 2048
+
+
 def build_spark(app_name: str = "amazon-kinesis-replay-spark",
                 shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) a local session sized from $SPARK_GRAFT_CPUS."""
@@ -54,6 +75,7 @@ def build_spark(app_name: str = "amazon-kinesis-replay-spark",
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse")
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in ENGINE_RUNTIME_CONF.items():
         builder = builder.config(k, v)
@@ -72,7 +94,10 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     Runtime confs persist for the session's lifetime, so asserting once
     per session is equivalent; a test that deliberately flips one of
     these confs mid-session (e.g. AQE off) now keeps its setting across
-    engine calls instead of having it silently re-asserted away."""
+    engine calls instead of having it silently re-asserted away.
+
+    The first assertion on a session also reads its static codegen-cache
+    size and warns if it is below `CODEGEN_CACHE_ENTRIES`."""
     if getattr(spark, "_akrs_conf_asserted", False):
         # Sentinel spot-check on memo hits (r13 ADVICE): the memo assumes
         # the driver never mutates a runtime conf between entry calls on
@@ -89,6 +114,8 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
         if tz_ok:
             _ship_package(spark)
             return spark
+    else:
+        _warn_small_codegen_cache(spark.sparkContext.getConf())
     for k, v in ENGINE_RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
@@ -109,6 +136,22 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     spark._akrs_conf_asserted = True
     _ship_package(spark)
     return spark
+
+
+def _warn_small_codegen_cache(conf) -> None:
+    """Warn when a session's codegen cache is smaller than the engine's
+    size. The conf is static: a session the driver built keeps its value
+    for the JVM's life, and each repeat query pass then recompiles the
+    classes the cache evicted. `conf` is the session's SparkConf, or any
+    reader with `get(key, default)`."""
+    entries = int(conf.get(CODEGEN_CACHE_CONF, "100"))   # Spark's default
+    if entries < CODEGEN_CACHE_ENTRIES:
+        warnings.warn(
+            f"{CODEGEN_CACHE_CONF} is {entries}, below the engine's "
+            f"{CODEGEN_CACHE_ENTRIES}: repeat queries will recompile their "
+            "generated classes. The conf is static; set it when the "
+            "session is built (e.g. spark-submit --conf).",
+            RuntimeWarning, stacklevel=3)
 
 
 def _ship_package(spark: SparkSession) -> None:

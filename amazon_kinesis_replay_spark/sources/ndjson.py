@@ -29,16 +29,26 @@ from ..config import ReplayConfig
 from ..functions import jsonf
 
 
-def _finish(lines: DataFrame, cfg: ReplayConfig, path=None,
+def _skip_objects(rows: DataFrame, cfg: ReplayConfig, path=None) -> DataFrame:
+    """Suffix file pruning, applied once per reader: drop the rows of
+    objects whose `path` (default the `path` column; a text scan passes
+    `input_file_name()`) ends with `cfg.object_suffix_to_skip`. The
+    binaryFile readers prune their (path, content) rows before the
+    decode: Spark cannot push a filter on the decoded lines below
+    `mapInPandas`, so pruning after it would decompress every skipped
+    object first."""
+    if not cfg.object_suffix_to_skip:
+        return rows
+    if path is None:
+        path = F.col("path")
+    return rows.filter(~path.endswith(cfg.object_suffix_to_skip))
+
+
+def _finish(lines: DataFrame, cfg: ReplayConfig,
             keep: tuple[str, ...] = ()) -> DataFrame:
-    """The parse tail of every reader: suffix-prune files on the `path`
-    column (default `input_file_name()`, the text scan's), parse the
-    timestamp attribute of `value`, drop malformed rows. Returns
-    (payload, ts) plus the `keep` columns."""
-    if cfg.object_suffix_to_skip:
-        if path is None:
-            path = F.input_file_name()
-        lines = lines.filter(~path.endswith(cfg.object_suffix_to_skip))
+    """The parse tail of every reader: parse the timestamp attribute of
+    `value`, drop malformed rows. Returns (payload, ts) plus the `keep`
+    columns."""
     parsed = lines.select(
         F.col("value").alias("payload"),
         jsonf.json_attr_ts(F.col("value"), cfg.timestamp_attribute).alias("ts"),
@@ -47,11 +57,12 @@ def _finish(lines: DataFrame, cfg: ReplayConfig, path=None,
 
 
 def _sniffed(files: DataFrame, cfg: ReplayConfig) -> DataFrame:
-    """binaryFile (path, content) rows -> events: content-sniffed decode
-    (`_decode_lines`), then the shared parse tail."""
+    """binaryFile (path, content) rows, already suffix-pruned -> events:
+    content-sniffed decode (`_decode_lines`), then the shared parse
+    tail."""
     lines = files.select("path", "content").mapInPandas(
         _decode_lines, "value string, path string")
-    return _finish(lines, cfg, F.col("path"))
+    return _finish(lines, cfg)
 
 
 #: scheme://host-insensitive form for joining paths across sources
@@ -107,7 +118,7 @@ def read_events(spark: SparkSession, cfg: ReplayConfig,
         reader = reader.option("pathGlobFilter", path_glob_filter)
     text = reader.text(cfg.source_path)
     if sniff_fallback is False:
-        return _finish(text, cfg)
+        return _finish(_skip_objects(text, cfg, F.input_file_name()), cfg)
 
     listing_reader = spark.read.format("binaryFile")
     if path_glob_filter:
@@ -115,10 +126,8 @@ def read_events(spark: SparkSession, cfg: ReplayConfig,
                                                path_glob_filter)
     # selecting only path/length prunes the content column: the
     # binaryFile scan is a LISTING job, no bytes read
-    listing = listing_reader.load(cfg.source_path).select("path", "length")
-    if cfg.object_suffix_to_skip:
-        listing = listing.filter(
-            ~F.col("path").endswith(cfg.object_suffix_to_skip))
+    listing = _skip_objects(
+        listing_reader.load(cfg.source_path).select("path", "length"), cfg)
     if sniff_fallback == "auto":
         st = listing.agg(F.sum("length").alias("b"),
                          F.count("*").alias("n")).head()
@@ -133,11 +142,12 @@ def read_events(spark: SparkSession, cfg: ReplayConfig,
                 "per-file sniff salvage). Pass sniff_fallback=True to "
                 "force salvage, or use read_events_sniffed for "
                 "corpus-scale mixed-codec ingest.")
-            return _finish(text, cfg)
+            return _finish(_skip_objects(text, cfg, F.input_file_name()), cfg)
 
     # ONE text scan: parse with path, checkpoint, derive both legs
-    parsed = _finish(text.withColumn("path", F.input_file_name()), cfg,
-                     F.col("path"), keep=("path",)).localCheckpoint()
+    parsed = _finish(
+        _skip_objects(text.withColumn("path", F.input_file_name()), cfg),
+        cfg, keep=("path",)).localCheckpoint()
     base = parsed.select("payload", "ts")
     # files that contributed at least one parsed row to the text leg
     ok_files = (parsed
@@ -220,7 +230,7 @@ def read_events_sniffed(spark: SparkSession, cfg: ReplayConfig,
     reader = spark.read.format("binaryFile")
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    return _sniffed(reader.load(cfg.source_path), cfg)
+    return _sniffed(_skip_objects(reader.load(cfg.source_path), cfg), cfg)
 
 
 def _decode_lines_numbered(pdf_iter):
@@ -277,19 +287,16 @@ def read_events_sampled_seek(spark: SparkSession, cfg: ReplayConfig,
     reader = spark.read.format("binaryFile")
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    files = reader.load(cfg.source_path).select("path", "content")
-    lines = files.mapInPandas(
+    files = _skip_objects(reader.load(cfg.source_path), cfg)
+    lines = files.select("path", "content").mapInPandas(
         _decode_lines_numbered, "value string, path string, line_no long")
-    if cfg.object_suffix_to_skip:
-        lines = lines.filter(
-            ~F.col("path").endswith(cfg.object_suffix_to_skip))
 
     # per-object line counts: one row per file (metadata-scale)
     counts = {r["path"]: r["n"] for r in
               lines.groupBy("path").agg(F.count("*").alias("n")).collect()}
     order = sorted(counts)
     if not order:
-        return _finish(lines, cfg, F.col("path"))
+        return _finish(lines, cfg)
 
     # the reference's parse-position walk (ts-independent geometry)
     positions: list[tuple[str, int]] = []
@@ -327,7 +334,7 @@ def read_events_sampled_seek(spark: SparkSession, cfg: ReplayConfig,
     kept = lines.filter((F.col("path") > sp)
                         | ((F.col("path") == sp)
                            & (F.col("line_no") >= sl)))
-    return _finish(kept, cfg, F.col("path"))
+    return _finish(kept, cfg)
 
 
 def read_events_stream_sniffed(spark: SparkSession, cfg: ReplayConfig,
@@ -343,7 +350,7 @@ def read_events_stream_sniffed(spark: SparkSession, cfg: ReplayConfig,
               .option("maxFilesPerTrigger", str(max_files_per_trigger)))
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    return _sniffed(reader.load(cfg.source_path), cfg)
+    return _sniffed(_skip_objects(reader.load(cfg.source_path), cfg), cfg)
 
 
 def read_events_stream(spark: SparkSession, cfg: ReplayConfig,
@@ -361,4 +368,5 @@ def read_events_stream(spark: SparkSession, cfg: ReplayConfig,
               .option("maxFilesPerTrigger", str(max_files_per_trigger)))
     if path_glob_filter:
         reader = reader.option("pathGlobFilter", path_glob_filter)
-    return _finish(reader.text(cfg.source_path), cfg)
+    return _finish(_skip_objects(reader.text(cfg.source_path), cfg,
+                                 F.input_file_name()), cfg)

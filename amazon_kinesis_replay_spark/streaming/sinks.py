@@ -145,9 +145,3 @@ def send_with_retry(client, records: list[dict], cfg: ReplayConfig,
         pending = [r for i, r in enumerate(pending) if i in failed_idx]
         attempt += 1
     return stats
-
-
-def chunked(seq: list, size: int):
-    """<=size-record request chunks (KinesisProducer.java:112 drainTo)."""
-    for i in range(0, len(seq), size):
-        yield seq[i:i + size]

@@ -287,6 +287,64 @@ def test_ensure_engine_conf_memoized_per_session(spark):
         spark.conf.set(key, orig)
 
 
+def test_built_session_sizes_the_codegen_cache(spark):
+    """`build_spark` sets the static codegen-cache size, so a repeat
+    query finds its generated classes instead of recompiling them."""
+    from amazon_kinesis_replay_spark.session import (
+        CODEGEN_CACHE_CONF, CODEGEN_CACHE_ENTRIES)
+
+    assert spark.sparkContext.getConf().get(CODEGEN_CACHE_CONF) == str(
+        CODEGEN_CACHE_ENTRIES)
+    assert spark.conf.get(CODEGEN_CACHE_CONF) == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_small_codegen_cache_warns_once_per_session():
+    """A driver-owned session cannot take the static conf after its JVM
+    started: `ensure_engine_conf` warns on its first assertion when the
+    cache is below the engine's size (Spark's default 100 included),
+    naming the conf and both numbers, and stays silent at or above it."""
+    import warnings
+
+    from amazon_kinesis_replay_spark import session as S
+
+    class FakeContext:
+        def __init__(self, conf):
+            self.conf = conf
+
+        def getConf(self):
+            return self.conf
+
+    class FakeSession:
+        _akrs_pyfiles_shipped = True
+
+        def __init__(self, conf):
+            self.sparkContext = FakeContext(conf)
+            self.conf = self
+
+        def set(self, key, value):
+            pass
+
+        def get(self, key):
+            return S.ENGINE_RUNTIME_CONF[key]
+
+    n = S.CODEGEN_CACHE_ENTRIES
+    for conf in ({S.CODEGEN_CACHE_CONF: str(n - 1)}, {}):
+        fake = FakeSession(conf)
+        with warnings.catch_warnings(record=True) as seen:
+            warnings.simplefilter("always")
+            S.ensure_engine_conf(fake)
+            S.ensure_engine_conf(fake)          # memo hit: no second warning
+        assert len(seen) == 1, [str(w.message) for w in seen]
+        msg = str(seen[0].message)
+        assert S.CODEGEN_CACHE_CONF in msg and str(n) in msg
+        assert conf.get(S.CODEGEN_CACHE_CONF, "100") in msg
+    for conf in ({S.CODEGEN_CACHE_CONF: str(n)},
+                 {S.CODEGEN_CACHE_CONF: str(n + 1)}):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            S.ensure_engine_conf(FakeSession(conf))
+
+
 #: Files a user or harness runs directly; every package module must be
 #: imported (at module level or lazily inside a function) from one of
 #: them, or it is code nothing runs.

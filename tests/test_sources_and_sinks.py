@@ -106,6 +106,21 @@ def test_sniffed_path_skips_truncated_gzip_and_corrupt_xz(spark, tmp_path):
     assert out.count() == 15                  # only the good object survives
 
 
+def test_sniffed_suffix_skip_prunes_objects_before_the_decode(spark,
+                                                              tmp_path):
+    """The suffix filter runs on the binaryFile rows, beneath the
+    mapInPandas decode: Spark cannot push a filter on the decoded lines
+    through it, so a skipped object would be decompressed first."""
+    cfg = ReplayConfig(source_path=str(tmp_path),
+                       object_suffix_to_skip=".tmp")
+    df = ndjson.read_events_sniffed(spark, cfg)
+    plan = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    decode = next(i for i, ln in enumerate(plan) if "MapInPandas" in ln)
+    skip = [i for i, ln in enumerate(plan)
+            if "Filter" in ln and "EndsWith" in ln]
+    assert len(skip) == 1 and skip[0] > decode, "\n".join(plan)
+
+
 def test_send_with_retry_failed_subset():
     cfg = ReplayConfig(backoff_base_ms=1, max_backoff_ms=2)
     # request 0 fails records 1 and 3; request 1 (the retry of those 2)
@@ -128,11 +143,6 @@ def test_send_with_retry_exhaustion():
     sink = sinks.InMemorySink(fail_plan={i: [0] for i in range(10)})
     with pytest.raises(sinks.SinkError):
         sinks.send_with_retry(sink, [{"payload": "x"}], cfg, sleep=lambda s: None)
-
-
-def test_chunked_500():
-    chunks = list(sinks.chunked(list(range(1201)), 500))
-    assert [len(c) for c in chunks] == [500, 500, 201]
 
 
 # ---------------------------------------------------------------------------
@@ -307,7 +317,9 @@ def test_kinesis_sink_e2e_emulated():
         records = [{"payload": js.dumps({"event_id": i})} for i in range(1203)]
         stats = sinks.SinkStats()
         n_requests = 0
-        for chunk in sinks.chunked(records, cfg.max_records_per_request):
+        size = cfg.max_records_per_request
+        for i in range(0, len(records), size):
+            chunk = records[i:i + size]
             assert len(chunk) <= 500                    # service limit
             sinks.send_with_retry(sink, chunk, cfg, stats)
             n_requests += 1
