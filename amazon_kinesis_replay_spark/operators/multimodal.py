@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StringType, StructField, StructType,
 )
 
+from ..session import drop_zip_finders
+
 #: Canonical multimodal record schema: opaque payload + typed metadata.
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
@@ -545,6 +547,7 @@ def synthesize_audio_media(df: DataFrame) -> DataFrame:
     input contract."""
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             ids, blobs = [], []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -586,6 +589,7 @@ def audio_meta(df: DataFrame, on_error: str = "raise") -> DataFrame:
     skip_counter = _skip_counter_for(df, on_error)
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = {"media_id": [], "sample_rate": [], "channels": [],
                     "total_frames": [], "mono_digest": []}
@@ -623,6 +627,7 @@ def synthesize_image_media(df: DataFrame, side: int = 8) -> DataFrame:
     matches the (media_id, data) decode input contract."""
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             ids, blobs = [], []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -768,6 +773,7 @@ def decode_images(df: DataFrame, fake: bool = False,
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _apply_codec_caps(caps)
+        drop_zip_finders()
         for pdf in batches:
             out = {"media_id": [], "width": [], "height": [],
                    "n_bytes": [], "sha1": [], "features": []}
@@ -849,6 +855,7 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _apply_codec_caps(caps)
+        drop_zip_finders()
         for pdf in batches:
             out = {"media_id": [], "width": [], "height": [],
                    "channels": [], "pixels": []}
@@ -992,6 +999,7 @@ def sample_frames(df: DataFrame, every_n: int = 10, fake: bool = False,
     frames_of = _fake_frames if fake else _real_frames
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rows = {"media_id": [], "frame_idx": [], "frame_sha1": []}
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -1016,6 +1024,7 @@ def sample_frames(df: DataFrame, every_n: int = 10, fake: bool = False,
     def _sample_decode(batches: Iterator[pd.DataFrame]) \
             -> Iterator[pd.DataFrame]:
         _apply_codec_caps(caps)
+        drop_zip_finders()
         for pdf in batches:
             rows = {"media_id": [], "frame_idx": [], "frame_sha1": [],
                     "width": [], "height": [], "features": []}
@@ -1537,6 +1546,7 @@ def decode_audio(df: DataFrame, fake: bool = False) -> DataFrame:
     decode_one = _fake_one if fake else _real_one
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out = {"media_id": [], "sample_rate": [], "duration_s": [],
                    "n_bytes": [], "mfcc": []}
@@ -1586,6 +1596,7 @@ def resample_audio(df: DataFrame, out_rate: int,
         return rate, mono
 
     def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out = {"media_id": [], "sample_rate": [], "n_samples": [],
                    "pcm": []}

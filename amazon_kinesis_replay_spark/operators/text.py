@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import drop_zip_finders
+
 #: Tiny English function-word list for the n-gram/stopword heuristic.
 EN_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
@@ -158,6 +160,7 @@ def bpe_encode(df: DataFrame, text_col: str,
 
     @F.pandas_udf("array<string>")
     def _enc(s: pd.Series) -> pd.Series:
+        drop_zip_finders()
         r = bc.value
         cache: dict[str, list[str]] = {}
         return s.map(lambda t: _bpe.encode_text(t or "", r, cache))
@@ -170,6 +173,7 @@ def bpe_encode(df: DataFrame, text_col: str,
 
         @F.pandas_udf("array<long>")
         def _ids(s: pd.Series) -> pd.Series:
+            drop_zip_finders()
             v = bcv.value
             return s.map(lambda toks: [v.get(t, 0) for t in toks])
 
@@ -227,6 +231,7 @@ def unigram_train(df: DataFrame, text_col: str, vocab_size: int = 512,
             pre-aggregation, summed to exact totals per piece."""
             def _kernel(batches):
                 from collections import Counter
+                drop_zip_finders()
                 for pdf in batches:
                     agg: Counter = Counter()
                     for w, c in zip(pdf["word"], pdf["cnt"]):
@@ -305,6 +310,7 @@ def unigram_encode(df: DataFrame, text_col: str,
 
     @F.pandas_udf("array<string>")
     def _enc(s: pd.Series) -> pd.Series:
+        drop_zip_finders()
         sco = bc.value
         cache: dict[str, list[str]] = {}
         return s.map(lambda t: _ug.encode_text(t or "", sco, cache))
@@ -317,6 +323,7 @@ def unigram_encode(df: DataFrame, text_col: str,
 
         @F.pandas_udf("array<long>")
         def _ids(s: pd.Series) -> pd.Series:
+            drop_zip_finders()
             v = bcv.value
             return s.map(lambda toks: [v.get(t, 0) for t in toks])
 

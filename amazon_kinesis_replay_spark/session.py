@@ -9,12 +9,26 @@ reuses its compiled classes instead of recompiling and re-JITting them.
 The cache size is a static conf, fixed when the JVM starts: sessions built
 here set it, and on a session the driver built `ensure_engine_conf` can
 only warn when it is too small.
+
+Worker import posture: every Python kernel the package hands to Spark
+(`mapInPandas` functions and `pandas_udf`s) calls `drop_zip_finders`
+once per invocation, after its own imports. PySpark's worker calls
+`importlib.invalidate_caches()` at the start of every task, and on
+CPython 3.11 and 3.12 that makes every cached `zipimporter` re-read its
+archive's central directory. A reused worker holds ~17 of them
+(`pyspark.zip` and one per imported pyspark subpackage, two for the
+spark-core jar, py4j, this package's shipped zip), so each task paid
+0.14-0.20 CPU-s before running any code. Dropping the cached finders
+leaves nothing to re-read; Python rebuilds a finder on the next import
+that needs one.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import warnings
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -163,15 +177,20 @@ def _ship_package(spark: SparkSession) -> None:
     process was launched from outside the repo, the workers' sys.path does
     not include it; a zipped copy on the Spark files channel fixes that in
     both local and cluster mode.
+
+    The staging dir is removed when the process exits, not before: local
+    executors fetch the zip from its path for the session's whole life.
     """
     if getattr(spark, "_akrs_pyfiles_shipped", False):
         return
+    import atexit
     import shutil
     import tempfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     try:
         staging = tempfile.mkdtemp(prefix="akrs-pyfiles-")
+        atexit.register(shutil.rmtree, staging, ignore_errors=True)
         zip_base = os.path.join(staging, "amazon_kinesis_replay_spark")
         archive = shutil.make_archive(
             zip_base, "zip",
@@ -181,3 +200,22 @@ def _ship_package(spark: SparkSession) -> None:
         spark._akrs_pyfiles_shipped = True
     except Exception:
         pass  # best-effort: repo-rooted runs work without it
+
+
+def drop_zip_finders() -> None:
+    """Delete every `zipimport.zipimporter` from `sys.path_importer_cache`.
+
+    Called by each Python kernel on its worker. The worker's per-task
+    `importlib.invalidate_caches()` re-reads the central directory of
+    every cached zip finder on CPython 3.11 and 3.12 (3.13 only drops the
+    cache); with none cached there is nothing to re-read. The cache is
+    public state that Python refills lazily: the next import that needs
+    a zip entry on the path builds a new finder from the directory
+    `zipimport` already holds for that archive. Archives on a worker's
+    path are never rewritten while it lives (each session ships its
+    package zip from a fresh directory), so that directory stays valid.
+    Modules already imported are untouched."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)

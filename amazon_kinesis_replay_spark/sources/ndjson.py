@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..config import ReplayConfig
 from ..functions import jsonf
+from ..session import drop_zip_finders
 
 
 def _skip_objects(rows: DataFrame, cfg: ReplayConfig, path=None) -> DataFrame:
@@ -186,6 +187,8 @@ def _decode_lines(pdf_iter):
     from ..functions.zstd import ZstdError
     from .lz4frame import LZ4FrameError, decompress_auto
 
+    drop_zip_finders()
+
     # Everything the stdlib decompressors raise on corrupt input: gzip ->
     # BadGzipFile (OSError) or EOFError (truncated) or zlib.error; bz2 ->
     # OSError/ValueError/EOFError; xz -> lzma.LZMAError (plain Exception
@@ -238,6 +241,7 @@ def _decode_lines_numbered(pdf_iter):
     position within its object — the coordinate the sampled-seek
     replica's skip walk is defined over."""
     import pandas as pd
+    drop_zip_finders()
     for pdf in _decode_lines(pdf_iter):
         pdf = pdf.copy()
         pdf["line_no"] = pdf.groupby("path").cumcount()

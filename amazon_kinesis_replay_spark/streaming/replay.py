@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ReplayConfig
+from ..session import drop_zip_finders
 from .sinks import SinkStats, send_with_retry
 
 
@@ -500,6 +501,7 @@ class ReplayEngine:
 
         def _emit(batches):
             import pandas as pd
+            drop_zip_finders()
             st = ReplayStats()
             n = _pace_and_send(batches, sink_factory(), cfg, first_ts, start,
                                st)

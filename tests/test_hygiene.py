@@ -345,6 +345,158 @@ def test_small_codegen_cache_warns_once_per_session():
             S.ensure_engine_conf(FakeSession(conf))
 
 
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _scope_nodes(body: list):
+    """The nodes of one function scope: `body` without descending into
+    nested functions or lambdas (a nested def itself is yielded). Class
+    bodies are walked through, so a method's kernels count."""
+    todo = list(body)
+    while todo:
+        node = todo.pop()
+        yield node
+        if not isinstance(node, _FUNCS + (ast.Lambda,)):
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def _is_pandas_udf(decorator) -> bool:
+    func = decorator.func if isinstance(decorator, ast.Call) else decorator
+    return getattr(func, "id", getattr(func, "attr", None)) == "pandas_udf"
+
+
+def _python_kernels(tree) -> list:
+    """(line, name, def or None) of every function a module hands to Spark
+    as Python code: the first positional argument of each `.mapInPandas(`
+    call, resolved through the enclosing scopes (None when it is not a
+    name defined there, or missing), and every def decorated with
+    `pandas_udf`."""
+    out = []
+
+    def visit(body, env):
+        nodes = list(_scope_nodes(body))
+        env = {**env, **{n.name: n for n in nodes if isinstance(n, _FUNCS)}}
+        for node in nodes:
+            if isinstance(node, _FUNCS):
+                if any(map(_is_pandas_udf, node.decorator_list)):
+                    out.append((node.lineno, node.name, node))
+                visit(node.body, env)
+            elif (isinstance(node, ast.Call)
+                  and getattr(node.func, "attr", None) == "mapInPandas"):
+                arg = node.args[0] if node.args else node
+                out.append((node.lineno, ast.unparse(arg),
+                            env.get(arg.id) if isinstance(arg, ast.Name)
+                            else None))
+
+    visit(tree.body, {})
+    return out
+
+
+def test_every_python_kernel_drops_zip_finders():
+    """Each function the package passes to `.mapInPandas(` or wraps with
+    `pandas_udf` calls `session.drop_zip_finders`: on CPython 3.11/3.12
+    the worker's per-task `importlib.invalidate_caches()` re-reads every
+    cached zip finder's archive directory, ~0.17 CPU-s per task."""
+    offenders, found = [], set()
+    for p in _py_sources():
+        for line, name, fn in _python_kernels(ast.parse(p.read_text())):
+            found.add(name)
+            calls = fn is not None and any(
+                isinstance(n, ast.Call) and "drop_zip_finders" in (
+                    getattr(n.func, "id", None), getattr(n.func, "attr", None))
+                for n in ast.walk(fn))
+            if not calls:
+                offenders.append(f"{_rel(p)}:{line} {name}")
+    assert {"_emit", "_decode_lines", "_decode_lines_numbered", "_enc",
+            "_ids", "_kernel", "_resize", "_resample"} <= found, found
+    assert not offenders, (
+        f"Python kernels that do not call drop_zip_finders: {offenders}")
+
+
+def test_drop_zip_finders_keeps_zip_imports_working(tmp_path, monkeypatch):
+    """After the helper no zip finder is cached, the worker's
+    `invalidate_caches()` re-reads no archive, and a not-yet-imported
+    submodule of the zipped package still imports (its finder is rebuilt
+    from zipimport's directory cache, not from the archive)."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from amazon_kinesis_replay_spark.session import drop_zip_finders
+
+    archive = tmp_path / "zpkg.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("akrs_zpkg/__init__.py", "")
+        zf.writestr("akrs_zpkg/one.py", "VALUE = 1\n")
+        zf.writestr("akrs_zpkg/two.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(str(archive))
+
+    def zip_finders():
+        return [f for f in sys.path_importer_cache.values()
+                if isinstance(f, zipimport.zipimporter)]
+
+    reads = []
+    read_directory = zipimport._read_directory
+    try:
+        one = importlib.import_module("akrs_zpkg.one")
+        assert one.VALUE == 1
+        assert isinstance(one.__loader__, zipimport.zipimporter)
+        assert zip_finders()
+        drop_zip_finders()
+        assert not zip_finders()
+        monkeypatch.setattr(zipimport, "_read_directory",
+                            lambda path: reads.append(path)
+                            or read_directory(path))
+        importlib.invalidate_caches()
+        assert importlib.import_module("akrs_zpkg.two").VALUE == 2
+        assert zip_finders()            # rebuilt lazily by the import
+        assert reads == []
+    finally:
+        for name in [m for m in sys.modules
+                     if m == "akrs_zpkg" or m.startswith("akrs_zpkg.")]:
+            del sys.modules[name]
+
+
+def test_shipped_package_staging_dir_removed_at_exit(tmp_path):
+    """`_ship_package` stages the package zip in a fresh temp dir that
+    must outlive the session (local executors fetch the zip from it) and
+    must not outlive the process. Runs it on a fake session in a child
+    process whose temp root is `tmp_path`."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    child = textwrap.dedent(f"""
+        import os, sys
+        sys.path.insert(0, {str(PKG.parent)!r})
+        from amazon_kinesis_replay_spark import session
+
+        class FakeContext:
+            def addPyFile(self, path):
+                self.path = path
+
+        class FakeSession:
+            sparkContext = FakeContext()
+
+        fake = FakeSession()
+        session._ship_package(fake)
+        assert fake._akrs_pyfiles_shipped
+        assert os.path.isfile(fake.sparkContext.path)
+        print(fake.sparkContext.path)
+    """)
+    run = subprocess.run([sys.executable, "-c", child], cwd=tmp_path,
+                         env={**os.environ, "TMPDIR": str(tmp_path)},
+                         capture_output=True, text=True, timeout=120)
+    assert run.returncode == 0, run.stderr[-2000:]
+    archive = Path(run.stdout.strip())
+    assert archive.parent.parent == tmp_path
+    assert archive.name == "amazon_kinesis_replay_spark.zip"
+    assert not archive.parent.exists()
+    assert not list(tmp_path.glob("akrs-pyfiles-*"))
+
+
 #: Files a user or harness runs directly; every package module must be
 #: imported (at module level or lazily inside a function) from one of
 #: them, or it is code nothing runs.

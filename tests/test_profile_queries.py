@@ -48,3 +48,28 @@ def test_cpu_split_buckets_live_and_exited_threads():
     assert pq.cpu_split(before, after) == {
         "executor": 0.0, "jit": 3.0, "gc": 2.0, "other": 1.0,
         "exited": 3.0}
+
+
+def _stat(pid, comm, ppid, utime, stime, cutime=0, cstime=0):
+    return (f"{pid} ({comm}) S {ppid} {pid} {pid} 0 -1 4194304 100 0 0 0 "
+            f"{utime} {stime} {cutime} {cstime} 20 0 1 0 500 1000 300\n")
+
+
+def test_descendant_ticks_walks_the_tree_below_the_jvm():
+    # JVM 100 -> daemon 200 (its cutime/cstime hold reaped workers) ->
+    # workers 201, 202 -> 203; 300 and 301 are beside the JVM, not below
+    stats = {
+        1: _stat(1, "init", 0, 5, 5, 900, 900),
+        100: _stat(100, "java", 1, 7000, 300, 11, 13),
+        200: _stat(200, "python3 (pyspark.daemon)", 100, 40, 2, 500, 60),
+        201: _stat(201, "python3", 200, 120, 8),
+        202: _stat(202, "py ) worker", 200, 30, 1),
+        203: _stat(203, "sh", 202, 1, 1, 2, 3),
+        300: _stat(300, "python3", 1, 999, 999, 999, 999),
+        301: _stat(301, "python3", 300, 999, 999),
+    }
+    assert pq.descendant_ticks(100, stats) == (
+        (40 + 2 + 500 + 60) + (120 + 8) + (30 + 1) + (1 + 1 + 2 + 3))
+    assert pq.descendant_ticks(202, stats) == 7
+    assert pq.descendant_ticks(203, stats) == 0
+    assert pq.stat_ticks(stats[202]) == 31

@@ -1,4 +1,4 @@
-"""Per-query codegen and JVM-CPU profile of the query registry.
+"""Per-query codegen and CPU profile of the query registry.
 
 Runs passes over the registry queries, each query constructed and run to
 Spark's noop sink with cached relations cleared before it (the shape of
@@ -15,7 +15,11 @@ perfbench's `queries_cold` unit), and reports for every query:
   threads, `jit` (HotSpot C1/C2 compiler threads), `gc`, `other` live
   threads, and `exited` (threads that ended during the query: the
   process total less the live threads' sum) — read from
-  `/proc/<jvm pid>/task/*/{comm,stat}` and `/proc/<jvm pid>/stat`;
+  `/proc/<jvm pid>/task/*/{comm,stat}` and `/proc/<jvm pid>/stat`; and
+  `pyworkers`, the processor time of every process below the JVM (the
+  PySpark daemon and the Python workers it forks): their utime + stime +
+  cutime + cstime from `/proc/<pid>/stat`, so a worker that exited and
+  was reaped still counts through its parent;
 - `wall_s`.
 
 Pass 0 compiles each distinct generated class of the pass once, as long
@@ -43,7 +47,8 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-BUCKETS = ("executor", "jit", "gc", "other", "exited")
+JVM_BUCKETS = ("executor", "jit", "gc", "other", "exited")
+BUCKETS = JVM_BUCKETS + ("pyworkers",)
 #: comm prefixes of each thread class; the kernel cuts comm to 15 bytes
 #: ("Executor task launch worker ..." -> "Executor task l")
 _PREFIXES = (
@@ -63,13 +68,33 @@ def thread_class(comm: str) -> str:
     return "other"
 
 
+def _stat_fields(stat: str) -> list[str]:
+    """The fields of a /proc/<pid>[/task/<tid>]/stat line after comm. The
+    comm field (2) may hold spaces and parentheses, so fields are counted
+    after its closing parenthesis: state (field 3) is [0], ppid [1],
+    utime [11], stime [12], cutime [13] and cstime [14]."""
+    return stat[stat.rindex(")") + 2:].split()
+
+
 def stat_ticks(stat: str) -> int:
-    """utime + stime, in clock ticks, of one /proc/<pid>[/task/<tid>]/stat
-    line. The comm field (2) may hold spaces and parentheses, so fields
-    are counted after its closing parenthesis: state is field 3, utime
-    field 14 and stime field 15."""
-    fields = stat[stat.rindex(")") + 2:].split()
+    """utime + stime, in clock ticks, of one stat line."""
+    fields = _stat_fields(stat)
     return int(fields[11]) + int(fields[12])
+
+
+def descendant_ticks(root: int, stats: dict[int, str]) -> int:
+    """utime + stime + cutime + cstime, in clock ticks, summed over every
+    process below `root`, from `stats` ({pid: /proc/<pid>/stat line}).
+    `root`'s own time is not in it."""
+    children: dict[int, list[int]] = {}
+    for pid, stat in stats.items():
+        children.setdefault(int(_stat_fields(stat)[1]), []).append(pid)
+    total, todo = 0, list(children.get(root, ()))
+    while todo:
+        pid = todo.pop()
+        total += sum(int(x) for x in _stat_fields(stats[pid])[11:15])
+        todo.extend(children.get(pid, ()))
+    return total
 
 
 def _read(path: str) -> str | None:
@@ -92,10 +117,21 @@ def cpu_snapshot(pid: int) -> tuple[int, dict[int, tuple[str, int]]]:
     return stat_ticks(_read(f"/proc/{pid}/stat")), threads
 
 
+def pyworker_ticks(pid: int) -> int:
+    """`descendant_ticks` of process `pid`, read from /proc."""
+    stats = {}
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            stat = _read(f"/proc/{entry}/stat")
+            if stat is not None:
+                stats[int(entry)] = stat
+    return descendant_ticks(pid, stats)
+
+
 def cpu_split(before, after) -> dict[str, float]:
-    """CPU seconds by thread class between two `cpu_snapshot`s."""
+    """CPU seconds by JVM thread class between two `cpu_snapshot`s."""
     (total0, threads0), (total1, threads1) = before, after
-    ticks = dict.fromkeys(BUCKETS, 0)
+    ticks = dict.fromkeys(JVM_BUCKETS, 0)
     for tid, (comm, t1) in threads1.items():
         t0 = threads0.get(tid, (comm, 0))[1]
         ticks[thread_class(comm)] += t1 - t0 if t1 >= t0 else t1
@@ -139,8 +175,8 @@ def main(argv=None) -> int:
         queries, total, wall = {}, dict.fromkeys(BUCKETS, 0.0), 0.0
         for name in names:
             spark.catalog.clearCache()
-            n0, s0, t0 = compile_time.getCount(), cpu_snapshot(pid), \
-                time.perf_counter()
+            n0, s0, p0, t0 = compile_time.getCount(), cpu_snapshot(pid), \
+                pyworker_ticks(pid), time.perf_counter()
             error = None
             try:
                 QUERIES[name].fn(spark, sf_dir).write.format("noop") \
@@ -149,6 +185,8 @@ def main(argv=None) -> int:
                 error = f"{type(exc).__name__}: {exc}"[:300]
             dt = time.perf_counter() - t0
             cpu = cpu_split(s0, cpu_snapshot(pid))
+            cpu["pyworkers"] = round(
+                max(0, pyworker_ticks(pid) - p0) / CLK_TCK, 2)
             row = {"compiles": compile_time.getCount() - n0,
                    "cpu_s": cpu, "wall_s": round(dt, 3)}
             if error:
@@ -158,7 +196,8 @@ def main(argv=None) -> int:
             wall += dt
             print(f"pass {pass_no} {name}: {row['compiles']} compiles, "
                   f"{sum(cpu.values()):.2f} CPU-s (jit {cpu['jit']:.2f}, "
-                  f"executor {cpu['executor']:.2f}), {dt:.2f} s"
+                  f"executor {cpu['executor']:.2f}, "
+                  f"pyworkers {cpu['pyworkers']:.2f}), {dt:.2f} s"
                   + (f" | {error}" if error else ""), file=sys.stderr)
         passes.append({"pass": pass_no,
                        "compiles": sum(q["compiles"] for q in
