@@ -1,8 +1,8 @@
-"""Hadoop FileSystem helpers for index/state directories.
+"""Hadoop FileSystem helpers for the durable reorder gate's state.
 
-Index paths (IVF/IVF×SQ8/BM25 state, reorder-gate epochs) may live on
-HDFS or an object store, not the driver's local disk — `os.path` probes
-are silently wrong there (always False, so every batch "bootstraps" and
+The gate's held epochs (`streaming/replay.py`) may live on HDFS or an
+object store, not the driver's local disk — `os.path` probes are
+silently wrong there (always False, so every batch "bootstraps" and
 discards history). These helpers route every existence/list/delete
 through the JVM-side Hadoop FileSystem resolved FOR the path's scheme,
 so the same code is correct on file://, hdfs:// and s3a://.
@@ -77,22 +77,6 @@ def write_text(spark, path: str, content: str) -> None:
         out.close()
 
 
-def read_text(spark, path: str):
-    """Contents of a small text file, or None when absent."""
-    fs, jpath = _fs(spark, path)
-    p = jpath(path)
-    if not fs.exists(p):
-        return None
-    ins = fs.open(p)
-    try:
-        jvm = spark._jvm
-        baos = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(ins, baos, 4096, False)
-        return bytes(baos.toByteArray()).decode("utf-8")
-    finally:
-        ins.close()
-
-
 def listdir(spark, path: str) -> list[str]:
     """Names of the direct children of `path` (empty when absent) — on
     the PATH's filesystem, like every helper here."""
@@ -104,26 +88,23 @@ def listdir(spark, path: str) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# Generation-pointer index layout (r8)
+# Generation layout of the reorder gate's held epochs
 # ---------------------------------------------------------------------------
 #
-# Persisted-index rebuilds (IVF and IVF×SQ8 re-train, BM25 compaction) and
-# the durable reorder gate's held epochs publish with one commit primitive —
-# no rename anywhere, so it is as safe on object stores (where rename is
-# copy+delete) as on HDFS:
+# The durable reorder gate (`streaming/replay.py`) is the one client. Each
+# micro-batch writes its held state as one generation directory and
+# publishes it with one commit primitive — no rename anywhere, so it is as
+# safe on object stores (where rename is copy+delete) as on HDFS:
 #
-#   <index>/gen=0000000001/<subs...>/_GEN_COMMITTED
-#   <index>/gen=0000000002/<subs...>          <- crashed build: no marker
+#   <held>/gen=0000000007/part-*.parquet, _GEN_COMMITTED
+#   <held>/gen=0000000008/part-*.parquet     <- crashed batch: no marker
 #
-# A rebuild writes a COMPLETE new generation directory, then publishes it by
+# The batch writes a COMPLETE generation directory, then publishes it by
 # creating the (empty) marker file LAST — a single atomic file create on
-# every Hadoop filesystem (and a single PUT on object stores; no rename
-# anywhere on the commit path). Readers resolve to the highest-numbered
-# COMMITTED generation; a crash anywhere before the marker leaves the
-# previous generation untouched and the partial build garbage-collected by
-# the next writer. An index with no committed generation resolves to the
-# root itself: the first IVF, IVF×SQ8 and BM25 writes build there, and the
-# first rebuild moves the index into generations.
+# every Hadoop filesystem (a single PUT on object stores). Readers resolve
+# to the highest-numbered COMMITTED generation; a crash anywhere before the
+# marker leaves the previous generation untouched, and the redelivered
+# batch overwrites its own uncommitted directory.
 
 #: Marker file whose presence makes a generation directory visible to
 #: readers. Written last; never listed by Spark (leading underscore).
@@ -161,32 +142,6 @@ def gen_latest(spark, path: str) -> tuple[int, str | None]:
     return -1, None
 
 
-def gen_current(spark, path: str):
-    """Directory of the latest COMMITTED generation, or None (no pointer
-    layout yet — callers fall back to the legacy root)."""
-    return gen_latest(spark, path)[1]
-
-
-def gen_resolve(spark, path: str) -> str:
-    """The directory index READS should use: the latest committed
-    generation when present, else `path` itself (legacy layout)."""
-    cur = gen_current(spark, path)
-    return cur if cur is not None else path
-
-
-def gen_begin(spark, path: str) -> str:
-    """A fresh, guaranteed-empty build directory for the next generation.
-    Uncommitted generations (crashed builds — recomputable by contract)
-    are deleted first, so numbering never collides with a husk. Builds
-    are single-writer, like the staging directory they replace."""
-    gens = gen_list(spark, path)
-    for n, name, committed in gens:
-        if not committed:
-            delete(spark, f"{path}/{name}")
-    nxt = (max(n for n, _, _ in gens) + 1) if gens else 1
-    return gen_path(path, nxt)
-
-
 def gen_commit(spark, build_dir: str) -> None:
     """Publish a completed generation: one marker-file create. This is
     the ENTIRE critical section — there is no multi-step window for a
@@ -194,36 +149,18 @@ def gen_commit(spark, build_dir: str) -> None:
     write_text(spark, f"{build_dir}/{GEN_MARKER}", "committed\n")
 
 
-def gen_gc(spark, path: str, legacy_subs=(), keep: int = 2) -> None:
-    """Drop superseded state, RETENTION-BOUNDED (r9, verdict item 6):
-    the newest `keep` committed generations always survive, so an
-    in-flight reader that resolved gen N-1 just before a commit never
-    has files deleted under it — readers pin a generation directory at
-    `gen_resolve` time, and keep>=2 gives them a full rebuild cycle to
-    finish (the Iceberg/Delta snapshot-retention contract). The ROOT
-    layout's data subs (`legacy_subs`) are NOT retention-protected: the
-    first IVF, IVF×SQ8 and BM25 writes build at the index root, and the
-    first committed generation supersedes that root copy for every
-    reader (`gen_resolve` never returns the root again), so it drops at
-    once — a one-time move into generations, not a steady-state rebuild
-    cycle. Uncommitted husks older than the latest committed generation
-    are collected (a crashed build is recomputable by contract); a build
-    newer than the latest commit is in progress and untouched.
-    Idempotent and metadata-only; called from write paths after
-    `gen_commit` — a crash between commit and GC just leaves the
-    superseded generation for the next writer to collect."""
-    if keep < 1:
-        raise ValueError(f"gen_gc keep must be >= 1, got {keep}")
+def gen_gc(spark, path: str) -> None:
+    """Keep the latest committed generation: delete every generation
+    older than it, committed or not (a crashed build is recomputable by
+    contract), and leave a newer uncommitted one alone (a build in
+    progress). No-op until a generation has committed. Idempotent and
+    metadata-only; the gate calls it after `gen_commit`, so a crash
+    between the two just leaves the superseded generation for the next
+    batch to collect."""
     gens = gen_list(spark, path)
-    committed = [n for n, _, c in gens if c]
-    if not committed:
+    latest = max((n for n, _, committed in gens if committed), default=None)
+    if latest is None:
         return
-    latest = committed[-1]
-    kept = set(committed[-keep:])
-    for n, name, is_committed in gens:
-        if n in kept:
-            continue
-        if is_committed or n < latest:
+    for n, name, _ in gens:
+        if n < latest:
             delete(spark, f"{path}/{name}")
-    for sub in legacy_subs:
-        delete(spark, f"{path}/{sub}")

@@ -11,10 +11,8 @@ embedding-cosine leg.
 Spark-first shapes:
 
 - `postings` — the inverted index as a DataFrame: one explode + one
-  map-side-combinable groupBy to (term, doc_id, tf). At 100 TB this
-  table is written once (bucket or hive-partition by term hash) and
-  every query is a broadcast semi-join against it — the scan prunes to
-  the query's terms, never re-reading the corpus.
+  map-side-combinable groupBy to (term, doc_id, tf). It is built per
+  call; the package persists no index.
 - `bm25_topk` — score one query: broadcast the (few-term) query table,
   equi-join postings → df-table idf join → per-doc sum →
   TakeOrderedAndProject top-k. No shuffle touches the corpus; the only
@@ -206,238 +204,6 @@ def py_reference_rrf(leg_ids: list[list], k0: int = RRF_K0) -> list[tuple]:
     return out
 
 
-# -- persisted retrieval index (the 100 TB query path) ----------------------
-
-def retrieval_index_write(docs: DataFrame, path: str,
-                          id_col: str = "doc_id", text_col: str = "text",
-                          n_term_buckets: int = 64) -> None:
-    """Build the persisted inverted index: postings hive-partitioned by
-    tb = pmod(xxhash64(term), n_term_buckets), so a query's scan prunes
-    to its terms' buckets at FILE LISTING (the IVF-index pattern,
-    similarity.ivf_index_write). Postings are DENORMALIZED with the
-    doc length (one extra long per row) — the classic search-engine
-    trade that removes the corpus-scale doclen join from every query.
-
-    Layout (all writes idempotent mode=overwrite):
-      postings/delta=0/tb=<b>/...   (term, id, tf, dl)
-      stats/delta=0/                ONE row (n_docs, sum_dl)
-      meta/                         ONE row (n_term_buckets)
-
-    `delta=` is the incremental axis: `retrieval_index_append` adds
-    delta=<batch_id> slices; a query reads the whole tree (partition
-    discovery exposes delta+tb) and sums the per-delta stats rows
-    (#deltas rows — metadata scale). Appends require DISJOINT doc ids
-    vs the existing index (the same contract as every incremental
-    family here); replayed appends OVERWRITE their own delta dir, so
-    redelivery is idempotent with no marker machinery.
-    `retrieval_index_compact` folds accumulated deltas into one base
-    slice under a generation-pointer publish (fsutil.gen_*); readers
-    resolve the latest committed generation, so this write is the
-    LEGACY-root layout that the first compaction migrates in place."""
-    from .. import fsutil
-    spark = docs.sparkSession
-    # a full rebuild supersedes ANY committed generation — readers
-    # prefer generations over the root, so stale gens must go first
-    for _n, name, _c in fsutil.gen_list(spark, path):
-        fsutil.delete(spark, f"{path}/{name}")
-    _write_index_delta(docs, path, 0, id_col, text_col, n_term_buckets)
-    spark.createDataFrame([(int(n_term_buckets),)],
-                          "n_term_buckets long") \
-        .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-
-
-def retrieval_index_append(docs_batch: DataFrame, path: str,
-                           batch_id: int,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> None:
-    """Fold a new batch into the persisted index under its OWN
-    delta=<batch_id> slice (cost ∝ batch, never corpus; idempotent on
-    redelivery because the slice is overwritten by name). Doc ids must
-    be disjoint from every other delta — df/tf additivity depends on
-    it. Single-writer, like every index family here. A batch_id at or
-    below the current generation's folded watermark is a REPLAY of a
-    compacted batch: its rows are already in the base slice, so the
-    append no-ops (re-writing the slice would double-count).
-
-    Crash window: the postings slice and its stats slice are two
-    writes; a crash between them leaves the delta's postings visible
-    with its N/avgdl contribution missing (scores skew slightly until
-    redelivery overwrites BOTH slices by name and heals it). Bounded,
-    self-healing, and the same at-least-once class as the pair-sink
-    modalities — called out here rather than hidden."""
-    from .. import fsutil
-    if batch_id <= 0:
-        raise ValueError("batch_id must be > 0 (0 is the base build)")
-    spark = docs_batch.sparkSession
-    base = fsutil.gen_resolve(spark, path)
-    folded = fsutil.read_text(spark, base + "/folded_max.txt")
-    if folded is not None and int(batch_id) <= int(folded.strip()):
-        return
-    n_tb = int(spark.read.parquet(path + "/meta")
-               .head()["n_term_buckets"])
-    _write_index_delta(docs_batch, base, int(batch_id),
-                       id_col, text_col, n_tb)
-
-
-def _write_index_delta(docs, path, delta, id_col, text_col, n_tb):
-    post = postings(docs, id_col, text_col) \
-        .join(doc_lengths(docs, id_col, text_col), "id") \
-        .withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(int(n_tb))))
-    post.write.mode("overwrite").partitionBy("tb") \
-        .parquet(f"{path}/postings/delta={delta}")
-    dl = doc_lengths(docs, id_col, text_col)
-    dl.agg(F.count("*").cast("long").alias("n_docs"),
-           F.sum("dl").cast("long").alias("sum_dl")) \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(f"{path}/stats/delta={delta}")
-
-
-def bm25_topk_indexed(spark, path: str, query: str, k: int = 10,
-                      k1: float = K1, b: float = B) -> DataFrame:
-    """Query the persisted index: the postings scan carries
-    PartitionFilters on tb (only the query terms' buckets are listed,
-    ~len(query)/n_term_buckets of the index at most), df is exact from
-    the pruned read itself (a bucket holds EVERY posting of its terms,
-    across all deltas), and N/avgdl come from the per-delta stats rows.
-    Same scores as `bm25_topk` on the same corpus (pinned by test)."""
-    from .. import fsutil
-    from ..functions.xxh import tokens_spark, xxh64_string
-    terms = tokens_spark(query)
-    if not any(terms):
-        raise ValueError("empty query")
-    weights: dict[str, int] = {}
-    for t in terms:
-        weights[t] = weights.get(t, 0) + 1
-    base = fsutil.gen_resolve(spark, path)
-    n_tb = int(spark.read.parquet(path + "/meta")
-               .head()["n_term_buckets"])
-    buckets = sorted({xxh64_string(t) % n_tb for t in weights})
-    st = spark.read.parquet(base + "/stats") \
-        .agg(F.sum("n_docs").cast("long").alias("n_docs"),
-             F.sum("sum_dl").cast("long").alias("sum_dl")).head()
-    n_docs, sum_dl = int(st["n_docs"]), int(st["sum_dl"])
-    q_df = spark.createDataFrame(sorted(weights.items()),
-                                 "term string, qw long")
-    post = (spark.read.parquet(base + "/postings")
-            .filter(F.col("tb").isin([int(x) for x in buckets]))
-            .join(F.broadcast(q_df), "term"))
-    dfreq = post.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    matched = post.join(F.broadcast(dfreq), "term")
-    avgdl = sum_dl / n_docs
-    idf = F.log(F.lit(1.0)
-                + (F.lit(n_docs) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b)
-                              * F.col("dl") / F.lit(avgdl))
-    contrib = F.col("qw") * idf * tf * F.lit(k1 + 1.0) / denom
-    return (matched.groupBy("id")
-            .agg(F.sum(contrib).alias("score"))
-            .orderBy(F.col("score").desc(), F.col("id").asc())
-            .limit(k))
-
-
-def bm25_topk_batch(spark, path: str, queries: dict[str, str],
-                    k: int = 10, k1: float = K1, b: float = B) -> DataFrame:
-    """Score MANY queries in ONE pass over the persisted index — the
-    shape that amortizes at 100 TB (a contamination audit runs
-    thousands of eval phrases; per-query scans would re-list the index
-    thousands of times). All queries' terms union into one broadcast
-    (query_id, term, qw) table; the postings scan prunes to the UNION
-    of their buckets; one join scores every (query, doc) pair; ranks
-    come from a window partitioned BY QUERY (parallel in query count,
-    never a global sort). Returns (query_id, id, score, rank) rows,
-    rank <= k, same per-query results as bm25_topk_indexed (pinned by
-    test)."""
-    from pyspark.sql import Window
-
-    from .. import fsutil
-    from ..functions.xxh import tokens_spark, xxh64_string
-    if not queries:
-        raise ValueError("no queries")
-    rows = []
-    for qid, q in sorted(queries.items()):
-        weights: dict[str, int] = {}
-        for t in tokens_spark(q):
-            weights[t] = weights.get(t, 0) + 1
-        if not any(weights):
-            raise ValueError(f"empty query: {qid!r}")
-        rows.extend((qid, t, w) for t, w in sorted(weights.items()))
-    base = fsutil.gen_resolve(spark, path)
-    n_tb = int(spark.read.parquet(path + "/meta")
-               .head()["n_term_buckets"])
-    buckets = sorted({xxh64_string(t) % n_tb for _q, t, _w in rows})
-    st = spark.read.parquet(base + "/stats") \
-        .agg(F.sum("n_docs").cast("long").alias("n_docs"),
-             F.sum("sum_dl").cast("long").alias("sum_dl")).head()
-    n_docs, sum_dl = int(st["n_docs"]), int(st["sum_dl"])
-    q_df = spark.createDataFrame(rows, "query_id string, term string, "
-                                       "qw long")
-    post = (spark.read.parquet(base + "/postings")
-            .filter(F.col("tb").isin([int(x) for x in buckets])))
-    # df per term, exact from the pruned read (bucket-complete), shared
-    # across every query that uses the term
-    dfreq = (post.join(F.broadcast(q_df.select("term").distinct()),
-                       "term")
-             .groupBy("term").agg(F.count("*").cast("long").alias("df")))
-    matched = (post.join(F.broadcast(q_df), "term")
-               .join(F.broadcast(dfreq), "term"))
-    avgdl = sum_dl / n_docs
-    idf = F.log(F.lit(1.0)
-                + (F.lit(n_docs) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    tf = F.col("tf").cast("double")
-    denom = tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b)
-                              * F.col("dl") / F.lit(avgdl))
-    contrib = F.col("qw") * idf * tf * F.lit(k1 + 1.0) / denom
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("id").asc())
-    return (matched.groupBy("query_id", "id")
-            .agg(F.sum(contrib).alias("score"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
-def retrieval_index_compact(spark, path: str) -> int:
-    """Fold every accumulated delta slice into ONE base slice under a
-    new generation (fsutil.gen_begin → write → one-marker gen_commit →
-    gen_gc): delta dirs grow one per append forever otherwise, and at
-    100 TB the per-query file listing — not the data — becomes the tax.
-    Postings rows are DISJOINT across deltas (the append contract), so
-    compaction is a pure re-partitioned rewrite: no count summing, no
-    manifest arithmetic. The folded watermark (max delta id) rides
-    the new generation so a replayed append of a compacted batch
-    no-ops instead of double-counting. Crash anywhere before the
-    marker: readers stay on the old generation and the husk is swept
-    by the next gen_begin — no heal routine exists because no window
-    needs one. Single-writer, like every index family here. Returns
-    the number of delta slices folded."""
-    from .. import fsutil
-    base = fsutil.gen_resolve(spark, path)
-    deltas = sorted(int(n.split("=", 1)[1])
-                    for n in fsutil.listdir(spark, base + "/postings")
-                    if n.startswith("delta="))
-    if len(deltas) <= 1:
-        return 0                      # nothing to fold
-    build = fsutil.gen_begin(spark, path)
-    (spark.read.parquet(base + "/postings")
-     .select("term", "id", "tf", "dl", "tb")
-     .write.partitionBy("tb").parquet(build + "/postings/delta=0"))
-    (spark.read.parquet(base + "/stats")
-     .agg(F.sum("n_docs").cast("long").alias("n_docs"),
-          F.sum("sum_dl").cast("long").alias("sum_dl"))
-     .coalesce(1).write.parquet(build + "/stats/delta=0"))
-    # the watermark carries FORWARD: a pre-compaction watermark means
-    # those batch ids were folded by an EARLIER compaction and must
-    # stay no-ops after this one too
-    prev = fsutil.read_text(spark, base + "/folded_max.txt")
-    hi = max(deltas + ([int(prev.strip())] if prev is not None else []))
-    fsutil.write_text(spark, build + "/folded_max.txt", f"{hi}\n")
-    fsutil.gen_commit(spark, build)
-    fsutil.gen_gc(spark, path, legacy_subs=("postings", "stats"))
-    return len(deltas)
-
-
 def hybrid_topk(docs: DataFrame, emb: DataFrame, query_text: str,
                 query_vec: list[float], k: int = 10,
                 doc_id_col: str = "doc_id", text_col: str = "text",
@@ -445,7 +211,7 @@ def hybrid_topk(docs: DataFrame, emb: DataFrame, query_text: str,
                 k0: int = RRF_K0) -> DataFrame:
     """Hybrid retrieval in one call: a BM25 keyword leg over `docs` and
     an exact cosine leg over `emb` (similarity.brute_force_topk — swap
-    in lsh/ivf/ivfpq for the approximate tiers, their output shape is
+    in lsh/ivf/pq/sq8 for the approximate tiers, their output shape is
     identical), fused by reciprocal rank. Both legs retrieve 2k
     candidates (the standard fusion over-fetch: an id ranked k+1 on
     both legs can outrank an id ranked 1 on one and absent on the

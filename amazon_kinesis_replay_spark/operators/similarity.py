@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import fsutil
-
 #: Cross-engine-exact quantization scale (r10, replacing the mirrored
 #: double->decimal(24,12) cast): q(v) = floor(v*1e12 + 0.5) — floor,
 #: multiply and add are IEEE-deterministic doubles, so BOTH engines
@@ -203,7 +201,7 @@ def lsh_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
         raise ValueError(
             f"n_probe={n_probe} exceeds the {reachable} buckets reachable "
             f"with max_flip={max_flip} flips; raise max_flip (<= n_bits) "
-            "or use the IVF index for deeper probing")
+            "or use the IVF tier (ivf_topk) for deeper probing")
     bucketed = emb.withColumn("bucket", sign_bucket(F.col(vec_col), n_bits))
     q = query_df.withColumn("q_bucket", sign_bucket(F.col("q_vec"), n_bits))
     if n_probe <= 1:
@@ -331,18 +329,17 @@ def ivf_assign(emb: DataFrame, n_centroids: int = 16,
 
     Default centroids are the first n_centroids vectors by id —
     deterministic and dependency-free; pass `centroids` from
-    `kmeans_centroids` for a trained index. The plan shape (tiny broadcast
+    `kmeans_centroids` for trained lists. The plan shape (tiny broadcast
     centroid table, one scored pass, per-vector argmax via a narrow window
     over n_centroids rows) is identical either way.
-    Output: (id, vec, centroid_id). At scale, write the corpus partitioned
-    by centroid_id; probes then prune to n_probe/n_centroids of the data.
+    Output: (id, vec, centroid_id).
     """
     cents = centroids if centroids is not None else _seed_centroids(
         emb, n_centroids, id_col, vec_col)
     # delegate to the shared ranked-assignment helper at width 1 (r13
     # review: two verbatim copies of the scored-window block let a
     # future edit to one silently break the rank-1 == ivf_assign parity
-    # the v2 index format depends on)
+    # the multi-assign semantic_dedup depends on)
     return _ranked_assign(emb, cents, 1, id_col=id_col, vec_col=vec_col,
                           exact=exact).drop("assign_rank")
 
@@ -369,147 +366,6 @@ def ivf_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
              .select("centroid_id"))
     probed = assigned.join(F.broadcast(probe), "centroid_id")
     scored = (probed.crossJoin(F.broadcast(query_df))
-              .select(F.col("id").alias(id_col),
-                      F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
-def ivf_index_write(emb: DataFrame, path: str, n_centroids: int = 16,
-                    train_iters: int = 0, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    centroids: DataFrame | None = None) -> None:
-    """Build and persist an IVF index: the corpus assigned to inverted
-    lists and written as parquet PARTITIONED BY centroid_id, plus the
-    centroid table alongside.
-
-    This is the 100 TB probe story made physical: because each inverted
-    list is a hive-style partition directory, a probe filter on
-    centroid_id prunes at the FILE LISTING level (PartitionFilters in the
-    scan, not a post-scan filter) — a probe of n_probe/n_centroids lists
-    reads exactly that fraction of the index from storage. Build cost is
-    one assign pass (corpus x broadcast centroids) + one shuffle-free
-    partitioned write."""
-    cents = centroids
-    if cents is None:
-        cents = (kmeans_centroids(emb, n_centroids, train_iters,
-                                  id_col, vec_col)
-                 if train_iters > 0
-                 else _seed_centroids(emb, n_centroids, id_col, vec_col))
-    assigned = ivf_assign(emb, n_centroids, id_col, vec_col, centroids=cents)
-    (assigned.write.mode("overwrite")
-     .partitionBy("centroid_id").parquet(path + "/vectors"))
-    cents.write.mode("overwrite").parquet(path + "/centroids")
-    # Trained-size watermark for the re-train policy; counting the
-    # just-written parquet is a footer-only job (no data read).
-    spark = emb.sparkSession
-    n = spark.read.parquet(path + "/vectors").count()
-    spark.createDataFrame([(n, n_centroids)],
-                          "n_at_train long, n_centroids int") \
-        .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-
-
-def ivf_index_maybe_retrain(spark, path: str, growth_threshold: float = 0.5,
-                            train_iters: int = 2,
-                            max_list_share: float | None = None) -> bool:
-    """Periodic re-train policy for a persisted IVF index (the drift half
-    of the append story: ivf_index_append keeps the centroid geometry
-    frozen, so appended mass degrades list balance and probe recall over
-    time).
-
-    Two independent triggers, both metadata-scale (row counts come from
-    parquet footers / the partition-column projection — no vector data
-    is read):
-    - GROWTH: rows appended since the last train exceed
-      `growth_threshold` of the trained size. Catches steady drift.
-    - IMBALANCE (`max_list_share`, opt-in): the largest inverted list
-      holds more than that share of all vectors. Catches the failure
-      growth can't see — a stream of near-identical appends piling into
-      ONE list, which makes every probe of that list scan a constant
-      fraction of the corpus (the N^2-confinement argument breaks) long
-      before total growth trips. A balanced index has share ~1/n_lists,
-      so thresholds a few multiples of that (e.g. 0.25 at 16 lists) are
-      meaningful; None (default) keeps the r6 growth-only behavior.
-
-    An index without a meta table (pre-policy layout) is treated as due.
-    On trigger: re-train k-means on the full corpus, rebuild into the
-    NEXT GENERATION directory, and publish it with one atomic marker-file
-    create (`fsutil.gen_commit`) — readers see the old generation until
-    the marker exists, a crash before it leaves the old generation
-    untouched, and there is no rename anywhere on the commit path (safe
-    on object stores, where rename is copy+delete).
-
-    Returns True iff a re-train ran.
-    """
-    base = fsutil.gen_resolve(spark, path)
-    vecs = spark.read.parquet(base + "/vectors")
-    n_now = vecs.count()
-    try:
-        meta = spark.read.parquet(base + "/meta").head()
-        n_at_train, n_cent = meta["n_at_train"], meta["n_centroids"]
-    except Exception:
-        n_at_train, n_cent = None, None
-    due = n_at_train is None
-    if not due:
-        due = (n_now - n_at_train) > growth_threshold * max(n_at_train, 1)
-    if not due and max_list_share is not None:
-        biggest = (vecs.groupBy("centroid_id")
-                   .agg(F.count("*").alias("n"))
-                   .agg(F.max("n")).head()[0]) or 0
-        due = biggest > max_list_share * max(n_now, 1)
-    if not due:
-        return False
-    if n_cent is None:
-        n_cent = spark.read.parquet(base + "/centroids").count()
-
-    emb = vecs.select(F.col("id").alias("vec_id"),
-                      F.col("vec").alias("embedding"))
-    build = fsutil.gen_begin(spark, path)
-    ivf_index_write(emb, build, n_centroids=int(n_cent),
-                    train_iters=train_iters)
-    fsutil.gen_commit(spark, build)
-    fsutil.gen_gc(spark, path, legacy_subs=("vectors", "centroids", "meta"))
-    return True
-
-
-def ivf_index_append(spark, emb_new: DataFrame, path: str,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> None:
-    """Incrementally add vectors to a persisted IVF index: assign the NEW
-    vectors against the index's SAVED centroids (the index's geometry is
-    immutable between re-trains — appending must not move existing lists)
-    and append their parquet files into the matching centroid_id
-    partition directories. Cost is one assign pass over the new vectors
-    plus a partitioned append — the existing index is never read or
-    rewritten. Re-train + full rewrite (ivf_index_write with train_iters)
-    remains the periodic compaction path when drift accumulates."""
-    base = fsutil.gen_resolve(spark, path)
-    saved = spark.read.parquet(base + "/centroids")
-    rows = saved.collect()                       # tiny; pin as a literal
-    cents = spark.createDataFrame(rows, saved.schema)
-    assigned = ivf_assign(emb_new, len(rows), id_col, vec_col,
-                          centroids=cents)
-    (assigned.write.mode("append")
-     .partitionBy("centroid_id").parquet(base + "/vectors"))
-
-
-def ivf_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
-                   n_probe: int = 4, id_col: str = "vec_id") -> DataFrame:
-    """Query a persisted IVF index: score the query against the (tiny)
-    centroid table, collect the n_probe nearest list ids — metadata-scale,
-    not data — and scan ONLY those partitions of the vectors table via a
-    static centroid_id IN (...) filter, which Spark turns into partition
-    pruning at file-listing time. Exact cosine within the probed lists."""
-    base = fsutil.gen_resolve(spark, path)
-    cents = spark.read.parquet(base + "/centroids")
-    probe = (cents.crossJoin(F.broadcast(query_df))
-             .select("centroid_id",
-                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
-             .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-             .limit(n_probe))
-    lists = [r["centroid_id"] for r in probe.collect()]
-    vecs = (spark.read.parquet(base + "/vectors")
-            .filter(F.col("centroid_id").isin(lists)))
-    scored = (vecs.crossJoin(F.broadcast(query_df))
               .select(F.col("id").alias(id_col),
                       F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
@@ -971,8 +827,7 @@ def pq_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
     broadcast; coarse scoring is one equi-join of the exploded codes
     against it plus a map-side-combinable sum — the float vectors are
     touched only for the tiny re-rank set. Pass precomputed `codebooks` /
-    `codes` to amortize training and encoding across queries (the
-    at-rest index form)."""
+    `codes` to amortize training and encoding across queries."""
     cb = codebooks if codebooks is not None else pq_train(
         emb, n_subs, n_codes, dim=dim, id_col=id_col, vec_col=vec_col)
     enc = codes if codes is not None else pq_encode(
@@ -1002,111 +857,6 @@ def pq_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
     return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
-def ivf_pq_index_write(emb: DataFrame, path: str, n_centroids: int = 16,
-                       n_subs: int = 8, n_codes: int = 16, dim: int = 64,
-                       train_iters: int = 2, id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> None:
-    """IVF-PQ index: the coarse IVF layout (hive-partitioned by
-    centroid_id — probes prune at file listing) with PQ CODES stored in
-    the hot lists and the float vectors in a separate cold table fetched
-    only for re-rank. This is the composition that survives 100 TB: the
-    probed scan reads n_probe/n_centroids of a 16x-compressed table, and
-    floats are touched per-candidate, not per-scan.
-
-    Layout under `path`: vectors/ (centroid_id-partitioned: id, codes),
-    floats/ (id, vec — re-rank fetch), centroids/, pq_codebooks/, meta/.
-    """
-    cents = kmeans_centroids(emb, n_centroids, train_iters, id_col, vec_col)
-    cb = pq_train(emb, n_subs, n_codes, dim=dim,
-                  id_col=id_col, vec_col=vec_col)
-    assigned = ivf_assign(emb, n_centroids, id_col, vec_col, centroids=cents)
-    codes = pq_encode(emb, cb, n_subs, dim=dim,
-                      id_col=id_col, vec_col=vec_col)
-    (assigned.select("id", "centroid_id").join(codes, "id")
-     .write.mode("overwrite").partitionBy("centroid_id")
-     .parquet(path + "/vectors"))
-    (emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-     .write.mode("overwrite").parquet(path + "/floats"))
-    cents.write.mode("overwrite").parquet(path + "/centroids")
-    cb.write.mode("overwrite").parquet(path + "/pq_codebooks")
-    spark = emb.sparkSession
-    spark.createDataFrame([(n_subs, n_codes, dim)],
-                          "n_subs int, n_codes int, dim int") \
-        .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-
-
-def ivf_pq_index_append(spark, emb_new: DataFrame, path: str,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> None:
-    """Incrementally add vectors to a persisted IVF-PQ index: assign the
-    NEW vectors against the SAVED centroids and encode them with the
-    SAVED codebooks (both geometries are immutable between re-trains —
-    an append must neither move existing lists nor re-quantize existing
-    codes), then append codes into the matching centroid_id partitions
-    and floats into the cold re-rank table. Cost ∝ the new batch; the
-    existing index is never read or rewritten. Full rebuild
-    (ivf_pq_index_write) remains the periodic compaction path."""
-    meta = spark.read.parquet(path + "/meta").head()
-    n_subs, dim = meta["n_subs"], meta["dim"]
-    saved = spark.read.parquet(path + "/centroids")
-    rows = saved.collect()                       # tiny; pin as a literal
-    cents = spark.createDataFrame(rows, saved.schema)
-    cb = spark.read.parquet(path + "/pq_codebooks")
-    assigned = ivf_assign(emb_new, len(rows), id_col, vec_col,
-                          centroids=cents)
-    codes = pq_encode(emb_new, cb, int(n_subs), dim=int(dim),
-                      id_col=id_col, vec_col=vec_col)
-    (assigned.select("id", "centroid_id").join(codes, "id")
-     .write.mode("append").partitionBy("centroid_id")
-     .parquet(path + "/vectors"))
-    (emb_new.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-     .write.mode("append").parquet(path + "/floats"))
-
-
-def ivf_pq_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
-                      n_probe: int = 4, rerank_factor: int = 4,
-                      id_col: str = "vec_id") -> DataFrame:
-    """Query an IVF-PQ index: centroid scoring (tiny) -> partition-pruned
-    scan of the probed lists' CODES -> broadcast ADC table join + sum ->
-    exact cosine re-rank of k*rerank_factor candidates against the cold
-    float table (point-lookup join by id)."""
-    meta = spark.read.parquet(path + "/meta").head()
-    n_subs, dim = meta["n_subs"], meta["dim"]
-    d = dim // n_subs
-
-    cents = spark.read.parquet(path + "/centroids")
-    probe = (cents.crossJoin(F.broadcast(query_df))
-             .select("centroid_id",
-                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
-             .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-             .limit(n_probe))
-    lists = [r["centroid_id"] for r in probe.collect()]
-
-    cb = spark.read.parquet(path + "/pq_codebooks")
-    qsubs = (query_df.select(_unit("q_vec").alias("qu"))
-             .select(F.posexplode(F.array(*[
-                 F.slice("qu", j * d + 1, d) for j in range(n_subs)
-             ])).alias("sub_id", "qv")))
-    table = (cb.join(F.broadcast(qsubs), "sub_id")
-             .select("sub_id", "code",
-                     _l2sq(F.col("c_vec"), F.col("qv")).alias("dist")))
-
-    probed = (spark.read.parquet(path + "/vectors")
-              .filter(F.col("centroid_id").isin(lists)))
-    coarse = (probed.select("id", F.posexplode("codes")
-                            .alias("sub_id", "code"))
-              .join(F.broadcast(table), ["sub_id", "code"])
-              .groupBy("id").agg(F.sum("dist").alias("adc")))
-    cand = (coarse.orderBy(F.col("adc").asc(), F.col("id").asc())
-            .limit(k * rerank_factor))
-
-    floats = spark.read.parquet(path + "/floats")
-    rer = (cand.join(floats, "id").crossJoin(F.broadcast(query_df))
-           .select(F.col("id").alias(id_col),
-                   F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
-    return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
 # ===========================================================================
 # Scalar quantization (SQ8) — int8-range codes, asymmetric scoring + rescore
 # ===========================================================================
@@ -1116,8 +866,7 @@ _SQ8_APPROX_SQL = f"scale * {_fast_dot_sql('qd', 'codes')} AS approx"
 
 
 def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding",
-               carry: tuple[str, ...] = ()) -> DataFrame:
+               vec_col: str = "embedding") -> DataFrame:
     """Scalar-quantize float vectors to int8-range codes:
     code_i = floor(((x_i * 127) / max|x|) + 0.5), per-vector scale
     = max|x| / 127 reconstructs x_i ~= code_i * scale.
@@ -1125,10 +874,10 @@ def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
     Scale rationale: at 100 TB the ANN scan cost is BYTES READ — int8
     codes are 1/4 of float32 (1/8 of the double the scorer would widen
     to), so a codes-only hot table cuts the scan by 4x while the exact
-    rescore touches only the top candidates' float rows (same
-    codes-hot/floats-cold split as the PQ index, but with a
-    training-free, per-vector-exact codec; PQ compresses harder, SQ8
-    reconstructs tighter and needs no codebook maintenance).
+    rescore touches only the top candidates' float rows (the
+    codes-hot/floats-cold split of `pq_topk`, but with a training-free,
+    per-vector-exact codec; PQ compresses harder, SQ8 reconstructs
+    tighter and needs no codebook maintenance).
 
     Cross-engine determinism (the kind='sq8' gate row in dedup_exact):
     every operation is IEEE double arithmetic with a pinned expression
@@ -1150,23 +899,7 @@ def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
     return enc.select(
         F.col(id_col).alias("id"),
         (F.col("__maxabs") / F.lit(127.0)).alias("scale"),
-        F.transform(F.col(vec_col), code).alias("codes"),
-        *[F.col(c) for c in carry])
-
-
-def _require_single_query(query_df: DataFrame) -> None:
-    """Guard for topk entry points whose candidate stage takes ONE
-    global limit: a multi-row query_df would mix candidates across
-    queries (r8 advice item). limit(2).count() is metadata-cheap —
-    the query frame is driver-built and broadcast-sized by contract."""
-    n = query_df.limit(2).count()
-    if n != 1:
-        raise ValueError(
-            f"query_df must contain exactly one query vector (got "
-            f"{'>=2' if n > 1 else n}): the candidate top-k is a single "
-            "global limit; use the batched multi-query entry points "
-            "(sq8_topk_batch / ivf_sq_probe_topk_batch, or "
-            "bm25_topk_indexed for text), or run queries in a loop.")
+        F.transform(F.col(vec_col), code).alias("codes"))
 
 
 def sq8_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
@@ -1184,17 +917,21 @@ def sq8_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
     only the candidate ids' float vectors.
 
     Unlike LSH/IVF this scans EVERY code row (no pruning) — the win is
-    bytes-per-row, not rows; compose with the IVF list layout when both
-    levers are needed (prune lists, scan codes).
+    bytes-per-row, not rows.
 
     SINGLE-QUERY contract (r8 advice item): query_df must hold exactly
     one query vector — the candidate stage takes ONE global
     top-(k*rerank_factor), so several query rows would compete for one
     candidate pool and silently starve each other. Enforced with a
-    metadata-cheap count; loop (or use the BM25 side's batched pattern)
-    for multi-query workloads.
+    metadata-cheap count (the query frame is driver-built and
+    broadcast-sized); use `sq8_topk_batch` for multi-query workloads.
     """
-    _require_single_query(query_df)
+    n = query_df.limit(2).count()
+    if n != 1:
+        raise ValueError(
+            f"query_df must contain exactly one query vector (got "
+            f"{'>=2' if n > 1 else n}): the candidate top-k is a single "
+            "global limit; use sq8_topk_batch, or run queries in a loop.")
     enc = sq8_encode(emb, id_col, vec_col)
     qd = query_df.select(F.col("q_vec").cast("array<double>").alias("qd"))
     approx = (enc.crossJoin(F.broadcast(qd))
@@ -1206,34 +943,6 @@ def sq8_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
            .select(F.col("id").alias(id_col),
                    F.expr(cosine_sql(vec_col, "q_vec")).alias("cosine")))
     return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
-def _sq8_batch_rank(approx: DataFrame, floats: DataFrame,
-                    query_df: DataFrame, k: int, rerank_factor: int,
-                    id_col: str) -> DataFrame:
-    """Shared tail of the batched SQ8 entry points: per-QUERY candidate
-    window (rank <= k*rerank_factor over the asymmetric score), exact
-    decimal-cosine rescore of only the candidate ids, per-query final
-    rank <= k. Windows partition by query_id — parallel in query count,
-    never a global sort (the bm25_topk_batch shape). `approx` carries
-    (query_id, id, approx); `floats` carries (id, vec)."""
-    from pyspark.sql import Window
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("id").asc())
-    cand = (approx.withColumn("__r", F.row_number().over(w1))
-            .filter(F.col("__r") <= k * rerank_factor)
-            .select("query_id", "id"))
-    rer = (cand.join(floats, "id")
-           .join(F.broadcast(query_df.select("query_id", "q_vec")),
-                 "query_id")
-           .select("query_id", F.col("id").alias(id_col),
-                   F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc())
-    return (rer.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", id_col, "cosine",
-                    F.col("rank").cast("long").alias("rank")))
 
 
 def sq8_topk_batch(emb: DataFrame, query_df: DataFrame, k: int = 10,
@@ -1250,6 +959,7 @@ def sq8_topk_batch(emb: DataFrame, query_df: DataFrame, k: int = 10,
     the single-query guard on `sq8_topk` exists to prevent). Returns
     (query_id, id, cosine, rank<=k); per-query results identical to a
     `sq8_topk` loop (pinned by test)."""
+    from pyspark.sql import Window
     enc = sq8_encode(emb, id_col, vec_col)
     qd = query_df.select(
         "query_id", F.col("q_vec").cast("array<double>").alias("qd"))
@@ -1257,186 +967,19 @@ def sq8_topk_batch(emb: DataFrame, query_df: DataFrame, k: int = 10,
               .selectExpr("query_id", "id", _SQ8_APPROX_SQL))
     floats = emb.select(F.col(id_col).alias("id"),
                         F.col(vec_col).alias("vec"))
-    return _sq8_batch_rank(approx, floats, query_df, k, rerank_factor,
-                           id_col)
-
-
-def ivf_sq_probe_topk_batch(spark, path: str, query_df: DataFrame,
-                            k: int = 10, n_probe: int = 4,
-                            rerank_factor: int = 4,
-                            id_col: str = "vec_id") -> DataFrame:
-    """Batched IVF x SQ8 probe: every query's n_probe nearest lists are
-    resolved in one centroid pass (window per query over the tiny
-    centroid x query cross), the codes scan prunes to the UNION of all
-    probed lists at file listing, and a broadcast (query_id,
-    centroid_id) join restricts each query to ITS lists within that
-    scan — one partition-pruned pass serves the whole batch. Same
-    output contract as `sq8_topk_batch`; per-query results identical
-    to an `ivf_sq_probe_topk` loop (pinned by test)."""
-    from pyspark.sql import Window
-    base = fsutil.gen_resolve(spark, path)
-    cents = spark.read.parquet(base + "/centroids")
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id").asc())
-    probe = (cents.crossJoin(F.broadcast(query_df))
-             .select("query_id", "centroid_id",
-                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
-             .withColumn("__r", F.row_number().over(wq))
-             .filter(F.col("__r") <= n_probe)
-             .select("query_id", "centroid_id"))
-    pairs = probe.collect()         # queries x n_probe rows — tiny
-    lists = sorted({r["centroid_id"] for r in pairs})
-    pair_df = spark.createDataFrame(
-        [(r["query_id"], r["centroid_id"]) for r in pairs],
-        "query_id string, centroid_id int")
-    qd = query_df.select(
-        "query_id", F.col("q_vec").cast("array<double>").alias("qd"))
-    codes = (spark.read.parquet(base + "/codes")
-             .filter(F.col("centroid_id").isin([int(x) for x in lists]))
-             .join(F.broadcast(pair_df), "centroid_id"))
-    approx = (codes.join(F.broadcast(qd), "query_id")
-              .selectExpr("query_id", "id", _SQ8_APPROX_SQL))
-    floats = spark.read.parquet(base + "/floats")
-    return _sq8_batch_rank(approx, floats, query_df, k, rerank_factor,
-                           id_col)
-
-
-def ivf_sq_index_write(emb: DataFrame, path: str, n_centroids: int = 16,
-                       train_iters: int = 0, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       centroids: DataFrame | None = None) -> None:
-    """IVF x SQ8 composed index — both 100 TB levers in one layout:
-    the HOT table carries (id, scale, int8-range codes) hive-partitioned
-    by centroid_id, so a probe (a) prunes to n_probe/n_centroids lists
-    at FILE LISTING (PartitionFilters, the ivf_index_write story) and
-    (b) scans 1/4-width code rows within them (the sq8_encode story);
-    full floats live in a separate COLD table touched only for the
-    k*rerank_factor exact rescore. PQ compresses harder (n_subs bytes);
-    SQ8 rescores tighter and needs no codebook training/maintenance —
-    the same trade as the unindexed variants, now with list pruning."""
-    cents = centroids
-    if cents is None:
-        cents = (kmeans_centroids(emb, n_centroids, train_iters,
-                                  id_col, vec_col)
-                 if train_iters > 0
-                 else _seed_centroids(emb, n_centroids, id_col, vec_col))
-    assigned = ivf_assign(emb, n_centroids, id_col, vec_col,
-                          centroids=cents)
-    codes = sq8_encode(assigned, id_col="id", vec_col="vec",
-                       carry=("centroid_id",))
-    (codes.write.mode("overwrite")
-     .partitionBy("centroid_id").parquet(path + "/codes"))
-    assigned.select("id", "vec").write.mode("overwrite") \
-        .parquet(path + "/floats")
-    cents.write.mode("overwrite").parquet(path + "/centroids")
-    # Trained-size watermark for the re-train policy (footer-only count)
-    spark = emb.sparkSession
-    n = spark.read.parquet(path + "/codes").count()
-    n_cent_actual = cents.count()
-    spark.createDataFrame([(n, n_cent_actual)],
-                          "n_at_train long, n_centroids int") \
-        .coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-
-
-def ivf_sq_probe_topk(spark, path: str, query_df: DataFrame, k: int = 10,
-                      n_probe: int = 4, rerank_factor: int = 4,
-                      id_col: str = "vec_id") -> DataFrame:
-    """Query the IVF x SQ8 index: centroid probe (metadata-scale) ->
-    partition-pruned code scan (asymmetric float-query x int-codes
-    scoring) -> exact decimal-cosine rescore of the top
-    k*rerank_factor ids from the cold float table.
-
-    Same SINGLE-QUERY contract as `sq8_topk` (one global candidate
-    limit); enforced below."""
-    _require_single_query(query_df)
-    base = fsutil.gen_resolve(spark, path)
-    cents = spark.read.parquet(base + "/centroids")
-    probe = (cents.crossJoin(F.broadcast(query_df))
-             .select("centroid_id",
-                     F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
-             .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-             .limit(n_probe))
-    lists = [r["centroid_id"] for r in probe.collect()]
-    qd = query_df.select(F.col("q_vec").cast("array<double>").alias("qd"))
-    codes = (spark.read.parquet(base + "/codes")
-             .filter(F.col("centroid_id").isin(lists)))
-    approx = (codes.crossJoin(F.broadcast(qd))
-              .selectExpr("id", _SQ8_APPROX_SQL))
-    cand = (approx.orderBy(F.col("approx").desc(), F.col("id").asc())
-            .limit(k * rerank_factor))
-    floats = spark.read.parquet(base + "/floats")
-    rer = (cand.join(floats, "id").crossJoin(F.broadcast(query_df))
-           .select(F.col("id").alias(id_col),
+    w1 = Window.partitionBy("query_id").orderBy(
+        F.col("approx").desc(), F.col("id").asc())
+    cand = (approx.withColumn("__r", F.row_number().over(w1))
+            .filter(F.col("__r") <= k * rerank_factor)
+            .select("query_id", "id"))
+    rer = (cand.join(floats, "id")
+           .join(F.broadcast(query_df.select("query_id", "q_vec")),
+                 "query_id")
+           .select("query_id", F.col("id").alias(id_col),
                    F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
-    return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
-def ivf_sq_index_append(spark, emb_new: DataFrame, path: str,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> None:
-    """Incrementally add vectors to a persisted IVF x SQ8 index: assign
-    the NEW vectors against the SAVED centroids (list geometry is
-    immutable between re-trains) and SQ8-encode them — the codec is
-    per-vector (scale = that vector's own max|x|), so unlike PQ there is
-    NO frozen codebook to respect: appended codes are exactly what a
-    full rebuild would produce, and append == rebuild is testable
-    bit-for-bit. Cost ∝ the new batch; the existing index is never read
-    or rewritten."""
-    base = fsutil.gen_resolve(spark, path)
-    saved = spark.read.parquet(base + "/centroids")
-    rows = saved.collect()                       # tiny; pin as a literal
-    cents = spark.createDataFrame(rows, saved.schema)
-    assigned = ivf_assign(emb_new, len(rows), id_col, vec_col,
-                          centroids=cents)
-    codes = sq8_encode(assigned, id_col="id", vec_col="vec",
-                       carry=("centroid_id",))
-    (codes.write.mode("append")
-     .partitionBy("centroid_id").parquet(base + "/codes"))
-    assigned.select("id", "vec").write.mode("append") \
-        .parquet(base + "/floats")
-
-
-def ivf_sq_index_maybe_retrain(spark, path: str,
-                               growth_threshold: float = 0.5,
-                               train_iters: int = 2,
-                               max_list_share: float | None = None) -> bool:
-    """Re-train policy for the IVF x SQ8 index — `ivf_index_maybe_retrain`
-    with the SAME metadata-scale triggers (growth watermark from footers;
-    opt-in max-list-share imbalance) and the same generation-pointer
-    publish, but a strictly simpler rebuild: SQ8 has no codebook state to
-    migrate and this layout has no delta partitions to fold (appends land
-    directly in the centroid_id partitions), so the rebuild is a plain
-    `ivf_sq_index_write` from the cold float table into the next
-    generation, committed by one marker-file create. A pre-meta index
-    (built before this policy) is treated as due. Returns True iff a
-    re-train ran."""
-    base = fsutil.gen_resolve(spark, path)
-    codes = spark.read.parquet(base + "/codes")
-    n_now = codes.count()
-    try:
-        meta = spark.read.parquet(base + "/meta").head()
-        n_at_train, n_cent = meta["n_at_train"], meta["n_centroids"]
-    except Exception:
-        n_at_train, n_cent = None, None
-    due = n_at_train is None
-    if not due:
-        due = (n_now - n_at_train) > growth_threshold * max(n_at_train, 1)
-    if not due and max_list_share is not None:
-        biggest = (codes.groupBy("centroid_id")
-                   .agg(F.count("*").alias("n"))
-                   .agg(F.max("n")).head()[0]) or 0
-        due = biggest > max_list_share * max(n_now, 1)
-    if not due:
-        return False
-    if n_cent is None:
-        n_cent = spark.read.parquet(base + "/centroids").count()
-
-    emb = spark.read.parquet(base + "/floats").select(
-        F.col("id").alias("vec_id"), F.col("vec").alias("embedding"))
-    build = fsutil.gen_begin(spark, path)
-    ivf_sq_index_write(emb, build, n_centroids=int(n_cent),
-                       train_iters=train_iters)
-    fsutil.gen_commit(spark, build)
-    fsutil.gen_gc(spark, path,
-                  legacy_subs=("codes", "floats", "centroids", "meta"))
-    return True
+    w2 = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col(id_col).asc())
+    return (rer.withColumn("rank", F.row_number().over(w2))
+            .filter(F.col("rank") <= k)
+            .select("query_id", id_col, "cosine",
+                    F.col("rank").cast("long").alias("rank")))

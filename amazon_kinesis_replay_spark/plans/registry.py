@@ -2735,9 +2735,7 @@ def q_ann_ivf_topk(spark, sf_dir):
     cast to double (no float mean, no summation-order dependence; cosine
     is scale-invariant so sums are valid centroid directions) — which
     makes the whole train+assign+probe+top-k pipeline reproducible
-    bit-for-bit by the unrolled SQL in _IVF_ORACLE. The persisted-index
-    variant (similarity.ivf_index_write/ivf_probe_topk) remains
-    plan-tested for centroid_id partition pruning."""
+    bit-for-bit by the unrolled SQL in _IVF_ORACLE."""
     ensure_engine_conf(spark)
     # r13 opt: the exact-mode decimal cosines (2 Lloyd iterations + final
     # assign + probe) all inherit the scan's width — single-task on a

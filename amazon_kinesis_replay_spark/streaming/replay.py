@@ -426,7 +426,7 @@ class ReplayEngine:
         if emit is not None:
             self._process_partitioned(emit)
         fsutil.gen_commit(spark, out)
-        fsutil.gen_gc(spark, held_root, keep=1)
+        fsutil.gen_gc(spark, held_root)
 
     def _finalize_partitioned(self):
         if not (self.cfg.reorder_across_batches

@@ -4,10 +4,13 @@ subprocess replay into a file sink."""
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 from amazon_kinesis_replay_spark.cli import build_parser, config_from_args
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_reference_defaults_parity():
@@ -64,7 +67,7 @@ def test_cli_end_to_end_file_sink(tmp_path):
          "--source", str(src), "--sink-dir", str(out),
          "--mode", "driver", "-speedup", "100000",
          "--checkpoint", str(tmp_path / "ckpt")],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert res.returncode == 0, res.stderr[-2000:]
     assert "replayed 120 events" in res.stdout
     sent = []
@@ -93,7 +96,7 @@ def test_cli_end_to_end_lz4_sniffed_partitioned(tmp_path):
          "--mode", "partitioned", "--codec", "sniff", "-speedup", "100000",
          "-kinesisSenderThreads", "2",
          "--checkpoint", str(tmp_path / "ckpt")],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert res.returncode == 0, res.stderr[-2000:]
     assert "replayed 120 events" in res.stdout
     assert "requests=0" not in res.stdout   # stats flow back from executors

@@ -190,7 +190,7 @@ def test_bench_attempt_quiet_predicate_is_steal_proof():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py")
+        "bench", PKG.parent / "bench.py")
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
 
@@ -233,7 +233,7 @@ def test_bench_publish_is_self_describing():
     publication (like r11's best attempt at steal 1.61%) is legible to
     the driver without forensics. Pins the source, so a refactor that
     drops the flag fails here rather than silently."""
-    src = open("/root/repo/bench.py").read()
+    src = (PKG.parent / "bench.py").read_text()
     assert '"published_attempt_quiet": _attempt_is_quiet(best)' in src
     assert '"quiet_fail_meters": _quiet_failures(best)' in src
 
@@ -597,18 +597,26 @@ def _top_level_names(p: Path) -> set[str]:
 def test_tool_imports_resolve():
     """Every `from amazon_kinesis_replay_spark... import name` in tools/
     names an existing module and an attribute it defines (or a
-    submodule), checked from source — no Spark, no import side effects.
-    A tool importing deleted code fails here instead of at its next
-    manual run."""
+    submodule), and every `alias.name` through a name bound to a package
+    module (`from ...operators import similarity as S`, then `S.name`)
+    names a top-level definition of that module (or a submodule) —
+    checked from source, no Spark, no import side effects. A tool that
+    calls deleted code fails here instead of at its next manual run."""
     root = PKG.parent
     broken = []
     for tool in sorted((root / "tools").glob("*.py")):
-        for node in ast.walk(ast.parse(tool.read_text())):
+        tree = ast.parse(tool.read_text())
+        modules = {}                    # bound name -> package module
+        for node in ast.walk(tree):
             where = f"tools/{tool.name}:{getattr(node, 'lineno', '')}"
             if isinstance(node, ast.Import):
-                broken += [f"{where} {a.name}" for a in node.names
-                           if a.name.startswith(PKG.name)
-                           and _module_file(root, a.name) is None]
+                for a in node.names:
+                    if not a.name.startswith(PKG.name):
+                        continue
+                    if _module_file(root, a.name) is None:
+                        broken.append(f"{where} {a.name}")
+                    elif a.asname:
+                        modules[a.asname] = a.name
             elif (isinstance(node, ast.ImportFrom) and node.module
                   and node.module.startswith(PKG.name)):
                 src = _module_file(root, node.module)
@@ -616,11 +624,37 @@ def test_tool_imports_resolve():
                     broken.append(f"{where} {node.module}")
                     continue
                 defined = _top_level_names(src)
-                broken += [f"{where} {node.module}.{a.name}"
-                           for a in node.names
-                           if a.name not in defined and _module_file(
-                               root, f"{node.module}.{a.name}") is None]
+                for a in node.names:
+                    sub = f"{node.module}.{a.name}"
+                    if _module_file(root, sub) is not None:
+                        modules[a.asname or a.name] = sub
+                    elif a.name not in defined:
+                        broken.append(f"{where} {sub}")
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in modules):
+                continue
+            mod = modules[node.value.id]
+            if (node.attr not in _top_level_names(_module_file(root, mod))
+                    and _module_file(root, f"{mod}.{node.attr}") is None):
+                broken.append(f"tools/{tool.name}:{node.lineno} "
+                              f"{node.value.id}.{node.attr} ({mod})")
     assert not broken, f"tool imports that do not resolve: {broken}"
+
+
+def test_tests_and_tools_do_not_name_the_checkout_path():
+    """A test or tool that spells out the checkout's absolute path
+    imports or runs that checkout's code even when started from another
+    copy of the repo; derive paths from `Path(__file__)` instead."""
+    root = PKG.parent
+    offenders = [f"{p.relative_to(root)}:{i + 1}"
+                 for d in ("tests", "tools")
+                 for p in sorted((root / d).rglob("*.py"))
+                 for i, line in enumerate(p.read_text().splitlines())
+                 if str(root) in line]
+    assert not offenders, (
+        f"files naming the checkout path {root}: {offenders}")
 
 
 #: Roots of the function-level walk: the entry points, plus the tools and

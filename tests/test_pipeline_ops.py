@@ -342,74 +342,6 @@ def test_kmeans_ivf_training(spark, sf_dir):
     assert top and top[0]["vec_id"] == 0
 
 
-def test_ivf_index_write_prunes_partitions(spark, sf_dir, tmp_path):
-    """The persisted IVF index must deliver the probe story physically:
-    a probe scan carries PartitionFilters on centroid_id (file-listing
-    pruning, not a post-scan filter), reads only the probed lists, and
-    returns the same top-k as the in-memory ivf_topk with the same
-    centroids."""
-    emb = load(spark, sf_dir, "embeddings")
-    index = str(tmp_path / "ivf")
-    cents = similarity.kmeans_centroids(emb, n_centroids=8, n_iters=2)
-    similarity.ivf_index_write(emb, index, n_centroids=8, centroids=cents)
-
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_vec"))
-    top = similarity.ivf_probe_topk(spark, index, q, k=5, n_probe=2)
-    plan = top._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "centroid_id" in plan.split(
-        "PartitionFilters: [", 1)[1][:200]
-
-    # the probed scan reads exactly the 2 chosen lists, not the corpus
-    probed = (spark.read.parquet(index + "/vectors")
-              .filter(F.col("centroid_id").isin(_probe_lists(spark, index, q, 2))))
-    n_lists = probed.select("centroid_id").distinct().count()
-    assert n_lists <= 2
-    assert probed.count() < emb.count()
-
-    got = [r["vec_id"] for r in top.collect()]
-    want = [r["vec_id"] for r in similarity.ivf_topk(
-        emb, q, k=5, n_centroids=8, n_probe=2, centroids=cents).collect()]
-    assert got == want and got[0] == 0
-
-
-def test_ivf_index_append_serves_new_vectors(spark, sf_dir, tmp_path):
-    """Appending vectors to a persisted index must place them in the
-    partition their saved-centroid assignment dictates (never moving
-    existing lists) and make them immediately probe-able; a duplicate of
-    the query vector appended under a new id must surface at the top."""
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < 400)
-    index = str(tmp_path / "ivf")
-    cents = similarity.kmeans_centroids(base, n_centroids=8, n_iters=1)
-    similarity.ivf_index_write(base, index, n_centroids=8, centroids=cents)
-    before = spark.read.parquet(index + "/vectors").count()
-
-    # append: vec_id>=400 plus an exact copy of vec 0 under id 999999
-    clone = (emb.filter(F.col("vec_id") == 0)
-             .select(F.lit(999999).alias("vec_id"), "embedding", "label"))
-    extra = emb.filter(F.col("vec_id") >= 400).unionByName(clone)
-    similarity.ivf_index_append(spark, extra, index)
-
-    after = spark.read.parquet(index + "/vectors")
-    assert after.count() == before + extra.count()   # strictly additive
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_vec"))
-    top = similarity.ivf_probe_topk(spark, index, q, k=3, n_probe=2).collect()
-    got = {r["vec_id"] for r in top[:2]}
-    assert got == {0, 999999}                        # clone lands beside it
-    assert abs(top[0]["cosine"] - 1.0) < 1e-9
-
-
-def _probe_lists(spark, index, query_df, n_probe):
-    cents = spark.read.parquet(index + "/centroids")
-    probe = (cents.crossJoin(F.broadcast(query_df))
-             .selectExpr("centroid_id",
-                         f"{similarity.cosine_sql('c_vec', 'q_vec')} AS sim")
-             .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-             .limit(n_probe))
-    return [r["centroid_id"] for r in probe.collect()]
-
-
 def test_multimodal_fake_decode_plumbing(spark, sf_dir):
     d = load(spark, sf_dir, "documents").limit(50)
     media = d.select(
@@ -2209,94 +2141,6 @@ def test_animated_gif_frame_sampling(spark):
         assert len(r["features"]) == 8 and abs(sum(r["features"]) - 1) < 1e-5
 
 
-def test_ivf_index_retrain_policy(spark, sf_dir, tmp_path):
-    """The re-train policy must hold below the growth threshold, fire
-    above it (footer-count trigger), rebuild the index on the FULL
-    corpus via the staging swap, refresh the trained-size watermark, and
-    leave the index probe-able (an appended clone of the query still
-    surfaces at the top after the rebuild moves it to a trained list)."""
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < 300)
-    index = str(tmp_path / "ivf")
-    similarity.ivf_index_write(base, index, n_centroids=8, train_iters=1)
-    meta0 = spark.read.parquet(index + "/meta").head()
-    assert meta0["n_at_train"] == base.count()
-
-    # small append: growth below threshold -> no retrain, meta unchanged
-    small = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 320))
-    similarity.ivf_index_append(spark, small, index)
-    assert similarity.ivf_index_maybe_retrain(
-        spark, index, growth_threshold=0.5) is False
-    assert spark.read.parquet(index + "/meta").head()["n_at_train"] \
-        == meta0["n_at_train"]
-
-    # big append (incl. a clone of vec 0): growth over threshold -> retrain
-    clone = (emb.filter(F.col("vec_id") == 0)
-             .select(F.lit(999999).alias("vec_id"), "embedding", "label"))
-    big = emb.filter(F.col("vec_id") >= 320).unionByName(clone)
-    similarity.ivf_index_append(spark, big, index)
-    n_total = spark.read.parquet(index + "/vectors").count()
-    assert similarity.ivf_index_maybe_retrain(
-        spark, index, growth_threshold=0.5) is True
-    # the retrain published a GENERATION (r8 pointer layout): reads
-    # resolve to it, and GC removed the legacy root copies
-    from amazon_kinesis_replay_spark import fsutil
-    gen = fsutil.gen_resolve(spark, index)
-    assert gen != index
-    assert fsutil.exists(spark, f"{gen}/{fsutil.GEN_MARKER}")
-    meta1 = spark.read.parquet(gen + "/meta").head()
-    assert meta1["n_at_train"] == n_total            # watermark refreshed
-    assert meta1["n_centroids"] == 8
-    assert spark.read.parquet(gen + "/vectors").count() == n_total
-    import os
-    for sub in ("vectors", "centroids", "meta"):
-        assert not os.path.exists(f"{index}/{sub}")
-
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_vec"))
-    top = similarity.ivf_probe_topk(spark, index, q, k=3, n_probe=2).collect()
-    assert {r["vec_id"] for r in top[:2]} == {0, 999999}
-
-    # immediately after a retrain the policy is quiescent again
-    assert similarity.ivf_index_maybe_retrain(
-        spark, index, growth_threshold=0.5) is False
-
-
-def test_ivf_imbalance_retrain_trigger(spark, sf_dir, tmp_path):
-    """The imbalance trigger catches what growth can't: a stream of
-    near-identical appends piling into ONE inverted list. 200 clones of
-    vector 0 appended to a 300-vector/8-list index leave total growth
-    under a lax growth threshold, but push one list to ~47% of the
-    corpus — max_list_share must fire there, growth-only must not, and
-    the metadata probe must not read vector data (it is a
-    partition-column aggregation)."""
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < 300)
-    index = str(tmp_path / "ivf-imb")
-    similarity.ivf_index_write(base, index, n_centroids=8, train_iters=1)
-
-    one = emb.filter(F.col("vec_id") == 0).select("embedding", "label")
-    clones = (spark.range(200).crossJoin(one)
-              .select((F.col("id") + 10_000).alias("vec_id"),
-                      "embedding", "label"))
-    similarity.ivf_index_append(spark, clones, index)
-
-    # growth-only with a lax threshold: quiet despite the skew
-    assert similarity.ivf_index_maybe_retrain(
-        spark, index, growth_threshold=5.0) is False
-    # the skewed list holds ~237/500 of the corpus: imbalance fires
-    assert similarity.ivf_index_maybe_retrain(
-        spark, index, growth_threshold=5.0, max_list_share=0.35) is True
-    # retrain refreshed the watermark: growth policy quiescent again
-    assert similarity.ivf_index_maybe_retrain(
-        spark, index, growth_threshold=0.5) is False
-    # and the rebuilt index is still probe-able
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_vec"))
-    top = similarity.ivf_probe_topk(spark, index, q, k=3, n_probe=3).collect()
-    assert top and top[0]["vec_id"] in {0} | set(range(10_000, 10_200))
-
-
 def test_repetition_features_crafted(spark):
     """Gopher/RefinedWeb repetition signals on crafted documents: exact
     duplicate-line/paragraph fractions, bullet/ellipsis line fractions,
@@ -2508,71 +2352,6 @@ def test_media_metadata_magic_sniff(spark):
     got = {r["media_id"]: r["magic"]
            for r in multimodal.media_metadata(df).collect()}
     assert got == {i: m for i, _, m in payloads}
-
-
-def test_ivf_pq_index_probe(spark, sf_dir, tmp_path):
-    """IVF-PQ composition: the probed scan reads CODES from pruned
-    partitions (PartitionFilters on centroid_id), ADC narrows to
-    k*rerank_factor candidates, and the exact re-rank against the cold
-    float table recovers the query at rank 1 with decent top-10 recall
-    vs brute force."""
-    emb = load(spark, sf_dir, "embeddings")
-    index = str(tmp_path / "ivfpq")
-    similarity.ivf_pq_index_write(emb, index, n_centroids=8,
-                                  n_subs=8, n_codes=16)
-    # hot table holds codes, not floats
-    hot = spark.read.parquet(index + "/vectors")
-    assert set(hot.columns) == {"id", "codes", "centroid_id"}
-
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_vec"))
-    top = similarity.ivf_pq_probe_topk(spark, index, q, k=10, n_probe=4,
-                                       rerank_factor=8)
-    plan = top._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    got = [r["vec_id"] for r in top.collect()]
-    bf = [r["vec_id"] for r in similarity.brute_force_topk(
-        emb, q, k=10).collect()]
-    assert got[0] == 0
-    assert len(set(got) & set(bf)) >= 5   # probe misses + PQ error bounded
-
-
-def test_ivf_pq_index_append(spark, sf_dir, tmp_path):
-    """Incremental IVF-PQ append: new vectors are assigned with the
-    SAVED centroids and quantized with the SAVED codebooks (geometry
-    frozen — existing rows untouched), land in the right partitions, and
-    an appended clone of the query surfaces at the top of a probe with
-    its floats available for exact re-rank."""
-    emb = load(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < 400)
-    index = str(tmp_path / "ivfpq-app")
-    similarity.ivf_pq_index_write(base, index, n_centroids=8,
-                                  n_subs=8, n_codes=16)
-    n0 = spark.read.parquet(index + "/vectors").count()
-    before = {(r["id"], tuple(r["codes"])) for r in
-              spark.read.parquet(index + "/vectors").collect()}
-
-    clone = (emb.filter(F.col("vec_id") == 0)
-             .select(F.lit(777777).alias("vec_id"), "embedding", "label"))
-    extra = emb.filter(F.col("vec_id") >= 400).unionByName(clone)
-    similarity.ivf_pq_index_append(spark, extra, index)
-
-    hot = spark.read.parquet(index + "/vectors")
-    assert hot.count() == n0 + extra.count()
-    after = {(r["id"], tuple(r["codes"])) for r in hot.collect()}
-    assert before <= after                     # existing rows untouched
-    # the clone carries vec 0's exact codes (same codebooks)
-    codes0 = next(c for i, c in after if i == 0)
-    assert next(c for i, c in after if i == 777777) == codes0
-    # and floats arrived for re-rank
-    assert spark.read.parquet(index + "/floats") \
-        .filter(F.col("id") == 777777).count() == 1
-
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_vec"))
-    top = similarity.ivf_pq_probe_topk(spark, index, q, k=3, n_probe=3,
-                                       rerank_factor=8).collect()
-    assert {r["vec_id"] for r in top[:2]} == {0, 777777}
 
 
 def test_url_features_and_blocklist(spark):

@@ -111,145 +111,6 @@ def test_hybrid_bm25_plus_cosine_leg(spark, docs, doc_rows):
     assert [r["id"] for r in fused] == [i for i, _s, _c in want[:3]]
 
 
-# -- persisted index -------------------------------------------------------
-
-def test_indexed_bm25_matches_direct_and_prunes(spark, docs, doc_rows,
-                                                tmp_path):
-    """bm25_topk_indexed over the persisted index == bm25_topk over the
-    corpus (ids and scores), and the postings scan carries
-    PartitionFilters on tb — the query lists only its terms' buckets."""
-    from amazon_kinesis_replay_spark.functions.xxh import xxh64_string
-    idx = str(tmp_path / "ridx")
-    retrieval.retrieval_index_write(docs, idx, n_term_buckets=16)
-    words = doc_rows[2][1].split()[:3]
-    query = " ".join(words)
-    direct = retrieval.bm25_topk(docs, query, k=10).collect()
-    indexed = retrieval.bm25_topk_indexed(spark, idx, query, k=10)
-    # file-listing pruning: the scan carries PartitionFilters on tb
-    # (the IVF-index plan-assertion pattern; DataFrame.inputFiles would
-    # list the UNpruned FileIndex and prove nothing)
-    plan = indexed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "tb" in plan.split("PartitionFilters: [", 1)[1][:200]
-    # and the filter names exactly the query terms' buckets
-    want_tb = {xxh64_string(t.lower()) % 16 for t in words}
-    pf = plan.split("PartitionFilters: [", 1)[1][:200]
-    for b in want_tb:
-        assert str(b) in pf
-    got = indexed.collect()
-    assert [r["id"] for r in got] == [r["id"] for r in direct]
-    for a, b in zip(got, direct):
-        assert a["score"] == pytest.approx(b["score"], abs=1e-9)
-
-
-def test_indexed_append_folds_batches(spark, docs, tmp_path):
-    """Incremental contract: base + appended delta == one index built
-    over the union (scores from the indexed query are identical), and a
-    REPLAYED append (same batch_id) is idempotent."""
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 2 == 1)
-    inc = str(tmp_path / "inc")
-    full = str(tmp_path / "full")
-    retrieval.retrieval_index_write(a, inc, n_term_buckets=8)
-    retrieval.retrieval_index_append(b, inc, batch_id=1)
-    retrieval.retrieval_index_append(b, inc, batch_id=1)   # replay
-    retrieval.retrieval_index_write(docs, full, n_term_buckets=8)
-    q = "the and of"
-    got = retrieval.bm25_topk_indexed(spark, inc, q, k=10).collect()
-    want = retrieval.bm25_topk_indexed(spark, full, q, k=10).collect()
-    assert [r["id"] for r in got] == [r["id"] for r in want]
-    for x, y in zip(got, want):
-        assert x["score"] == pytest.approx(y["score"], abs=1e-9)
-    with pytest.raises(ValueError, match="batch_id"):
-        retrieval.retrieval_index_append(b, inc, batch_id=0)
-
-
-def test_bm25_batch_matches_per_query(spark, docs, doc_rows, tmp_path):
-    """One-pass multi-query scoring == per-query indexed results for
-    every query (ids, scores, ranks), via a window partitioned by
-    query — never a global sort."""
-    idx = str(tmp_path / "bidx")
-    retrieval.retrieval_index_write(docs, idx, n_term_buckets=16)
-    queries = {
-        "q0": " ".join(doc_rows[0][1].split()[:3]),
-        "q1": " ".join(doc_rows[5][1].split()[:4]),
-        "q2": " ".join(doc_rows[9][1].split()[:2]),
-    }
-    batch = retrieval.bm25_topk_batch(spark, idx, queries, k=7)
-    got = {}
-    for r in batch.collect():
-        got.setdefault(r["query_id"], []).append(
-            (r["rank"], r["id"], r["score"]))
-    for qid, q in queries.items():
-        want = retrieval.bm25_topk_indexed(spark, idx, q, k=7).collect()
-        mine = sorted(got.get(qid, []))
-        assert [i for _r, i, _s in mine] == [r["id"] for r in want]
-        for (_r, _i, s), w in zip(mine, want):
-            assert s == pytest.approx(w["score"], abs=1e-9)
-    plan = batch._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan     # still prunes the union
-    with pytest.raises(ValueError, match="empty query"):
-        retrieval.bm25_topk_batch(spark, idx, {"bad": "  "})
-    with pytest.raises(ValueError, match="no queries"):
-        retrieval.bm25_topk_batch(spark, idx, {})
-
-
-def test_index_compact_generation_publish(spark, docs, tmp_path):
-    """Compaction folds delta slices into one base under a committed
-    generation: queries identical before/after, legacy root slices
-    swept, a REPLAYED append of a folded batch_id no-ops (the folded
-    watermark), a NEW append lands in the generation, a crashed-build
-    husk (uncommitted gen) is invisible to readers and swept by the
-    next compact, and a second compact carries the watermark forward."""
-    from amazon_kinesis_replay_spark import fsutil
-    a = docs.filter(F.col("doc_id") % 3 == 0)
-    b = docs.filter(F.col("doc_id") % 3 == 1)
-    c = docs.filter(F.col("doc_id") % 3 == 2)
-    idx = str(tmp_path / "cidx")
-    retrieval.retrieval_index_write(a, idx, n_term_buckets=8)
-    retrieval.retrieval_index_append(b, idx, batch_id=1)
-    q = "the of and"
-    before = retrieval.bm25_topk_indexed(spark, idx, q, k=10).collect()
-
-    # plant a crashed-build husk: an uncommitted generation directory
-    fsutil.write_text(spark, idx + "/gen=0000000042/partial.txt", "x\n")
-    husk = retrieval.bm25_topk_indexed(spark, idx, q, k=10).collect()
-    assert [(r["id"], r["score"]) for r in husk] == \
-        [(r["id"], r["score"]) for r in before]   # readers ignore husks
-
-    folded = retrieval.retrieval_index_compact(spark, idx)
-    assert folded == 2
-    assert not fsutil.exists(spark, idx + "/gen=0000000042")  # husk swept
-    assert not fsutil.exists(spark, idx + "/postings")        # migrated
-    after = retrieval.bm25_topk_indexed(spark, idx, q, k=10).collect()
-    assert [(r["id"], r["score"]) for r in after] == \
-        [(r["id"], r["score"]) for r in before]
-
-    base = fsutil.gen_resolve(spark, idx)
-    n_post = spark.read.parquet(base + "/postings").count()
-    retrieval.retrieval_index_append(b, idx, batch_id=1)       # replay
-    assert spark.read.parquet(base + "/postings").count() == n_post
-
-    retrieval.retrieval_index_append(c, idx, batch_id=2)       # new batch
-    got = retrieval.bm25_topk_indexed(spark, idx, q, k=10).collect()
-    full = str(tmp_path / "cfull")
-    retrieval.retrieval_index_write(docs, full, n_term_buckets=8)
-    want = retrieval.bm25_topk_indexed(spark, full, q, k=10).collect()
-    assert [r["id"] for r in got] == [r["id"] for r in want]
-    for x, y in zip(got, want):
-        assert x["score"] == pytest.approx(y["score"], abs=1e-9)
-
-    assert retrieval.retrieval_index_compact(spark, idx) == 2  # 0 + 2
-    wm = fsutil.read_text(
-        spark, fsutil.gen_resolve(spark, idx) + "/folded_max.txt")
-    assert int(wm.strip()) == 2                  # watermark carried
-    retrieval.retrieval_index_append(c, idx, batch_id=2)       # replay
-    got2 = retrieval.bm25_topk_indexed(spark, idx, q, k=10).collect()
-    assert [(r["id"], r["score"]) for r in got2] == \
-        [(r["id"], r["score"]) for r in got]
-    assert retrieval.retrieval_index_compact(spark, idx) == 0  # no deltas
-
-
 def test_hybrid_topk_end_to_end(spark, docs, doc_rows, sf_dir):
     """hybrid_topk == manual RRF of its two legs (BM25 over documents +
     exact cosine over embeddings, same id space), pinned against the

@@ -73,114 +73,6 @@ def test_sq8_topk_plan_no_global_sort(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_ivf_sq_full_probe_equals_brute_force(spark, sf_dir, tmp_path):
-    """With every list probed and a corpus-sized rerank budget, the
-    IVF x SQ8 index must reproduce brute force exactly (the pruning and
-    quantization levers removed, only the plumbing remains)."""
-    from pyspark.sql import functions as F
-    emb = load(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivfsq")
-    sim.ivf_sq_index_write(emb, path, n_centroids=8)
-    q = emb.orderBy("vec_id").limit(1).select(
-        F.col("embedding").alias("q_vec"))
-    exact = [(r["vec_id"], r["cosine"])
-             for r in sim.brute_force_topk(emb, q, k=10).collect()]
-    got = [(r["vec_id"], r["cosine"])
-           for r in sim.ivf_sq_probe_topk(
-               spark, path, q, k=10, n_probe=8,
-               rerank_factor=10_000).collect()]
-    assert got == exact
-
-
-def test_ivf_sq_probe_prunes_partitions_and_recalls(spark, sf_dir,
-                                                    tmp_path):
-    from pyspark.sql import functions as F
-    emb = load(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivfsq2")
-    sim.ivf_sq_index_write(emb, path, n_centroids=8)
-    q = emb.orderBy("vec_id").limit(1).select(
-        F.col("embedding").alias("q_vec"))
-    # partition pruning must reach the executed plan's scan
-    lists_df = sim.ivf_sq_probe_topk(spark, path, q, k=10, n_probe=2)
-    plan = lists_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "centroid_id" in plan
-    got = {r["vec_id"] for r in lists_df.collect()}
-    exact = {r["vec_id"]
-             for r in sim.brute_force_topk(emb, q, k=10).collect()}
-    # 2-of-8 lists on the fixture: same regime as the IVF tier
-    assert len(got & exact) >= 5
-
-
-def test_ivf_sq_append_equals_full_rebuild(spark, sf_dir, tmp_path):
-    """SQ8 has no trained codebook, so an append must reproduce the
-    full-rebuild index EXACTLY (same centroids): codes bit-for-bit,
-    probes identical."""
-    from pyspark.sql import functions as F
-    emb = load(spark, sf_dir, "embeddings")
-    old = emb.filter(F.col("vec_id") % 3 != 0)
-    new = emb.filter(F.col("vec_id") % 3 == 0)
-    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
-    sim.ivf_sq_index_write(old, inc, n_centroids=8)
-    sim.ivf_sq_index_append(spark, new, inc)
-    cents = spark.read.parquet(inc + "/centroids")
-    sim.ivf_sq_index_write(emb, full, n_centroids=8, centroids=cents)
-    a = sorted(map(tuple, spark.read.parquet(inc + "/codes")
-                   .select("id", "scale", "codes", "centroid_id")
-                   .collect()))
-    b = sorted(map(tuple, spark.read.parquet(full + "/codes")
-                   .select("id", "scale", "codes", "centroid_id")
-                   .collect()))
-    assert [(r[0], r[1], list(r[2]), r[3]) for r in a] == \
-           [(r[0], r[1], list(r[2]), r[3]) for r in b]
-    q = emb.orderBy("vec_id").limit(1).select(
-        F.col("embedding").alias("q_vec"))
-    got_inc = [r["vec_id"] for r in sim.ivf_sq_probe_topk(
-        spark, inc, q, k=10, n_probe=4).collect()]
-    got_full = [r["vec_id"] for r in sim.ivf_sq_probe_topk(
-        spark, full, q, k=10, n_probe=4).collect()]
-    assert got_inc == got_full
-
-
-def test_ivf_sq_retrain_policy(spark, sf_dir, tmp_path):
-    """Growth-triggered retrain under the generation-pointer publish:
-    below threshold -> no-op; past it -> a new committed generation with
-    re-trained centroids; probes read the new generation; append keeps
-    working against it."""
-    from pyspark.sql import functions as F
-    emb = load(spark, sf_dir, "embeddings")
-    old = emb.filter(F.col("vec_id") % 2 == 0)
-    new = emb.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivfsq-rt")
-    sim.ivf_sq_index_write(old, path, n_centroids=8)
-
-    # small append: growth below the 0.5 threshold -> not due
-    tiny = new.limit(20)
-    sim.ivf_sq_index_append(spark, tiny, path)
-    assert sim.ivf_sq_index_maybe_retrain(spark, path) is False
-
-    # big append: growth past the threshold -> retrain fires
-    sim.ivf_sq_index_append(spark, new.subtract(tiny), path)
-    assert sim.ivf_sq_index_maybe_retrain(spark, path) is True
-
-    from amazon_kinesis_replay_spark import fsutil
-    cur = fsutil.gen_current(spark, path)
-    assert cur is not None and "gen=" in cur
-    meta = spark.read.parquet(cur + "/meta").head()
-    assert meta["n_at_train"] == emb.count()
-    # immediately after retrain: not due again
-    assert sim.ivf_sq_index_maybe_retrain(spark, path) is False
-
-    # probe + append still work against the committed generation
-    q = emb.orderBy("vec_id").limit(1).select(
-        F.col("embedding").alias("q_vec"))
-    got = [r["vec_id"] for r in sim.ivf_sq_probe_topk(
-        spark, path, q, k=10, n_probe=8,
-        rerank_factor=10_000).collect()]
-    exact = [r["vec_id"]
-             for r in sim.brute_force_topk(emb, q, k=10).collect()]
-    assert got == exact
-
-
 def test_sq8_topk_rejects_multi_row_query(spark, sf_dir):
     """SINGLE-QUERY contract (r8 advice): the candidate stage takes one
     global limit, so a 2-row query_df must raise, not silently mix
@@ -215,33 +107,3 @@ def test_sq8_topk_batch_matches_per_query_loop(spark, sf_dir):
         want = [(i + 1, x["vec_id"], x["cosine"]) for i, x in
                 enumerate(sim.sq8_topk(emb, one, k=5).collect())]
         assert sorted(got[f"q{r['vec_id']}"]) == want
-
-
-def test_ivf_sq_probe_topk_batch_matches_per_query_loop(
-        spark, sf_dir, tmp_path):
-    """Batched IVF x SQ8 probe == per-query ivf_sq_probe_topk loop, and
-    the single scan stays pruned to the UNION of probed lists."""
-    emb = load(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivfsq-batch")
-    sim.ivf_sq_index_write(emb, path, n_centroids=8)
-    qs = emb.orderBy("vec_id").limit(3).collect()
-    query_df = spark.createDataFrame(
-        [(f"q{r['vec_id']}", list(r["embedding"])) for r in qs],
-        "query_id string, q_vec array<float>")
-    out = sim.ivf_sq_probe_topk_batch(spark, path, query_df,
-                                      k=5, n_probe=2)
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["query_id"], []).append(
-            (r["rank"], r["vec_id"], r["cosine"]))
-    for r in qs:
-        one = spark.createDataFrame([(list(r["embedding"]),)],
-                                    "q_vec array<float>")
-        want = [(i + 1, x["vec_id"], x["cosine"]) for i, x in
-                enumerate(sim.ivf_sq_probe_topk(
-                    spark, path, one, k=5, n_probe=2).collect())]
-        assert sorted(got[f"q{r['vec_id']}"]) == want
-    # the codes scan is partition-pruned: the executed plan carries a
-    # PartitionFilters entry on centroid_id (not an unpruned full scan)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan

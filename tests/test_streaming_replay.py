@@ -3,6 +3,7 @@ Structured Streaming source -> paced foreachBatch sink, with behavioral
 assertions on ordering, batching, pacing, and statistics."""
 
 import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,8 @@ from amazon_kinesis_replay_spark.streaming.replay import (
     ReplayEngine, run_replay_stream)
 from amazon_kinesis_replay_spark.streaming.sinks import InMemorySink
 from amazon_kinesis_replay_spark.tables import load
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -778,7 +781,7 @@ def test_composed_replay_witness_small(tmp_path):
 
     def body():
         out = subprocess.run(
-            [sys.executable, "/root/repo/tools/replay_scale_witness.py",
+            [sys.executable, str(ROOT / "tools" / "replay_scale_witness.py"),
              "/root/testdata/sf0.001", "3"],
             capture_output=True, text=True, timeout=420)
         assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]

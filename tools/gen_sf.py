@@ -26,7 +26,7 @@ event_id/user_id shifted.
 
 Usage:
     python tools/gen_sf.py [--src /root/testdata/sf0.1] [--factor 10] \
-        [--out /root/repo/.localdata/sf1]
+        [--out <checkout>/.localdata/sf1]
 
 The output dir name should end in `sf<value>` so bench.py parses the
 scale factor from $SPARK_GRAFT_SF_DIR.
@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import argparse
 import os
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
@@ -172,7 +173,8 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--factor", type=int, default=10)
-    ap.add_argument("--out", default="/root/repo/.localdata/sf1")
+    ap.add_argument("--out", default=str(
+        Path(__file__).resolve().parents[1] / ".localdata" / "sf1"))
     ap.add_argument("--preserve-stopwords", action="store_true",
                     help="identity-map EN_STOPWORDS so quality-score "
                          "signals survive tiling (see "

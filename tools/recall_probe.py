@@ -18,8 +18,9 @@ Usage: python tools/recall_probe.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main():
@@ -101,7 +102,6 @@ def main():
               f"{cand_pairs} candidate pairs", flush=True)
 
     # ---- ANN family: recall@10 + wall time vs the exact baseline ----------
-    import tempfile
     import time
 
     from amazon_kinesis_replay_spark.operators import similarity as S
@@ -116,10 +116,6 @@ def main():
     cents = S.kmeans_centroids(full, n_centroids=8, n_iters=2)
     cb = S.pq_train(full, n_subs=8, n_codes=16, n_iters=2)
     codes = S.pq_encode(full, cb)
-    tmp = tempfile.mkdtemp(prefix="ann-probe-")
-    S.ivf_pq_index_write(full, tmp + "/ivfpq", n_centroids=8,
-                         n_subs=8, n_codes=16)
-    S.ivf_sq_index_write(full, tmp + "/ivfsq", n_centroids=8)
 
     variants = {
         "lsh(4bit)": lambda qdf: S.lsh_topk(full, qdf, k=10),
@@ -139,18 +135,12 @@ def main():
                                              n_probe=2, centroids=cents),
         "pq(8x16,r4)": lambda qdf: S.pq_topk(full, qdf, k=10, codebooks=cb,
                                              codes=codes),
-        "ivfpq(8c,4p,r8)": lambda qdf: S.ivf_pq_probe_topk(
-            spark, tmp + "/ivfpq", qdf, k=10, n_probe=4, rerank_factor=8),
         # SQ8 (r8 3rd continuation): full scan of 1/4-width codes +
         # exact rescore — recall should sit at ~1.0 (8-bit codes rank
         # tightly); the lever is bytes-per-row, not rows scanned
         "sq8(r2)": lambda qdf: S.sq8_topk(full, qdf, k=10,
                                           rerank_factor=2),
         "sq8(r4)": lambda qdf: S.sq8_topk(full, qdf, k=10),
-        # IVF x SQ8 composed index: 2-of-8 list pruning x 1/4-width
-        # code rows + exact rescore — both byte levers at once
-        "ivfsq(8c,2p,r4)": lambda qdf: S.ivf_sq_probe_topk(
-            spark, tmp + "/ivfsq", qdf, k=10, n_probe=2),
     }
     print(f"ANN recall@10 over queries {queries} ({sf_dir}):", flush=True)
     for name, fn in variants.items():
@@ -164,30 +154,6 @@ def main():
         print(f"  {name:16s}: recall {hits / n_ret:5.2f} "
               f"({hits}/{n_ret}), {dt:5.2f}s for {len(queries)} queries",
               flush=True)
-
-    # ---- Batched probe amortization (r9): one pruned scan for all
-    # queries vs one scan per query — the number that justifies
-    # ivf_sq_probe_topk_batch's existence is measured, not claimed
-    seq_t0 = time.monotonic()
-    seq = {}
-    for qid, qdf in qdfs:
-        seq[qid] = [r["vec_id"] for r in S.ivf_sq_probe_topk(
-            spark, tmp + "/ivfsq", qdf, k=10, n_probe=2).collect()]
-    seq_dt = time.monotonic() - seq_t0
-    qb = full.filter(F.col("vec_id").isin(queries)).select(
-        F.col("vec_id").cast("string").alias("query_id"),
-        F.col("embedding").alias("q_vec"))
-    bat_t0 = time.monotonic()
-    bat: dict = {}
-    for r in S.ivf_sq_probe_topk_batch(spark, tmp + "/ivfsq", qb,
-                                       k=10, n_probe=2).collect():
-        bat.setdefault(int(r["query_id"]), []).append(r["vec_id"])
-    bat_dt = time.monotonic() - bat_t0
-    same = all(sorted(seq[q]) == sorted(bat[q]) for q in queries)
-    print(f"ivfsq batched probe: {bat_dt:5.2f}s for {len(queries)} "
-          f"queries vs {seq_dt:5.2f}s sequential "
-          f"({seq_dt / max(bat_dt, 1e-9):.2f}x); results identical: "
-          f"{same}", flush=True)
 
     # ---- SemDeDup epsilon sweep (dup mass / cluster-confinement cost) ----
     from amazon_kinesis_replay_spark.operators import similarity

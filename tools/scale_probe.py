@@ -54,8 +54,9 @@ import shutil
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 MULTS = (1, 4, 10)
 

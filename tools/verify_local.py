@@ -15,8 +15,9 @@ import hashlib
 import math
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR_DEFAULT = "/root/testdata/sf0.01"
 TABLES = ("region", "nation", "customer", "supplier", "part",
