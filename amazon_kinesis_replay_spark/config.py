@@ -74,3 +74,11 @@ class ReplayConfig:
     #: refused with guidance to use partitioned mode (which never collects)
     #: instead of OOMing the driver.
     driver_mode_max_rows: int = 1_000_000
+
+    def __post_init__(self):
+        # Both drive a loop: zero divides by zero (or paces to inf), and a
+        # negative stats frequency never closes its window.
+        for name in ("speedup_factor", "statistics_frequency_ms"):
+            value = getattr(self, name)
+            if not value > 0:
+                raise ValueError(f"{name} must be > 0, got {value!r}")

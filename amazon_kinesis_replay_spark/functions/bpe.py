@@ -138,28 +138,3 @@ def merge_ranks(merges: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
     return {pair: i for i, pair in enumerate(merges)}
 
 
-def decode_ids(ids, vocab: dict[str, int]) -> str:
-    """Inverse of id encoding: concatenate the tokens behind `ids` (the
-    loader-side detokenize). <unk> (id 0) and unknown ids decode to ""
-    — information lost at encode time cannot be re-invented, and a
-    silent placeholder string would corrupt byte-exact round-trips for
-    in-vocabulary text."""
-    inv = {i: t for t, i in vocab.items()}
-    inv[0] = ""
-    return "".join(inv.get(i, "") for i in ids)
-
-
-def vocab_from(merges: list[tuple[str, str]],
-               chars) -> dict[str, int]:
-    """Deterministic token->id table for a trained merge list: id 0 is
-    "<unk>", then the single-character symbols (sorted), then each merge
-    product in rank order (skipping any product that collides with an
-    existing entry). Every token `encode_*` can emit over text drawn
-    from `chars` has an id; characters outside `chars` map to <unk> at
-    encode time — never silently to a wrong id."""
-    v = {"<unk>": 0}
-    for ch in sorted(set(chars)):
-        v.setdefault(ch, len(v))
-    for a, b in merges:
-        v.setdefault(a + b, len(v))
-    return v

@@ -23,7 +23,7 @@ subframes, 4- and 5-bit Rice residuals incl. escape partitions,
 partition orders 0-15, wasted bits, and all four channel assignments
 (independent, left/side, right/side, mid/side). Sample-by-sample Rice
 decoding is Python-speed — this rides the same Arrow-batched
-mapInPandas kernel as the other audio decoders (multimodal.decode_audio)
+mapInPandas kernel as the other audio decoders (multimodal.audio_meta)
 where the per-batch loop is already the model.
 
 Reference parity: the reference engine (aws-samples/amazon-kinesis-replay,

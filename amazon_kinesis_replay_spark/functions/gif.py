@@ -5,20 +5,16 @@ Completes the stdlib-implementable still-image set next to the PNG codec
 the decode gate in the multimodal pipeline dispatches GIF payloads here.
 
 Decoder scope: GIF87a/GIF89a, global and local color tables, interlaced
-and non-interlaced frames, transparency (via Graphic Control Extension),
-and — r7 — full ANIMATION playback with disposal-method compositing
-(`decode_gif_frames`: keep / restore-to-background / restore-to-previous,
-GIF89a §23), with stride sampling and a frame cap for the multimodal
-sampler shape. `decode_gif` stays the "give me the image" first-frame
-path. Every frame is composited onto the logical screen at its (left,
-top) offset over the background color, so output rasters are always the
-logical screen size. Malformed streams raise ValueError; wrong pixels
-are never silently emitted.
+and non-interlaced frames, transparency (via Graphic Control Extension).
+`decode_gif` is the "give me the image" path: the first frame,
+composited onto the logical screen at its (left, top) offset over the
+background color, so output rasters are always the logical screen size.
+Malformed streams raise ValueError; wrong pixels are never silently
+emitted.
 
 Encoder scope: single full-screen frame (`encode_gif`, optional
-interlace) and multi-frame animations with per-frame GCE control
-(`encode_gif_animation`) — enough to synthesize real decode fixtures
-exercising every decoder path and to serve as the round-trip witness.
+interlace) — enough to synthesize real decode fixtures exercising every
+decoder path and to serve as the round-trip witness.
 Foreign-encoder correctness is separately witnessed by decoding
 CPython's libgif-made test fixtures (tests/test_pipeline_ops.py).
 
@@ -166,18 +162,11 @@ def _sub_blocks(raw: bytes, i: int) -> tuple[bytes, int]:
         i += n
 
 
-def _iter_gif_frames(raw: bytes, stride: int = 1):
-    """Yield (delay_cs, rgb_bytes) for every `stride`-th frame of a GIF,
-    composited onto the logical screen with full disposal-method
-    semantics (GIF89a §23): 0/1 leave the frame in place, 2 restores the
-    frame's rectangle to the background color, 3 restores the pixels
-    that were there before the frame rendered. Every frame is still
-    DECODED and composited (compositing is cumulative), but the full
-    raster copy-out happens only for yielded frames — that is the whole
-    point of taking the stride down here (r7 review: a modulo in the
-    caller still paid one sw*sh*3 copy per skipped frame). The first
-    yield is exactly what `decode_gif` returns. Malformed streams raise
-    ValueError."""
+def decode_gif(raw: bytes) -> tuple[int, int, bytes]:
+    """(width, height, rgb_bytes) of the FIRST frame composited onto the
+    logical screen at its (left, top) offset, the background color under
+    transparent and uncovered pixels. Later frames of an animation are
+    not read. Malformed streams raise ValueError."""
     if len(raw) < 13 or raw[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     sw, sh, packed, bg_idx, _aspect = struct.unpack_from("<HHBBB", raw, 6)
@@ -197,11 +186,8 @@ def _iter_gif_frames(raw: bytes, stride: int = 1):
           if gct and bg_idx < len(gct) // 3 else b"\x00\x00\x00")
     screen = bytearray(bg * (sw * sh))
 
-    # Graphic Control Extension state — applies to the NEXT frame only.
+    # Graphic Control Extension: the transparent index of the next frame
     transparent_idx = -1
-    disposal = 0
-    delay_cs = 0
-    frame_no = 0
     while i < len(raw):
         b0 = raw[i]
         if b0 == 0x3B:                           # trailer
@@ -212,8 +198,6 @@ def _iter_gif_frames(raw: bytes, stride: int = 1):
             label = raw[i + 1]
             body, i = _sub_blocks(raw, i + 2)
             if label == 0xF9 and len(body) >= 4:  # Graphic Control Ext
-                disposal = (body[0] >> 2) & 0x07
-                delay_cs = body[1] | (body[2] << 8)
                 transparent_idx = body[3] if body[0] & 0x01 else -1
             continue
         if b0 != 0x2C:
@@ -250,7 +234,6 @@ def _iter_gif_frames(raw: bytes, stride: int = 1):
             idx = b"".join(rows)
 
         n_colors = len(table) // 3
-        saved = bytes(screen) if disposal == 3 else None
         for y in range(fh):
             row = idx[y * fw:(y + 1) * fw]
             o = ((top + y) * sw + left) * 3
@@ -262,53 +245,8 @@ def _iter_gif_frames(raw: bytes, stride: int = 1):
                         f"GIF pixel index {c} beyond color table "
                         f"({n_colors} entries)")
                 screen[o + 3 * x:o + 3 * x + 3] = table[3 * c:3 * c + 3]
-        if frame_no % stride == 0:
-            yield delay_cs, bytes(screen)
-        frame_no += 1
-
-        if disposal == 2:                        # restore to background
-            for y in range(fh):
-                o = ((top + y) * sw + left) * 3
-                screen[o:o + 3 * fw] = bg * fw
-        elif disposal == 3 and saved is not None:  # restore to previous
-            screen = bytearray(saved)
-        transparent_idx, disposal, delay_cs = -1, 0, 0
-
-    return
-
-
-def decode_gif(raw: bytes) -> tuple[int, int, bytes]:
-    """(width, height, rgb_bytes) of the FIRST frame composited onto the
-    logical screen (background color under transparent / uncovered
-    pixels)."""
-    sw, sh = struct.unpack_from("<HH", raw, 6) if len(raw) >= 10 else (0, 0)
-    for _delay, rgb in _iter_gif_frames(raw):
-        return int(sw), int(sh), rgb
+        return sw, sh, bytes(screen)
     raise ValueError("GIF contains no image frame")
-
-
-def decode_gif_frames(raw: bytes, max_frames: int | None = None,
-                      stride: int = 1) -> tuple[int, int,
-                                                list[tuple[int, bytes]]]:
-    """(width, height, [(delay_cs, rgb_bytes), ...]) for an animated GIF,
-    every frame fully composited with disposal semantics
-    (`_iter_gif_frames`). `stride` keeps every stride-th frame and
-    `max_frames` caps the OUTPUT length — the same prune-before-decode
-    shape as the MJPEG sampler cannot apply here (GIF frames composite
-    cumulatively, so earlier frames must still be DECODED; the stride is
-    applied INSIDE the generator so skipped frames never pay the raster
-    copy-out), and the cap stops the LZW walk early."""
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
-    sw, sh = struct.unpack_from("<HH", raw, 6) if len(raw) >= 10 else (0, 0)
-    frames: list[tuple[int, bytes]] = []
-    for delay, rgb in _iter_gif_frames(raw, stride):
-        frames.append((delay, rgb))
-        if max_frames is not None and len(frames) >= max_frames:
-            break
-    if not frames:
-        raise ValueError("GIF contains no image frame")
-    return int(sw), int(sh), frames
 
 
 def encode_gif(width: int, height: int, indices: bytes, palette: bytes,
@@ -352,61 +290,5 @@ def encode_gif(width: int, height: int, indices: bytes, palette: bytes,
                        0x40 if interlace else 0)
     out.append(min_code_size)
     out += blocks
-    out.append(0x3B)
-    return bytes(out)
-
-
-def encode_gif_animation(width: int, height: int, frames, palette: bytes,
-                         bg_idx: int = 0) -> bytes:
-    """Multi-frame GIF89a from a shared global palette.
-
-    `frames`: iterable of
-    (indices, left, top, fw, fh, delay_cs, disposal, transparent_idx)
-    — each frame a sub-rectangle of the logical screen with its own
-    Graphic Control Extension (delay in centiseconds, disposal method
-    0-3, transparent index or -1). Non-interlaced, global table only —
-    enough to synthesize fixtures exercising every disposal-compositing
-    path of `decode_gif_frames`."""
-    n_colors = len(palette) // 3
-    if (len(palette) % 3 or n_colors < 2 or n_colors > 256
-            or n_colors & (n_colors - 1)):
-        raise ValueError("palette must hold a power-of-two 2..256 RGB "
-                         f"entries, got {len(palette)} bytes")
-    if not 0 <= bg_idx < n_colors:
-        raise ValueError(f"bg_idx {bg_idx} beyond palette")
-    ct_bits = max(1, (n_colors - 1).bit_length())
-    min_code_size = max(2, ct_bits)
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", width, height,
-                       0x80 | (ct_bits - 1), bg_idx, 0)
-    out += palette
-    n_frames = 0
-    for (indices, left, top, fw, fh, delay_cs, disposal,
-         transparent_idx) in frames:
-        if len(indices) != fw * fh:
-            raise ValueError(f"frame indices must be fw*fh={fw * fh} "
-                             f"bytes, got {len(indices)}")
-        if max(indices, default=0) >= n_colors:
-            raise ValueError("index beyond palette")
-        if left + fw > width or top + fh > height:
-            raise ValueError("frame exceeds the logical screen")
-        if not 0 <= disposal <= 3:
-            raise ValueError(f"disposal method {disposal} out of range")
-        packed = (disposal << 2) | (0x01 if transparent_idx >= 0 else 0)
-        out += bytes((0x21, 0xF9, 4, packed,
-                      delay_cs & 0xFF, (delay_cs >> 8) & 0xFF,
-                      max(transparent_idx, 0), 0))
-        out += struct.pack("<BHHHHB", 0x2C, left, top, fw, fh, 0)
-        out.append(min_code_size)
-        lzw = _lzw_encode(min_code_size, indices)
-        for off in range(0, len(lzw), 255):
-            chunk = lzw[off:off + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-        n_frames += 1
-    if n_frames == 0:
-        raise ValueError("animation needs at least one frame")
     out.append(0x3B)
     return bytes(out)

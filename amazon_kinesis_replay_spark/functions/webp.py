@@ -615,113 +615,6 @@ def decode_alpha(alph: bytes, w: int, h: int) -> bytes:
     return bytes(a)
 
 
-def _still_rgba(chunks_blob: bytes):
-    """Decode a still-image chunk sequence (re-wrapped as a RIFF) to
-    (w, h, rgba) — alpha padded to 255 for 3-channel results."""
-    blob = (b"RIFF" + struct.pack("<I", 4 + len(chunks_blob)) + b"WEBP"
-            + chunks_blob)
-    w, h, px = decode_webp(blob)
-    if len(px) == w * h * 3:
-        out = bytearray(w * h * 4)
-        out[0::4] = px[0::3]
-        out[1::4] = px[1::3]
-        out[2::4] = px[2::3]
-        out[3::4] = b"\xff" * (w * h)
-        px = bytes(out)
-    return w, h, px
-
-
-def decode_webp_frames(raw: bytes, max_frames: int | None = None,
-                       stride: int = 1):
-    """(width, height, [(duration_ms, rgba_bytes), ...]) for an
-    animated WebP (ANIM/ANMF container), with stride sampling and a
-    frame cap — the `decode_gif_frames` sampler shape. Each frame's
-    VP8/VP8L(+ALPH) payload decodes through the libwebp-witnessed
-    still decoders; the COMPOSITING follows the public container spec
-    with documented integer arithmetic (canvas initialized to the ANIM
-    background color; 'do not blend' replaces the frame rectangle;
-    alpha blending uses the spec's straight-alpha over operator with
-    round-half-up /255 division; dispose-to-background refills the
-    rectangle with the background color) — there is no animation
-    decoder in this container to witness the compositor against, so
-    the tests drive it with hand-assembled containers of LOSSLESS
-    frames whose composited result is exactly computable. A
-    non-animated payload returns its single still frame with
-    duration 0."""
-    if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"WEBP":
-        raise WebPError("not a WEBP payload")
-    i = 12
-    chunks = []
-    while i + 8 <= len(raw):
-        fourcc = raw[i:i + 4]
-        csz = struct.unpack_from("<I", raw, i + 4)[0]
-        chunks.append((fourcc, raw[i + 8:i + 8 + csz]))
-        i += 8 + csz + (csz & 1)
-    anmf = [b for f, b in chunks if f == b"ANMF"]
-    if not anmf:
-        w, h, px = decode_webp(raw)
-        if len(px) == w * h * 3:
-            _, _, px = _still_rgba(raw[12:])
-        return w, h, [(0, px)]
-    vp8x = next((b for f, b in chunks if f == b"VP8X"), None)
-    if vp8x is None or len(vp8x) < 10:
-        raise WebPError("animated WEBP missing VP8X chunk")
-    cw = (vp8x[4] | (vp8x[5] << 8) | (vp8x[6] << 16)) + 1
-    ch = (vp8x[7] | (vp8x[8] << 8) | (vp8x[9] << 16)) + 1
-    anim = next((b for f, b in chunks if f == b"ANIM"), b"\x00" * 6)
-    bg_b, bg_g, bg_r, bg_a = anim[0], anim[1], anim[2], anim[3]
-    canvas = bytearray(bytes((bg_r, bg_g, bg_b, bg_a)) * (cw * ch))
-    frames = []
-    for n, body in enumerate(anmf):
-        if len(body) < 16:
-            raise WebPError("truncated ANMF header")
-        fx = (body[0] | (body[1] << 8) | (body[2] << 16)) * 2
-        fy = (body[3] | (body[4] << 8) | (body[5] << 16)) * 2
-        fw = (body[6] | (body[7] << 8) | (body[8] << 16)) + 1
-        fh = (body[9] | (body[10] << 8) | (body[11] << 16)) + 1
-        dur = body[12] | (body[13] << 8) | (body[14] << 16)
-        flags = body[15]
-        dispose = flags & 1
-        no_blend = (flags >> 1) & 1
-        w2, h2, px = _still_rgba(body[16:])
-        if (w2, h2) != (fw, fh):
-            raise WebPError("ANMF frame size mismatch")
-        if fx + fw > cw or fy + fh > ch:
-            raise WebPError("ANMF frame outside canvas")
-        for r in range(fh):
-            co = ((fy + r) * cw + fx) * 4
-            fo = r * fw * 4
-            if no_blend:
-                canvas[co:co + fw * 4] = px[fo:fo + fw * 4]
-            else:
-                for c in range(fw):
-                    sa = px[fo + 4 * c + 3]
-                    if sa == 255:
-                        canvas[co + 4 * c:co + 4 * c + 4] = \
-                            px[fo + 4 * c:fo + 4 * c + 4]
-                    elif sa:
-                        da = canvas[co + 4 * c + 3]
-                        oa255 = sa * 255 + da * (255 - sa)
-                        for k in range(3):
-                            s = px[fo + 4 * c + k]
-                            d = canvas[co + 4 * c + k]
-                            num = (s * sa * 255 + d * da * (255 - sa))
-                            canvas[co + 4 * c + k] = \
-                                (num * 2 + oa255) // (2 * oa255) \
-                                if oa255 else 0
-                        canvas[co + 4 * c + 3] = (oa255 * 2 + 255) // 510
-        if n % stride == 0:
-            frames.append((dur, bytes(canvas)))
-            if max_frames is not None and len(frames) >= max_frames:
-                break
-        if dispose:
-            row = bytes((bg_r, bg_g, bg_b, bg_a)) * fw
-            for r in range(fh):
-                co = ((fy + r) * cw + fx) * 4
-                canvas[co:co + fw * 4] = row
-    return cw, ch, frames
-
-
 def decode_webp_yuv(raw: bytes):
     """Decode a LOSSY WebP to its (width, height, Y, U, V) planes —
     the RFC-defined decoder output, bit-exact vs libwebp's

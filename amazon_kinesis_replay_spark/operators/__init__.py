@@ -1,2 +1,2 @@
 from . import (  # noqa: F401
-    dedup, intervals, multimodal, replay_ops, similarity, skew, stats, text)
+    dedup, intervals, multimodal, replay_ops, similarity, stats, text)

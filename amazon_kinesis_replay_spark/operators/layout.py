@@ -332,28 +332,3 @@ def hilbert_lookup(spark, bits: int = 8):
     return spark.createDataFrame(rows, "zkey long, hkey long")
 
 
-def layout_hilbert(df: DataFrame, cols: list[Column], bits: int = 8,
-                   n_partitions: int | None = None) -> DataFrame:
-    """`layout_zorder`'s Hilbert-curve sibling: interleave the
-    quantized columns into zkey, broadcast-join the zkey→hkey lookup,
-    range-cluster on hkey. Hilbert preserves adjacency (consecutive
-    curve positions are always grid neighbors — property-tested in 2-4
-    dims), so file boxes are typically squarer than Morton's; measured
-    on this repo's fixtures it reads ~25-40% fewer files for random
-    2-D boxes (`test_hilbert_vs_morton_pruning_ab`).
-
-    2 dims use the rotation-walk lookup (the cross-engine-gated form,
-    dedup_exact kind='hilbert'); 3+ dims (r9) use the n-D Skilling
-    lookup, whose 2-D instance is test-pinned equal to the rotation
-    walk. The broadcast cap is dims·bits <= 16 key bits — at file
-    granularity that grid already over-resolves a 100 TB export."""
-    if len(cols) < 2:
-        raise ValueError("layout_hilbert needs >= 2 dimensions "
-                         "(use layout_zorder for 1)")
-    spark = df.sparkSession
-    lut = (hilbert_lookup(spark, bits) if len(cols) == 2
-           else hilbert_lookup_nd(spark, bits, len(cols)))
-    keyed = df.withColumn("zkey", zvalue(cols, bits)) \
-        .join(F.broadcast(lut), "zkey")
-    parts = ["hkey"] if n_partitions is None else [n_partitions, "hkey"]
-    return keyed.repartitionByRange(*parts).sortWithinPartitions("hkey")

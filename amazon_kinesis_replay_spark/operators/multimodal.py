@@ -1,4 +1,4 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Multimodal (image/audio) column plumbing.
 
 Media travel as opaque `binary` columns with typed metadata; the heavy
 decode/transform steps run as Arrow-batched functions over `mapInPandas`
@@ -21,18 +21,19 @@ Decode coverage:
   AIFF/AIFC audio containers (integer PCM 8-32, float32, G.711
   A-law/mu-law, 'sowt', WAVE_FORMAT_EXTENSIBLE) + FLAC (r10,
   functions/flac.py — CONSTANT/VERBATIM/FIXED/LPC subframes, Rice
-  residuals, all stereo decorrelations, CRC+MD5-verified) + numpy-FFT
-  band-energy features — cross-container decode pinned byte-exact at
-  24/32-bit on real CPython audiodata fixtures, FLAC pinned byte-exact
-  against the same WAV masters via the encoder-first witness.
+  residuals, all stereo decorrelations, CRC+MD5-verified) feeding the
+  exact `audio_meta` content digest — cross-container decode pinned
+  byte-exact at 24/32-bit on real CPython audiodata fixtures, FLAC
+  pinned byte-exact against the same WAV masters via the encoder-first
+  witness.
 - STUBBED (codec genuinely unavailable in this container): perceptual
-  audio codecs (MP3/AAC/Opus) and video codec frames (ffmpeg) —
-  progressive JPEG decodes natively since r9 (functions/jpeg.py §G),
-  G.711-in-WAV since r9, FLAC since r10, arithmetic-coded JPEG
-  (SOF9 + SOF10, QM coder) since r10 too. The remaining stubs raise
-  NotImplementedError; `fake=True` substitutes a deterministic fake
-  decoder so the Spark-side plumbing (schema, batching, partitioning)
-  stays fully real and testable for them.
+  audio codecs (MP3/AAC/Opus) — progressive JPEG decodes natively
+  since r9 (functions/jpeg.py §G), G.711-in-WAV since r9, FLAC since
+  r10, arithmetic-coded JPEG (SOF9 + SOF10, QM coder) since r10 too.
+  The remaining stubs raise NotImplementedError; the image operators'
+  `fake=True` substitutes a deterministic fake decoder so the
+  Spark-side plumbing (schema, batching, partitioning) stays fully
+  real and testable without valid media.
 """
 
 from __future__ import annotations
@@ -42,21 +43,12 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, FloatType, IntegerType, LongType, MapType,
-    StringType, StructField, StructType,
+    ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType,
+    StructField, StructType,
 )
 
 from ..session import drop_zip_finders
-
-#: Canonical multimodal record schema: opaque payload + typed metadata.
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("media_type", StringType(), False),   # image | audio | video
-    StructField("data", BinaryType(), True),
-    StructField("meta", MapType(StringType(), StringType()), True),
-])
 
 IMAGE_FEATURES_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
@@ -66,22 +58,6 @@ IMAGE_FEATURES_SCHEMA = StructType([
     StructField("sha1", StringType(), True),
     StructField("features", ArrayType(FloatType()), True),
 ])
-
-FRAME_SAMPLE_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("frame_idx", IntegerType(), False),
-    StructField("frame_sha1", StringType(), True),
-])
-
-FRAME_FEATURES_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("frame_idx", IntegerType(), False),
-    StructField("frame_sha1", StringType(), True),
-    StructField("width", IntegerType(), True),
-    StructField("height", IntegerType(), True),
-    StructField("features", ArrayType(FloatType()), True),
-])
-
 
 def _fake_decode_image(data: bytes) -> tuple[int, int, list[float]]:
     """Deterministic stand-in for a real image decoder: dimensions and an
@@ -881,193 +857,6 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
     return out_df
 
 
-def _parse_avi_frames(raw: bytes) -> list[bytes]:
-    """Video-frame chunk payloads ('NNdb' uncompressed / 'NNdc' compressed
-    for ANY stream number NN — audio-first muxes put video in stream 1) of
-    a RIFF/AVI container, in stream order — walks the 'movi' LIST
-    recursively, tolerating idx1 and junk chunks. Truncated chunk sizes
-    and a frameless container raise (fail loudly, never emit wrong/empty
-    frames silently)."""
-    import struct
-    if len(raw) < 12 or raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI payload")
-
-    frames: list[bytes] = []
-
-    def walk(start: int, end: int) -> None:
-        i = start
-        while i + 8 <= end:
-            cid = raw[i:i + 4]
-            csz = struct.unpack_from("<I", raw, i + 4)[0]
-            body_at = i + 8
-            if body_at + csz > end:
-                raise ValueError(
-                    f"truncated AVI: chunk {cid!r} of {csz} bytes at "
-                    f"offset {i} overruns the container")
-            if cid == b"LIST":
-                walk(body_at + 4, body_at + csz)
-            elif cid[:2].isdigit() and cid[2:4] in (b"db", b"dc"):
-                frames.append(raw[body_at:body_at + csz])
-            i = body_at + csz + (csz & 1)       # word alignment
-
-    walk(12, len(raw))
-    if not frames:
-        raise ValueError("RIFF/AVI payload contains no video frame chunks")
-    return frames
-
-
-def encode_avi_mjpeg(frames: list[bytes], width: int = 0,
-                     height: int = 0, fps: int = 25) -> bytes:
-    """Minimal REAL RIFF/AVI MJPEG container around per-frame JPEG blobs:
-    hdrl LIST (avih + one video strl with fourcc MJPG) + movi LIST of
-    '00dc' chunks. Every chunk is word-aligned and sized per RIFF rules,
-    so any conformant AVI walker (including _parse_avi_frames) recovers
-    the frames byte-exactly. Fixture/round-trip use: pair with
-    functions/jpeg.encode_jpeg for fully synthetic MJPEG videos."""
-    import struct
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return cid + struct.pack("<I", len(body)) + body + pad
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    usec = 1_000_000 // max(fps, 1)
-    avih = struct.pack("<14I", usec, 0, 0, 0x10, len(frames), 0, 1, 0,
-                       width, height, 0, 0, 0, 0)
-    strh = (b"vids" + b"MJPG" + struct.pack("<I", 0)
-            + struct.pack("<HHI", 0, 0, 0)
-            + struct.pack("<7I", 1, fps, 0, len(frames), 0, 0, 0)
-            + struct.pack("<4H", 0, 0, width, height))
-    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24,
-                       b"MJPG", width * height * 3, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
-
-
-def sample_frames(df: DataFrame, every_n: int = 10, fake: bool = False,
-                  decode_frames: bool = False) -> DataFrame:
-    """Frame-sample video payloads (every_n-th frame) via mapInPandas.
-
-    The real path chunk-walks RIFF/AVI containers and samples the actual
-    '00db'/'00dc' frame chunks; compressed containers (mp4/mkv need
-    ffmpeg) raise NotImplementedError from the kernel. fake=True treats
-    each 1 KiB slice of any payload as one 'frame'.
-
-    decode_frames=True additionally DECODES each sampled frame — MJPEG
-    ('dc' chunks carrying JPEG entropy streams, the one compressed video
-    codec implementable without ffmpeg, via functions/jpeg.py) or an
-    embedded PNG/GIF/BMP still — and emits (width, height, features)
-    per frame next to the sha1. Sample-then-decode is the scale shape:
-    the every_n stride prunes BEFORE the expensive per-frame decode, so
-    a 1000x-frame corpus pays decode on 1/every_n of its frames.
-
-    ANIMATED GIFs (r7) route through functions.gif.decode_gif_frames
-    with the same every_n stride: a sampled 'frame' is the fully
-    COMPOSITED logical screen (disposal semantics applied), because a
-    GIF frame chunk is a sub-rectangle patch meaningless on its own —
-    so frame_sha1 hashes the composited RGB raster, not stored chunk
-    bytes as in the AVI path, and the stride prunes the copy-out and
-    feature work but not the cumulative LZW walk (compositing needs
-    every prior frame decoded)."""
-
-    def _real_frames(raw: bytes) -> list[bytes]:
-        if raw[:4] != b"RIFF":
-            raise NotImplementedError(
-                f"unsupported video magic {raw[:4]!r}: only RIFF/AVI "
-                "containers and animated GIFs decode without ffmpeg; pass "
-                "fake=True for the deterministic test decoder")
-        return _parse_avi_frames(raw)
-
-    def _gif_samples(raw: bytes) -> list[tuple[int, int, int, bytes]]:
-        """(frame_idx, width, height, composited_rgb) per sampled frame."""
-        from ..functions.gif import decode_gif_frames
-        w, h, frames = decode_gif_frames(raw, stride=every_n)
-        return [(k * every_n, w, h, rgb)
-                for k, (_delay, rgb) in enumerate(frames)]
-
-    def _is_gif(raw: bytes) -> bool:
-        return not fake and raw[:6] in (b"GIF87a", b"GIF89a")
-
-    def _fake_frames(raw: bytes) -> list[bytes]:
-        return [raw[i * 1024:(i + 1) * 1024]
-                for i in range(max(1, len(raw) // 1024))]
-
-    frames_of = _fake_frames if fake else _real_frames
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_sha1": []}
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                raw = bytes(data) if data is not None else b""
-                if _is_gif(raw):
-                    for idx, _w, _h, rgb in _gif_samples(raw):
-                        rows["media_id"].append(mid)
-                        rows["frame_idx"].append(idx)
-                        rows["frame_sha1"].append(
-                            hashlib.sha1(rgb).hexdigest())
-                    continue
-                frames = frames_of(raw)
-                for idx in range(0, len(frames), every_n):
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_sha1"].append(
-                        hashlib.sha1(frames[idx]).hexdigest())
-            yield pd.DataFrame(rows)
-
-    caps = _codec_caps()
-
-    def _sample_decode(batches: Iterator[pd.DataFrame]) \
-            -> Iterator[pd.DataFrame]:
-        _apply_codec_caps(caps)
-        drop_zip_finders()
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_sha1": [],
-                    "width": [], "height": [], "features": []}
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                raw = bytes(data) if data is not None else b""
-                if _is_gif(raw):
-                    for idx, w, h, rgb in _gif_samples(raw):
-                        rows["media_id"].append(mid)
-                        rows["frame_idx"].append(idx)
-                        rows["frame_sha1"].append(
-                            hashlib.sha1(rgb).hexdigest())
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        rows["features"].append(_pixel_histogram(rgb))
-                    continue
-                frames = frames_of(raw)
-                for idx in range(0, len(frames), every_n):
-                    frame = frames[idx]
-                    w, h, feats = _real_decode_image(frame)
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_sha1"].append(
-                        hashlib.sha1(frame).hexdigest())
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["features"].append(feats)
-            yield pd.DataFrame(rows)
-
-    if decode_frames:
-        return df.select("media_id", "data").mapInPandas(
-            _sample_decode, FRAME_FEATURES_SCHEMA)
-    return df.select("media_id", "data").mapInPandas(_sample, FRAME_SAMPLE_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("sample_rate", IntegerType(), True),
-    StructField("duration_s", FloatType(), True),
-    StructField("n_bytes", LongType(), True),
-    StructField("mfcc", ArrayType(FloatType()), True),
-])
-
-
 def _parse_wav(raw: bytes) -> tuple[int, int, int, bytes, int, int]:
     """(sample_rate, channels, bits_per_sample, data, format_code,
     block_align) from a RIFF/WAVE payload — chunk-walks the container,
@@ -1327,7 +1116,7 @@ def _g711_decode(body: bytes, fmt: int):
     return table[np.frombuffer(body, dtype=np.uint8)].astype(np.float64)
 
 
-def _au_mono_f64(raw: bytes, max_frames: int | None = None):
+def _au_mono_f64(raw: bytes):
     """Sun/NeXT AU (.snd) decode to the `_wav_mono_f64` contract. The
     header is six big-endian u32 words (magic, data offset, data size,
     encoding, rate, channels — the public Sun audio spec); encodings
@@ -1357,10 +1146,10 @@ def _au_mono_f64(raw: bytes, max_frames: int | None = None):
         raise NotImplementedError(
             f"AU encoding {enc} not supported (mu-law, PCM 8-32, "
             "float32, A-law)")
-    return _mono_trim(a, channels, rate, max_frames)
+    return _mono_trim(a, channels, rate)
 
 
-def _aiff_mono_f64(raw: bytes, max_frames: int | None = None):
+def _aiff_mono_f64(raw: bytes):
     """AIFF / AIFF-C decode to the `_wav_mono_f64` contract: IFF chunk
     walk (COMM carries channels/frames/bits + the 80-bit-float rate,
     AIFC adds a compression 4cc), SSND carries the samples after its
@@ -1406,25 +1195,20 @@ def _aiff_mono_f64(raw: bytes, max_frames: int | None = None):
         raise NotImplementedError(
             f"AIFC compression {comp!r} not supported "
             "(NONE/sowt/ulaw/alaw)")
-    return _mono_trim(a, int(channels), int(round(rate)), max_frames)
+    return _mono_trim(a, int(channels), int(round(rate)))
 
 
-def _mono_trim(a, channels: int, rate: int, max_frames: int | None):
-    """Shared tail of the audio decoders: frame-align, optionally
-    truncate the RETURNED signal, mono-mix. Returns
+def _mono_trim(a, channels: int, rate: int):
+    """Shared tail of the audio decoders: frame-align, mono-mix. Returns
     (rate, channels, total_frames, mono)."""
-    n = len(a) // channels * channels
-    total_frames = n // channels
-    frames = total_frames
-    if max_frames is not None and frames > max_frames:
-        frames = max_frames
-    trimmed = a[:frames * channels]
+    total_frames = len(a) // channels
+    trimmed = a[:total_frames * channels]
     mono = (trimmed.reshape(-1, channels).mean(axis=1)
             if channels > 1 else trimmed)
     return int(rate), channels, total_frames, mono
 
 
-def _flac_mono_f64(raw: bytes, max_frames: int | None = None):
+def _flac_mono_f64(raw: bytes):
     """FLAC decode to the `_wav_mono_f64` contract (int16-scale mono
     float64). Lossless by construction — `functions.flac.decode_flac`
     verifies per-frame CRC-8/CRC-16 and the STREAMINFO MD5 of the
@@ -1432,37 +1216,34 @@ def _flac_mono_f64(raw: bytes, max_frames: int | None = None):
     from amazon_kinesis_replay_spark.functions.flac import decode_flac
     rate, channels, bits, _frames, samples = decode_flac(raw)
     a = samples.astype("float64").reshape(-1) * (2.0 ** (16 - bits))
-    return _mono_trim(a, channels, rate, max_frames)
+    return _mono_trim(a, channels, rate)
 
 
-def _audio_mono_f64(raw: bytes, max_frames: int | None = None):
+def _audio_mono_f64(raw: bytes):
     """Magic-dispatched audio decode: RIFF/WAVE, Sun AU, AIFF/AIFC,
     FLAC (r10) — all to (rate, channels, total_frames, mono float64 in
     int16 scale). Anything else raises loudly."""
     if raw[:4] == b"RIFF":
-        return _wav_mono_f64(raw, max_frames)
+        return _wav_mono_f64(raw)
     if raw[:4] == b".snd":
-        return _au_mono_f64(raw, max_frames)
+        return _au_mono_f64(raw)
     if raw[:4] == b"FORM":
-        return _aiff_mono_f64(raw, max_frames)
+        return _aiff_mono_f64(raw)
     if raw[:4] == b"fLaC":
-        return _flac_mono_f64(raw, max_frames)
+        return _flac_mono_f64(raw)
     raise NotImplementedError(
         f"unsupported audio magic {raw[:4]!r}: WAV, AU, AIFF/AIFC and "
-        "FLAC decode without a codec library; pass fake=True for the "
-        "deterministic test decoder")
+        "FLAC decode without a codec library")
 
 
-def _wav_mono_f64(raw: bytes, max_frames: int | None = None):
+def _wav_mono_f64(raw: bytes):
     """Decode a RIFF/WAVE payload to (rate, channels, total_frames,
     mono float64 signal in int16 scale). Format support — all from the
     public specs, no codec library: integer PCM at 8 (unsigned) / 16 /
     24 / 32 bits, IEEE float32 (format 3), A-law (6) and mu-law (7,
     both via the G.711 tables), IMA/DVI ADPCM (0x11, block codec —
     foreign-witnessed sample-exact against CPython audioop in the
-    tests); anything else raises loudly. channels average to mono;
-    `max_frames` truncates the RETURNED signal only (total_frames
-    stays exact for duration math)."""
+    tests); anything else raises loudly. channels average to mono."""
     import numpy as np
     global _G711
     rate, channels, bits, pcm, fmt, block_align = _parse_wav(raw)
@@ -1501,150 +1282,6 @@ def _wav_mono_f64(raw: bytes, max_frames: int | None = None):
             f"WAV format code {fmt} at {bits}-bit not supported "
             "(integer PCM 8/16/24/32, float32, A-law, mu-law, "
             "IMA ADPCM)")
-    return _mono_trim(a, channels, rate, max_frames)
+    return _mono_trim(a, channels, rate)
 
 
-def _band_energies(mono, n_bands: int = 13) -> list[float]:
-    """Log band energies of a mono float64 signal (int16 scale) via
-    numpy rfft — a real, deterministic spectral feature in the MFCC
-    shape (true MFCCs need a mel filterbank + DCT; the plumbing and
-    dimensionality are identical)."""
-    import numpy as np
-    if len(mono) == 0:
-        return [0.0] * n_bands
-    spec = np.abs(np.fft.rfft(mono))
-    bands = np.array_split(spec, n_bands)
-    return [round(float(np.log1p(b.mean())) if len(b) else 0.0, 6)
-            for b in bands]
-
-
-def decode_audio(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode + feature-extract audio payloads via mapInPandas.
-
-    The real path chunk-walks RIFF/WAVE headers (sample rate, channels,
-    bit depth, exact duration from the data chunk) and computes 13 log
-    band energies over the decoded signal via numpy FFT. Supported WAV
-    encodings (r9 — public specs, no codec library): integer PCM
-    8/16/24/32-bit, IEEE float32, and G.711 A-law / mu-law (telephony
-    corpora ship as G.711-in-WAV); FLAC decodes since r10
-    (functions/flac.py, lossless + CRC/MD5-verified); the remaining
-    perceptual codecs (MP3/AAC/Opus) raise NotImplementedError from the
-    kernel. fake=True substitutes the digest-derived fake decoder."""
-
-    def _real_one(raw: bytes):
-        rate, _ch, total_frames, mono = _audio_mono_f64(raw,
-                                                        max_frames=65536)
-        duration = total_frames / rate
-        return rate, round(duration, 6), _band_energies(mono)
-
-    def _fake_one(raw: bytes):
-        digest = hashlib.sha1(raw).digest()
-        rate = (8000, 16000, 22050, 44100)[digest[0] % 4]
-        return (rate, round(len(raw) / (rate * 2.0), 6),
-                [round(b / 255.0 - 0.5, 6) for b in digest[1:14]])
-
-    decode_one = _fake_one if fake else _real_one
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in batches:
-            out = {"media_id": [], "sample_rate": [], "duration_s": [],
-                   "n_bytes": [], "mfcc": []}
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                raw = bytes(data) if data is not None else b""
-                rate, duration, mfcc = decode_one(raw)
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["duration_s"].append(duration)
-                out["n_bytes"].append(len(raw))
-                out["mfcc"].append(mfcc)
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "data").mapInPandas(_decode, AUDIO_FEATURES_SCHEMA)
-
-
-RESAMPLED_AUDIO_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("sample_rate", IntegerType(), True),
-    StructField("n_samples", LongType(), True),
-    StructField("pcm", BinaryType(), True),
-])
-
-
-def resample_audio(df: DataFrame, out_rate: int,
-                   fake: bool = False) -> DataFrame:
-    """Mono-mix + linear-interpolation resample of WAV payloads to a
-    fixed sample rate (the normalize-for-training step next to the image
-    resize): channels average to mono, the signal is resampled on exact
-    time coordinates with np.interp (an integer-ratio downsample
-    therefore passes source samples through EXACTLY), output is PCM16.
-    Same Arrow-batched mapInPandas shape as decode_audio; compressed
-    audio raises loudly; fake=True treats any payload as PCM16@8kHz mono
-    so pipelines can be exercised without valid media.
-
-    Output: (media_id, sample_rate, n_samples, pcm) — rate/samples/bytes
-    of the RESAMPLED mono signal."""
-    import numpy as np
-    if out_rate < 1:
-        raise ValueError(f"out_rate must be >= 1, got {out_rate}")
-
-    def _decode(raw: bytes):
-        if fake:
-            a = np.frombuffer(raw[:len(raw) & ~1], dtype="<i2")
-            return 8000, a.astype(np.float64)
-        rate, _ch, _frames, mono = _audio_mono_f64(raw)
-        return rate, mono
-
-    def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
-        for pdf in batches:
-            out = {"media_id": [], "sample_rate": [], "n_samples": [],
-                   "pcm": []}
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                raw = bytes(data) if data is not None else b""
-                rate, mono = _decode(raw)
-                if len(mono) == 0:
-                    res = mono
-                else:
-                    n_out = max(1, int(round(len(mono) * out_rate / rate)))
-                    t_out = np.arange(n_out) * (rate / out_rate)
-                    res = np.interp(t_out, np.arange(len(mono)), mono)
-                pcm16 = np.clip(np.rint(res), -32768, 32767) \
-                    .astype("<i2").tobytes()
-                out["media_id"].append(mid)
-                out["sample_rate"].append(out_rate)
-                out["n_samples"].append(len(res))
-                out["pcm"].append(pcm16)
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "data").mapInPandas(
-        _resample, RESAMPLED_AUDIO_SCHEMA)
-
-
-def media_metadata(df: DataFrame, data_col: str = "data") -> DataFrame:
-    """JVM-side metadata over binary payloads — no Python needed: byte
-    length, md5, magic-byte sniff. The cheap pre-filter that should always
-    run BEFORE any Python decode at scale: route/partition by `magic` so
-    each decode task sees one format (and unknowns never reach Python)."""
-    data = F.col(data_col)
-    head4 = F.hex(F.substring(data, 1, 4))
-    head2 = F.hex(F.substring(data, 1, 2))
-    magic = (F.when(head4 == "89504E47", "png")
-             .when(head2 == "FFD8", "jpeg")
-             .when(F.substring(data, 1, 6).cast("string")
-                   .isin("GIF87a", "GIF89a"), "gif")
-             .when(head2 == "424D", "bmp")
-             .when(F.substring(data, 1, 2).cast("string")
-                   .isin("P6", "P5"), "ppm")
-             .when((head4 == "52494646")
-                   & (F.hex(F.substring(data, 9, 4)) == "57454250"),
-                   "webp")
-             .when(head4.isin("49492A00", "4D4D002A"), "tiff")
-             .when(head4 == "52494646", "riff")   # WAV / AVI container
-             .otherwise("unknown"))
-    return df.withColumns({
-        "n_bytes": F.octet_length(data).cast("long"),
-        "digest": F.md5(data),
-        "looks_png": head4 == F.lit("89504E47"),
-        "magic": magic,
-    })

@@ -1,12 +1,10 @@
-"""Keyword retrieval (BM25) and hybrid rank fusion.
+"""Keyword retrieval (BM25).
 
 The retrieval surface a training-data pipeline needs next to the ANN
 family (operators.similarity): exact keyword search over the corpus for
 contamination audits ("which training docs contain this eval phrase"),
-curation spot-checks, and hybrid dedup candidate generation — BM25
-(Robertson et al., the public Okapi formulation) plus reciprocal-rank
-fusion (Cormack et al. 2009) to combine a keyword leg with an
-embedding-cosine leg.
+curation spot-checks — BM25 (Robertson et al., the public Okapi
+formulation).
 
 Spark-first shapes:
 
@@ -18,18 +16,14 @@ Spark-first shapes:
   TakeOrderedAndProject top-k. No shuffle touches the corpus; the only
   wide operation is the per-doc partial-aggregated sum over matched
   postings (work ∝ matched postings, not corpus).
-- `rrf_fuse` — reciprocal-rank fusion over any number of ranked legs:
-  union the (doc_id, rank) frames, sum 1/(k0+rank). Ranks are integers
-  (ties broken by doc id, so legs are deterministic), which keeps
-  fusion rerun-stable where raw-score fusion would not be.
 
 Correctness gates: the tokenize→postings sufficient statistics are
 exact integers, hash-gated cross-engine (dedup_exact kind='bm25' — the
 oracle rebuilds the postings table in DuckDB with the same
 trim(lower)/\\s+ tokenization the span oracle already uses). The float
-BM25 scoring and the fusion arithmetic are pinned against driver-only
-python twins at 1e-9 (ln() may differ in the last ulp across engines,
-so cross-ENGINE hashing of scores would gate libm, not the plan).
+BM25 scoring is pinned against a driver-only python twin at 1e-9
+(ln() may differ in the last ulp across engines, so cross-ENGINE
+hashing of scores would gate libm, not the plan).
 
 Reference scope note: the reference engine (S3→Kinesis replay) has no
 search surface; this module is part of the SURVEY §6 LLM-pipeline
@@ -48,10 +42,6 @@ from .text import token_count_expr, tokens_expr
 #: Okapi defaults (public BM25 formulation).
 K1 = 1.2
 B = 0.75
-#: RRF smoothing constant (Cormack et al. 2009 use 60).
-RRF_K0 = 60
-
-
 def postings(docs: DataFrame, id_col: str = "doc_id",
              text_col: str = "text") -> DataFrame:
     """Inverted index rows (term, id, tf): one explode + one groupBy
@@ -160,71 +150,3 @@ def py_reference_bm25(rows, query: str, k: int = 10,
     return scores[:k]
 
 
-def rrf_fuse(legs: list[DataFrame], k0: int = RRF_K0,
-             k: int | None = None) -> DataFrame:
-    """Reciprocal-rank fusion: each leg is a ranked frame with an `id`
-    column already ordered best-first (e.g. bm25_topk output, or an
-    ann_topk cosine list). Fused score = Σ_legs 1/(k0 + rank), rank
-    1-based within each leg. Ranks are assigned here from each leg's
-    own (score DESC, id) order via a window over the LEG's rows only —
-    legs are top-k sized (bounded), so the single-partition window is
-    metadata-scale, not a corpus sort. Raw scores never mix, which is
-    the point of RRF: legs with incomparable score scales (BM25 vs
-    cosine) fuse by position only."""
-    from pyspark.sql import Window
-    ranked = []
-    for li, leg in enumerate(legs):
-        cols = set(leg.columns)
-        order = [F.col("score").desc()] if "score" in cols else []
-        order.append(F.col("id").asc())
-        w = Window.orderBy(*order)
-        ranked.append(leg.select(
-            "id", F.row_number().over(w).alias("rank"),
-            F.lit(li).alias("leg")))
-    allr = ranked[0]
-    for r in ranked[1:]:
-        allr = allr.unionByName(r)
-    fused = (allr.groupBy("id")
-             .agg(F.sum(F.lit(1.0) / (F.lit(float(k0)) + F.col("rank")))
-                  .alias("rrf"),
-                  F.count("*").cast("long").alias("n_legs"))
-             .orderBy(F.col("rrf").desc(), F.col("id").asc()))
-    return fused.limit(k) if k else fused
-
-
-def py_reference_rrf(leg_ids: list[list], k0: int = RRF_K0) -> list[tuple]:
-    """Driver twin of rrf_fuse over lists of ids (best-first)."""
-    acc: dict = {}
-    for ids in leg_ids:
-        for r, i in enumerate(ids, start=1):
-            s, c = acc.get(i, (0.0, 0))
-            acc[i] = (s + 1.0 / (k0 + r), c + 1)
-    out = [(i, s, c) for i, (s, c) in acc.items()]
-    out.sort(key=lambda x: (-x[1], x[0]))
-    return out
-
-
-def hybrid_topk(docs: DataFrame, emb: DataFrame, query_text: str,
-                query_vec: list[float], k: int = 10,
-                doc_id_col: str = "doc_id", text_col: str = "text",
-                vec_id_col: str = "vec_id", vec_col: str = "embedding",
-                k0: int = RRF_K0) -> DataFrame:
-    """Hybrid retrieval in one call: a BM25 keyword leg over `docs` and
-    an exact cosine leg over `emb` (similarity.brute_force_topk — swap
-    in lsh/ivf/pq/sq8 for the approximate tiers, their output shape is
-    identical), fused by reciprocal rank. Both legs retrieve 2k
-    candidates (the standard fusion over-fetch: an id ranked k+1 on
-    both legs can outrank an id ranked 1 on one and absent on the
-    other); the fused list is cut to k. Ids must be the same space
-    (doc_id == vec_id for a 1:1 corpus). Returns (id, rrf, n_legs)."""
-    from .similarity import brute_force_topk
-    spark = docs.sparkSession
-    bm = bm25_topk(docs, query_text, k=2 * k,
-                   id_col=doc_id_col, text_col=text_col)
-    q_df = spark.createDataFrame(
-        [([float(x) for x in query_vec],)], "q_vec array<double>")
-    ann = (brute_force_topk(emb, q_df, k=2 * k,
-                            id_col=vec_id_col, vec_col=vec_col)
-           .select(F.col(vec_id_col).alias("id"),
-                   F.col("cosine").alias("score")))
-    return rrf_fuse([bm, ann], k0=k0, k=k)

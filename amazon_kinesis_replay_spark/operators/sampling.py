@@ -12,11 +12,8 @@ Everything is DataFrame ops: per-domain rates come from one map-side
 combinable groupBy over a domain column (metadata-scale result,
 broadcast back), membership tests are pure column arithmetic on a
 multiplicative hash of the id, and DSIR scoring reuses the distributed
-n-gram LM join shape (operators/text.py). Nothing collects corpus-sized
-data on the driver — the only driver-side collect is
-perplexity_buckets' len(cuts)-row quantile frame, read off the
-bounded (<=8k-row) quantile-histogram sketch, never the corpus
-(hygiene allowlist justification).
+n-gram LM join shape (operators/text.py). Nothing is collected onto
+the driver.
 
 Cross-engine exactness (the oracle-gate discipline of this repo): at
 temperature=2.0 the whole rate computation uses only correctly-rounded
@@ -29,7 +26,7 @@ the function).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Multiplier for the sampling hash — a different odd constant than the
@@ -58,15 +55,6 @@ def hash_ppm_expr(id_sql: str) -> str:
     doc_train_split oracle SQL mirrors the same rewrite."""
     return (f"pmod(pmod(CAST({id_sql} AS BIGINT), {_PPM}) "
             f"* {_SAMPLE_MULT}, {_PPM})")
-
-
-def deterministic_sample(df: DataFrame, id_col: str,
-                         rate: float) -> DataFrame:
-    """Uniform deterministic subsample: keep iff
-    hash_ppm_expr(id) < floor(rate * 1e6). Stable under reruns, resumable,
-    and engine-portable — the property a 100 TB pipeline needs from a
-    sample (a Bernoulli RNG sample is none of those)."""
-    return df.filter(f"{hash_ppm_expr(id_col)} < {int(rate * _PPM)}")
 
 
 def temperature_mixture_rates(df: DataFrame, domain_col: str,
@@ -165,46 +153,6 @@ def mixture_sample(df: DataFrame, id_col: str, domain_col: str,
 # --------------------------------------------------------------------------
 
 
-def dsir_stats(df: DataFrame, id_col: str, text_col: str,
-               target_lm: DataFrame, raw_lm: DataFrame,
-               n: int = 2) -> DataFrame:
-    """EXACT-INTEGER sufficient statistics of a document against a
-    target and a raw n-gram count model: (id, n_grams, t_seen, t_sum,
-    r_seen, r_sum) — gram count, how many grams each model has seen,
-    and the summed model counts. These are the hash-gateable core of
-    DSIR scoring (the float log-ratio in dsir_log_weights is built from
-    exactly these joins); they are also the right thing to persist at
-    scale, since logs can be re-applied to stats without re-scanning
-    text.
-
-    One explode + two LEFT hash joins on (context, token) + one per-doc
-    aggregate; AQE broadcasts small models.
-    """
-    from . import text as _text
-    g = (df.select(F.col(id_col).alias("__id"),
-                   F.explode(_text._word_ngrams(text_col, n))
-                   .alias("g"))
-         .select("__id", "g.context", "g.token"))
-    t = target_lm.select("context", "token", F.col("cnt").alias("__tc"))
-    r = raw_lm.select("context", "token", F.col("cnt").alias("__rc"))
-    per = (g.join(t, ["context", "token"], "left")
-           .join(r, ["context", "token"], "left")
-           .groupBy("__id")
-           .agg(F.count("*").cast("long").alias("n_grams"),
-                F.count("__tc").cast("long").alias("t_seen"),
-                F.coalesce(F.sum("__tc"), F.lit(0)).cast("long")
-                .alias("t_sum"),
-                F.count("__rc").cast("long").alias("r_seen"),
-                F.coalesce(F.sum("__rc"), F.lit(0)).cast("long")
-                .alias("r_sum")))
-    return (df.select(F.col(id_col).alias("__id")).distinct()
-            .join(per, "__id", "left")
-            .select(F.col("__id").alias(id_col),
-                    *[F.coalesce(c, F.lit(0)).cast("long").alias(c)
-                      for c in ("n_grams", "t_seen", "t_sum",
-                                "r_seen", "r_sum")]))
-
-
 def dsir_log_weights(df: DataFrame, id_col: str, text_col: str,
                      target_lm: DataFrame, raw_lm: DataFrame,
                      n: int = 2, k: float = 0.5) -> DataFrame:
@@ -213,12 +161,12 @@ def dsir_log_weights(df: DataFrame, id_col: str, text_col: str,
     log w(x) = sum_g [ log p_target(g) - log p_raw(g) ]
 
     with add-k-smoothed gram probabilities under each model
-    (p(tok|ctx) = (cnt + k) / (ctx_cnt + k * V), the ngram_lm_score
-    convention). High log_w = looks like the target domain relative to
-    the raw pool. Documents shorter than n words get NULL (no silent
-    drop). Output: (id, n_grams, log_w).
+    (p(tok|ctx) = (cnt + k) / (ctx_cnt + k * V)). High log_w = looks
+    like the target domain relative to the raw pool. Documents shorter
+    than n words get NULL (no silent drop). Output: (id, n_grams,
+    log_w).
 
-    Same two-hash-join plan as dsir_stats plus per-context totals; only
+    Two hash joins (one per model) plus per-context totals; only
     the two vocab sizes touch the driver (metadata-scale counts).
     """
     from . import text as _text
@@ -310,7 +258,7 @@ def dsir_hashed_stats(df: DataFrame, id_col: str, text_col: str,
     model bucket counts (sum_b c_b(doc) * model_cnt(b)). The float
     log-ratio in dsir_hashed_log_weights is built from exactly these
     joins, so gating the integers pins the whole bucket geometry + hash
-    while keeping libm logs out of the gate (the dsir_stats pattern)."""
+    while keeping libm logs out of the gate."""
     per = dsir_hashed_counts(df, text_col, n_buckets, ns, id_col=id_col)
     t = target_counts.select("bucket", F.col("cnt").alias("__tc"))
     r = raw_counts.select("bucket", F.col("cnt").alias("__rc"))
@@ -365,78 +313,6 @@ def dsir_hashed_log_weights(df: DataFrame, id_col: str, text_col: str,
                     F.coalesce("hb_grams", F.lit(0)).cast("long")
                     .alias("hb_grams"),
                     "log_w"))
-
-
-def perplexity_buckets(scores: DataFrame, id_col: str,
-                       bits_col: str = "bits_per_token",
-                       cuts: tuple = (1.0 / 3.0, 2.0 / 3.0),
-                       sig_bits: int = 16) -> DataFrame:
-    """CCNet head/middle/tail bucketing (Wenzek et al. 2020 §4.3): split
-    the corpus into perplexity terciles under a target-domain LM —
-    'head' = most fluent/in-domain, 'tail' = noise. Input is the
-    (id, bits_per_token) frame `text.ngram_lm_score` produces.
-
-    The cut points come from the deterministic quantile histogram over
-    truncated milli-bits (bits * 1000 as long): bits-per-token lives
-    well under 65.536, so every scaled value is in the sketch's EXACT
-    range at sig_bits=16 and the lower-bound decode returns an exact
-    data value — the bucketing is rerun- and partition-stable where an
-    approxQuantile cut would not be. One sketch build + one tiny
-    quantile walk; the corpus is scanned, never sorted.
-
-    Output: (id, bits, ppl_bucket) with ppl_bucket in
-    'head'/'middle'/'tail' (NULL-score docs keep a NULL bucket — no
-    silent drop)."""
-    if len(cuts) != 2 or not 0.0 < cuts[0] < cuts[1] < 1.0:
-        raise ValueError(f"cuts must be two quantiles in (0,1), "
-                         f"ascending; got {cuts!r}")
-    from . import sketches
-    mb = (F.col(bits_col) * F.lit(1000.0)).cast("long")
-    qh = sketches.qhist_table(
-        scores.select(mb.alias("__mb")), "__mb", sig_bits=sig_bits)
-    qrows = sketches.qhist_quantiles(
-        qh, [float(c) for c in cuts], sig_bits=sig_bits,
-        point="lower").collect()
-    if not qrows:
-        raise ValueError(
-            "perplexity_buckets: no scored documents (every "
-            f"{bits_col} is NULL or the frame is empty) — nothing to "
-            "bucket; score the corpus with text.ngram_lm_score first")
-    t = {round(r["prob"], 9): int(r["value_est"]) for r in qrows}
-    t1, t2 = t[round(float(cuts[0]), 9)], t[round(float(cuts[1]), 9)]
-    bucket = (F.when(F.col(bits_col).isNull(), F.lit(None).cast("string"))
-              .when(mb < F.lit(t1), "head")
-              .when(mb < F.lit(t2), "middle")
-              .otherwise("tail"))
-    return scores.select(F.col(id_col),
-                         F.col(bits_col).alias("bits"),
-                         bucket.alias("ppl_bucket"))
-
-
-def perplexity_bucket_sample(scores: DataFrame, id_col: str,
-                             keep: dict | None = None,
-                             bits_col: str = "bits_per_token",
-                             cuts: tuple = (1.0 / 3.0, 2.0 / 3.0)) -> DataFrame:
-    """The CCNet sampling step over the buckets: keep each bucket at its
-    own rate (default: all of head, half of middle, a tenth of tail —
-    the classic downweight-the-noisy-tail mixture). Membership is the
-    deterministic hash_ppm_expr verdict, so the sample is rerun-stable and
-    needs no RNG state. NULL-bucket docs (short texts) are dropped with
-    rate 0 unless `keep` maps None explicitly. Output adds
-    (ppl_bucket, ppl_rate_ppm, ppl_kept)."""
-    keep = keep if keep is not None else {"head": 1.0, "middle": 0.5,
-                                          "tail": 0.1}
-    b = perplexity_buckets(scores, id_col, bits_col=bits_col, cuts=cuts)
-    rate = F.lit(0)
-    for name, frac in keep.items():
-        ppm = int(float(frac) * _PPM)
-        if name is None:
-            rate = F.when(F.col("ppl_bucket").isNull(), ppm).otherwise(rate)
-        else:
-            rate = F.when(F.col("ppl_bucket") == name, ppm).otherwise(rate)
-    return (b.withColumn("ppl_rate_ppm", rate.cast("long"))
-            .withColumn("ppl_kept", F.expr(
-                f"{hash_ppm_expr(id_col)} < ppl_rate_ppm")))
 
 
 def dsir_sample(weights: DataFrame, id_col: str, k: int,

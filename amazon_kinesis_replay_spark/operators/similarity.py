@@ -924,14 +924,14 @@ def sq8_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
     top-(k*rerank_factor), so several query rows would compete for one
     candidate pool and silently starve each other. Enforced with a
     metadata-cheap count (the query frame is driver-built and
-    broadcast-sized); use `sq8_topk_batch` for multi-query workloads.
+    broadcast-sized); run one call per query.
     """
     n = query_df.limit(2).count()
     if n != 1:
         raise ValueError(
             f"query_df must contain exactly one query vector (got "
             f"{'>=2' if n > 1 else n}): the candidate top-k is a single "
-            "global limit; use sq8_topk_batch, or run queries in a loop.")
+            "global limit; run one call per query.")
     enc = sq8_encode(emb, id_col, vec_col)
     qd = query_df.select(F.col("q_vec").cast("array<double>").alias("qd"))
     approx = (enc.crossJoin(F.broadcast(qd))
@@ -945,41 +945,3 @@ def sq8_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
     return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
-def sq8_topk_batch(emb: DataFrame, query_df: DataFrame, k: int = 10,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   rerank_factor: int = 4) -> DataFrame:
-    """Score MANY query vectors in ONE pass over the SQ8 codes — the
-    shape that amortizes at 100 TB (per-query calls rescan the code
-    table once per query; a batched audit scans it once, full stop).
-    query_df carries (query_id string, q_vec array): all queries
-    broadcast together, the single code scan joins against them, and
-    candidate selection is a window PARTITIONED BY QUERY (rank <=
-    k*rerank_factor) — parallel in query count, never a global sort,
-    so queries can't starve each other's candidate pools (the failure
-    the single-query guard on `sq8_topk` exists to prevent). Returns
-    (query_id, id, cosine, rank<=k); per-query results identical to a
-    `sq8_topk` loop (pinned by test)."""
-    from pyspark.sql import Window
-    enc = sq8_encode(emb, id_col, vec_col)
-    qd = query_df.select(
-        "query_id", F.col("q_vec").cast("array<double>").alias("qd"))
-    approx = (enc.crossJoin(F.broadcast(qd))
-              .selectExpr("query_id", "id", _SQ8_APPROX_SQL))
-    floats = emb.select(F.col(id_col).alias("id"),
-                        F.col(vec_col).alias("vec"))
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("id").asc())
-    cand = (approx.withColumn("__r", F.row_number().over(w1))
-            .filter(F.col("__r") <= k * rerank_factor)
-            .select("query_id", "id"))
-    rer = (cand.join(floats, "id")
-           .join(F.broadcast(query_df.select("query_id", "q_vec")),
-                 "query_id")
-           .select("query_id", F.col("id").alias(id_col),
-                   F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc())
-    return (rer.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", id_col, "cosine",
-                    F.col("rank").cast("long").alias("rank")))

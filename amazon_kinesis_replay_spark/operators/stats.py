@@ -12,7 +12,7 @@ the identical exact-integer sum followed by one double division.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -37,16 +37,3 @@ def window_rate_stats(df: DataFrame, ts_col: str,
     )
 
 
-def running_total(df: DataFrame, ts_col: str,
-                  frequency_ms: int = 20_000) -> DataFrame:
-    """OP-AGG-RUNNINGTOTAL — cumulative event count across stat windows
-    (RePlayer.java:115,146).
-
-    The unbounded-preceding window runs over the *aggregated* slots (one row
-    per 20 s bucket), not raw events — cardinality is tiny even at 100 TB, so
-    the single-partition running-sum window is safe.
-    """
-    slots = window_rate_stats(df, ts_col, frequency_ms).drop("events_per_sec")
-    w = Window.orderBy("window_start_ms").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    return slots.withColumn("running_total", F.sum("n_events").over(w))

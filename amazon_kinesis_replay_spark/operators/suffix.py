@@ -187,75 +187,3 @@ def duplicated_runs(df: DataFrame, id_col: str, text_col: str,
             .select(id_col, "span_start", "span_end", "n_windows"))
 
 
-def longest_duplicated_run(df: DataFrame, id_col: str, text_col: str,
-                           max_len: int = 4096) -> int:
-    """Length (in tokens) of the LONGEST token run that occurs more than
-    once in the corpus (across or within documents; never across doc
-    ends) — the corpus-audit statistic the suffix-array machinery gives
-    almost for free: double the rank width while ANY width-w equality
-    group has more than one member (each extra octave costs one more
-    doubling round over the ranks already built), then binary-search the
-    exact length inside the last octave with the two-rank trick. Total
-    cost: O(log(answer)) doubling rounds + O(log(answer)) metadata-scale
-    group checks — never a corpus-quadratic anything. Returns 0 for a
-    duplication-free corpus; results >= max_len report max_len (the
-    doubling cap, so a pathological whole-corpus duplicate cannot run
-    the loop forever)."""
-    tok = corpus_tokens(df, id_col, text_col).localCheckpoint()
-
-    real = _class_ids(tok.filter(F.col("token").isNotNull())
-                      .select("gpos", "token"), ["token"])
-    sent = tok.filter(F.col("token").isNull()).select(
-        "gpos", (-(F.col("gpos") + 1)).alias("__r"))
-    ranks = {1: (real.select("gpos", "__r").unionByName(sent)
-                 .withColumnRenamed("__r", "rank").localCheckpoint())}
-
-    def _has_dup(length: int) -> bool:
-        a = 1 << (length.bit_length() - 1)
-        r = ranks[a]
-        shift = length - a
-        if shift:
-            r2 = r.select((F.col("gpos") - shift).alias("gpos"),
-                          F.col("rank").alias("rank_b"))
-            keyed = (r.join(r2, "gpos", "left")
-                     .select("rank",
-                             F.coalesce("rank_b", F.lit(0)).alias("rank_b")))
-        else:
-            keyed = r.select("rank", F.lit(0).alias("rank_b"))
-        return (keyed.groupBy("rank", "rank_b")
-                .agg(F.count("*").alias("n"))
-                .filter(F.col("n") > 1).limit(1).count() > 0)
-
-    def _double(cur, width):
-        shifted = cur.select((F.col("gpos") - width).alias("gpos"),
-                             F.col("rank").alias("rank2"))
-        pairs = (cur.join(shifted, "gpos", "left")
-                 .select("gpos", "rank",
-                         F.coalesce("rank2", F.lit(0)).alias("rank2")))
-        return (_class_ids(pairs, ["rank", "rank2"])
-                .select("gpos", F.col("__r").alias("rank"))
-                .localCheckpoint())
-
-    if not _has_dup(1):
-        return 0
-    w, lo, hi = 1, None, None
-    while w < max_len:
-        nxt = min(2 * w, max_len)
-        if nxt == 2 * w:
-            # the check at width 2w needs the 2w ranks — build first
-            ranks[2 * w] = _double(ranks[w], w)
-        if not _has_dup(nxt):
-            lo, hi = w, nxt               # lo has a dup, hi does not
-            break
-        w = nxt
-    if lo is None:
-        return max_len
-    # longest is in [lo, hi): binary search; every mid's two-rank check
-    # uses a rank width 2^floor(log2 mid) <= lo, already built
-    while hi - lo > 1:
-        mid = (lo + hi) // 2
-        if _has_dup(mid):
-            lo = mid
-        else:
-            hi = mid
-    return lo

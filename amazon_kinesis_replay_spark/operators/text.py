@@ -64,15 +64,6 @@ BPE_PRETOKEN_PATTERN = (
     r"| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+$|\s+")
 
 
-def bpe_pretoken_count(text_col: Column) -> Column:
-    """Pre-tokenizer token count with the (public) GPT-2-style split
-    regex — the piece count BEFORE byte-pair merges, an upper bound on
-    and strong correlate of the true BPE token count. JVM regexp_count,
-    whole-stage codegen; the chars/4 `bpe_token_estimate_expr` remains the
-    cheap estimate."""
-    return F.regexp_count(text_col, F.lit(BPE_PRETOKEN_PATTERN))
-
-
 def word_piece_counts(df: DataFrame, text_col: str,
                       max_words: int = 1_000_000) -> DataFrame:
     """The capped (piece, cnt) pre-token frequency table both tokenizer
@@ -119,44 +110,21 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 200,
     return _bpe.learn_bpe({r[0]: r[1] for r in top}, n_merges)
 
 
-def bpe_vocab(df: DataFrame, text_col: str,
-              merges: list[tuple[str, str]]) -> dict[str, int]:
-    """Deterministic token->id vocabulary for a trained merge table: the
-    corpus's distinct CHARACTERS are harvested distributed (explode +
-    distinct — the result is alphabet-scale, the only thing collected),
-    then ids assigned by `functions.bpe.vocab_from` (0 = <unk>, sorted
-    chars, merge products in rank order). Feed to `bpe_encode(vocab=)`
-    for id output — what packed training shards actually store."""
-    chars = [r["c"] for r in
-             df.select(F.explode(F.split(F.col(text_col), ""))
-                       .alias("c")).distinct().collect()
-             if r["c"]]
-    from ..functions import bpe as _bpe
-    return _bpe.vocab_from(merges, chars)
-
-
 def bpe_encode(df: DataFrame, text_col: str,
                merges: list[tuple[str, str]],
-               out_col: str = "bpe_tokens",
-               vocab: dict[str, int] | None = None) -> DataFrame:
+               out_col: str = "bpe_tokens") -> DataFrame:
     """Apply a trained BPE merge table: adds `out_col` (array<string> of
     subword tokens, lossless — aggregating them with concat reproduces
-    the text exactly) and `{out_col}_count` (long) — the REAL token
-    count that `bpe_pretoken_count` upper-bounds.
+    the text exactly) and `{out_col}_count` (long), the REAL token
+    count.
 
     Arrow-batched pandas UDF (the merge loop is genuinely imperative —
     rank-ordered pair merging has no Column-expression form), with the
     rank table shipped once per executor via a broadcast variable and a
     per-batch piece cache: pieces are heavy-tailed, so most lookups hit
-    the cache and the per-row cost collapses toward a dict probe.
-
-    With `vocab` (from `bpe_vocab`), also adds `{out_col}_ids`
-    (array<long>) — tokens mapped through the broadcast table,
-    out-of-vocabulary tokens to <unk>=0 (the shard-ready form)."""
+    the cache and the per-row cost collapses toward a dict probe."""
     from ..functions import bpe as _bpe
-    ranks = _bpe.merge_ranks(merges)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(ranks)
+    bc = df.sparkSession.sparkContext.broadcast(_bpe.merge_ranks(merges))
 
     @F.pandas_udf("array<string>")
     def _enc(s: pd.Series) -> pd.Series:
@@ -165,20 +133,8 @@ def bpe_encode(df: DataFrame, text_col: str,
         cache: dict[str, list[str]] = {}
         return s.map(lambda t: _bpe.encode_text(t or "", r, cache))
 
-    out = (df.withColumn(out_col, _enc(F.col(text_col)))
-           .withColumn(f"{out_col}_count",
-                       F.size(out_col).cast("long")))
-    if vocab is not None:
-        bcv = sc.broadcast(vocab)
-
-        @F.pandas_udf("array<long>")
-        def _ids(s: pd.Series) -> pd.Series:
-            drop_zip_finders()
-            v = bcv.value
-            return s.map(lambda toks: [v.get(t, 0) for t in toks])
-
-        out = out.withColumn(f"{out_col}_ids", _ids(F.col(out_col)))
-    return out
+    return (df.withColumn(out_col, _enc(F.col(text_col)))
+            .withColumn(f"{out_col}_count", F.size(out_col).cast("long")))
 
 
 def unigram_train(df: DataFrame, text_col: str, vocab_size: int = 512,
@@ -279,34 +235,17 @@ def unigram_train(df: DataFrame, text_col: str, vocab_size: int = 512,
             words.unpersist()
 
 
-def unigram_vocab(scores: dict[str, float]) -> dict[str, int]:
-    """Deterministic piece->id vocabulary for a trained unigram score
-    table: 0 = <unk>, then pieces in (score DESC, piece ASC) order —
-    most probable pieces get the smallest ids (the SentencePiece
-    convention). A pure function of the score table, so every engine
-    and round derives the same ids."""
-    ordered = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
-    return {p: i + 1 for i, (p, _) in enumerate(ordered)}
-
-
 def unigram_encode(df: DataFrame, text_col: str,
                    scores: dict[str, float],
-                   out_col: str = "unigram_tokens",
-                   vocab: dict[str, int] | None = None) -> DataFrame:
+                   out_col: str = "unigram_tokens") -> DataFrame:
     """Apply a trained unigram score table: adds `out_col`
     (array<string>, lossless — concat reproduces the text) and
     `{out_col}_count` (long). Arrow-batched pandas UDF with the score
     table shipped once per executor as a broadcast and a per-batch
     pre-token cache (heavy-tailed distribution -> dict probes), the
-    `bpe_encode` execution shape.
-
-    With `vocab` (from `unigram_vocab`), also adds `{out_col}_ids`
-    (array<long>) — pieces mapped through the broadcast table,
-    out-of-vocabulary pieces (unk single-chars from unseen text) to
-    <unk>=0, the shard-ready form `pack_sequences` consumes."""
+    `bpe_encode` execution shape."""
     from ..functions import unigram as _ug
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(scores)
+    bc = df.sparkSession.sparkContext.broadcast(scores)
 
     @F.pandas_udf("array<string>")
     def _enc(s: pd.Series) -> pd.Series:
@@ -315,20 +254,8 @@ def unigram_encode(df: DataFrame, text_col: str,
         cache: dict[str, list[str]] = {}
         return s.map(lambda t: _ug.encode_text(t or "", sco, cache))
 
-    out = (df.withColumn(out_col, _enc(F.col(text_col)))
-           .withColumn(f"{out_col}_count",
-                       F.size(out_col).cast("long")))
-    if vocab is not None:
-        bcv = sc.broadcast(vocab)
-
-        @F.pandas_udf("array<long>")
-        def _ids(s: pd.Series) -> pd.Series:
-            drop_zip_finders()
-            v = bcv.value
-            return s.map(lambda toks: [v.get(t, 0) for t in toks])
-
-        out = out.withColumn(f"{out_col}_ids", _ids(F.col(out_col)))
-    return out
+    return (df.withColumn(out_col, _enc(F.col(text_col)))
+            .withColumn(f"{out_col}_count", F.size(out_col).cast("long")))
 
 
 def _word_ngrams(text_col: str, n: int) -> Column:
@@ -365,62 +292,6 @@ def ngram_lm_counts(df: DataFrame, text_col: str, n: int = 2) -> DataFrame:
             .agg(F.count("*").alias("cnt")))
 
 
-def ngram_lm_merge(*lms: DataFrame) -> DataFrame:
-    """Merge n-gram count models — the incremental-training shape: count
-    a new crawl ALONE (cost ∝ the new data), then merge with the stored
-    model instead of recounting 100 TB of history. Pure unionByName +
-    one map-side-combinable sum; merging is associative and commutative,
-    so daily models fold in any order to the same table."""
-    if not lms:
-        raise ValueError("ngram_lm_merge needs at least one model")
-    out = lms[0]
-    for lm in lms[1:]:
-        out = out.unionByName(lm)
-    return (out.groupBy("context", "token")
-            .agg(F.sum("cnt").alias("cnt")))
-
-
-def ngram_lm_score(df: DataFrame, id_col: str, text_col: str,
-                   lm: DataFrame, n: int = 2, k: float = 1.0) -> DataFrame:
-    """Score documents against a trained n-gram count model (the
-    perplexity-filter step of a CCNet-style curation pipeline): per
-    document, the mean add-k-smoothed negative log2 probability of its
-    n-grams (bits per token) and the corresponding perplexity — low =
-    fluent/in-domain, high = noise/boilerplate/foreign.
-
-    p(token | context) = (cnt + k) / (ctx_cnt + k * V), V = model vocab.
-
-    Plan shape: explode doc n-grams -> LEFT join the count table on
-    (context, token) -> LEFT join per-context totals (both hash joins on
-    string keys; AQE broadcasts when the model is small) -> one per-doc
-    aggregate. The only driver scalar is V (one distinct-count of the
-    vocab — metadata-scale). Documents shorter than n words come back
-    with n_grams = 0 and NULL scores (no silent drop).
-
-    Output: (id_col, n_grams, bits_per_token, perplexity)."""
-    vocab = lm.select("token").distinct().count()
-    ctx_tot = lm.groupBy("context").agg(F.sum("cnt").alias("ctx_cnt"))
-    g = (df.select(F.col(id_col).alias("__id"),
-                   F.explode(_word_ngrams(text_col, n)).alias("g"))
-         .select("__id", "g.context", "g.token"))
-    p = ((F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(float(k)))
-         / (F.coalesce(F.col("ctx_cnt"), F.lit(0))
-            + F.lit(float(k) * vocab)))
-    scored = (g.join(lm, ["context", "token"], "left")
-              .join(ctx_tot, "context", "left")
-              .withColumn("__bits", -F.log2(p))
-              .groupBy("__id")
-              .agg(F.count("*").alias("n_grams"),
-                   F.avg("__bits").alias("bits_per_token")))
-    return (df.select(F.col(id_col).alias("__id")).distinct()
-            .join(scored, "__id", "left")
-            .select(F.col("__id").alias(id_col),
-                    F.coalesce(F.col("n_grams"), F.lit(0)).alias("n_grams"),
-                    "bits_per_token",
-                    F.pow(F.lit(2.0), F.col("bits_per_token"))
-                    .alias("perplexity")))
-
-
 def stopword_ratio_expr(c: str,
                         stopwords: tuple[str, ...] = EN_STOPWORDS) -> str:
     """Fraction of `c`'s tokens that are stopwords (int count / int count
@@ -448,31 +319,6 @@ EN_TRIGRAMS = (
 )
 
 
-def lang_id_ngram(text_col: Column, threshold: float = 0.05,
-                  trigrams: tuple[str, ...] = EN_TRIGRAMS) -> Column:
-    """Character-n-gram language ID (TextCat-style, the n-gram heuristic
-    proper): the fraction of the PROFILE's trigrams that occur in the
-    document (profile coverage — |doc-grams ∩ profile| / |profile|).
-    Computed as one `contains` probe per profile trigram over the
-    normalized text: O(|profile| * doc_len) scalar expressions in
-    whole-stage codegen — never materializing the document's own trigram
-    set, whose per-gram construction would re-evaluate the normalization
-    per position (the CollapseProject-under-lambda trap). Swap the
-    profile tuple for other languages; a multi-language argmax is a
-    greatest() over per-profile scores.
-
-    Complements `lang_id_expr` (stopword-ratio): n-gram profiles survive
-    texts with few function words (headlines, code-mixed) where the
-    stopword heuristic under-triggers."""
-    t = F.regexp_replace(F.lower(text_col), r"\s+", " ")
-    hits = None
-    for g in trigrams:
-        hit = F.when(t.contains(g.replace("_", " ")), 1).otherwise(0)
-        hits = hit if hits is None else hits + hit
-    score = hits.cast("double") / F.lit(float(len(trigrams)))
-    return F.when(score >= threshold, F.lit("en")).otherwise(F.lit("unknown"))
-
-
 #: TextCat-style high-frequency character-trigram profiles for the
 #: multi-language argmax ('_' = space). Small by design: profile
 #: coverage needs ~30 grams to separate these languages on sentence-
@@ -498,7 +344,7 @@ LANG_TRIGRAMS: dict[str, tuple[str, ...]] = {
 def lang_scores_exprs(c: str, profiles: dict[str, tuple[str, ...]],
                        pre_normalized: bool) -> dict[str, str]:
     r"""Per-language profile-coverage scores (|doc ∩ profile| /
-    |profile| — the `lang_id_ngram` term, one per language). Exact
+    |profile|, one per language). Exact
     cross-engine: an integer hit count divided by the profile size, so
     the DuckDB mirror (`lang_scores_sql`, emitted from the SAME profile
     dict) produces bit-identical doubles — ORACLE-GATED as the
@@ -644,52 +490,6 @@ def pack_sequences(df: DataFrame, id_col: str, token_count_col: str,
             .drop("__cum_excl"))
 
 
-def assemble_sequences(df: DataFrame, id_col: str, ids_col: str,
-                       seq_len: int = 512,
-                       order_cols: list[str] | None = None) -> DataFrame:
-    """Materialize the PACKED TRAINING SEQUENCES that `pack_sequences`
-    only assigns ids for: concatenate every document's token ids in a
-    deterministic order into one global stream and chunk it into
-    EXACTLY-seq_len windows (GPT-style packing — documents SPLIT across
-    window boundaries; the final ragged window is emitted with its true
-    length).
-
-    Distributed shape: the per-doc exclusive token offset comes from the
-    range-bucketed global cumsum (never a single-partition window), each
-    token's global position is offset + its index within the doc
-    (posexplode), window = position div seq_len, and each window's ids
-    are rebuilt with a seq_len-BOUNDED sort inside one aggregate
-    (array_sort over (pos_in_seq, token) structs — group size is capped
-    by seq_len, so no group ever exceeds one context window regardless
-    of corpus size). Cost is one explode + one hash shuffle on seq_id.
-
-    Output: (seq_id, token_ids, n_tokens, n_docs) — flattening the
-    windows in seq_id order reproduces the concatenated corpus exactly
-    (property-tested)."""
-    from .replay_ops import with_global_cumsum
-    order = order_cols or [id_col]
-    c = with_global_cumsum(
-        df.withColumn("__n_tok", F.size(ids_col).cast("long")),
-        order, "__n_tok", "__tok_off")
-    toks = (c.select("__tok_off",
-                     F.posexplode(ids_col).alias("__i", "__tok"))
-            .withColumn("__pos", F.col("__tok_off") + F.col("__i"))
-            .withColumn("__seq", F.expr(f"__pos div {int(seq_len)}"))
-            .withColumn("__slot",
-                        (F.col("__pos") % F.lit(int(seq_len)))
-                        .cast("int")))
-    return (toks.groupBy(F.col("__seq").alias("seq_id"))
-            .agg(F.array_sort(F.collect_list(
-                     F.struct(F.col("__slot"), F.col("__tok"))))
-                 .alias("__sorted"),
-                 F.count("*").cast("long").alias("n_tokens"),
-                 F.countDistinct("__tok_off").cast("long").alias("n_docs"))
-            .select("seq_id",
-                    F.transform("__sorted", lambda s: s["__tok"])
-                    .alias("token_ids"),
-                    "n_tokens", "n_docs"))
-
-
 def chunk_documents(df: DataFrame, id_col: str, text_col: str,
                     chunk_tokens: int = 256,
                     overlap: int = 32) -> DataFrame:
@@ -787,35 +587,3 @@ def pii_redact(df, id_col: str, text_col: str):
     )
 
 
-_URL_RE = r"https?://[^\s/$.?#][^\s]*"
-_DOMAIN_RE = r"https?://([^\s/:?#]+)"
-
-
-def url_features(df: DataFrame, text_col: str,
-                 blocklist: tuple[str, ...] = ()) -> DataFrame:
-    """URL/domain curation signals per document — the source-level filter
-    step of web-corpus cleaning: URL count, the distinct lowercased
-    domains, and a `blocklisted` flag true iff any domain equals or is a
-    subdomain of a blocklist entry. Pure column expressions
-    (regexp_extract_all + array HOFs), whole-stage codegen; the blocklist
-    is a literal array, so at 100 TB it broadcasts with the plan (swap in
-    a broadcast-join against a blocklist TABLE when the list outgrows a
-    literal)."""
-    t = F.col(text_col)
-    domains = F.array_distinct(F.transform(
-        F.regexp_extract_all(t, F.lit(_DOMAIN_RE), 1),
-        lambda d: F.lower(d)))
-    if blocklist:
-        bl = F.array(*[F.lit(b.lower()) for b in blocklist])
-        blocked = F.exists(
-            domains,
-            lambda d: F.exists(bl, lambda b: (d == b)
-                               | d.endswith(F.concat(F.lit("."), b))))
-    else:
-        blocked = F.lit(False)
-    return df.withColumns({
-        "n_urls": F.size(F.regexp_extract_all(t, F.lit(_URL_RE), 0))
-        .cast("long"),
-        "domains": domains,
-        "blocklisted": blocked,
-    })

@@ -1534,10 +1534,9 @@ def q_doc_pii_redact(spark, sf_dir):
                               "text", n=2)
     # r7c: DSIR importance-resampling stats ride the same gram frame —
     # the even-doc model doubles as the TARGET model and a raw model
-    # over the WHOLE corpus joins alongside it, exactly the
-    # sampling.dsir_stats join shape (the float log-ratio in
-    # dsir_log_weights is built from these same joins; logs stay out of
-    # the gate for the usual libm reason).
+    # over the WHOLE corpus joins alongside it (the float log-ratio in
+    # sampling.dsir_log_weights is built from these same joins; logs
+    # stay out of the gate for the usual libm reason).
     raw = text.ngram_lm_counts(d, "text", n=2) \
         .withColumnRenamed("cnt", "rcnt")
     g = (d.select("doc_id",
@@ -2052,9 +2051,9 @@ def q_dedup_exact(spark, sf_dir):
       the IDENTICAL shift arithmetic in DuckDB, emitted by
       `layout.zvalue_sql` — one bit-placement source of truth, qhist's
       independent-SQL gate class.
-    - kind='hilbert' (r9): the Hilbert layout key — the REAL
-      `layout_hilbert` machinery (zvalue interleave + broadcast
-      zkey→hkey lookup from `hilbert_py`'s rotation walk) on a 64×64
+    - kind='hilbert' (r9): the Hilbert layout key — zvalue
+      interleave + broadcast zkey→hkey lookup (`layout.hilbert_lookup`,
+      from `hilbert_py`'s rotation walk) on a 64×64
       grid over the same (user, ms) quantization; keep_id = row count,
       dup_count = Σhkey, span_start/span_end = min/max hkey. The
       oracle's lookup is generated from `hilbert_py_skilling` —
@@ -2157,9 +2156,9 @@ def q_dedup_exact(spark, sf_dir):
         F.lit("zorder").alias("kind"), F.col("keep_id"),
         F.col("dup_count").cast("long").alias("dup_count"),
         "span_start", "span_end")
-    # kind='hilbert' (r9): the REAL layout_hilbert machinery (zkey
-    # interleave + broadcast zkey->hkey lookup built from hilbert_py's
-    # rotation walk) on a 64x64 grid; the oracle joins a VALUES lookup
+    # kind='hilbert' (r9): zkey interleave + broadcast zkey->hkey
+    # lookup (layout.hilbert_lookup, built from hilbert_py's rotation
+    # walk) on a 64x64 grid; the oracle joins a VALUES lookup
     # built from the INDEPENDENT Skilling transpose implementation —
     # the gate cross-checks two curve derivations on real data.
     ev6 = (load(spark, sf_dir, "events")

@@ -528,15 +528,13 @@ class ReplayEngine:
 
 
 def run_replay_stream(events: DataFrame, engine: ReplayEngine,
-                      checkpoint_dir: str, available_now: bool = True):
+                      checkpoint_dir: str):
     """Wire a streaming (payload, ts) DataFrame into the replay engine via
-    foreachBatch and run it. With available_now the query drains all input
+    foreachBatch and run it. The availableNow trigger drains all input
     respecting maxFilesPerTrigger, then stops — the batch-to-stream
     conversion the reference performs, finite-input edition."""
-    writer = (events.writeStream
-              .foreachBatch(engine)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    return query
+    return (events.writeStream
+            .foreachBatch(engine)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())

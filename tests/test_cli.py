@@ -40,6 +40,15 @@ def test_arn_validation_rejects_garbage():
         ["--source", "/x", "-streamArn", "not-an-arn"])
     with pytest.raises(SystemExit):
         config_from_args(args)
+    # a non-positive pace or stats window is refused before any replay
+    # starts, naming the field
+    for flag, field in (("-speedup", "speedup_factor"),
+                        ("-statisticsFrequency", "statistics_frequency_ms")):
+        for bad in ("0", "-1"):
+            args = build_parser().parse_args(
+                ["--source", "/x", "--sink-dir", "/y", flag, bad])
+            with pytest.raises(ValueError, match=field):
+                config_from_args(args)
 
 
 def test_missing_source_and_sink_rejected():

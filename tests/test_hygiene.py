@@ -26,11 +26,6 @@ PKG = Path(__file__).resolve().parents[1] / "amazon_kinesis_replay_spark"
 COLLECT_ALLOWED = {
     "operators/similarity.py",   # centroid / codebook / k-means tables
     "operators/text.py",         # vocab-capped BPE merge aggregate
-    "operators/sampling.py",     # len(cuts)-row quantile cut points off
-                                 # the <=8k-row sketch (perplexity_buckets)
-    "sources/ndjson.py",         # sniff-fallback SUSPECT PATH list —
-                                 # bounded by max_fallback_files (loud
-                                 # error beyond), paths not data
 }
 TOPANDAS_ALLOWED = {
     "streaming/replay.py",       # 1-row anchor / per-partition stat frames
@@ -45,27 +40,33 @@ def _rel(p: Path) -> str:
     return str(p.relative_to(PKG))
 
 
-def test_collect_only_in_allowlisted_files():
-    offenders = {}
+def _hits_outside(call: str, allowed: set[str]) -> tuple[dict, set]:
+    """(lines of `call` in files outside `allowed`, allowed files that
+    have no `call` at all — stale entries)."""
+    offenders, hit_files = {}, set()
     for p in _py_sources():
         hits = [i + 1 for i, line in enumerate(p.read_text().splitlines())
-                if ".collect()" in line]
-        if hits and _rel(p) not in COLLECT_ALLOWED:
-            offenders[_rel(p)] = hits
+                if call in line]
+        if hits:
+            hit_files.add(_rel(p))
+            if _rel(p) not in allowed:
+                offenders[_rel(p)] = hits
+    return offenders, allowed - hit_files
+
+
+def test_collect_only_in_allowlisted_files():
+    offenders, stale = _hits_outside(".collect()", COLLECT_ALLOWED)
     assert not offenders, (
         f"driver-side .collect() outside the bounded-small allowlist: "
         f"{offenders} — distribute the computation or justify + allowlist")
+    assert not stale, f"stale COLLECT_ALLOWED entries: {sorted(stale)}"
 
 
 def test_topandas_only_in_allowlisted_files():
-    offenders = {}
-    for p in _py_sources():
-        hits = [i + 1 for i, line in enumerate(p.read_text().splitlines())
-                if ".toPandas()" in line]
-        if hits and _rel(p) not in TOPANDAS_ALLOWED:
-            offenders[_rel(p)] = hits
+    offenders, stale = _hits_outside(".toPandas()", TOPANDAS_ALLOWED)
     assert not offenders, (
         f".toPandas() outside the allowlist: {offenders}")
+    assert not stale, f"stale TOPANDAS_ALLOWED entries: {sorted(stale)}"
 
 
 def test_every_crossjoin_broadcasts_a_tiny_side():
@@ -407,8 +408,8 @@ def test_every_python_kernel_drops_zip_finders():
                 for n in ast.walk(fn))
             if not calls:
                 offenders.append(f"{_rel(p)}:{line} {name}")
-    assert {"_emit", "_decode_lines", "_decode_lines_numbered", "_enc",
-            "_ids", "_kernel", "_resize", "_resample"} <= found, found
+    assert {"_emit", "_decode_lines", "_enc", "_kernel",
+            "_resize"} <= found, found
     assert not offenders, (
         f"Python kernels that do not call drop_zip_finders: {offenders}")
 
@@ -657,9 +658,56 @@ def test_tests_and_tools_do_not_name_the_checkout_path():
         f"files naming the checkout path {root}: {offenders}")
 
 
-#: Roots of the function-level walk: the entry points, plus the tools and
-#: tests that call package code directly.
-FUNCTION_ROOTS = ENTRY_POINTS + ("tools/*.py", "tests/*.py")
+def test_slow_test_entries_name_existing_tests():
+    """Every `conftest.SLOW_TESTS` entry names a `def test_...` in its
+    file: a renamed or deleted slow test would leave a dead entry and
+    silently rejoin the fast tier. Read from source, so it needs no
+    collection and holds under any -k/-m/path selection."""
+    from conftest import SLOW_TESTS
+
+    root = PKG.parent
+    stale = []
+    for entry in sorted(SLOW_TESTS):
+        path, name = entry.split("::")
+        src = root / path
+        tests = {n.name for n in ast.walk(ast.parse(src.read_text()))
+                 if isinstance(n, _FUNCS)} if src.is_file() else set()
+        if name not in tests:
+            stale.append(entry)
+    assert not stale, f"SLOW_TESTS entries naming no test: {stale}"
+
+
+#: Roots of the function-level walk: the entry points, plus the tools
+#: that call package code directly. Tests are not roots: code only a test
+#: calls is code no user path runs.
+FUNCTION_ROOTS = ENTRY_POINTS + ("tools/*.py",)
+
+#: Package functions (qualified below the package) that only tests call,
+#: each mapped to the one-line reason it stays. Each counts as one more
+#: root of the function walk.
+TEST_ONLY_ALLOWED: dict[str, str] = {
+    "sources.lz4frame.frame_compress":
+        "fixture encoder for the reached lz4 frame decoder",
+    "sources.lz4frame.block_compress":
+        "fixture encoder for the reached lz4 block decoder",
+    "functions.webp.decode_webp_yuv":
+        "the libwebp YUV witness hook for the reached VP8 decoder",
+    "operators.retrieval.py_reference_bm25":
+        "the reference the tool-reached bm25_topk is tested against",
+    "sources.ndjson.read_events":
+        "batch twin of read_events_stream that the text decode tests drive",
+    "sources.ndjson.read_events_sniffed":
+        "batch twin of read_events_stream_sniffed that the codec tests "
+        "drive",
+    **{f"operators.sketches.{name}":
+       "reads back a sketch the registry or scale_probe builds; replay "
+       "lateness is planned to be read through qhist"
+       for name in ("bloom_contains", "bloom_fpp", "bloom_merge",
+                    "cms_lookup", "cms_merge", "hll_estimate",
+                    "hll_estimate_grouped", "hll_merge",
+                    "hll_merge_grouped", "hll_register_table",
+                    "qhist_merge", "qhist_quantiles")},
+}
 
 
 def _names_used(nodes, strings: bool = False) -> set[str]:
@@ -712,13 +760,14 @@ def _body(node) -> list:
     return node.body
 
 
-def _unreached_functions(root: Path) -> set[str]:
+def _unreached_functions(root: Path, extra_roots=()) -> set[str]:
     """`module.name` of every top-level package function or class, and
     `module.Class.name` of every non-dunder method of a top-level class,
     that no reached code refers to by name. Reached code is the whole of
     each root file outside the package, the module-level code of every
     package module (decorators, defaults and bases included — they run
-    at import), and the body of every definition already reached."""
+    at import), the body of each `extra_roots` definition (named below
+    the package), and the body of every definition already reached."""
     pkg = root / PKG.name
     used = set()
     for pat in FUNCTION_ROOTS:
@@ -738,7 +787,10 @@ def _unreached_functions(root: Path) -> set[str]:
                 for m in filter(_is_method, node.body):
                     defs[f"{mod}.{node.name}.{m.name}"] = m
                     used |= _names_used(_import_time(m))
-    todo = set(defs)
+    extra = {f"{PKG.name}.{q}" for q in extra_roots}
+    for q in extra & set(defs):
+        used |= _names_used(_body(defs[q]))
+    todo = set(defs) - extra
     while True:
         hit = {q for q in todo if q.rsplit(".", 1)[1] in used}
         if not hit:
@@ -750,8 +802,15 @@ def _unreached_functions(root: Path) -> set[str]:
 
 def test_every_package_function_is_reachable():
     """A top-level function or class, or a method of a package class,
-    that no entry point, tool or test reaches by name is code nothing
-    runs; delete it."""
-    unreached = _unreached_functions(PKG.parent)
+    that no entry point or tool reaches by name is code no user path
+    runs; delete it, or allowlist it in TEST_ONLY_ALLOWED with the
+    reason it stays."""
+    unreached = _unreached_functions(PKG.parent, TEST_ONLY_ALLOWED)
     assert not unreached, (
-        f"package functions nothing refers to: {sorted(unreached)}")
+        f"package functions no entry point or tool refers to: "
+        f"{sorted(unreached)}")
+    allowed = {f"{PKG.name}.{q}" for q in TEST_ONLY_ALLOWED}
+    stale = allowed - _unreached_functions(PKG.parent)
+    assert not stale, (
+        f"stale TEST_ONLY_ALLOWED entries (now reached or gone): "
+        f"{sorted(stale)}")

@@ -176,53 +176,6 @@ def test_gif_background_comes_from_global_table_with_local_frame():
     assert px(2, 2) == bytes((200, 0, 0))
 
 
-def test_gif_animation_disposal_compositing():
-    """Animated GIF with all three disposal methods: each yielded frame
-    is the fully composited logical screen — disposal 1 keeps the frame,
-    3 restores the pre-frame pixels, 2 clears the frame's rectangle to
-    the background color — and delays come through per frame."""
-    from amazon_kinesis_replay_spark.functions.gif import (
-        decode_gif, decode_gif_frames, encode_gif_animation)
-
-    K, R, G, B = range(4)                       # black red green blue
-    pal = bytes((0, 0, 0, 255, 0, 0, 0, 255, 0, 0, 0, 255))
-    frames = [
-        (bytes([R] * 16), 0, 0, 4, 4, 10, 1, -1),   # full red, keep
-        (bytes([G] * 4), 0, 0, 2, 2, 20, 3, -1),    # green patch, restore-prev
-        (bytes([B] * 4), 2, 2, 2, 2, 30, 2, -1),    # blue patch, restore-bg
-        (bytes([R]), 0, 0, 1, 1, 0, 0, -1),         # no-op redraw
-    ]
-    raw = encode_gif_animation(4, 4, frames, pal)
-
-    def px(rgb, x, y):
-        return rgb[3 * (y * 4 + x):3 * (y * 4 + x) + 3]
-
-    w, h, got = decode_gif_frames(raw)
-    assert (w, h) == (4, 4) and len(got) == 4
-    assert [d for d, _ in got] == [10, 20, 30, 0]
-    f1, f2, f3, f4 = (rgb for _, rgb in got)
-    red, green, blue, black = (bytes((255, 0, 0)), bytes((0, 255, 0)),
-                               bytes((0, 0, 255)), bytes((0, 0, 0)))
-    assert f1 == red * 16
-    assert px(f2, 0, 0) == green and px(f2, 1, 1) == green
-    assert px(f2, 2, 2) == red                   # untouched by the patch
-    # disposal 3 restored f1 before f3 drew: green is GONE
-    assert px(f3, 0, 0) == red and px(f3, 2, 2) == blue
-    # disposal 2 cleared f3's rect to the background before f4
-    assert px(f4, 2, 2) == black and px(f4, 3, 3) == black
-    assert px(f4, 0, 0) == red and px(f4, 1, 3) == red
-
-    # decode_gif == first composited frame
-    assert decode_gif(raw) == (4, 4, f1)
-
-    # stride sampling keeps every 2nd frame; max_frames caps the output
-    _, _, sampled = decode_gif_frames(raw, stride=2)
-    assert [d for d, _ in sampled] == [10, 30]
-    assert sampled[0][1] == f1 and sampled[1][1] == f3
-    _, _, capped = decode_gif_frames(raw, max_frames=2)
-    assert len(capped) == 2 and capped[1][1] == f2
-
-
 @settings(deadline=None, max_examples=40,
           suppress_health_check=[HealthCheck.too_slow])
 @given(

@@ -320,16 +320,21 @@ def test_contamination_join_is_hash_on_shingle(spark):
 
 
 def test_ngram_lm_score_is_hash_joined_and_partial(spark):
-    """LM scoring must plan as hash equi-joins (model + context totals)
+    """LM scoring (DSIR's log-weight under the target and raw count
+    models) must plan as hash equi-joins (models + context totals)
     with a partial per-doc aggregate — never a nested loop / cartesian
     — so the plan survives a corpus-scale model table."""
     from pyspark.sql import functions as F
 
+    from amazon_kinesis_replay_spark.operators import sampling
     from amazon_kinesis_replay_spark.operators import text as T
     from amazon_kinesis_replay_spark.tables import load
     docs = load(spark, SF, "documents").select("doc_id", "text")
-    lm = T.ngram_lm_counts(docs, "text", n=2)
-    out = T.ngram_lm_score(docs, "doc_id", "text", lm, n=2)
+    t_lm = T.ngram_lm_counts(docs.filter(F.col("doc_id") % 2 == 0),
+                             "text", n=2)
+    r_lm = T.ngram_lm_counts(docs, "text", n=2)
+    out = sampling.dsir_log_weights(docs, "doc_id", "text", t_lm, r_lm,
+                                    n=2)
     p = out._jdf.queryExecution().executedPlan().toString()
     assert "NestedLoopJoin" not in p and "CartesianProduct" not in p
     assert "HashAggregate" in p
@@ -338,17 +343,26 @@ def test_ngram_lm_score_is_hash_joined_and_partial(spark):
 
 
 def test_assemble_sequences_has_no_unpartitioned_window(spark):
-    """Window assembly must never serialize the corpus through a
-    single-partition global window: every Window in the plan carries a
-    partitionBy, and the per-window rebuild is an aggregate (bounded by
-    seq_len), not a sort of the whole token stream."""
+    """Sequence packing must never serialize the corpus through a
+    single-partition global window: every Sort in the plan is
+    partition-local, and the per-bucket token offsets come from an
+    aggregate, not a sort of the whole token stream."""
+    from pyspark.sql import functions as F
+
     from amazon_kinesis_replay_spark.operators import text as T
     from amazon_kinesis_replay_spark.tables import load
     docs = load(spark, SF, "documents").select("doc_id", "text")
-    enc = docs.withColumn("ids", __import__("pyspark.sql.functions",
-                                            fromlist=["F"]).split("text", " "))
-    out = T.assemble_sequences(enc, "doc_id", "ids", seq_len=128)
-    p = out._jdf.queryExecution().executedPlan().toString()
+    enc = docs.withColumn("n_tok", F.size(F.split("text", " ")))
+    # a small advisory size gives this tiny input the range-bucketed
+    # plan a corpus-scale input gets (one bucket skips the offsets leg)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4k")
+    try:
+        out = T.pack_sequences(enc, "doc_id", "n_tok", seq_len=128)
+        p = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
     # every Sort is partition-local (", false, 0"); a global token-stream
     # sort would print ", true, 0" and serialize through range partitioning
     for line in p.splitlines():

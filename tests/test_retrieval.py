@@ -75,65 +75,6 @@ def test_bm25_plan_shape(spark, docs):
     assert "CartesianProduct" not in plan
 
 
-def test_rrf_fusion_matches_twin(spark):
-    """Fused order == the reciprocal-rank twin; legs with incomparable
-    score scales fuse by position only; ids on more legs win ties."""
-    leg1 = spark.createDataFrame(
-        [(10, 9.5), (11, 7.2), (12, 3.3)], "id long, score double")
-    leg2 = spark.createDataFrame(
-        [(12, 0.99), (10, 0.98), (13, 0.42)], "id long, score double")
-    got = retrieval.rrf_fuse([leg1, leg2]).collect()
-    want = retrieval.py_reference_rrf([[10, 11, 12], [12, 10, 13]])
-    assert [r["id"] for r in got] == [i for i, _s, _c in want]
-    for r, (_i, s, c) in zip(got, want):
-        assert r["rrf"] == pytest.approx(s, abs=1e-12)
-        assert r["n_legs"] == c
-    # doc 10 (ranks 1+2) beats doc 12 (ranks 3+1): position sum wins
-    assert got[0]["id"] == 10
-
-
-def test_hybrid_bm25_plus_cosine_leg(spark, docs, doc_rows):
-    """End-to-end hybrid: a BM25 leg fused with a (synthetic) cosine
-    leg promotes a doc that is mid-ranked on both over docs that are
-    top-of-one / absent-from-the-other tail."""
-    words = doc_rows[1][1].split()[:2]
-    bm = retrieval.bm25_topk(docs, " ".join(words), k=5)
-    ids = [r["id"] for r in bm.collect()]
-    assert ids, "fixture sanity: query must match something"
-    # synthetic ANN leg: reverse of the bm25 order plus one new id
-    cos_rows = [(i, 1.0 - 0.01 * r) for r, i in enumerate(reversed(ids))]
-    cos_rows.append((999_999, 0.5))
-    ann = spark.createDataFrame(cos_rows, "id long, score double") \
-        .orderBy(F.col("score").desc())
-    fused = retrieval.rrf_fuse([bm, ann], k=3).collect()
-    want = retrieval.py_reference_rrf(
-        [ids, [i for i, _ in sorted(cos_rows, key=lambda x: (-x[1], x[0]))]])
-    assert [r["id"] for r in fused] == [i for i, _s, _c in want[:3]]
-
-
-def test_hybrid_topk_end_to_end(spark, docs, doc_rows, sf_dir):
-    """hybrid_topk == manual RRF of its two legs (BM25 over documents +
-    exact cosine over embeddings, same id space), pinned against the
-    python fusion twin."""
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qvec = emb.orderBy("vec_id").head()["embedding"]
-    words = doc_rows[3][1].split()[:3]
-    qtext = " ".join(words)
-    got = retrieval.hybrid_topk(docs, emb, qtext, qvec, k=5).collect()
-
-    bm_ids = [r["id"] for r in
-              retrieval.bm25_topk(docs, qtext, k=10).collect()]
-    from amazon_kinesis_replay_spark.operators.similarity import (
-        brute_force_topk)
-    q_df = spark.createDataFrame([([float(x) for x in qvec],)],
-                                 "q_vec array<double>")
-    ann_ids = [r["vec_id"] for r in
-               brute_force_topk(emb, q_df, k=10).collect()]
-    want = retrieval.py_reference_rrf([bm_ids, ann_ids])[:5]
-    assert [r["id"] for r in got] == [i for i, _s, _c in want]
-    for r, (_i, s, c) in zip(got, want):
-        assert r["rrf"] == pytest.approx(s, abs=1e-12)
-        assert r["n_legs"] == c
     # the top fused id should sit on BOTH legs on this fixture if any
     # id overlaps; otherwise fusion falls back to leg order — either
     # way the twin equality above is the contract

@@ -72,20 +72,24 @@ def test_hash_ppm_large_ids_no_ansi_overflow(spark):
 
 
 def test_deterministic_sample_is_stable(spark, sf_dir):
+    """The keep verdict `hash_ppm_expr(id) < rate_ppm` (mixture_sample's
+    mix_kept, doc_train_split's bucket) is a uniform deterministic
+    subsample: stable under reruns, near its rate, monotone in rate."""
     d = load(spark, sf_dir, "documents")
-    a = {r["doc_id"] for r in
-         sampling.deterministic_sample(d, "doc_id", 0.3)
-         .select("doc_id").collect()}
-    b = {r["doc_id"] for r in
-         sampling.deterministic_sample(d, "doc_id", 0.3)
-         .select("doc_id").collect()}
+
+    def kept(rate):
+        return {r["doc_id"] for r in
+                d.filter(f"{sampling.hash_ppm_expr('doc_id')} "
+                         f"< {int(rate * _PPM)}")
+                .select("doc_id").collect()}
+
+    a = kept(0.3)
+    b = kept(0.3)
     assert a == b
     n = d.count()
     assert 0.2 * n < len(a) < 0.4 * n
     # monotone in rate: every 30% member is a 50% member
-    c = {r["doc_id"] for r in
-         sampling.deterministic_sample(d, "doc_id", 0.5)
-         .select("doc_id").collect()}
+    c = kept(0.5)
     assert a <= c
 
 
@@ -106,26 +110,6 @@ def _py_bigram_counts(rows):
         for j in range(len(w) - 1):
             cnt[(w[j], w[j + 1])] += 1
     return cnt
-
-
-def test_dsir_stats_match_python(spark):
-    df = _tiny_corpus(spark)
-    rows = [(r["doc_id"], r["text"]) for r in df.collect()]
-    target = [x for x in rows if x[0] % 2 == 0]
-    t_cnt, r_cnt = _py_bigram_counts(target), _py_bigram_counts(rows)
-    t_lm = text.ngram_lm_counts(df.filter(F.col("doc_id") % 2 == 0),
-                                "text", n=2)
-    r_lm = text.ngram_lm_counts(df, "text", n=2)
-    got = {r["doc_id"]: r for r in sampling.dsir_stats(
-        df, "doc_id", "text", t_lm, r_lm, n=2).collect()}
-    for did, t in rows:
-        w = t.strip().lower().split()
-        grams = [(w[j], w[j + 1]) for j in range(len(w) - 1)]
-        assert got[did]["n_grams"] == len(grams)
-        assert got[did]["t_seen"] == sum(1 for g in grams if g in t_cnt)
-        assert got[did]["t_sum"] == sum(t_cnt.get(g, 0) for g in grams)
-        assert got[did]["r_seen"] == sum(1 for g in grams if g in r_cnt)
-        assert got[did]["r_sum"] == sum(r_cnt.get(g, 0) for g in grams)
 
 
 def test_dsir_log_weights_match_python(spark):
@@ -352,52 +336,3 @@ def test_dsir_sample_clip_log_w(spark):
              sampling.dsir_sample(df, "doc_id", k=3,
                                   clip_log_w=None).collect()]
     assert again == top_unclipped
-
-
-def test_perplexity_buckets_and_sample(spark, sf_dir):
-    """late r8, CCNet head/middle/tail: cut points equal the exact
-    order-statistic values (milli-bits < 65536 are in the sketch's
-    exact range), every scored doc lands in the right tercile, NULL
-    scores keep a NULL bucket, and the sampling verdict is the
-    deterministic hash_ppm twin."""
-    from amazon_kinesis_replay_spark.operators import text as _text
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    lm = _text.ngram_lm_counts(docs.filter("doc_id % 2 = 0"), "text", n=2)
-    scores = _text.ngram_lm_score(docs, "doc_id", "text", lm, n=2)
-    out = {r["doc_id"]: (r["bits"], r["ppl_bucket"]) for r in
-           sampling.perplexity_buckets(scores, "doc_id").collect()}
-    vals = sorted(int(b * 1000) for b, _ in out.values() if b is not None)
-    n = len(vals)
-    t1 = vals[max(math.ceil(n / 3.0), 1) - 1]
-    t2 = vals[max(math.ceil(2.0 * n / 3.0), 1) - 1]
-    for did, (bits, bucket) in out.items():
-        if bits is None:
-            assert bucket is None
-            continue
-        mb = int(bits * 1000)
-        want = "head" if mb < t1 else "middle" if mb < t2 else "tail"
-        assert bucket == want, (did, mb, t1, t2, bucket)
-    assert {b for _, b in out.values() if b} == {"head", "middle", "tail"}
-    # sampling: per-bucket rates + deterministic verdicts
-    samp = {r["doc_id"]: (r["ppl_bucket"], r["ppl_rate_ppm"], r["ppl_kept"])
-            for r in sampling.perplexity_bucket_sample(
-                scores, "doc_id").collect()}
-    rates = {"head": 1_000_000, "middle": 500_000, "tail": 100_000}
-    for did, (bucket, ppm, kept) in samp.items():
-        assert ppm == (rates[bucket] if bucket else 0)
-        py_kept = ((did % 1_000_000) * 2246822519 % 1_000_000) < ppm
-        assert kept == py_kept, did
-    # the head survives whole; the tail is thinned
-    n_head = sum(1 for b, _, _ in samp.values() if b == "head")
-    kept_head = sum(1 for b, _, k in samp.values() if b == "head" and k)
-    kept_tail = sum(1 for b, _, k in samp.values() if b == "tail" and k)
-    n_tail = sum(1 for b, _, _ in samp.values() if b == "tail")
-    assert kept_head == n_head
-    assert kept_tail < n_tail * 0.3
-    # degenerate inputs refuse loudly: no scored docs / bad cuts
-    empty = spark.createDataFrame(
-        [(1, None)], "doc_id long, bits_per_token double")
-    with pytest.raises(ValueError, match="no scored"):
-        sampling.perplexity_buckets(empty, "doc_id")
-    with pytest.raises(ValueError, match="cuts"):
-        sampling.perplexity_buckets(scores, "doc_id", cuts=(0.7, 0.3))

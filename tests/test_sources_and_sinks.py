@@ -940,13 +940,12 @@ def test_zstd_dictionary_frame_skipped_not_fatal(spark, sf_dir, tmp_path):
 
 
 def test_read_events_sniff_fallback_mixed_dir(spark, sf_dir, tmp_path):
-    """r10 verdict item 7: the fast text path falls back to the sniffed
-    binaryFile path PER FILE, mirroring the reference's
-    CompressorException fallback (JsonEventS3Iterator.java:162-167).
-    Mixed dir: plain NDJSON (text leg), a mis-extensioned lz4-frame
-    file named .json (unreadable as text), and a gzip file named
-    .jsonl (Hadoop won't decompress without the .gz suffix) — all
-    three must load, exactly once each, with no duplicated rows."""
+    """A mixed dir — plain NDJSON, a mis-extensioned lz4-frame file named
+    .json (unreadable as text) and a gzip file named .jsonl (Hadoop won't
+    decompress without the .gz suffix): the lazy text scan reads only the
+    plain file, and the sniffed binaryFile path, the fallback for such
+    corpora (the reference's CompressorException fallback,
+    JsonEventS3Iterator.java:162-167), loads all three exactly once."""
     import gzip as _gzip
 
     from amazon_kinesis_replay_spark.config import ReplayConfig
@@ -970,174 +969,11 @@ def test_read_events_sniff_fallback_mixed_dir(spark, sf_dir, tmp_path):
 
     cfg = ReplayConfig(source_path=str(tmp_path),
                        timestamp_attribute="dropoff_datetime")
-    out = ndjson.read_events(spark, cfg)
-    got = out.select("payload").collect()
-    assert len(got) == len(rows)                      # all three files
-    assert len({r["payload"] for r in got}) == len(rows)  # no dups
-
-    # single-scan pin (r11 verdict item 3): the returned frame reads the
-    # text leg from the localCheckpoint blocks, NOT a second FileScan —
-    # consuming it must not re-scan the source. The only file scan left
-    # in the plan is the binaryFile re-read of the two suspect files.
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan text" not in plan, plan
-    assert plan.count("FileScan") == 1 and "binaryFile" in plan, plan
-
-    # opt-out restores the lazy single-leg scan: only the plain file,
-    # and the plan IS the direct text FileScan (no checkpoint)
-    lazy = ndjson.read_events(spark, cfg, sniff_fallback=False)
+    lazy = ndjson.read_events(spark, cfg)
     assert lazy.count() == 30
     lazy_plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "Scan text" in lazy_plan, lazy_plan
 
-    # a dir with nothing to salvage returns the checkpoint-backed leg
-    # with NO file scan at all
-    solo = tmp_path / "solo"
-    solo.mkdir()
-    (solo / "a.jsonl").write_text(text_of(rows[:10]))
-    cfg2 = ReplayConfig(source_path=str(solo),
-                        timestamp_attribute="dropoff_datetime")
-    clean = ndjson.read_events(spark, cfg2)
-    assert clean.count() == 10
-    clean_plan = clean._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan" not in clean_plan, clean_plan
-
-
-def test_read_events_auto_gate_downgrades_large_input(spark, sf_dir,
-                                                      tmp_path):
-    """r13 (r12 verdict item 2): the default `sniff_fallback="auto"` is
-    SIZE-GATED — over the byte bound or the file bound the call warns
-    and returns the lazy single-leg text scan (direct FileScan, no
-    checkpoint, no salvage), removing the corpus-sized eager
-    materialization from the 100 TB default; under the bounds it is the
-    checkpointed salvage plan (pinned by the mixed-dir test above);
-    `sniff_fallback=True` forces salvage regardless of size."""
-    import gzip as _gzip
-
-    from amazon_kinesis_replay_spark.config import ReplayConfig
-    from amazon_kinesis_replay_spark.sources import ndjson
-
-    rows = (load(spark, sf_dir, "events")
-            .select("event_id", "ts").orderBy("ts").limit(40).collect())
-
-    def text_of(chunk):
-        return "\n".join(
-            json.dumps({"event_id": r["event_id"],
-                        "dropoff_datetime": r["ts"].isoformat()})
-            for r in chunk) + "\n"
-
-    (tmp_path / "plain.jsonl").write_text(text_of(rows[:20]))
-    (tmp_path / "mislabeled_gz.jsonl").write_bytes(
-        _gzip.compress(text_of(rows[20:]).encode()))
-    cfg = ReplayConfig(source_path=str(tmp_path),
-                       timestamp_attribute="dropoff_datetime")
-
-    # over the BYTE bound: warn + lazy plan, mislabeled file dropped
-    with pytest.warns(UserWarning, match="auto salvage bound"):
-        big = ndjson.read_events(spark, cfg, auto_salvage_max_bytes=1)
-    assert big.count() == 20
-    plan = big._jdf.queryExecution().executedPlan().toString()
-    assert "Scan text" in plan, plan
-
-    # over the FILE bound: same downgrade
-    with pytest.warns(UserWarning, match="auto salvage bound"):
-        many = ndjson.read_events(spark, cfg, max_fallback_files=1)
-    assert many.count() == 20
-
-    # explicit True bypasses the gate: salvage runs, all rows load
-    forced = ndjson.read_events(spark, cfg, sniff_fallback=True,
-                                auto_salvage_max_bytes=1)
-    assert forced.count() == len(rows)
-    fplan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "Scan text" not in fplan, fplan
-
-
-def test_sampled_seek_matches_java_iterator_twin(spark, tmp_path):
-    """Bug-for-bug sampled seek (JsonEventS3Iterator.java:79-101),
-    opt-in: the Spark replica must emit EXACTLY what a pure-python
-    simulation of the Java iterator emits — including the reference's
-    boundary drops (lines at/past the target skipped over during the
-    seek are gone forever) and the skip-truncation-at-object-end rule.
-    The default exact-predicate path keeps strictly more rows; the
-    difference set is asserted non-empty so the test would catch the
-    replica silently degenerating into the exact path."""
-    import datetime as dt
-    import random
-
-    from amazon_kinesis_replay_spark.config import ReplayConfig
-    from amazon_kinesis_replay_spark.sources import ndjson
-
-    rng = random.Random(3)
-    t0 = dt.datetime(2024, 3, 1)
-    files = {}
-    k = 0
-    for f in range(4):
-        n = rng.randint(5, 120)          # uneven objects: boundary skips
-        rows = []
-        for _ in range(n):
-            if rng.random() < 0.05:
-                rows.append('{"dropoff_datetime": "not-a-ts"}')  # malformed
-            else:
-                ts = t0 + dt.timedelta(seconds=30 * k)
-                rows.append(json.dumps(
-                    {"i": k, "dropoff_datetime": ts.isoformat()}))
-            k += 1
-        files[f"part-{f:03d}.jsonl"] = rows
-    for name, rows in files.items():
-        (tmp_path / name).write_text("\n".join(rows) + "\n")
-
-    target = t0 + dt.timedelta(seconds=30 * (k // 2))
-    SKIP = 7
-
-    # pure-python twin of the Java iterator: parse one line, skip SKIP
-    # raw lines (readLine past EOF no-ops), parse, ... until parsed
-    # ts >= target; then emit every line from that position onward
-    def java_twin():
-        names = sorted(files)
-        fi, ln = 0, 0
-        while fi < len(names):
-            line = files[names[fi]][ln]
-            try:
-                ts = dt.datetime.fromisoformat(
-                    json.loads(line)["dropoff_datetime"])
-            except ValueError:
-                ts = None
-            if ts is not None and ts >= target:
-                break
-            nxt = ln + 1 + SKIP
-            if nxt < len(files[names[fi]]):
-                ln = nxt
-            else:
-                fi += 1
-                ln = 0
-        emitted = []
-        while fi < len(names):
-            for line in files[names[fi]][ln:]:
-                try:
-                    dt.datetime.fromisoformat(
-                        json.loads(line)["dropoff_datetime"])
-                    emitted.append(line)
-                except ValueError:
-                    pass                     # malformed rows drop per-row
-            fi += 1
-            ln = 0
-        return emitted
-
-    want = java_twin()
-    cfg = ReplayConfig(source_path=str(tmp_path),
-                       timestamp_attribute="dropoff_datetime")
-    got = ndjson.read_events_sampled_seek(
-        spark, cfg, target.isoformat(), skip_num_lines=SKIP)
-    got_payloads = sorted(r["payload"] for r in got.collect())
-    assert got_payloads == sorted(want)
-
-    # the replica is NOT the exact path: the exact predicate keeps rows
-    # the reference's seek drops (that is the bug being replicated)
-    exact = (ndjson.read_events(spark, cfg, sniff_fallback=False)
-             .filter(F.col("ts") >= F.lit(target)).count())
-    assert exact > len(want)
-
-    # seek past the corpus end -> exhausted iterator -> empty
-    far = (t0 + dt.timedelta(days=999)).isoformat()
-    assert ndjson.read_events_sampled_seek(
-        spark, cfg, far, skip_num_lines=SKIP).count() == 0
+    got = ndjson.read_events_sniffed(spark, cfg).select("payload").collect()
+    assert len(got) == len(rows)                      # all three files
+    assert len({r["payload"] for r in got}) == len(rows)  # no dups

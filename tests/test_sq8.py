@@ -85,25 +85,3 @@ def test_sq8_topk_rejects_multi_row_query(spark, sf_dir):
     with pytest.raises(ValueError, match="exactly one query"):
         sim.sq8_topk(emb, two, k=3)
     assert sim.sq8_topk(emb, one, k=3).count() == 3
-
-
-def test_sq8_topk_batch_matches_per_query_loop(spark, sf_dir):
-    """The batched entry (one code scan, per-query candidate windows)
-    must return exactly what a sq8_topk loop returns for each query —
-    batching is a plan-shape optimization, never a semantics change."""
-    emb = load(spark, sf_dir, "embeddings")
-    qs = emb.orderBy("vec_id").limit(3).collect()
-    query_df = spark.createDataFrame(
-        [(f"q{r['vec_id']}", list(r["embedding"])) for r in qs],
-        "query_id string, q_vec array<float>")
-    got = {}
-    for r in sim.sq8_topk_batch(emb, query_df, k=5).collect():
-        got.setdefault(r["query_id"], []).append(
-            (r["rank"], r["vec_id"], r["cosine"]))
-    assert set(got) == {f"q{r['vec_id']}" for r in qs}
-    for r in qs:
-        one = spark.createDataFrame([(list(r["embedding"]),)],
-                                    "q_vec array<float>")
-        want = [(i + 1, x["vec_id"], x["cosine"]) for i, x in
-                enumerate(sim.sq8_topk(emb, one, k=5).collect())]
-        assert sorted(got[f"q{r['vec_id']}"]) == want

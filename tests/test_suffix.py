@@ -131,42 +131,3 @@ def test_suffix_args_validated(spark):
         sx.suffix_ranks(sx.corpus_tokens(df, "doc_id", "text"), 3)
     with pytest.raises(ValueError, match="min_len"):
         sx.duplicated_runs(df, "doc_id", "text", min_len=0)
-
-
-def test_longest_duplicated_run(spark):
-    """Exact longest-duplicated-run length vs a brute-force python scan
-    over the same token streams (within + cross doc, periodic overlap,
-    duplication-free corpus, and the max_len cap)."""
-    def brute(docs):
-        toks = {i: tokens_spark(t) for i, t in docs}
-        best = 0
-        seen = {}
-        for i, tt in toks.items():
-            for a in range(len(tt)):
-                for b in range(a + 1, len(tt) + 1):
-                    seen.setdefault(tuple(tt[a:b]), []).append((i, a))
-        for run, occ in seen.items():
-            if len(occ) > 1:
-                best = max(best, len(run))
-        return best
-
-    cases = [
-        # 7-token phrase repeated across docs (longest)
-        [(1, "one two three four five six seven tail1 x"),
-         (2, "head one two three four five six seven y")],
-        # periodic self-overlap: [xx yy]*4 -> longest dup run = 6
-        [(1, "xx yy xx yy xx yy xx yy")],
-        # no duplication at all
-        [(1, "a b c"), (2, "d e f")],
-    ]
-    for docs in cases:
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        got = sx.longest_duplicated_run(df, "doc_id", "text")
-        assert got == brute(docs), docs
-
-    # the cap: a 40-token duplicated run reports max_len when capped
-    long_docs = [(1, " ".join(f"t{i}" for i in range(40)) + " u1"),
-                 (2, " ".join(f"t{i}" for i in range(40)) + " u2")]
-    df = spark.createDataFrame(long_docs, "doc_id long, text string")
-    assert sx.longest_duplicated_run(df, "doc_id", "text", max_len=8) == 8
-    assert sx.longest_duplicated_run(df, "doc_id", "text") == 40
