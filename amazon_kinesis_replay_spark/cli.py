@@ -61,7 +61,10 @@ def build_parser() -> argparse.ArgumentParser:
                         "(the reference's always-on 100k-event priority "
                         "queue); beyond-window stragglers emit late, "
                         "never drop. Partitioned mode also needs "
-                        "--reorder-state-path")
+                        "--reorder-state-path. Driver mode holds the "
+                        "buffer in memory only: a restart from the "
+                        "checkpoint loses the rows held from committed "
+                        "batches")
     p.add_argument("--reorder-state-path", default=None,
                    help="durable held-state dir for the partitioned-mode "
                         "reorder gate (parquet epochs with commit markers)")

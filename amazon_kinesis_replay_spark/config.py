@@ -44,7 +44,12 @@ class ReplayConfig:
     #: late rather than dropping. Call `engine.finalize()` after a
     #: finite stream to drain the tail. Off by default: per-batch
     #: sorting (the Structured-Streaming-idiomatic shape) emits every
-    #: batch eagerly and needs no drain step.
+    #: batch eagerly and needs no drain step. Known defect: the
+    #: driver-mode buffer lives only in memory, so a stream restarted
+    #: from its checkpoint never emits the up to `reader_buffer_size`
+    #: rows held from already-committed batches — NOT at-least-once
+    #: (docs/DEVIATIONS.md item 3). Partitioned mode's durable gate
+    #: does not lose them.
     reorder_across_batches: bool = False
     #: late r8: durable held-state directory that carries the reorder
     #: buffer into PARTITIONED mode (the scale path). Driver mode keeps

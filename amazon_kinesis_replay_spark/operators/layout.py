@@ -1,36 +1,20 @@
-"""Multi-dimensional data layout: Z-order (Morton) clustering.
+"""Multi-dimensional layout keys: Z-order (Morton) and Hilbert curves.
 
-At 100 TB the cheapest query is the one that never reads the data:
-parquet row-group / file min-max statistics prune scans, but they only
-help along the SORT order — a table laid out by `ts` answers time-range
-predicates from footers alone while a `user_id` predicate still reads
-every file. Z-ordering interleaves the bits of several quantized
-columns into one sort key, so a range predicate on ANY prefix-quantized
-dimension maps to a bounded set of z-ranges and min-max pruning works
-on all of them at once (the technique behind ClickHouse/Delta/Iceberg
-`ZORDER BY`; public literature: Morton 1966, "z-order curve").
+A layout key interleaves the bits of several quantized columns into one
+sort key, so a range predicate on ANY participating dimension maps to a
+bounded set of key ranges and parquet min-max pruning works on all of
+them at once (the technique behind ClickHouse/Delta/Iceberg `ZORDER
+BY`; public literature: Morton 1966, "z-order curve"; Hilbert 1891).
 
-Everything here is a pure column expression (whole-stage codegen, no
-UDF, no shuffle beyond the final repartitionByRange):
-
-- `quantize(col, lo, hi, bits)` — affine map of a numeric column onto
-  the integer grid [0, 2^bits), clamped at the bounds (out-of-range
-  rows land in the edge cells rather than corrupting the interleave).
 - `zvalue(cols, bits)` — interleave the low `bits` bits of up to 8
   already-quantized long columns (bit b of column i lands at position
-  b*k + i). Deterministic integer arithmetic, so the exact same shift
-  expression runs in DuckDB — the registry hash-gates it cross-engine
-  (kind='zorder' summary row in dedup_exact).
-- `layout_zorder(df, cols, ...)` — add the z-key and cluster the frame
-  by it: repartitionByRange (range-partitions by z-key, one shuffle,
-  AQE-coalescible) + sortWithinPartitions, so every written file/row
-  group covers a tight z-range and carries tight min-max stats for
-  EVERY participating dimension.
-
-The companion test writes the same frame linearly-sorted and z-ordered
-and counts, from the parquet footers alone, how many files a 2-D box
-predicate must read under each layout — the pruning win is measured,
-not asserted from theory.
+  b*k + i). A pure column expression (whole-stage codegen, no UDF).
+  Deterministic integer arithmetic, so the exact same shift expression
+  runs in DuckDB (`zvalue_sql`) — the registry hash-gates it
+  cross-engine (kind='zorder' summary row in dedup_exact).
+- Hilbert keys — driver-side curve walks (`hilbert_py*`) materialized
+  as broadcast zkey→hkey lookup tables (`hilbert_lookup*`), gated as
+  kind='hilbert' / 'hilbert_nd'.
 
 Reference scope note: the reference engine (S3→Kinesis replay, 817-line
 Java) has no layout story at all — this module exists for the 100 TB
@@ -40,26 +24,11 @@ dedup/ANN/sketch families.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Maximum dimensions per z-key: 8 dims × 8 bits = 64-bit key ceiling.
 _MAX_DIMS = 8
-
-
-def quantize(col: Column, lo: float, hi: float, bits: int = 8) -> Column:
-    """Affine-map a numeric column onto [0, 2^bits) as a long, clamping
-    to the edge cells outside [lo, hi]. lo/hi are fixed, caller-chosen
-    bounds (corpus-stable constants, NOT data-dependent aggregates —
-    the layout must not change meaning when the data grows)."""
-    if not hi > lo:
-        raise ValueError(f"quantize needs hi > lo, got [{lo}, {hi}]")
-    n_cells = 1 << bits
-    scaled = (col.cast("double") - F.lit(float(lo))) \
-        * F.lit(n_cells / (hi - lo))
-    cell = F.floor(scaled).cast("long")
-    return F.greatest(F.lit(0).cast("long"),
-                      F.least(F.lit(n_cells - 1).cast("long"), cell))
 
 
 def zvalue(cols: list[Column], bits: int = 8) -> Column:
@@ -109,29 +78,6 @@ def zvalue_py(vals: list[int], bits: int = 8) -> int:
         for b in range(bits):
             z |= ((int(v) >> b) & 1) << (b * k + i)
     return z
-
-
-def layout_zorder(df: DataFrame, cols: list[Column], bits: int = 8,
-                  n_partitions: int | None = None,
-                  key_col: str = "zkey") -> DataFrame:
-    """Cluster a frame along the z-curve of the given quantized columns:
-    one range shuffle on the z-key + an in-partition sort, so a
-    subsequent `.write.parquet` produces files/row groups whose min-max
-    footer stats are tight in EVERY participating dimension. Keep
-    `key_col` in the written table — it costs one long column and lets
-    readers push an explicit z-range predicate when they know the box.
-
-    At 100 TB: repartitionByRange samples the key (no global sort
-    barrier beyond the range exchange), AQE coalesces skewed ranges,
-    and the written layout is what turns O(corpus) scans into
-    O(matching z-ranges) scans for multi-predicate workloads — the same
-    contract as Delta/Iceberg ZORDER, expressed with nothing but
-    DataFrame ops."""
-    keyed = df.withColumn(key_col, zvalue(cols, bits))
-    parts = [key_col] if n_partitions is None \
-        else [n_partitions, key_col]
-    return keyed.repartitionByRange(*parts) \
-        .sortWithinPartitions(key_col)
 
 
 # -- Hilbert curve option (2-D) ---------------------------------------------

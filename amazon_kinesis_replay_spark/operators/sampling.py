@@ -3,17 +3,16 @@
 Temperature-weighted domain mixture sampling (the multilingual-LM
 standard: sampled share q_d proportional to (weight x size)^(1/T)),
 deterministic hash subsampling (no RNG state — reruns and engines
-agree), and DSIR-style importance resampling (Xie et al. 2023, "Data
-Selection for Language Models via Importance Resampling": rank raw
-documents by the log-likelihood ratio between a target-domain n-gram LM
-and a raw-pool n-gram LM, then sample with Gumbel-top-k).
+agree), and the exact-integer statistics of hashed-n-gram DSIR (Xie et
+al. 2023, "Data Selection for Language Models via Importance
+Resampling") that doc_pii_redact gates.
 
 Everything is DataFrame ops: per-domain rates come from one map-side
 combinable groupBy over a domain column (metadata-scale result,
 broadcast back), membership tests are pure column arithmetic on a
-multiplicative hash of the id, and DSIR scoring reuses the distributed
-n-gram LM join shape (operators/text.py). Nothing is collected onto
-the driver.
+multiplicative hash of the id, and the DSIR statistics are two
+broadcast joins against at-most-m-row bucket models. Nothing is
+collected onto the driver.
 
 Cross-engine exactness (the oracle-gate discipline of this repo): at
 temperature=2.0 the whole rate computation uses only correctly-rounded
@@ -149,57 +148,8 @@ def mixture_sample(df: DataFrame, id_col: str, domain_col: str,
 
 
 # --------------------------------------------------------------------------
-# DSIR — importance resampling between two n-gram LMs
+# DSIR — hashed-n-gram sufficient statistics
 # --------------------------------------------------------------------------
-
-
-def dsir_log_weights(df: DataFrame, id_col: str, text_col: str,
-                     target_lm: DataFrame, raw_lm: DataFrame,
-                     n: int = 2, k: float = 0.5) -> DataFrame:
-    """Per-document DSIR importance log-weight:
-
-    log w(x) = sum_g [ log p_target(g) - log p_raw(g) ]
-
-    with add-k-smoothed gram probabilities under each model
-    (p(tok|ctx) = (cnt + k) / (ctx_cnt + k * V)). High log_w = looks
-    like the target domain relative to the raw pool. Documents shorter
-    than n words get NULL (no silent drop). Output: (id, n_grams,
-    log_w).
-
-    Two hash joins (one per model) plus per-context totals; only
-    the two vocab sizes touch the driver (metadata-scale counts).
-    """
-    from . import text as _text
-    v_t = target_lm.select("token").distinct().count()
-    v_r = raw_lm.select("token").distinct().count()
-    t_ctx = target_lm.groupBy("context").agg(
-        F.sum("cnt").alias("__tctx"))
-    r_ctx = raw_lm.groupBy("context").agg(
-        F.sum("cnt").alias("__rctx"))
-    g = (df.select(F.col(id_col).alias("__id"),
-                   F.explode(_text._word_ngrams(text_col, n))
-                   .alias("g"))
-         .select("__id", "g.context", "g.token"))
-    t = target_lm.select("context", "token", F.col("cnt").alias("__tc"))
-    r = raw_lm.select("context", "token", F.col("cnt").alias("__rc"))
-    kf = F.lit(float(k))
-    lp_t = (F.log(F.coalesce("__tc", F.lit(0)) + kf)
-            - F.log(F.coalesce("__tctx", F.lit(0)) + F.lit(float(k * v_t))))
-    lp_r = (F.log(F.coalesce("__rc", F.lit(0)) + kf)
-            - F.log(F.coalesce("__rctx", F.lit(0)) + F.lit(float(k * v_r))))
-    per = (g.join(t, ["context", "token"], "left")
-           .join(r, ["context", "token"], "left")
-           .join(t_ctx, "context", "left")
-           .join(r_ctx, "context", "left")
-           .groupBy("__id")
-           .agg(F.count("*").cast("long").alias("n_grams"),
-                F.sum(lp_t - lp_r).alias("log_w")))
-    return (df.select(F.col(id_col).alias("__id")).distinct()
-            .join(per, "__id", "left")
-            .select(F.col("__id").alias(id_col),
-                    F.coalesce("n_grams", F.lit(0)).cast("long")
-                    .alias("n_grams"),
-                    "log_w"))
 
 
 def _hashed_gram_buckets(text_col: str, n_buckets: int,
@@ -237,7 +187,7 @@ def dsir_hashed_counts(df: DataFrame, text_col: str,
     (id, bucket, cnt) per document when id_col is given. The CORPUS form
     IS the DSIR bag-of-hashed-ngrams model — train the target and raw
     models by calling this on each corpus. Mergeable by cell-wise sum
-    (like CMS: additive, not idempotent), so daily crawls fold without
+    (additive, not idempotent), so daily crawls fold without
     re-scanning history. One explode + one map-side-combinable groupBy;
     the corpus model is at most n_buckets rows regardless of input."""
     cols = ([F.col(id_col)] if id_col else []) + [
@@ -255,10 +205,10 @@ def dsir_hashed_stats(df: DataFrame, id_col: str, text_col: str,
     """EXACT-INTEGER sufficient statistics of each document against two
     hashed-bucket models: (id, hb_grams, hb_t_sum, hb_r_sum) — total
     hashed grams, and the doc-count-weighted sums of the target/raw
-    model bucket counts (sum_b c_b(doc) * model_cnt(b)). The float
-    log-ratio in dsir_hashed_log_weights is built from exactly these
-    joins, so gating the integers pins the whole bucket geometry + hash
-    while keeping libm logs out of the gate."""
+    model bucket counts (sum_b c_b(doc) * model_cnt(b)). The DSIR float
+    log-ratio would be built from exactly these joins; gating the
+    integers pins the whole bucket geometry + hash while keeping libm
+    logs out of the gate."""
     per = dsir_hashed_counts(df, text_col, n_buckets, ns, id_col=id_col)
     t = target_counts.select("bucket", F.col("cnt").alias("__tc"))
     r = raw_counts.select("bucket", F.col("cnt").alias("__rc"))
@@ -274,70 +224,3 @@ def dsir_hashed_stats(df: DataFrame, id_col: str, text_col: str,
             .select(id_col,
                     *[F.coalesce(c, F.lit(0)).cast("long").alias(c)
                       for c in ("hb_grams", "hb_t_sum", "hb_r_sum")]))
-
-
-def dsir_hashed_log_weights(df: DataFrame, id_col: str, text_col: str,
-                            target_counts: DataFrame,
-                            raw_counts: DataFrame,
-                            n_buckets: int = 10_000, ns: tuple = (1, 2),
-                            k: float = 0.5) -> DataFrame:
-    """Per-document DSIR importance log-weight in the paper's hashed
-    formulation: log w(x) = sum_b c_b(x) * (log p_t[b] - log p_r[b])
-    with add-k smoothed bucket probabilities p[b] = (cnt_b + k) /
-    (total + k*m). Documents with zero grams get NULL log_w (no silent
-    drop). Output: (id, hb_grams, log_w) — feed dsir_sample for the
-    deterministic Gumbel-top-k draw.
-
-    Plan: per-doc bucket counts -> two LEFT joins against the at-most-m-
-    row models (AQE broadcasts them) -> one per-doc aggregate. Only the
-    two scalar totals touch the driver."""
-    import math
-    m = n_buckets
-    t_tot = int(target_counts.agg(F.sum("cnt")).head()[0] or 0)
-    r_tot = int(raw_counts.agg(F.sum("cnt")).head()[0] or 0)
-    per = dsir_hashed_counts(df, text_col, n_buckets, ns, id_col=id_col)
-    t = target_counts.select("bucket", F.col("cnt").alias("__tc"))
-    r = raw_counts.select("bucket", F.col("cnt").alias("__rc"))
-    kf = float(k)
-    lp = (F.log(F.coalesce("__tc", F.lit(0)) + F.lit(kf))
-          - F.lit(math.log(t_tot + kf * m))
-          - F.log(F.coalesce("__rc", F.lit(0)) + F.lit(kf))
-          + F.lit(math.log(r_tot + kf * m)))
-    agg = (per.join(t, "bucket", "left").join(r, "bucket", "left")
-           .groupBy(id_col)
-           .agg(F.sum("cnt").cast("long").alias("hb_grams"),
-                F.sum(F.col("cnt") * lp).alias("log_w")))
-    return (df.select(F.col(id_col)).distinct()
-            .join(agg, id_col, "left")
-            .select(id_col,
-                    F.coalesce("hb_grams", F.lit(0)).cast("long")
-                    .alias("hb_grams"),
-                    "log_w"))
-
-
-def dsir_sample(weights: DataFrame, id_col: str, k: int,
-                log_w_col: str = "log_w",
-                clip_log_w: float | None = None) -> DataFrame:
-    """Gumbel-top-k importance sample over DSIR log-weights: key =
-    log_w + Gumbel noise, take the k largest — equivalent to sampling k
-    items without replacement with probability proportional to w (the
-    Gumbel-max trick). The noise is DERIVED from the id hash
-    (u = (hash_ppm_expr + 0.5) / 1e6, g = -ln(-ln u)) so the sample is
-    deterministic and rerun-stable; NULL-weight rows (short docs) are
-    excluded. The global top-k is a TakeOrdered — no full sort.
-
-    clip_log_w caps the log-weight at a ceiling BEFORE the Gumbel draw
-    (importance-weight clipping, the standard variance bound: a few
-    extreme-ratio documents would otherwise be sampled almost surely
-    and dominate the draw; clipped docs still rank above unclipped ones
-    of lower weight, but compete on noise among themselves)."""
-    u = F.expr(f"(CAST({hash_ppm_expr(id_col)} AS DOUBLE) + 0.5D) "
-               f"/ {float(_PPM)}D")
-    gumbel = -F.log(-F.log(u))
-    w = F.col(log_w_col)
-    if clip_log_w is not None:
-        w = F.least(w, F.lit(float(clip_log_w)))
-    return (weights.filter(F.col(log_w_col).isNotNull())
-            .withColumn("gumbel_key", w + gumbel)
-            .orderBy(F.col("gumbel_key").desc(), F.col(id_col).asc())
-            .limit(k))

@@ -700,169 +700,9 @@ def _ranked_assign(emb: DataFrame, cents: DataFrame, n_assign: int,
                     F.col("rn").alias("assign_rank")))
 
 
-# --------------------------------------------------------------------------
-# Product quantization (PQ) — compressed ANN for 100 TB embedding corpora
-# --------------------------------------------------------------------------
-#
-# float32 embeddings at 100 TB do not fit hot storage for scanning; PQ
-# (the public technique of Jégou/Douze/Schmid, "Product Quantization for
-# Nearest Neighbor Search", IEEE TPAMI 2011) stores each vector as n_subs
-# small codes (4 bits each at n_codes=16 — a 64-dim float32 vector
-# compresses 256 bytes -> 8 codes) and scores queries against the codes
-# via per-subspace lookup tables (asymmetric distance computation, ADC),
-# with an exact re-rank of the short candidate list against the original
-# vectors.
-# Vectors are L2-NORMALIZED before training/encoding, so squared-L2 ADC
-# ranking is monotone in cosine (||a-b||^2 = 2 - 2cos for unit vectors)
-# and the re-rank metric agrees with the coarse metric.
-
-
-def _unit(vec: str) -> Column:
-    """L2-normalized copy of an array<float/double> column (double)."""
-    n = F.expr(f"sqrt({_fast_dot_sql(vec, vec)})")
-    return F.transform(vec, lambda x: x.cast("double") / n)
-
-
-def _l2sq(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _pq_subvectors(emb: DataFrame, n_subs: int, dim: int,
-                   id_col: str, vec_col: str) -> DataFrame:
-    """(id, sub_id, sv): each normalized vector split into n_subs
-    contiguous subvectors of dim/n_subs components."""
-    if dim % n_subs:
-        raise ValueError(f"dim {dim} not divisible by n_subs {n_subs}")
-    d = dim // n_subs
-    unit = emb.select(F.col(id_col).alias("id"),
-                      _unit(vec_col).alias("u"))
-    return unit.select(
-        "id",
-        F.posexplode(F.array(*[
-            F.slice("u", j * d + 1, d) for j in range(n_subs)
-        ])).alias("sub_id", "sv"))
-
-
-def _pq_assign(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Nearest-codeword assignment: (id, sub_id, code, sv). Broadcast the
-    tiny codebook table; argmin via a narrow window over n_codes rows."""
-    from pyspark.sql import Window
-    scored = (subs.join(F.broadcast(codebooks), "sub_id")
-              .withColumn("__d", _l2sq(F.col("sv"), F.col("c_vec"))))
-    w = Window.partitionBy("id", "sub_id").orderBy(
-        F.col("__d").asc(), F.col("code").asc())
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("id", "sub_id", "code", "sv"))
-
-
-def pq_train(emb: DataFrame, n_subs: int = 8, n_codes: int = 16,
-             n_iters: int = 3, dim: int = 64, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """Per-subspace Lloyd's k-means codebooks: (sub_id, code, c_vec).
-
-    All subspaces train in ONE DataFrame per iteration (the subvector
-    explode carries sub_id, so assignment and the centroid update group by
-    it — no per-subspace driver loop). Deterministic: seeds are the first
-    n_codes vectors by id, ties break on code id, and only the tiny
-    codebook table (n_subs x n_codes rows) is collected between
-    iterations."""
-    from pyspark.sql import Window
-    spark = emb.sparkSession
-    subs = _pq_subvectors(emb, n_subs, dim, id_col, vec_col)
-    seed_subs = _pq_subvectors(
-        emb.orderBy(F.col(id_col).asc()).limit(n_codes),
-        n_subs, dim, id_col, vec_col)
-    wcode = Window.partitionBy("sub_id").orderBy("id")
-    cb = (seed_subs.withColumn("code", F.row_number().over(wcode) - 1)
-          .select("sub_id", "code", F.col("sv").alias("c_vec")))
-    cb = spark.createDataFrame(cb.collect(), "sub_id int, code int, "
-                               "c_vec array<double>")
-    for _ in range(n_iters):
-        assigned = _pq_assign(subs, cb)
-        means = (assigned.select("sub_id", "code",
-                                 F.posexplode("sv").alias("pos", "x"))
-                 .groupBy("sub_id", "code", "pos")
-                 .agg(F.avg("x").alias("m")))
-        new_cb = (means.groupBy("sub_id", "code")
-                  .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
-                       .alias("pm"))
-                  .select("sub_id", "code",
-                          F.transform("pm", lambda s: s["m"]).alias("c_vec")))
-        # empty codewords (no assignments) keep their previous position
-        kept = cb.alias("o").join(
-            new_cb.select("sub_id", "code").alias("n"),
-            ["sub_id", "code"], "left_anti")
-        cb = spark.createDataFrame(
-            new_cb.collect() + kept.collect(), new_cb.schema)
-    return cb
-
-
-def pq_encode(emb: DataFrame, codebooks: DataFrame, n_subs: int = 8,
-              dim: int = 64, id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
-    """(id, codes): each vector as an array<int> of n_subs codeword ids —
-    the compressed representation that replaces the floats at rest."""
-    subs = _pq_subvectors(emb, n_subs, dim, id_col, vec_col)
-    assigned = _pq_assign(subs, codebooks)
-    return (assigned.groupBy("id")
-            .agg(F.array_sort(F.collect_list(F.struct("sub_id", "code")))
-                 .alias("sc"))
-            .select("id", F.transform("sc", lambda s: s["code"])
-                    .alias("codes")))
-
-
-def pq_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
-            n_subs: int = 8, n_codes: int = 16, dim: int = 64,
-            rerank_factor: int = 4, codebooks: DataFrame | None = None,
-            codes: DataFrame | None = None, id_col: str = "vec_id",
-            vec_col: str = "embedding") -> DataFrame:
-    """PQ-ANN top-k: ADC coarse ranking over the compressed codes, exact
-    decimal-cosine re-rank of the top k*rerank_factor candidates against
-    the ORIGINAL vectors.
-
-    Scale shape: the per-query distance table (n_subs x n_codes rows) is a
-    broadcast; coarse scoring is one equi-join of the exploded codes
-    against it plus a map-side-combinable sum — the float vectors are
-    touched only for the tiny re-rank set. Pass precomputed `codebooks` /
-    `codes` to amortize training and encoding across queries."""
-    cb = codebooks if codebooks is not None else pq_train(
-        emb, n_subs, n_codes, dim=dim, id_col=id_col, vec_col=vec_col)
-    enc = codes if codes is not None else pq_encode(
-        emb, cb, n_subs, dim=dim, id_col=id_col, vec_col=vec_col)
-
-    d = dim // n_subs
-    qsubs = (query_df.select(_unit("q_vec").alias("qu"))
-             .select(F.posexplode(F.array(*[
-                 F.slice("qu", j * d + 1, d) for j in range(n_subs)
-             ])).alias("sub_id", "qv")))
-    table = (cb.join(F.broadcast(qsubs), "sub_id")
-             .select("sub_id", "code",
-                     _l2sq(F.col("c_vec"), F.col("qv")).alias("dist")))
-
-    coarse = (enc.select("id", F.posexplode("codes").alias("sub_id", "code"))
-              .join(F.broadcast(table), ["sub_id", "code"])
-              .groupBy("id")
-              .agg(F.sum("dist").alias("adc")))
-    cand = (coarse.orderBy(F.col("adc").asc(), F.col("id").asc())
-            .limit(k * rerank_factor))
-
-    originals = emb.select(F.col(id_col).alias("id"),
-                           F.col(vec_col).alias("v"))
-    rer = (cand.join(originals, "id").crossJoin(F.broadcast(query_df))
-           .select(F.col("id").alias(id_col),
-                   F.expr(cosine_sql("v", "q_vec")).alias("cosine")))
-    return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
 # ===========================================================================
-# Scalar quantization (SQ8) — int8-range codes, asymmetric scoring + rescore
+# Scalar quantization (SQ8) — int8-range codes
 # ===========================================================================
-
-#: Asymmetric SQ8 score of float query `qd` against a row's int8 `codes`.
-_SQ8_APPROX_SQL = f"scale * {_fast_dot_sql('qd', 'codes')} AS approx"
 
 
 def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
@@ -871,13 +711,8 @@ def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
     code_i = floor(((x_i * 127) / max|x|) + 0.5), per-vector scale
     = max|x| / 127 reconstructs x_i ~= code_i * scale.
 
-    Scale rationale: at 100 TB the ANN scan cost is BYTES READ — int8
-    codes are 1/4 of float32 (1/8 of the double the scorer would widen
-    to), so a codes-only hot table cuts the scan by 4x while the exact
-    rescore touches only the top candidates' float rows (the
-    codes-hot/floats-cold split of `pq_topk`, but with a training-free,
-    per-vector-exact codec; PQ compresses harder, SQ8 reconstructs
-    tighter and needs no codebook maintenance).
+    Scale rationale: int8 codes are 1/4 of float32, and the codec is
+    training-free and per-vector exact (no codebook to maintain).
 
     Cross-engine determinism (the kind='sq8' gate row in dedup_exact):
     every operation is IEEE double arithmetic with a pinned expression
@@ -900,48 +735,3 @@ def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
         F.col(id_col).alias("id"),
         (F.col("__maxabs") / F.lit(127.0)).alias("scale"),
         F.transform(F.col(vec_col), code).alias("codes"))
-
-
-def sq8_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             rerank_factor: int = 4) -> DataFrame:
-    """ANN top-k via SQ8: ASYMMETRIC scoring (the query stays float —
-    quantizing it too would double the error for zero byte savings):
-
-        approx = scale_doc * sum_i q_i * code_i  ~=  dot(q, x_doc)
-
-    computed with the codegen'd `_fast_dot_sql` over the codes array; the
-    top k*rerank_factor candidates are rescored with the exact decimal
-    cosine and deterministically re-ranked. Candidate selection is a
-    TakeOrderedAndProject (no global sort); the rescore join touches
-    only the candidate ids' float vectors.
-
-    Unlike LSH/IVF this scans EVERY code row (no pruning) — the win is
-    bytes-per-row, not rows.
-
-    SINGLE-QUERY contract (r8 advice item): query_df must hold exactly
-    one query vector — the candidate stage takes ONE global
-    top-(k*rerank_factor), so several query rows would compete for one
-    candidate pool and silently starve each other. Enforced with a
-    metadata-cheap count (the query frame is driver-built and
-    broadcast-sized); run one call per query.
-    """
-    n = query_df.limit(2).count()
-    if n != 1:
-        raise ValueError(
-            f"query_df must contain exactly one query vector (got "
-            f"{'>=2' if n > 1 else n}): the candidate top-k is a single "
-            "global limit; run one call per query.")
-    enc = sq8_encode(emb, id_col, vec_col)
-    qd = query_df.select(F.col("q_vec").cast("array<double>").alias("qd"))
-    approx = (enc.crossJoin(F.broadcast(qd))
-              .selectExpr("id", _SQ8_APPROX_SQL))
-    cand = (approx.orderBy(F.col("approx").desc(), F.col("id").asc())
-            .limit(k * rerank_factor))
-    rer = (cand.join(emb.select(F.col(id_col).alias("id"), vec_col), "id")
-           .crossJoin(F.broadcast(query_df))
-           .select(F.col("id").alias(id_col),
-                   F.expr(cosine_sql(vec_col, "q_vec")).alias("cosine")))
-    return rer.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-

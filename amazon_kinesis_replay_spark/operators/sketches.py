@@ -1,21 +1,13 @@
-"""Mergeable cardinality / frequency sketches as DataFrame tables.
+"""Mergeable sketches as DataFrame tables.
 
-At 100 TB you do not count distinct users by shuffling every key — you
-build a sketch per partition-of-time/source, store it as a tiny table,
-and MERGE sketches associatively. Spark ships HLL++ behind
-`approx_count_distinct` (use it for one-shot answers); these operators
-provide the sketch AS DATA — a persistable, mergeable register table —
-which is what a pipeline needs for incremental rollups (daily sketch +
-daily sketch = weekly sketch, no re-scan of history):
+At 100 TB you do not answer membership or distribution questions by
+shuffling every key — you build a sketch per partition-of-time/source,
+store it as a tiny table, and MERGE sketches associatively (daily
+sketch + daily sketch = weekly sketch, no re-scan of history):
 
-- HyperLogLog (Flajolet et al. 2007): register table = (bucket,
-  max_rho) over xxhash64 — one map-side-combinable groupBy, 2^p rows.
-  `hll_merge` is a max-union; `hll_estimate` applies the standard bias
-  correction + linear counting on the tiny table, driver-free until
-  the final scalar.
-- Count-Min (Cormode & Muthukrishnan 2005): d×w counter table from d
-  salted hashes; point lookups take the min over rows; `cms_merge` is
-  a cell-wise sum.
+- HyperLogLog (Flajolet et al. 2007): `_hll_bucket_rho_sql` gives the
+  (bucket, rho) register coordinates over xxhash64 that
+  agg_events_by_type folds into per-event-type register statistics.
 - Bloom (1970): sparse set-bit table; idempotent OR merge; exact
   negative side.
 - Quantile histogram (HdrHistogram-style log buckets): (bucket, cnt)
@@ -40,30 +32,19 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------------------
 
 
-def _hll_bucket_rho(value_col: Column, p: int):
-    """(bucket, rho) column pair for one hashed value — shared by the
-    global and grouped register builders (see hll_register_table for
-    the bit-slicing rationale)."""
-    h = F.xxhash64(value_col)
-    bucket = F.shiftrightunsigned(h, 64 - p)
-    rest = F.shiftleft(h, p)      # low 64-p bits, left-aligned
-    bits = F.lpad(F.conv(F.format_string("%d",
-                                         F.shiftrightunsigned(rest, 1)),
-                         10, 2), 64, "0")
-    # shiftrightunsigned(rest,1) guarantees a non-negative value for
-    # %d/conv (conv of base-10 negative strings would sign-wrap); the
-    # shift moves every bit one position right, so the first '1' lands
-    # at char rho+1 of the padded string — rho = instr - 1. The lost
-    # low bit is always shiftleft padding (p >= 1), and an all-zero
-    # remainder yields instr=0, mapped to the spec's 64-p+1.
-    rho = F.instr(bits, "1") - 1
-    rho = F.when(rho == -1, F.lit(64 - p + 1)).otherwise(rho)
-    return bucket.cast("long").alias("bucket"), rho.cast("int").alias("rho")
-
-
 def _hll_bucket_rho_sql(col: str, p: int) -> tuple[str, str]:
-    """Spark-SQL twins of `_hll_bucket_rho` (r13 construction-cost pass;
-    same bit-slicing expressions, values identical)."""
+    """(bucket, rho) Spark-SQL expressions of one hashed value — the HLL
+    register coordinates agg_events_by_type folds with max(rho) per
+    bucket. bucket = top p bits of xxhash64(value); rho = position of
+    the first 1-bit in the remaining 64-p bits (1-based; 64-p+1 when
+    they are all zero).
+
+    shiftrightunsigned(rest, 1) guarantees a non-negative value for
+    %d/conv (conv of base-10 negative strings would sign-wrap); the
+    shift moves every bit one position right, so the first '1' lands
+    at char rho+1 of the padded string — rho = instr - 1. The lost low
+    bit is always shiftleft padding (p >= 1), and an all-zero remainder
+    yields instr=0, mapped to the spec's 64-p+1."""
     h = f"xxhash64({col})"
     bucket = f"CAST(shiftrightunsigned({h}, {64 - p}) AS BIGINT)"
     bits = (f"lpad(conv(format_string('%d', shiftrightunsigned("
@@ -73,184 +54,29 @@ def _hll_bucket_rho_sql(col: str, p: int) -> tuple[str, str]:
     return bucket, rho
 
 
-def hll_register_table(df: DataFrame, col: str, p: int = 12) -> DataFrame:
-    """HLL register table for one column: (bucket, max_rho) with
-    2^p buckets. bucket = top p bits of xxhash64(value); rho = position
-    of the first 1-bit in the remaining 64-p bits (1-based; 64-p+1 when
-    they are all zero). One groupBy with map-side combine — the shuffle
-    carries at most 2^p rows per map task. Only OCCUPIED buckets are
-    materialized (absent rows mean rho 0 to the estimator)."""
-    if not 4 <= p <= 18:
-        raise ValueError(f"p must be in [4, 18], got {p}")
-    bucket, rho = _hll_bucket_rho(F.col(col), p)
-    return (df.select(bucket, rho)
-            .groupBy("bucket").agg(F.max("rho").alias("max_rho")))
-
-
-def hll_register_table_grouped(df: DataFrame, group_col: str, col: str,
-                               p: int = 12) -> DataFrame:
-    """Per-group HLL registers: (group, bucket, max_rho) — the
-    distinct-users-per-day shape. One groupBy with map-side combine;
-    at most 2^p rows per group survive. Merge tables for the same
-    groups with hll_merge_grouped; estimate with hll_estimate_grouped
-    (both stay DataFrames — nothing per-group touches the driver)."""
-    if not 4 <= p <= 18:
-        raise ValueError(f"p must be in [4, 18], got {p}")
-    bucket, rho = _hll_bucket_rho(F.col(col), p)
-    return (df.select(F.col(group_col), bucket, rho)
-            .groupBy(group_col, "bucket").agg(F.max("rho").alias("max_rho")))
-
-
-def hll_merge_grouped(group_col: str, *tables: DataFrame) -> DataFrame:
-    """Per-group max-union (associative, commutative, idempotent)."""
-    if not tables:
-        raise ValueError("hll_merge_grouped needs at least one table")
-    out = tables[0]
-    for t in tables[1:]:
-        out = out.unionByName(t)
-    return (out.groupBy(group_col, "bucket")
-            .agg(F.max("max_rho").alias("max_rho")))
-
-
-def hll_estimate_grouped(regs: DataFrame, group_col: str,
-                         p: int = 12) -> DataFrame:
-    """Per-group estimates as a DataFrame (group, n_distinct_est):
-    the same alpha_m harmonic-mean + linear-counting estimator as
-    hll_estimate, expressed in columns so a million groups never
-    collect to the driver."""
-    m = 1 << p
-    alpha = (0.673 if p == 4 else 0.697 if p == 5 else 0.709 if p == 6
-             else 0.7213 / (1 + 1.079 / m))
-    agg = regs.groupBy(group_col).agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("__s"),
-        F.count("*").alias("__occ"))
-    zeros = F.lit(m) - F.col("__occ")
-    s = F.col("__s") + zeros.cast("double")
-    raw = F.lit(alpha * m * m) / s
-    est = F.when((raw <= F.lit(2.5 * m)) & (zeros > 0),
-                 F.lit(float(m)) * F.log(F.lit(float(m))
-                                         / zeros.cast("double")))         .otherwise(raw)
-    return agg.select(group_col, est.alias("n_distinct_est"))
-
-
-def hll_merge(*tables: DataFrame) -> DataFrame:
-    """Union register tables and keep the per-bucket max — the HLL merge
-    is associative/commutative/idempotent, so daily tables fold in any
-    order (and re-merging a table is harmless)."""
-    if not tables:
-        raise ValueError("hll_merge needs at least one table")
-    out = tables[0]
-    for t in tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("bucket").agg(F.max("max_rho").alias("max_rho"))
-
-
-def hll_estimate(regs: DataFrame, p: int = 12) -> float:
-    """Standard HLL estimator over the register table: raw harmonic-mean
-    estimate with the alpha_m bias constant, small-range linear-counting
-    correction below 5m/2. The aggregation runs on the 2^p-row table;
-    only the final scalar reaches the driver."""
-    m = 1 << p
-    alpha = (0.673 if p == 4 else 0.697 if p == 5 else 0.709 if p == 6
-             else 0.7213 / (1 + 1.079 / m))
-    row = regs.agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("max_rho"))).alias("s"),
-        F.count("*").alias("occupied")).head()
-    occupied = int(row["occupied"] or 0)
-    zeros = m - occupied                    # absent buckets have rho 0
-    s = float(row["s"] or 0.0) + zeros      # 2^-0 = 1 per empty bucket
-    raw = alpha * m * m / s
-    if raw <= 2.5 * m and zeros > 0:
-        return m * math.log(m / zeros)      # linear counting
-    return raw
-
-
-# --------------------------------------------------------------------------
-# Count-Min
-# --------------------------------------------------------------------------
-
-
-def cms_table(df: DataFrame, col: str, w: int = 1024,
-              d: int = 4) -> DataFrame:
-    """Count-Min counter table: (row, bucket, cnt), d salted hash rows
-    of width w. The row index salts the hash as a separate column before
-    hashing — d independent-enough hash functions from one xxhash64.
-    One explode (factor d) + one map-side-combinable groupBy; at most
-    d*w rows survive."""
-    rows = F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("row")
-    # MULTI-COLUMN xxhash64, not a string concat: concat salting is
-    # ambiguously decodable ((row=1,'2x') == (row=12,'x') once d > 10),
-    # breaking the independence of the d rows (review finding). NULL
-    # values are excluded explicitly: Spark hash functions SKIP null
-    # columns, so a NULL would alias the row-only hash. The salt is cast
-    # to LONG (r8, matching bloom_table) so the chained hash has a
-    # pure-python twin — xxh64_string(v, seed=xxh64_long(row)) — making
-    # CMS cells hash-gate-checkable.
-    return (df.select(F.col(col).cast("string").alias("__v"))
-            .filter(F.col("__v").isNotNull())
-            .select("__v", rows)
-            .select("row",
-                    F.pmod(F.xxhash64(F.col("row").cast("long"),
-                                      F.col("__v")),
-                           F.lit(w)).alias("bucket"))
-            .groupBy("row", "bucket").agg(F.count("*").alias("cnt")))
-
-
-def cms_merge(*tables: DataFrame) -> DataFrame:
-    """Cell-wise sum — Count-Min merges by addition (NOT idempotent:
-    merging a table with itself double-counts, unlike HLL)."""
-    if not tables:
-        raise ValueError("cms_merge needs at least one table")
-    out = tables[0]
-    for t in tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
-def cms_lookup(cms: DataFrame, items: DataFrame, col: str, w: int = 1024,
-               d: int = 4) -> DataFrame:
-    """Point-estimate counts for a table of items: re-derive each item's
-    d cells, join the counter table, take the per-item MIN — the
-    classic overestimate-only bound (estimate >= true count, with high
-    probability within eps*N). Missing cells count as 0."""
-    rows = F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("row")
-    probes = (items.select(F.col(col).cast("string").alias("item"))
-              .filter(F.col("item").isNotNull())
-              .distinct()
-              .select("item", rows)
-              .select("item", "row",
-                      F.pmod(F.xxhash64(F.col("row").cast("long"),
-                                        F.col("item")),
-                             F.lit(w)).alias("bucket")))
-    return (probes.join(cms, ["row", "bucket"], "left")
-            .groupBy("item")
-            .agg(F.min(F.coalesce("cnt", F.lit(0))).cast("long")
-                 .alias("est_count")))
-
-
 # --------------------------------------------------------------------------
 # Bloom filter (Bloom 1970) — mergeable approximate-membership table
 # --------------------------------------------------------------------------
 #
-# The third mergeable sketch (with HLL for cardinality and Count-Min for
-# frequency): answers "possibly seen / definitely not seen". At 100 TB
-# the canonical uses are dedup pre-filters (skip the exact check for
-# definitely-new keys) and cross-pipeline reconciliation (ship a few MB
-# of bits instead of re-scanning a corpus for membership). Stored SPARSE:
-# a table of SET bit positions, so an empty filter is zero rows, merge is
-# a distinct union (idempotent OR — safe under replay, unlike CMS), and
-# the table stays small until the filter actually fills.
+# The membership sketch (with HLL for cardinality): answers "possibly
+# seen / definitely not seen". At 100 TB the canonical uses are dedup
+# pre-filters (skip the exact check for definitely-new keys) and
+# cross-pipeline reconciliation (ship a few MB of bits instead of
+# re-scanning a corpus for membership). Stored SPARSE: a table of SET
+# bit positions, so an empty filter is zero rows, merge is a distinct
+# union (idempotent OR — safe under replay), and the table stays small
+# until the filter actually fills.
 
 
 def bloom_table(df: DataFrame, col: str, m: int = 1 << 20,
                 k: int = 4) -> DataFrame:
     """Sparse Bloom filter of a column: the DISTINCT set bit positions
     (bit long) of an m-bit filter with k hash rows. Positions come from
-    the same multi-column xxhash64 salting as cms_table (hash-row index
-    as a separate column — no concat ambiguity; NULLs excluded — Spark
-    hash functions skip null columns, which would alias the salt-only
-    hash). One explode (factor k) + one map-side-combinable distinct;
-    at most m rows survive regardless of input size."""
+    a multi-column xxhash64 salting (hash-row index as a separate
+    column — no concat ambiguity; NULLs excluded — Spark hash functions
+    skip null columns, which would alias the salt-only hash). One
+    explode (factor k) + one map-side-combinable distinct; at most m
+    rows survive regardless of input size."""
     if m < 8 or k < 1:
         raise ValueError(f"need m >= 8 and k >= 1, got m={m} k={k}")
     rows = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("hash_i")
@@ -269,7 +95,7 @@ def bloom_table(df: DataFrame, col: str, m: int = 1 << 20,
 def bloom_merge(*tables: DataFrame) -> DataFrame:
     """Bitwise OR = distinct union of set positions. Idempotent and
     commutative — merging a filter with itself is a no-op, so replayed
-    batches cannot corrupt it (the property CMS lacks)."""
+    batches cannot corrupt it (the property a counting sketch lacks)."""
     if not tables:
         raise ValueError("bloom_merge needs at least one table")
     out = tables[0]
@@ -311,11 +137,11 @@ def bloom_fpp(n_items: int, m: int = 1 << 20, k: int = 4) -> float:
 # Quantile histogram (HdrHistogram-style log-bucketed counts)
 # --------------------------------------------------------------------------
 #
-# The fourth mergeable sketch (HLL = cardinality, CMS = frequency, Bloom =
-# membership, this = quantiles/distribution). The classic rank-sketch
-# candidates violate this module's determinism contract: KLL compacts via
-# coin flips (randomized), and a t-digest's centroids depend on the MERGE
-# ORDER, so a distributed build changes with partitioning. A log-bucketed
+# The distribution sketch (HLL = cardinality, Bloom = membership, this =
+# quantiles). The classic rank-sketch candidates violate this module's
+# determinism contract: KLL compacts via coin flips (randomized), and a
+# t-digest's centroids depend on the MERGE ORDER, so a distributed build
+# changes with partitioning. A log-bucketed
 # histogram (the HdrHistogram idea) is deterministic pure-integer
 # arithmetic — bit-identical across runs, partitionings, and engines —
 # fully mergeable by cell-wise sum, and bounds RELATIVE value error at
@@ -365,31 +191,16 @@ def qhist_table(df: DataFrame, col: str, sig_bits: int = 7) -> DataFrame:
             .groupBy("bucket").agg(F.count("*").alias("cnt")))
 
 
-def qhist_table_grouped(df: DataFrame, group_col: str, col: str,
-                        sig_bits: int = 7) -> DataFrame:
-    """Per-group quantile histograms: (group, bucket, cnt) — the
-    latency-percentiles-per-endpoint shape. Same single groupBy; at most
-    64 * 2^sig_bits rows per group."""
-    if not 1 <= sig_bits <= 16:
-        raise ValueError(f"sig_bits must be in [1, 16], got {sig_bits}")
-    return (df.select(F.col(group_col),
-                      F.col(col).cast("long").alias("__v"))
-            .filter(F.col("__v").isNotNull())
-            .select(F.col(group_col), _qhist_bucket(sig_bits).alias("bucket"))
-            .groupBy(group_col, "bucket").agg(F.count("*").alias("cnt")))
-
-
-def qhist_merge(*tables: DataFrame, group_col: str | None = None) -> DataFrame:
-    """Cell-wise sum (associative/commutative, NOT idempotent — like CMS,
-    self-merge double-counts; dedupe batches upstream for replay safety).
-    Pass group_col to merge grouped tables."""
+def qhist_merge(*tables: DataFrame) -> DataFrame:
+    """Cell-wise sum (associative/commutative, NOT idempotent —
+    self-merge double-counts; dedupe batches upstream for replay
+    safety)."""
     if not tables:
         raise ValueError("qhist_merge needs at least one table")
     out = tables[0]
     for t in tables[1:]:
         out = out.unionByName(t)
-    keys = ([group_col] if group_col else []) + ["bucket"]
-    return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
+    return out.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def _qhist_value(sig_bits: int, point: str = "mid") -> Column:
@@ -440,26 +251,3 @@ def qhist_quantiles(qh: DataFrame, probs: list[float],
                   & (F.col("__cum") - F.col("cnt") < target))
             .select("prob",
                     _qhist_value(sig_bits, point).alias("value_est")))
-
-
-def qhist_quantiles_grouped(qh: DataFrame, group_col: str,
-                            probs: list[float],
-                            sig_bits: int = 7) -> DataFrame:
-    """Per-group quantiles as a DataFrame (group, prob, value_est) — the
-    window partitions by group and per-group totals join back, so a
-    million groups never collect to the driver."""
-    from pyspark.sql import Window
-    spark = qh.sparkSession
-    w = (Window.partitionBy(group_col).orderBy("bucket")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = qh.withColumn("__cum", F.sum("cnt").over(w))
-    tot = qh.groupBy(group_col).agg(F.sum("cnt").alias("__n"))
-    pdf = spark.createDataFrame([(float(p),) for p in probs],
-                                "prob double")
-    target = F.greatest(F.ceil(F.col("prob") * F.col("__n")), F.lit(1))
-    return (cum.join(tot, group_col)
-            .join(F.broadcast(pdf),
-                  (F.col("__cum") >= target)
-                  & (F.col("__cum") - F.col("cnt") < target))
-            .select(group_col, "prob",
-                    _qhist_value(sig_bits).alias("value_est")))

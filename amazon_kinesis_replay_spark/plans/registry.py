@@ -615,9 +615,9 @@ def q_agg_events_by_type(spark, sf_dir):
     buckets, rho sum, bucket*rho checksum — the checksum pins the full
     register table content), recomputed independently in pure Python
     at oracle-build time via the Spark-matching xxh64 and embedded as
-    a literal VALUES table (the `_simhash_oracle` pattern). Estimator
-    floats stay out of the gate (libm); accuracy is unit-tested
-    against exact counts.
+    a literal VALUES table (the `_simhash_oracle` pattern). No
+    estimator float is computed: the gate pins the registers, and the
+    estimate is a pure function of them.
 
     r8 (verdict task 2): SINGLE SCAN. The r7 shape read `events` twice
     (base aggregate + HLL register path) and joined — a full second
@@ -1534,9 +1534,9 @@ def q_doc_pii_redact(spark, sf_dir):
                               "text", n=2)
     # r7c: DSIR importance-resampling stats ride the same gram frame —
     # the even-doc model doubles as the TARGET model and a raw model
-    # over the WHOLE corpus joins alongside it (the float log-ratio in
-    # sampling.dsir_log_weights is built from these same joins; logs
-    # stay out of the gate for the usual libm reason).
+    # over the WHOLE corpus joins alongside it (DSIR's float log-ratio
+    # would be built from these same joins; logs stay out of the gate
+    # for the usual libm reason).
     raw = text.ngram_lm_counts(d, "text", n=2) \
         .withColumnRenamed("cnt", "rcnt")
     g = (d.select("doc_id",
@@ -1559,7 +1559,7 @@ def q_doc_pii_redact(spark, sf_dir):
     # oracle recomputes every bucket pure-python via the xxh64 twin
     # (signed-pmod semantics) and embeds per-doc literals, so the hash
     # function + bucket geometry are gate-checked while libm logs stay
-    # out (dsir_hashed_log_weights builds on exactly these joins).
+    # out (the DSIR log-weight would build on exactly these joins).
     hb_t = sampling.dsir_hashed_counts(
         d.filter(F.col("doc_id") % 2 == 0), "text", n_buckets=10_000)
     hb_r = sampling.dsir_hashed_counts(d, "text", n_buckets=10_000)
@@ -2044,10 +2044,10 @@ def q_dedup_exact(spark, sf_dir):
       across engines.
     - kind='zorder' (late r8): ONE summary row pinning the Z-order
       layout key (`operators.layout.zvalue` — the Morton interleave
-      behind `layout_zorder`'s multi-dimension file-skipping) over the
-      events table: z = interleave(pmod(user_id,256),
-      pmod(unix_millis(ts),256)) at 8 bits; keep_id = row count,
-      dup_count = Σz, span_start/span_end = min/max z. The oracle runs
+      behind multi-dimension file-skipping) over the events table:
+      z = interleave(pmod(user_id,256), pmod(unix_millis(ts),256)) at
+      8 bits; keep_id = row count, dup_count = Σz,
+      span_start/span_end = min/max z. The oracle runs
       the IDENTICAL shift arithmetic in DuckDB, emitted by
       `layout.zvalue_sql` — one bit-placement source of truth, qhist's
       independent-SQL gate class.
@@ -2075,11 +2075,11 @@ def q_dedup_exact(spark, sf_dir):
       (total tokens), span_start = |vocabulary|, span_end = max df.
       Exact integers; the oracle REBUILDS the postings table in DuckDB
       from the same trim(lower)/\\s+ tokenization the span CTE uses
-      (fully independent SQL, qhist gate class). Float BM25 scoring is
-      twin-pinned in tests instead — hashing ln() outputs cross-engine
-      would gate libm, not the plan.
+      (fully independent SQL, qhist gate class). Float BM25 scores
+      stay out — hashing ln() outputs cross-engine would gate libm, not
+      the plan.
     - kind='sq8' (r8, third continuation): the scalar-quantization codec
-      behind `similarity.sq8_topk` — every embedding's int8-range codes
+      (`similarity.sq8_encode`) — every embedding's int8-range codes
       (floor((x*127/max|x|)+0.5), all IEEE double ops) summarized as
       exact integers: keep_id = total code count, dup_count = Σ codes,
       span_start/span_end = min/max code. The oracle REDERIVES the codes

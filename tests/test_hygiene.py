@@ -595,21 +595,31 @@ def _top_level_names(p: Path) -> set[str]:
     return names
 
 
+def _files_outside_package(root: Path, patterns) -> list[Path]:
+    """The files under `root` matching one of the glob `patterns`, less
+    those inside the package."""
+    files = {f for pat in patterns for f in root.glob(pat)}
+    return sorted(f for f in files if not f.is_relative_to(root / PKG.name))
+
+
 def test_tool_imports_resolve():
-    """Every `from amazon_kinesis_replay_spark... import name` in tools/
-    names an existing module and an attribute it defines (or a
-    submodule), and every `alias.name` through a name bound to a package
-    module (`from ...operators import similarity as S`, then `S.name`)
-    names a top-level definition of that module (or a submodule) —
-    checked from source, no Spark, no import side effects. A tool that
-    calls deleted code fails here instead of at its next manual run."""
+    """Every `from amazon_kinesis_replay_spark... import name` in a root
+    file outside the package (tools/, bench.py, perfbench/,
+    __spark_entry__.py) names an existing module and an attribute it
+    defines (or a submodule), and every `alias.name` through a name
+    bound to a package module (`from ...operators import similarity as
+    S`, then `S.name`) names a top-level definition of that module (or a
+    submodule) — checked from source, no Spark, no import side effects.
+    A deletion that breaks one of them fails here instead of at the
+    file's next run."""
     root = PKG.parent
     broken = []
-    for tool in sorted((root / "tools").glob("*.py")):
-        tree = ast.parse(tool.read_text())
+    for path in _files_outside_package(root, ENTRY_POINTS + ("tools/*.py",)):
+        rel = path.relative_to(root)
+        tree = ast.parse(path.read_text())
         modules = {}                    # bound name -> package module
         for node in ast.walk(tree):
-            where = f"tools/{tool.name}:{getattr(node, 'lineno', '')}"
+            where = f"{rel}:{getattr(node, 'lineno', '')}"
             if isinstance(node, ast.Import):
                 for a in node.names:
                     if not a.name.startswith(PKG.name):
@@ -639,9 +649,9 @@ def test_tool_imports_resolve():
             mod = modules[node.value.id]
             if (node.attr not in _top_level_names(_module_file(root, mod))
                     and _module_file(root, f"{mod}.{node.attr}") is None):
-                broken.append(f"tools/{tool.name}:{node.lineno} "
+                broken.append(f"{rel}:{node.lineno} "
                               f"{node.value.id}.{node.attr} ({mod})")
-    assert not broken, f"tool imports that do not resolve: {broken}"
+    assert not broken, f"package imports that do not resolve: {broken}"
 
 
 def test_tests_and_tools_do_not_name_the_checkout_path():
@@ -677,35 +687,30 @@ def test_slow_test_entries_name_existing_tests():
     assert not stale, f"SLOW_TESTS entries naming no test: {stale}"
 
 
-#: Roots of the function-level walk: the entry points, plus the tools
-#: that call package code directly. Tests are not roots: code only a test
-#: calls is code no user path runs.
-FUNCTION_ROOTS = ENTRY_POINTS + ("tools/*.py",)
-
-#: Package functions (qualified below the package) that only tests call,
-#: each mapped to the one-line reason it stays. Each counts as one more
-#: root of the function walk.
-TEST_ONLY_ALLOWED: dict[str, str] = {
+#: Package functions (qualified below the package) that no entry point
+#: reaches — only tests or tools call them — each mapped to the one-line
+#: reason it stays. Each counts as one more root of the function walk;
+#: tests and tools are not roots, so code only they call must be listed
+#: here or deleted.
+UNREACHED_ALLOWED: dict[str, str] = {
+    "operators.dedup.minhash_lsh_pairs":
+        "the banding stage of the registry's minhash_dedup alone, whose "
+        "candidate recall tools/recall_probe.py sweeps",
     "sources.lz4frame.frame_compress":
         "fixture encoder for the reached lz4 frame decoder",
     "sources.lz4frame.block_compress":
         "fixture encoder for the reached lz4 block decoder",
     "functions.webp.decode_webp_yuv":
         "the libwebp YUV witness hook for the reached VP8 decoder",
-    "operators.retrieval.py_reference_bm25":
-        "the reference the tool-reached bm25_topk is tested against",
     "sources.ndjson.read_events":
         "batch twin of read_events_stream that the text decode tests drive",
     "sources.ndjson.read_events_sniffed":
         "batch twin of read_events_stream_sniffed that the codec tests "
         "drive",
     **{f"operators.sketches.{name}":
-       "reads back a sketch the registry or scale_probe builds; replay "
-       "lateness is planned to be read through qhist"
+       "reads back a sketch the registry builds; replay lateness is "
+       "planned to be read through qhist"
        for name in ("bloom_contains", "bloom_fpp", "bloom_merge",
-                    "cms_lookup", "cms_merge", "hll_estimate",
-                    "hll_estimate_grouped", "hll_merge",
-                    "hll_merge_grouped", "hll_register_table",
                     "qhist_merge", "qhist_quantiles")},
 }
 
@@ -770,10 +775,8 @@ def _unreached_functions(root: Path, extra_roots=()) -> set[str]:
     the package), and the body of every definition already reached."""
     pkg = root / PKG.name
     used = set()
-    for pat in FUNCTION_ROOTS:
-        for f in root.glob(pat):
-            if not f.is_relative_to(pkg):
-                used |= _names_used([ast.parse(f.read_text())], True)
+    for f in _files_outside_package(root, ENTRY_POINTS):
+        used |= _names_used([ast.parse(f.read_text())], True)
     defs = {}
     for f in pkg.rglob("*.py"):
         mod = _module_name(root, f)
@@ -802,15 +805,15 @@ def _unreached_functions(root: Path, extra_roots=()) -> set[str]:
 
 def test_every_package_function_is_reachable():
     """A top-level function or class, or a method of a package class,
-    that no entry point or tool reaches by name is code no user path
-    runs; delete it, or allowlist it in TEST_ONLY_ALLOWED with the
-    reason it stays."""
-    unreached = _unreached_functions(PKG.parent, TEST_ONLY_ALLOWED)
+    that no entry point reaches by name is code no user path runs;
+    delete it, or allowlist it in UNREACHED_ALLOWED with the reason it
+    stays."""
+    unreached = _unreached_functions(PKG.parent, UNREACHED_ALLOWED)
     assert not unreached, (
-        f"package functions no entry point or tool refers to: "
+        f"package functions no entry point refers to: "
         f"{sorted(unreached)}")
-    allowed = {f"{PKG.name}.{q}" for q in TEST_ONLY_ALLOWED}
+    allowed = {f"{PKG.name}.{q}" for q in UNREACHED_ALLOWED}
     stale = allowed - _unreached_functions(PKG.parent)
     assert not stale, (
-        f"stale TEST_ONLY_ALLOWED entries (now reached or gone): "
+        f"stale UNREACHED_ALLOWED entries (now reached or gone): "
         f"{sorted(stale)}")

@@ -1,9 +1,6 @@
-"""Z-order layout: interleave twin, quantize bounds, and the measured
-file-pruning witness (footer min-max stats, no scan)."""
+"""Layout keys: the Z-order interleave and its twins, and the Hilbert
+curve walks and lookup tables."""
 
-import glob
-
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,109 +41,6 @@ def test_zvalue_guards() -> None:
         layout.zvalue([F.col("a")] * 8, bits=8)
     with pytest.raises(ValueError, match="1..8"):
         layout.zvalue([], bits=8)
-    with pytest.raises(ValueError, match="hi > lo"):
-        layout.quantize(F.col("a"), 5.0, 5.0, bits=4)
-
-
-def test_quantize_clamps_and_is_monotone(spark):
-    df = spark.createDataFrame(
-        [(-10.0,), (0.0,), (24.9,), (25.0,), (99.9,), (100.0,), (250.0,)],
-        "x double")
-    got = [r["q"] for r in df.select(
-        layout.quantize(F.col("x"), 0.0, 100.0, bits=2).alias("q"))
-        .collect()]
-    # 4 cells of width 25 over [0, 100); out-of-range clamps to edges
-    assert got == [0, 0, 0, 1, 3, 3, 3]
-    assert got == sorted(got)
-
-
-def test_zorder_layout_prunes_files(spark, sf_dir, tmp_path):
-    """The measured witness: write the same events frame (a) sorted by
-    ts (the natural log layout) and (b) z-ordered on (user_id, ts),
-    16 files each; count from parquet FOOTERS how many files a
-    predicate must read. A user_id predicate prunes nothing under the
-    ts layout (every file spans all users) and most files under
-    z-order; the 2-D box must also read fewer z-ordered files."""
-    ev = load(spark, sf_dir, "events") \
-        .select("event_id", "user_id", "ts",
-                F.unix_millis("ts").alias("ms"))
-    lo_ms, hi_ms, lo_u, hi_u = ev.agg(
-        F.min("ms"), F.max("ms"), F.min("user_id"), F.max("user_id")) \
-        .head()
-    qcols = [layout.quantize(F.col("user_id"), lo_u, hi_u + 1, bits=8),
-             layout.quantize(F.col("ms"), lo_ms, hi_ms + 1, bits=8)]
-    # a ~20% user band in the middle of the observed range
-    u_a = lo_u + (hi_u - lo_u) * 2 // 10
-    u_b = lo_u + (hi_u - lo_u) * 4 // 10
-
-    lin_dir = str(tmp_path / "linear")
-    z_dir = str(tmp_path / "zorder")
-    ev.repartitionByRange(16, "ts").sortWithinPartitions("ts") \
-        .write.parquet(lin_dir)
-    layout.layout_zorder(ev, qcols, bits=8, n_partitions=16) \
-        .write.parquet(z_dir)
-
-    def files_overlapping(d, col, lo, hi):
-        n = 0
-        for fp in glob.glob(d + "/*.parquet"):
-            md = pq.ParquetFile(fp).metadata
-            idx = {md.schema.column(i).name: i
-                   for i in range(md.num_columns)}[col]
-            f_lo = min(md.row_group(g).column(idx).statistics.min
-                       for g in range(md.num_row_groups))
-            f_hi = max(md.row_group(g).column(idx).statistics.max
-                       for g in range(md.num_row_groups))
-            if f_hi >= lo and f_lo <= hi:
-                n += 1
-        return n
-
-    n_files = len(glob.glob(z_dir + "/*.parquet"))
-    assert n_files >= 8                      # enough files to prune
-
-    # 1-D user predicate: the middle band
-    lin_u = files_overlapping(lin_dir, "user_id", u_a, u_b)
-    z_u = files_overlapping(z_dir, "user_id", u_a, u_b)
-    assert lin_u == len(glob.glob(lin_dir + "/*.parquet"))  # no pruning
-    assert z_u < lin_u                       # z-order prunes users
-
-    # 2-D box: both layouts prune on ts; z-order must still read fewer
-    # TOTAL files (intersection of per-dimension overlaps)
-    mid = (lo_ms + hi_ms) // 2
-    span = (hi_ms - lo_ms) // 8
-
-    def files_box(d):
-        n = 0
-        for fp in glob.glob(d + "/*.parquet"):
-            md = pq.ParquetFile(fp).metadata
-            idx = {md.schema.column(i).name: i
-                   for i in range(md.num_columns)}
-            ok = True
-            for col, lo, hi in (("user_id", u_a, u_b),
-                                ("ms", mid, mid + span)):
-                i = idx[col]
-                f_lo = min(md.row_group(g).column(i).statistics.min
-                           for g in range(md.num_row_groups))
-                f_hi = max(md.row_group(g).column(i).statistics.max
-                           for g in range(md.num_row_groups))
-                if f_hi < lo or f_lo > hi:
-                    ok = False
-                    break
-            if ok:
-                n += 1
-        return n
-
-    assert files_box(z_dir) < files_box(lin_dir)
-
-    # pruning is lossless: both layouts return identical matching rows
-    want = (ev.filter((F.col("user_id").between(u_a, u_b))
-                      & (F.col("ms").between(mid, mid + span)))
-            .select("event_id"))
-    got = (spark.read.parquet(z_dir)
-           .filter((F.col("user_id").between(u_a, u_b))
-                   & (F.col("ms").between(mid, mid + span)))
-           .select("event_id"))
-    assert (sorted(r["event_id"] for r in want.collect())
-            == sorted(r["event_id"] for r in got.collect()))
 
 
 # -- Hilbert option ---------------------------------------------------------

@@ -2063,36 +2063,6 @@ def test_semantic_dedup_shared_ranked_bit_equal(spark, sf_dir):
         assert shared == base, f"n_assign={n_assign}"
 
 
-def test_pq_ann_recall_and_determinism(spark, sf_dir):
-    """Product quantization: codebooks are (n_subs x n_codes) and
-    deterministic across retrains; codes compress every vector to n_subs
-    in-range ids; ADC + exact re-rank recovers the query itself at rank 1
-    and most of the true top-10 (fixed fixture -> fixed recall)."""
-    emb = load(spark, sf_dir, "embeddings")
-    cb = similarity.pq_train(emb, n_subs=8, n_codes=16, n_iters=2)
-    cb_rows = sorted((r["sub_id"], r["code"], tuple(r["c_vec"]))
-                     for r in cb.collect())
-    assert len(cb_rows) == 8 * 16
-    cb2 = similarity.pq_train(emb, n_subs=8, n_codes=16, n_iters=2)
-    assert sorted((r["sub_id"], r["code"], tuple(r["c_vec"]))
-                  for r in cb2.collect()) == cb_rows
-
-    codes = similarity.pq_encode(emb, cb)
-    rows = codes.collect()
-    assert len(rows) == emb.count()
-    assert all(len(r["codes"]) == 8
-               and all(0 <= c < 16 for c in r["codes"]) for r in rows)
-
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_vec"))
-    pq = [r["vec_id"] for r in similarity.pq_topk(
-        emb, q, k=10, codebooks=cb, codes=codes).collect()]
-    bf = [r["vec_id"] for r in similarity.brute_force_topk(
-        emb, q, k=10).collect()]
-    assert pq[0] == 0                       # the query itself survives ADC
-    assert len(set(pq) & set(bf)) >= 6      # typical PQ recall, pinned
-
-
 # ---------------------------------------------------------------------------
 # BPE tokenizer (distributed train, Arrow-batched encode)
 # ---------------------------------------------------------------------------

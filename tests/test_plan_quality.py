@@ -320,26 +320,18 @@ def test_contamination_join_is_hash_on_shingle(spark):
 
 
 def test_ngram_lm_score_is_hash_joined_and_partial(spark):
-    """LM scoring (DSIR's log-weight under the target and raw count
-    models) must plan as hash equi-joins (models + context totals)
-    with a partial per-doc aggregate — never a nested loop / cartesian
-    — so the plan survives a corpus-scale model table."""
-    from pyspark.sql import functions as F
-
-    from amazon_kinesis_replay_spark.operators import sampling
-    from amazon_kinesis_replay_spark.operators import text as T
-    from amazon_kinesis_replay_spark.tables import load
-    docs = load(spark, SF, "documents").select("doc_id", "text")
-    t_lm = T.ngram_lm_counts(docs.filter(F.col("doc_id") % 2 == 0),
-                             "text", n=2)
-    r_lm = T.ngram_lm_counts(docs, "text", n=2)
-    out = sampling.dsir_log_weights(docs, "doc_id", "text", t_lm, r_lm,
-                                    n=2)
-    p = out._jdf.queryExecution().executedPlan().toString()
+    """LM scoring in doc_pii_redact (each doc's grams against the target
+    and raw count models) must plan as hash equi-joins keyed on
+    (context, token) with a partial per-doc aggregate — never a nested
+    loop / cartesian — so the plan survives a corpus-scale model
+    table."""
+    p = _plan(spark, "doc_pii_redact")
     assert "NestedLoopJoin" not in p and "CartesianProduct" not in p
-    assert "HashAggregate" in p
-    # the count-model join keys on (context, token)
-    assert re.search(r"Join.*context.*token", p) or "context" in p
+    assert "partial_count" in p
+    lm_joins = re.findall(r"(\w+Join) \[context#\d+, token#\d+\]", p)
+    assert len(lm_joins) == 2, p[:2000]
+    assert all(j in ("BroadcastHashJoin", "SortMergeJoin",
+                     "ShuffledHashJoin") for j in lm_joins), lm_joins
 
 
 def test_assemble_sequences_has_no_unpartitioned_window(spark):
@@ -407,14 +399,10 @@ def test_mixture_sample_broadcasts_rates_no_row_shuffle(spark):
 
 
 def test_hll_grouped_aggregate_is_partial(spark):
-    """The register build must map-side combine (partial_max before the
-    exchange) — the shuffle carries at most groups x 2^p rows."""
-    from amazon_kinesis_replay_spark.operators import sketches
-    from amazon_kinesis_replay_spark.tables import load
-    ev = load(spark, SF, "events").select("event_type", "user_id")
-    regs = sketches.hll_register_table_grouped(ev, "event_type",
-                                               "user_id", 10)
-    p = regs._jdf.queryExecution().executedPlan().toString()
+    """agg_events_by_type's per-event-type register build must map-side
+    combine (partial_max before the exchange) — the shuffle carries at
+    most groups x 2^p rows."""
+    p = _plan(spark, "agg_events_by_type")
     assert "partial_max" in p
 
 
@@ -433,7 +421,7 @@ def test_qhist_build_is_partial_single_scan(spark):
 
 def test_hashed_dsir_models_broadcast_no_row_shuffle(spark):
     """late r8: the <=m-row bucket models must broadcast into the
-    per-doc scoring joins — a sort-merge shuffle of the exploded gram
+    per-doc statistics joins — a sort-merge shuffle of the exploded gram
     rows against a 10k-row model would be the 100 TB incident."""
     from amazon_kinesis_replay_spark.operators import sampling
     from amazon_kinesis_replay_spark.tables import load
@@ -441,8 +429,8 @@ def test_hashed_dsir_models_broadcast_no_row_shuffle(spark):
     target = sampling.dsir_hashed_counts(
         d.filter("doc_id % 2 = 0"), "text")
     raw = sampling.dsir_hashed_counts(d, "text")
-    w = sampling.dsir_hashed_log_weights(d, "doc_id", "text", target, raw)
-    p = w._jdf.queryExecution().executedPlan().toString()
+    st = sampling.dsir_hashed_stats(d, "doc_id", "text", target, raw)
+    p = st._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in p
     # the model joins specifically must not sort-merge the gram rows:
     # AQE may choose SMJ for the final id re-join of two doc-sized

@@ -1,12 +1,11 @@
-"""Deterministic mixture sampling + DSIR importance resampling."""
+"""Deterministic mixture sampling + hashed-DSIR statistics."""
 
 import math
 from collections import Counter
 
-import pytest
 from pyspark.sql import functions as F
 
-from amazon_kinesis_replay_spark.operators import sampling, text
+from amazon_kinesis_replay_spark.operators import sampling
 from amazon_kinesis_replay_spark.tables import load
 
 _M = 2246822519
@@ -93,82 +92,6 @@ def test_deterministic_sample_is_stable(spark, sf_dir):
     assert a <= c
 
 
-def _tiny_corpus(spark):
-    return spark.createDataFrame(
-        [(0, "the cat sat on the mat"),
-         (1, "the dog sat on the rug"),
-         (2, "a completely different sentence here now"),
-         (3, "the cat sat"),
-         (4, "xy")],                       # shorter than n=2 -> NULL path
-        "doc_id long, text string")
-
-
-def _py_bigram_counts(rows):
-    cnt = Counter()
-    for _i, t in rows:
-        w = t.strip().lower().split()
-        for j in range(len(w) - 1):
-            cnt[(w[j], w[j + 1])] += 1
-    return cnt
-
-
-def test_dsir_log_weights_match_python(spark):
-    df = _tiny_corpus(spark)
-    rows = [(r["doc_id"], r["text"]) for r in df.collect()]
-    target = [x for x in rows if x[0] % 2 == 0]
-    t_cnt, r_cnt = _py_bigram_counts(target), _py_bigram_counts(rows)
-    t_ctx = Counter()
-    for (c, _t), n in t_cnt.items():
-        t_ctx[c] += n
-    r_ctx = Counter()
-    for (c, _t), n in r_cnt.items():
-        r_ctx[c] += n
-    v_t = len({t for _c, t in t_cnt})
-    v_r = len({t for _c, t in r_cnt})
-    k = 0.5
-    t_lm = text.ngram_lm_counts(df.filter(F.col("doc_id") % 2 == 0),
-                                "text", n=2)
-    r_lm = text.ngram_lm_counts(df, "text", n=2)
-    got = {r["doc_id"]: r for r in sampling.dsir_log_weights(
-        df, "doc_id", "text", t_lm, r_lm, n=2, k=k).collect()}
-    for did, t in rows:
-        w = t.strip().lower().split()
-        grams = [(w[j], w[j + 1]) for j in range(len(w) - 1)]
-        if not grams:
-            assert got[did]["log_w"] is None
-            continue
-        lw = 0.0
-        for g in grams:
-            lp_t = (math.log(t_cnt.get(g, 0) + k)
-                    - math.log(t_ctx.get(g[0], 0) + k * v_t))
-            lp_r = (math.log(r_cnt.get(g, 0) + k)
-                    - math.log(r_ctx.get(g[0], 0) + k * v_r))
-            lw += lp_t - lp_r
-        assert got[did]["log_w"] == pytest.approx(lw, abs=1e-9)
-
-
-def test_dsir_sample_gumbel_topk(spark):
-    df = _tiny_corpus(spark)
-    t_lm = text.ngram_lm_counts(df.filter(F.col("doc_id") % 2 == 0),
-                                "text", n=2)
-    r_lm = text.ngram_lm_counts(df, "text", n=2)
-    wts = sampling.dsir_log_weights(df, "doc_id", "text", t_lm, r_lm, n=2)
-    picked = sampling.dsir_sample(wts, "doc_id", k=2)
-    rows = {r["doc_id"]: r for r in wts.collect()}
-    keys = {}
-    for did, r in rows.items():
-        if r["log_w"] is None:
-            continue
-        u = ((did * _M) % _PPM + 0.5) / _PPM
-        keys[did] = r["log_w"] + (-math.log(-math.log(u)))
-    expect = sorted(keys, key=lambda d: (-keys[d], d))[:2]
-    got = [r["doc_id"] for r in picked.collect()]
-    assert got == expect
-    # rerun-stable
-    assert [r["doc_id"] for r in
-            sampling.dsir_sample(wts, "doc_id", k=2).collect()] == expect
-
-
 def test_mixture_fractional_weights_and_null_domain(spark):
     """Review-fix pins: a weight in (0,1) scales the share instead of
     silently zeroing the domain, and NULL-domain rows survive the
@@ -188,27 +111,6 @@ def test_mixture_fractional_weights_and_null_domain(spark):
     # expected ratio sqrt(0.25*40)/sqrt(1*40) = 0.5 (same n per domain)
     assert abs(rate_a / rate_b - 0.5) < 0.01
     assert got[200][0] is None                  # null domain, own rate
-
-
-def test_cms_salt_rows_are_independent(spark):
-    """Review-fix pin: with string-concat salting, (row=1, '2x') and
-    (row=12, 'x') hashed identically once d > 10; the multi-column
-    hash must give them different buckets (for these specific values)."""
-    from amazon_kinesis_replay_spark.operators import sketches
-    df = spark.createDataFrame([("2x",), ("x",)], "v string")
-    cells = {(r["row"], r["bucket"]) for r in
-             sketches.cms_table(df, "v", w=1 << 20, d=13).collect()}
-    # reconstruct the two previously-colliding cells
-    by_row = {}
-    for row, bucket in cells:
-        by_row.setdefault(row, set()).add(bucket)
-    # '2x' at row 1 and 'x' at row 12 must occupy DISTINCT cells now:
-    # with the old concat they were guaranteed equal
-    probe = sketches.cms_lookup(
-        sketches.cms_table(df.filter(F.col("v") == "2x"), "v",
-                           w=1 << 20, d=13),
-        df.filter(F.col("v") == "x"), "v", w=1 << 20, d=13)
-    assert probe.head()["est_count"] == 0       # no cross-contamination
 
 
 def _py_hb_buckets(t, m):
@@ -258,10 +160,9 @@ def test_dsir_hashed_buckets_match_python(spark):
     assert {(r["bucket"], r["cnt"]) for r in merged.collect()} == full
 
 
-def test_dsir_hashed_stats_and_log_weights_match_python(spark):
+def test_dsir_hashed_stats_match_python(spark):
     """The exact-integer sufficient statistics (the doc_pii_redact gate
-    columns) and the smoothed log-weights both match an independent
-    python recompute; short/empty-gram docs surface as zeros/NULL."""
+    columns) match an independent python recompute."""
     M = 211
     docs = [(i, t) for i, t in enumerate(
         ["the cat sat on the mat", "a dog ran", "single token run",
@@ -285,54 +186,3 @@ def test_dsir_hashed_stats_and_log_weights_match_python(spark):
             sum(c.values()),
             sum(n * tmod.get(b, 0) for b, n in c.items()),
             sum(n * rmod.get(b, 0) for b, n in c.items())), did
-    lw = {r["doc_id"]: r["log_w"] for r in
-          sampling.dsir_hashed_log_weights(
-              df, "doc_id", "text", target, raw, n_buckets=M).collect()}
-    T, R, k = sum(tmod.values()), sum(rmod.values()), 0.5
-    for did, t in docs:
-        c = Counter(_py_hb_buckets(t, M))
-        w = sum(n * (math.log(tmod.get(b, 0) + k) - math.log(T + k * M)
-                     - math.log(rmod.get(b, 0) + k) + math.log(R + k * M))
-                for b, n in c.items())
-        assert abs(lw[did] - w) < 1e-9, did
-    # a doc whose target-likeness is higher ranks higher in the sample
-    sampled = sampling.dsir_sample(
-        sampling.dsir_hashed_log_weights(df, "doc_id", "text", target,
-                                         raw, n_buckets=M),
-        "doc_id", k=3, log_w_col="log_w")
-    assert sampled.count() == 3
-
-
-def test_dsir_sample_clip_log_w(spark):
-    """Importance-weight clipping: an extreme-weight outlier dominates
-    the unclipped draw; with the cap it competes on Gumbel noise like
-    everything at the ceiling — python twin of the clipped keys."""
-    rows = [(i, float(w)) for i, w in
-            enumerate([100.0, 0.5, 0.4, 0.3, 0.2, 0.1, 0.0, -0.1])]
-    df = spark.createDataFrame(rows, "doc_id long, log_w double")
-    top_unclipped = [r["doc_id"] for r in
-                     sampling.dsir_sample(df, "doc_id", k=3).collect()]
-    assert top_unclipped[0] == 0                     # outlier dominates
-
-    # twin recomputes hash_ppm via the same double-pmod identity
-    from amazon_kinesis_replay_spark.operators.sampling import _PPM
-    def py_hash_ppm(i):
-        return (i % _PPM) * 2246822519 % _PPM
-    def py_top(clip):
-        keyed = []
-        for i, w in rows:
-            u = (py_hash_ppm(i) + 0.5) / _PPM
-            g = -math.log(-math.log(u))
-            keyed.append((min(w, clip), g, i))
-        keyed.sort(key=lambda t: (-(t[0] + t[1]), t[2]))
-        return [i for _w, _g, i in keyed[:3]]
-
-    got = [r["doc_id"] for r in
-           sampling.dsir_sample(df, "doc_id", k=3,
-                                clip_log_w=0.45).collect()]
-    assert got == py_top(0.45)
-    # clip=None is byte-identical to the original behavior
-    again = [r["doc_id"] for r in
-             sampling.dsir_sample(df, "doc_id", k=3,
-                                  clip_log_w=None).collect()]
-    assert again == top_unclipped

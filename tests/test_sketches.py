@@ -1,5 +1,6 @@
-"""HLL / Count-Min sketch tables: register-exactness vs the pure-python
-hash twin, estimator accuracy, and merge algebra."""
+"""Sketch tables: HLL register coordinates, Bloom filters and quantile
+histograms — exactness vs pure-python twins, accuracy, and merge
+algebra."""
 
 from pyspark.sql import functions as F
 
@@ -24,94 +25,18 @@ def _py_registers(values, p):
 
 
 def test_hll_registers_match_python(spark, sf_dir):
+    """The (bucket, rho) expressions agg_events_by_type folds into its
+    per-event-type register statistics, max-reduced per bucket, equal
+    the pure-python register twin."""
     p = 10
-    ev = load(spark, sf_dir, "events").select("user_id")
+    ev = load(spark, sf_dir, "events").select("user_id") \
+        .filter(F.col("user_id").isNotNull())
+    bucket, rho = sketches._hll_bucket_rho_sql("user_id", p)
     got = {r["bucket"]: r["max_rho"] for r in
-           sketches.hll_register_table(ev, "user_id", p).collect()}
+           ev.selectExpr(f"{bucket} AS bucket", f"{rho} AS rho")
+           .groupBy("bucket").agg(F.max("rho").alias("max_rho")).collect()}
     vals = [r["user_id"] for r in ev.collect()]
     assert got == _py_registers(vals, p)
-
-
-def test_hll_estimate_accuracy_and_merge(spark, sf_dir):
-    p = 12
-    ev = load(spark, sf_dir, "events").select("user_id")
-    exact = ev.distinct().count()
-    regs = sketches.hll_register_table(ev, "user_id", p)
-    est = sketches.hll_estimate(regs, p)
-    assert abs(est - exact) / exact < 0.05
-    # merge algebra: per-batch sketches union to the full sketch exactly
-    b1 = ev.filter(F.col("user_id") % 2 == 0)
-    b2 = ev.filter(F.col("user_id") % 2 == 1)
-    merged = sketches.hll_merge(
-        sketches.hll_register_table(b1, "user_id", p),
-        sketches.hll_register_table(b2, "user_id", p))
-    full = {(r["bucket"], r["max_rho"]) for r in regs.collect()}
-    assert {(r["bucket"], r["max_rho"]) for r in merged.collect()} == full
-    # idempotent: re-merging the same table changes nothing
-    again = sketches.hll_merge(regs, regs)
-    assert {(r["bucket"], r["max_rho"]) for r in again.collect()} == full
-
-
-def test_cms_overestimates_and_merges(spark, sf_dir):
-    ev = load(spark, sf_dir, "events").select("event_type")
-    truth = {r["event_type"]: r["n"] for r in
-             ev.groupBy("event_type").agg(F.count("*").alias("n"))
-             .collect()}
-    cms = sketches.cms_table(ev, "event_type", w=512, d=4)
-    est = {r["item"]: r["est_count"] for r in
-           sketches.cms_lookup(cms, ev.select("event_type").distinct(),
-                               "event_type", w=512, d=4).collect()}
-    n_total = sum(truth.values())
-    for k, true_n in truth.items():
-        assert est[k] >= true_n                      # overestimate-only
-        assert est[k] - true_n <= 0.05 * n_total     # loose eps bound
-    # additive merge: batch tables sum to the full table cell-for-cell
-    b1 = ev.filter(F.col("event_type") < "m")
-    b2 = ev.filter(F.col("event_type") >= "m")
-    merged = sketches.cms_merge(
-        sketches.cms_table(b1, "event_type", w=512, d=4),
-        sketches.cms_table(b2, "event_type", w=512, d=4))
-    full = {(r["row"], r["bucket"]): r["cnt"] for r in cms.collect()}
-    got = {(r["row"], r["bucket"]): r["cnt"] for r in merged.collect()}
-    assert got == full
-
-
-def test_hll_grouped_registers_estimate_and_merge(spark, sf_dir):
-    """Per-group registers equal per-group recomputes of the global
-    builder; the column-expressed estimator tracks exact distincts;
-    grouped merge of batch tables equals the full table."""
-    p = 10
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-    regs = sketches.hll_register_table_grouped(ev, "event_type",
-                                               "user_id", p)
-    groups = [r["event_type"] for r in
-              ev.select("event_type").distinct().collect()]
-    for g in groups[:2]:
-        solo = {(r["bucket"], r["max_rho"]) for r in
-                sketches.hll_register_table(
-                    ev.filter(F.col("event_type") == g), "user_id", p)
-                .collect()}
-        sub = {(r["bucket"], r["max_rho"]) for r in
-               regs.filter(F.col("event_type") == g)
-               .select("bucket", "max_rho").collect()}
-        assert sub == solo
-    est = {r["event_type"]: r["n_distinct_est"] for r in
-           sketches.hll_estimate_grouped(regs, "event_type", p).collect()}
-    exact = {r["event_type"]: r["n"] for r in
-             ev.groupBy("event_type")
-             .agg(F.countDistinct("user_id").alias("n")).collect()}
-    for g, n in exact.items():
-        assert abs(est[g] - n) / n < 0.1       # p=10: ~3.2% typical
-    b1 = ev.filter(F.col("user_id") % 2 == 0)
-    b2 = ev.filter(F.col("user_id") % 2 == 1)
-    merged = sketches.hll_merge_grouped(
-        "event_type",
-        sketches.hll_register_table_grouped(b1, "event_type", "user_id", p),
-        sketches.hll_register_table_grouped(b2, "event_type", "user_id", p))
-    full = {(r["event_type"], r["bucket"], r["max_rho"])
-            for r in regs.collect()}
-    assert {(r["event_type"], r["bucket"], r["max_rho"])
-            for r in merged.collect()} == full
 
 
 def test_bloom_no_false_negatives_and_merge(spark, sf_dir):
@@ -198,14 +123,13 @@ def test_qhist_buckets_match_python_twin(spark, sf_dir):
     assert re == got
 
 
-def test_qhist_quantiles_accuracy_merge_and_grouped(spark, sf_dir):
+def test_qhist_quantiles_accuracy_and_merge(spark, sf_dir):
     """Quantile estimates vs exact order statistics: relative error must
     be <= 2^-(sig_bits+1) (values < 2^sig_bits are exact); batch merge ==
-    full build cell-for-cell; the grouped variant equals per-group full
-    builds; negative input raises."""
+    full build cell-for-cell; negative input raises."""
     import pytest
     S = 7
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id")
+    ev = load(spark, sf_dir, "events").select("user_id")
     qh = sketches.qhist_table(ev, "user_id", sig_bits=S)
     vals = sorted(int(r["user_id"]) for r in ev.collect())
     n = len(vals)
@@ -228,56 +152,7 @@ def test_qhist_quantiles_accuracy_merge_and_grouped(spark, sf_dir):
         sketches.qhist_table(b2, "user_id", sig_bits=S))
     full = {(r["bucket"], r["cnt"]) for r in qh.collect()}
     assert {(r["bucket"], r["cnt"]) for r in merged.collect()} == full
-    # grouped == per-group full builds; grouped quantiles track exact
-    grouped = sketches.qhist_table_grouped(ev, "event_type", "user_id",
-                                           sig_bits=S)
-    groups = [r["event_type"] for r in
-              ev.select("event_type").distinct().collect()]
-    g = sorted(groups)[0]
-    solo = {(r["bucket"], r["cnt"]) for r in
-            sketches.qhist_table(ev.filter(F.col("event_type") == g),
-                                 "user_id", sig_bits=S).collect()}
-    sub = {(r["bucket"], r["cnt"]) for r in
-           grouped.filter(F.col("event_type") == g)
-           .select("bucket", "cnt").collect()}
-    assert sub == solo
-    gq = {(r["event_type"], r["prob"]): r["value_est"] for r in
-          sketches.qhist_quantiles_grouped(grouped, "event_type", [0.5],
-                                           sig_bits=S).collect()}
-    import math as _m
-    for grp in groups:
-        gv = sorted(int(r["user_id"]) for r in
-                    ev.filter(F.col("event_type") == grp).collect())
-        true = gv[max(_m.ceil(0.5 * len(gv)), 1) - 1]
-        est = gq[(grp, 0.5)]
-        if true == 0:
-            assert est == 0.0
-        else:
-            assert abs(est - true) / true <= 2 ** -(S + 1), (grp, est, true)
     # negative values refuse loudly (domain contract)
     neg = spark.createDataFrame([(-1,)], "v long")
     with pytest.raises(Exception, match="negative"):
         sketches.qhist_table(neg, "v", sig_bits=S).collect()
-
-
-def test_cms_cells_match_python_twin(spark, sf_dir):
-    """r8: the CMS salt hashes as LONG (matching bloom_table), so every
-    cell is recomputable pure-python via the chained xxh64 twin — the
-    property that makes the sketch hash-gate-checkable. Full table
-    bit-for-bit."""
-    from amazon_kinesis_replay_spark.functions.xxh import (
-        xxh64_long, xxh64_string)
-    ev = load(spark, sf_dir, "events").select("event_type")
-    W, D = 512, 5
-    got = {(r["row"], r["bucket"]): r["cnt"] for r in
-           sketches.cms_table(ev, "event_type", w=W, d=D).collect()}
-    mask = (1 << 64) - 1
-    seeds = [xxh64_long(i) & mask for i in range(D)]
-    want: dict = {}
-    for (v,) in ev.collect():
-        if v is None:
-            continue
-        for i, s in enumerate(seeds):
-            cell = (i, xxh64_string(str(v), seed=s) % W)
-            want[cell] = want.get(cell, 0) + 1
-    assert got == want

@@ -11,6 +11,10 @@ Measures, against EXACT ground truth at a small SF:
   verify step to discard).
 - Embedding sign-LSH banding: recall of banded candidates vs the exact
   all-pairs cosine>=t set for (n_bands, band_bits) splits of the 64 dims.
+- ANN top-k: recall@10 and wall time of the sign-LSH (single- and
+  multi-probe) and IVF tiers vs brute force, over three queries.
+- SemDeDup: cluster confinement and per-epsilon dup recall of the
+  clustered marking (flat and n_assign=2) vs one all-pairs cluster.
 
 Usage: python tools/recall_probe.py [sf_dir]
 """
@@ -114,8 +118,6 @@ def main():
              for qid, qdf in qdfs}
 
     cents = S.kmeans_centroids(full, n_centroids=8, n_iters=2)
-    cb = S.pq_train(full, n_subs=8, n_codes=16, n_iters=2)
-    codes = S.pq_encode(full, cb)
 
     variants = {
         "lsh(4bit)": lambda qdf: S.lsh_topk(full, qdf, k=10),
@@ -133,14 +135,6 @@ def main():
                                                   n_probe=8, max_flip=2),
         "ivf(8c,2p)": lambda qdf: S.ivf_topk(full, qdf, k=10, n_centroids=8,
                                              n_probe=2, centroids=cents),
-        "pq(8x16,r4)": lambda qdf: S.pq_topk(full, qdf, k=10, codebooks=cb,
-                                             codes=codes),
-        # SQ8 (r8 3rd continuation): full scan of 1/4-width codes +
-        # exact rescore — recall should sit at ~1.0 (8-bit codes rank
-        # tightly); the lever is bytes-per-row, not rows scanned
-        "sq8(r2)": lambda qdf: S.sq8_topk(full, qdf, k=10,
-                                          rerank_factor=2),
-        "sq8(r4)": lambda qdf: S.sq8_topk(full, qdf, k=10),
     }
     print(f"ANN recall@10 over queries {queries} ({sf_dir}):", flush=True)
     for name, fn in variants.items():

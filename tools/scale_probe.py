@@ -20,24 +20,16 @@ near-linear curve is the evidence the plans have no quadratic term:
                    (k ∝ n makes flat O(n²) — measured r8): hierarchical
                    centroids cost O(n·√k) to train AND assign, so the
                    same k-∝-corpus growth costs ~mult^1.5, not mult²
-- mixture_dsir   : domain-count groupBy + broadcast rate join, then the
-                   DSIR LM join shape + Gumbel-top-k (vs any per-domain
-                   driver loop or corpus-scale weight sort)
-- sketches       : grouped-HLL register build + Count-Min counters —
-                   map-side-combinable groupBys whose outputs are
-                   SKETCH-sized, not data-sized
-- hashed_dsir    : the paper-form hashed-bucket DSIR — explode ->
-                   bucket groupBy -> two broadcast model joins ->
-                   per-doc agg + Gumbel top-k (vs any per-doc model
-                   lookup loop or corpus-scale weight sort)
-- qhist          : quantile-histogram build (global + grouped) +
-                   grouped quantile extraction — one scan, sketch-sized
-                   outputs, window only over the tiny bucket table
+- mixture        : domain-count groupBy + broadcast rate join (vs any
+                   per-domain driver loop)
+- qhist          : quantile-histogram build — one scan, sketch-sized
+                   output
 - bm25           : inverted-index build (explode -> combinable groupBy)
-                   + one query whose work is ~ matched postings (vs any
-                   corpus-rescan per query)
-- zorder         : z-order layout write — one range shuffle + sorted
-                   write, cost tracks rows (vs a global sort barrier)
+- asof           : as-of join — union + one keyed window
+- gapfill        : minute aggregate + dense-spine gap fill
+- suffix_sa      : prefix-doubling suffix ranks (log factor constant in
+                   corpus size)
+- media          : Arrow-batched image/audio decode — no shuffle at all
 
 Usage: python tools/scale_probe.py [sf_dir] [family ...]
 
@@ -50,9 +42,7 @@ mult^2) demonstrate linearity.
 from __future__ import annotations
 
 import json
-import shutil
 import sys
-import tempfile
 import time
 from pathlib import Path
 
@@ -117,8 +107,7 @@ def main():
     from pyspark.sql import functions as F
 
     from amazon_kinesis_replay_spark.operators import (
-        dedup, intervals, layout, retrieval, sampling, similarity,
-        sketches, text)
+        dedup, intervals, retrieval, sampling, similarity, sketches, text)
     from amazon_kinesis_replay_spark.session import build_spark
     from amazon_kinesis_replay_spark.tables import load
 
@@ -190,57 +179,17 @@ def main():
         dups = out.filter("is_dup").count()
         return f"{n} vecs -> {dups} dups ({side}x{side} leaf cells)"
 
-    def run_mixture_dsir(mult):
+    def run_mixture(mult):
         corpus = _expand_docs(docs, mult).withColumn(
             "dom", F.pmod(F.col("doc_id"), F.lit(8)).cast("string"))
         n = corpus.count()
         kept = (sampling.mixture_sample(corpus, "doc_id", "dom")
                 .filter("mix_kept").count())
-        target_lm = text.ngram_lm_counts(corpus.filter("dom = '0'"),
-                                         "text", n=2)
-        raw_lm = text.ngram_lm_counts(corpus, "text", n=2)
-        w = sampling.dsir_log_weights(corpus, "doc_id", "text",
-                                      target_lm, raw_lm, n=2)
-        sampled = sampling.dsir_sample(w, "doc_id",
-                                       k=max(50, n // 10)).count()
-        return f"{n} docs -> {kept} mixture-kept, {sampled} DSIR-sampled"
-
-    def run_sketches(mult):
-        parts = [events]
-        for i in range(1, mult):
-            parts.append(events.select(
-                "event_type",
-                (F.col("user_id") + 1_000_000_000 * i).alias("user_id")))
-        corpus = parts[0]
-        for p in parts[1:]:
-            corpus = corpus.unionAll(p)
-        n = corpus.count()
-        regs = (sketches.hll_register_table_grouped(
-            corpus.filter(F.col("user_id").isNotNull()),
-            "event_type", "user_id", p=12).count())
-        cells = sketches.cms_table(corpus, "user_id").count()
-        return f"{n} events -> {regs} HLL registers, {cells} CMS cells"
-
-    def run_hashed_dsir(mult):
-        # late r8: the hashed-bucket DSIR formulation — explode grams
-        # -> pmod(xxhash64) buckets -> <=m-row models -> two broadcast
-        # joins + per-doc agg; any super-linear bend would mean the
-        # model join stopped broadcasting or the explode re-evaluated
-        corpus = _expand_docs(docs, mult)
-        n = corpus.count()
-        target = sampling.dsir_hashed_counts(
-            corpus.filter(F.col("doc_id") % 8 == 0), "text")
-        raw = sampling.dsir_hashed_counts(corpus, "text")
-        w = sampling.dsir_hashed_log_weights(
-            corpus, "doc_id", "text", target, raw)
-        sampled = sampling.dsir_sample(w, "doc_id",
-                                       k=max(50, n // 10)).count()
-        return f"{n} docs -> {sampled} hashed-DSIR-sampled"
+        return f"{n} docs -> {kept} mixture-kept"
 
     def run_qhist(mult):
-        # late r8: quantile-histogram build + grouped build + quantile
-        # extraction; output is SKETCH-sized so the curve must track the
-        # one corpus scan
+        # late r8: quantile-histogram build; output is SKETCH-sized so
+        # the curve must track the one corpus scan
         parts = [events]
         for i in range(1, mult):
             parts.append(events.select(
@@ -251,42 +200,16 @@ def main():
             corpus = corpus.unionAll(p)
         corpus = corpus.filter(F.col("user_id").isNotNull())
         n = corpus.count()
-        qh = sketches.qhist_table(corpus, "user_id")
-        buckets = qh.count()
-        grouped = sketches.qhist_table_grouped(
-            corpus, "event_type", "user_id")
-        g_quant = sketches.qhist_quantiles_grouped(
-            grouped, "event_type", [0.5, 0.99]).count()
-        return f"{n} events -> {buckets} buckets, {g_quant} group-quantiles"
+        buckets = sketches.qhist_table(corpus, "user_id").count()
+        return f"{n} events -> {buckets} buckets"
 
     def run_bm25(mult):
         # late r8: inverted-index build (the retrieval family's corpus-
-        # scale pass: explode -> combinable groupBy) + a query. The
-        # query leg must stay FLAT (work ~ matched postings, and this
-        # query's match count is constant under id-shifted expansion of
-        # the df denominator only); the index build tracks the scan.
+        # scale pass: explode -> combinable groupBy); tracks the scan
         corpus = _expand_docs(docs, mult)
         n = corpus.count()
-        post = retrieval.postings(corpus, "doc_id", "text")
-        n_post = post.count()
-        hits = retrieval.bm25_topk(corpus, "the model data", k=10).count()
-        return f"{n} docs -> {n_post} postings, {hits} hits"
-
-    def run_zorder(mult):
-        # late r8: z-order layout write — one range shuffle + sorted
-        # write; cost must track rows (no global sort barrier)
-        import os
-        corpus = _expand_docs(docs, mult).select(
-            "doc_id", F.length("text").alias("L"))
-        n = corpus.count()
-        out = os.path.join(tempfile.mkdtemp(prefix="zorder-probe-"), "t")
-        q = [layout.quantize(F.col("doc_id"), 0, 11_000_000, bits=8),
-             layout.quantize(F.col("L"), 0, 4096, bits=8)]
-        layout.layout_zorder(corpus, q, bits=8,
-                             n_partitions=16).write.parquet(out)
-        wrote = spark.read.parquet(out).count()
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
-        return f"{n} rows -> {wrote} written z-ordered"
+        n_post = retrieval.postings(corpus, "doc_id", "text").count()
+        return f"{n} docs -> {n_post} postings"
 
     def _expand_events_full(mult, shift_interval=None):
         ev = load(spark, sf_dir, "events").select(
@@ -318,16 +241,6 @@ def main():
                                        by="user_id", value_cols=[])
                    .filter(F.col("asof_ts").isNotNull()).count())
         return f"{n} events -> {matched} matched purchases"
-
-    def run_sq8(mult):
-        # 3rd continuation: SQ8 encode + asymmetric-score + rescore —
-        # one codes scan + TakeOrderedAndProject; must track rows
-        corpus = _expand_emb(emb, mult)
-        n = corpus.count()
-        q = (emb.orderBy("vec_id").limit(1)
-             .select(F.col("embedding").alias("q_vec")))
-        top = similarity.sq8_topk(corpus, q, k=10).count()
-        return f"{n} vecs -> top-{top}"
 
     def run_suffix_sa(mult):
         # 3rd continuation: prefix-doubling suffix ranks — ceil(log2 L)
@@ -375,18 +288,14 @@ def main():
         ("media", run_media),
         ("minhash", run_minhash),
         ("bm25", run_bm25),
-        ("zorder", run_zorder),
-        ("hashed_dsir", run_hashed_dsir),
         ("qhist", run_qhist),
         ("semdedup", run_semdedup),
         ("semdedup_2l", run_semdedup_2l),
-        ("mixture_dsir", run_mixture_dsir),
-        ("sketches", run_sketches),
+        ("mixture", run_mixture),
         ("contamination", run_contamination),
         ("embedding_dedup", run_embedding),
         ("packing", run_packing),
         ("asof", run_asof),
-        ("sq8", run_sq8),
         ("gapfill", run_gapfill),
         ("suffix_sa", run_suffix_sa),
     ]
