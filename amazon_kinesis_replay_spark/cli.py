@@ -60,14 +60,9 @@ def build_parser() -> argparse.ArgumentParser:
                         "with a bounded buffer of -readerBufferSize rows "
                         "(the reference's always-on 100k-event priority "
                         "queue); beyond-window stragglers emit late, "
-                        "never drop. Partitioned mode also needs "
-                        "--reorder-state-path. Driver mode holds the "
-                        "buffer in memory only: a restart from the "
-                        "checkpoint loses the rows held from committed "
-                        "batches")
-    p.add_argument("--reorder-state-path", default=None,
-                   help="durable held-state dir for the partitioned-mode "
-                        "reorder gate (parquet epochs with commit markers)")
+                        "never drop. The held rows live durably in "
+                        "<--checkpoint>/reorder-state, so a restart from "
+                        "the checkpoint still emits them")
     p.add_argument("--codec", choices=["text", "sniff"], default="text",
                    help="'text' = extension-dispatched Hadoop codecs (fast "
                         "JVM path, .gz/.bz2); 'sniff' = content-sniffed "
@@ -98,7 +93,9 @@ def config_from_args(args: argparse.Namespace) -> ReplayConfig:
         sender_threads=args.kinesisSenderThreads,
         driver_mode_max_rows=args.driver_mode_max_rows,
         reorder_across_batches=args.reorder_across_batches,
-        reorder_state_path=args.reorder_state_path,
+        # inside the checkpoint: the gate's epochs are keyed by its batch
+        # ids, so a fresh checkpoint must never meet an old state dir
+        reorder_state_path=f"{args.checkpoint.rstrip('/')}/reorder-state",
     )
 
 
@@ -135,7 +132,7 @@ def main(argv: list[str] | None = None) -> int:
         mode=args.mode)
     query = run_replay_stream(events, engine, args.checkpoint)
     query.awaitTermination()
-    engine.finalize()         # drain the reorder buffer (no-op when off)
+    engine.finalize()         # drain the reorder gate's tail (no-op when off)
     s = engine.stats
     print(f"replayed {s.total_events} events in {s.batches} micro-batches; "
           f"sink requests={s.sink.requests} retried={s.sink.retried_records}")

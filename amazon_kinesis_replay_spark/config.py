@@ -36,26 +36,21 @@ class ReplayConfig:
     # -- buffering / parallelism (OP-SORT-EVENTTIME / OP-FLOW-*) -------------
     reader_buffer_size: int = 100_000          # RePlayer.java:26
     sender_threads: int = 4                    # RePlayer.java:28
-    #: r8: opt-in driver-mode mirror of the reference's 100k-event
-    #: reorder PRIORITY QUEUE (JsonEventBufferedReader.java:39): hold the
-    #: last `reader_buffer_size` rows of the merged ts-sorted stream
+    #: Opt-in mirror of the reference's 100k-event reorder PRIORITY
+    #: QUEUE (JsonEventBufferedReader.java:39), in both replay modes:
+    #: hold the ts-largest `reader_buffer_size` rows of the merged stream
     #: across micro-batches so bounded disorder is repaired ACROSS
     #: batches, not just within one; disorder beyond the window emits
     #: late rather than dropping. Call `engine.finalize()` after a
     #: finite stream to drain the tail. Off by default: per-batch
     #: sorting (the Structured-Streaming-idiomatic shape) emits every
-    #: batch eagerly and needs no drain step. Known defect: the
-    #: driver-mode buffer lives only in memory, so a stream restarted
-    #: from its checkpoint never emits the up to `reader_buffer_size`
-    #: rows held from already-committed batches — NOT at-least-once
-    #: (docs/DEVIATIONS.md item 3). Partitioned mode's durable gate
-    #: does not lose them.
+    #: batch eagerly and needs no drain step. Needs reorder_state_path.
     reorder_across_batches: bool = False
-    #: late r8: durable held-state directory that carries the reorder
-    #: buffer into PARTITIONED mode (the scale path). Driver mode keeps
-    #: its in-memory pandas buffer and ignores this; partitioned mode
-    #: REQUIRES it when reorder_across_batches is set — the held tail
-    #: (at least reader_buffer_size rows) lives as parquet under
+    #: Durable held-state directory of the reorder gate, REQUIRED when
+    #: reorder_across_batches is set (the CLI puts it inside the
+    #: checkpoint, `<checkpoint>/reorder-state`, since its epochs are
+    #: keyed by the checkpoint's batch ids). The held tail (at least
+    #: reader_buffer_size rows) lives as parquet under
     #: held/gen=<batch_id>, and an epoch is applied once its commit
     #: marker file exists (written last, like fsutil.gen_commit), so a
     #: redelivered micro-batch either skips or recomputes from the
@@ -87,3 +82,11 @@ class ReplayConfig:
             value = getattr(self, name)
             if not value > 0:
                 raise ValueError(f"{name} must be > 0, got {value!r}")
+        # silently ignoring the flag would let a user believe cross-batch
+        # disorder is being repaired; an in-memory buffer would lose its
+        # held rows on a restart from the checkpoint
+        if self.reorder_across_batches and not self.reorder_state_path:
+            raise ValueError(
+                "reorder_across_batches needs reorder_state_path= (the "
+                "durable held-state directory of the reorder gate); set "
+                "it, or drop the flag")

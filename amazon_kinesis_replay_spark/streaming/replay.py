@@ -13,7 +13,8 @@ This is the inherently-streaming part of the reference (SURVEY §7.3 M4):
 - OP-AGG-WINDOWCOUNT/-MAXWM/-LAG  RePlayer.java:145-162 — live statistics
 
 Two emission modes, one emission kernel (`_pace_and_send`: pacing,
-request batching, per-request stats):
+request batching, per-request stats) and one opt-in cross-batch reorder
+gate (`_process_gated`, its state durable in `reorder_state_path`):
 
 - ``driver``      — exact single-stream pacing, mirroring the reference's
                     sequential replay loop (its consumer thread IS single-
@@ -199,25 +200,12 @@ class ReplayEngine:
     def __init__(self, cfg: ReplayConfig, sink, mode: str = "driver"):
         if mode not in ("driver", "partitioned"):
             raise ValueError(f"unknown replay mode {mode!r}")
-        if (cfg.reorder_across_batches and mode != "driver"
-                and not cfg.reorder_state_path):
-            # silently ignoring the flag would let a user believe
-            # cross-batch disorder is being repaired while partitioned
-            # mode only sorts within partitions (r8 review finding).
-            # Late r8: partitioned mode CAN reorder — via the durable
-            # distributed gate — but it needs a state directory.
-            raise ValueError(
-                "reorder_across_batches in partitioned mode needs "
-                "reorder_state_path= (a durable held-state directory "
-                "for the distributed gate); set it, or run "
-                "mode='driver' (in-memory buffer), or drop the flag")
         self.cfg = cfg
         self.sink = sink
         self.mode = mode
         self.stats = ReplayStats()
         self._first_event_ts = None        # event-time anchor
         self._ingestion_start = None       # wall-clock anchor, time.time()
-        self._held = None                  # cross-batch reorder buffer (pdf)
         self._spark = None                 # session of the last gated batch
 
     # -- anchor management (OP-PROJ-INGEST) --------------------------------
@@ -254,13 +242,19 @@ class ReplayEngine:
         self.process_batch(batch_df, batch_id)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int):
-        if self.mode == "driver":
-            self._process_driver(batch_df)
-        elif self.cfg.reorder_across_batches:
-            self._process_partitioned_reordered(batch_df, batch_id)
+        if self.cfg.reorder_across_batches:
+            self._process_gated(batch_df, batch_id)
         else:
-            self._process_partitioned(batch_df)
+            self._emit_frame(batch_df)
         self.stats.batches += 1
+
+    def _emit_frame(self, df: DataFrame):
+        """Pace one (payload, ts) frame into the sink with the mode's
+        emitter."""
+        if self.mode == "driver":
+            self._process_driver(df)
+        else:
+            self._process_partitioned(df)
 
     # -- driver mode: exact global-order pacing ------------------------------
 
@@ -289,60 +283,13 @@ class ReplayEngine:
                 "collect()ed onto the driver. Use mode='partitioned' "
                 "(per-sender pacing, executor-side sinks) or raise "
                 "driver_mode_max_rows explicitly.")
-        if self.cfg.reorder_across_batches:
-            pdf = self._reorder_gate(pdf)
-        if pdf.empty:
+        if pdf.empty or not self._ensure_anchor(lambda: pdf["ts"].min()):
             return
-        self._emit_pdf(pdf)
+        n = _pace_and_send([pdf], self.sink, self.cfg, self._first_event_ts,
+                           self._ingestion_start, self.stats)
+        self.stats.tick(n, time.time(), self.cfg.statistics_frequency_ms)
 
-    def _reorder_gate(self, pdf):
-        """Row-count-bounded cross-batch reorder buffer — the reference's
-        100k-event priority queue (JsonEventBufferedReader.java:39,
-        RePlayer.java:26) at micro-batch granularity: hold back the
-        LAST `reader_buffer_size` rows of the merged (held + batch)
-        ts-sorted stream and emit the prefix. An event is emitted only
-        once `reader_buffer_size` later-or-equal events have been seen —
-        exactly the priority queue's poll-when-full rule — so any
-        disorder within that window is repaired ACROSS micro-batches
-        (per-batch sorting alone cannot), and disorder beyond it is
-        emitted late rather than dropped (the watermark-based stateful
-        ops drop instead; docs/DEVIATIONS.md item 3). Call `finalize()`
-        after the stream terminates to drain the tail."""
-        import pandas as pd
-        bound = max(1, self.cfg.reader_buffer_size)
-        combined = (pd.concat([self._held, pdf], ignore_index=True)
-                    if self._held is not None else pdf)
-        # mergesort = stable: equal-ts rows keep arrival order, matching
-        # the reference's insertion-ordered tie behavior
-        combined = combined.sort_values("ts", kind="mergesort",
-                                        ignore_index=True)
-        if len(combined) <= bound:
-            self._held = combined
-            return combined.iloc[0:0]
-        split = len(combined) - bound
-        self._held = combined.iloc[split:].reset_index(drop=True)
-        return combined.iloc[:split].reset_index(drop=True)
-
-    def finalize(self):
-        """Drain the cross-batch reorder buffer — the reference drains
-        its priority queue when the S3 iterator is exhausted; a finite
-        (availableNow) stream calls this after awaitTermination.
-        Partitioned mode drains the durable held state and then deletes
-        the state directory (the stream is over); a crash between the
-        drain emit and the delete redelivers on the next finalize —
-        at-least-once, like every sink path here. It reads the state
-        with the session of the last `process_batch`, else the active
-        session (a restart with no new input runs no batch), and raises
-        when there is neither."""
-        if self.mode == "partitioned":
-            self._finalize_partitioned()
-            return
-        held, self._held = self._held, None
-        if held is None or held.empty:
-            return
-        self._emit_pdf(held)
-
-    # -- partitioned-mode distributed reorder gate (late r8) ----------------
+    # -- the durable cross-batch reorder gate (both modes) -------------------
 
     #: Schema of the held state, given explicitly so reading an epoch
     #: needs no schema-inference job.
@@ -362,24 +309,26 @@ class ReplayEngine:
                 "delete it to start the gate empty")
         return root
 
-    def _process_partitioned_reordered(self, batch_df: DataFrame,
-                                       batch_id: int):
-        """Distributed twin of `_reorder_gate` — the reference's bounded
-        priority queue (JsonEventBufferedReader.java:39) carried into the
-        scale path: hold back the ts-LARGEST `reader_buffer_size` rows of
-        (held ∪ batch) as durable parquet and hand only the older prefix
-        to the per-sender pacing stage. A row is emitted only once at
-        least `reader_buffer_size` later-or-equal rows exist — the
-        poll-when-full rule — so disorder within the window is repaired
-        across micro-batches and disorder beyond it emits late, never
-        drops. Held rows whose targets are still in the future lose
-        nothing: pacing, not arrival, schedules their emission.
+    def _process_gated(self, batch_df: DataFrame, batch_id: int):
+        """The reference's bounded priority queue
+        (JsonEventBufferedReader.java:39, RePlayer.java:26) at
+        micro-batch granularity, for both modes: hold back the ts-LARGEST
+        `reader_buffer_size` rows of (held ∪ batch) as durable parquet
+        and hand only the older prefix to the mode's emitter. A row is
+        emitted only once at least `reader_buffer_size` later-or-equal
+        rows exist — the poll-when-full rule — so disorder within the
+        window is repaired across micro-batches (per-batch sorting alone
+        cannot) and disorder beyond it emits late, never drops. Held rows
+        whose targets are still in the future lose nothing: pacing, not
+        arrival, schedules their emission. Call `finalize()` after the
+        stream terminates to drain the tail.
 
-        Differences from the driver-mode gate, by design:
         - the split is by ts VALUE (cutoff = the bound-th largest ts),
           not row count: a row-count split of a distributed frame is
           nondeterministic under ties, a ts cutoff is not. Ties at the
-          cutoff ride the buffer (window >= bound rows, never < bound).
+          cutoff ride the buffer (window >= bound rows, never < bound);
+          equal-ts rows lose their arrival order, for which the
+          reference's PriorityBlockingQueue makes no promise either.
         - state is one parquet epoch per batch, held/gen=<batch_id>, and
           an epoch is APPLIED iff it holds the generation commit marker
           (`fsutil.gen_commit`), written after both the emit and the
@@ -387,9 +336,11 @@ class ReplayEngine:
           epoch is committed: state and emit already done) or recomputes
           bit-identically from the previous committed epoch and
           overwrites its own uncommitted one. The marker and the state
-          share one directory, so they cannot disagree. Sink emission
-          stays at-least-once (a crash between emit and commit re-emits),
-          the same contract as send_with_retry.
+          share one directory, so they cannot disagree, and a restart
+          from the stream's checkpoint finds the rows held from its
+          committed batches. Sink emission stays at-least-once (a crash
+          between emit and commit re-emits), the same contract as
+          send_with_retry.
         """
         from .. import fsutil
         spark = self._spark = batch_df.sparkSession
@@ -424,13 +375,22 @@ class ReplayEngine:
         out = fsutil.gen_path(held_root, batch_id)
         held.write.mode("overwrite").parquet(out)
         if emit is not None:
-            self._process_partitioned(emit)
+            self._emit_frame(emit)
         fsutil.gen_commit(spark, out)
         fsutil.gen_gc(spark, held_root)
 
-    def _finalize_partitioned(self):
-        if not (self.cfg.reorder_across_batches
-                and self.cfg.reorder_state_path):
+    def finalize(self):
+        """Drain the reorder gate — the reference drains its priority
+        queue when the S3 iterator is exhausted; a finite (availableNow)
+        stream calls this after awaitTermination. Emits the committed
+        held tail through the mode's emitter and then deletes the state
+        directory (the stream is over); a crash between the drain emit
+        and the delete redelivers on the next finalize — at-least-once,
+        like every sink path here. It reads the state with the session
+        of the last `process_batch`, else the active session (a restart
+        with no new input runs no batch), and raises when there is
+        neither. A no-op without `reorder_across_batches`."""
+        if not self.cfg.reorder_across_batches:
             return
         from pyspark.sql import SparkSession
 
@@ -440,22 +400,15 @@ class ReplayEngine:
         spark = self._spark or SparkSession.getActiveSession()
         if spark is None:
             raise RuntimeError(
-                "finalize() drains the partitioned reorder state with the "
+                "finalize() drains the reorder state with the "
                 "SparkSession of the last process_batch or the active one; "
                 "no batch has run on this engine and no session is active")
         root = self._state_root(spark)
         _, tail = fsutil.gen_latest(spark, root + "/held")
         if tail is not None:
-            self._process_partitioned(
+            self._emit_frame(
                 spark.read.schema(self._HELD_SCHEMA).parquet(tail))
         fsutil.delete(spark, root)        # stream over: clear the state
-
-    def _emit_pdf(self, pdf):
-        if not self._ensure_anchor(lambda: pdf["ts"].min()):
-            return
-        n = _pace_and_send([pdf], self.sink, self.cfg, self._first_event_ts,
-                           self._ingestion_start, self.stats)
-        self.stats.tick(n, time.time(), self.cfg.statistics_frequency_ms)
 
     # -- partitioned mode: per-sender pacing at scale ------------------------
 

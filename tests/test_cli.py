@@ -27,12 +27,19 @@ def test_reference_defaults_parity():
 
 
 def test_reorder_flag_maps_to_config():
+    """The gate's state lives inside the checkpoint, so its epochs can
+    never be paired with another stream's batch ids; there is no flag
+    to point it elsewhere."""
     args = build_parser().parse_args(
         ["--source", "/x", "--sink-dir", "/y", "--reorder-across-batches",
-         "-readerBufferSize", "5000"])
+         "-readerBufferSize", "5000", "--checkpoint", "/ck/run1/"])
     cfg = config_from_args(args)
     assert cfg.reorder_across_batches is True
     assert cfg.reader_buffer_size == 5000
+    assert cfg.reorder_state_path == "/ck/run1/reorder-state"
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(
+            ["--source", "/x", "--reorder-state-path", "/elsewhere"])
 
 
 def test_arn_validation_rejects_garbage():

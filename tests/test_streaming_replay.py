@@ -234,7 +234,8 @@ def test_stats_windows(spark, stream_fixture, tmp_path):
     assert recorded <= engine.stats.total_events == n_events
 
 
-def test_reorder_buffer_repairs_cross_batch_disorder(spark, sf_dir):
+def test_reorder_buffer_repairs_cross_batch_disorder(spark, sf_dir,
+                                                     tmp_path):
     """r8: the reference holds a 100k-event priority queue that repairs
     input disorder ACROSS reads (JsonEventBufferedReader.java:39) — the
     engine's per-batch sort cannot see disorder that straddles a
@@ -257,8 +258,10 @@ def test_reorder_buffer_repairs_cross_batch_disorder(spark, sf_dir):
         # a leaked event is seen ~100 positions late (a full batch), so
         # the window must exceed that — mirroring the reference's rule
         # that the queue must cover the input's maximum disorder
-        cfg = ReplayConfig(speedup_factor=1e12, reader_buffer_size=150,
-                           reorder_across_batches=reorder)
+        cfg = ReplayConfig(
+            speedup_factor=1e12, reader_buffer_size=150,
+            reorder_across_batches=reorder,
+            reorder_state_path=str(tmp_path / "reorder-state"))
         sink = InMemorySink()
         engine = ReplayEngine(cfg, sink, mode="driver")
         for i, batch in enumerate(b):
@@ -281,7 +284,8 @@ def test_reorder_buffer_repairs_cross_batch_disorder(spark, sf_dir):
 
 
 def test_reorder_buffer_beyond_window_emits_late_not_dropped(spark,
-                                                             sf_dir):
+                                                             sf_dir,
+                                                             tmp_path):
     """Disorder LARGER than the buffer window: the reference emits the
     too-late event as soon as it is next polled (out of order, never
     dropped) — the gate must do the same, not hold it forever."""
@@ -293,7 +297,8 @@ def test_reorder_buffer_beyond_window_emits_late_not_dropped(spark,
     # beyond a 20-row buffer
     shifted = rows[1:] + rows[:1]
     cfg = ReplayConfig(speedup_factor=1e12, reader_buffer_size=20,
-                       reorder_across_batches=True)
+                       reorder_across_batches=True,
+                       reorder_state_path=str(tmp_path / "reorder-state"))
     sink = InMemorySink()
     engine = ReplayEngine(cfg, sink, mode="driver")
     for i in range(0, 120, 40):
@@ -421,20 +426,18 @@ def test_partitioned_pacing_fidelity_p99(spark, sf_dir, tmp_path):
     run_load_sensitive(body)
 
 
-def test_reorder_flag_rejected_in_partitioned_mode_without_state():
-    """r8 review finding: silently ignoring reorder_across_batches would
-    let a user believe cross-batch disorder is being repaired. Since the
-    late-r8 distributed gate, partitioned mode accepts the flag WITH a
-    durable state dir and refuses without one."""
-    cfg = ReplayConfig(speedup_factor=1e12, reorder_across_batches=True)
+def test_reorder_flag_needs_state_path():
+    """Silently ignoring reorder_across_batches would let a user believe
+    cross-batch disorder is being repaired, and an in-memory buffer
+    would lose its held rows on a restart. The gate keeps them in a
+    durable state dir in both modes, so the config refuses the flag
+    without one, and both modes accept it with one."""
     with pytest.raises(ValueError, match="reorder_state_path"):
-        ReplayEngine(cfg, lambda: InMemorySink(), mode="partitioned")
-    # driver mode accepts it (in-memory buffer, no state dir needed)
+        ReplayConfig(speedup_factor=1e12, reorder_across_batches=True)
+    cfg = ReplayConfig(speedup_factor=1e12, reorder_across_batches=True,
+                       reorder_state_path="/tmp/x")
     ReplayEngine(cfg, InMemorySink(), mode="driver")
-    # partitioned mode accepts it with a state dir
-    cfg2 = ReplayConfig(speedup_factor=1e12, reorder_across_batches=True,
-                        reorder_state_path="/tmp/x")
-    ReplayEngine(cfg2, lambda: InMemorySink(), mode="partitioned")
+    ReplayEngine(cfg, lambda: InMemorySink(), mode="partitioned")
 
 
 #: Minute-spaced gate inputs: b0 holds minutes 10-99, and each batch
@@ -472,9 +475,10 @@ def _gate_twin(batches, bound=GATE_BOUND):
     return per_batch, held
 
 
-def _request_journal(rec_dir):
+def _request_journal(rec_dir, crash_flag=None):
     """Sink factory that journals one line per request: the payloads and
-    ts strings it was handed. Defined in a function so cloudpickle ships
+    ts strings it was handed. While the file `crash_flag` exists, every
+    request raises instead. Defined in a function so cloudpickle ships
     it to the Python workers by value."""
     import json as js
     import os
@@ -486,6 +490,8 @@ def _request_journal(rec_dir):
                 rec_dir, f"{os.getpid()}-{id(self)}.jsonl"), "a")
 
         def put_records(self, records):
+            if crash_flag and os.path.exists(crash_flag):
+                raise RuntimeError("simulated sink crash")
             self.f.write(js.dumps([[r["payload"], r["ts"]]
                                    for r in records]) + "\n")
             self.f.flush()
@@ -499,14 +505,16 @@ def _request_journal(rec_dir):
     return RequestJournal, read
 
 
-def _gate_engine(tmp_path, sink):
+def _gate_engine(tmp_path, sink, mode="partitioned"):
+    """A gated engine on the GATE_BATCHES minute scale. `sink` is a
+    factory; driver mode gets one instance of it, as in the CLI."""
     return ReplayEngine(
         ReplayConfig(speedup_factor=1e12, sender_threads=2,
                      reader_buffer_size=GATE_BOUND,
                      reorder_across_batches=True,
                      anchor_ts="2020-09-13T12:26:40Z",
                      reorder_state_path=str(tmp_path / "reorder-state")),
-        sink, mode="partitioned")
+        sink if mode == "partitioned" else sink(), mode=mode)
 
 
 def _emitted_minutes(requests):
@@ -633,7 +641,9 @@ def test_reorder_gate_cutoff_ignores_host_timezone(spark, tmp_path):
         time.tzset()
 
 
-def test_reorder_gate_crash_before_commit(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("mode", ["driver", "partitioned"])
+def test_reorder_gate_crash_before_commit(spark, tmp_path, monkeypatch,
+                                         mode):
     """The crash window of the gate: a batch whose emit and held epoch
     are written but whose commit marker is not. That epoch must be
     ignored; the redelivered batch recomputes from the previous
@@ -644,7 +654,7 @@ def test_reorder_gate_crash_before_commit(spark, tmp_path, monkeypatch):
     from amazon_kinesis_replay_spark import fsutil
 
     sink, read = _request_journal(str(tmp_path / "journal"))
-    engine = _gate_engine(tmp_path, sink)
+    engine = _gate_engine(tmp_path, sink, mode)
     want, want_tail = _gate_twin(GATE_BATCHES)
     b = [_minute_frame(spark, m) for m in GATE_BATCHES]
     held = str(tmp_path / "reorder-state" / "held")
@@ -682,16 +692,19 @@ def test_reorder_gate_crash_before_commit(spark, tmp_path, monkeypatch):
     assert sorted(set(got) - set(before + want[2])) == want_tail
 
 
-def test_reorder_gate_job_budget(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["driver", "partitioned"])
+def test_reorder_gate_job_budget(spark, tmp_path, mode):
     """The gate's bookkeeping runs no Spark jobs: the commit is one
     marker-file create, held state is read with an explicit schema, and
     the per-sender stats are summed on the driver. With AQE off, a
     steady gated batch is four jobs (localCheckpoint of held ∪ batch,
     the cutoff, the held write, the emit) and finalize() one (the
-    emit of the held tail). The applied-marker gate ran 8 and 4."""
+    emit of the held tail), in either mode: driver mode's emit is its
+    one bounded, ts-sorted collect. The applied-marker gate ran 8 and
+    4."""
     from amazon_kinesis_replay_spark.streaming.sinks import FileSink
     out = str(tmp_path / "sink")
-    engine = _gate_engine(tmp_path, lambda: FileSink(out))
+    engine = _gate_engine(tmp_path, lambda: FileSink(out), mode)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -699,12 +712,15 @@ def test_reorder_gate_job_budget(spark, tmp_path):
         engine.process_batch(_minute_frame(spark, GATE_BATCHES[0]), 0)
         steady = []
         for i in (1, 2):
-            sc.setJobGroup(f"gate-steady-{i}", "steady gated batch")
+            # group names are unique per mode: the tracker keeps the
+            # jobs of every earlier group of the session
+            group = f"gate-steady-{mode}-{i}"
+            sc.setJobGroup(group, "steady gated batch")
             engine.process_batch(_minute_frame(spark, GATE_BATCHES[i]), i)
-            steady.append(len(tracker.getJobIdsForGroup(f"gate-steady-{i}")))
-        sc.setJobGroup("gate-finalize", "drain the held tail")
+            steady.append(len(tracker.getJobIdsForGroup(group)))
+        sc.setJobGroup(f"gate-finalize-{mode}", "drain the held tail")
         engine.finalize()
-        fin = len(tracker.getJobIdsForGroup("gate-finalize"))
+        fin = len(tracker.getJobIdsForGroup(f"gate-finalize-{mode}"))
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -713,8 +729,9 @@ def test_reorder_gate_job_budget(spark, tmp_path):
     assert engine.stats.sink.records_sent == 300
 
 
+@pytest.mark.parametrize("mode", ["driver", "partitioned"])
 def test_reorder_gate_restart_finalize_drains_committed_tail(
-        spark, tmp_path):
+        spark, tmp_path, mode):
     """A restart on an existing state dir with no new input runs no
     batch before finalize(), as an availableNow stream that crashed
     after its last commit does. The fresh engine must still drain the
@@ -723,7 +740,7 @@ def test_reorder_gate_restart_finalize_drains_committed_tail(
     import os
 
     sink, read = _request_journal(str(tmp_path / "journal"))
-    first = _gate_engine(tmp_path, sink)
+    first = _gate_engine(tmp_path, sink, mode)
     for i in (0, 1):
         first.process_batch(_minute_frame(spark, GATE_BATCHES[i]), i)
     emitted = _emitted_minutes(read())
@@ -732,11 +749,68 @@ def test_reorder_gate_restart_finalize_drains_committed_tail(
     assert os.path.exists(str(tmp_path / "reorder-state" / "held"
                               / "gen=0000000001" / "_GEN_COMMITTED"))
 
-    restarted = _gate_engine(tmp_path, sink)
+    restarted = _gate_engine(tmp_path, sink, mode)
     restarted.finalize()
     assert _emitted_minutes(read()) == sorted(emitted + want_tail)
     assert restarted.stats.sink.records_sent == len(want_tail)
     assert not os.path.exists(str(tmp_path / "reorder-state"))
+
+
+@pytest.mark.parametrize("mode", ["driver", "partitioned"])
+def test_reorder_gate_restart_from_checkpoint_emits_every_event(
+        spark, stream_fixture, tmp_path, mode):
+    """A gated stream whose sink fails in batch 2, after batches 0 and 1
+    have committed, is restarted by a fresh engine from the same
+    checkpoint and run to the end. Every event must still be emitted at
+    least once: the rows the gate held from the committed batches live
+    in its state dir, laid out inside the checkpoint as the CLI does,
+    not in the dead engine's memory. Also shows that Spark accepts the
+    gate's directory inside its checkpoint."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    path, n_events, _ = stream_fixture
+    ckpt = str(tmp_path / "ckpt")
+    crash = str(tmp_path / "crash")
+    sink, read = _request_journal(str(tmp_path / "journal"), crash)
+    # 100 events per batch: batch 0 is all held, batch 1 emits, and the
+    # sink fails on batch 2's first request
+    cfg = ReplayConfig(source_path=path, speedup_factor=1e12,
+                       sender_threads=2, reader_buffer_size=150,
+                       reorder_across_batches=True,
+                       reorder_state_path=ckpt + "/reorder-state")
+
+    def engine():
+        return ReplayEngine(cfg, sink if mode == "partitioned" else sink(),
+                            mode=mode)
+
+    def run(eng):
+        events = ndjson.read_events_stream(spark, cfg,
+                                           max_files_per_trigger=1)
+        return run_replay_stream(events, eng, ckpt)
+
+    first = engine()
+    process_batch = first.process_batch
+
+    def crash_in_batch_2(batch_df, batch_id):
+        if batch_id == 2:
+            open(crash, "w").close()
+        process_batch(batch_df, batch_id)
+
+    first.process_batch = crash_in_batch_2
+    with pytest.raises(StreamingQueryException, match="simulated sink"):
+        run(first).awaitTermination(120)
+    assert first.stats.batches == 2
+    assert 0 < len(read()), "batch 1 emitted before the crash"
+    os.remove(crash)
+
+    restarted = engine()
+    run(restarted).awaitTermination(120)
+    restarted.finalize()
+    assert restarted.stats.batches == 2          # batches 2 and 3
+    emitted = {p for req in read() for p, _ in req}
+    assert len(emitted) == n_events
 
 
 def test_reorder_gate_refuses_old_layout_and_sessionless_finalize(
