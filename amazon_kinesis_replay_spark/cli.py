@@ -99,7 +99,7 @@ def config_from_args(args: argparse.Namespace) -> ReplayConfig:
     )
 
 
-def main(argv: list[str] | None = None) -> int:
+def main(argv: list[str]) -> int:
     args = build_parser().parse_args(argv)
     cfg = config_from_args(args)
 
@@ -140,4 +140,4 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -59,13 +59,15 @@ _CRC8_T = _crc_table(0x07, 8)
 _CRC16_T = _crc_table(0x8005, 16)
 
 
-def crc8(data: bytes, crc: int = 0) -> int:
+def crc8(data: bytes) -> int:
+    crc = 0
     for b in data:
         crc = _CRC8_T[crc ^ b]
     return crc
 
 
-def crc16(data: bytes, crc: int = 0) -> int:
+def crc16(data: bytes) -> int:
+    crc = 0
     for b in data:
         crc = _CRC16_T[((crc >> 8) ^ b) & 0xFF] ^ ((crc << 8) & 0xFFFF)
     return crc

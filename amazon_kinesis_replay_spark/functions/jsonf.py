@@ -24,9 +24,9 @@ def json_attr_ts(payload_col: Column, attr: str) -> Column:
     return F.try_to_timestamp(json_attr(payload_col, attr))
 
 
-def drop_malformed(df: DataFrame, payload_col: str, attr: str,
-                   parsed_col: str = "parsed_ts") -> DataFrame:
-    """Keep rows whose timestamp attribute parses; reference skip-with-warning
-    semantics (JsonEventS3Iterator.java:187-193) as a null-drop filter."""
-    out = df.withColumn(parsed_col, json_attr_ts(F.col(payload_col), attr))
-    return out.filter(F.col(parsed_col).isNotNull())
+def drop_malformed(df: DataFrame, payload_col: str, attr: str) -> DataFrame:
+    """Keep rows whose timestamp attribute parses (into `parsed_ts`);
+    reference skip-with-warning semantics (JsonEventS3Iterator.java:187-193)
+    as a null-drop filter."""
+    out = df.withColumn("parsed_ts", json_attr_ts(F.col(payload_col), attr))
+    return out.filter(F.col("parsed_ts").isNotNull())

@@ -36,23 +36,22 @@ from collections import Counter
 
 from .bpe import pretokenize
 
-#: Default maximum piece length (characters). 8 covers the useful
+#: Maximum piece length (characters). 8 covers the useful
 #: subword range for space-prefixed pre-tokens while bounding the seed
 #: explosion at len(word) * 8 substrings per distinct word.
 MAX_PIECE_LEN = 8
 
 
-def seed_counts(word_counts: dict[str, int],
-                max_piece_len: int = MAX_PIECE_LEN) -> Counter:
+def seed_counts(word_counts: dict[str, int]) -> Counter:
     """Substring occurrence counts over a piece->count table: every
-    substring of length <= max_piece_len of every distinct word, each
+    substring of length <= MAX_PIECE_LEN of every distinct word, each
     occurrence weighted by the word's count (overlapping occurrences
     all count — the standard ESA-seed approximation)."""
     out: Counter = Counter()
     for w, c in word_counts.items():
         n = len(w)
         for i in range(n):
-            for j in range(i + 1, min(i + max_piece_len, n) + 1):
+            for j in range(i + 1, min(i + MAX_PIECE_LEN, n) + 1):
                 out[w[i:j]] += c
     return out
 
@@ -75,24 +74,21 @@ def rescore(counts: dict[str, int], pieces: list[str]) -> dict[str, float]:
     return {p: math.log(counts.get(p, 0) + 1) - denom for p in pieces}
 
 
-def viterbi(word: str, scores: dict[str, float],
-            max_piece_len: int = MAX_PIECE_LEN,
-            unk_score: float | None = None) -> list[str]:
+def viterbi(word: str, scores: dict[str, float]) -> list[str]:
     """Best segmentation of `word` under the score table — DP over end
     positions, piece lengths scanned ASCENDING with strictly-greater
     replacement (the determinism contract). Characters absent from the
-    table fall back to `unk_score` (default: min(scores)-10) as
-    single-character pieces, so encoding never fails on unseen text."""
+    table fall back to min(scores)-10 as single-character pieces, so
+    encoding never fails on unseen text."""
     n = len(word)
     if n == 0:
         return []
-    if unk_score is None:
-        unk_score = (min(scores.values()) if scores else 0.0) - 10.0
+    unk_score = (min(scores.values()) if scores else 0.0) - 10.0
     best = [float("-inf")] * (n + 1)
     back = [0] * (n + 1)
     best[0] = 0.0
     for i in range(1, n + 1):
-        for length in range(1, min(max_piece_len, i) + 1):
+        for length in range(1, min(MAX_PIECE_LEN, i) + 1):
             piece = word[i - length:i]
             s = scores.get(piece)
             if s is None:
@@ -111,14 +107,14 @@ def viterbi(word: str, scores: dict[str, float],
     return out[::-1]
 
 
-def em_counts(word_counts: dict[str, int], scores: dict[str, float],
-              max_piece_len: int = MAX_PIECE_LEN) -> Counter:
+def em_counts(word_counts: dict[str, int],
+              scores: dict[str, float]) -> Counter:
     """Hard-EM E-step: integer piece counts over the best segmentations
     of every distinct word, weighted by word count. Exact integers —
     summation order free."""
     out: Counter = Counter()
     for w, c in word_counts.items():
-        for p in viterbi(w, scores, max_piece_len):
+        for p in viterbi(w, scores):
             out[p] += c
     return out
 
@@ -132,26 +128,28 @@ def prune(counts: Counter, vocab_size: int) -> list[str]:
     return sorted(keep)
 
 
-def train_unigram(word_counts: dict[str, int], vocab_size: int = 512,
-                  n_iters: int = 2, seed_size: int = 4096,
-                  max_piece_len: int = MAX_PIECE_LEN) -> dict[str, float]:
+#: Training shape shared by this twin and the distributed trainer:
+#: seed substrings kept, E-step/prune rounds, final vocabulary size.
+SEED_SIZE, N_ITERS, VOCAB_SIZE = 1024, 2, 256
+
+
+def train_unigram(word_counts: dict[str, int]) -> dict[str, float]:
     """Driver-only unigram training over a piece->count table — the
     pure twin of the distributed `operators.text.unigram_train` (which
     runs the seed count and each E-step as Spark jobs and must produce
     the IDENTICAL score table)."""
-    raw = seed_counts(word_counts, max_piece_len)
-    pieces = select_seed(raw, seed_size)
+    raw = seed_counts(word_counts)
+    pieces = select_seed(raw, SEED_SIZE)
     scores = rescore({p: raw[p] for p in pieces}, pieces)
-    for _ in range(n_iters):
-        counts = em_counts(word_counts, scores, max_piece_len)
-        pieces = prune(counts, vocab_size)
+    for _ in range(N_ITERS):
+        counts = em_counts(word_counts, scores)
+        pieces = prune(counts, VOCAB_SIZE)
         scores = rescore(counts, pieces)
     return scores
 
 
 def encode_text(text: str, scores: dict[str, float],
-                cache: dict[str, list[str]] | None = None,
-                max_piece_len: int = MAX_PIECE_LEN) -> list[str]:
+                cache: dict[str, list[str]] | None = None) -> list[str]:
     """Segment full text: GPT-2-style pre-tokens (shared with BPE),
     each Viterbi-segmented; lossless — `"".join(result) == text`. A
     per-batch cache collapses the heavy-tailed pre-token distribution
@@ -161,9 +159,9 @@ def encode_text(text: str, scores: dict[str, float],
         if cache is not None:
             seg = cache.get(w)
             if seg is None:
-                seg = viterbi(w, scores, max_piece_len)
+                seg = viterbi(w, scores)
                 cache[w] = seg
         else:
-            seg = viterbi(w, scores, max_piece_len)
+            seg = viterbi(w, scores)
         out.extend(seg)
     return out

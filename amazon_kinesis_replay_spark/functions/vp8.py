@@ -141,11 +141,10 @@ def _coeff_prob(probs, tp, band, ctx):
     return probs[base:base + 11]
 
 
-def decode_vp8(data: bytes, _skip_loop_filter: bool = False):
+def decode_vp8(data: bytes):
     """Decode a VP8 keyframe payload (the 'VP8 ' chunk body) to
     (width, height, Y, U, V) bytes (cropped planes; chroma dims are
-    ceil(w/2) x ceil(h/2)). `_skip_loop_filter` exists for the tests'
-    stage isolation only."""
+    ceil(w/2) x ceil(h/2))."""
     if len(data) < 10:
         raise VP8Error("VP8 payload too short")
     tag = data[0] | (data[1] << 8) | (data[2] << 16)
@@ -375,7 +374,7 @@ def decode_vp8(data: bytes, _skip_loop_filter: bool = False):
             inner = bool(mb_nnz) or ymode == B_PRED
             mb_info[mby][mbx] = (level, inner)
 
-    if filter_level and not _skip_loop_filter:
+    if filter_level:
         _loop_filter(Y, U, V, yw, cw, mw, mh, mb_info,
                      simple_filter, sharpness)
 

@@ -236,7 +236,7 @@ def _div_round_up(a: int, shift: int) -> int:
 
 
 def _decode_image(br: _BitReader, xsize: int, ysize: int,
-                  level0: bool = False, main_xsize: int | None = None):
+                  level0: bool = False):
     """One VP8L entropy-coded image -> (pixels, final_xsize). pixels is
     a flat list of ARGB ints of final_xsize*ysize (color-indexing at
     level0 shrinks the coded width). Transforms (level0 only) are

@@ -62,55 +62,34 @@ def word_shingles_expr(c: str, k: int = 3) -> str:
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
-                        k: int = 3, threshold: float = 0.5,
-                        prefix_filter: bool = True,
-                        shingle_ids: str = "hash") -> DataFrame:
-    """Exact pairwise Jaccard over word k-shingles.
+                        threshold: float = 0.5) -> DataFrame:
+    """Exact pairwise Jaccard over word 3-shingles.
 
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     jaccard = common / (|A| + |B| - common) — all-integer until one double
     division, so the value is bit-identical across engines (the DuckDB
     oracle runs the naive shingle self-join; results are provably equal).
 
-    With prefix_filter (default), candidate pairs come from a PPJoin-style
-    prefix join instead of the full shingle self-join — EXACT, no recall
-    loss. Lemma (set-similarity-join literature): under a global shingle
-    order, if J(A,B) >= t then |A∩B| >= α := ceil(t/(1+t)·(|A|+|B|)), and
-    two sets with overlap >= α must collide within their first
-    |S| − α + 1 elements. Since J >= t also forces |B| >= t·|A|, α >=
-    ceil(t·|S|) for each side, so indexing the first |S| − ceil(t·|S|) + 1
-    elements (a superset of the required prefix) is safe. Ordering by
-    ascending global frequency puts the RAREST shingles in the prefix, so
-    the join avoids exactly the hot shingles that blow up the naive join.
+    Candidate pairs come from a PPJoin-style prefix join instead of the
+    full shingle self-join — EXACT, no recall loss. Lemma
+    (set-similarity-join literature): under a global shingle order, if
+    J(A,B) >= t then |A∩B| >= α := ceil(t/(1+t)·(|A|+|B|)), and two sets
+    with overlap >= α must collide within their first |S| − α + 1
+    elements. Since J >= t also forces |B| >= t·|A|, α >= ceil(t·|S|)
+    for each side, so indexing the first |S| − ceil(t·|S|) + 1 elements
+    (a superset of the required prefix) is safe. Ordering by ascending
+    global frequency puts the RAREST shingles in the prefix, so the join
+    avoids exactly the hot shingles that blow up the naive join.
     Verification then counts common shingles over the FULL sets for the
     surviving candidates only.
 
-    shingle_ids chooses the candidate-join key representation:
-    - "hash" (default): sid = xxhash64(shingle). Collisions can only ADD
-      candidates (the join becomes a superset; verification intersects
-      the true string sets), so exactness NEVER depends on collision
-      freedom. Quantified: expected colliding shingle pairs ~ D^2/2^65 —
-      ~3e4 worldwide at D=10^12 distinct shingles — i.e. a vanishing
-      sliver of extra verification work even at 100 TB. Zero extra
-      shuffles: the hash is computed in place.
-    - "dict": collision-FREE dense ids from the distinct-shingle
-      frequency table, numbered by with_global_index (deterministic
-      literal bounds) over (xxhash64(shingle), shingle) — NOT over
-      (freq, shingle), which would funnel the freq=1 long tail (the
-      vast majority of distinct shingles in any real corpus) into a
-      single range bucket and OOM that task at scale; the hash key
-      range-buckets uniformly, and the string tie-break keeps the ids
-      dense and collision-free even across hash collisions. Costs one
-      extra shuffle of the exploded corpus (the string->id mapping
-      join) plus two metadata-scale shuffles of the distinct-shingle
-      table; buys (a) ids that NEVER alias two shingles — required
-      when signatures/ids are persisted across corpora or the distinct
-      count approaches ~10^12 — and (b) an all-numeric per-doc prefix
-      rank (window orders by (freq, sid) — 16 bytes — instead of
-      (freq, shingle string)). The global order becomes
-      (freq, hash, shingle): still total and rarest-first, so the
-      prefix lemma holds identically. See docs/SCALE.md for when to
-      flip it; timing at sf0.1 recorded there.
+    The candidate-join key is sid = xxhash64(shingle). Collisions can
+    only ADD candidates (the join becomes a superset; verification
+    intersects the true string sets), so exactness NEVER depends on
+    collision freedom. Quantified: expected colliding shingle pairs ~
+    D^2/2^65 — ~3e4 worldwide at D=10^12 distinct shingles — i.e. a
+    vanishing sliver of extra verification work even at 100 TB. Zero
+    extra shuffles: the hash is computed in place.
     """
     # Shingling (the CPU-dominant step) runs ONCE into a per-doc array
     # cache — one row per document, far smaller than the exploded rows —
@@ -125,101 +104,65 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # here — the caller consumes the result lazily. Entries stay in the
     # session's CacheManager until spark.catalog.clearCache() or session
     # end; storage pressure is bounded by MEMORY_AND_DISK eviction.
-    arrays = shingle_arrays(df, id_col, text_col, k).persist()
+    arrays = shingle_arrays(df, id_col, text_col).persist()
     sh = arrays.select("id", F.explode("shs").alias("shingle"))
     sizes = arrays.select("id", F.size("shs").alias("n_shingles"))
-
-    if prefix_filter:
-        if shingle_ids == "dict":
-            # Collision-free dense ids: number the distinct-shingle table
-            # (metadata-scale — orders of magnitude smaller than the
-            # exploded corpus) by (hash, shingle). with_global_index
-            # range-buckets on the FIRST order column, so leading with
-            # the uniform hash avoids the freq-long-tail skew cliff; the
-            # shingle tie-break keeps ids dense through hash collisions.
-            from .replay_ops import with_global_index
-            dic = (sh.groupBy("shingle")
-                   .agg(F.count("*").alias("freq"))
-                   .withColumn("__h", F.xxhash64("shingle")))
-            dic = (with_global_index(dic, ["__h", "shingle"],
-                                     out_col="sid")
-                   .select("shingle", "freq", "sid"))
-            # The one extra corpus-scale shuffle dict mode pays: map the
-            # exploded rows to their ids (string equi-join; broadcast
-            # when the dictionary is small, shuffle-hash at scale).
-            shh = sh.join(dic, "shingle")
-            # Global order (freq, hash, shingle) realized as (freq, sid):
-            # sid's order IS (hash, shingle) by construction, so the
-            # window sorts two longs — no string sort key per row.
-            w = Window.partitionBy("id").orderBy(F.col("freq").asc(),
-                                                 F.col("sid").asc())
-            ranked = shh.withColumn("rank", F.row_number().over(w))
-        else:
-            # Candidate generation runs on xxhash64 LONG keys, not shingle
-            # strings — EXACT at any scale:
-            # - the global order is (freq-of-hash, shingle string): a total
-            #   order on shingles, identical in every document, so the prefix
-            #   lemma holds (a hash collision merely merges two shingles'
-            #   freq counts — the order stays total via the string tie-break);
-            # - the self-join on the hash is a SUPERSET of the string-equality
-            #   join (collisions add candidates, never drop them), and the
-            #   verification step intersects the true string sets.
-            # Net: the frequency aggregation and the candidate join shuffle
-            # 8-byte longs instead of shingle strings.
-            shh = sh.withColumn("sid", F.xxhash64("shingle"))
-            freq = shh.groupBy("sid").agg(F.expr("count(*) AS freq"))
-            ranked = shh.join(freq, "sid").selectExpr(
-                "*", "row_number() OVER (PARTITION BY id "
-                "ORDER BY freq ASC, shingle ASC) AS rank")
-        # Persisted: the self-join consumes the prefix index twice, and
-        # exchange reuse across differently-pruned branches is not
-        # guaranteed (see replay_ops.with_global_index) — without the
-        # persist the freq+rank pipeline can execute twice. The index is
-        # a small fraction of the corpus (rarest ~1/3 of each doc's
-        # shingles).
-        # 1e-9 slack inside the ceil: float rounding of t*n (e.g.
-        # 0.56*25 = 14.000000000000002) would otherwise round the ceil UP
-        # and shrink the prefix by one — a silent recall loss. The slack
-        # can only lengthen the prefix (more candidates, never fewer).
-        pref = (ranked.join(sizes, "id")
-                .filter(f"rank <= n_shingles - ceil({threshold!r}D "
-                        f"* n_shingles - 1e-09D) + 1")
-                .select("id", "sid", "rank", "n_shingles")
-                .persist())
-        a, b = pref.alias("a"), pref.alias("b")
-        # PPJoin's two further EXACT pruning conditions (both admit a
-        # superset of true pairs; the 1e-9 slack makes float rounding err
-        # only toward keeping a candidate, never dropping one):
-        # - length filter: J >= t forces |B| >= t|A| and |A| >= t|B|.
-        # - positional filter: for a collision at 1-based global-order
-        #   positions (pa, pb), overlap <= 1 + min(|A|-pa, |B|-pb); the
-        #   pair's FIRST common shingle maximizes that bound over its
-        #   collisions, so requiring ANY collision to reach
-        #   alpha = ceil(t/(1+t)(|A|+|B|)) is exact.
-        t = repr(threshold)
-        cond = F.expr(
-            f"a.sid = b.sid AND a.id < b.id "
-            f"AND CAST(b.n_shingles AS DOUBLE) >= "
-            f"{t}D * a.n_shingles - 1e-09D "
-            f"AND CAST(a.n_shingles AS DOUBLE) >= "
-            f"{t}D * b.n_shingles - 1e-09D "
-            f"AND 1 + least(a.n_shingles - a.rank, "
-            f"b.n_shingles - b.rank) >= "
-            f"ceil({threshold / (1.0 + threshold)!r}D "
-            f"* (a.n_shingles + b.n_shingles) - 1e-09D)")
-        cand = (a.join(b, cond)
-                .select(F.col("a.id").alias("id_a"),
-                        F.col("b.id").alias("id_b"))
-                .distinct())
-    else:
-        a, b = sh.alias("a"), sh.alias("b")
-        cand = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-
+    # Candidate generation runs on xxhash64 LONG keys, not shingle
+    # strings — EXACT at any scale:
+    # - the global order is (freq-of-hash, shingle string): a total
+    #   order on shingles, identical in every document, so the prefix
+    #   lemma holds (a hash collision merely merges two shingles'
+    #   freq counts — the order stays total via the string tie-break);
+    # - the self-join on the hash is a SUPERSET of the string-equality
+    #   join (collisions add candidates, never drop them), and the
+    #   verification step intersects the true string sets.
+    # Net: the frequency aggregation and the candidate join shuffle
+    # 8-byte longs instead of shingle strings.
+    shh = sh.withColumn("sid", F.xxhash64("shingle"))
+    freq = shh.groupBy("sid").agg(F.expr("count(*) AS freq"))
+    ranked = shh.join(freq, "sid").selectExpr(
+        "*", "row_number() OVER (PARTITION BY id "
+        "ORDER BY freq ASC, shingle ASC) AS rank")
+    # Persisted: the self-join consumes the prefix index twice, and
+    # exchange reuse across differently-pruned branches is not
+    # guaranteed (see replay_ops.with_global_index) — without the
+    # persist the freq+rank pipeline can execute twice. The index is
+    # a small fraction of the corpus (rarest ~1/3 of each doc's
+    # shingles).
+    # 1e-9 slack inside the ceil: float rounding of t*n (e.g.
+    # 0.56*25 = 14.000000000000002) would otherwise round the ceil UP
+    # and shrink the prefix by one — a silent recall loss. The slack
+    # can only lengthen the prefix (more candidates, never fewer).
+    pref = (ranked.join(sizes, "id")
+            .filter(f"rank <= n_shingles - ceil({threshold!r}D "
+                    f"* n_shingles - 1e-09D) + 1")
+            .select("id", "sid", "rank", "n_shingles")
+            .persist())
+    a, b = pref.alias("a"), pref.alias("b")
+    # PPJoin's two further EXACT pruning conditions (both admit a
+    # superset of true pairs; the 1e-9 slack makes float rounding err
+    # only toward keeping a candidate, never dropping one):
+    # - length filter: J >= t forces |B| >= t|A| and |A| >= t|B|.
+    # - positional filter: for a collision at 1-based global-order
+    #   positions (pa, pb), overlap <= 1 + min(|A|-pa, |B|-pb); the
+    #   pair's FIRST common shingle maximizes that bound over its
+    #   collisions, so requiring ANY collision to reach
+    #   alpha = ceil(t/(1+t)(|A|+|B|)) is exact.
+    t = repr(threshold)
+    cond = F.expr(
+        f"a.sid = b.sid AND a.id < b.id "
+        f"AND CAST(b.n_shingles AS DOUBLE) >= "
+        f"{t}D * a.n_shingles - 1e-09D "
+        f"AND CAST(a.n_shingles AS DOUBLE) >= "
+        f"{t}D * b.n_shingles - 1e-09D "
+        f"AND 1 + least(a.n_shingles - a.rank, "
+        f"b.n_shingles - b.rank) >= "
+        f"ceil({threshold / (1.0 + threshold)!r}D "
+        f"* (a.n_shingles + b.n_shingles) - 1e-09D)")
+    cand = (a.join(b, cond)
+            .select(F.col("a.id").alias("id_a"),
+                    F.col("b.id").alias("id_b"))
+            .distinct())
     return _verify_jaccard(arrays, cand, threshold)
 
 
@@ -420,31 +363,30 @@ def _band_entries_from_signature(sig: DataFrame, num_hashes: int,
 
 
 def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
-                  num_hashes: int = 32, bands: int = 16, k: int = 3,
                   threshold: float = 0.5) -> DataFrame:
-    """LSH candidates verified by exact Jaccard (estimate from signatures is
-    also available; exact verification keeps the result deterministic).
+    """LSH candidates (16 bands x 2 rows over a 32-hash signature of the
+    word 3-shingles; see minhash_lsh_pairs) verified by exact Jaccard
+    (estimate from signatures is also available; exact verification keeps
+    the result deterministic).
 
     Verification intersects the PERSISTED per-doc shingle arrays (the
     signature aggregation derives its exploded rows from the same cache,
     so shingling runs once for the whole query); see `_verify_jaccard`.
 
     Returns confirmed near-dup pairs (id_a, id_b, jaccard)."""
-    arrays = shingle_arrays(df, id_col, text_col, k).persist()
+    arrays = shingle_arrays(df, id_col, text_col).persist()
     sh = arrays.select("id", F.explode("shs").alias("shingle"))
-    sig = _signature_from_rows(sh, num_hashes)
-    cand = _lsh_pairs_from_signature(sig, num_hashes, bands)
+    sig = _signature_from_rows(sh, 32)
+    cand = _lsh_pairs_from_signature(sig, 32, 16)
     return _verify_jaccard(arrays, cand, threshold)
 
 
 def cross_split_contamination(df: DataFrame, id_col: str, text_col: str,
-                              split_col: str, k: int = 3,
-                              train_value: str = "train",
-                              arrays: DataFrame | None = None) -> DataFrame:
+                              split_col: str) -> DataFrame:
     """Train/eval contamination detection — the decontamination pass every
-    LLM data pipeline runs before publishing a split: an eval document is
-    contaminated iff it shares at least one word k-shingle with ANY
-    training document.
+    LLM data pipeline runs before publishing a split: an eval document
+    (`split_col` other than 'train') is contaminated iff it shares at
+    least one word 3-shingle with ANY training document.
 
     Output: (id, n_shared_train_grams, contaminated) for every document;
     train rows carry (0, false) so the result unions cleanly onto the
@@ -467,48 +409,24 @@ def cross_split_contamination(df: DataFrame, id_col: str, text_col: str,
     # scan (measured 3.5 s vs 0.4 s at sf0.1). The persist is a pushdown
     # barrier, and the two consumers (train grams / eval rows) share one
     # shingle pass instead of recomputing it per branch.
-    # `arrays`: optional caller-precomputed (id, shs) table; lets composed
-    # pipelines share one shingle pass across ACTIONS. The persist
-    # contract is ENFORCED, not just documented (r7 review): an
-    # unpersisted frame here would recompute its whole plan once per
-    # consumer branch — exactly the bug the internal persist prevents.
-    if arrays is None:
-        # r13 opt: the split label rides the persisted shingle cache
-        # (`extra=`) instead of being re-attached per branch — the
-        # train/eval branches each re-ran the labels broadcast join over
-        # ALL exploded shingle rows (interleaved A/B on the full
-        # doc_train_split query at sf0.1 bench conditions: 1.57 -> 1.13 s;
-        # rows identical). One extra small string per cached row.
-        arrays = shingle_arrays(df, id_col, text_col, k,
-                                extra={split_col: F.col(split_col)}
-                                ).persist()
-        labels = arrays.select("id", split_col)
-        sh = arrays.selectExpr(
-            "id", "explode(shs) AS shingle", _bt(split_col)) \
-            .selectExpr("*", "xxhash64(shingle) AS sid")
-    else:
-        from pyspark import StorageLevel
-        if arrays.storageLevel == StorageLevel.NONE:
-            arrays = arrays.persist()
-        arrays = arrays.select("id", "shs")
-        labels = df.selectExpr(f"{_bt(id_col)} AS id", _bt(split_col))
-        sh = (arrays.selectExpr("id", "explode(shs) AS shingle")
-              .selectExpr("*", "xxhash64(shingle) AS sid")
-              .join(labels, "id"))
+    # r13 opt: the split label rides the persisted shingle cache
+    # (`extra=`) instead of being re-attached per branch — the train/eval
+    # branches each re-ran the labels broadcast join over ALL exploded
+    # shingle rows (interleaved A/B on the full doc_train_split query at
+    # sf0.1 bench conditions: 1.57 -> 1.13 s; rows identical). One extra
+    # small string per cached row.
+    arrays = shingle_arrays(df, id_col, text_col,
+                            extra={split_col: F.col(split_col)}).persist()
+    labels = arrays.select("id", split_col)
+    sh = arrays.selectExpr(
+        "id", "explode(shs) AS shingle", _bt(split_col)) \
+        .selectExpr("*", "xxhash64(shingle) AS sid")
     # Predicates/projections as parsed expr strings (r13 opt: round
-    # trips); `train_value` rides a single-quoted SQL literal. Escape
-    # BACKSLASHES FIRST, then double quotes (r13 ADVICE): Spark SQL
-    # string literals process C-style backslash escapes, so an unescaped
-    # backslash silently changes the literal ("a\b" matched zero rows —
-    # every eval doc would report uncontaminated), and a trailing
-    # backslash before the doubled quote shifts the literal boundary.
-    tv = train_value.replace("\\", "\\\\").replace("'", "''")
-    # Identifiers are interpolated into expr strings — backtick-quote
-    # them (with embedded-backtick escaping) so public-API column names
-    # needing quoting (spaces, hyphens, dots) keep resolving as they did
-    # under the pre-r13 F.col form.
+    # trips). Identifiers are interpolated into expr strings —
+    # backtick-quote them (with embedded-backtick escaping) so column
+    # names needing quoting (spaces, hyphens, dots) keep resolving.
     split_q = _bt(split_col)
-    is_train = f"({split_q} = '{tv}')"
+    is_train = f"({split_q} = 'train')"
     # No .distinct() on the train side: LEFT SEMI is an existence join, so
     # the hash build dedupes internally — a pre-distinct would only add a
     # full extra shuffle of the train shingles (measured r7: one fewer
@@ -534,8 +452,7 @@ def cross_split_contamination(df: DataFrame, id_col: str, text_col: str,
 # --------------------------------------------------------------------------
 
 
-def simhash64(df: DataFrame, id_col: str, text_col: str,
-              out_col: str = "simhash") -> DataFrame:
+def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash per document: explode tokens, xxhash64 each, and for
     every bit position accumulate +1/-1; bit j of the simhash is the sign.
 
@@ -556,12 +473,11 @@ def simhash64(df: DataFrame, id_col: str, text_col: str,
         term = bit * F.lit(2 ** j).cast("long") if j < 63 else \
             F.when(F.col(f"b{j}") > 0, F.lit(-(2 ** 63)).cast("long")).otherwise(F.lit(0).cast("long"))
         sim = term if sim is None else sim + term
-    return bit_sums.select("id", sim.alias(out_col))
+    return bit_sums.select("id", sim.alias("simhash"))
 
 
-def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
-                      max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance <= max_hamming.
+def simhash_near_dups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance <= 3.
 
     Scale path: block on 16-bit chunks (a pair within Hamming<=3 of a 64-bit
     hash must agree exactly on >=1 of 4 chunks — pigeonhole), then verify
@@ -592,7 +508,7 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (cand.withColumn("hamming", hamming)
-            .filter(F.col("hamming") <= max_hamming)
+            .filter(F.col("hamming") <= 3)
             .select("id_a", "id_b", "hamming"))
 
 
@@ -601,61 +517,44 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
 # --------------------------------------------------------------------------
 
 
-def embedding_cosine_dedup(emb: DataFrame, threshold: float = 0.4,
-                           n_bands: int = 8, band_bits: int = 8,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           unique_ids: bool = True,
-                           dim: int | None = None) -> DataFrame:
+def embedding_cosine_dedup(emb: DataFrame) -> DataFrame:
     """Near-dup embedding pairs: banded sign-LSH candidate generation with
     exact DECIMAL-cosine verification of survivors.
 
     Semantics (deterministic, engine-independent): a pair is a candidate
-    iff its sign patterns agree on ALL `band_bits` components of at least
-    one of `n_bands` contiguous component bands; candidates with exact
-    cosine >= threshold are emitted. This banded definition — not "all
-    pairs above threshold" — is the production near-dedup contract (same
-    shape as MinHash banding): dense vectors admit no sub-quadratic EXACT
-    threshold join, and the fixture's pair-cosine distribution is a
-    continuum through the threshold, so any bucketed plan that claimed
-    exact all-pairs semantics would be luck-dependent. The SQL oracle
-    expresses this same banded definition, so the gate is exact by
-    construction.
+    iff its sign patterns agree on ALL 8 components of at least one of 8
+    contiguous component bands; candidates with exact cosine >= 0.4 are
+    emitted. This banded definition — not "all pairs above threshold" —
+    is the production near-dedup contract (same shape as MinHash
+    banding): dense vectors admit no sub-quadratic EXACT threshold join,
+    and the fixture's pair-cosine distribution is a continuum through the
+    threshold, so any bucketed plan that claimed exact all-pairs
+    semantics would be luck-dependent. The SQL oracle expresses this same
+    banded definition, so the gate is exact by construction.
 
-    Plan shape: one explode to n_bands (band, bucket) keys per vector, an
+    Plan shape: one explode to 8 (band, bucket) keys per vector, an
     equi-join on (band, bucket) — hash shuffle on a compact int pair, AQE
     skew-join for hot buckets — distinct pairs, then exact cosine only on
     candidates. Work is sum over buckets of |bucket|^2, never corpus^2.
 
-    Parameter choice (MEASURED, tools/recall_probe.py at sf0.01): sign
+    Banding choice (MEASURED, tools/recall_probe.py at sf0.01): sign
     agreement per bit at cosine c has probability 1 - arccos(c)/pi, so
     recall is regime-dependent. At the true NEAR-DUP regime (c>=0.9,
-    p_bit~0.857) the default 8 bands x 8 bits recalls ~94% of pairs while
-    keeping 256 buckets per band (bucket sizes ~N/256 — scale-safe). At
-    the fixture's low c>=0.4 operating point the same banding recalls
-    only ~29% (16x4 measures ~95% but with 16 buckets per band —
-    bucket-local pairwise work ~N^2/16, which dies at 100 TB). The banded
-    candidate definition is the CONTRACT (the oracle encodes the same
-    bands), so the gate stays exact either way; pick (n_bands, band_bits)
-    for the threshold regime you run at.
-    """
-    # unique_ids=True is the contract for keyed corpora (vec_id is a key
-    # in the embeddings table): every pair then appears exactly once from
-    # the joins below, matching the oracle's raw-join semantics, and NO
-    # pair-level collapse is needed. The r3 shape ran a
-    # groupBy(id_a,id_b).agg(first(va),first(vb)) "multiplicity guard"
-    # AFTER the vector joins — a full shuffle of candidate rows carrying
-    # TWO vectors each (candidates ≥ corpus under banding: 61k pairs vs
-    # 2k vectors at sf0.1, and growing ~N²/buckets at scale) — measured
-    # ~0.7 s of the query at sf0.1. With non-unique ids the guard now
-    # runs at CORPUS scale instead (one first-per-id over N vector rows),
-    # which is strictly smaller; that branch recomputes the dedupe per
-    # consumer (3 scans) — persist upstream if the input is expensive.
-    src = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    if not unique_ids:
-        src = src.groupBy("id").agg(F.first("v").alias("v"))
+    p_bit~0.857) 8 bands x 8 bits recalls ~94% of pairs while keeping 256
+    buckets per band (bucket sizes ~N/256 — scale-safe). At the fixture's
+    low c>=0.4 operating point the same banding recalls only ~29% (16x4
+    measures ~95% but with 16 buckets per band — bucket-local pairwise
+    work ~N^2/16, which dies at 100 TB). The banded candidate definition
+    is the CONTRACT (the oracle encodes the same bands), so the gate
+    stays exact either way.
 
-    keys = _sign_band_keys(src, n_bands, band_bits)
+    vec_id is a key of the embeddings table, so every pair appears
+    exactly once from the joins below, matching the oracle's raw-join
+    semantics, and NO pair-level collapse is needed.
+    """
+    src = emb.select(F.col("vec_id").alias("id"),
+                     F.col("embedding").alias("v"))
+    keys = _sign_band_keys(src)
     a, b = keys.alias("a"), keys.alias("b")
     cand_ids = (
         a.join(b, F.expr("a.band = b.band AND a.bucket = b.bucket "
@@ -663,13 +562,12 @@ def embedding_cosine_dedup(emb: DataFrame, threshold: float = 0.4,
         .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
-    return _verify_cosine_pairs(_with_vec_norm(src), cand_ids, threshold,
-                                dim=dim)
+    return _verify_cosine_pairs(_with_vec_norm(src), cand_ids)
 
 
-def _sign_band_keys(src: DataFrame, n_bands: int,
-                    band_bits: int) -> DataFrame:
-    """(id, band, bucket) sign-LSH keys of an (id, v) table. Candidate
+def _sign_band_keys(src: DataFrame) -> DataFrame:
+    """(id, band, bucket) sign-LSH keys (8 bands of 8 sign bits) of an
+    (id, v) table. Candidate
     generation shuffles ONLY these rows — the float vectors never ride
     through the LSH join; they are joined back for surviving pairs.
 
@@ -680,15 +578,15 @@ def _sign_band_keys(src: DataFrame, n_bands: int,
     INT cast (pinned by test_sign_band_keys_match_reference)."""
     def band_bucket_sql(b: int) -> str:
         bucket = "0"
-        for j in range(band_bits):
-            bit = (f"(CASE WHEN element_at(v, {b * band_bits + j + 1}) >= 0 "
+        for j in range(8):
+            bit = (f"(CASE WHEN element_at(v, {b * 8 + j + 1}) >= 0 "
                    f"THEN 1 ELSE 0 END)")
             bucket = f"({bucket} * 2 + {bit})"
         return f"CAST({bucket} AS INT)"
 
     structs = ",".join(
         f"struct({b} AS band, {band_bucket_sql(b)} AS bucket)"
-        for b in range(n_bands))
+        for b in range(8))
     return src.selectExpr("id", f"inline(array({structs}))")
 
 
@@ -702,37 +600,35 @@ def _with_vec_norm(src: DataFrame) -> DataFrame:
         "*", f"sqrt({similarity._fast_dot_sql('v', 'v')}) AS n")
 
 
-def _verify_cosine_pairs(withn: DataFrame, cand_ids: DataFrame,
-                         threshold: float,
-                         dim: int | None = None) -> DataFrame:
-    """Two-stage exact verification of candidate id pairs against an
-    (id, v, n) table: the decimal-exact cosine is an interpreted
-    higher-order-function expression (no codegen) — running it on every
-    candidate dominated the query. A double-precision pre-filter at
-    (threshold - 1e-6) is EXACT as a filter: double summation error over
-    64 unit-scale products is bounded by ~64*2^-52 ~ 1e-14 relative, so
-    no pair with exact cosine >= threshold can score below the margin
-    (the tree-shaped fixed-width dot is pairwise summation — error at
-    most the sequential bound). The expensive exact cosine then runs
-    only on survivors. Pre-filter dot: `_fast_dot_fixed_sql` balanced tree
-    when the caller pins `dim` (codegen'd; measured r7 0.69 s vs HOF
-    0.87 s on the sf0.1 verify stage) — the left-deep unrolled chain and
-    an Arrow pandas-UDF dot both MEASURED slower (chain 0.88 s; UDF
-    3.8 s vs 1.9 s whole-query, r6)."""
+def _verify_cosine_pairs(withn: DataFrame,
+                         cand_ids: DataFrame) -> DataFrame:
+    """Two-stage exact verification (cosine >= 0.4) of candidate id pairs
+    against an (id, v, n) table: the decimal-exact cosine is an
+    interpreted higher-order-function expression (no codegen) — running
+    it on every candidate dominated the query. A double-precision
+    pre-filter at (0.4 - 1e-6) is EXACT as a filter: double summation
+    error over 64 unit-scale products is bounded by ~64*2^-52 ~ 1e-14
+    relative, so no pair with exact cosine >= 0.4 can score below the
+    margin. The expensive exact cosine then runs only on survivors.
+    Pre-filter dot: the interpreted HOF `_fast_dot_sql` — a codegen'd
+    balanced-tree fixed-width dot won its ISOLATED verify stage (r7:
+    0.69 s vs 0.87 s at sf0.1) but measured SLOWER whole-query at bench
+    conditions (2.21 s vs 1.85 s; the 127-node expression is re-analyzed
+    per run), and the left-deep unrolled chain and an Arrow pandas-UDF
+    dot both MEASURED slower (chain 0.88 s; UDF 3.8 s vs 1.9 s
+    whole-query, r6)."""
     from . import similarity
     va = withn.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
                       F.col("n").alias("na"))
     vb = withn.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
                       F.col("n").alias("nb"))
     cand = cand_ids.join(va, "id_a").join(vb, "id_b")
-    dot_sql = (similarity._fast_dot_fixed_sql("va", "vb", dim)
-               if dim is not None
-               else similarity._fast_dot_sql("va", "vb"))
+    dot_sql = similarity._fast_dot_sql("va", "vb")
     fast = cand.selectExpr("*", f"({dot_sql} / (na * nb)) AS __fc")
-    survivors = fast.filter(F.col("__fc") >= threshold - 1e-6)
+    survivors = fast.filter(F.col("__fc") >= 0.4 - 1e-6)
     scored = survivors.selectExpr(
         "id_a", "id_b", f"{similarity.cosine_sql('va', 'vb')} AS cosine")
-    return scored.filter(F.col("cosine") >= threshold)
+    return scored.filter(F.col("cosine") >= 0.4)
 
 
 # --------------------------------------------------------------------------
@@ -741,22 +637,11 @@ def _verify_cosine_pairs(withn: DataFrame, cand_ids: DataFrame,
 
 
 def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
-                   id_col: str = "doc_id", max_iters: int = 20,
-                   check_every: int = 1,
-                   quality: DataFrame | None = None,
-                   quality_col: str = "score") -> DataFrame:
-    """Group near-dup PAIRS into CLUSTERS and pick one representative per
-    cluster — the step that turns any pairwise dedup modality (Jaccard,
-    MinHash, SimHash, embedding-cosine) into a keep/drop decision.
-
-    Representative choice: min-id by default; pass `quality` (a
-    DataFrame carrying `id_col` + `quality_col`) to keep the
-    HIGHEST-SCORING member instead (ties and unscored-only clusters fall
-    back to min id; unscored members never beat a scored one) — the
-    curation shape where dedup keeps the best-quality copy (score from
-    `text.quality_score_expr`, `ngram_lm_score` negated perplexity, ...)
-    rather than an arbitrary one. One extra metadata-scale join + one
-    map-side-combinable agg; nothing touches the pair pipeline.
+                   max_iters: int = 20) -> DataFrame:
+    """Group near-dup PAIRS into CLUSTERS and pick one representative
+    (the min `doc_id`) per cluster — the step that turns any pairwise
+    dedup modality (Jaccard, MinHash, SimHash, embedding-cosine) into a
+    keep/drop decision.
 
     `pairs` is an (id_a, id_b) DataFrame OR a parquet path string of one
     — the path form is the cold-start entry (r6 verdict item 7): a
@@ -772,21 +657,22 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
     clusters are star-like (diameter 2-3) because every member overlaps
     the same core content, so the loop converges in a handful of rounds;
     `max_iters` bounds pathological chains. Convergence is observed with
-    one count action per `check_every` chained rounds (zero label changes
-    in the LAST round of a chain implies fixpoint regardless of earlier
+    one count action per two chained rounds (zero label changes in the
+    LAST round of a chain implies fixpoint regardless of earlier
     rounds). Each action is a Spark job, but an unpersisted chained
     round's plan embeds its predecessor twice (neighbor branch + carry
-    branch) — re-computing it. The default 1 therefore persists and
-    checks every round (compute-optimal: the right trade at 100 TB where
-    label shuffles dwarf job launches); small-corpus callers where the
-    per-job launch constant dominates (the bench SFs) pass 2.
+    branch) — re-computing it. At the gate and bench SFs the per-job
+    launch constant dominates the tiny label shuffles, so chaining two
+    rounds per check halves the job count; at 100 TB, where label
+    shuffles dwarf job launches, checking every round is the
+    compute-optimal trade.
 
     Returns (id, cluster_id, cluster_size, is_representative) for EVERY
     node — singletons form their own cluster.
     """
     if isinstance(pairs, str):
         pairs = nodes.sparkSession.read.parquet(pairs)
-    ids = nodes.select(F.col(id_col).alias("id")).distinct()
+    ids = nodes.select(F.col("doc_id").alias("id")).distinct()
     # Materialize the pair list FIRST: the symmetric-edges union consumes
     # `pairs` twice, so a pair plan whose expensive stages are NOT
     # internally persisted (a raw join, a filtered scan) would run once
@@ -823,11 +709,11 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
     # max_iters bounds the component DIAMETER; observing convergence takes
     # one extra zero-change round, hence max_iters + 1 total rounds — a
     # component of diameter exactly max_iters must not raise. Rounds run
-    # in chains of `check_every` with one persist + one count action per
-    # chain (see docstring).
+    # in chains of two with one persist + one count action per chain
+    # (see docstring).
     rounds_left = max_iters + 1
     while rounds_left > 0:
-        chain = min(max(int(check_every), 1), rounds_left)
+        chain = min(2, rounds_left)
         rounds_left -= chain
         merged = one_round(labels)
         for _ in range(chain - 1):
@@ -862,29 +748,11 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
             f"dedup_clusters did not converge within max_iters={max_iters} "
             "rounds (component diameter exceeds the bound); raise max_iters")
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("cluster_size"))
-    if quality is None:
-        rep = F.col("id") == F.col("lbl")
-        out = labels.join(sizes, "lbl")
-    else:
-        q = quality.select(F.col(id_col).alias("id"),
-                           F.col(quality_col).cast("double")
-                           .alias("__score"))
-        scored = (labels.join(q, "id", "left")
-                  .withColumn("__score", F.coalesce(
-                      F.col("__score"), F.lit(float("-inf")))))
-        # min of (-score, id) = highest score, ties -> smallest id;
-        # lexicographic struct ordering keeps this one agg, any id type
-        best = (scored.groupBy("lbl")
-                .agg(F.min(F.struct((-F.col("__score")).alias("ns"),
-                                    F.col("id").alias("i"))).alias("b"))
-                .select("lbl", F.col("b.i").alias("__rep")))
-        rep = F.col("id") == F.col("__rep")
-        out = labels.join(sizes, "lbl").join(best, "lbl")
-    return out.select(
-        F.col("id").alias(id_col),
+    return labels.join(sizes, "lbl").select(
+        F.col("id").alias("doc_id"),
         F.col("lbl").alias("cluster_id"),
         F.col("cluster_size").cast("long").alias("cluster_size"),
-        rep.alias("is_representative"))
+        (F.col("id") == F.col("lbl")).alias("is_representative"))
 
 
 # --------------------------------------------------------------------------
@@ -894,12 +762,16 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
 # --------------------------------------------------------------------------
 
 
-def window_occurrences(df: DataFrame, id_col: str, text_col: str,
-                       window: int = 12) -> DataFrame:
-    """Every fixed-width token window of every document, one row per
+#: Token width of the windows `duplicate_spans` hashes.
+SPAN_WINDOW = 12
+
+
+def window_occurrences(df: DataFrame, id_col: str,
+                       text_col: str) -> DataFrame:
+    """Every `SPAN_WINDOW`-token window of every document, one row per
     occurrence: (id, pos, win). Windows are built JVM-side with
     transform-over-sequence (no Python), then posexploded; docs shorter
-    than `window` tokens emit nothing (a doc-length duplicate of a short
+    than the window emit nothing (a doc-length duplicate of a short
     doc is exact dedup's job, not substring dedup's).
 
     Tokenization is the package tokenizer (`text.tokens_expr`: lower, trim,
@@ -907,19 +779,17 @@ def window_occurrences(df: DataFrame, id_col: str, text_col: str,
     """
     toks = F.expr(tokens_expr(text_col))
     n = F.size(toks)
-    idx = F.sequence(F.lit(0), n - F.lit(window))
+    idx = F.sequence(F.lit(0), n - F.lit(SPAN_WINDOW))
     wins = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, window)))
-    return (df.filter(n >= window)
+        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, SPAN_WINDOW)))
+    return (df.filter(n >= SPAN_WINDOW)
             .select(F.col(id_col),
                     F.posexplode(wins).alias("pos", "win")))
 
 
-def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
-                    window: int = 12,
-                    materialize: bool = True) -> DataFrame:
+def duplicate_spans(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Maximal duplicated token spans per document: merge every
-    fixed-width window whose exact text occurs more than once in the
+    `SPAN_WINDOW`-token window whose exact text occurs more than once in the
     corpus (any doc, including the same one) into per-doc islands.
     Returns (id_col, span_start, span_end, n_windows) with token-index
     half-open spans [span_start, span_end). The returned frame is
@@ -948,40 +818,31 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     The reference engine has no substring dedup; this extends the
     training-data family (SURVEY §6) with the standard exact-substring
     method. Unlike the paper's suffix array, windows give spans snapped
-    to `window`-token granularity — maximal duplicated runs shorter than
-    `window` are missed and span edges can overhang a true duplicate run
-    by up to window-1 tokens; that approximation is what makes the op a
+    to window granularity — maximal duplicated runs shorter than the
+    window are missed and span edges can overhang a true duplicate run
+    by up to SPAN_WINDOW-1 tokens; that approximation is what makes the op a
     pure groupBy/join plan.
     """
-    rows = window_occurrences(df, id_col, text_col, window)
-    rows = rows.withColumn("__h", F.xxhash64("win"))
-    if materialize:
-        # Persist barrier: `rows` (a generator output) feeds both the
-        # candidate agg and the occurrence join — without it,
-        # InferFiltersFromGenerate pushes a size()>0 predicate
-        # containing the whole window-construction expression below
-        # the join input (the r6 contamination trap).
-        rows = rows.persist()
+    rows = window_occurrences(df, id_col, text_col)
+    # Persist barrier: `rows` (a generator output) feeds both the
+    # candidate agg and the occurrence join — without it,
+    # InferFiltersFromGenerate pushes a size()>0 predicate containing the
+    # whole window-construction expression below the join input (the r6
+    # contamination trap).
+    rows = rows.withColumn("__h", F.xxhash64("win")).persist()
     cand_h = (rows.groupBy("__h").count()
               .filter(F.col("count") > 1).select("__h"))
     cand = rows.join(cand_h, "__h", "left_semi")
     win_cnt = (cand.groupBy("win").count()
                .filter(F.col("count") > 1).select("win"))
     occ = cand.join(win_cnt, "win", "left_semi")
-    out = _merge_islands(occ, id_col, window)
-    if not materialize:
-        # materialize=False returns the LAZY full composition — for
-        # plan inspection/tests only (a checkpointed frame's plan is
-        # just an RDD scan, which pins nothing — second review); an
-        # action on it re-pays the generate-feeds-join trap.
-        return out
     # eager localCheckpoint materializes before the barrier is released
-    out = out.localCheckpoint()
+    out = _merge_islands(occ, id_col).localCheckpoint()
     rows.unpersist()
     return out
 
 
-def _merge_islands(occ: DataFrame, id_col: str, window: int) -> DataFrame:
+def _merge_islands(occ: DataFrame, id_col: str) -> DataFrame:
     """Gaps-and-islands merge of duplicated window occurrences
     (id, pos, ...) into per-doc spans — lag + running sum partitioned by
     id, no global sort."""
@@ -989,14 +850,15 @@ def _merge_islands(occ: DataFrame, id_col: str, window: int) -> DataFrame:
     brk = occ.withColumn(
         "__b",
         (F.col("pos") >
-         F.coalesce(F.lag("pos").over(w), F.lit(-window - 1)) + window)
+         F.coalesce(F.lag("pos").over(w), F.lit(-SPAN_WINDOW - 1))
+         + SPAN_WINDOW)
         .cast("int"))
     grp = brk.withColumn(
         "__g", F.sum("__b").over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     return (grp.groupBy(id_col, "__g")
             .agg(F.min("pos").cast("long").alias("span_start"),
-                 (F.max("pos") + window).cast("long").alias("span_end"),
+                 (F.max("pos") + SPAN_WINDOW).cast("long").alias("span_end"),
                  F.count("*").alias("n_windows"))
             .drop("__g")
             .select(id_col, "span_start", "span_end", "n_windows"))

@@ -15,14 +15,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def interval_join(points: DataFrame, intervals: DataFrame,
-                  point_ts: str = "ts", lo: str = "lo", hi: str = "hi",
-                  bucket_width_s: int = 3600) -> DataFrame:
+def interval_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """Join each point to every interval containing it ([lo, hi) semantics).
 
-    points: any columns + `point_ts` timestamp.
+    points: any columns + a `ts` timestamp.
     intervals: any columns + `lo`/`hi` timestamps; hi - lo may exceed the
-    bucket width (intervals explode over all covered buckets).
+    one-hour bucket width (intervals explode over all covered buckets).
     """
     # Bucket from exact epoch MICROS — the full precision of a Spark
     # timestamp (events.parquet is ns-truncated-to-µs). Bucketing at any
@@ -30,63 +28,56 @@ def interval_join(points: DataFrame, intervals: DataFrame,
     # unit as a finer-grained exclusive `hi` one bucket past the interval's
     # exploded range whenever that unit is a bucket boundary (a missed
     # match, not a false positive the exact re-check could repair).
-    width_us = bucket_width_s * 1_000_000
-    p_bucket = F.floor(F.unix_micros(F.col(point_ts)) / width_us)
+    width_us = 3600 * 1_000_000
+    p_bucket = F.floor(F.unix_micros(F.col("ts")) / width_us)
     p = points.withColumn("__bucket", p_bucket)
 
-    lo_b = F.floor(F.unix_micros(F.col(lo)) / width_us)
+    lo_b = F.floor(F.unix_micros(F.col("lo")) / width_us)
     # hi is exclusive: the last covered bucket is the one holding hi - 1µs
-    hi_b = F.floor((F.unix_micros(F.col(hi)) - 1) / width_us)
+    hi_b = F.floor((F.unix_micros(F.col("hi")) - 1) / width_us)
     iv = intervals.withColumn(
         "__bucket", F.explode(F.sequence(lo_b, F.greatest(hi_b, lo_b))))
 
     joined = p.join(iv, "__bucket").filter(
-        (F.col(point_ts) >= F.col(lo)) & (F.col(point_ts) < F.col(hi)))
+        (F.col("ts") >= F.col("lo")) & (F.col("ts") < F.col("hi")))
     return joined.drop("__bucket")
 
 
-def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
+def asof_join(left: DataFrame, right: DataFrame,
               by: str | list[str] = "user_id",
-              value_cols: list[str] | None = None,
               direction: str = "backward",
-              tolerance_s: int | float | None = None,
-              tiebreak: str | None = None,
-              prefix: str = "asof_") -> DataFrame:
-    """Point-in-time (as-of) join: for each left row, the single right row
-    with the greatest `on` <= left.`on` (direction='backward', inclusive —
-    pandas merge_asof / DuckDB ASOF JOIN semantics) or the smallest
-    `on` >= left.`on` (direction='forward'), matching on the `by` key(s).
-    LEFT-join semantics: unmatched left rows keep NULL right columns.
+              tolerance_s: int | float | None = None) -> DataFrame:
+    """Point-in-time (as-of) join: for each left row, the `ts` of the
+    single right row with the greatest `ts` <= left.`ts`
+    (direction='backward', inclusive — pandas merge_asof / DuckDB ASOF
+    JOIN semantics) or the smallest `ts` >= left.`ts`
+    (direction='forward'), matching on the `by` key(s), emitted as
+    `asof_ts`. LEFT-join semantics: unmatched left rows keep a NULL
+    `asof_ts`.
 
     Plan shape (the 100 TB contract): a naive `r.ts <= l.ts` theta-join
     plans as a per-key nested loop (quadratic in events-per-key); instead
     both sides are UNIONED with a side tag and ONE keyed window
-    (partitionBy(by), orderBy(on, side, tiebreak)) carries the most recent
-    right values to each left row via last(ignorenulls) over a cumulative
-    frame — one hash shuffle on the key, one sort, zero joins, linear in
-    rows. This is the same single-window shape as q_user_event_windows
-    (registry), generalized to two tables and arbitrary carried columns.
+    (partitionBy(by), orderBy(ts, side)) carries the most recent right
+    `ts` to each left row via last(ignorenulls) over a cumulative frame —
+    one hash shuffle on the key, one sort, zero joins, linear in rows.
+    This is the same single-window shape as q_user_event_windows
+    (registry), generalized to two tables. Right rows sharing (by, ts)
+    tie, and the matched `asof_ts` is deterministic by definition of the
+    tie.
 
     Args:
-      value_cols: right columns to carry (default: all except `on`/`by`).
-        Each is emitted as `{prefix}{col}`; the matched right `on` is
-        always emitted as `{prefix}{on}`.
       tolerance_s: if set, a match farther than this many seconds from the
-        left row (in the join direction) is nulled out — applied to every
-        carried column, so out-of-tolerance lefts look unmatched.
-      tiebreak: optional right column making the window order total when
-        several right rows share (by, on) — `last` then picks the row with
-        the MAX tiebreak value. Without it the matched `{prefix}{on}` is
-        still deterministic (equal by definition of the tie), but other
-        carried value columns are pinned to an arbitrary tie member.
+        left row (in the join direction) is nulled out, so
+        out-of-tolerance lefts look unmatched.
       direction: 'backward' (default) or 'forward'.
 
     Requires a real `by` key: a global (keyless) as-of would need an
     unpartitioned window — the known scale anti-pattern. Pre-bucket a
     keyless stream (e.g. by coarse time range) and pass that as `by`.
 
-    NULL contract: rows with NULL `by` or `on` follow WINDOW semantics
-    (NULL keys form one partition and match each other; NULL `on` sorts
+    NULL contract: rows with NULL `by` or `ts` follow WINDOW semantics
+    (NULL keys form one partition and match each other; NULL `ts` sorts
     to one end — under direction='forward' a NULL-on left row would see
     every right row as preceding), which DIVERGES from SQL ASOF JOIN
     equality (NULL never matches). Filter NULL keys/timestamps out
@@ -101,51 +92,38 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
                          "keyless as-of needs an unpartitioned window "
                          "(does not scale) — pre-bucket and pass the "
                          "bucket as `by`.")
-    if value_cols is None:
-        value_cols = [c for c in right.columns
-                      if c != on and c not in by_keys]
-    carried = [on] + [c for c in value_cols if c != on]
-
     # Name-collision contract (r8 advice item): the union plan reserves
-    # __side/__ord/__tb/__r internally and emits `{prefix}{c}` outputs;
-    # a left column with one of those names would be shadowed or make
-    # the final select ambiguous — fail loudly instead.
+    # __side/__ord/__tb/__r internally and emits `asof_ts`; a left column
+    # with one of those names would be shadowed or make the final select
+    # ambiguous — fail loudly instead.
     reserved = {"__side", "__ord", "__tb", "__r"}
-    clash = [c for c in left.columns
-             if c in reserved or c in {f"{prefix}{k}" for k in carried}]
+    clash = [c for c in left.columns if c in reserved or c == "asof_ts"]
     if clash:
         raise ValueError(
             f"asof_join: left columns {clash} collide with internal or "
-            f"output names (reserved {sorted(reserved)}, outputs "
-            f"{[f'{prefix}{k}' for k in carried]}); rename them or pass "
-            f"a different prefix=.")
+            f"output names (reserved {sorted(reserved)}, output asof_ts); "
+            f"rename them.")
 
-    # Carry the whole matched row as ONE struct: a struct literal is
-    # non-null on every right row even when its FIELDS are null, so
-    # last(ignorenulls) always picks the nearest right ROW and all
-    # carried columns come from that same row. Carrying each column
-    # with its own last(ignorenulls) would instead skip a matched row's
-    # NULL field and leak an older row's value into the output
-    # (review finding: mixed-row stitching).
-    r_struct = F.struct(*[F.col(c).alias(c) for c in carried])
+    # Carry the matched row as ONE struct: a struct literal is non-null
+    # on every right row even when its FIELDS are null, so
+    # last(ignorenulls) always picks the nearest right ROW.
+    r_struct = F.struct(F.col("ts").alias("ts"))
     null_struct = F.lit(None).cast(
-        "struct<" + ", ".join(f"`{c}`:{dict(right.dtypes)[c]}"
-                              for c in carried) + ">")
+        f"struct<`ts`:{dict(right.dtypes)['ts']}>")
     l_side = left.select(
         *[F.col(c) for c in left.columns],
         F.lit(1).alias("__side"),
         null_struct.alias("__r"),
-        F.lit(None).cast(dict(right.dtypes)[tiebreak]).alias("__tb")
-        if tiebreak else F.lit(0).alias("__tb"),
-        F.col(on).alias("__ord"))
+        F.lit(0).alias("__tb"),
+        F.col("ts").alias("__ord"))
     r_side = right.select(
         *[F.col(c) if c in by_keys else
           F.lit(None).cast(dict(left.dtypes)[c]).alias(c)
           for c in left.columns],
         F.lit(0).alias("__side"),
         r_struct.alias("__r"),
-        (F.col(tiebreak) if tiebreak else F.lit(0)).alias("__tb"),
-        F.col(on).alias("__ord"))
+        F.lit(0).alias("__tb"),
+        F.col("ts").alias("__ord"))
 
     if direction == "backward":
         order = [F.col("__ord").asc(), F.col("__side").asc(),
@@ -160,25 +138,24 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
     m = F.last("__r", ignorenulls=True).over(w)
     matched = u.select(
         *[F.col(c) for c in left.columns], "__side", "__ord",
-        *[m[c].alias(f"{prefix}{c}") for c in carried])
+        m["ts"].alias("asof_ts"))
     out = matched.filter(F.col("__side") == 1)
 
     if tolerance_s is not None:
-        is_ts = dict(left.dtypes)[on].startswith("timestamp")
+        is_ts = dict(left.dtypes)["ts"].startswith("timestamp")
         def _num(col):
             return F.unix_micros(col) if is_ts else col.cast("double")
         tol = tolerance_s * 1_000_000 if is_ts else tolerance_s
-        gap = (_num(F.col("__ord")) - _num(F.col(f"{prefix}{on}"))
+        gap = (_num(F.col("__ord")) - _num(F.col("asof_ts"))
                if direction == "backward"
-               else _num(F.col(f"{prefix}{on}")) - _num(F.col("__ord")))
+               else _num(F.col("asof_ts")) - _num(F.col("__ord")))
         ok = gap <= F.lit(tol)
         out = out.select(
             *[F.col(c) for c in left.columns],
-            *[F.when(ok, F.col(f"{prefix}{c}")).alias(f"{prefix}{c}")
-              for c in carried])
+            F.when(ok, F.col("asof_ts")).alias("asof_ts"))
     else:
         out = out.select(*[F.col(c) for c in left.columns],
-                         *[F.col(f"{prefix}{c}") for c in carried])
+                         F.col("asof_ts"))
     return out
 
 
@@ -281,63 +258,43 @@ def gap_fill(buckets: DataFrame, bucket_col: str, value_col: str,
                          filled_flag)
 
 
-def multi_resolution_rollup(events: DataFrame, ts_col: str = "ts",
-                            resolutions_s: tuple[int, ...] = (60, 3600, 86400),
-                            group_col: str | None = None,
-                            persist: bool = True) -> DataFrame:
-    """Hypertable-style continuous-aggregate rollup at several resolutions:
-    counts per (bucket, group), stacked with a `resolution_s`
-    discriminator.
+#: The rollup's bucket widths in seconds: 1 min, 1 h, 1 day. Each is a
+#: multiple of the first, so every level folds the minute partials.
+ROLLUP_RESOLUTIONS_S = (60, 3600, 86400)
 
-    Plan shape: when every resolution is a multiple of the finest (the
-    hypertable case — 1min/1h/1day), the raw data is scanned and
+
+def multi_resolution_rollup(events: DataFrame) -> DataFrame:
+    """Hypertable-style continuous-aggregate rollup at the
+    `ROLLUP_RESOLUTIONS_S` resolutions: counts per bucket of `ts`,
+    stacked with a `resolution_s` discriminator.
+
+    Plan shape: every resolution is a multiple of the finest (the
+    hypertable case — 1min/1h/1day), so the raw data is scanned and
     aggregated ONCE at the finest grain; every coarser level folds the
     finest level's partials (#fine-buckets rows, persisted) — identical
     results to independent aggregates because counts are decomposable,
-    but a 100 TB input is read once instead of once per level. Falls back
-    to independent per-level aggregates for non-nesting resolutions.
+    but a 100 TB input is read once instead of once per level.
 
     Cache ownership (r7 review): the returned DataFrame is lazily
     derived from the persisted finest-grain table, so this operator
     CANNOT unpersist it — the cache (#fine-buckets rows, bounded) lives
     until the session ends or the caller releases it via
     `spark.catalog.clearCache()`. Repeated calls in one session each pin
-    their own copy; pass persist=False to trade the single-scan
-    guarantee for zero cache residency (each coarser level then re-folds
-    from its own scan — the pre-r1 shape)."""
+    their own copy."""
     def bucket_ms(src_s, res: int):
         return (F.floor(src_s / res) * res * 1000).cast("long")
 
-    finest = min(resolutions_s)
-    group_keys = [F.col(group_col)] if group_col else []
-    if all(r % finest == 0 for r in resolutions_s):
-        base = (events.groupBy(
-            bucket_ms(F.unix_timestamp(F.col(ts_col)), finest)
-            .alias("bucket_start_ms"), *group_keys)
-            .agg(F.count("*").alias("n_events")))
-        if persist:
-            base = base.persist()      # consumed once per level
-        outs = []
-        for res in resolutions_s:
-            if res == finest:
-                out = base
-            else:
-                out = (base.groupBy(
-                    bucket_ms(F.col("bucket_start_ms") / 1000, res)
-                    .alias("bucket_start_ms"), *group_keys)
-                    .agg(F.sum("n_events").cast("long").alias("n_events")))
-            outs.append(out.withColumn("resolution_s",
-                                       F.lit(res).cast("long")))
-    else:
-        outs = []
-        for res in resolutions_s:
-            out = (events.groupBy(
-                bucket_ms(F.unix_timestamp(F.col(ts_col)), res)
-                .alias("bucket_start_ms"), *group_keys)
-                .agg(F.count("*").alias("n_events"))
-                .withColumn("resolution_s", F.lit(res).cast("long")))
-            outs.append(out)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
+    finest = ROLLUP_RESOLUTIONS_S[0]
+    base = (events.groupBy(
+        bucket_ms(F.unix_timestamp(F.col("ts")), finest)
+        .alias("bucket_start_ms"))
+        .agg(F.count("*").alias("n_events"))).persist()  # read per level
+    result = base.withColumn("resolution_s", F.lit(finest).cast("long"))
+    for res in ROLLUP_RESOLUTIONS_S[1:]:
+        out = (base.groupBy(
+            bucket_ms(F.col("bucket_start_ms") / 1000, res)
+            .alias("bucket_start_ms"))
+            .agg(F.sum("n_events").cast("long").alias("n_events")))
+        result = result.unionByName(
+            out.withColumn("resolution_s", F.lit(res).cast("long")))
     return result

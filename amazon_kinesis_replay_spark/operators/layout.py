@@ -257,24 +257,20 @@ def hilbert_lookup_nd(spark, bits: int, dims: int):
     return spark.createDataFrame(rows, "zkey long, hkey long")
 
 
-def hilbert_lookup(spark, bits: int = 8):
-    """(zkey -> hkey) mapping for every cell of the 2^bits × 2^bits
-    grid, as a broadcastable DataFrame (4^bits rows; bits=8 → 65,536 —
-    metadata scale). Why a LOOKUP TABLE and not a column expression:
+def hilbert_lookup(spark):
+    """(zkey -> hkey) mapping for every cell of the 64 × 64 grid (6 bits
+    per axis), as a broadcastable DataFrame (4,096 rows — metadata
+    scale). Why a LOOKUP TABLE and not a column expression:
     the xy2d bit walk carries rotation state, so unrolling it into
     when/otherwise wraps the running x/y expressions once per bit —
     multiplicative expression growth, the same per-run analysis/codegen
     cost class that made the 127-node balanced-tree dot LOSE its whole
-    query (docs/ROADMAP.md, dedup_embedding_cosine). A 65k-row
+    query (r7, dedup_embedding_cosine). A 4k-row
     broadcast join is the Spark-first shape for small finite functions."""
-    if bits > 10:
-        raise ValueError(
-            f"hilbert lookup is 4^bits rows; bits={bits} > 10 would "
-            "broadcast >1M rows — lower bits (8 covers 65k cells)")
     rows = []
-    for x in range(1 << bits):
-        for y in range(1 << bits):
-            rows.append((zvalue_py([x, y], bits), hilbert_py(x, y, bits)))
+    for x in range(1 << 6):
+        for y in range(1 << 6):
+            rows.append((zvalue_py([x, y], 6), hilbert_py(x, y, 6)))
     return spark.createDataFrame(rows, "zkey long, hkey long")
 
 

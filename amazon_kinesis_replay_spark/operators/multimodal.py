@@ -30,10 +30,7 @@ Decode coverage:
   audio codecs (MP3/AAC/Opus) — progressive JPEG decodes natively
   since r9 (functions/jpeg.py §G), G.711-in-WAV since r9, FLAC since
   r10, arithmetic-coded JPEG (SOF9 + SOF10, QM coder) since r10 too.
-  The remaining stubs raise NotImplementedError; the image operators'
-  `fake=True` substitutes a deterministic fake decoder so the
-  Spark-side plumbing (schema, batching, partitioning) stays fully
-  real and testable without valid media.
+  The remaining stubs raise NotImplementedError.
 """
 
 from __future__ import annotations
@@ -58,16 +55,6 @@ IMAGE_FEATURES_SCHEMA = StructType([
     StructField("sha1", StringType(), True),
     StructField("features", ArrayType(FloatType()), True),
 ])
-
-def _fake_decode_image(data: bytes) -> tuple[int, int, list[float]]:
-    """Deterministic stand-in for a real image decoder: dimensions and an
-    8-dim feature vector derived from the payload digest."""
-    digest = hashlib.sha1(data or b"").digest()
-    width = 64 + digest[0] % 192
-    height = 64 + digest[1] % 192
-    feats = [round(b / 255.0, 6) for b in digest[2:10]]
-    return width, height, feats
-
 
 def _parse_bmp(raw: bytes) -> tuple[int, int, bytes]:
     """Width, height, and the pixel-array bytes of a BMP payload.
@@ -387,7 +374,7 @@ _GIF_PALETTE = bytes(
     b for i in range(256) for b in (i, 255 - i, i ^ 0x55))
 
 
-def synth_image_blob(media_id: int, raw: bytes, side: int = 8) -> bytes:
+def synth_image_blob(media_id: int, raw: bytes) -> bytes:
     """The deterministic per-row synthesis rule behind
     synthesize_image_media, cycling media_id through EIGHT codec modes
     (late r10 widened from five — BOTH WebP classes AND TIFF join the
@@ -408,6 +395,7 @@ def synth_image_blob(media_id: int, raw: bytes, side: int = 8) -> bytes:
     together when the cycle changes."""
     from ..functions.gif import encode_gif
     from ..functions.jpeg import encode_jpeg
+    side = 8                   # raster edge; VP8 fixtures keep their own
     n = side * side * 3
     m = int(media_id)
     raster = (raw + bytes(n))[:n]
@@ -470,10 +458,10 @@ def synth_vp8_blob(media_id: int, raw: bytes) -> bytes:
     return out[:4] + struct.pack("<I", len(out) - 8) + out[8:]
 
 
-def synth_audio_blob(media_id: int, raw: bytes, rate: int = 8000) -> bytes:
+def synth_audio_blob(media_id: int, raw: bytes) -> bytes:
     """Deterministic per-row AUDIO fixture synthesis — the audio twin
-    of synth_image_blob (r10): int16 samples derive from a tonal base
-    plus the payload bytes, and media_id%4 cycles the container/codec
+    of synth_image_blob (r10): 8 kHz int16 samples derive from a tonal
+    base plus the payload bytes, and media_id%4 cycles the container/codec
     (widened from %3 late r10 — both gate sides recompute through this
     same pure function, so they move together): ==0 -> FLAC (stereo
     mid/side, LPC order 4, blocksize 256 — the full lossless entropy
@@ -485,6 +473,7 @@ def synth_audio_blob(media_id: int, raw: bytes, rate: int = 8000) -> bytes:
     driver-side."""
     import math
     import struct
+    rate = 8000
     m = int(media_id)
     n = 400 + (m % 7) * 37
     L = max(len(raw), 1)
@@ -551,18 +540,12 @@ def audio_content_digest(rate: int, channels: int, mono) -> str:
                         + ints.tobytes()).hexdigest()
 
 
-def audio_meta(df: DataFrame, on_error: str = "raise") -> DataFrame:
+def audio_meta(df: DataFrame) -> DataFrame:
     """Distributed audio metadata + exact content digest through the
     REAL decoders (r10): (sample_rate, channels, total_frames) from the
     container walk and `audio_content_digest` over the decoded signal —
-    malformed payloads raise (never silently wrong); on_error="skip"
-    (r11) drops undecodable payloads instead, the 100 TB corpus
-    contract (same policy knob as decode_images). Arrow-batched
+    malformed payloads raise (never silently wrong). Arrow-batched
     mapInPandas over (media_id, data)."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be raise|skip, got {on_error!r}")
-    skip_errors = _image_decode_errors() if on_error == "skip" else ()
-    skip_counter = _skip_counter_for(df, on_error)
 
     def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_zip_finders()
@@ -570,11 +553,7 @@ def audio_meta(df: DataFrame, on_error: str = "raise") -> DataFrame:
             rows = {"media_id": [], "sample_rate": [], "channels": [],
                     "total_frames": [], "mono_digest": []}
             for mid, data in zip(pdf["media_id"], pdf["data"]):
-                try:
-                    rate, ch, frames, mono = _audio_mono_f64(bytes(data))
-                except skip_errors:
-                    skip_counter.add(1)   # undecodable payload: drop row
-                    continue
+                rate, ch, frames, mono = _audio_mono_f64(bytes(data))
                 rows["media_id"].append(mid)
                 rows["sample_rate"].append(rate)
                 rows["channels"].append(ch)
@@ -584,14 +563,12 @@ def audio_meta(df: DataFrame, on_error: str = "raise") -> DataFrame:
             if rows["media_id"]:
                 yield pd.DataFrame(rows)
 
-    out_df = df.select("media_id", "data").mapInPandas(
+    return df.select("media_id", "data").mapInPandas(
         _kernel, "media_id long, sample_rate int, channels int, "
                  "total_frames long, mono_digest string")
-    out_df.skipped_rows = skip_counter
-    return out_df
 
 
-def synthesize_image_media(df: DataFrame, side: int = 8) -> DataFrame:
+def synthesize_image_media(df: DataFrame) -> DataFrame:
     """Deterministic REAL mixed-codec fixture synthesis cycling media_id
     through EIGHT codec modes (see synth_image_blob: PNG, baseline
     JPEG, GIF, arithmetic JPEG, progressive JPEG, WebP VP8L, lossy
@@ -609,22 +586,22 @@ def synthesize_image_media(df: DataFrame, side: int = 8) -> DataFrame:
             for mid, data in zip(pdf["media_id"], pdf["data"]):
                 raw = bytes(data) if data is not None else b""
                 ids.append(mid)
-                blobs.append(synth_image_blob(int(mid), raw, side))
+                blobs.append(synth_image_blob(int(mid), raw))
             yield pd.DataFrame({"media_id": ids, "data": blobs})
 
     return df.select("media_id", "data").mapInPandas(
         _synth, "media_id long, data binary")
 
 
-def _pixel_histogram(pixels: bytes, bins: int = 8) -> list[float]:
-    """Normalized byte-value histogram over the raster — a real, decoder-
-    independent image feature (deterministic; no codec needed for the
-    uncompressed formats)."""
+def _pixel_histogram(pixels: bytes) -> list[float]:
+    """Normalized 8-bin byte-value histogram over the raster — a real,
+    decoder-independent image feature (deterministic; no codec needed
+    for the uncompressed formats)."""
     if not pixels:
-        return [0.0] * bins
+        return [0.0] * 8
     import numpy as np
     arr = np.frombuffer(pixels, dtype=np.uint8)
-    hist, _ = np.histogram(arr, bins=bins, range=(0, 256))
+    hist, _ = np.histogram(arr, bins=8, range=(0, 256))
     return [round(float(x) / len(arr), 6) for x in hist]
 
 
@@ -657,8 +634,7 @@ def _decode_pixels(raw: bytes) -> tuple[int, int, bytes]:
         "and uncompressed BMP/PPM/PGM decode without a third-party "
         "library (JPEG covers baseline AND progressive since r9; WebP "
         "VP8L lossless AND lossy VP8, and baseline TIFF, since r10 — "
-        "functions/webp.py, functions/vp8.py, functions/tiff.py); pass "
-        "fake=True for the deterministic test decoder")
+        "functions/webp.py, functions/vp8.py, functions/tiff.py)")
 
 
 def _real_decode_image(raw: bytes) -> tuple[int, int, list[float]]:
@@ -684,44 +660,7 @@ def _apply_codec_caps(caps: dict) -> None:
     tiff.MAX_SAMPLE_BYTES = caps["tiff_max_sample_bytes"]
 
 
-#: everything the pure-Python image codecs raise on corrupt/unsupported
-#: payloads: the per-codec error classes are all ValueError subclasses
-#: (TIFFError, WebPError, ...), PNG inflate raises zlib.error, header
-#: walks over truncated buffers raise struct.error, capability gates
-#: raise NotImplementedError. Used by the on_error="skip" corpus policy.
-#: MemoryError is deliberately NOT here: every decoder bounds its
-#: allocations from validated header fields (e.g. the TIFF byte-size
-#: caps), so a MemoryError means the WORKER is out of memory — that
-#: must fail the task loudly, not silently shrink the corpus.
-def _image_decode_errors():
-    import struct as _struct
-    import zlib as _zlib
-    return (ValueError, NotImplementedError, OSError, EOFError,
-            KeyError, IndexError, _struct.error, _zlib.error)
-
-
-def _skip_counter_for(df: DataFrame, on_error: str):
-    """A per-call Spark accumulator counting rows dropped by the
-    on_error="skip" corpus policy (r11 advice: row counts alone can't
-    distinguish 'a few corrupt blobs' from 'a codec regression skipping
-    a whole mode'). None under on_error="raise". The caller attaches it
-    to the returned frame as `.skipped_rows`; read `.value` on the
-    driver AFTER an action. Standard accumulator caveats (r12 review):
-    (a) task retries / stage re-executions can double-count; (b) EVERY
-    action on the un-persisted frame re-runs the kernel and adds the
-    skips again (count() then collect() reads 2x) — persist() the
-    frame or read the meter after exactly one action; (c) the
-    attribute lives on the RETURNED frame object only — any
-    .filter()/.select() derivative is a new DataFrame without it, so
-    capture the meter (or the frame) before composing. An
-    observability meter, not an exact count."""
-    if on_error != "skip":
-        return None
-    return df.sparkSession.sparkContext.accumulator(0)
-
-
-def decode_images(df: DataFrame, fake: bool = False,
-                  on_error: str = "raise") -> DataFrame:
+def decode_images(df: DataFrame) -> DataFrame:
     """Decode + feature-extract image payloads via mapInPandas.
 
     The real path decodes PNG (incl. Adam7) / JPEG (baseline,
@@ -729,22 +668,8 @@ def decode_images(df: DataFrame, fake: bool = False,
     incl. ALPH) / baseline TIFF / BMP / PPM / PGM with the pure-Python
     codecs (`_decode_pixels`),
     computing a pixel-histogram feature vector over the decoded raster;
-    unsupported formats raise loudly from the kernel. fake=True
-    substitutes the deterministic fake decoder for any payload.
-
-    on_error: "raise" (default — the gated-fixture contract: a bad blob
-    is a bug) or "skip" (the 100 TB corpus contract: an undecodable
-    blob drops from the output like every other ingest path). Under
-    "skip" the returned frame carries a `.skipped_rows` accumulator
-    (read `.value` after an action) so a corpus run can tell a few
-    corrupt blobs from a codec regression silently dropping a whole
-    mode; None under "raise". resize_images / audio_meta expose the
-    same meter."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be raise|skip, got {on_error!r}")
-    decode_one = _fake_decode_image if fake else _real_decode_image
-    skip_errors = _image_decode_errors() if on_error == "skip" else ()
-    skip_counter = _skip_counter_for(df, on_error)
+    unsupported or corrupt payloads raise loudly from the kernel (the
+    gated-fixture contract: a bad blob is a bug)."""
     caps = _codec_caps()
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -755,11 +680,7 @@ def decode_images(df: DataFrame, fake: bool = False,
                    "n_bytes": [], "sha1": [], "features": []}
             for mid, data in zip(pdf["media_id"], pdf["data"]):
                 raw = bytes(data) if data is not None else b""
-                try:
-                    w, h, feats = decode_one(raw)
-                except skip_errors:
-                    skip_counter.add(1)   # undecodable blob: drop row
-                    continue
+                w, h, feats = _real_decode_image(raw)
                 out["media_id"].append(mid)
                 out["width"].append(w)
                 out["height"].append(h)
@@ -767,14 +688,12 @@ def decode_images(df: DataFrame, fake: bool = False,
                 out["sha1"].append(hashlib.sha1(raw).hexdigest())
                 out["features"].append(feats)
             if out["media_id"]:
-                # an all-skipped batch would yield empty float64
-                # columns Arrow can't cast to list<float>
+                # an empty batch would yield empty float64 columns
+                # Arrow can't cast to list<float>
                 yield pd.DataFrame(out)
 
-    out_df = df.select("media_id", "data").mapInPandas(
+    return df.select("media_id", "data").mapInPandas(
         _decode, IMAGE_FEATURES_SCHEMA)
-    out_df.skipped_rows = skip_counter
-    return out_df
 
 
 RESIZED_IMAGE_SCHEMA = StructType([
@@ -797,33 +716,21 @@ def _resize_nn(pixels: bytes, w: int, h: int, c: int,
     return np.ascontiguousarray(a[ys][:, xs]).tobytes()
 
 
-def resize_images(df: DataFrame, out_w: int, out_h: int,
-                  fake: bool = False,
-                  on_error: str = "raise") -> DataFrame:
+def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Decode + RESIZE image payloads to a fixed raster (the
     normalize-for-training step next to decode/feature-extract/
     frame-sample): nearest-neighbor resample of the decoded raster to
     (out_w, out_h), preserving the source's channel layout (PNG
     grayscale/RGBA stay 1/4-channel; everything else RGB). Same
-    Arrow-batched mapInPandas shape and codec dispatch as decode_images;
-    fake=True turns any payload into a deterministic 8x8 RGB raster
-    first (payload bytes, zero-padded) so pipelines can be exercised
-    without valid media.
+    Arrow-batched mapInPandas shape and codec dispatch as decode_images.
 
     Output: (media_id, width, height, channels, pixels) — width/height
     are the OUTPUT dims, pixels the resized raw channel bytes."""
     if out_w < 1 or out_h < 1:
         raise ValueError(f"output dims must be >= 1, got {out_w}x{out_h}")
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be raise|skip, got {on_error!r}")
-    skip_errors = _image_decode_errors() if on_error == "skip" else ()
-    skip_counter = _skip_counter_for(df, on_error)
     caps = _codec_caps()
 
     def _decode(raw: bytes) -> tuple[int, int, int, bytes]:
-        if fake:
-            raster = (raw + bytes(192))[:192]
-            return 8, 8, 3, raster
         w, h, pixels = _decode_pixels(raw)
         if w * h == 0 or len(pixels) % (w * h):
             raise ValueError("decoded raster size mismatch")
@@ -837,11 +744,7 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
                    "channels": [], "pixels": []}
             for mid, data in zip(pdf["media_id"], pdf["data"]):
                 raw = bytes(data) if data is not None else b""
-                try:
-                    w, h, c, pixels = _decode(raw)
-                except skip_errors:
-                    skip_counter.add(1)   # undecodable blob: drop row
-                    continue
+                w, h, c, pixels = _decode(raw)
                 out["media_id"].append(mid)
                 out["width"].append(out_w)
                 out["height"].append(out_h)
@@ -851,10 +754,8 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
             if out["media_id"]:
                 yield pd.DataFrame(out)
 
-    out_df = df.select("media_id", "data").mapInPandas(
+    return df.select("media_id", "data").mapInPandas(
         _resize, RESIZED_IMAGE_SCHEMA)
-    out_df.skipped_rows = skip_counter
-    return out_df
 
 
 def _parse_wav(raw: bytes) -> tuple[int, int, int, bytes, int, int]:

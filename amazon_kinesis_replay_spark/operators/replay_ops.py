@@ -59,8 +59,9 @@ def ingestion_time_ms(ts_col: Column, first_ts_col: Column,
 
 
 def with_ingestion_time(df: DataFrame, ts_col: str, ingestion_start_ms: int,
-                        speedup: float, out_col: str = "ingestion_ms") -> DataFrame:
-    """Derive ingestion time for every row, anchored at global min(ts).
+                        speedup: float) -> DataFrame:
+    """Derive ingestion time (`ingestion_ms`) for every row, anchored at
+    global min(ts).
 
     Two-pass + broadcast: the 1-row min(ts) aggregate cross-joins back in
     (Catalyst plans it as a broadcast nested loop over a 1-row build side),
@@ -70,20 +71,19 @@ def with_ingestion_time(df: DataFrame, ts_col: str, ingestion_start_ms: int,
     anchor = df.agg(F.min(ts_col).alias("__first_ts"))
     return (
         df.crossJoin(F.broadcast(anchor))
-        .withColumn(out_col, ingestion_time_ms(
+        .withColumn("ingestion_ms", ingestion_time_ms(
             F.col(ts_col), F.col("__first_ts"), ingestion_start_ms, speedup))
         .drop("__first_ts")
     )
 
 
-def normalize_payload(df: DataFrame, payload_col: str,
-                      out_col: str | None = None) -> DataFrame:
-    """OP-PROJ-NEWLINE — append a trailing newline iff missing
-    (JsonEvent.java:43-49, "easier digestible by firehose and athena")."""
-    out = out_col or payload_col
+def normalize_payload(df: DataFrame, payload_col: str) -> DataFrame:
+    """OP-PROJ-NEWLINE — append a trailing newline to `payload_col` iff
+    missing (JsonEvent.java:43-49, "easier digestible by firehose and
+    athena")."""
     c = F.col(payload_col)
     return df.withColumn(
-        out, F.when(c.endswith("\n"), c).otherwise(F.concat(c, F.lit("\n"))))
+        payload_col, F.when(c.endswith("\n"), c).otherwise(F.concat(c, F.lit("\n"))))
 
 
 # --------------------------------------------------------------------------
@@ -145,9 +145,9 @@ def _range_bucket_key(df: DataFrame, first_col: str):
         f"got {first_col}: {dt}")
 
 
-def with_global_index(df: DataFrame, order_cols: list[str],
-                      out_col: str = "rn", num_partitions: int | None = None) -> DataFrame:
-    """Scalable global 1-based row number in `order_cols` order (batch only).
+def with_global_index(df: DataFrame, order_cols: list[str]) -> DataFrame:
+    """Scalable global 1-based row number `__rn` in `order_cols` order
+    (batch only).
 
     Partition-offset scheme with DETERMINISTIC, explicitly computed range
     bounds:
@@ -179,7 +179,7 @@ def with_global_index(df: DataFrame, order_cols: list[str],
     Equivalent result to `row_number() over (order by ...)` but never
     serializes the dataset through a single task.
     """
-    tagged, n_parts, single = _range_tagged(df, order_cols, num_partitions)
+    tagged, n_parts, single = _range_tagged(df, order_cols)
     order_sql = ", ".join(f"`{c}`" for c in order_cols)
     local = (tagged.repartition(n_parts, F.col("__pid"))
              .selectExpr("*", "row_number() OVER (PARTITION BY __pid "
@@ -190,7 +190,7 @@ def with_global_index(df: DataFrame, order_cols: list[str],
         # constant-__pid equi-join would also constant-fold into a
         # nested-loop join against the 1-row offsets table).
         return local.selectExpr(*[f"`{c}`" for c in df.columns],
-                                f"__local_rn AS `{out_col}`")
+                                "__local_rn AS `__rn`")
     # Offsets from the same literal-bounds pid expression: map-side partial
     # counts, then a cumsum window over #partitions rows — O(parallelism),
     # not O(data).
@@ -202,7 +202,7 @@ def with_global_index(df: DataFrame, order_cols: list[str],
                           "PRECEDING), 0) AS BIGINT) AS __off"))
     return (local.join(F.broadcast(off_df), "__pid")
             .selectExpr(*[f"`{c}`" for c in df.columns],
-                        f"(__local_rn + __off) AS `{out_col}`"))
+                        "(__local_rn + __off) AS `__rn`"))
 
 
 def _advisory_bytes(spark) -> int:
@@ -244,8 +244,8 @@ def _adaptive_parts(df: DataFrame) -> int:
     return max(1, min(conf_parts, -(-size // _advisory_bytes(spark))))
 
 
-def _range_tagged(df: DataFrame, order_cols: list[str],
-                  num_partitions: int | None) -> tuple[DataFrame, int, bool]:
+def _range_tagged(df: DataFrame,
+                  order_cols: list[str]) -> tuple[DataFrame, int, bool]:
     """Tag every row with a deterministic range-bucket `__pid` on the first
     order column (the shared engine of with_global_index /
     with_global_cumsum; see with_global_index for the scheme discussion).
@@ -253,7 +253,7 @@ def _range_tagged(df: DataFrame, order_cols: list[str],
     bounds): callers then skip the offsets branch — offsets are 0 by
     construction."""
     spark = df.sparkSession
-    n_parts = num_partitions or _adaptive_parts(df)
+    n_parts = _adaptive_parts(df)
     key = _range_bucket_key(df, order_cols[0])
 
     probs = [i / n_parts for i in range(1, n_parts)]
@@ -292,8 +292,7 @@ def _range_tagged(df: DataFrame, order_cols: list[str],
 
 
 def with_global_cumsum(df: DataFrame, order_cols: list[str], value_col: str,
-                       out_col: str = "cumsum_excl",
-                       num_partitions: int | None = None) -> DataFrame:
+                       out_col: str) -> DataFrame:
     """Scalable EXCLUSIVE global running sum of `value_col` in `order_cols`
     order: out = sum of the value over all strictly-earlier rows (0 for the
     first row). Same partition-offset scheme as with_global_index — the
@@ -304,7 +303,7 @@ def with_global_cumsum(df: DataFrame, order_cols: list[str], value_col: str,
 
     Equivalent result to `coalesce(sum(v) over (order by ... rows between
     unbounded preceding and 1 preceding), 0)`."""
-    tagged, n_parts, single = _range_tagged(df, order_cols, num_partitions)
+    tagged, n_parts, single = _range_tagged(df, order_cols)
     order_sql = ", ".join(f"`{c}`" for c in order_cols)
     local = (tagged.repartition(n_parts, F.col("__pid"))
              .selectExpr("*",
@@ -328,20 +327,20 @@ def with_global_cumsum(df: DataFrame, order_cols: list[str], value_col: str,
 
 
 def assign_batches(df: DataFrame, order_cols: list[str],
-                   max_per_batch: int = 500, out_col: str = "batch_id") -> DataFrame:
-    """OP-SINK-KINESIS batching — deterministic ≤500-record batch ids.
+                   max_per_batch: int = 500) -> DataFrame:
+    """OP-SINK-KINESIS batching — deterministic ≤500-record `batch_id`s.
 
     batch_id = floor((rn - 1) / max_per_batch) over the event-time order;
     mirrors drainTo(batch, 500) at KinesisProducer.java:112 with the service
     limit constant at :25.
     """
-    idx = with_global_index(df, order_cols, out_col="__rn")
+    idx = with_global_index(df, order_cols)
     return idx.withColumn(
-        out_col, F.floor((F.col("__rn") - 1) / max_per_batch)).drop("__rn")
+        "batch_id", F.floor((F.col("__rn") - 1) / max_per_batch)).drop("__rn")
 
 
-def surrogate_shard(df: DataFrame, key_col: str, n_shards: int,
-                    out_col: str = "shard") -> DataFrame:
+def surrogate_shard(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
     """Deterministic stand-in for the UUID shard spread (SURVEY §2.9):
     shard = key % n_shards, checkable against the SQL oracle."""
-    return df.withColumn(out_col, F.pmod(F.col(key_col), F.lit(n_shards)).cast("int"))
+    return df.withColumn(
+        "shard", F.pmod(F.col(key_col), F.lit(n_shards)).cast("int"))

@@ -22,14 +22,14 @@ from pyspark.sql import functions as F
 from .text import tokens_expr
 
 
-def postings(docs: DataFrame, id_col: str = "doc_id",
-             text_col: str = "text") -> DataFrame:
-    """Inverted index rows (term, id, tf): one explode + one groupBy
+def postings(docs: DataFrame) -> DataFrame:
+    """Inverted index rows (term, id, tf) of the `text` column keyed by
+    `doc_id`: one explode + one groupBy
     (map-side combinable — tf partials fold before the shuffle). Uses
     the package-wide tokenizer (`text.tokens_expr`: split(trim(lower),
     \\s+)), so retrieval and dedup shingles agree on token
     boundaries."""
-    return (docs.selectExpr(f"{id_col} AS id",
-                            f"explode({tokens_expr(text_col)}) AS term")
+    return (docs.selectExpr("doc_id AS id",
+                            f"explode({tokens_expr('text')}) AS term")
             .groupBy("term", "id")
             .agg(F.count("*").cast("long").alias("tf")))

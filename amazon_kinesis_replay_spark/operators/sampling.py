@@ -57,9 +57,9 @@ def hash_ppm_expr(id_sql: str) -> str:
 
 
 def temperature_mixture_rates(df: DataFrame, domain_col: str,
-                              weight, target_frac: float = 0.5,
-                              temperature: float = 2.0) -> DataFrame:
-    """Per-domain sampling rates for temperature mixture sampling.
+                              weight) -> DataFrame:
+    """Per-domain sampling rates for temperature mixture sampling at
+    temperature T=2 and target_frac 0.5 of the corpus:
 
     q_d  ∝  (w_d * n_d)^(1/T)          (sampled share of domain d)
     rate_d = min(1, target_frac * N * q_d / n_d)
@@ -69,15 +69,14 @@ def temperature_mixture_rates(df: DataFrame, domain_col: str,
     literal / pure function — e.g. a CASE over domain names), or None
     for weight 1.
 
-    T=2 (the default) evaluates as sqrt(w*n) — sqrt, multiply and
-    divide are correctly-rounded IEEE ops, and the cross-domain total
-    sums floor-quantized longs (r10, replacing the mirrored decimal
-    cast — see similarity._Q_SCALE: Spark and DuckDB disagreed on
+    T=2 evaluates as sqrt(w*n) — sqrt, multiply and divide are
+    correctly-rounded IEEE ops, and the cross-domain total sums
+    floor-quantized longs (r10, replacing the mirrored decimal cast —
+    see similarity._Q_SCALE: Spark and DuckDB disagreed on
     shortest-repr midpoint ties; floor(v*1e12+0.5) is pure IEEE and
     identical in both) in a decimal(38,0) accumulator, so an oracle
-    SQL engine computes the identical rate_ppm. Other T values use
-    pow() and are NOT bit-portable across engines (libm variance);
-    they remain available for production use.
+    SQL engine computes the identical rate_ppm. (Any other T would
+    need pow(), which is NOT bit-portable across engines.)
 
     Scale shape: one map-side-combinable count per domain (the result
     is domain-cardinality — metadata), cross-domain totals via an
@@ -99,10 +98,7 @@ def temperature_mixture_rates(df: DataFrame, domain_col: str,
     # types are unchanged (sqrt/multiply/divide doubles, the
     # floor-quantized decimal(38,0) window total), so rate_ppm is
     # bit-identical (doc_train_split's oracle gate pins it).
-    if temperature == 2.0:
-        s = "sqrt(__w * CAST(n_docs AS DOUBLE))"
-    else:
-        s = f"power(__w * CAST(n_docs AS DOUBLE), {1.0 / temperature!r}D)"
+    s = "sqrt(__w * CAST(n_docs AS DOUBLE))"
     # cross-domain totals as an UNPARTITIONED window over the counts
     # frame — acceptable precisely because this frame is
     # domain-cardinality (metadata), and it keeps a (harmless but
@@ -111,7 +107,7 @@ def temperature_mixture_rates(df: DataFrame, domain_col: str,
     # same exact order-independent total the agg form computed.
     stot = ("(CAST(sum(CAST(floor(__s * 1.0E12D + 0.5D) "
             "AS decimal(38,0))) OVER () AS DOUBLE) / 1.0E12D)")
-    rate = (f"least(1.0D, ({float(target_frac)!r}D "
+    rate = ("least(1.0D, (0.5D "
             f"* CAST(sum(n_docs) OVER () AS DOUBLE)) "
             f"* (__s / {stot}) / CAST(n_docs AS DOUBLE))")
     return (counts.selectExpr("*", f"{s} AS __s")
@@ -121,8 +117,7 @@ def temperature_mixture_rates(df: DataFrame, domain_col: str,
 
 
 def mixture_sample(df: DataFrame, id_col: str, domain_col: str,
-                   weight=None, target_frac: float = 0.5,
-                   temperature: float = 2.0) -> DataFrame:
+                   weight=None) -> DataFrame:
     """Tag every row with its domain's temperature-mixture rate and the
     deterministic keep verdict: adds (mix_rate_ppm, mix_kept). Filter
     on mix_kept for the sampled corpus; keeping the verdict as a column
@@ -132,8 +127,7 @@ def mixture_sample(df: DataFrame, id_col: str, domain_col: str,
     The rates table is domain-cardinality — broadcast; the corpus scan
     stays pipeline-local (no shuffle of data rows).
     """
-    rates = temperature_mixture_rates(df, domain_col, weight,
-                                      target_frac, temperature)
+    rates = temperature_mixture_rates(df, domain_col, weight)
     r = rates.select(F.col(domain_col).alias("__dom"), "rate_ppm")
     # NULL-SAFE join: a NULL domain is a real domain — groupBy gave it
     # a rates row, and an inner equi-join would silently drop its docs
@@ -152,18 +146,21 @@ def mixture_sample(df: DataFrame, id_col: str, domain_col: str,
 # --------------------------------------------------------------------------
 
 
-def _hashed_gram_buckets(text_col: str, n_buckets: int,
-                         ns: tuple = (1, 2)) -> Column:
+#: Bucket count m of the DSIR hashed-n-gram feature map.
+DSIR_BUCKETS = 10_000
+
+
+def _hashed_gram_buckets(text_col: str) -> Column:
     """array<long> of hashed word-n-gram bucket ids — the DSIR paper's
     feature map (Xie et al. 2023, §2.2: hashed unigram+bigram counts
-    into m buckets). Gram string = the n words space-joined; bucket =
-    pmod(xxhash64(gram), m). Pure column expression (whole-stage
-    codegen); the python twin is the SIGNED interpretation of
+    into m = DSIR_BUCKETS buckets). Gram string = the n words
+    space-joined; bucket = pmod(xxhash64(gram), m). Pure column
+    expression (whole-stage codegen); the python twin is the SIGNED interpretation of
     xxh64_string(gram) taken % m (python % is already a positive mod),
     which is what makes the bucket geometry hash-gateable."""
     from . import text as _text
     arrs = []
-    for n in ns:
+    for n in (1, 2):
         grams = _text._word_ngrams(text_col, n)
         if n == 1:
             # branch on n, NOT on context == '': an n>1 gram whose first
@@ -175,13 +172,11 @@ def _hashed_gram_buckets(text_col: str, n_buckets: int,
             arrs.append(F.transform(
                 grams,
                 lambda g: F.concat(g["context"], F.lit(" "), g["token"])))
-    allg = F.concat(*arrs) if len(arrs) > 1 else arrs[0]
-    return F.transform(allg,
-                       lambda s: F.pmod(F.xxhash64(s), F.lit(n_buckets)))
+    return F.transform(F.concat(*arrs),
+                       lambda s: F.pmod(F.xxhash64(s), F.lit(DSIR_BUCKETS)))
 
 
 def dsir_hashed_counts(df: DataFrame, text_col: str,
-                       n_buckets: int = 10_000, ns: tuple = (1, 2),
                        id_col: str | None = None) -> DataFrame:
     """Hashed-n-gram bucket counts: (bucket, cnt) over a corpus, or
     (id, bucket, cnt) per document when id_col is given. The CORPUS form
@@ -189,9 +184,9 @@ def dsir_hashed_counts(df: DataFrame, text_col: str,
     models by calling this on each corpus. Mergeable by cell-wise sum
     (additive, not idempotent), so daily crawls fold without
     re-scanning history. One explode + one map-side-combinable groupBy;
-    the corpus model is at most n_buckets rows regardless of input."""
+    the corpus model is at most DSIR_BUCKETS rows regardless of input."""
     cols = ([F.col(id_col)] if id_col else []) + [
-        F.explode(_hashed_gram_buckets(text_col, n_buckets, ns))
+        F.explode(_hashed_gram_buckets(text_col))
         .alias("bucket")]
     keys = ([id_col] if id_col else []) + ["bucket"]
     return (df.select(*cols).groupBy(*keys)
@@ -199,9 +194,8 @@ def dsir_hashed_counts(df: DataFrame, text_col: str,
 
 
 def dsir_hashed_stats(df: DataFrame, id_col: str, text_col: str,
-                      target_counts: DataFrame, raw_counts: DataFrame,
-                      n_buckets: int = 10_000,
-                      ns: tuple = (1, 2)) -> DataFrame:
+                      target_counts: DataFrame,
+                      raw_counts: DataFrame) -> DataFrame:
     """EXACT-INTEGER sufficient statistics of each document against two
     hashed-bucket models: (id, hb_grams, hb_t_sum, hb_r_sum) — total
     hashed grams, and the doc-count-weighted sums of the target/raw
@@ -209,7 +203,7 @@ def dsir_hashed_stats(df: DataFrame, id_col: str, text_col: str,
     log-ratio would be built from exactly these joins; gating the
     integers pins the whole bucket geometry + hash while keeping libm
     logs out of the gate."""
-    per = dsir_hashed_counts(df, text_col, n_buckets, ns, id_col=id_col)
+    per = dsir_hashed_counts(df, text_col, id_col=id_col)
     t = target_counts.select("bucket", F.col("cnt").alias("__tc"))
     r = raw_counts.select("bucket", F.col("cnt").alias("__rc"))
     agg = (per.join(t, "bucket", "left").join(r, "bucket", "left")

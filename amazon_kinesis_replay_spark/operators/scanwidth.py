@@ -53,7 +53,7 @@ _SHUFFLY = {"Repartition", "RepartitionByExpression", "Join",
 _NODE_RE = _re.compile(r"^[\s:+|-]*'?([A-Za-z]\w*)", _re.M)
 
 
-def widen_if_narrow(df: DataFrame, width: int | None = None) -> DataFrame:
+def widen_if_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition `df` to the session's parallelism ONLY when
     its plan is a narrow plain file scan (no width-determining operator,
     fewer input files than cores). Returns `df` unchanged otherwise.
@@ -63,7 +63,7 @@ def widen_if_narrow(df: DataFrame, width: int | None = None) -> DataFrame:
     is exact-integer/decimal (order-independent) by the cross-engine float
     rules."""
     spark = df.sparkSession
-    width = width or spark.sparkContext.defaultParallelism
+    width = spark.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().analyzed().toString()
     nodes = {m.group(1) for m in _NODE_RE.finditer(plan)}
     if not nodes:

@@ -76,217 +76,146 @@ def _fast_dot_sql(a: str, b: str) -> str:
             f"(acc, v) -> acc + v)")
 
 
-def _fast_dot_fixed_sql(a: str, b: str, dim: int) -> str:
-    """Double-precision dot for a KNOWN vector width, as a BALANCED TREE of
-    element_at products (explicit parentheses pin the association):
-    unlike the left-deep unrolled chain (measured 2.4x slower — codegen
-    splits it into a deep call chain) and the interpreted HOF
-    `_fast_dot_sql`, the log-depth tree stays inside whole-stage
-    codegen's method-split limits (measured r7 at sf0.1, 15k candidate
-    pairs: verify stage 0.69 s tree vs 0.87 s HOF vs 0.88 s chain).
-    Numerically at least as tight as the sequential fold (pairwise
-    summation), so every pre-filter margin argument for `_fast_dot_sql`
-    holds unchanged. Use when the corpus pins the dimension (embedding
-    tables do); dims ≳ a few hundred should stay on `_fast_dot_sql` —
-    expression size grows linearly and analysis cost eventually
-    dominates.
-
-    Width guard (r7 review): dim SMALLER than the true vector width
-    would silently truncate the dot (a pre-filter computed over a prefix
-    but normalized by full norms under-scores true pairs and drops them
-    before exact verification — silent recall loss). dim larger already
-    throws under ANSI element_at; the assert_true makes the short case
-    just as loud. It returns NULL when the predicate holds, so the
-    coalesce adds exactly 0.0 to the dot."""
-    terms = [f"(CAST(element_at({a}, {i + 1}) AS DOUBLE) * "
-             f"CAST(element_at({b}, {i + 1}) AS DOUBLE))"
-             for i in range(dim)]
-    while len(terms) > 1:
-        terms = [f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms)
-                 else terms[i] for i in range(0, len(terms), 2)]
-    msg = f"_fast_dot_fixed: vector width != pinned dim={dim}"
-    chk = (f"coalesce(CAST(assert_true(size({a}) = {dim} AND "
-           f"size({b}) = {dim}, '{msg}') AS DOUBLE), 0.0D)")
-    return f"({terms[0]} + {chk})"
-
-
-def _with_norm(df: DataFrame, vec_col: str, dot, out: str = "__n") -> DataFrame:
+def _with_norm(df: DataFrame, vec_col: str, out: str = "__n") -> DataFrame:
     """Append sqrt(dot(vec, vec)) as `out` — the per-row hoisted norm
-    (r13), for `dot` = `_exact_dot_sql` or `_fast_dot_sql`. A cosine
-    evaluates THREE array traversals per call (dot + both norms); every
-    pair/assignment join in this module reuses each row's norm across
-    many pairs, so it computes the norm here once per ROW, in a
-    projection below the join, and scores pairs as
+    (r13). A cosine evaluates THREE array traversals per call (dot + both
+    norms); every pair/assignment join in this module reuses each row's
+    norm across many pairs, so it computes the norm here once per ROW, in
+    a projection below the join, and scores pairs as
     dot(a, b) / (na * nb) — the same three sub-expressions combined by
     the same division/multiplication tree as `cosine_sql`, hence
     bit-identical values (nothing is reassociated; only the evaluation
     COUNT of each norm changes). Measured at sf0.1: semantic-dedup pair
     marking 6.2 -> 1.9 s (n_assign=1), 13.6 -> 4.7 s (n_assign=2).
     CollapseProject cannot re-inline the norm across the join boundary."""
-    return df.withColumn(out, F.expr(f"sqrt({dot(vec_col, vec_col)})"))
+    return df.withColumn(
+        out, F.expr(f"sqrt({_exact_dot_sql(vec_col, vec_col)})"))
 
 
-def brute_force_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k of `emb` against a 1-row query DataFrame
-    (columns: q_vec). Broadcast the query; score every vector (one scan, no
-    shuffle until the tiny top-k); deterministic tie-break on id.
+def brute_force_topk(emb: DataFrame, query_df: DataFrame) -> DataFrame:
+    """Exact cosine top-10 of the embeddings against a 1-row query
+    DataFrame (columns: q_vec). Broadcast the query; score every vector
+    (one scan, no shuffle until the tiny top-k); deterministic tie-break
+    on id.
 
     At 100 TB this is the exact baseline: a single pass with a
     TakeOrderedAndProject at the end — no global sort materialization.
     """
     scored = (
         emb.crossJoin(F.broadcast(query_df))
-        .selectExpr(id_col, f"{cosine_sql(vec_col, 'q_vec')} AS cosine")
+        .selectExpr("vec_id", f"{cosine_sql('embedding', 'q_vec')} AS cosine")
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(),
+                          F.col("vec_id").asc()).limit(10)
 
 
-def sign_bucket(vec_col: Column, n_bits: int = 4) -> Column:
+#: Sign bits of the LSH bucket: the first 4 components, 16 buckets.
+_LSH_BITS = 4
+
+
+def sign_bucket(vec_col: Column) -> Column:
     """Random-hyperplane-style LSH bucket from the signs of the first
-    n_bits components (deterministic; a production variant draws seeded
-    hyperplanes — the bucketing/probing plumbing is identical)."""
+    `_LSH_BITS` components (deterministic; a production variant draws
+    seeded hyperplanes — the bucketing/probing plumbing is identical)."""
     bucket = F.lit(0)
-    for i in range(n_bits):
+    for i in range(_LSH_BITS):
         bit = F.when(F.element_at(vec_col, i + 1) >= 0, F.lit(1)).otherwise(F.lit(0))
         bucket = bucket * 2 + bit
     return bucket.cast("int")
 
 
-def lsh_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             n_bits: int = 4, n_probe: int = 1,
-             max_flip: int = 1) -> DataFrame:
-    """Approximate top-k: score only vectors in the query's sign-bucket(s).
+def lsh_topk(emb: DataFrame, query_df: DataFrame) -> DataFrame:
+    """Approximate top-10: score only vectors in the query's 4 probe
+    sign-buckets.
 
     Scale path: bucket is a pre-computable partition key (write the corpus
-    bucketed-by `bucket` and the probe prunes to n_probe/2^n_bits of the
-    data).
+    bucketed-by `bucket` and the probe prunes to 4 of the 16 buckets).
 
-    MULTI-PROBE (r8, verdict task 6 — the Lv et al. 2007 "Multi-Probe
-    LSH" idea): with n_probe > 1, also probe the n_probe-1 neighboring
-    buckets obtained by flipping the LEAST-CONFIDENT sign bits — the
-    components with the smallest |value|, i.e. the hyperplanes the query
-    sits closest to, exactly where a true neighbor most likely landed on
-    the other side. Measured on the fixture (tools/recall_probe.py):
-    recall@10 0.27 single-probe -> 0.33 at n_probe=2 -> 0.60 at
-    n_probe=4, while still scanning only n_probe of 2^n_bits buckets. The probe
-    table stays 1-row-per-bucket and broadcast; candidate rows join each
-    probe bucket at most once (probe buckets are distinct by
-    construction), so no post-join dedup is needed.
-
-    PERTURBATION SEQUENCES (r8, late): `max_flip` bounds the SIZE of the
-    flipped-bit sets. max_flip=1 (default, the gated registry shape)
-    generates single-bit flips only — at most n_bits + 1 buckets.
-    max_flip>=2 enumerates every non-empty subset of <= max_flip bits and
-    orders candidates by the paper's expected-score proxy: the sum of
-    SQUARED distances-to-hyperplane of the flipped bits (Lv et al. §4.2
-    — crossing two near boundaries can outrank crossing one far one,
-    which single-bit ordering cannot express). Subsets reachable:
-    1 + sum_{j<=max_flip} C(n_bits, j); at max_flip=n_bits every bucket
-    is probeable and n_probe=2^n_bits IS brute force. The candidate
-    array is query-side only (1-row broadcast frame) so enumeration cost
-    is negligible; the corpus-side plan is identical for any max_flip.
-    Measured (tools/recall_probe.py, sf0.01): n_probe=8 max_flip=2 hits
-    recall@10 0.83 at 8/16 buckets scanned — past IVF's 0.67 (2-of-8
-    probes) WITHOUT trained centroids, the regime the r8 verdict assigned
-    to the IVF tier. IVF stays ahead per-byte-scanned (25% scan fraction
-    vs 50% here); this path wins when no training pass has run."""
-    if not 1 <= max_flip <= n_bits:
-        raise ValueError(f"max_flip={max_flip} must be in [1, n_bits={n_bits}]")
-    from itertools import combinations
-    from math import comb
-    reachable = 1 + sum(comb(n_bits, j) for j in range(1, max_flip + 1))
-    if n_probe > reachable:
-        raise ValueError(
-            f"n_probe={n_probe} exceeds the {reachable} buckets reachable "
-            f"with max_flip={max_flip} flips; raise max_flip (<= n_bits) "
-            "or use the IVF tier (ivf_topk) for deeper probing")
-    bucketed = emb.withColumn("bucket", sign_bucket(F.col(vec_col), n_bits))
-    q = query_df.withColumn("q_bucket", sign_bucket(F.col("q_vec"), n_bits))
-    if n_probe <= 1:
-        probes = q.select("q_vec", F.col("q_bucket").alias("p_bucket"))
-    else:
-        # (score, subset index, flipped bucket) per candidate subset,
-        # sorted ascending by score (ties break on enumeration index —
-        # size-1 subsets first in bit order, so max_flip=1 reproduces the
-        # original single-bit ordering exactly). Flipping bit i toggles
-        # 1 << (n_bits-1-i) because sign_bucket makes component 0 the
-        # MOST significant bit. Score = sum of squared components: for
-        # singles this orders identically to |component|; across sizes it
-        # is the Lv et al. expected-score proxy.
-        subsets = [s for size in range(1, max_flip + 1)
-                   for s in combinations(range(n_bits), size)]
-        def _score(s):
-            parts = [F.pow(F.element_at(F.col("q_vec"), i + 1), F.lit(2))
-                     for i in s]
-            total = parts[0]
-            for p in parts[1:]:
-                total = total + p
-            return total
-        flips = F.array(*[
-            F.struct(
-                _score(s).alias("conf"),
-                F.lit(j).alias("idx"),
-                F.col("q_bucket").bitwiseXOR(
-                    F.lit(sum(1 << (n_bits - 1 - i) for i in s))).alias("b"))
-            for j, s in enumerate(subsets)])
-        near = F.slice(F.array_sort(flips), 1, n_probe - 1)
-        buckets = F.concat(F.array(F.col("q_bucket")),
-                           F.transform(near, lambda s: s["b"]))
-        probes = q.select("q_vec", F.explode(buckets).alias("p_bucket"))
+    MULTI-PROBE (r8, the Lv et al. 2007 "Multi-Probe LSH" idea): besides
+    the query's own bucket, probe the 3 neighboring buckets obtained by
+    flipping the LEAST-CONFIDENT sign bits — the components with the
+    smallest |value|, i.e. the hyperplanes the query sits closest to,
+    exactly where a true neighbor most likely landed on the other side.
+    Measured on the fixture (tools/recall_probe.py): recall@10 0.27
+    single-probe -> 0.60 with the 4 probes. The probe table stays
+    1-row-per-bucket and broadcast; candidate rows join each probe bucket
+    at most once (probe buckets are distinct by construction), so no
+    post-join dedup is needed."""
+    bucketed = emb.withColumn("bucket", sign_bucket(F.col("embedding")))
+    q = query_df.withColumn("q_bucket", sign_bucket(F.col("q_vec")))
+    # (squared component, bit index, flipped bucket) per sign bit, sorted
+    # ascending by the square (ties break on the bit index). Flipping bit
+    # i toggles 1 << (_LSH_BITS-1-i) because sign_bucket makes component
+    # 0 the MOST significant bit.
+    flips = F.array(*[
+        F.struct(
+            F.pow(F.element_at(F.col("q_vec"), i + 1), F.lit(2)).alias("conf"),
+            F.lit(i).alias("idx"),
+            F.col("q_bucket").bitwiseXOR(
+                F.lit(1 << (_LSH_BITS - 1 - i))).alias("b"))
+        for i in range(_LSH_BITS)])
+    near = F.slice(F.array_sort(flips), 1, 3)
+    buckets = F.concat(F.array(F.col("q_bucket")),
+                       F.transform(near, lambda s: s["b"]))
+    probes = q.select("q_vec", F.explode(buckets).alias("p_bucket"))
     probed = bucketed.join(F.broadcast(probes),
                            F.col("bucket") == F.col("p_bucket"))
     scored = probed.select(
-        F.col(id_col), F.expr(cosine_sql(vec_col, "q_vec")).alias("cosine"))
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+        F.col("vec_id"),
+        F.expr(cosine_sql("embedding", "q_vec")).alias("cosine"))
+    return scored.orderBy(F.col("cosine").desc(),
+                          F.col("vec_id").asc()).limit(10)
 
 
-def _seed_centroids(emb: DataFrame, n_centroids: int,
-                    id_col: str, vec_col: str) -> DataFrame:
-    return (emb.orderBy(F.col(id_col).asc()).limit(n_centroids)
-            .select(F.col(id_col).alias("centroid_id"),
-                    F.col(vec_col).alias("c_vec")))
+def _seed_centroids(emb: DataFrame, n_centroids: int) -> DataFrame:
+    return (emb.orderBy(F.col("vec_id").asc()).limit(n_centroids)
+            .select(F.col("vec_id").alias("centroid_id"),
+                    F.col("embedding").alias("c_vec")))
 
 
-def kmeans_centroids(emb: DataFrame, n_centroids: int = 16,
-                     n_iters: int = 3, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     exact: bool = False) -> DataFrame:
-    """Lloyd's k-means over embeddings, expressed as DataFrame ops.
+def _exact_mean() -> Column:
+    """Engine-exact per-dimension centroid component of the `x` column
+    (r10: floor-quantized longs, see _Q_SCALE — the mirrored decimal cast
+    diverged on shortest-repr ties): decimal(38,0) accumulation keeps the
+    sum exact past long range at corpus scale; the final double cast is
+    correctly rounded identically in both engines. A sum, not a mean:
+    cosine is scale-invariant, so sum and mean are interchangeable as
+    directions, and no division means no summation-order dependence."""
+    return (F.sum(_qprod(F.col("x").cast("double")).cast("decimal(38,0)"))
+            .cast("double") / F.lit(_Q_SCALE)).alias("m")
+
+
+def kmeans_centroids(emb: DataFrame, n_centroids: int = 16) -> DataFrame:
+    """Lloyd's k-means (2 iterations) over the `embedding` column,
+    expressed as DataFrame ops.
 
     Per iteration: broadcast the centroid table, assign by max cosine
     (narrow window over n_centroids rows per vector), recompute centroids
-    as per-dimension means via posexplode + two map-side-combinable
+    as per-dimension sums via posexplode + two map-side-combinable
     aggregations. Deterministic seed (first n vectors by id); each
     iteration materializes only the tiny centroid table on the driver —
     the corpus is scanned, never collected.
 
-    exact=True makes the whole training CROSS-ENGINE EXACT (the
-    ann_ivf_topk oracle relies on it): assignment uses the decimal-exact
-    ``_exact_dot_sql`` instead of the ~4x-cheaper ``_fast_dot_sql``, and the
-    centroid update keeps per-dimension DECIMAL SUMS cast to double
-    instead of float means — no division (cosine is scale-invariant, so
-    sum and mean are interchangeable as directions) and no
-    summation-order dependence, so a SQL engine replaying the same
-    iterations computes bit-identical centroids and assignments.
+    The whole training is CROSS-ENGINE EXACT (the ann_ivf_topk oracle
+    relies on it): assignment uses the decimal-exact ``_exact_dot_sql``
+    and the centroid update keeps per-dimension DECIMAL SUMS cast to
+    double (`_exact_mean`), so a SQL engine replaying the same iterations
+    computes bit-identical centroids and assignments.
     """
     spark = emb.sparkSession
-    dot = _exact_dot_sql if exact else _fast_dot_sql
-    cents = _seed_centroids(emb, n_centroids, id_col, vec_col)
-    if exact:
-        cents = cents.select(
-            "centroid_id",
-            F.transform("c_vec", lambda x: x.cast("double")).alias("c_vec"))
+    cents = _seed_centroids(emb, n_centroids)
+    cents = cents.select(
+        "centroid_id",
+        F.transform("c_vec", lambda x: x.cast("double")).alias("c_vec"))
     from pyspark.sql import Window
     # r13 norm hoist (see _with_norm): bit-identical sim values, each
     # side's norm evaluated per row instead of per (vector, centroid)
-    emb_n = _with_norm(emb, vec_col, dot, out="__nv")
-    sim = f"{dot(vec_col, 'c_vec')} / (__nv * __nc) AS sim"
-    for _ in range(n_iters):
-        cents_n = _with_norm(cents, "c_vec", dot, out="__nc")
+    emb_n = _with_norm(emb, "embedding", out="__nv")
+    sim = f"{_exact_dot_sql('embedding', 'c_vec')} / (__nv * __nc) AS sim"
+    for _ in range(2):
+        cents_n = _with_norm(cents, "c_vec", out="__nc")
         scored = (emb_n.crossJoin(F.broadcast(cents_n))
-                  .selectExpr(f"{id_col} AS id", f"{vec_col} AS vec",
+                  .selectExpr("vec_id AS id", "embedding AS vec",
                               "centroid_id", sim))
         w = Window.partitionBy("id").orderBy(F.col("sim").desc(),
                                              F.col("centroid_id").asc())
@@ -294,25 +223,12 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 16,
                     .filter(F.col("rn") == 1))
         dims = assigned.select(
             "centroid_id", F.posexplode("vec").alias("pos", "x"))
-        if exact:
-            # engine-exact component sum (r10: floor-quantized longs, see
-            # _Q_SCALE — the mirrored decimal cast diverged on shortest-
-            # repr ties): decimal(38,0) accumulation keeps the sum exact
-            # past long range at corpus scale; the final double cast is
-            # correctly rounded identically in both engines
-            m = (F.sum(_qprod(F.col("x").cast("double"))
-                       .cast("decimal(38,0)"))
-                 .cast("double") / F.lit(_Q_SCALE)).alias("m")
-            out_elem = "double"
-        else:
-            m = F.avg("x").alias("m")
-            out_elem = "float"
-        means = dims.groupBy("centroid_id", "pos").agg(m)
+        means = dims.groupBy("centroid_id", "pos").agg(_exact_mean())
         new_cents = (means.groupBy("centroid_id")
                      .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
                           .alias("pm"))
                      .select("centroid_id",
-                             F.transform("pm", lambda s: s["m"].cast(out_elem))
+                             F.transform("pm", lambda s: s["m"].cast("double"))
                              .alias("c_vec")))
         # Materialize the tiny centroid table between iterations: chaining
         # the plans lazily makes iteration i embed (and RE-EXECUTE) the
@@ -321,66 +237,50 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 16,
     return cents
 
 
-def ivf_assign(emb: DataFrame, n_centroids: int = 16,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               centroids: DataFrame | None = None,
-               exact: bool = False) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest centroid.
-
-    Default centroids are the first n_centroids vectors by id —
-    deterministic and dependency-free; pass `centroids` from
-    `kmeans_centroids` for trained lists. The plan shape (tiny broadcast
-    centroid table, one scored pass, per-vector argmax via a narrow window
-    over n_centroids rows) is identical either way.
-    Output: (id, vec, centroid_id).
+def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
+    """IVF coarse quantization: assign every vector to its nearest
+    centroid of the `centroids` table (from `kmeans_centroids`) by
+    decimal-exact cosine. The plan shape: tiny broadcast centroid table,
+    one scored pass, per-vector argmax via a narrow window over the
+    centroid rows. Output: (id, vec, centroid_id).
     """
-    cents = centroids if centroids is not None else _seed_centroids(
-        emb, n_centroids, id_col, vec_col)
     # delegate to the shared ranked-assignment helper at width 1 (r13
     # review: two verbatim copies of the scored-window block let a
     # future edit to one silently break the rank-1 == ivf_assign parity
     # the multi-assign semantic_dedup depends on)
-    return _ranked_assign(emb, cents, 1, id_col=id_col, vec_col=vec_col,
-                          exact=exact).drop("assign_rank")
+    return _ranked_assign(emb, centroids, 1).drop("assign_rank")
 
 
-def ivf_topk(emb: DataFrame, query_df: DataFrame, k: int = 10,
-             n_centroids: int = 16, n_probe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             centroids: DataFrame | None = None,
-             exact: bool = False) -> DataFrame:
-    """IVF-probed approximate top-k: score the query against the centroid
-    table (tiny), probe the n_probe nearest inverted lists, brute-force
-    only within them. The 100 TB pattern: centroid scoring is driver-scale,
-    list probing is partition pruning, and the final scan touches
-    n_probe/n_centroids of the corpus."""
-    cents = centroids if centroids is not None else _seed_centroids(
-        emb, n_centroids, id_col, vec_col)
-    assigned = ivf_assign(emb, n_centroids, id_col, vec_col, centroids=cents,
-                          exact=exact)
-    probe = (cents.crossJoin(F.broadcast(query_df))
+def ivf_topk(emb: DataFrame, query_df: DataFrame,
+             centroids: DataFrame) -> DataFrame:
+    """IVF-probed approximate top-10: score the query against the
+    centroid table (tiny), probe the 4 nearest inverted lists,
+    brute-force only within them. The 100 TB pattern: centroid scoring
+    is driver-scale, list probing is partition pruning, and the final
+    scan touches 4/n_centroids of the corpus."""
+    assigned = ivf_assign(emb, centroids)
+    probe = (centroids.crossJoin(F.broadcast(query_df))
              .select("centroid_id",
                      F.expr(cosine_sql("c_vec", "q_vec")).alias("sim"))
              .orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
-             .limit(n_probe)
+             .limit(4)
              .select("centroid_id"))
     probed = assigned.join(F.broadcast(probe), "centroid_id")
     scored = (probed.crossJoin(F.broadcast(query_df))
-              .select(F.col("id").alias(id_col),
+              .select(F.col("id").alias("vec_id"),
                       F.expr(cosine_sql("vec", "q_vec")).alias("cosine")))
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(),
+                          F.col("vec_id").asc()).limit(10)
 
 
-def pairwise_topk_per_label(emb: DataFrame, k: int = 3,
-                            id_col: str = "vec_id", vec_col: str = "embedding",
-                            label_col: str = "label") -> DataFrame:
-    """Within-label all-pairs cosine, top-k pairs per label — the blocked
+def pairwise_topk_per_label(emb: DataFrame) -> DataFrame:
+    """Within-label all-pairs cosine, top-3 pairs per label — the blocked
     (grouped) form of pairwise similarity: the equi-join on label confines
     the quadratic term to label groups."""
-    a = emb.select(F.col(label_col).alias("lbl"), F.col(id_col).alias("id_a"),
-                   F.col(vec_col).alias("va"))
-    b = emb.select(F.col(label_col).alias("lbl"), F.col(id_col).alias("id_b"),
-                   F.col(vec_col).alias("vb"))
+    a = emb.select(F.col("label").alias("lbl"), F.col("vec_id").alias("id_a"),
+                   F.col("embedding").alias("va"))
+    b = emb.select(F.col("label").alias("lbl"), F.col("vec_id").alias("id_b"),
+                   F.col("embedding").alias("vb"))
     pairs = a.join(b, "lbl").filter(F.col("id_a") < F.col("id_b"))
     scored = pairs.select("lbl", "id_a", "id_b",
                           F.expr(cosine_sql("va", "vb")).alias("cosine"))
@@ -388,30 +288,28 @@ def pairwise_topk_per_label(emb: DataFrame, k: int = 3,
     w = Window.partitionBy("lbl").orderBy(F.col("cosine").desc(),
                                           F.col("id_a").asc(), F.col("id_b").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= 3)
             .select("lbl", "id_a", "id_b", "cosine", "rank"))
 
 
-def semantic_dedup(emb: DataFrame, threshold: float = 0.4,
-                   n_centroids: int = 16, n_iters: int = 2,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   centroids: DataFrame | None = None,
-                   exact: bool = False, n_assign: int = 1,
+def semantic_dedup(emb: DataFrame, centroids: DataFrame,
+                   n_assign: int = 1,
                    ranked: DataFrame | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): k-means-cluster the
-    embedding space, then mark semantic duplicates WITHIN each cluster —
-    a vector is a duplicate iff some lower-id vector in its cluster has
-    cosine >= threshold (deterministic min-id-wins representative; the
-    paper keeps the member farthest from the centroid — an arbitrary
-    choice there, pinned here to ids so reruns and the SQL oracle agree).
+    embedding space (`centroids`, from `kmeans_centroids`), then mark
+    semantic duplicates WITHIN each cluster — a vector is a duplicate iff
+    some lower-id vector in its cluster has cosine >= 0.4 (deterministic
+    min-id-wins representative; the paper keeps the member farthest from
+    the centroid — an arbitrary choice there, pinned here to ids so
+    reruns and the SQL oracle agree).
 
     Output: (id, centroid_id, is_dup). Scale shape: the clustering
     confines the quadratic term to clusters (the paper's own argument) —
     at 100 TB, n_centroids grows ∝ corpus so per-cluster membership
     stays bounded, the pair join is an equi-join on centroid_id, and
-    nothing all-pairs ever forms. exact=True uses decimal-exact cosine
-    end-to-end (training + pair scoring) for cross-engine gates.
+    nothing all-pairs ever forms. Pair scoring is decimal-exact cosine,
+    like the training, for cross-engine gates.
 
     n_assign > 1 (r11) additionally compares pairs sharing ANY of each
     vector's n_assign nearest centroids — the cheap counter to the
@@ -433,128 +331,107 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.4,
     rn <= m), so results are unchanged — pinned by
     test_semantic_dedup_shared_ranked_bit_equal.
     """
-    cents = centroids if centroids is not None else kmeans_centroids(
-        emb, n_centroids=n_centroids, n_iters=n_iters, id_col=id_col,
-        vec_col=vec_col, exact=exact)
     if ranked is not None:
         asg = (ranked.filter(F.col("assign_rank") == 1)
                .select("id", "vec", "centroid_id"))
         if n_assign <= 1:
-            return _mark_semantic_dups(asg, threshold, exact)
+            return _mark_semantic_dups(asg)
         pair_asg = (ranked.filter(F.col("assign_rank") <= n_assign)
                     .select("id", "vec", "centroid_id"))
-        return _mark_semantic_dups(asg, threshold, exact,
-                                   pair_asg=pair_asg)
+        return _mark_semantic_dups(asg, pair_asg=pair_asg)
     if n_assign <= 1:
-        asg = ivf_assign(emb, n_centroids=n_centroids, id_col=id_col,
-                         vec_col=vec_col, centroids=cents, exact=exact)
-        return _mark_semantic_dups(asg, threshold, exact)
-    multi = _ranked_assign(emb, cents, n_assign, id_col=id_col,
-                           vec_col=vec_col, exact=exact).localCheckpoint()
+        return _mark_semantic_dups(ivf_assign(emb, centroids))
+    multi = _ranked_assign(emb, centroids, n_assign).localCheckpoint()
     asg = (multi.filter(F.col("assign_rank") == 1)
            .select("id", "vec", "centroid_id"))
     pair_asg = multi.select("id", "vec", "centroid_id")
-    return _mark_semantic_dups(asg, threshold, exact,
-                               pair_asg=pair_asg)
+    return _mark_semantic_dups(asg, pair_asg=pair_asg)
 
 
-def _mark_semantic_dups(asg: DataFrame, threshold: float, exact: bool,
+def _mark_semantic_dups(asg: DataFrame,
                         pair_asg: DataFrame | None = None) -> DataFrame:
     """Min-id-wins duplicate marking over an (id, vec, centroid_id)
     assignment: is_dup iff some lower-id vector in the SAME cluster has
-    cosine >= threshold (engine-exact with `exact`, double-precision
-    otherwise). Shared by the flat and two-level SemDeDup.
-    `pair_asg` optionally supplies a WIDER (multi-assignment) table for
-    candidate-pair generation only — base rows still come from `asg`."""
+    engine-exact cosine >= 0.4. Shared by the flat and two-level
+    SemDeDup. `pair_asg` optionally supplies a WIDER (multi-assignment)
+    table for candidate-pair generation only — base rows still come from
+    `asg`."""
     # The assignment feeds THREE plan branches (both self-join sides +
     # the output base); without a materialization each action would
     # re-run the assignment (broadcast-centroid scan + per-id window)
     # three times (review finding). localCheckpoint needs no caller-side
     # unpersist — the ContextCleaner reclaims it once unreferenced.
     asg = asg.localCheckpoint()
-    dot = _exact_dot_sql if exact else _fast_dot_sql
     # norm-hoisted pair scoring (see _with_norm)
-    src = _with_norm(asg if pair_asg is None else pair_asg, "vec", dot)
+    src = _with_norm(asg if pair_asg is None else pair_asg, "vec")
     a = src.select(F.col("centroid_id"), F.col("id").alias("id_a"),
                    F.col("vec").alias("va"), F.col("__n").alias("na"))
     b = src.select(F.col("centroid_id"), F.col("id").alias("id_b"),
                    F.col("vec").alias("vb"), F.col("__n").alias("nb"))
-    score = F.expr(f"{dot('va', 'vb')} / (na * nb)")
+    score = F.expr(f"{_exact_dot_sql('va', 'vb')} / (na * nb)")
     dup_ids = (a.join(b, "centroid_id")
                .filter(F.col("id_b") < F.col("id_a"))
-               .filter(score >= threshold)
+               .filter(score >= 0.4)
                .select(F.col("id_a").alias("id")).distinct())
     return (asg.join(dup_ids.withColumn("__d", F.lit(True)), "id", "left")
             .select("id", "centroid_id",
                     F.coalesce("__d", F.lit(False)).alias("is_dup")))
 
 
-def kmeans_centroids_two_level(
-        emb: DataFrame, n_coarse: int = 8, n_fine: int = 8,
-        n_iters: int = 2, id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        train_mod: int | None = None,
-        exact: bool = False) -> tuple[DataFrame, DataFrame]:
-    """Hierarchical (two-level) k-means: n_coarse top-level centroids,
-    then n_fine centroids per coarse cell — n_coarse*n_fine leaf cells
-    total, trained at O(n*(n_coarse + n_fine)) assignment cost instead
-    of flat Lloyd's O(n * k). This is the 100 TB SemDeDup shape the r8
-    scale probe motivated (flat training with k ∝ corpus bent the curve
-    to O(n²); see docs/SCALE.md): with n_coarse ≈ n_fine ≈ √k, every
-    scan compares each vector against √k candidates, so doubling BOTH
-    levels quadruples the leaf count for 2× the per-vector work.
+def kmeans_centroids_two_level(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Hierarchical (two-level) k-means: 4 top-level centroids, then 4
+    fine centroids per coarse cell — 16 leaf cells total, trained at
+    O(n*(n_coarse + n_fine)) assignment cost instead of flat Lloyd's
+    O(n * k). This is the 100 TB SemDeDup shape the r8 scale probe
+    motivated (flat training with k ∝ corpus bent the curve to O(n²); see
+    docs/SCALE.md): with n_coarse ≈ n_fine ≈ √k, every scan compares each
+    vector against √k candidates, so doubling BOTH levels quadruples the
+    leaf count for 2× the per-vector work.
 
-    train_mod hash-samples the TRAINING corpus (keep ids with
-    id % train_mod == 0; deterministic, rerun-stable) — the standard
-    big-data k-means practice: centroid quality needs a representative
-    sample, not every row; assignment still covers the full corpus.
+    Training hash-samples the corpus (keep ids with id % 2 == 0;
+    deterministic, rerun-stable) — the standard big-data k-means
+    practice: centroid quality needs a representative sample, not every
+    row; assignment still covers the full corpus.
 
-    Per fine iteration: the fine-centroid table (n_coarse*n_fine rows)
-    is broadcast and joined ON coarse_id — each vector scores only its
-    own cell's n_fine candidates (never the full k). Centroid updates
-    are the same per-dimension mean aggregates as flat Lloyd; only the
-    (k-sized) centroid table is ever collected.
+    Per fine iteration (2 of them): the fine-centroid table is broadcast
+    and joined ON coarse_id — each vector scores only its own cell's
+    n_fine candidates (never the full k). Centroid updates are the same
+    per-dimension exact sums as flat Lloyd; only the (k-sized) centroid
+    table is ever collected.
 
     Returns (fine, coarse): fine = (coarse_id, fine_id, centroid_id,
-    c_vec) with centroid_id = coarse_id * n_fine + fine_id (the
-    leaf-cell id), coarse = the (centroid_id, c_vec) top level. A coarse
-    cell that captured no training members (possible under train_mod)
-    falls back to the coarse centroid itself as its single fine
-    centroid, so full-corpus assignment can never drop a vector.
+    c_vec) with centroid_id = coarse_id * 4 + fine_id (the leaf-cell
+    id), coarse = the (centroid_id, c_vec) top level. A coarse cell that
+    captured no training members (possible under the sampling) falls
+    back to the coarse centroid itself as its single fine centroid, so
+    full-corpus assignment can never drop a vector.
 
-    exact=True mirrors kmeans_centroids(exact=True) at BOTH levels
-    (decimal-exact cosine assignment; per-dimension decimal sums cast
-    to double, no division; double element type end-to-end), so a SQL
-    engine unrolling the same chain computes bit-identical leaf cells —
-    the pairwise_topk_per_label kind='semdedup2' oracle relies on it.
+    Both levels mirror kmeans_centroids (decimal-exact cosine
+    assignment; per-dimension decimal sums cast to double, no division;
+    double element type end-to-end), so a SQL engine unrolling the same
+    chain computes bit-identical leaf cells — the pairwise_topk_per_label
+    kind='semdedup2' oracle relies on it.
     """
     from pyspark.sql import Window
     spark = emb.sparkSession
-    dot = _exact_dot_sql if exact else _fast_dot_sql
-    elem = "double" if exact else "float"
-    train = emb
-    if train_mod is not None and train_mod > 1:
-        train = emb.filter(F.pmod(F.col(id_col), F.lit(train_mod)) == 0)
-    coarse = kmeans_centroids(train, n_centroids=n_coarse,
-                              n_iters=n_iters, id_col=id_col,
-                              vec_col=vec_col, exact=exact)
-    asg1 = ivf_assign(train, id_col=id_col, vec_col=vec_col,
-                      centroids=coarse, exact=exact) \
+    train = emb.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0)
+    coarse = kmeans_centroids(train, n_centroids=4)
+    asg1 = ivf_assign(train, coarse) \
         .select("id", "vec", F.col("centroid_id").alias("coarse_id"))
     # training scans the sample 2*n_iters+1 times — cut the lineage once
     asg1 = asg1.localCheckpoint()
-    # deterministic seeds: first n_fine member vectors per coarse cell
+    # deterministic seeds: first 4 member vectors per coarse cell
     wseed = Window.partitionBy("coarse_id").orderBy(F.col("id").asc())
     fine = (asg1.withColumn("rn", F.row_number().over(wseed))
-            .filter(F.col("rn") <= n_fine)
+            .filter(F.col("rn") <= 4)
             .select("coarse_id", (F.col("rn") - 1).alias("fine_id"),
-                    F.transform("vec", lambda x: x.cast(elem))
+                    F.transform("vec", lambda x: x.cast("double"))
                     .alias("c_vec")))
     # r13 norm hoist (see _with_norm): bit-identical sim values
-    asg1_n = _with_norm(asg1, "vec", dot, out="__nv")
-    sim = f"{dot('vec', 'c_vec')} / (__nv * __nc) AS sim"
-    for _ in range(n_iters):
-        fine_n = _with_norm(fine, "c_vec", dot, out="__nc")
+    asg1_n = _with_norm(asg1, "vec", out="__nv")
+    sim = f"{_exact_dot_sql('vec', 'c_vec')} / (__nv * __nc) AS sim"
+    for _ in range(2):
+        fine_n = _with_norm(fine, "c_vec", out="__nc")
         scored = (asg1_n.join(F.broadcast(fine_n), "coarse_id")
                   .selectExpr("coarse_id", "id", "vec", "fine_id", sim))
         w = Window.partitionBy("id").orderBy(F.col("sim").desc(),
@@ -563,21 +440,13 @@ def kmeans_centroids_two_level(
                     .filter(F.col("rn") == 1))
         dims = assigned.select(
             "coarse_id", "fine_id", F.posexplode("vec").alias("pos", "x"))
-        if exact:
-            # engine-exact component sum (r10: floor-quantized longs in a
-            # decimal(38,0) accumulator, same as flat exact Lloyd)
-            m = (F.sum(_qprod(F.col("x").cast("double"))
-                       .cast("decimal(38,0)"))
-                 .cast("double") / F.lit(_Q_SCALE)).alias("m")
-        else:
-            m = F.avg("x").alias("m")
-        means = dims.groupBy("coarse_id", "fine_id", "pos").agg(m)
+        means = dims.groupBy("coarse_id", "fine_id", "pos").agg(_exact_mean())
         new_fine = (means.groupBy("coarse_id", "fine_id")
                     .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
                          .alias("pm"))
                     .select("coarse_id", "fine_id",
                             F.transform("pm", lambda s: s["m"]
-                                        .cast(elem)).alias("c_vec")))
+                                        .cast("double")).alias("c_vec")))
         # materialize the (k-sized) table per iteration — same contract
         # as flat kmeans_centroids (lazy chaining re-executes history)
         fine = spark.createDataFrame(new_fine.collect(), new_fine.schema)
@@ -589,109 +458,72 @@ def kmeans_centroids_two_level(
     fallback = missing.select(
         F.col("centroid_id").alias("coarse_id"),
         F.lit(0).alias("fine_id"),
-        F.transform("c_vec", lambda x: x.cast(elem)).alias("c_vec"))
+        F.transform("c_vec", lambda x: x.cast("double")).alias("c_vec"))
     fine = fine.unionByName(fallback)
     return (fine.withColumn(
         "centroid_id",
-        (F.col("coarse_id") * n_fine + F.col("fine_id")).cast("int"))
+        (F.col("coarse_id") * 4 + F.col("fine_id")).cast("int"))
         .select("coarse_id", "fine_id", "centroid_id", "c_vec"), coarse)
 
 
 def ivf_assign_two_level(emb: DataFrame, coarse: DataFrame,
-                         fine: DataFrame, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         exact: bool = False,
-                         n_assign: int = 1) -> DataFrame:
+                         fine: DataFrame) -> DataFrame:
     """Assign every vector to its leaf cell through the hierarchy:
     nearest coarse centroid (broadcast scan over n_coarse), then nearest
     fine centroid WITHIN that cell (broadcast join on coarse_id over
-    n_fine candidates). Output: (id, vec, centroid_id) — the same
-    contract as flat ivf_assign, at O(n_coarse + n_fine) comparisons
-    per vector. exact=True scores with the decimal-exact cosine at both
-    levels (cross-engine gates). n_assign > 1 (r11) keeps each vector's
-    n_assign nearest LEAF cells within its coarse cell and adds an
-    `assign_rank` column (1 = primary) — existing callers see the
-    unchanged 3-column shape at the default."""
+    n_fine candidates), both by decimal-exact cosine. Output: (id, vec,
+    centroid_id) — the same contract as flat ivf_assign, at
+    O(n_coarse + n_fine) comparisons per vector."""
     from pyspark.sql import Window
-    dot = _exact_dot_sql if exact else _fast_dot_sql
-    asg1 = ivf_assign(emb, id_col=id_col, vec_col=vec_col,
-                      centroids=coarse, exact=exact) \
+    asg1 = ivf_assign(emb, coarse) \
         .select("id", "vec", F.col("centroid_id").alias("coarse_id"))
     # r13 norm hoist (see _with_norm): bit-identical sim values
-    asg1_n = _with_norm(asg1, "vec", dot, out="__nv")
-    fine_n = _with_norm(fine, "c_vec", dot, out="__nc")
+    asg1_n = _with_norm(asg1, "vec", out="__nv")
+    fine_n = _with_norm(fine, "c_vec", out="__nc")
     scored = (asg1_n.join(F.broadcast(fine_n), "coarse_id")
               .selectExpr("id", "vec", "centroid_id",
-                          f"{dot('vec', 'c_vec')} / (__nv * __nc) AS sim"))
+                          f"{_exact_dot_sql('vec', 'c_vec')} "
+                          "/ (__nv * __nc) AS sim"))
     w = Window.partitionBy("id").orderBy(F.col("sim").desc(),
                                          F.col("centroid_id").asc())
-    ranked = scored.withColumn("rn", F.row_number().over(w))
-    if n_assign <= 1:
-        return ranked.filter(F.col("rn") == 1) \
-            .select("id", "vec", "centroid_id")
-    return (ranked.filter(F.col("rn") <= n_assign)
-            .select("id", "vec", "centroid_id",
-                    F.col("rn").alias("assign_rank")))
+    return (scored.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1).select("id", "vec", "centroid_id"))
 
 
-def semantic_dedup_two_level(emb: DataFrame, threshold: float = 0.4,
-                             n_coarse: int = 8, n_fine: int = 8,
-                             n_iters: int = 2, id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             train_mod: int | None = None,
-                             exact: bool = False,
-                             n_assign: int = 1) -> DataFrame:
+def semantic_dedup_two_level(emb: DataFrame) -> DataFrame:
     """SemDeDup over hierarchical leaf cells — the 100 TB variant: same
     min-id-wins duplicate semantics as `semantic_dedup`, but clustering
     cost is O(n·√k) instead of O(n·k) when k grows ∝ corpus (flat
     training measured O(n²) in the r8 scale probe; the two-level probe
-    family measures this fix). HASH-GATED since late r8: exact=True
-    (decimal-exact arithmetic end-to-end, incl. the sampled-training
-    path) is unrolled as the kind='semdedup2' rows of the
+    family measures this fix). HASH-GATED since late r8: the
+    decimal-exact arithmetic end-to-end, incl. the sampled-training
+    path, is unrolled as the kind='semdedup2' rows of the
     pairwise_topk_per_label oracle; behavior additionally pinned by
     tests (full assignment coverage, within-cell confinement,
     pure-python dup-set recomputation)."""
-    fine, coarse = kmeans_centroids_two_level(
-        emb, n_coarse=n_coarse, n_fine=n_fine, n_iters=n_iters,
-        id_col=id_col, vec_col=vec_col, train_mod=train_mod, exact=exact)
-    if n_assign <= 1:
-        asg = ivf_assign_two_level(emb, coarse, fine, id_col=id_col,
-                                   vec_col=vec_col, exact=exact)
-        return _mark_semantic_dups(asg, threshold, exact)
-    # n_assign > 1 (r11): same counter to the leaf-confinement miss
-    # mode as flat semantic_dedup — extra leaf assignments within the
-    # coarse cell generate candidate pairs only; output rows and the
-    # primary centroid_id are unchanged
-    multi = ivf_assign_two_level(emb, coarse, fine, id_col=id_col,
-                                 vec_col=vec_col, exact=exact,
-                                 n_assign=n_assign).localCheckpoint()
-    asg = (multi.filter(F.col("assign_rank") == 1)
-           .select("id", "vec", "centroid_id"))
-    pair_asg = multi.select("id", "vec", "centroid_id")
-    return _mark_semantic_dups(asg, threshold, exact,
-                               pair_asg=pair_asg)
+    fine, coarse = kmeans_centroids_two_level(emb)
+    return _mark_semantic_dups(ivf_assign_two_level(emb, coarse, fine))
 
 
-def _ranked_assign(emb: DataFrame, cents: DataFrame, n_assign: int,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   exact: bool = False) -> DataFrame:
+def _ranked_assign(emb: DataFrame, cents: DataFrame,
+                   n_assign: int) -> DataFrame:
     """(id, vec, centroid_id, assign_rank): each vector's n_assign
-    nearest centroids, rank 1 = primary. The window tie-break (sim
-    desc, centroid_id asc) is ivf_assign's exactly, so rank-1 rows ==
-    ivf_assign output — the multi-assignment generalization every
-    n_assign consumer (batch SemDeDup, the pairwise_topk_per_label gate)
-    shares."""
+    nearest centroids by decimal-exact cosine, rank 1 = primary. The
+    window tie-break (sim desc, centroid_id asc) is ivf_assign's exactly,
+    so rank-1 rows == ivf_assign output — the multi-assignment
+    generalization every n_assign consumer (batch SemDeDup, the
+    pairwise_topk_per_label gate) shares."""
     from pyspark.sql import Window
-    dot = _exact_dot_sql if exact else _fast_dot_sql
     # r13 norm hoist (see _with_norm): each vector's norm once per row,
     # each centroid's once per broadcast row — not once per (vector,
     # centroid) score; bit-identical sim values, same tie-break.
-    emb_n = _with_norm(emb, vec_col, dot, out="__nv")
-    cents_n = _with_norm(cents, "c_vec", dot, out="__nc")
+    emb_n = _with_norm(emb, "embedding", out="__nv")
+    cents_n = _with_norm(cents, "c_vec", out="__nc")
     scored = (emb_n.crossJoin(F.broadcast(cents_n))
-              .selectExpr(f"{id_col} AS id", f"{vec_col} AS vec",
+              .selectExpr("vec_id AS id", "embedding AS vec",
                           "centroid_id",
-                          f"{dot(vec_col, 'c_vec')} / (__nv * __nc) AS sim"))
+                          f"{_exact_dot_sql('embedding', 'c_vec')} "
+                          "/ (__nv * __nc) AS sim"))
     w = Window.partitionBy("id").orderBy(F.col("sim").desc(),
                                          F.col("centroid_id").asc())
     return (scored.withColumn("rn", F.row_number().over(w))
@@ -705,8 +537,7 @@ def _ranked_assign(emb: DataFrame, cents: DataFrame, n_assign: int,
 # ===========================================================================
 
 
-def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def sq8_encode(emb: DataFrame) -> DataFrame:
     """Scalar-quantize float vectors to int8-range codes:
     code_i = floor(((x_i * 127) / max|x|) + 0.5), per-vector scale
     = max|x| / 127 reconstructs x_i ~= code_i * scale.
@@ -724,7 +555,7 @@ def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
     All-zero vectors quantize to all-zero codes (guarded division).
     """
     maxabs = F.array_max(
-        F.transform(F.col(vec_col), lambda x: F.abs(x))).cast("double")
+        F.transform(F.col("embedding"), lambda x: F.abs(x))).cast("double")
     enc = emb.withColumn("__maxabs", maxabs)
     code = lambda x: (
         F.when(F.col("__maxabs") == 0.0, F.lit(0).cast("long"))
@@ -732,6 +563,6 @@ def sq8_encode(emb: DataFrame, id_col: str = "vec_id",
             ((x.cast("double") * F.lit(127.0)) / F.col("__maxabs"))
             + F.lit(0.5)))).cast("int")
     return enc.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         (F.col("__maxabs") / F.lit(127.0)).alias("scale"),
-        F.transform(F.col(vec_col), code).alias("codes"))
+        F.transform(F.col("embedding"), code).alias("codes"))

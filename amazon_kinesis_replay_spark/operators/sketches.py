@@ -177,17 +177,17 @@ def _qhist_bucket(sig_bits: int) -> Column:
                         + slot + F.lit(1)).cast("long")))
 
 
-def qhist_table(df: DataFrame, col: str, sig_bits: int = 7) -> DataFrame:
+def qhist_table(df: DataFrame, col: str) -> DataFrame:
     """Quantile-histogram table (bucket, cnt) of a non-negative integer
-    column. One projection + one map-side-combinable groupBy; at most
-    64 * 2^sig_bits rows survive. Deterministic (no hashing, no RNG):
-    rebuilds and re-partitionings are bit-identical — the property that
-    makes per-day tables safe to reconcile across pipelines."""
-    if not 1 <= sig_bits <= 16:
-        raise ValueError(f"sig_bits must be in [1, 16], got {sig_bits}")
+    column at 7 significant bits. One projection + one
+    map-side-combinable groupBy; at most 64 * 2^7 rows survive.
+    Deterministic (no hashing, no RNG): rebuilds and re-partitionings
+    are bit-identical — the property that makes per-day tables safe to
+    reconcile across pipelines. Read it back with qhist_quantiles'
+    default sig_bits."""
     return (df.select(F.col(col).cast("long").alias("__v"))
             .filter(F.col("__v").isNotNull())
-            .select(_qhist_bucket(sig_bits).alias("bucket"))
+            .select(_qhist_bucket(7).alias("bucket"))
             .groupBy("bucket").agg(F.count("*").alias("cnt")))
 
 

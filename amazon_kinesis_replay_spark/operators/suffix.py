@@ -29,9 +29,9 @@ suffix sort, and with no quadratic term anywhere. Per-doc sentinel
 rows (unique ranks by construction, no reserved token string) stop
 runs from crossing document boundaries.
 
-`duplicated_runs(min_len=w)` is definitionally equal to
-`duplicate_spans(window=w)` — position p is flagged iff its w-token
-window occurs more than once in the corpus — so the two INDEPENDENT
+`duplicated_runs` is definitionally equal to `duplicate_spans` at the
+same `SPAN_WINDOW` = w — position p is flagged iff its w-token window
+occurs more than once in the corpus — so the two INDEPENDENT
 algorithms (hash groupBy vs suffix ranks) witness each other: pinned in
 tests/test_suffix.py and cross-engine at the oracle gate (dedup_exact
 kind='sa' reuses the gaps-and-islands SQL definition that checks
@@ -42,8 +42,8 @@ pay ONE candidate shuffle; prefix doubling pays 2·ceil(log2 L) + 2
 shuffles but yields exact equality classes at ANY length (and ordered
 suffix ranks for one more global index over the final class table).
 Use window hashes as the
-default; this tier exists for audits and for sub-window-length exact
-runs (`min_len` need not snap to a window size).
+default; this tier exists for audits (the run length need not be a
+power of two: the two-rank trick below covers any length).
 """
 
 from __future__ import annotations
@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import SPAN_WINDOW
 from .replay_ops import with_global_cumsum
 from .text import tokens_expr
 
@@ -87,9 +88,9 @@ def corpus_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 "token"))
 
 
-def _class_ids(df: DataFrame, key_cols: list[str],
-               out: str = "__r") -> DataFrame:
-    """Injective equality-class id per distinct key: min member gpos + 1
+def _class_ids(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Injective equality-class id `__r` per distinct key: min member
+    gpos + 1
     (equal keys -> equal id, distinct keys -> distinct ids — the ids
     are NOT ordered like the keys; every consumer in this module needs
     equality only, see the module docstring). +1 keeps real-position
@@ -97,7 +98,7 @@ def _class_ids(df: DataFrame, key_cols: list[str],
     from the past-corpus-end placeholder 0. One shuffle-side aggregate
     + one join back — no eager driver job, unlike the dense-rank
     formulation it replaced (r13)."""
-    cls = df.groupBy(*key_cols).agg((F.min("gpos") + 1).alias(out))
+    cls = df.groupBy(*key_cols).agg((F.min("gpos") + 1).alias("__r"))
     return df.join(cls, key_cols)
 
 
@@ -132,37 +133,31 @@ def suffix_ranks(tok: DataFrame, upto: int) -> DataFrame:
     return cur
 
 
-def duplicated_runs(df: DataFrame, id_col: str, text_col: str,
-                    min_len: int = 12) -> DataFrame:
+def duplicated_runs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Maximal per-doc spans of duplicated token runs of EXACTLY the
     window-occurrence definition: position p is flagged iff the
-    min_len-token sequence starting at p occurs more than once in the
-    corpus (any doc, including its own); flagged starts <= min_len apart
-    merge into islands. Returns (id, span_start, span_end, n_windows)
-    with half-open token spans — byte-compatible with
-    `dedup.duplicate_spans(window=min_len)`, computed by a disjoint
-    algorithm (suffix ranks, no window hashing, no string shuffle).
+    SPAN_WINDOW-token sequence starting at p occurs more than once in
+    the corpus (any doc, including its own); flagged starts <=
+    SPAN_WINDOW apart merge into islands. Returns (id, span_start,
+    span_end, n_windows) with half-open token spans — byte-compatible
+    with `dedup.duplicate_spans`, computed by a disjoint algorithm
+    (suffix ranks, no window hashing, no string shuffle).
 
-    Grouping key: with a = 2^floor(log2 min_len) and s = min_len - a,
-    suffixes share their first min_len tokens iff (rank_a(p),
-    rank_a(p+s)) match — the standard two-rank trick, so non-power-of-2
-    lengths cost nothing extra. Sentinels guarantee windows never cross
-    doc ends (a window containing a sentinel ranks uniquely)."""
-    if min_len < 1:
-        raise ValueError(f"min_len must be >= 1: {min_len}")
+    Grouping key: with a = 2^floor(log2 SPAN_WINDOW) and
+    s = SPAN_WINDOW - a, suffixes share their first SPAN_WINDOW tokens
+    iff (rank_a(p), rank_a(p+s)) match — the standard two-rank trick, so
+    a non-power-of-2 length costs nothing extra. Sentinels guarantee
+    windows never cross doc ends (a window containing a sentinel ranks
+    uniquely)."""
+    min_len = SPAN_WINDOW
     tok = corpus_tokens(df, id_col, text_col).localCheckpoint()
     a = 1 << (min_len.bit_length() - 1)
     ranks = suffix_ranks(tok, a)
-    shift = min_len - a
-    if shift:
-        r2 = ranks.select((F.col("gpos") - shift).alias("gpos"),
-                          F.col("rank").alias("rank_b"))
-        keyed = (ranks.join(r2, "gpos", "left")
-                 .select("gpos", "rank",
-                         F.coalesce("rank_b", F.lit(0)).alias("rank_b")))
-    else:
-        keyed = ranks.select("gpos", "rank",
-                             F.lit(0).alias("rank_b"))
+    r2 = ranks.select((F.col("gpos") - (min_len - a)).alias("gpos"),
+                      F.col("rank").alias("rank_b"))
+    keyed = (ranks.join(r2, "gpos", "left")
+             .select("gpos", "rank",
+                     F.coalesce("rank_b", F.lit(0)).alias("rank_b")))
     dup_keys = (keyed.groupBy("rank", "rank_b")
                 .agg(F.count("*").alias("__n"))
                 .filter(F.col("__n") > 1)

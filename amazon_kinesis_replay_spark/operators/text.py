@@ -64,11 +64,14 @@ BPE_PRETOKEN_PATTERN = (
     r"| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+$|\s+")
 
 
-def word_piece_counts(df: DataFrame, text_col: str,
-                      max_words: int = 1_000_000) -> DataFrame:
+#: Cap on the pre-token table the tokenizer trainers collect.
+MAX_WORDS = 1_000_000
+
+
+def word_piece_counts(df: DataFrame, text_col: str) -> DataFrame:
     """The capped (piece, cnt) pre-token frequency table both tokenizer
     trainers consume: one JVM-regex explode + map-side-combinable
-    groupBy over the corpus, kept to the `max_words` MOST FREQUENT
+    groupBy over the corpus, kept to the `MAX_WORDS` MOST FREQUENT
     pieces (ties by piece — determinism). Factored out (r14, r13 verdict
     item 4) so a caller training BOTH tokenizers over one corpus (the
     doc_pii_redact gate) aggregates the corpus once and persists this
@@ -78,45 +81,36 @@ def word_piece_counts(df: DataFrame, text_col: str,
         .alias("piece"))
         .groupBy("piece").agg(F.count("*").alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("piece"))
-        .limit(int(max_words)))
+        .limit(MAX_WORDS))
 
 
-def bpe_train(df: DataFrame, text_col: str, n_merges: int = 200,
-              max_words: int = 1_000_000,
-              word_counts: DataFrame | None = None) -> list[tuple[str, str]]:
-    """Train a BPE merge table on a corpus — distributed where the data
-    is big, driver-side where it is small (the aggregate-then-fit shape
-    of the IVF k-means trainer): pre-tokenization and piece counting run
-    as one explode + map-side-combinable groupBy over the corpus (JVM
-    regex, no Python), and only the aggregated piece->count table — at
-    most `max_words` rows, vocab-scale not corpus-scale — reaches the
-    driver for the classic Sennrich merge loop
-    (`functions.bpe.learn_bpe`, cost ∝ vocab × merges, independent of
-    corpus size).
+def bpe_train(word_counts: DataFrame) -> list[tuple[str, str]]:
+    """Train a 64-merge BPE table on a corpus — distributed where the
+    data is big, driver-side where it is small (the aggregate-then-fit
+    shape of the IVF k-means trainer): pre-tokenization and piece
+    counting run as one explode + map-side-combinable groupBy over the
+    corpus (JVM regex, no Python; `word_piece_counts`, whose table the
+    caller passes and persists when shared), and only the aggregated
+    piece->count table — at most `MAX_WORDS` rows, vocab-scale not
+    corpus-scale — reaches the driver for the classic Sennrich merge
+    loop (`functions.bpe.learn_bpe`, cost ∝ vocab × merges, independent
+    of corpus size).
 
-    `max_words` caps the driver table by keeping the MOST FREQUENT
-    pieces (ties broken by piece for determinism); the frequency mass of
-    natural text is heavy-tailed, so the tail's effect on merge ranks is
-    negligible — the cap bounds driver memory at 100 TB, it does not
-    change the algorithm. Returns the ordered merge list (feed to
-    `bpe_encode`).
-
-    `word_counts` (r14): an optional caller-precomputed
-    `word_piece_counts` table (persist it when shared) — the merge loop
-    collects it directly instead of re-aggregating the corpus."""
-    top = (word_counts if word_counts is not None
-           else word_piece_counts(df, text_col, max_words)).collect()
+    The `MAX_WORDS` cap keeps the MOST FREQUENT pieces (ties broken by
+    piece for determinism); the frequency mass of natural text is
+    heavy-tailed, so the tail's effect on merge ranks is negligible —
+    the cap bounds driver memory at 100 TB, it does not change the
+    algorithm. Returns the ordered merge list (feed to `bpe_encode`)."""
     from ..functions import bpe as _bpe
-    return _bpe.learn_bpe({r[0]: r[1] for r in top}, n_merges)
+    return _bpe.learn_bpe({r[0]: r[1] for r in word_counts.collect()}, 64)
 
 
 def bpe_encode(df: DataFrame, text_col: str,
-               merges: list[tuple[str, str]],
-               out_col: str = "bpe_tokens") -> DataFrame:
-    """Apply a trained BPE merge table: adds `out_col` (array<string> of
-    subword tokens, lossless — aggregating them with concat reproduces
-    the text exactly) and `{out_col}_count` (long), the REAL token
-    count.
+               merges: list[tuple[str, str]]) -> DataFrame:
+    """Apply a trained BPE merge table: adds `bpe_tokens` (array<string>
+    of subword tokens, lossless — aggregating them with concat
+    reproduces the text exactly) and `bpe_tokens_count` (long), the REAL
+    token count.
 
     Arrow-batched pandas UDF (the merge loop is genuinely imperative —
     rank-ordered pair merging has no Column-expression form), with the
@@ -133,15 +127,12 @@ def bpe_encode(df: DataFrame, text_col: str,
         cache: dict[str, list[str]] = {}
         return s.map(lambda t: _bpe.encode_text(t or "", r, cache))
 
-    return (df.withColumn(out_col, _enc(F.col(text_col)))
-            .withColumn(f"{out_col}_count", F.size(out_col).cast("long")))
+    return (df.withColumn("bpe_tokens", _enc(F.col(text_col)))
+            .withColumn("bpe_tokens_count",
+                        F.size("bpe_tokens").cast("long")))
 
 
-def unigram_train(df: DataFrame, text_col: str, vocab_size: int = 512,
-                  n_iters: int = 2, seed_size: int = 4096,
-                  max_piece_len: int = 8,
-                  max_words: int = 1_000_000,
-                  word_counts: DataFrame | None = None) -> dict[str, float]:
+def unigram_train(word_counts: DataFrame) -> dict[str, float]:
     """Train a unigram-LM subword tokenizer (SentencePiece
     `--model_type=unigram`, Kudo 2018) DISTRIBUTED, in the hard-EM
     (Viterbi) form whose corpus-scale aggregates are all exact integers
@@ -149,99 +140,81 @@ def unigram_train(df: DataFrame, text_col: str, vocab_size: int = 512,
     counts cannot be made engine-deterministic). Same aggregate-then-fit
     scale shape as `bpe_train`:
 
-    - pre-token counting is one JVM-regex explode + map-side-combinable
-      groupBy (corpus-scale work, vocab-scale result), capped to the
-      `max_words` most frequent words (ties by word — the bpe_train cap
-      contract);
+    - pre-token counting is the caller's `word_piece_counts` table (one
+      JVM-regex explode + map-side-combinable groupBy, capped to the
+      `MAX_WORDS` most frequent words — the bpe_train cap contract);
     - substring SEED counting and every E-step run as Arrow-batched
       mapInPandas over the distinct-WORD table with per-batch
       pre-aggregation, then a vocab-bounded groupBy-sum — the corpus
       never moves, scores travel as a broadcast;
-    - only (piece, count) tables at most seed_size + alphabet rows ever
+    - only (piece, count) tables at most SEED_SIZE + alphabet rows ever
       reach the driver, where functions/unigram.py's prune/rescore
       produce the next score table.
 
     Returns the piece->log-prob dict (feed to `unigram_encode`); a
     driver-only recompute via `functions.unigram.train_unigram` over the
     same word counts yields the IDENTICAL table (the registry gate's
-    twin contract)."""
+    twin contract). The caller owns the persistence of `word_counts`;
+    this function must not unpersist it."""
     from ..functions import unigram as _ug
-    # `word_counts` (r14): optional caller-shared word_piece_counts
-    # table — identical derivation (same regex, same cap contract), so
-    # the trained scores are unchanged; the caller owns its persistence
-    # and this function must not unpersist it.
-    caller_owned = word_counts is not None
-    if caller_owned:
-        words = word_counts.selectExpr("piece AS word", "cnt")
-    else:
-        words = (df.select(F.explode(F.regexp_extract_all(
-            F.col(text_col), F.lit(BPE_PRETOKEN_PATTERN), F.lit(0)))
-            .alias("word"))
-            .groupBy("word").agg(F.count("*").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("word"))
-            .limit(int(max_words)))
-        words = words.persist()
-    try:
-        def _partials(counter_of) -> DataFrame:
-            """Run a word->Counter kernel as mapInPandas with per-batch
-            pre-aggregation, summed to exact totals per piece."""
-            def _kernel(batches):
-                from collections import Counter
-                drop_zip_finders()
-                for pdf in batches:
-                    agg: Counter = Counter()
-                    for w, c in zip(pdf["word"], pdf["cnt"]):
-                        counter_of(str(w), int(c), agg)
-                    yield pd.DataFrame(
-                        {"piece": list(agg.keys()),
-                         "pcnt": list(agg.values())})
-            return (words.mapInPandas(_kernel, "piece string, pcnt long")
-                    .groupBy("piece").agg(F.sum("pcnt").alias("cnt")))
+    words = word_counts.selectExpr("piece AS word", "cnt")
 
-        def _seed_kernel(w, c, agg):
-            n = len(w)
-            for i in range(n):
-                for j in range(i + 1, min(i + max_piece_len, n) + 1):
-                    agg[w[i:j]] += c
+    def _partials(counter_of) -> DataFrame:
+        """Run a word->Counter kernel as mapInPandas with per-batch
+        pre-aggregation, summed to exact totals per piece."""
+        def _kernel(batches):
+            from collections import Counter
+            drop_zip_finders()
+            for pdf in batches:
+                agg: Counter = Counter()
+                for w, c in zip(pdf["word"], pdf["cnt"]):
+                    counter_of(str(w), int(c), agg)
+                yield pd.DataFrame(
+                    {"piece": list(agg.keys()),
+                     "pcnt": list(agg.values())})
+        return (words.mapInPandas(_kernel, "piece string, pcnt long")
+                .groupBy("piece").agg(F.sum("pcnt").alias("cnt")))
 
-        seed = _partials(_seed_kernel)
-        top = seed.orderBy(F.col("cnt").desc(), F.col("piece")) \
-            .limit(int(seed_size)).collect()
-        singles = seed.filter(F.length("piece") == 1).collect()
-        raw = {r["piece"]: r["cnt"] for r in top}
-        raw.update({r["piece"]: r["cnt"] for r in singles})
-        if not raw:
-            return {}
-        pieces = sorted(raw)
-        scores = _ug.rescore(raw, pieces)
+    def _seed_kernel(w, c, agg):
+        n = len(w)
+        for i in range(n):
+            for j in range(i + 1, min(i + _ug.MAX_PIECE_LEN, n) + 1):
+                agg[w[i:j]] += c
 
-        sc = df.sparkSession.sparkContext
-        for _ in range(int(n_iters)):
-            bc = sc.broadcast(scores)
+    seed = _partials(_seed_kernel)
+    top = seed.orderBy(F.col("cnt").desc(), F.col("piece")) \
+        .limit(_ug.SEED_SIZE).collect()
+    singles = seed.filter(F.length("piece") == 1).collect()
+    raw = {r["piece"]: r["cnt"] for r in top}
+    raw.update({r["piece"]: r["cnt"] for r in singles})
+    if not raw:
+        return {}
+    pieces = sorted(raw)
+    scores = _ug.rescore(raw, pieces)
 
-            def _em_kernel(w, c, agg, _bc=bc):
-                for p in _ug.viterbi(w, _bc.value, max_piece_len):
-                    agg[p] += c
+    sc = word_counts.sparkSession.sparkContext
+    for _ in range(_ug.N_ITERS):
+        bc = sc.broadcast(scores)
 
-            got = _partials(_em_kernel).collect()
-            counts = {r["piece"]: r["cnt"] for r in got}
-            from collections import Counter as _C
-            pieces = _ug.prune(_C(counts), int(vocab_size))
-            scores = _ug.rescore(counts, pieces)
-            bc.unpersist()
-        return scores
-    finally:
-        if not caller_owned:
-            words.unpersist()
+        def _em_kernel(w, c, agg, _bc=bc):
+            for p in _ug.viterbi(w, _bc.value):
+                agg[p] += c
+
+        got = _partials(_em_kernel).collect()
+        counts = {r["piece"]: r["cnt"] for r in got}
+        from collections import Counter as _C
+        pieces = _ug.prune(_C(counts), _ug.VOCAB_SIZE)
+        scores = _ug.rescore(counts, pieces)
+        bc.unpersist()
+    return scores
 
 
 def unigram_encode(df: DataFrame, text_col: str,
-                   scores: dict[str, float],
-                   out_col: str = "unigram_tokens") -> DataFrame:
-    """Apply a trained unigram score table: adds `out_col`
+                   scores: dict[str, float]) -> DataFrame:
+    """Apply a trained unigram score table: adds `unigram_tokens`
     (array<string>, lossless — concat reproduces the text) and
-    `{out_col}_count` (long). Arrow-batched pandas UDF with the score
-    table shipped once per executor as a broadcast and a per-batch
+    `unigram_tokens_count` (long). Arrow-batched pandas UDF with the
+    score table shipped once per executor as a broadcast and a per-batch
     pre-token cache (heavy-tailed distribution -> dict probes), the
     `bpe_encode` execution shape."""
     from ..functions import unigram as _ug
@@ -254,8 +227,9 @@ def unigram_encode(df: DataFrame, text_col: str,
         cache: dict[str, list[str]] = {}
         return s.map(lambda t: _ug.encode_text(t or "", sco, cache))
 
-    return (df.withColumn(out_col, _enc(F.col(text_col)))
-            .withColumn(f"{out_col}_count", F.size(out_col).cast("long")))
+    return (df.withColumn("unigram_tokens", _enc(F.col(text_col)))
+            .withColumn("unigram_tokens_count",
+                        F.size("unigram_tokens").cast("long")))
 
 
 def _word_ngrams(text_col: str, n: int) -> Column:
@@ -276,16 +250,16 @@ def _word_ngrams(text_col: str, n: int) -> Column:
     return F.when(F.size(toks) >= n, grams).otherwise(empty)
 
 
-def ngram_lm_counts(df: DataFrame, text_col: str, n: int = 2) -> DataFrame:
-    """Train a word n-gram count model on a corpus, fully distributed:
+def ngram_lm_counts(df: DataFrame, text_col: str) -> DataFrame:
+    """Train a word bigram count model on a corpus, fully distributed:
     one explode + one map-side-combinable groupBy — (context, token,
-    cnt) rows, where context is the n-1 preceding words. This is the
+    cnt) rows, where context is the preceding word. This is the
     count table behind CCNet-style LM quality filtering (Wenzek et al.
     2020 use a KenLM 5-gram; the smoothing here is add-k rather than
     Kneser-Ney, the Spark plan shape is identical). The model is itself
     a DataFrame — persist it or write it to parquet; it never has to fit
     on the driver."""
-    return (df.select(F.explode(_word_ngrams(text_col, n))
+    return (df.select(F.explode(_word_ngrams(text_col, 2))
                       .alias("g"))
             .groupBy(F.col("g.context").alias("context"),
                      F.col("g.token").alias("token"))
@@ -302,11 +276,11 @@ def stopword_ratio_expr(c: str,
             f" / size({toks}))")
 
 
-def lang_id_expr(c: str, threshold: float = 0.02) -> str:
-    """Heuristic language-ID: English iff stopword ratio >= threshold.
+def lang_id_expr(c: str) -> str:
+    """Heuristic language-ID: English iff stopword ratio >= 0.02.
     (Real pipelines swap in fastText/CLD3 via a Pandas UDF; the surrounding
     plan — a narrow projection — is identical.)"""
-    return (f"CASE WHEN {stopword_ratio_expr(c)} >= {threshold}D "
+    return (f"CASE WHEN {stopword_ratio_expr(c)} >= 0.02D "
             f"THEN 'en' ELSE 'unknown' END")
 
 
@@ -341,10 +315,9 @@ LANG_TRIGRAMS: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_scores_exprs(c: str, profiles: dict[str, tuple[str, ...]],
-                       pre_normalized: bool) -> dict[str, str]:
-    r"""Per-language profile-coverage scores (|doc ∩ profile| /
-    |profile|, one per language). Exact
+def lang_scores_exprs(c: str) -> dict[str, str]:
+    r"""Per-language `LANG_TRIGRAMS` profile-coverage scores
+    (|doc ∩ profile| / |profile|, one per language). Exact
     cross-engine: an integer hit count divided by the profile size, so
     the DuckDB mirror (`lang_scores_sql`, emitted from the SAME profile
     dict) produces bit-identical doubles — ORACLE-GATED as the
@@ -356,34 +329,27 @@ def lang_scores_exprs(c: str, profiles: dict[str, tuple[str, ...]],
     out of healthy codegen (0.68 -> 3.3 s measured); 4 HOF nodes keep
     it flat.
 
-    pre_normalized=True treats `c` as ALREADY holding
-    regexp_replace(lower(text), \s+, ' '). When probing many profiles,
-    materialize the normalized text behind a Generate barrier
-    (explode(array(norm)) — the registry query does) and pass it here:
-    CollapseProject re-inlines a plain aliased norm into EVERY contains
-    probe, re-running the regexp |profiles|x|grams| times per row
-    (measured +2 s on the bench entry; the documented MinHash-trap
-    class)."""
-    t = (c if pre_normalized
-         else f"regexp_replace(lower({c}), '\\\\s+', ' ')")
+    `c` must ALREADY hold regexp_replace(lower(text), \s+, ' '),
+    materialized behind a Generate barrier (explode(array(norm)) — the
+    registry query does): CollapseProject re-inlines a plain aliased norm
+    into EVERY contains probe, re-running the regexp |profiles|x|grams|
+    times per row (measured +2 s on the bench entry; the documented
+    MinHash-trap class)."""
     out = {}
-    for lang, grams in profiles.items():
+    for lang, grams in LANG_TRIGRAMS.items():
         arr = ",".join(_sq(g.replace("_", " ")) for g in grams)
         out[lang] = (f"(CAST(size(filter(array({arr}), "
-                     f"g -> contains({t}, g))) AS DOUBLE)"
+                     f"g -> contains({c}, g))) AS DOUBLE)"
                      f" / {float(len(grams))}D)")
     return out
 
 
-def lang_scores_sql(norm_col: str,
-                    profiles: dict[str, tuple[str, ...]] | None = None
-                    ) -> dict[str, str]:
+def lang_scores_sql(norm_col: str) -> dict[str, str]:
     """DuckDB SQL for `lang_scores_exprs`, emitted from the same profile dict
     (the zvalue_sql single-source-of-truth pattern). `norm_col` must
     already hold regexp_replace(lower(text), '\\s+', ' ', 'g')."""
-    profiles = profiles or LANG_TRIGRAMS
     out = {}
-    for lang, grams in profiles.items():
+    for lang, grams in LANG_TRIGRAMS.items():
         terms = "\n                   + ".join(
             f"CASE WHEN contains({norm_col}, '{g.replace('_', ' ')}') "
             "THEN 1 ELSE 0 END"
@@ -392,25 +358,21 @@ def lang_scores_sql(norm_col: str,
     return out
 
 
-def lang_id_multi_expr(c: str,
-                       profiles: dict[str, tuple[str, ...]] | None = None,
-                       min_score: float = 0.05,
-                       pre_normalized: bool = False) -> str:
+def lang_id_multi_expr(c: str) -> str:
     """Multi-language n-gram language ID: the argmax of `lang_scores_exprs`
-    over `profiles` (default: built-in en/de/fr/es). Returns the
-    winning language code, or 'unknown' when the best coverage is below
-    `min_score`. Deterministic tie-break: the earliest profile in dict
-    order wins (greatest() over (score, -index, lang) structs — struct
-    comparison is lexicographic, so equal scores fall to the index).
+    over the built-in en/de/fr/es profiles, on the already-normalized
+    text `c`. Returns the winning language code, or 'unknown' when the
+    best coverage is below 0.05. Deterministic tie-break: the earliest
+    profile in dict order wins (greatest() over (score, -index, lang)
+    structs — struct comparison is lexicographic, so equal scores fall
+    to the index).
     Pure codegen'd scalar expressions like the single-profile form:
     O(Σ|profiles|) contains-probes per row, no shuffle, no UDF."""
-    profiles = profiles or LANG_TRIGRAMS
-    scores = lang_scores_exprs(c, profiles, pre_normalized)
     cands = ",".join(
         f"struct({s} AS s, {-i} AS i, {_sq(lang)} AS l)"
-        for i, (lang, s) in enumerate(scores.items()))
-    best = f"greatest({cands})" if len(scores) > 1 else f"({cands})"
-    return (f"CASE WHEN {best}.s >= {min_score}D "
+        for i, (lang, s) in enumerate(lang_scores_exprs(c).items()))
+    best = f"greatest({cands})"
+    return (f"CASE WHEN {best}.s >= 0.05D "
             f"THEN {best}.l ELSE 'unknown' END")
 
 
@@ -467,15 +429,13 @@ def repetition_features_exprs(c: str) -> dict[str, str]:
     }
 
 
-def pack_sequences(df: DataFrame, id_col: str, token_count_col: str,
-                   seq_len: int = 512,
-                   order_cols: list[str] | None = None,
-                   out_col: str = "pack_id") -> DataFrame:
+def pack_sequences(df: DataFrame, id_col: str,
+                   token_count_col: str) -> DataFrame:
     """Greedy-concat sequence packing — the training-data step that
-    concatenates documents in a deterministic order and chunks the token
-    stream into fixed context-length windows (GPT-style packing): a
-    document's pack is the window its FIRST token lands in,
-    pack_id = exclusive-running-token-total div seq_len.
+    concatenates documents in `id_col` order and chunks the token stream
+    into 512-token context windows (GPT-style packing): a document's
+    pack is the window its FIRST token lands in,
+    pack_id = exclusive-running-token-total div 512.
 
     Distributed via with_global_cumsum (range-bucketed partial sums +
     O(parallelism) offset window) — never a single-partition global
@@ -483,19 +443,21 @@ def pack_sequences(df: DataFrame, id_col: str, token_count_col: str,
     end to end: exact at any accumulated token count (no double
     rounding)."""
     from .replay_ops import with_global_cumsum
-    order = order_cols or [id_col]
-    c = with_global_cumsum(df, order, token_count_col, "__cum_excl")
-    return (c.withColumn(out_col,
-                         F.expr(f"__cum_excl div {int(seq_len)}"))
+    c = with_global_cumsum(df, [id_col], token_count_col, "__cum_excl")
+    return (c.withColumn("pack_id", F.expr("__cum_excl div 512"))
             .drop("__cum_excl"))
 
 
-def chunk_documents(df: DataFrame, id_col: str, text_col: str,
-                    chunk_tokens: int = 256,
-                    overlap: int = 32) -> DataFrame:
+#: Whitespace tokens per `chunk_documents` window, and the tokens two
+#: consecutive windows share.
+CHUNK_TOKENS, CHUNK_OVERLAP = 64, 16
+
+
+def chunk_documents(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Sliding-window document chunking — the RAG/embedding-pipeline
-    primitive: split each document into token windows of `chunk_tokens`
-    whitespace tokens, consecutive windows sharing `overlap` tokens.
+    primitive: split each document into token windows of `CHUNK_TOKENS`
+    whitespace tokens, consecutive windows sharing `CHUNK_OVERLAP`
+    tokens.
     Emits (id, chunk_id, start_token, n_tokens, chunk_text); the final
     window may be short (never empty — every doc emits >= 1 chunk, so a
     downstream embed/index join cannot silently drop short docs).
@@ -515,11 +477,7 @@ def chunk_documents(df: DataFrame, id_col: str, text_col: str,
     (~3 split() evaluations per row — a constant factor on a projection,
     accepted; the explode-to-rows alternative would shuffle the corpus).
     """
-    if not 0 <= overlap < chunk_tokens:
-        raise ValueError(
-            f"overlap={overlap} must satisfy 0 <= overlap < "
-            f"chunk_tokens={chunk_tokens}")
-    step = chunk_tokens - overlap
+    step = CHUNK_TOKENS - CHUNK_OVERLAP
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     # A start s > 0 contributes new tokens iff s <= n - overlap - 1
     # (otherwise its chunk is fully contained in the previous one —
@@ -529,7 +487,7 @@ def chunk_documents(df: DataFrame, id_col: str, text_col: str,
     # tables). greatest(..., 0) keeps the every-doc-emits guarantee.
     starts = F.sequence(
         F.lit(0),
-        F.greatest(F.size(toks) - F.lit(overlap) - 1, F.lit(0)),
+        F.greatest(F.size(toks) - F.lit(CHUNK_OVERLAP) - 1, F.lit(0)),
         F.lit(step))
     ex = (df.filter(F.col(text_col).isNotNull())
           .select(F.col(id_col), toks.alias("__toks"),
@@ -538,11 +496,11 @@ def chunk_documents(df: DataFrame, id_col: str, text_col: str,
         F.col(id_col),
         (F.col("__start") / step).cast("long").alias("chunk_id"),
         F.col("__start").cast("long").alias("start_token"),
-        F.least(F.lit(chunk_tokens),
+        F.least(F.lit(CHUNK_TOKENS),
                 F.size("__toks") - F.col("__start"))
         .cast("long").alias("n_tokens"),
         F.array_join(F.slice("__toks", F.col("__start") + 1,
-                             chunk_tokens), " ").alias("chunk_text"))
+                             CHUNK_TOKENS), " ").alias("chunk_text"))
 
 
 def fingerprint_expr(c: str) -> str:

@@ -325,18 +325,6 @@ _DEC_RATE = "decimal(6,4)"     # l_discount / l_tax
 _DEC_VALUE = "decimal(18,6)"   # events.value
 
 
-def _money(col):
-    return col.cast(_DEC_MONEY)
-
-
-def _one_minus(col):
-    return F.lit(1).cast(_DEC_RATE) - col.cast(_DEC_RATE)
-
-
-def _disc_price():
-    return _money(F.col("l_extendedprice")) * _one_minus(F.col("l_discount"))
-
-
 def _quant_sql(col: str, scale: int) -> str:
     """Floor-quantize an exact-decimal-valued double to integer units
     (cents at scale 2, basis points at scale 4): floor(v*10^s + 0.5) —
@@ -348,7 +336,9 @@ def _quant_sql(col: str, scale: int) -> str:
 
 
 def _disc_price_sql() -> str:
-    """Spark-SQL twin of `_disc_price` (decimal money x rate product)."""
+    """The discounted price l_extendedprice * (1 - l_discount) as an exact
+    decimal money x rate product (Spark SQL; the DuckDB oracles spell
+    their own, `_SQL_DISC_PRICE`)."""
     return (f"(CAST(l_extendedprice AS {_DEC_MONEY}) * "
             f"(CAST(1 AS {_DEC_RATE}) - CAST(l_discount AS {_DEC_RATE})))")
 
@@ -536,7 +526,8 @@ def q_q7_nation_volume(spark, sf_dir):
                     & (F.col("supp_nation") != F.col("cust_nation")))
             .groupBy("supp_nation", "cust_nation",
                      F.year("l_shipdate").cast("long").alias("l_year"))
-            .agg(F.sum(_disc_price()).cast("double").alias("revenue")))
+            .agg(F.expr(f"CAST(sum({_disc_price_sql()}) AS DOUBLE) "
+                        "AS revenue")))
 
 
 def q_q10_returned_items(spark, sf_dir):
@@ -556,7 +547,8 @@ def q_q10_returned_items(spark, sf_dir):
             .join(c, F.col("c_custkey") == F.col("o_custkey"))
             .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
             .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-            .agg(F.sum(_disc_price()).cast("double").alias("revenue"))
+            .agg(F.expr(f"CAST(sum({_disc_price_sql()}) AS DOUBLE) "
+                        "AS revenue"))
             .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
             .limit(20))
 
@@ -569,7 +561,7 @@ def q_q18_large_orders(spark, sf_dir):
     ensure_engine_conf(spark)
     l = load(spark, sf_dir, "lineitem")
     big = (l.groupBy("l_orderkey")
-           .agg(F.sum(_money(F.col("l_quantity"))).alias("qty"))
+           .agg(F.expr(f"sum(CAST(l_quantity AS {_DEC_MONEY})) AS qty"))
            .filter(F.col("qty") > F.lit(170).cast(_DEC_MONEY)))
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
@@ -597,7 +589,7 @@ def q_q19_bracket_disjunction(spark, sf_dir):
         | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(20, 50)
            & F.col("l_quantity").between(20, 50)))
     return joined.filter(bracket).agg(
-        F.sum(_disc_price()).cast("double").alias("revenue"),
+        F.expr(f"CAST(sum({_disc_price_sql()}) AS DOUBLE) AS revenue"),
         F.count("*").alias("n_items"))
 
 
@@ -1022,8 +1014,7 @@ def q_interval_join_counts(spark, sf_dir):
              .select(F.col("event_id").alias("interval_id"),
                      F.col("ts").alias("lo"),
                      (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("hi")))
-    joined = iv.interval_join(e.select("event_id", "ts"), spans,
-                              bucket_width_s=3600)
+    joined = iv.interval_join(e.select("event_id", "ts"), spans)
     base = (joined.groupBy("interval_id")
             .agg(F.count("*").alias("n_events"))
             .select(F.lit("interval").alias("kind"), "interval_id",
@@ -1039,9 +1030,8 @@ def q_interval_join_counts(spark, sf_dir):
               .select("user_id", "ts"))
 
     def _asof_rows(kind, tolerance_s, direction="backward"):
-        aj = iv.asof_join(purchases, clicks, on="ts", by="user_id",
-                          value_cols=[], tolerance_s=tolerance_s,
-                          direction=direction)
+        aj = iv.asof_join(purchases, clicks, by="user_id",
+                          tolerance_s=tolerance_s, direction=direction)
         return aj.select(
             F.lit(kind).alias("kind"),
             F.col("event_id").alias("interval_id"),
@@ -1055,8 +1045,7 @@ def q_interval_join_counts(spark, sf_dir):
                    .select("event_id", "user_id", grp, "ts"))
     clicks_m = (e.filter((F.col("event_type") == "click") & nn)
                 .select("user_id", grp, "ts"))
-    ajm = iv.asof_join(purchases_m, clicks_m, on="ts",
-                       by=["user_id", "grp"], value_cols=[])
+    ajm = iv.asof_join(purchases_m, clicks_m, by=["user_id", "grp"])
     multi = ajm.select(
         F.lit("asof_multi").alias("kind"),
         F.col("event_id").alias("interval_id"),
@@ -1350,7 +1339,7 @@ _ORACLES_SQL_SURFACE = {
     # NOT quantile_cont: its algebraically-equal formula differs in
     # floating point both on equal-neighbor interpolation points
     # (common at sf1, where the tiled fixture duplicates values) and
-    # on ordinary rows at the 1-ulp level (docs/ROUND10.md).
+    # on ordinary rows at the 1-ulp level (measured r10).
     "event_value_quantiles": """
         WITH ranked AS (
             SELECT event_type, value,
@@ -1471,9 +1460,8 @@ def q_doc_text_profile(spark, sf_dir):
         # doubles, so the oracle rederives them from the SAME profile
         # dict via text.lang_scores_sql (single source of truth)
         *[f"{s} AS lang_{lang}"
-          for lang, s in text.lang_scores_exprs(
-              "__nt", text.LANG_TRIGRAMS, True).items()],
-        f"{text.lang_id_multi_expr('__nt', pre_normalized=True)} "
+          for lang, s in text.lang_scores_exprs("__nt").items()],
+        f"{text.lang_id_multi_expr('__nt')} "
         "AS lang_pred_multi")
 
 
@@ -1507,7 +1495,7 @@ def q_doc_pii_redact(spark, sf_dir):
     # the table). Was: two independent corpus scans + aggregations.
     wc = text.word_piece_counts(d, "text").persist()
     try:
-        merges = text.bpe_train(d, "text", n_merges=64, word_counts=wc)
+        merges = text.bpe_train(wc)
         # late r10: the unigram-LM tokenizer (SentencePiece hard-EM form,
         # text.unigram_train — distributed seed + Viterbi E-steps over the
         # word-count table, exact-integer aggregates) rides this entry the
@@ -1515,9 +1503,7 @@ def q_doc_pii_redact(spark, sf_dir):
         # functions.unigram.train_unigram over the SAME capped word counts
         # and embeds per-doc token counts, so the distributed train+encode
         # path is hash-checked end-to-end.
-        ug_scores = text.unigram_train(d, "text", vocab_size=256,
-                                       n_iters=2, seed_size=1024,
-                                       word_counts=wc)
+        ug_scores = text.unigram_train(wc)
     finally:
         wc.unpersist()
     enc = text.bpe_encode(d.select("doc_id", "text"), "text", merges)
@@ -1530,14 +1516,13 @@ def q_doc_pii_redact(spark, sf_dir):
     # thing in plain DuckDB SQL (fully independent — no literals). The
     # float bits/perplexity stay out: log2 + non-deterministic double
     # summation order cannot hash-match across engines.
-    lm = text.ngram_lm_counts(d.filter(F.col("doc_id") % 2 == 0),
-                              "text", n=2)
+    lm = text.ngram_lm_counts(d.filter(F.col("doc_id") % 2 == 0), "text")
     # r7c: DSIR importance-resampling stats ride the same gram frame —
     # the even-doc model doubles as the TARGET model and a raw model
     # over the WHOLE corpus joins alongside it (DSIR's float log-ratio
     # would be built from these same joins; logs stay out of the gate
     # for the usual libm reason).
-    raw = text.ngram_lm_counts(d, "text", n=2) \
+    raw = text.ngram_lm_counts(d, "text") \
         .withColumnRenamed("cnt", "rcnt")
     g = (d.select("doc_id",
                   F.explode(text._word_ngrams("text", 2)).alias("g"))
@@ -1561,10 +1546,9 @@ def q_doc_pii_redact(spark, sf_dir):
     # function + bucket geometry are gate-checked while libm logs stay
     # out (the DSIR log-weight would build on exactly these joins).
     hb_t = sampling.dsir_hashed_counts(
-        d.filter(F.col("doc_id") % 2 == 0), "text", n_buckets=10_000)
-    hb_r = sampling.dsir_hashed_counts(d, "text", n_buckets=10_000)
-    hb = sampling.dsir_hashed_stats(d, "doc_id", "text", hb_t, hb_r,
-                                    n_buckets=10_000)
+        d.filter(F.col("doc_id") % 2 == 0), "text")
+    hb_r = sampling.dsir_hashed_counts(d, "text")
+    hb = sampling.dsir_hashed_stats(d, "doc_id", "text", hb_t, hb_r)
     return (text.pii_redact(d, "doc_id", "text")
             .join(enc.select("doc_id", F.col("bpe_tokens_count")
                              .alias("bpe_token_count")), "doc_id")
@@ -1620,11 +1604,10 @@ def q_doc_train_split(spark, sf_dir):
     # bigger cache write for columns only one leg needs. Keep the legs
     # decoupled; `shingle_arrays(extra=)` / `arrays=` remain for callers
     # that genuinely reuse the shingle table across ACTIONS.
-    cont = dedup.cross_split_contamination(
-        split, "doc_id", "text", "split", k=3)
+    cont = dedup.cross_split_contamination(split, "doc_id", "text", "split")
     packed = text.pack_sequences(
         split.withColumn("__n_tok", F.expr(text.token_count_expr("text"))),
-        "doc_id", "__n_tok", seq_len=512)
+        "doc_id", "__n_tok")
     # r7c: temperature mixture sampling rides this entry (it is the
     # registry's sampling/split surface): per-source sqrt-temperature
     # rates (weight = a pure function of the source name, target_frac
@@ -1635,8 +1618,7 @@ def q_doc_train_split(spark, sf_dir):
     # source + a broadcast join — negligible next to the shingle legs.
     mix = sampling.mixture_sample(
         d.select("doc_id", "source"), "doc_id", "source",
-        weight=lambda c: F.substring(c, 4, 10).cast("int") % 4 + 1,
-        target_frac=0.5)
+        weight=lambda c: F.substring(c, 4, 10).cast("int") % 4 + 1)
     # Assembly joins stay unhinted: all three sides are doc-count-sized
     # (too big to force-broadcast at 100 TB); AQE picks broadcast at bench
     # SFs and colocated shuffle joins on doc_id beyond. USING-style
@@ -1702,7 +1684,7 @@ def _pii_bpe_oracle() -> str:
     counts: Counter = Counter()
     for _did, t in rows:
         counts.update(_bpe.pretokenize(t))
-    # Mirror bpe_train's max_words cap EXACTLY (r7 review): the Spark
+    # Mirror the text.MAX_WORDS cap EXACTLY (r7 review): the Spark
     # side trains on the top-1M pieces by (count desc, piece asc); a
     # fixture whose distinct-piece count ever exceeds the cap must see
     # the same truncation here or the merge lists silently diverge.
@@ -1713,8 +1695,7 @@ def _pii_bpe_oracle() -> str:
     # capped word counts (functions/unigram.py hard-EM kernels; the
     # Spark side trains distributed) and embed per-doc token counts.
     from ..functions import unigram as _ug
-    ug_scores = _ug.train_unigram(capped, vocab_size=256, n_iters=2,
-                                  seed_size=1024)
+    ug_scores = _ug.train_unigram(capped)
     cache: dict = {}
     ug_cache: dict = {}
     values = ",".join(
@@ -2118,7 +2099,7 @@ def q_dedup_exact(spark, sf_dir):
         F.col("dup_count").cast("long").alias("dup_count"),
         F.lit(None).cast("long").alias("span_start"),
         F.lit(None).cast("long").alias("span_end"))
-    spans = dedup.duplicate_spans(d, "doc_id", "text", window=12)
+    spans = dedup.duplicate_spans(d, "doc_id", "text")
     sp_rows = spans.select(
         F.lit("span").alias("kind"), F.col("doc_id").alias("keep_id"),
         F.col("n_windows").cast("long").alias("dup_count"),
@@ -2133,8 +2114,7 @@ def q_dedup_exact(spark, sf_dir):
         F.col("dup_count").cast("long").alias("dup_count"),
         "span_start", "span_end")
     qh = sketches.qhist_table(
-        d.select(F.length("text").cast("long").alias("L")), "L",
-        sig_bits=7)
+        d.select(F.length("text").cast("long").alias("L")), "L")
     qh_rows = qh.agg(
         F.count("*").alias("keep_id"),
         F.sum(F.col("bucket") * F.col("cnt")).alias("dup_count"),
@@ -2165,7 +2145,7 @@ def q_dedup_exact(spark, sf_dir):
            .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
            .select(F.pmod(F.col("user_id"), F.lit(64)).alias("u"),
                    F.pmod(F.unix_millis("ts"), F.lit(64)).alias("m")))
-    lut6 = layout.hilbert_lookup(spark, bits=6)
+    lut6 = layout.hilbert_lookup(spark)
     hi_rows = (ev6.select(
         layout.zvalue([F.col("u"), F.col("m")], bits=6).alias("zkey"))
         .join(F.broadcast(lut6), "zkey")
@@ -2203,7 +2183,7 @@ def q_dedup_exact(spark, sf_dir):
                 "span_start", "span_end"))
     # kind='bm25': single-scan two-level tree over the inverted index —
     # groupBy(term) folds postings into (df, ttf), then one global agg
-    bm_rows = (retrieval.postings(d, "doc_id", "text")
+    bm_rows = (retrieval.postings(d)
                .groupBy("term")
                .agg(F.count("*").alias("df"), F.sum("tf").alias("ttf"))
                .agg(F.sum("df").alias("keep_id"),
@@ -2228,13 +2208,12 @@ def q_dedup_exact(spark, sf_dir):
                        F.col("span_start").cast("long").alias("span_start"),
                        F.col("span_end").cast("long").alias("span_end")))
     from ..operators import suffix as sfx
-    sa_rows = (sfx.duplicated_runs(d, "doc_id", "text", min_len=12)
+    sa_rows = (sfx.duplicated_runs(d, "doc_id", "text")
                .select(F.lit("sa").alias("kind"),
                        F.col("doc_id").alias("keep_id"),
                        F.col("n_windows").cast("long").alias("dup_count"),
                        "span_start", "span_end"))
-    ch_rows = (text_ops.chunk_documents(d, "doc_id", "text",
-                                        chunk_tokens=64, overlap=16)
+    ch_rows = (text_ops.chunk_documents(d, "doc_id", "text")
                .select(F.lit("chunk").alias("kind"),
                        F.col("doc_id").alias("keep_id"),
                        F.col("chunk_id").alias("dup_count"),
@@ -2258,7 +2237,7 @@ def q_ngram_jaccard_dedup(spark, sf_dir):
     quadratic space); threshold 0.5."""
     ensure_engine_conf(spark)
     d = load(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(d, "doc_id", "text", k=3,
+    return dedup.ngram_jaccard_pairs(d, "doc_id", "text",
                                      threshold=_JACCARD_THRESHOLD)
 
 
@@ -2272,12 +2251,9 @@ def q_dedup_clusters(spark, sf_dir):
     transitive closure."""
     ensure_engine_conf(spark)
     d = load(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", k=3,
+    pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text",
                                       threshold=_JACCARD_THRESHOLD)
-    # check_every=2: at gate/bench SFs the per-round job-launch constant
-    # dominates the tiny label shuffles, so chaining two rounds per
-    # convergence check halves the job count (see dedup_clusters).
-    return dedup.dedup_clusters(d, pairs, id_col="doc_id", check_every=2)
+    return dedup.dedup_clusters(d, pairs)
 
 
 def q_minhash_dedup(spark, sf_dir):
@@ -2306,8 +2282,8 @@ def q_minhash_dedup(spark, sf_dir):
     boundary."""
     ensure_engine_conf(spark)
     d = load(spark, sf_dir, "documents")
-    out = dedup.minhash_dedup(d, "doc_id", "text", num_hashes=32, bands=16,
-                              k=3, threshold=_JACCARD_THRESHOLD)
+    out = dedup.minhash_dedup(d, "doc_id", "text",
+                              threshold=_JACCARD_THRESHOLD)
     return out.selectExpr("id_a", "id_b", "jaccard")
 
 
@@ -2318,7 +2294,7 @@ def q_simhash_dedup(spark, sf_dir):
     pair set with bit_count(xor(..)) (see _simhash_oracle)."""
     ensure_engine_conf(spark)
     d = load(spark, sf_dir, "documents")
-    return dedup.simhash_near_dups(d, "doc_id", "text", max_hamming=3)
+    return dedup.simhash_near_dups(d, "doc_id", "text")
 
 
 def _simhash_oracle() -> str:
@@ -2682,7 +2658,7 @@ def q_ann_topk_cosine(spark, sf_dir):
     are DECIMAL-exact, so scores are bit-identical to the SQL oracle."""
     ensure_engine_conf(spark)
     emb = load(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(emb, _query_vec(spark, sf_dir), k=10)
+    return similarity.brute_force_topk(emb, _query_vec(spark, sf_dir))
 
 
 def q_ann_lsh_topk(spark, sf_dir):
@@ -2697,8 +2673,7 @@ def q_ann_lsh_topk(spark, sf_dir):
     oracle mirrors the 3 argmin-|component| flips in SQL."""
     ensure_engine_conf(spark)
     emb = load(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(emb, _query_vec(spark, sf_dir), k=10,
-                               n_bits=4, n_probe=4)
+    return similarity.lsh_topk(emb, _query_vec(spark, sf_dir))
 
 
 def q_dedup_embedding_cosine(spark, sf_dir):
@@ -2714,16 +2689,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     dedup.embedding_cosine_dedup for the plan-shape discussion."""
     ensure_engine_conf(spark)
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0)
-    # Pre-filter dot stays on the interpreted HOF: the codegen'd
-    # balanced-tree fixed-width dot (dim=64) won its ISOLATED verify
-    # stage (0.69 s vs 0.87 s) but measured SLOWER whole-query at bench
-    # conditions (r7 A/B, min-of-3 interleaved: 2.21 s tree vs 1.85 s
-    # HOF) — the 127-node expression is re-analyzed/codegen'd per run and
-    # re-inlined into the filter predicate, and that constant exceeds the
-    # verify-stage win at this candidate count. `dim=` remains for
-    # corpora where verification dominates (huge candidate sets).
-    return dedup.embedding_cosine_dedup(emb, threshold=0.4,
-                                        n_bands=8, band_bits=8)
+    return dedup.embedding_cosine_dedup(emb)
 
 
 def q_ann_ivf_topk(spark, sf_dir):
@@ -2741,11 +2707,8 @@ def q_ann_ivf_topk(spark, sf_dir):
     # one-file corpus without the conditional widen (measured at
     # full-bench conditions: 5.6 -> 3.7 s at sf0.1).
     emb = widen_if_narrow(load(spark, sf_dir, "embeddings"))
-    cents = similarity.kmeans_centroids(emb, n_centroids=16, n_iters=2,
-                                        exact=True)
-    return similarity.ivf_topk(emb, _query_vec(spark, sf_dir), k=10,
-                               n_centroids=16, n_probe=4, centroids=cents,
-                               exact=True)
+    cents = similarity.kmeans_centroids(emb)
+    return similarity.ivf_topk(emb, _query_vec(spark, sf_dir), cents)
 
 
 def q_multimodal_decode(spark, sf_dir):
@@ -2856,7 +2819,7 @@ def q_pairwise_topk_per_label(spark, sf_dir):
     # widen (measured at full-bench conditions: 34.3 -> 27.9 s at sf0.1).
     emb = widen_if_narrow(load(spark, sf_dir, "embeddings")) \
         .filter(F.col("vec_id") % 5 == 0)
-    out = similarity.pairwise_topk_per_label(emb, k=3)
+    out = similarity.pairwise_topk_per_label(emb)
     pair = out.select(
         F.lit("pair").alias("kind"),
         F.col("lbl").cast("long").alias("label"), "id_a", "id_b", "cosine",
@@ -2868,8 +2831,7 @@ def q_pairwise_topk_per_label(spark, sf_dir):
     # conditions with the widened sample already in place: -2.0 s,
     # row-multiset identical).
     full = widen_if_narrow(load(spark, sf_dir, "embeddings"))
-    cents = similarity.kmeans_centroids(full, n_centroids=16, n_iters=2,
-                                        exact=True)
+    cents = similarity.kmeans_centroids(full)
     # r14 (r13 verdict item 5): the flat kinds ran the broadcast-centroid
     # scoring scan TWICE — once inside semantic_dedup(n_assign=1)
     # (ivf_assign) and once inside n_assign=2 (_ranked_assign); rank-1
@@ -2878,13 +2840,11 @@ def q_pairwise_topk_per_label(spark, sf_dir):
     # materialized width-2 table feeds both kinds. Results bit-identical
     # (oracle hash re-verified; parity pinned in
     # test_semantic_dedup_shared_ranked_bit_equal).
-    ranked2 = similarity._ranked_assign(full, cents, 2,
-                                        exact=True).localCheckpoint()
+    ranked2 = similarity._ranked_assign(full, cents, 2).localCheckpoint()
 
     def _sem_rows(kind: str, n_assign: int):
-        sem = similarity.semantic_dedup(
-            full, threshold=0.4, centroids=cents, exact=True,
-            n_assign=n_assign, ranked=ranked2)
+        sem = similarity.semantic_dedup(full, cents, n_assign=n_assign,
+                                        ranked=ranked2)
         return sem.select(
             F.lit(kind).alias("kind"),
             F.col("centroid_id").cast("long").alias("label"),
@@ -2896,9 +2856,7 @@ def q_pairwise_topk_per_label(spark, sf_dir):
 
     sem_rows = _sem_rows("semdedup", 1)
     sem_ma_rows = _sem_rows("semdedup_ma", 2)
-    sem2 = similarity.semantic_dedup_two_level(
-        full, threshold=0.4,
-        n_coarse=4, n_fine=4, n_iters=2, train_mod=2, exact=True)
+    sem2 = similarity.semantic_dedup_two_level(full)
     sem2_rows = sem2.select(
         F.lit("semdedup2").alias("kind"),
         F.col("centroid_id").cast("long").alias("label"),
@@ -2919,7 +2877,7 @@ _SIGN_BUCKET_SQL = ("(CASE WHEN {v}[1] >= 0 THEN 8 ELSE 0 END"
 def _ivf_assign_sql(cents_cte: str) -> str:
     """Argmax-cosine assignment of every vector to a centroid table CTE —
     decimal-exact cosine, tie-break on centroid_id (mirrors
-    similarity.ivf_assign(exact=True))."""
+    similarity.ivf_assign)."""
     return f"""
         SELECT vec_id, embedding, centroid_id FROM (
             SELECT e.vec_id, e.embedding, c.centroid_id,
@@ -2933,7 +2891,7 @@ def _ivf_update_sql(assign_cte: str) -> str:
     """Centroid update as per-dimension DECIMAL SUMS cast to double —
     order-independent and engine-exact; no division (cosine is
     scale-invariant, so the sum is the same direction as the mean).
-    Mirrors kmeans_centroids(exact=True)'s update."""
+    Mirrors kmeans_centroids's update."""
     return f"""
         SELECT centroid_id, list(s ORDER BY pos) AS c_vec FROM (
             SELECT centroid_id, pos,
@@ -2974,7 +2932,7 @@ _IVF_ORACLE = f"""
 
 
 # --- two-level SemDeDup oracle helpers (kind='semdedup2') ------------------
-# Unrolled twin of semantic_dedup_two_level(exact=True): every step uses
+# Unrolled twin of semantic_dedup_two_level: every step uses
 # the audited cross-engine-exact patterns (decimal dot products, decimal
 # per-dimension sums routed through VARCHAR to double), mirroring
 # kmeans_centroids_two_level / ivf_assign_two_level bit for bit.
@@ -2982,7 +2940,7 @@ _IVF_ORACLE = f"""
 
 def _tl2_assign_sql(src: str, cents: str) -> str:
     """(id, vec, coarse_id): argmax-cosine assignment of (id, vec) rows
-    against a (centroid_id, c_vec) table — ivf_assign(exact=True)."""
+    against a (centroid_id, c_vec) table — ivf_assign."""
     return f"""
         SELECT id, vec, coarse_id FROM (
             SELECT s.id, s.vec, c.centroid_id AS coarse_id,
@@ -2994,7 +2952,7 @@ def _tl2_assign_sql(src: str, cents: str) -> str:
 
 def _tl2_coarse_update_sql(asg: str) -> str:
     """Coarse-centroid update: per-dimension decimal sums cast to double
-    (order-independent, no division) — kmeans_centroids(exact=True)."""
+    (order-independent, no division) — kmeans_centroids."""
     return f"""
         SELECT coarse_id AS centroid_id, list(s ORDER BY pos) AS c_vec
         FROM (
@@ -3387,7 +3345,7 @@ def q_training_data_pipeline(spark, sf_dir):
     kept = enriched.filter(
         (F.col("lang_pred") == "en") & (F.col("n_tokens") >= 10)
         & (F.col("dup_line_frac") <= 0.3))
-    dup_pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", 3, 0.5)
+    dup_pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", 0.5)
     losers = dup_pairs.select(F.col("id_b").alias("doc_id")).distinct()
     return kept.join(losers, "doc_id", "left_anti") \
         .select("doc_id", "n_tokens", "fingerprint", "stop_ratio",

@@ -75,15 +75,14 @@ CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 CODEGEN_CACHE_ENTRIES = 2048
 
 
-def build_spark(app_name: str = "amazon-kinesis-replay-spark",
-                shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or get) a local session sized from $SPARK_GRAFT_CPUS."""
+def build_spark(app_name: str = "amazon-kinesis-replay-spark") -> SparkSession:
+    """Build (or get) a local session sized from $SPARK_GRAFT_CPUS, with
+    one shuffle partition per core."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = str(shuffle_partitions or int(cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")

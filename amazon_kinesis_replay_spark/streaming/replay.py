@@ -200,6 +200,19 @@ class ReplayEngine:
     def __init__(self, cfg: ReplayConfig, sink, mode: str = "driver"):
         if mode not in ("driver", "partitioned"):
             raise ValueError(f"unknown replay mode {mode!r}")
+        # finalize() drains the held tail (at least reader_buffer_size
+        # rows) through _process_driver as ONE frame, which refuses any
+        # frame above driver_mode_max_rows: the replay would run to the
+        # end and then fail to drain
+        if (mode == "driver" and cfg.reorder_across_batches
+                and cfg.reader_buffer_size >= cfg.driver_mode_max_rows):
+            raise ValueError(
+                f"driver-mode reorder holds reader_buffer_size="
+                f"{cfg.reader_buffer_size} rows and drains them as one "
+                f"frame, which driver_mode_max_rows="
+                f"{cfg.driver_mode_max_rows} refuses; lower "
+                "reader_buffer_size below driver_mode_max_rows or use "
+                "mode='partitioned'")
         self.cfg = cfg
         self.sink = sink
         self.mode = mode

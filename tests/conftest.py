@@ -1,6 +1,7 @@
 import os
 import sys
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -18,10 +19,34 @@ os.environ.setdefault("SPARK_DRIVER_MEM", "1g")
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def engine_session():
+    """The suite's one session: `build_spark`'s, with 8 shuffle
+    partitions set at runtime (the sf0.001 fixtures need no more)."""
+    s = build_spark("engine-tests")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    return s
+
+
+@contextmanager
+def advisory_bytes(spark, size: str):
+    """Run the body with AQE's advisory partition size set to `size` —
+    the byte target `replay_ops._adaptive_parts` sizes its buckets by, so
+    a small value forces several buckets on the fixture-scale inputs."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, size)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = build_spark("engine-tests", shuffle_partitions=8)
-    yield s
+    yield engine_session()
 
 
 @pytest.fixture(scope="session")
@@ -49,7 +74,6 @@ SLOW_TESTS = {
     "tests/test_metrics_and_props.py::test_jaccard_pairs_invariants",
     "tests/test_pipeline_ops.py::test_dedup_clusters_pairs_path_and_chained_check",
     "tests/test_pipeline_ops.py::test_semantic_dedup_multi_assign",
-    "tests/test_pipeline_ops.py::test_semantic_dedup_two_level_multi_assign",
     "tests/test_sources_and_sinks.py::test_zstd_seeded_mutation_fuzz_never_crashes",
     "tests/test_streaming_replay.py::test_composed_replay_witness_small",
     "tests/test_suffix.py::test_suffix_ranks_equality_classes",

@@ -1,8 +1,8 @@
 """As-of (point-in-time) join — `intervals.asof_join`.
 
 Twin: a pure-python reimplementation of the backward/forward inclusive
-match rule (greatest right.on <= left.on / smallest right.on >= left.on
-per key, max-tiebreak among exact ties). The operator's contract mirrors
+match rule (greatest right.ts <= left.ts / smallest right.ts >= left.ts
+per key). The operator's contract mirrors
 pandas merge_asof / DuckDB ASOF JOIN; the registry's kind='asof' rows in
 interval_join_counts gate it cross-engine against DuckDB's NATIVE
 ASOF LEFT JOIN at the oracle sweep.
@@ -39,14 +39,10 @@ def _twin(direction, tolerance=None):
         else:
             cands = [r for r in RIGHT if r[1] == k and r[2] >= lts]
             best_ts = min((r[2] for r in cands), default=None)
-        if best_ts is None:
-            out[lid] = (None, None)
-            continue
-        if tolerance is not None and abs(lts - best_ts) > tolerance:
-            out[lid] = (None, None)
-            continue
-        best = max((r for r in cands if r[2] == best_ts), key=lambda r: r[0])
-        out[lid] = (best_ts, best[3])
+        if tolerance is not None and best_ts is not None \
+                and abs(lts - best_ts) > tolerance:
+            best_ts = None
+        out[lid] = best_ts
     return out
 
 
@@ -60,44 +56,38 @@ def _frames(spark):
 @pytest.mark.parametrize("direction", ["backward", "forward"])
 def test_asof_join_matches_python_twin(spark, direction):
     left, right = _frames(spark)
-    got = iv.asof_join(left, right, on="ts", by="key",
-                       value_cols=["val"], direction=direction,
-                       tiebreak="rid")
-    rows = {r["lid"]: (r["asof_ts"], r["asof_val"]) for r in got.collect()}
+    got = iv.asof_join(left, right, by="key", direction=direction)
+    rows = {r["lid"]: r["asof_ts"] for r in got.collect()}
     assert rows == _twin(direction)
 
 
 def test_asof_join_tolerance_nulls_far_matches(spark):
     left, right = _frames(spark)
-    got = iv.asof_join(left, right, on="ts", by="key",
-                       value_cols=["val"], tolerance_s=10, tiebreak="rid")
-    rows = {r["lid"]: (r["asof_ts"], r["asof_val"]) for r in got.collect()}
+    got = iv.asof_join(left, right, by="key", tolerance_s=10)
+    rows = {r["lid"]: r["asof_ts"] for r in got.collect()}
     assert rows == _twin("backward", tolerance=10)
-    # every out-of-tolerance left row is fully unmatched, not half-nulled
-    for ts_v, val_v in rows.values():
-        assert (ts_v is None) == (val_v is None)
 
 
 def test_asof_join_left_rows_all_kept(spark):
     left, right = _frames(spark)
-    got = iv.asof_join(left, right, on="ts", by="key", value_cols=["val"])
+    got = iv.asof_join(left, right, by="key")
     assert got.count() == len(LEFT)
-    assert set(got.columns) == {"lid", "key", "ts", "asof_ts", "asof_val"}
+    assert set(got.columns) == {"lid", "key", "ts", "asof_ts"}
 
 
 def test_asof_join_requires_by_key(spark):
     left, right = _frames(spark)
     with pytest.raises(ValueError, match="non-empty"):
-        iv.asof_join(left, right, on="ts", by=[])
+        iv.asof_join(left, right, by=[])
     with pytest.raises(ValueError, match="direction"):
-        iv.asof_join(left, right, on="ts", by="key", direction="nearest")
+        iv.asof_join(left, right, by="key", direction="nearest")
 
 
 def test_asof_join_plan_single_shuffle_no_join(spark):
     """The 100 TB contract: one hash shuffle on the key, a window, and NO
     join operator (the naive theta-join would plan nested-loop)."""
     left, right = _frames(spark)
-    got = iv.asof_join(left, right, on="ts", by="key", value_cols=["val"])
+    got = iv.asof_join(left, right, by="key")
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning(key") >= 1
@@ -114,27 +104,10 @@ def test_asof_join_timestamp_tolerance(spark):
          (22, "a", "2024-01-01 00:09:30", 2.0)],
         "rid int, key string, s string, val double"
     ).select("rid", "key", F.to_timestamp("s").alias("ts"), "val")
-    near = iv.asof_join(left, right, on="ts", by="key", value_cols=["val"],
-                        tolerance_s=60).collect()[0]
-    assert near["asof_val"] == 2.0
-    far = iv.asof_join(left, right, on="ts", by="key", value_cols=["val"],
-                       tolerance_s=10).collect()[0]
-    assert far["asof_val"] is None and far["asof_ts"] is None
-
-
-def test_asof_join_carries_all_columns_from_one_matched_row(spark):
-    """Review finding: carried columns must come from the SAME matched
-    right row — a matched row's NULL field must NOT be replaced by an
-    older row's non-null value (per-column last(ignorenulls) stitching)."""
-    left = spark.createDataFrame([(1, "a", 250)],
-                                 "lid int, key string, ts long")
-    right = spark.createDataFrame(
-        [(11, "a", 100, 5.0), (12, "a", 200, None)],
-        "rid int, key string, ts long, val double")
-    r = iv.asof_join(left, right, on="ts", by="key",
-                     value_cols=["val"], tiebreak="rid").collect()[0]
-    assert r["asof_ts"] == 200
-    assert r["asof_val"] is None  # the ts=200 row's val, not ts=100's 5.0
+    near = iv.asof_join(left, right, by="key", tolerance_s=60).collect()[0]
+    assert str(near["asof_ts"]) == "2024-01-01 00:09:30"
+    far = iv.asof_join(left, right, by="key", tolerance_s=10).collect()[0]
+    assert far["asof_ts"] is None
 
 
 def test_asof_join_randomized_against_twin(spark):
@@ -161,21 +134,17 @@ def test_asof_join_randomized_against_twin(spark):
             else:
                 cands = [r for r in right if r[1] == k and r[2] >= lts]
                 bts = min((r[2] for r in cands), default=None)
-            if bts is None or (tol is not None and abs(lts - bts) > tol):
-                out[lid] = (None, None)
-                continue
-            best = max((r for r in cands if r[2] == bts),
-                       key=lambda r: r[0])
-            out[lid] = (bts, best[3])
+            if bts is not None and tol is not None and abs(lts - bts) > tol:
+                bts = None
+            out[lid] = bts
         return out
 
     for direction in ("backward", "forward"):
         for tol in (None, 25):
-            got = {r["lid"]: (r["asof_ts"], r["asof_val"])
+            got = {r["lid"]: r["asof_ts"]
                    for r in iv.asof_join(
-                       ldf, rdf, on="ts", by="key", value_cols=["val"],
-                       direction=direction, tolerance_s=tol,
-                       tiebreak="rid").collect()}
+                       ldf, rdf, by="key", direction=direction,
+                       tolerance_s=tol).collect()}
             assert got == twin(direction, tol), (direction, tol)
 
 
@@ -188,22 +157,16 @@ def test_asof_join_multi_key_by(spark):
         [(11, "a", "x", 90, 1.0), (12, "a", "y", 80, 2.0),
          (13, "b", "y", 70, 3.0)],
         "rid int, k1 string, k2 string, ts long, val double")
-    got = {r["lid"]: (r["asof_ts"], r["asof_val"])
-           for r in iv.asof_join(left, right, on="ts", by=["k1", "k2"],
-                                 value_cols=["val"]).collect()}
-    assert got == {1: (90, 1.0), 2: (80, 2.0), 3: (None, None)}
+    got = {r["lid"]: r["asof_ts"]
+           for r in iv.asof_join(left, right, by=["k1", "k2"]).collect()}
+    assert got == {1: 90, 2: 80, 3: None}
 
 
 def test_asof_join_rejects_colliding_left_columns(spark):
     """Name-collision contract (r8 advice): a left column named like an
-    internal (__side/__ord/__tb/__r) or a prefixed output (asof_ts)
-    must fail loudly, not be shadowed or made ambiguous."""
+    internal (__side/__ord/__tb/__r) or the output (asof_ts) must fail
+    loudly, not be shadowed or made ambiguous."""
     left, right = _frames(spark)
-    for bad in ("__side", "__ord", "asof_ts", "asof_val"):
+    for bad in ("__side", "__ord", "__tb", "__r", "asof_ts"):
         with pytest.raises(ValueError, match="collide"):
-            iv.asof_join(left.withColumn(bad, F.lit(1)), right,
-                         on="ts", by="key")
-    # a different prefix clears the {prefix}{col} half of the clash
-    out = iv.asof_join(left.withColumn("asof_ts", F.lit(1)), right,
-                       on="ts", by="key", prefix="pit_")
-    assert "pit_ts" in out.columns and "asof_ts" in out.columns
+            iv.asof_join(left.withColumn(bad, F.lit(1)), right, by="key")

@@ -7,7 +7,6 @@ The geometry additionally rides the dedup_exact kind='chunk' oracle rows
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from amazon_kinesis_replay_spark.operators import text as t
@@ -32,33 +31,35 @@ DOCS = [
     (4, "x " * 7),                          # trailing space
     (5, "\tlead and trail\n"),              # tab/newline edges (trim
                                             # strips SPACES only)
+    (6, " ".join(f"t{i}" for i in range(150))),   # several windows
+    (7, " ".join(f"u{i}" for i in range(64))),    # exactly one window
 ]
 
 
 def test_chunk_documents_matches_python_twin(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     got = {}
-    for r in t.chunk_documents(df, "doc_id", "text",
-                               chunk_tokens=4, overlap=1).collect():
+    for r in t.chunk_documents(df, "doc_id", "text").collect():
         got.setdefault(r["doc_id"], []).append(
             (r["chunk_id"], r["start_token"], r["n_tokens"],
              r["chunk_text"]))
     for doc_id, s in DOCS:
-        assert sorted(got[doc_id]) == _py_chunks(s, 4, 1), f"doc {doc_id}"
+        assert sorted(got[doc_id]) == _py_chunks(
+            s, t.CHUNK_TOKENS, t.CHUNK_OVERLAP), f"doc {doc_id}"
+    assert len(got[6]) == 3 and len(got[7]) == 1
 
 
 def test_chunk_documents_overlap_reassembles(spark, sf_dir):
-    """Dropping the first `overlap` tokens of every non-first chunk and
-    concatenating reconstructs each document's token stream exactly —
-    the lossless-coverage property embedding pipelines rely on."""
+    """Dropping the first CHUNK_OVERLAP tokens of every non-first chunk
+    and concatenating reconstructs each document's token stream exactly
+    — the lossless-coverage property embedding pipelines rely on."""
     docs = load(spark, sf_dir, "documents").limit(50)
-    chunks = t.chunk_documents(docs, "doc_id", "text",
-                               chunk_tokens=16, overlap=4).collect()
+    chunks = t.chunk_documents(docs, "doc_id", "text").collect()
     by_doc = {}
     for r in sorted(chunks, key=lambda r: (r["doc_id"], r["chunk_id"])):
         toks = r["chunk_text"].split(" ") if r["chunk_text"] != "" else [""]
         prev = by_doc.setdefault(r["doc_id"], [])
-        prev.extend(toks[4:] if prev else toks)
+        prev.extend(toks[t.CHUNK_OVERLAP:] if prev else toks)
     src = {r["doc_id"]: re.split(r"\s+", r["text"].strip(" "))
            for r in docs.select("doc_id", "text").collect()}
     assert by_doc == src
@@ -70,14 +71,6 @@ def test_chunk_documents_every_doc_emits(spark, sf_dir):
     covered = (t.chunk_documents(docs, "doc_id", "text")
                .select("doc_id").distinct().count())
     assert covered == n_docs
-
-
-def test_chunk_documents_rejects_bad_overlap(spark):
-    df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    for bad in (-1, 8, 9):
-        with pytest.raises(ValueError, match="overlap"):
-            t.chunk_documents(df, "doc_id", "text",
-                              chunk_tokens=8, overlap=bad)
 
 
 def test_chunk_documents_plan_is_projection_only(spark, sf_dir):

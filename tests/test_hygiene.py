@@ -824,3 +824,154 @@ def test_every_package_function_is_reachable():
     assert not stale, (
         f"stale UNREACHED_ALLOWED entries (now reached or gone): "
         f"{sorted(stale)}")
+
+
+#: Defaulted parameters of reached package functions (qualified below
+#: the package, `module.function.param`) that production calls give
+#: fewer than two distinct values, each mapped to the one-line reason
+#: it stays a parameter.
+PARAM_ALLOWED: dict[str, str] = {
+    **{f"functions.flac.encode_flac.{p}":
+       "fixture-encoder option: makes FLAC streams for the reached "
+       "decoder's block-size, predictor, Rice-partition and stereo "
+       "branches"
+       for p in ("blocksize", "lpc_order", "partition_order", "stereo")},
+    "functions.flac.decode_flac.stats":
+        "test seam: the decode-path witness the lossless-matrix test "
+        "reads to prove each reached decoder branch ran",
+    "functions.gif.encode_gif.transparent_idx":
+        "fixture-encoder option: makes GIFs for the reached decoder's "
+        "transparency branch",
+    "functions.jpeg.encode_jpeg.gray":
+        "fixture-encoder option: makes grayscale JPEGs for the reached "
+        "decoder's one-component branch",
+    **{f"functions.tiff.encode_tiff.{p}":
+       "fixture-encoder option: makes TIFFs for the reached decoder's "
+       "bit-depth, sample-count and tiled-layout branches"
+       for p in ("bits", "spp", "tile")},
+    **{f"operators.multimodal.encode_png.{p}":
+       "fixture-encoder option: makes PNGs for the reached decoder's "
+       "color-type, palette and Adam7 branches"
+       for p in ("ctype", "palette", "interlace")},
+    "operators.dedup.dedup_clusters.max_iters":
+        "bound a test lowers to reach the loud did-not-converge check "
+        "(a chain past the production bound of 20 costs 10+ Spark jobs)",
+}
+
+#: Stands for a value the AST cannot pin: a non-literal argument, or one
+#: a `*args`/`**kwargs` or a reference to the function may carry.
+_MANY = object()
+
+
+def _arg_value(node):
+    """`repr` of a literal argument node, else `_MANY`."""
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return _MANY
+
+
+def _param_values(root: Path) -> dict[str, set]:
+    """`module.function.param` → the values production calls give each
+    defaulted parameter of a reached package function. Production calls
+    are the calls in package files and entry-point files (not tests or
+    tools), matched by the function's bare name; an omitted argument
+    counts as the default, and a non-literal argument, a `*args` or
+    `**kwargs` that can reach the parameter, or a use of the name other
+    than as a call adds `_MANY`."""
+    pkg = root / PKG.name
+    defs = {}
+    for f in pkg.rglob("*.py"):
+        mod = _module_name(root, f).removeprefix(f"{PKG.name}.")
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, _FUNCS):
+                defs[f"{mod}.{node.name}"] = (node, False)
+            elif isinstance(node, ast.ClassDef):
+                for m in filter(_is_method, node.body):
+                    defs[f"{mod}.{node.name}.{m.name}"] = (m, True)
+    unreached = {q.removeprefix(f"{PKG.name}.")
+                 for q in _unreached_functions(root)}
+    by_name: dict[str, list] = {}
+    for q, (fn, method) in defs.items():
+        if q not in unreached:
+            by_name.setdefault(fn.name, []).append((q, fn, method))
+    files = list(pkg.rglob("*.py")) + _files_outside_package(
+        root, ENTRY_POINTS)
+    calls, refs = [], set()
+    for f in files:
+        tree = ast.parse(f.read_text())
+        callees = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                callees.add(id(n.func))
+                calls.append(n)
+        for n in ast.walk(tree):
+            name = (n.id if isinstance(n, ast.Name) and isinstance(
+                n.ctx, ast.Load) else n.attr
+                if isinstance(n, ast.Attribute) else None)
+            if name in by_name and id(n) not in callees:
+                refs.add(name)
+    out = {}
+    for name, fns in by_name.items():
+        named = [c for c in calls
+                 if getattr(c.func, "id", getattr(c.func, "attr", None))
+                 == name]
+        for q, fn, method in fns:
+            defaulted = _defaulted(fn)
+            skip = 1 if method and not any(
+                getattr(d, "id", None) == "staticmethod"
+                for d in fn.decorator_list) else 0
+            names = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+            for p in defaulted:
+                out[f"{q}.{p}"] = {_MANY} if name in refs else set()
+            for c in named:
+                for p, v in _call_values(c, names[skip:], defaulted).items():
+                    out[f"{q}.{p}"].add(v)
+    return out
+
+
+def _defaulted(fn) -> dict:
+    """Parameter name → default node of `fn`'s defaulted parameters."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    out = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    out.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None})
+    return out
+
+
+def _call_values(call, names: list[str], defaulted: dict) -> dict:
+    """Parameter → the value `call` gives each of `defaulted`, for a
+    callee whose positional parameters (less `self`) are `names`."""
+    given, starred = {}, False
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            starred = True
+            break
+        if i < len(names):
+            given[names[i]] = arg
+    kwstar = any(k.arg is None for k in call.keywords)
+    given.update({k.arg: k.value for k in call.keywords
+                  if k.arg is not None})
+    return {p: _arg_value(given[p]) if p in given
+            else _MANY if kwstar or (starred and p in names)
+            else _arg_value(d)
+            for p, d in defaulted.items()}
+
+
+def test_every_parameter_takes_two_values():
+    """A defaulted parameter of a reached package function that every
+    production call sets to one value (an omitted argument is its
+    default) is a knob no user path turns: fold it into that value and
+    delete the paths only other values select, or allowlist it in
+    PARAM_ALLOWED with the reason it stays."""
+    values = _param_values(PKG.parent)
+    single = {q for q, v in values.items()
+              if _MANY not in v and len(v) < 2}
+    assert single <= set(PARAM_ALLOWED), (
+        "parameters production calls give one value: "
+        + ", ".join(f"{q}={next(iter(values[q]), None)}"
+                    for q in sorted(single - set(PARAM_ALLOWED))))
+    assert set(PARAM_ALLOWED) <= single, (
+        f"stale PARAM_ALLOWED entries (now two values or gone): "
+        f"{sorted(set(PARAM_ALLOWED) - single)}")

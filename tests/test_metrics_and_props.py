@@ -18,13 +18,13 @@ def test_jaccard_pairs_invariants(texts):
     """Jaccard output: id_a<id_b, 0<j<=1, and symmetric under id relabeling."""
     import tests.conftest as c
     from amazon_kinesis_replay_spark.operators import dedup
-    from amazon_kinesis_replay_spark.session import build_spark
-    spark = build_spark("engine-tests", shuffle_partitions=8)
+    from conftest import engine_session
+    spark = engine_session()
     df = spark.createDataFrame(
         [(i, t if t.strip() else "x") for i, t in enumerate(texts)],
         "doc_id LONG, text STRING")
     rows = dedup.ngram_jaccard_pairs(df, "doc_id", "text",
-                                     k=2, threshold=0.0).collect()
+                                     threshold=0.0).collect()
     for r in rows:
         assert r["id_a"] < r["id_b"]
         assert 0.0 < r["jaccard"] <= 1.0
@@ -45,11 +45,11 @@ def test_jaccard_pairs_invariants(texts):
                 min_size=1, max_size=200, unique=True))
 def test_global_index_is_a_permutation(keys):
     from amazon_kinesis_replay_spark.operators import replay_ops
-    from amazon_kinesis_replay_spark.session import build_spark
-    spark = build_spark("engine-tests", shuffle_partitions=8)
+    from conftest import engine_session
+    spark = engine_session()
     df = spark.createDataFrame([(k,) for k in keys], "k LONG")
-    out = replay_ops.with_global_index(df, ["k"], out_col="rn")
-    got = {r["k"]: r["rn"] for r in out.collect()}
+    out = replay_ops.with_global_index(df, ["k"])
+    got = {r["k"]: r["__rn"] for r in out.collect()}
     expect = {k: i + 1 for i, k in enumerate(sorted(keys))}
     assert got == expect
 
@@ -65,12 +65,12 @@ def test_global_index_with_heavy_first_key_ties(firsts):
     numbering. Hammers the tie path with only 4 distinct first-key
     values over up to 300 rows."""
     from amazon_kinesis_replay_spark.operators import replay_ops
-    from amazon_kinesis_replay_spark.session import build_spark
-    spark = build_spark("engine-tests", shuffle_partitions=8)
+    from conftest import engine_session
+    spark = engine_session()
     rows = [(k, i) for i, k in enumerate(firsts)]
     df = spark.createDataFrame(rows, "k LONG, uniq LONG")
-    out = replay_ops.with_global_index(df, ["k", "uniq"], out_col="rn")
-    got = {(r["k"], r["uniq"]): r["rn"] for r in out.collect()}
+    out = replay_ops.with_global_index(df, ["k", "uniq"])
+    got = {(r["k"], r["uniq"]): r["__rn"] for r in out.collect()}
     expect = {t: i + 1 for i, t in enumerate(sorted(rows))}
     assert got == expect
 
@@ -87,23 +87,23 @@ def test_global_index_string_first_key(keys):
     numbering). Property-checked against Python's sorted(), which matches
     Spark's UTF-8 binary collation for BMP strings."""
     from amazon_kinesis_replay_spark.operators import replay_ops
-    from amazon_kinesis_replay_spark.session import build_spark
-    spark = build_spark("engine-tests", shuffle_partitions=8)
+    from conftest import engine_session
+    spark = engine_session()
     df = spark.createDataFrame([(k,) for k in keys], "k STRING")
-    out = replay_ops.with_global_index(df, ["k"], out_col="rn")
-    got = {r["k"]: r["rn"] for r in out.collect()}
+    out = replay_ops.with_global_index(df, ["k"])
+    got = {r["k"]: r["__rn"] for r in out.collect()}
     expect = {k: i + 1 for i, k in enumerate(sorted(keys))}
     assert got == expect
 
 
 def test_global_index_boolean_first_key():
     from amazon_kinesis_replay_spark.operators import replay_ops
-    from amazon_kinesis_replay_spark.session import build_spark
-    spark = build_spark("engine-tests", shuffle_partitions=8)
+    from conftest import engine_session
+    spark = engine_session()
     rows = [(b, i) for i, b in enumerate([True, False] * 20)]
     df = spark.createDataFrame(rows, "k BOOLEAN, uniq LONG")
-    out = replay_ops.with_global_index(df, ["k", "uniq"], out_col="rn")
-    got = {(r["k"], r["uniq"]): r["rn"] for r in out.collect()}
+    out = replay_ops.with_global_index(df, ["k", "uniq"])
+    got = {(r["k"], r["uniq"]): r["__rn"] for r in out.collect()}
     expect = {t: i + 1 for i, t in enumerate(sorted(rows))}
     assert got == expect
 
@@ -255,12 +255,12 @@ def test_qhist_buckets_property_match_twin(values):
     the power-of-two boundaries and the >2^53 range where a floating
     log2 implementation would misbucket."""
     from amazon_kinesis_replay_spark.operators import sketches
-    from amazon_kinesis_replay_spark.session import build_spark
-    spark = build_spark("engine-tests", shuffle_partitions=8)
+    from conftest import engine_session
+    spark = engine_session()
     S = 7
     df = spark.createDataFrame([(v,) for v in values], "v LONG")
     got = {r["bucket"]: r["cnt"] for r in
-           sketches.qhist_table(df, "v", sig_bits=S).collect()}
+           sketches.qhist_table(df, "v").collect()}
     want: dict = {}
     for v in values:
         if v == 0:
@@ -288,8 +288,8 @@ def test_tokens_spark_twin_property(texts):
     floor under all of them."""
     from amazon_kinesis_replay_spark.functions.xxh import tokens_spark
     from amazon_kinesis_replay_spark.operators.text import tokens_expr
-    from amazon_kinesis_replay_spark.session import build_spark
-    spark = build_spark("engine-tests", shuffle_partitions=8)
+    from conftest import engine_session
+    spark = engine_session()
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                "i LONG, t STRING")
     got = {r["i"]: r["toks"] for r in df.selectExpr(

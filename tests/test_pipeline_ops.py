@@ -18,9 +18,9 @@ def test_minhash_recall_vs_exact_jaccard(spark, sf_dir):
     for `minhash_dedup` in the driver's gate."""
     d = load(spark, sf_dir, "documents")
     exact = {(r["id_a"], r["id_b"]) for r in
-             dedup.ngram_jaccard_pairs(d, "doc_id", "text", 3, 0.5).collect()}
+             dedup.ngram_jaccard_pairs(d, "doc_id", "text", 0.5).collect()}
     mh = {(r["id_a"], r["id_b"]) for r in
-          dedup.minhash_dedup(d, "doc_id", "text", 32, 16, 3, 0.5).collect()}
+          dedup.minhash_dedup(d, "doc_id", "text", 0.5).collect()}
     assert exact, "fixture should contain planted near-duplicates"
     assert mh == exact
 
@@ -31,45 +31,43 @@ def test_minhash_fixture_profile_supports_oracle(spark, sf_dir):
     fixture drifting below the verified threshold region would change what
     the gate exercises, so pin the profile here."""
     d = load(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", 3, 0.5).collect()
+    pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", 0.5).collect()
     assert pairs, "fixture should contain planted near-duplicates"
     assert min(r["jaccard"] for r in pairs) >= 0.5
 
 
 def test_prefix_filter_is_exact(spark, sf_dir):
-    """PPJoin prefix filtering must produce the identical pair set as the
-    naive shingle self-join at several thresholds (exactness, not recall).
-    0.56 and 0.55 are float-rounding traps: t*n for small integer n lands
-    just above the exact product (0.56*25 = 14.000000000000002), which
-    without the ceil slack shrinks the prefix by one and drops pairs."""
+    """PPJoin prefix filtering must produce the identical pair set as an
+    independent pure-Python all-pairs Jaccard over the same word
+    3-shingles at several thresholds (exactness, not recall). 0.56 and
+    0.55 are float-rounding traps: t*n for small integer n lands just
+    above the exact product (0.56*25 = 14.000000000000002), which without
+    the ceil slack shrinks the prefix by one and drops pairs."""
+    from itertools import combinations
+
+    from amazon_kinesis_replay_spark.functions.xxh import tokens_spark
+
     d = load(spark, sf_dir, "documents").limit(200)
+
+    def shingles(text):
+        toks = tokens_spark(text)
+        if len(toks) < 3:
+            return {" ".join(toks)}
+        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+    sets = {r["doc_id"]: shingles(r["text"])
+            for r in d.select("doc_id", "text").collect()
+            if r["text"] is not None}
     for t in (0.3, 0.5, 0.55, 0.56, 0.8):
-        naive = {(r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in
-                 dedup.ngram_jaccard_pairs(d, "doc_id", "text", 3, t,
-                                           prefix_filter=False).collect()}
+        want = set()
+        for a, b in combinations(sorted(sets), 2):
+            common = len(sets[a] & sets[b])
+            j = common / (len(sets[a]) + len(sets[b]) - common)
+            if j >= t:
+                want.add((a, b, round(j, 9)))
         pref = {(r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in
-                dedup.ngram_jaccard_pairs(d, "doc_id", "text", 3, t,
-                                          prefix_filter=True).collect()}
-        assert pref == naive
-
-
-def test_dict_shingle_ids_match_hash_mode(spark, sf_dir):
-    """shingle_ids="dict" (collision-free dense ids via with_global_index
-    over (hash, shingle)) must yield the identical verified pair set as
-    the default hash-key mode: the two modes use different total orders
-    (freq, hash, shingle) vs (freq-of-hash, shingle), so their CANDIDATE
-    sets may differ, but exact verification must converge to the same
-    pairs with bit-identical Jaccard values."""
-    d = load(spark, sf_dir, "documents").limit(300)
-    for t in (0.5, 0.56):
-        hashed = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
-                  dedup.ngram_jaccard_pairs(d, "doc_id", "text", 3, t,
-                                            shingle_ids="hash").collect()}
-        dicted = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
-                  dedup.ngram_jaccard_pairs(d, "doc_id", "text", 3, t,
-                                            shingle_ids="dict").collect()}
-        assert hashed, "fixture should contain planted near-duplicates"
-        assert dicted == hashed
+                dedup.ngram_jaccard_pairs(d, "doc_id", "text", t).collect()}
+        assert pref == want, t
 
 
 def test_xxh64_matches_spark(spark):
@@ -108,7 +106,7 @@ def test_simhash_hamming_symmetry(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     sim = dedup.simhash64(d, "doc_id", "text")
     assert sim.count() == d.count()
-    pairs = dedup.simhash_near_dups(d, "doc_id", "text", max_hamming=3)
+    pairs = dedup.simhash_near_dups(d, "doc_id", "text")
     rows = pairs.collect()
     assert all(r["id_a"] < r["id_b"] and r["hamming"] <= 3 for r in rows)
 
@@ -121,7 +119,7 @@ def test_embedding_cosine_dedup_matches_numpy_reference(spark, sf_dir):
     import numpy as np
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0)
     got = {(r["id_a"], r["id_b"]) for r in
-           dedup.embedding_cosine_dedup(emb, 0.4, 8, 8).collect()}
+           dedup.embedding_cosine_dedup(emb).collect()}
 
     rows = emb.select("vec_id", "embedding").collect()
     ids = [r["vec_id"] for r in rows]
@@ -160,37 +158,6 @@ def test_dedup_clusters_chain_and_singleton(spark):
     assert out[6] == (6, 1, True) and out[7] == (7, 1, True)
 
 
-def test_dedup_clusters_quality_representative(spark):
-    """quality= keeps the HIGHEST-scoring cluster member (the curation
-    shape: drop dups, keep the best copy): ties fall back to min id,
-    unscored members never beat scored ones, all-unscored clusters and
-    singletons fall back to min id, and cluster membership/size are
-    untouched."""
-    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (4, 5), (6, 7)], "id_a long, id_b long")
-    quality = spark.createDataFrame(
-        [(1, 0.2), (2, 0.9), (3, 0.5),    # cluster {1,2,3}: 2 wins
-         (4, 0.7), (5, 0.7)],             # {4,5}: tie -> min id 4
-        "doc_id long, score double")      # {6,7}: unscored -> min id 6
-    out = {r["doc_id"]: (r["cluster_id"], r["cluster_size"],
-                         r["is_representative"])
-           for r in dedup.dedup_clusters(nodes, pairs,
-                                         quality=quality).collect()}
-    assert out[1] == (1, 3, False) and out[2] == (1, 3, True)
-    assert out[3] == (1, 3, False)
-    assert out[4] == (4, 2, True) and out[5] == (4, 2, False)
-    assert out[6] == (6, 2, True) and out[7] == (6, 2, False)
-    # unscored member loses to a scored one even with a negative score
-    q2 = spark.createDataFrame([(7, -5.0)], "doc_id long, score double")
-    out2 = {r["doc_id"]: r["is_representative"]
-            for r in dedup.dedup_clusters(nodes, pairs,
-                                          quality=q2).collect()}
-    assert out2[7] and not out2[6]
-    # exactly one representative per cluster ({1,2,3}, {4,5}, {6,7})
-    assert sum(out2.values()) == 3
-
-
 def test_dedup_clusters_diameter_exactly_max_iters(spark):
     """max_iters bounds the component DIAMETER: a chain whose diameter
     equals max_iters must converge (the extra zero-change verification
@@ -210,24 +177,32 @@ def test_dedup_clusters_diameter_exactly_max_iters(spark):
 def test_dedup_clusters_pairs_path_and_chained_check(spark, tmp_path):
     """The parquet-path pairs form (cold-start entry: cluster previously
     materialized pairs without re-running any dedup pipeline) must equal
-    the DataFrame form, and chained convergence checks (check_every=2,
-    the bench-SF operating point) must not change the labels — including
-    on a CHAIN graph where fixpoint lands mid-chain."""
+    the DataFrame form, and the chained convergence check (two rounds
+    per count) must give the labels of a per-round propagation —
+    including on a CHAIN graph where fixpoint lands mid-chain."""
     nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long")
     p = str(tmp_path / "pairs")
     pairs.write.parquet(p)
-    want = sorted(map(tuple, dedup.dedup_clusters(nodes, pairs).collect()))
+    got = sorted(map(tuple, dedup.dedup_clusters(nodes, pairs).collect()))
     from_path = sorted(map(tuple,
                            dedup.dedup_clusters(nodes, p).collect()))
-    chained = sorted(map(tuple,
-                         dedup.dedup_clusters(nodes, pairs,
-                                              check_every=2).collect()))
-    chained3 = sorted(map(tuple,
-                          dedup.dedup_clusters(nodes, pairs,
-                                               check_every=3).collect()))
-    assert from_path == want and chained == want and chained3 == want
+    # per-round min-label propagation to fixpoint, in plain Python
+    label = {i: i for i in range(1, 8)}
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5)]
+    while True:
+        nxt = dict(label)
+        for a, b in edges:
+            nxt[a] = min(nxt[a], label[b])
+            nxt[b] = min(nxt[b], label[a])
+        if nxt == label:
+            break
+        label = nxt
+    size = {c: list(label.values()).count(c) for c in label.values()}
+    want = sorted((i, label[i], size[label[i]], label[i] == i)
+                  for i in label)
+    assert got == want and from_path == want
 
 
 def test_exact_dedup_representative(spark, sf_dir):
@@ -243,7 +218,7 @@ def test_exact_dedup_representative(spark, sf_dir):
 def test_brute_force_topk_self_is_best(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 7).select(F.col("embedding").alias("q_vec"))
-    top = similarity.brute_force_topk(emb, q, k=5).collect()
+    top = similarity.brute_force_topk(emb, q).collect()
     assert top[0]["vec_id"] == 7                          # self-match first
     assert abs(top[0]["cosine"] - 1.0) < 1e-9
     scores = [r["cosine"] for r in top]
@@ -253,64 +228,45 @@ def test_brute_force_topk_self_is_best(spark, sf_dir):
 def test_lsh_topk_subset_of_bucket(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 7).select(F.col("embedding").alias("q_vec"))
-    approx = similarity.lsh_topk(emb, q, k=5, n_bits=4).collect()
+    approx = similarity.lsh_topk(emb, q).collect()
     assert approx and approx[0]["vec_id"] == 7            # probe finds self
 
 
 def test_lsh_multiprobe_monotone_recall(spark, sf_dir):
-    """r8, multi-probe LSH: raising n_probe widens the candidate set
-    monotonically (each probe adds a distinct bucket), so recall@10 vs
-    brute force is non-decreasing in n_probe and the full-probe run
-    (n_probe = 2^n_bits) IS brute force."""
+    """r8, multi-probe LSH: the top-10 equals an independent NumPy
+    reference of the probe definition (the query's own 4-sign-bit bucket
+    plus the 3 buckets across its least-confident hyperplanes, ordered
+    by squared component, ties by bit index; exact cosine top-10 within
+    them), and the probes beat the query's own bucket alone on recall@10
+    against brute force."""
+    import numpy as np
     emb = load(spark, sf_dir, "embeddings")
-    qids = [0, 7, 100]
-    recalls = {}
-    for n_probe in (1, 2, 4):
-        hits = 0
-        for qid in qids:
-            q = emb.filter(F.col("vec_id") == qid) \
-                .select(F.col("embedding").alias("q_vec"))
-            exact = {r["vec_id"] for r in
-                     similarity.brute_force_topk(emb, q, k=10).collect()}
-            got = {r["vec_id"] for r in
-                   similarity.lsh_topk(emb, q, k=10, n_bits=4,
-                                       n_probe=n_probe).collect()}
-            assert qid in got                 # self survives every probing
-            hits += len(exact & got)
-        recalls[n_probe] = hits / (10 * len(qids))
-    assert recalls[1] <= recalls[2] <= recalls[4], recalls
-    assert recalls[2] > recalls[1], recalls   # the extra bucket must help
-    # single-bit flips reach at most n_bits+1 buckets: deeper probing
-    # must be refused loudly (the IVF tier owns that regime)
-    q = emb.filter(F.col("vec_id") == 0) \
-        .select(F.col("embedding").alias("q_vec"))
-    with pytest.raises(ValueError, match="IVF"):
-        similarity.lsh_topk(emb, q, k=10, n_bits=4, n_probe=16)
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    V = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    bucket = (V[:, :4] >= 0) @ np.array([8, 4, 2, 1])
+    hits = {"own": 0, "probed": 0}
+    for qid in (0, 7, 100):
+        qv = V[ids == qid][0]
+        own = int((qv[:4] >= 0) @ np.array([8, 4, 2, 1]))
+        flips = sorted(range(4), key=lambda i: (qv[i] ** 2, i))[:3]
+        probes = {own} | {own ^ (1 << (3 - i)) for i in flips}
+        cos = V @ qv / (np.linalg.norm(V, axis=1) * np.linalg.norm(qv))
 
+        def top10(mask):
+            order = sorted(np.flatnonzero(mask),
+                           key=lambda j: (-cos[j], ids[j]))
+            return [int(ids[j]) for j in order[:10]]
 
-def test_lsh_perturbation_sequences_full_probe_is_brute_force(spark, sf_dir):
-    """r8 late, multi-bit perturbation sets: max_flip=n_bits makes every
-    bucket reachable, so n_probe=2^n_bits must return EXACTLY the brute
-    force top-k (same ids, same order); max_flip=2 at the same n_probe as
-    a single-bit run can only reorder the probe sequence toward
-    higher-expected-score buckets, never shrink the candidate count."""
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 7) \
-        .select(F.col("embedding").alias("q_vec"))
-    exact = [r["vec_id"] for r in
-             similarity.brute_force_topk(emb, q, k=10).collect()]
-    full_probe = [r["vec_id"] for r in
-                  similarity.lsh_topk(emb, q, k=10, n_bits=4, n_probe=16,
-                                      max_flip=4).collect()]
-    assert full_probe == exact
-    # the multi-bit candidate enumeration still yields distinct buckets:
-    # k results with a self-match at any legal (n_probe, max_flip)
-    got = similarity.lsh_topk(emb, q, k=10, n_bits=4, n_probe=8,
-                              max_flip=2).collect()
-    assert got[0]["vec_id"] == 7 and len(got) == 10
-    # out-of-range max_flip refuses loudly
-    with pytest.raises(ValueError, match="max_flip"):
-        similarity.lsh_topk(emb, q, k=10, n_bits=4, n_probe=2, max_flip=5)
+        q = emb.filter(F.col("vec_id") == qid) \
+            .select(F.col("embedding").alias("q_vec"))
+        got = [r["vec_id"] for r in similarity.lsh_topk(emb, q).collect()]
+        assert got == top10(np.isin(bucket, list(probes))), qid
+        exact = {r["vec_id"] for r in
+                 similarity.brute_force_topk(emb, q).collect()}
+        hits["probed"] += len(exact & set(got))
+        hits["own"] += len(exact & set(top10(bucket == own)))
+    assert hits["probed"] > hits["own"], hits
 
 
 def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
@@ -318,9 +274,10 @@ def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
     always contain the query itself."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_vec"))
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(emb, q, k=10).collect()]
+    exact = [r["vec_id"] for r in similarity.brute_force_topk(emb, q).collect()]
+    cents = similarity.kmeans_centroids(emb)
     approx = [r["vec_id"] for r in
-              similarity.ivf_topk(emb, q, k=10, n_centroids=16, n_probe=4).collect()]
+              similarity.ivf_topk(emb, q, cents).collect()]
     assert approx[0] == 0                        # self-match survives probing
     recall = len(set(exact) & set(approx)) / 10
     assert recall >= 0.3                         # random gaussians: top-1 is
@@ -331,31 +288,31 @@ def test_kmeans_ivf_training(spark, sf_dir):
     """Trained centroids: right shape, all vectors assigned, probe still
     finds the query itself."""
     emb = load(spark, sf_dir, "embeddings").limit(200)
-    cents = similarity.kmeans_centroids(emb, n_centroids=8, n_iters=2)
+    cents = similarity.kmeans_centroids(emb, n_centroids=8)
     rows = cents.collect()
     assert len(rows) <= 8 and all(len(r["c_vec"]) == 64 for r in rows)
-    assigned = similarity.ivf_assign(emb, 8, centroids=cents)
+    assigned = similarity.ivf_assign(emb, cents)
     assert assigned.count() == emb.count()                 # total assignment
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_vec"))
-    top = similarity.ivf_topk(emb, q, k=5, n_centroids=8, n_probe=2,
-                              centroids=cents).collect()
+    top = similarity.ivf_topk(emb, q, cents).collect()
     assert top and top[0]["vec_id"] == 0
 
 
 def test_multimodal_fake_decode_plumbing(spark, sf_dir):
+    """The decode plumbing over synthesized media: every row decodes to
+    an 8-bin feature vector at its synthesized size, deterministically."""
     d = load(spark, sf_dir, "documents").limit(50)
-    media = d.select(
+    media = multimodal.synthesize_image_media(d.select(
         F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("media_type"),
-        F.encode("text", "UTF-8").alias("data"))
-    feats = multimodal.decode_images(media, fake=True)
+        F.encode("text", "UTF-8").alias("data")))
+    feats = multimodal.decode_images(media)
     rows = feats.collect()
     assert len(rows) == 50
     assert all(len(r["features"]) == 8 for r in rows)
-    assert all(64 <= r["width"] <= 256 for r in rows)
+    assert all(r["width"] in (8, 16, 24) for r in rows)
     # deterministic: same payload -> same features
     again = {r["media_id"]: r["features"]
-             for r in multimodal.decode_images(media, fake=True).collect()}
+             for r in multimodal.decode_images(media).collect()}
     assert all(again[r["media_id"]] == r["features"] for r in rows)
 
 
@@ -1964,64 +1921,36 @@ def test_cross_split_contamination_crafted(spark):
     assert (out[5]["n_shared_train_grams"], out[5]["contaminated"]) == (2, True)
 
 
-def test_cross_split_contamination_13gram(spark):
-    """k=13 — the common decontamination window (ROADMAP item): only an
-    eval doc carrying a full 13-word train run is flagged; a 12-word
-    overlap is NOT contamination at k=13 (but is at k=12). Same kernel,
-    parameter change only."""
+def test_cross_split_contamination_window_boundary(spark):
+    """The 3-word window is the whole contamination rule: an eval doc
+    carrying a full 3-word train run is flagged, a 2-word overlap is
+    not."""
     train_words = " ".join(f"w{i}" for i in range(20))
-    eval_13 = "pre " + " ".join(f"w{i}" for i in range(13)) + " post"
-    eval_12 = "pre " + " ".join(f"w{i}" for i in range(12)) + " post"
     rows = [(1, "train", train_words),
-            (2, "test", eval_13),
-            (3, "test", eval_12)]
+            (2, "test", "pre w5 w6 w7 post"),
+            (3, "test", "pre w5 w6 post")]
     df = spark.createDataFrame(rows, "doc_id long, split string, text string")
-    out13 = {r["id"]: r for r in dedup.cross_split_contamination(
-        df, "doc_id", "text", "split", k=13).collect()}
-    assert (out13[2]["n_shared_train_grams"],
-            out13[2]["contaminated"]) == (1, True)
-    assert (out13[3]["n_shared_train_grams"],
-            out13[3]["contaminated"]) == (0, False)
-    out12 = {r["id"]: r for r in dedup.cross_split_contamination(
-        df, "doc_id", "text", "split", k=12).collect()}
-    assert out12[2]["contaminated"] and out12[3]["contaminated"]
+    out = {r["id"]: r for r in dedup.cross_split_contamination(
+        df, "doc_id", "text", "split").collect()}
+    assert (out[2]["n_shared_train_grams"],
+            out[2]["contaminated"]) == (1, True)
+    assert (out[3]["n_shared_train_grams"],
+            out[3]["contaminated"]) == (0, False)
 
 
 def test_cross_split_contamination_escaping(spark):
-    """r13 ADVICE regression pins: (a) a train_value containing a
-    BACKSLASH must still match its rows (Spark SQL literals process
-    C-style escapes — the unescaped form matched zero rows, silently
-    reporting every eval doc uncontaminated); (b) a quote+backslash mix
-    must not shift the literal boundary; (c) column names that need
-    backtick quoting must keep resolving through the expr-string path."""
-    rows = [
-        (1, r"tr\ain", "alpha beta gamma delta"),
-        (2, "test",  "x alpha beta gamma y"),     # shares 1 train shingle
-        (3, "test",  "one two three four"),       # clean
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, split string, text string")
+    """Column names that need backtick quoting (a space in the split
+    column) must keep resolving through the expr-string path."""
+    rows = [(1, "train", "alpha beta gamma delta"),
+            (2, "test", "x alpha beta gamma y"),     # shares 1 train shingle
+            (3, "test", "one two three four")]       # clean
+    df = spark.createDataFrame(
+        rows, "doc_id long, `my split` string, text string")
     out = {r["id"]: r for r in dedup.cross_split_contamination(
-        df, "doc_id", "text", "split", train_value=r"tr\ain").collect()}
+        df, "doc_id", "text", "my split").collect()}
     assert (out[2]["n_shared_train_grams"], out[2]["contaminated"]) == (1, True)
     assert (out[3]["n_shared_train_grams"], out[3]["contaminated"]) == (0, False)
     assert (out[1]["n_shared_train_grams"], out[1]["contaminated"]) == (0, False)
-
-    tricky = r"it's x\'"                           # quote + backslash mix
-    rows2 = [(1, tricky, "alpha beta gamma delta"),
-             (2, "test", "x alpha beta gamma y")]
-    df2 = spark.createDataFrame(
-        rows2, "doc_id long, `my split` string, text string")
-    out2 = {r["id"]: r for r in dedup.cross_split_contamination(
-        df2, "doc_id", "text", "my split", train_value=tricky).collect()}
-    assert (out2[2]["n_shared_train_grams"], out2[2]["contaminated"]) == (1, True)
-
-    # caller-precomputed-arrays branch exercises the id_col/split_col
-    # backtick path too
-    arrays = dedup.shingle_arrays(df2, "doc_id", "text", 3)
-    out3 = {r["id"]: r for r in dedup.cross_split_contamination(
-        df2, "doc_id", "text", "my split", train_value=tricky,
-        arrays=arrays).collect()}
-    assert out3 == out2
 
 
 def test_exact_pow10_double_signed(spark):
@@ -2049,17 +1978,13 @@ def test_semantic_dedup_shared_ranked_bit_equal(spark, sf_dir):
     window's own tie-break, so n_assign=1 fed from `ranked` equals the
     self-computed run, and n_assign=2 equals its own."""
     emb = load(spark, sf_dir, "embeddings")
-    cents = similarity.kmeans_centroids(emb, n_centroids=8, n_iters=1,
-                                        exact=True)
-    ranked2 = similarity._ranked_assign(emb, cents, 2,
-                                        exact=True).localCheckpoint()
+    cents = similarity.kmeans_centroids(emb, n_centroids=8)
+    ranked2 = similarity._ranked_assign(emb, cents, 2).localCheckpoint()
     for n_assign in (1, 2):
         base = {tuple(r) for r in similarity.semantic_dedup(
-            emb, threshold=0.4, centroids=cents, exact=True,
-            n_assign=n_assign).collect()}
+            emb, cents, n_assign=n_assign).collect()}
         shared = {tuple(r) for r in similarity.semantic_dedup(
-            emb, threshold=0.4, centroids=cents, exact=True,
-            n_assign=n_assign, ranked=ranked2).collect()}
+            emb, cents, n_assign=n_assign, ranked=ranked2).collect()}
         assert shared == base, f"n_assign={n_assign}"
 
 
@@ -2130,8 +2055,8 @@ def test_bpe_train_encode_spark(spark, sf_dir):
     from amazon_kinesis_replay_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    merges = T.bpe_train(docs, "text", n_merges=64)
-    assert merges == T.bpe_train(docs, "text", n_merges=64)
+    merges = T.bpe_train(T.word_piece_counts(docs, "text"))
+    assert merges == T.bpe_train(T.word_piece_counts(docs, "text"))
     assert len(merges) == 64                  # corpus is big enough
 
     enc = T.bpe_encode(docs, "text", merges)
@@ -2166,8 +2091,7 @@ def test_unigram_train_encode_spark(spark, sf_dir):
     from amazon_kinesis_replay_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    scores = T.unigram_train(docs, "text", vocab_size=256, n_iters=2,
-                             seed_size=1024)
+    scores = T.unigram_train(T.word_piece_counts(docs, "text"))
     # the fixture's closed word list converges to mostly whole-word
     # pieces — the invariants are coverage + multi-char use, not size
     assert any(len(p) > 1 for p in scores)
@@ -2178,8 +2102,7 @@ def test_unigram_train_encode_spark(spark, sf_dir):
         wc.update(pretokenize(r["text"]))
     capped = dict(sorted(wc.items(),
                          key=lambda kv: (-kv[1], kv[0]))[:1_000_000])
-    twin = ug.train_unigram(capped, vocab_size=256, n_iters=2,
-                            seed_size=1024)
+    twin = ug.train_unigram(capped)
     assert scores == twin                    # bit-identical doubles
 
     enc = T.unigram_encode(docs, "text", scores)
@@ -2217,9 +2140,8 @@ def test_unigram_kernel_properties():
     assert "".join(ug.viterbi("aXb", scores)) == "aXb"
 
     wc = {"hello": 5, " hello": 3, " world": 4, "!": 2}
-    t1 = ug.train_unigram(wc, vocab_size=32, n_iters=2, seed_size=64)
-    t2 = ug.train_unigram(dict(reversed(list(wc.items()))),
-                          vocab_size=32, n_iters=2, seed_size=64)
+    t1 = ug.train_unigram(wc)
+    t2 = ug.train_unigram(dict(reversed(list(wc.items()))))
     assert t1 == t2                          # input-order free
 
     r = ug.rescore({"a": 3, "b": 1}, ["a", "b"])
@@ -2238,7 +2160,7 @@ def test_ngram_lm_train_and_score(spark):
     corpus = spark.createDataFrame(
         [(1, "the cat sat"), (2, "the cat ran"), (3, "the dog sat")],
         "doc_id long, text string")
-    lm = T.ngram_lm_counts(corpus, "text", n=2)
+    lm = T.ngram_lm_counts(corpus, "text")
     got = {(r["context"], r["token"]): r["cnt"] for r in lm.collect()}
     assert got == {("the", "cat"): 2, ("the", "dog"): 1,
                    ("cat", "sat"): 1, ("cat", "ran"): 1,
@@ -2249,8 +2171,7 @@ def test_resize_images(spark):
     """Nearest-neighbor resize: exact expected raster for an integer
     downscale (4x4 -> 2x2 checkerboard picks the top-left of each
     block), channel layout preserved per source format (RGB PNG stays 3,
-    grayscale stays 1), upscale repeats pixels, and the fake path
-    normalizes any payload to the target size."""
+    grayscale stays 1), and upscale repeats pixels."""
     import numpy as np
 
     # 4x4 RGB: 2x2 blocks of solid colors
@@ -2283,30 +2204,6 @@ def test_resize_images(spark):
     assert tuple(a[0, 0]) == blocks[0] and tuple(a[7, 7]) == blocks[3]
     assert tuple(a[0, 7]) == blocks[1] and tuple(a[7, 0]) == blocks[2]
 
-    # fake path: arbitrary bytes -> deterministic sized raster
-    junk = spark.createDataFrame([(3, bytearray(b"not-an-image"))],
-                                 "media_id long, data binary")
-    f = multimodal.resize_images(junk, 4, 4, fake=True).head()
-    assert (f["width"], f["height"], f["channels"]) == (4, 4, 3)
-    assert len(f["pixels"]) == 48
-
-
-def test_fast_dot_fixed_width_guard(spark):
-    """A pinned dim that does not match the vectors' true width must
-    raise, never silently truncate the pre-filter dot (silent recall
-    loss — r7 review finding)."""
-    import pytest
-
-    rows = [(i, [float(i + j) for j in range(8)]) for i in range(6)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    ok = dedup.embedding_cosine_dedup(emb, threshold=0.0, n_bands=2,
-                                      band_bits=4, dim=8)
-    ok.collect()                              # matching width: fine
-    bad = dedup.embedding_cosine_dedup(emb, threshold=0.0, n_bands=2,
-                                       band_bits=4, dim=4)
-    with pytest.raises(Exception, match="pinned dim|ASSERT|assert"):
-        bad.collect()
-
 
 def test_shingle_arrays_extra_columns(spark):
     """`extra=` computes named columns inside the same widened
@@ -2324,26 +2221,31 @@ def test_shingle_arrays_extra_columns(spark):
 
 
 def test_duplicate_spans_crafted(spark):
-    """Hand-built corpus, window=4: a cross-doc shared 6-token run
-    merges to one span per doc; a periodic doc self-duplicates into one
-    whole-doc span; unique docs emit nothing."""
+    """Hand-built corpus, 12-token windows: a cross-doc shared 14-token
+    run merges to one span per doc; a periodic doc self-duplicates into
+    one whole-doc span; unique docs emit nothing."""
+    assert dedup.SPAN_WINDOW == 12
+
+    def words(prefix, n):
+        return " ".join(f"{prefix}{i}" for i in range(n))
+
     df = spark.createDataFrame(
-        [(1, "a b c d e f g h"),
-         (2, "x y a b c d e f q r"),
-         (3, "p q r s t u"),
-         (4, "m n o p m n o p m n o p")],
+        [(1, words("a", 16)),
+         (2, "x y " + words("a", 14) + " q r"),
+         (3, words("p", 13)),
+         (4, " ".join(["m n o p"] * 6))],
         "doc_id long, text string")
-    spans = dedup.duplicate_spans(df, "doc_id", "text", window=4)
+    spans = dedup.duplicate_spans(df, "doc_id", "text")
     got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
            for r in spans.collect()}
     spans.unpersist()
-    assert got == {(1, 0, 6, 3), (2, 2, 8, 3), (4, 0, 12, 9)}
+    assert got == {(1, 0, 14, 3), (2, 2, 16, 3), (4, 0, 24, 13)}
 
 
 def test_duplicate_spans_matches_python_reference(spark, sf_dir):
     """Fixture corpus vs an independent brute-force recompute (dict of
     window-string -> occurrence count, then island merge per doc)."""
-    W = 12
+    W = dedup.SPAN_WINDOW
     d = load(spark, sf_dir, "documents")
     rows = [(r["doc_id"], r["text"]) for r in
             d.select("doc_id", "text").collect()]
@@ -2369,7 +2271,7 @@ def test_duplicate_spans_matches_python_reference(spark, sf_dir):
             prev = p
             n += 1
         expect.add((doc_id, start, prev + W, n))
-    spans = dedup.duplicate_spans(d, "doc_id", "text", window=W)
+    spans = dedup.duplicate_spans(d, "doc_id", "text")
     got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
            for r in spans.collect()}
     spans.unpersist()
@@ -2387,7 +2289,7 @@ def test_semantic_dedup_crafted(spark):
     emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int")
     out = {r["id"]: r["is_dup"] for r in similarity.semantic_dedup(
-        emb, threshold=0.7, n_centroids=2, n_iters=1).collect()}
+        emb, similarity.kmeans_centroids(emb, n_centroids=2)).collect()}
     assert out == {0: False, 1: False, 2: True, 3: False, 4: True}
 
 
@@ -2401,8 +2303,7 @@ def test_semantic_dedup_two_level_matches_definition(spark, sf_dir):
     from collections import defaultdict
     emb = load(spark, sf_dir, "embeddings")
     n = emb.count()
-    rows = similarity.semantic_dedup_two_level(
-        emb, threshold=0.4, n_coarse=4, n_fine=4, n_iters=2).collect()
+    rows = similarity.semantic_dedup_two_level(emb).collect()
     assert len(rows) == n                       # nothing dropped
     assert len({r["centroid_id"] for r in rows}) > 4   # real leaf split
     vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
@@ -2426,13 +2327,15 @@ def test_semantic_dedup_two_level_matches_definition(spark, sf_dir):
 
 
 def test_semantic_dedup_two_level_train_mod_covers(spark, sf_dir):
-    """Hash-sampled training (train_mod) must still assign EVERY corpus
-    vector — the empty-cell fallback (coarse centroid as the cell's only
-    fine centroid) guarantees no vector is dropped by the fine join."""
+    """The 1-in-2 hash-sampled training must still assign EVERY corpus
+    vector, odd ids included — the empty-cell fallback (coarse centroid
+    as the cell's only fine centroid) guarantees no vector is dropped by
+    the fine join."""
     emb = load(spark, sf_dir, "embeddings")
-    out = similarity.semantic_dedup_two_level(
-        emb, threshold=0.4, n_coarse=4, n_fine=4, n_iters=1, train_mod=7)
+    out = similarity.semantic_dedup_two_level(emb)
     assert out.count() == emb.count()
+    assert (out.filter("id % 2 = 1").count()
+            == emb.filter("vec_id % 2 = 1").count())
 
 
 def _wav_bytes_fmt(rate, channels, fmt_code, bits, body,
@@ -3588,19 +3491,21 @@ def test_semantic_dedup_multi_assign(spark, sf_dir):
     two anchors pull the pair into different clusters; the marked-dup
     output stays one row per id with the PRIMARY centroid. On the
     fixture: single-assign dups ⊆ multi-assign dups ⊆ exact dups."""
-    # anchors at +x and +y; the near-dup pair sits near the diagonal,
-    # one member each side -> different primary clusters
-    rows = [(0, [1.0, 0.0, 0.0, 0.0]),        # anchor A (centroid seed)
-            (1, [0.0, 1.0, 0.0, 0.0]),        # anchor B (centroid seed)
-            (2, [0.72, 0.69, 0.0, 0.0]),      # pair, leans A
-            (3, [0.69, 0.72, 0.0, 0.0])]      # pair, leans B
+    # centroids at +x and +y; the near-dup pair sits near the diagonal,
+    # one member each side -> different primary clusters; a far vector
+    # is dup of nothing
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+        "centroid_id long, c_vec array<double>")
+    rows = [(2, [0.72, 0.69, 0.0, 0.0]),      # pair, leans +x
+            (3, [0.69, 0.72, 0.0, 0.0]),      # pair, leans +y
+            (4, [0.0, 0.0, 1.0, 0.0])]        # far
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(threshold=0.99, n_centroids=2, n_iters=0)
 
     def run(n_assign):
-        out = similarity.semantic_dedup(emb, n_assign=n_assign, **kw)
+        out = similarity.semantic_dedup(emb, cents, n_assign=n_assign)
         rows_ = out.collect()
-        assert sorted(r["id"] for r in rows_) == [0, 1, 2, 3]  # 1/id
+        assert sorted(r["id"] for r in rows_) == [2, 3, 4]  # 1/id
         return {r["id"] for r in rows_ if r["is_dup"]}, \
             {r["id"]: r["centroid_id"] for r in rows_}
 
@@ -3613,43 +3518,16 @@ def test_semantic_dedup_multi_assign(spark, sf_dir):
 
     # fixture ordering: flat ⊆ multi ⊆ exact (all-pairs), recall up
     fix = load(spark, sf_dir, "embeddings")
-    d1 = {r["id"] for r in similarity.semantic_dedup(
-        fix, threshold=0.4, n_centroids=16, n_iters=2)
-        .filter("is_dup").collect()}
+    trained = similarity.kmeans_centroids(fix)
+    d1 = {r["id"] for r in similarity.semantic_dedup(fix, trained)
+          .filter("is_dup").collect()}
     d2 = {r["id"] for r in similarity.semantic_dedup(
-        fix, threshold=0.4, n_centroids=16, n_iters=2, n_assign=2)
-        .filter("is_dup").collect()}
+        fix, trained, n_assign=2).filter("is_dup").collect()}
     ex = {r["id"] for r in similarity.semantic_dedup(
-        fix, threshold=0.4, n_centroids=1, n_iters=1)
+        fix, similarity.kmeans_centroids(fix, n_centroids=1))
         .filter("is_dup").collect()}
     assert d1 <= d2 <= ex
     assert len(d2) > len(d1)                  # recall actually improves
-
-
-def test_semantic_dedup_two_level_multi_assign(spark, sf_dir):
-    """n_assign=2 on the TWO-LEVEL variant (the 100 TB shape, where
-    smaller leaves make confinement misses worse): output stays one
-    row per id with the primary leaf; dup sets nest single ⊆ multi ⊆
-    exact and recall strictly improves on the fixture."""
-    emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    one = similarity.semantic_dedup_two_level(
-        emb, threshold=0.3, n_coarse=4, n_fine=4, n_iters=2)
-    two = similarity.semantic_dedup_two_level(
-        emb, threshold=0.3, n_coarse=4, n_fine=4, n_iters=2, n_assign=2)
-    rows2 = two.collect()
-    assert len(rows2) == n                     # one row per id
-    d1 = {r["id"] for r in one.filter("is_dup").collect()}
-    d2 = {r["id"] for r in rows2 if r["is_dup"]}
-    ex = {r["id"] for r in similarity.semantic_dedup(
-        emb, threshold=0.3, n_centroids=1, n_iters=1)
-        .filter("is_dup").collect()}
-    assert d1 <= d2 <= ex
-    assert len(d2) > len(d1)
-    # primary assignment identical between the two runs
-    c1 = {r["id"]: r["centroid_id"] for r in one.collect()}
-    c2 = {r["id"]: r["centroid_id"] for r in rows2}
-    assert c1 == c2
 
 
 def test_tiff_seeded_mutation_fuzz_never_crashes():
@@ -3773,8 +3651,10 @@ def test_decode_images_tiff_cap_knob_reaches_executors(spark):
     package and see the default): decode kernels snapshot the driver's
     codec caps at plan-build time and re-apply them worker-side.
     Proven in the decisive direction — LOWER the knob on the driver and
-    watch valid TIFF blobs get cap-skipped in the distributed path,
-    then restore it and watch them decode."""
+    watch valid TIFF blobs hit the cap in the distributed path, then
+    restore it and watch them decode."""
+    import pytest
+
     from amazon_kinesis_replay_spark.functions import tiff
     from amazon_kinesis_replay_spark.operators.multimodal import (
         decode_images, resize_images)
@@ -3785,99 +3665,33 @@ def test_decode_images_tiff_cap_knob_reaches_executors(spark):
     old = tiff.MAX_SAMPLE_BYTES
     try:
         tiff.MAX_SAMPLE_BYTES = 8          # 8x8x1 = 64 samples > 8
-        out = decode_images(df, on_error="skip")
-        assert out.count() == 0            # driver knob reached workers
-        assert out.skipped_rows.value == 2
-        rz = resize_images(df, 4, 4, on_error="skip")
-        assert rz.count() == 0
+        with pytest.raises(Exception, match="MAX_SAMPLE_BYTES"):
+            decode_images(df).collect()    # driver knob reached workers
+        with pytest.raises(Exception, match="MAX_SAMPLE_BYTES"):
+            resize_images(df, 4, 4).collect()
         tiff.MAX_SAMPLE_BYTES = old
-        ok = decode_images(df, on_error="skip")
-        assert ok.count() == 2
-        assert ok.skipped_rows.value == 0
+        assert decode_images(df).count() == 2
     finally:
         tiff.MAX_SAMPLE_BYTES = old
 
 
-def test_decode_images_on_error_skip(spark):
-    """The corpus decode policy (r11): on_error='skip' drops
-    undecodable blobs (truncated PNG, unknown magic, None payload
-    bytes) like every other ingest path while valid blobs decode
-    unchanged; the default stays raise — a bad blob in the GATED
-    fixture is a bug, not data."""
-    import pytest
-
-    from amazon_kinesis_replay_spark.operators.multimodal import (
-        decode_images, encode_png, resize_images, synth_image_blob)
-
-    good0 = synth_image_blob(0, b"abcdef" * 20)
-    good1 = encode_png(4, 4, bytes(range(48)))
-    bad_trunc = good1[:20]                    # PNG magic, truncated
-    bad_magic = b"\x00\x01nonsense-payload"
-    rows = [(0, bytearray(good0)), (1, bytearray(good1)),
-            (2, bytearray(bad_trunc)), (3, bytearray(bad_magic))]
-    df = spark.createDataFrame(rows, "media_id long, data binary")
-
-    got_df = decode_images(df, on_error="skip")
-    got = got_df.collect()
-    assert sorted(r["media_id"] for r in got) == [0, 1]
-    # skipped-row observability (r11 advice): the drop count is on the
-    # returned frame, readable after the action
-    assert got_df.skipped_rows.value == 2
-    ok_df = decode_images(df.filter("media_id <= 1"))
-    ok = ok_df.collect()
-    assert ok_df.skipped_rows is None         # raise mode: no meter
-    assert {(r["media_id"], r["sha1"]) for r in ok} == \
-        {(r["media_id"], r["sha1"]) for r in got}  # valid rows identical
-
-    with pytest.raises(Exception):
-        decode_images(df).collect()           # default: loud
-
-    rz_df = resize_images(df, 4, 4, on_error="skip")
-    rz = rz_df.collect()
-    assert sorted(r["media_id"] for r in rz) == [0, 1]
-    assert rz_df.skipped_rows.value == 2
-    with pytest.raises(ValueError, match="on_error"):
-        decode_images(df, on_error="ignore")
-
-
-def test_audio_meta_on_error_skip(spark):
-    """on_error='skip' for the audio surface: a truncated WAV and an
-    unknown container drop; valid payloads decode identically to the
-    raise path."""
-    import pytest
-
-    from amazon_kinesis_replay_spark.operators.multimodal import (
-        audio_meta, synth_audio_blob)
-
-    good = synth_audio_blob(0, b"audio-seed-bytes" * 8)
-    rows = [(0, bytearray(good)), (1, bytearray(good[:10])),
-            (2, bytearray(b"NOTAUDIO" * 4))]
-    df = spark.createDataFrame(rows, "media_id long, data binary")
-    got_df = audio_meta(df, on_error="skip")
-    got = got_df.collect()
-    assert [r["media_id"] for r in got] == [0]
-    assert got_df.skipped_rows.value == 2     # r11 advice: drop meter
-    ok = audio_meta(df.filter("media_id = 0")).collect()
-    assert got[0]["mono_digest"] == ok[0]["mono_digest"]
-    with pytest.raises(Exception):
-        audio_meta(df).collect()
-    with pytest.raises(ValueError, match="on_error"):
-        audio_meta(df, on_error="drop")
-
-
 def test_image_codecs_raise_only_skip_tuple_under_mutation():
-    """The on_error='skip' safety contract, fuzzed across ALL EIGHT
-    image modes (PNG/JPEG/GIF/arith-JPEG/progressive-JPEG/VP8L/
-    lossy-VP8/TIFF): 2000 seeded bit-flips and truncations each either
-    decode or raise INSIDE _image_decode_errors() — a codec raising
-    anything else would crash a skip-mode corpus task instead of
-    dropping the blob."""
+    """The codecs' error contract, fuzzed across ALL EIGHT image modes
+    (PNG/JPEG/GIF/arith-JPEG/progressive-JPEG/VP8L/lossy-VP8/TIFF): 2000
+    seeded bit-flips and truncations each either decode or raise one of
+    the malformed-input classes below — the per-codec error classes are
+    ValueError subclasses, PNG inflate raises zlib.error, header walks
+    over truncated buffers raise struct.error. MemoryError is NOT one:
+    every decoder bounds its allocations from validated header fields."""
     import random
+    import struct
+    import zlib
 
     from amazon_kinesis_replay_spark.operators.multimodal import (
-        _decode_pixels, _image_decode_errors, synth_image_blob)
+        _decode_pixels, synth_image_blob)
 
-    errs = _image_decode_errors()
+    errs = (ValueError, NotImplementedError, OSError, EOFError,
+            KeyError, IndexError, struct.error, zlib.error)
     rng = random.Random(99)
     for mode in range(8):
         blob = synth_image_blob(
@@ -3899,8 +3713,8 @@ def test_dot_builders_match_python_reference(spark, sf_dir):
     """The similarity dot/cosine builders compute BIT-identical doubles to
     a plain-Python recomputation of their documented arithmetic, over
     every fixture embedding against a reference vector: the engine-exact
-    quantized sum (feeds oracle-gated outputs), the sequential double
-    fold, and the balanced-tree fixed-width form (pre-filter math)."""
+    quantized sum (feeds oracle-gated outputs) and the sequential double
+    fold (pre-filter math)."""
     import math
     import struct
 
@@ -3914,7 +3728,6 @@ def test_dot_builders_match_python_reference(spark, sf_dir):
         f"{S._exact_dot_sql('v', 'q_vec')} AS d",
         f"{S.cosine_sql('v', 'q_vec')} AS c",
         f"{S._fast_dot_sql('v', 'q_vec')} AS f",
-        f"{S._fast_dot_fixed_sql('v', 'q_vec', 64)} AS fx",
     ).collect()
 
     def exact(a, b):
@@ -3927,13 +3740,6 @@ def test_dot_builders_match_python_reference(spark, sf_dir):
             acc = acc + x * y
         return acc
 
-    def tree(a, b):
-        t = [x * y for x, y in zip(a, b)]
-        while len(t) > 1:
-            t = [t[i] + t[i + 1] if i + 1 < len(t) else t[i]
-                 for i in range(0, len(t), 2)]
-        return t[0] + 0.0
-
     def bits(x):
         return struct.pack("<d", x)
 
@@ -3942,8 +3748,7 @@ def test_dot_builders_match_python_reference(spark, sf_dir):
         v, qv = r["v"], r["q_vec"]
         cos = exact(v, qv) / (math.sqrt(exact(v, v))
                               * math.sqrt(exact(qv, qv)))
-        want = {"d": exact(v, qv), "c": cos, "f": fold(v, qv),
-                "fx": tree(v, qv)}
+        want = {"d": exact(v, qv), "c": cos, "f": fold(v, qv)}
         for col, w in want.items():
             assert bits(r[col]) == bits(w), (r["id"], col, r[col], w)
 
@@ -3976,7 +3781,7 @@ def test_sign_band_keys_match_reference(spark, sf_dir):
             ])).alias("bb"),
         ).select("id", "bb.band", "bb.bucket")
 
-    got = sorted(map(tuple, _sign_band_keys(emb, 8, 8).collect()))
+    got = sorted(map(tuple, _sign_band_keys(emb).collect()))
     want = sorted(map(tuple, ref_band_keys(emb, 8, 8).collect()))
     assert got == want and len(got) > 0
 

@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from amazon_kinesis_replay_spark.operators import replay_ops, stats
 from amazon_kinesis_replay_spark.tables import load
+from conftest import advisory_bytes
 
 
 def test_seek_exact_lower_bound(spark, sf_dir):
@@ -40,13 +41,13 @@ def test_normalize_payload_idempotent(spark, sf_dir):
 
 def test_global_index_and_batches(spark, sf_dir):
     e = load(spark, sf_dir, "events").select("event_id", "ts")
-    idx = replay_ops.with_global_index(e, ["ts", "event_id"], out_col="rn")
+    idx = replay_ops.with_global_index(e, ["ts", "event_id"])
     n = e.count()
-    rns = [r["rn"] for r in idx.select("rn").collect()]
+    rns = [r["__rn"] for r in idx.select("__rn").collect()]
     assert sorted(rns) == list(range(1, n + 1))  # dense, 1-based, no dupes
     # row numbers agree with the global (ts, event_id) order
-    ordered = idx.orderBy("ts", "event_id").select("rn").collect()
-    assert [r["rn"] for r in ordered] == list(range(1, n + 1))
+    ordered = idx.orderBy("ts", "event_id").select("__rn").collect()
+    assert [r["__rn"] for r in ordered] == list(range(1, n + 1))
 
     batched = replay_ops.assign_batches(e, ["ts", "event_id"], max_per_batch=500)
     sizes = batched.groupBy("batch_id").count().collect()
@@ -70,7 +71,7 @@ def test_interval_join_containment(spark, sf_dir):
              .select(F.col("event_id").alias("interval_id"),
                      F.col("ts").alias("lo"),
                      (F.col("ts") + F.expr("INTERVAL 5 HOURS")).alias("hi")))
-    bucketed = iv.interval_join(e, spans, bucket_width_s=3600)  # 5 buckets
+    bucketed = iv.interval_join(e, spans)  # 5 one-hour buckets
     naive = e.join(spans, (F.col("ts") >= F.col("lo"))
                    & (F.col("ts") < F.col("hi")))
     got = {(r["event_id"], r["interval_id"]) for r in bucketed.collect()}
@@ -96,7 +97,7 @@ def test_interval_join_subsecond_hi_boundary(spark):
         .withColumn("lo", F.col("lo").cast("timestamp")) \
         .withColumn("hi", F.col("hi").cast("timestamp"))
     got = {r["point_id"]
-           for r in iv.interval_join(pts, spans, bucket_width_s=3600).collect()}
+           for r in iv.interval_join(pts, spans).collect()}
     assert got == {"p1", "p4"}
 
 
@@ -120,7 +121,7 @@ def test_interval_join_microsecond_hi_boundary(spark):
         .withColumn("lo", F.col("lo").cast("timestamp")) \
         .withColumn("hi", F.col("hi").cast("timestamp"))
     got = {r["point_id"]
-           for r in iv.interval_join(pts, spans, bucket_width_s=3600).collect()}
+           for r in iv.interval_join(pts, spans).collect()}
     assert got == {"p1", "p3"}
 
 
@@ -152,9 +153,9 @@ def test_with_global_cumsum_matches_naive_window(spark):
     assert got == want
 
     packed = {r["id"]: r["pack_id"] for r in text.pack_sequences(
-        df, "id", "v", seq_len=100).collect()}
+        df, "id", "v").collect()}
     for i, (doc, _v) in enumerate(sorted(rows)):
-        assert packed[doc] == want[doc] // 100
+        assert packed[doc] == want[doc] // 512
     # packs are contiguous, non-decreasing in id order
     seq = [packed[i] for i in range(500)]
     assert seq == sorted(seq) and seq[0] == 0
@@ -172,10 +173,10 @@ def test_bounds_memo_keys_on_plan_not_table(spark):
     lo = df.filter(F.col("id") < 500)
     hi = df.filter(F.col("id") >= 1500)
     before = len(replay_ops._BOUNDS_MEMO)
-    a = {r["id"]: r["rn"] for r in replay_ops.with_global_index(
+    a = {r["id"]: r["__rn"] for r in replay_ops.with_global_index(
         lo, ["id"]).collect()}
     mid = len(replay_ops._BOUNDS_MEMO)
-    b = {r["id"]: r["rn"] for r in replay_ops.with_global_index(
+    b = {r["id"]: r["__rn"] for r in replay_ops.with_global_index(
         hi, ["id"]).collect()}
     after = len(replay_ops._BOUNDS_MEMO)
     assert mid == before + 1 and after == mid + 1   # distinct plan keys
@@ -203,9 +204,12 @@ def test_adaptive_parts_scales_with_input_size(spark, sf_dir):
     # a frame with no file-backed stats falls back to the configured width
     mem = spark.createDataFrame([(i,) for i in range(10)], "id long")
     assert replay_ops._adaptive_parts(mem) == conf_parts
-    # numbering parity: adaptive bucket count == any forced bucket count
-    a = {r["event_id"]: r["rn"] for r in replay_ops.with_global_index(
-        e, ["ts", "event_id"], out_col="rn").collect()}
-    b = {r["event_id"]: r["rn"] for r in replay_ops.with_global_index(
-        e, ["ts", "event_id"], out_col="rn", num_partitions=8).collect()}
+    # numbering parity: adaptive bucket count == a bucket count forced
+    # up by a smaller advisory partition size
+    a = {r["event_id"]: r["__rn"] for r in replay_ops.with_global_index(
+        e, ["ts", "event_id"]).collect()}
+    with advisory_bytes(spark, "1k"):
+        assert replay_ops._adaptive_parts(e) == conf_parts
+        b = {r["event_id"]: r["__rn"] for r in replay_ops.with_global_index(
+            e, ["ts", "event_id"]).collect()}
     assert a == b

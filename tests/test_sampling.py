@@ -132,16 +132,16 @@ def _py_hb_buckets(t, m):
 def test_dsir_hashed_buckets_match_python(spark):
     """late r8: the paper's hashed uni+bigram feature map — every
     (id, bucket, cnt) cell recomputed pure-python via the xxh64 twin
-    with SIGNED-pmod semantics (m deliberately non-power-of-2 so an
+    with SIGNED-pmod semantics (m = 10000 is no divisor of 2^64, so an
     unsigned % would diverge); whitespace edge cases included. Model
     merge is cell-wise additive (batch build == full build)."""
-    M = 97
+    M = sampling.DSIR_BUCKETS
     docs = [(0, "the cat sat on the mat"), (1, "a dog  ran"),
             (2, "single"), (3, "\tleading and trailing\n"),
             (4, "the cat ran fast today")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {(r["doc_id"], r["bucket"]): r["cnt"] for r in
-           sampling.dsir_hashed_counts(df, "text", n_buckets=M,
+           sampling.dsir_hashed_counts(df, "text",
                                        id_col="doc_id").collect()}
     want = {}
     for did, t in docs:
@@ -150,11 +150,11 @@ def test_dsir_hashed_buckets_match_python(spark):
     assert got == want
     # corpus model: batch merge == full build cell-for-cell
     full = {(r["bucket"], r["cnt"]) for r in
-            sampling.dsir_hashed_counts(df, "text", n_buckets=M).collect()}
+            sampling.dsir_hashed_counts(df, "text").collect()}
     b1 = sampling.dsir_hashed_counts(
-        df.filter(F.col("doc_id") < 2), "text", n_buckets=M)
+        df.filter(F.col("doc_id") < 2), "text")
     b2 = sampling.dsir_hashed_counts(
-        df.filter(F.col("doc_id") >= 2), "text", n_buckets=M)
+        df.filter(F.col("doc_id") >= 2), "text")
     merged = (b1.unionByName(b2).groupBy("bucket")
               .agg(F.sum("cnt").cast("long").alias("cnt")))
     assert {(r["bucket"], r["cnt"]) for r in merged.collect()} == full
@@ -163,14 +163,14 @@ def test_dsir_hashed_buckets_match_python(spark):
 def test_dsir_hashed_stats_match_python(spark):
     """The exact-integer sufficient statistics (the doc_pii_redact gate
     columns) match an independent python recompute."""
-    M = 211
+    M = sampling.DSIR_BUCKETS
     docs = [(i, t) for i, t in enumerate(
         ["the cat sat on the mat", "a dog ran", "single token run",
          "the mat sat", "cat and dog and cat", "zz yy xx"])]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     target = sampling.dsir_hashed_counts(
-        df.filter(F.col("doc_id") % 2 == 0), "text", n_buckets=M)
-    raw = sampling.dsir_hashed_counts(df, "text", n_buckets=M)
+        df.filter(F.col("doc_id") % 2 == 0), "text")
+    raw = sampling.dsir_hashed_counts(df, "text")
     tmod, rmod = {}, {}
     for did, t in docs:
         for b in _py_hb_buckets(t, M):
@@ -179,7 +179,7 @@ def test_dsir_hashed_stats_match_python(spark):
                 tmod[b] = tmod.get(b, 0) + 1
     st = {r["doc_id"]: (r["hb_grams"], r["hb_t_sum"], r["hb_r_sum"])
           for r in sampling.dsir_hashed_stats(
-              df, "doc_id", "text", target, raw, n_buckets=M).collect()}
+              df, "doc_id", "text", target, raw).collect()}
     for did, t in docs:
         c = Counter(_py_hb_buckets(t, M))
         assert st[did] == (

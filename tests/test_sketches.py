@@ -101,7 +101,7 @@ def test_qhist_buckets_match_python_twin(spark, sf_dir):
     S = 7
     ev = load(spark, sf_dir, "events").select("user_id")
     got = {r["bucket"]: r["cnt"] for r in
-           sketches.qhist_table(ev, "user_id", sig_bits=S).collect()}
+           sketches.qhist_table(ev, "user_id").collect()}
     want: dict = {}
     for (v,) in ev.collect():
         b = _py_qhist_bucket(int(v), S)
@@ -112,14 +112,13 @@ def test_qhist_buckets_match_python_twin(spark, sf_dir):
         [((1 << 60) - 1,), ((1 << 60),), ((1 << 62) + 12345,),
          (2**63 - 1,)], "v long")
     got_big = {r["bucket"]: r["cnt"] for r in
-               sketches.qhist_table(big, "v", sig_bits=S).collect()}
+               sketches.qhist_table(big, "v").collect()}
     assert got_big == {_py_qhist_bucket(v, S): 1
                        for v in [(1 << 60) - 1, 1 << 60,
                                  (1 << 62) + 12345, 2**63 - 1]}
     # deterministic under repartition: bit-identical rebuild
     re = {r["bucket"]: r["cnt"] for r in
-          sketches.qhist_table(ev.repartition(7), "user_id",
-                               sig_bits=S).collect()}
+          sketches.qhist_table(ev.repartition(7), "user_id").collect()}
     assert re == got
 
 
@@ -130,7 +129,7 @@ def test_qhist_quantiles_accuracy_and_merge(spark, sf_dir):
     import pytest
     S = 7
     ev = load(spark, sf_dir, "events").select("user_id")
-    qh = sketches.qhist_table(ev, "user_id", sig_bits=S)
+    qh = sketches.qhist_table(ev, "user_id")
     vals = sorted(int(r["user_id"]) for r in ev.collect())
     n = len(vals)
     probs = [0.1, 0.5, 0.9, 0.99, 1.0]
@@ -148,11 +147,11 @@ def test_qhist_quantiles_accuracy_and_merge(spark, sf_dir):
     b1 = ev.filter(F.col("user_id") % 2 == 0)
     b2 = ev.filter(F.col("user_id") % 2 == 1)
     merged = sketches.qhist_merge(
-        sketches.qhist_table(b1, "user_id", sig_bits=S),
-        sketches.qhist_table(b2, "user_id", sig_bits=S))
+        sketches.qhist_table(b1, "user_id"),
+        sketches.qhist_table(b2, "user_id"))
     full = {(r["bucket"], r["cnt"]) for r in qh.collect()}
     assert {(r["bucket"], r["cnt"]) for r in merged.collect()} == full
     # negative values refuse loudly (domain contract)
     neg = spark.createDataFrame([(-1,)], "v long")
     with pytest.raises(Exception, match="negative"):
-        sketches.qhist_table(neg, "v", sig_bits=S).collect()
+        sketches.qhist_table(neg, "v").collect()

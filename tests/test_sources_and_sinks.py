@@ -343,12 +343,12 @@ def test_kinesis_sink_e2e_driver_replay():
     import os
 
     from amazon_kinesis_replay_spark.streaming.replay import ReplayEngine
-    from amazon_kinesis_replay_spark.session import build_spark
+    from conftest import engine_session
     from amazon_kinesis_replay_spark.tables import load
 
     os.environ.setdefault("AWS_ACCESS_KEY_ID", "testing")
     os.environ.setdefault("AWS_SECRET_ACCESS_KEY", "testing")
-    spark = build_spark("kinesis-e2e", shuffle_partitions=8)
+    spark = engine_session()
     events = (load(spark, "/root/testdata/sf0.001", "events")
               .selectExpr("props AS payload", "ts").limit(700))
     n = events.count()

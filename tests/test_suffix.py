@@ -3,7 +3,7 @@
 Three layers of evidence:
 1. python-twin equality of `duplicated_runs` on a crafted corpus
    (planted within-doc, cross-doc, overlapping, and boundary-adjacent
-   repeats) at several min_len values incl. non-powers-of-two;
+   repeats) at its 12-token run length, a non-power-of-two;
 2. cross-ALGORITHM equality with `dedup.duplicate_spans` on the real
    fixture (window hashing vs prefix-doubling ranks — disjoint code
    paths, identical definition; this pair also rides the dedup_exact
@@ -26,6 +26,8 @@ CRAFTED = [
     (4, "prefix words then the quick brown fox jumps over the lazy dog"),
     (5, "xx yy xx yy xx yy xx yy"),          # overlapping periodic run
     (6, "the lazy dog again"),               # shares a sub-window run
+    (7, " ".join(["xx yy zz"] * 9)),         # periodic, many windows
+    (8, "lead " + " ".join(["xx yy zz"] * 5)),   # shares doc 7's runs
 ]
 
 
@@ -54,44 +56,27 @@ def _py_runs(docs, min_len):
     return sorted(out)
 
 
-@pytest.mark.parametrize("min_len", [2, 3, 4, 8])
-def test_duplicated_runs_matches_python_twin(spark, min_len):
+def test_duplicated_runs_matches_python_twin(spark):
     df = spark.createDataFrame(CRAFTED, "doc_id long, text string")
     got = sorted((r["doc_id"], r["span_start"], r["span_end"],
                   r["n_windows"])
-                 for r in sx.duplicated_runs(df, "doc_id", "text",
-                                             min_len=min_len).collect())
-    assert got == _py_runs(CRAFTED, min_len)
+                 for r in sx.duplicated_runs(df, "doc_id", "text").collect())
+    want = _py_runs(CRAFTED, dedup.SPAN_WINDOW)
+    assert got == want and {r[0] for r in want} == {1, 3, 7, 8}
 
 
 def test_duplicated_runs_equals_window_hash_algorithm(spark, sf_dir):
     """The exactness tier and the window-hash approximation implement
-    the SAME definition at min_len == window: byte-equal spans on the
+    the SAME definition at the same SPAN_WINDOW: byte-equal spans on the
     real fixture, from disjoint algorithms."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     via_sa = sorted(
         (r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-        for r in sx.duplicated_runs(d, "doc_id", "text",
-                                    min_len=12).collect())
+        for r in sx.duplicated_runs(d, "doc_id", "text").collect())
     via_hash = sorted(
         (r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-        for r in dedup.duplicate_spans(d, "doc_id", "text",
-                                       window=12).collect())
+        for r in dedup.duplicate_spans(d, "doc_id", "text").collect())
     assert via_sa == via_hash and via_sa  # non-vacuous: fixture has dups
-
-
-def test_duplicated_runs_finds_sub_window_repeats(spark):
-    """The reason this tier exists: a 3-token duplicated run invisible
-    to duplicate_spans(window=12)."""
-    docs = [(1, "alpha beta gamma " + "u1 u2 u3 u4 u5 u6 u7 u8 u9"),
-            (2, "v1 v2 v3 v4 v5 v6 v7 v8 v9 " + "alpha beta gamma")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {(r["doc_id"], r["span_start"], r["span_end"])
-           for r in sx.duplicated_runs(df, "doc_id", "text",
-                                       min_len=3).collect()}
-    assert got == {(1, 0, 3), (2, 9, 12)}
-    assert dedup.duplicate_spans(df, "doc_id", "text",
-                                 window=12).count() == 0
 
 
 def test_suffix_ranks_equality_classes(spark):
@@ -129,5 +114,3 @@ def test_suffix_args_validated(spark):
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     with pytest.raises(ValueError, match="power of two"):
         sx.suffix_ranks(sx.corpus_tokens(df, "doc_id", "text"), 3)
-    with pytest.raises(ValueError, match="min_len"):
-        sx.duplicated_runs(df, "doc_id", "text", min_len=0)

@@ -1,7 +1,15 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for registry queries to plans/r13/<q>_<tag>.txt.
+"""Dump .explain('formatted') of registry queries, one file per query.
 
-Usage: python tools/dump_plans.py <tag> [query ...]   (default: bench headline)
+Usage: python tools/dump_plans.py OUT_DIR [all | query ...]
+
+Writes OUT_DIR/<query>.txt (OUT_DIR is created; default queries: the
+bench headline, `all`: the whole registry). The tables come from
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture). To check that a
+change leaves the plans alone, compare two dumps with the run-dependent
+numbers stripped: expression ids (`#12L`), `plan_id=`, RDD ids and, in
+plans of queries that run actions while they are built, AQE's query-stage
+and codegen-stage numbers.
 """
 import os
 import sys
@@ -22,11 +30,13 @@ HEADLINE = [
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "after"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
     names = sys.argv[2:] or HEADLINE
+    if names == ["all"]:
+        names = list(QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r13")
     os.makedirs(out_dir, exist_ok=True)
     spark = build_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
@@ -34,7 +44,7 @@ def main():
         df = QUERIES[name].fn(spark, sf_dir)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(txt)
         print(f"wrote {path} ({len(txt.splitlines())} lines)")

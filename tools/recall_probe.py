@@ -11,10 +11,11 @@ Measures, against EXACT ground truth at a small SF:
   verify step to discard).
 - Embedding sign-LSH banding: recall of banded candidates vs the exact
   all-pairs cosine>=t set for (n_bands, band_bits) splits of the 64 dims.
-- ANN top-k: recall@10 and wall time of the sign-LSH (single- and
-  multi-probe) and IVF tiers vs brute force, over three queries.
-- SemDeDup: cluster confinement and per-epsilon dup recall of the
-  clustered marking (flat and n_assign=2) vs one all-pairs cluster.
+- ANN top-k: recall@10 and wall time of the registry's 4-probe sign-LSH
+  tier vs brute force, over three queries.
+- SemDeDup: dup recall at the registry's eps=0.4 of the clustered
+  marking (flat and n_assign=2, 16 trained centroids) vs one all-pairs
+  cluster.
 
 Usage: python tools/recall_probe.py [sf_dir]
 """
@@ -42,7 +43,7 @@ def main():
     # ---- MinHash banding vs exact Jaccard ---------------------------------
     d = load(spark, sf_dir, "documents")
     truth = {(r["id_a"], r["id_b"]) for r in
-             dedup.ngram_jaccard_pairs(d, "doc_id", "text", 3, 0.5).collect()}
+             dedup.ngram_jaccard_pairs(d, "doc_id", "text", 0.5).collect()}
     print(f"minhash truth: {len(truth)} pairs at J>=0.5 ({sf_dir})",
           flush=True)
     for num_hashes, bands in ((64, 16), (64, 32), (32, 16)):
@@ -114,27 +115,13 @@ def main():
     qdfs = [(qid, full.filter(F.col("vec_id") == qid)
              .select(F.col("embedding").alias("q_vec"))) for qid in queries]
     truth = {qid: [r["vec_id"] for r in
-                   S.brute_force_topk(full, qdf, k=10).collect()]
+                   S.brute_force_topk(full, qdf).collect()]
              for qid, qdf in qdfs}
 
-    cents = S.kmeans_centroids(full, n_centroids=8, n_iters=2)
-
     variants = {
-        "lsh(4bit)": lambda qdf: S.lsh_topk(full, qdf, k=10),
-        # multi-probe (r8): +1 / +3 least-confident-bit neighbor buckets —
-        # recall at 2x / 4x the scanned fraction, still bucket-pruned
-        "lsh(4bit,p2)": lambda qdf: S.lsh_topk(full, qdf, k=10, n_probe=2),
-        "lsh(4bit,p4)": lambda qdf: S.lsh_topk(full, qdf, k=10, n_probe=4),
-        # perturbation sequences (r8 late): multi-bit flip sets ordered by
-        # the Lv et al. expected-score proxy — same scanned fraction as
-        # the single-bit run above at p4, deeper probing available beyond
-        # the n_bits+1 single-bit ceiling
-        "lsh(4bit,p4,f2)": lambda qdf: S.lsh_topk(full, qdf, k=10,
-                                                  n_probe=4, max_flip=2),
-        "lsh(4bit,p8,f2)": lambda qdf: S.lsh_topk(full, qdf, k=10,
-                                                  n_probe=8, max_flip=2),
-        "ivf(8c,2p)": lambda qdf: S.ivf_topk(full, qdf, k=10, n_centroids=8,
-                                             n_probe=2, centroids=cents),
+        # multi-probe (r8): the query's bucket plus the 3 neighbor
+        # buckets across its least-confident bits — the registry shape
+        "lsh(4bit,p4)": lambda qdf: S.lsh_topk(full, qdf),
     }
     print(f"ANN recall@10 over queries {queries} ({sf_dir}):", flush=True)
     for name, fn in variants.items():
@@ -149,45 +136,29 @@ def main():
               f"({hits}/{n_ret}), {dt:5.2f}s for {len(queries)} queries",
               flush=True)
 
-    # ---- SemDeDup epsilon sweep (dup mass / cluster-confinement cost) ----
-    from amazon_kinesis_replay_spark.operators import similarity
-    emb = load(spark, sf_dir, "embeddings")
-    n_vec = emb.count()
-    asg = similarity.ivf_assign(
-        emb, centroids=similarity.kmeans_centroids(
-            emb, n_centroids=16, n_iters=2))
-    sizes = [r["c"] for r in asg.groupBy("centroid_id")
-             .agg(F.count("*").alias("c")).collect()]
-    pair_cost = sum(c * (c - 1) // 2 for c in sizes)
-    all_pairs = n_vec * (n_vec - 1) // 2
-    print(f"SemDeDup cluster confinement ({sf_dir}): "
-          f"max cluster share {max(sizes) / n_vec:.3f}, "
-          f"within-cluster pairs {pair_cost} "
-          f"({pair_cost / all_pairs:.3%} of all-pairs)", flush=True)
-    # per-epsilon RECALL vs exact ground truth (r8 roadmap item): one
-    # cluster = all-pairs = the exact dup set; the clustered marking is
-    # a SUBSET of it by construction (a within-cluster qualifying pair
+    # ---- SemDeDup recall at the registry's epsilon ---------------------
+    # one cluster = all-pairs = the exact dup set; the clustered marking
+    # is a SUBSET of it by construction (a within-cluster qualifying pair
     # is also a global pair and min-id-wins only shrinks), so the only
     # error mode is MISSES across cluster boundaries — recall is the
     # entire quality story, precision is structurally 1.0.
-    for eps in (0.3, 0.4, 0.5, 0.7):
-        exact_ids = {r["id"] for r in similarity.semantic_dedup(
-            emb, threshold=eps, n_centroids=1, n_iters=1)
-            .filter("is_dup").collect()}
-        got_ids = {r["id"] for r in similarity.semantic_dedup(
-            emb, threshold=eps, n_centroids=16, n_iters=2)
-            .filter("is_dup").collect()}
-        got2_ids = {r["id"] for r in similarity.semantic_dedup(
-            emb, threshold=eps, n_centroids=16, n_iters=2, n_assign=2)
-            .filter("is_dup").collect()}
-        assert got_ids <= got2_ids <= exact_ids, \
-            "dup sets must nest: flat <= multi-assign <= exact"
-        rec = len(got_ids) / len(exact_ids) if exact_ids else 1.0
-        rec2 = len(got2_ids) / len(exact_ids) if exact_ids else 1.0
-        print(f"  eps={eps:.1f}: {len(got_ids)}/{n_vec} marked "
-              f"({len(got_ids) / n_vec:.1%}); exact {len(exact_ids)} "
-              f"-> recall {rec:.3f} (n_assign=2: {rec2:.3f})",
-              flush=True)
+    emb = load(spark, sf_dir, "embeddings")
+    n_vec = emb.count()
+    one = S.kmeans_centroids(emb, n_centroids=1)
+    cents = S.kmeans_centroids(emb)
+    exact_ids = {r["id"] for r in S.semantic_dedup(emb, one)
+                 .filter("is_dup").collect()}
+    got_ids = {r["id"] for r in S.semantic_dedup(emb, cents)
+               .filter("is_dup").collect()}
+    got2_ids = {r["id"] for r in S.semantic_dedup(emb, cents, n_assign=2)
+                .filter("is_dup").collect()}
+    assert got_ids <= got2_ids <= exact_ids, \
+        "dup sets must nest: flat <= multi-assign <= exact"
+    rec = len(got_ids) / len(exact_ids) if exact_ids else 1.0
+    rec2 = len(got2_ids) / len(exact_ids) if exact_ids else 1.0
+    print(f"SemDeDup ({sf_dir}) eps=0.4: {len(got_ids)}/{n_vec} marked "
+          f"({len(got_ids) / n_vec:.1%}); exact {len(exact_ids)} "
+          f"-> recall {rec:.3f} (n_assign=2: {rec2:.3f})", flush=True)
 
     spark.stop()
 

@@ -3,8 +3,6 @@
 10x synthetic expansions of the fixture corpus and report wall time. A
 near-linear curve is the evidence the plans have no quadratic term:
 
-- minhash        : explode -> min-aggs -> band equi-join (vs all-pairs
-                   Jaccard, which would blow up 100x at 10x)
 - contamination  : shingle pass -> distinct train grams -> semi-join
                    (vs train x eval doc-pair comparison)
 - embedding_dedup: sign-LSH banding -> bucket equi-join -> exact cosine
@@ -16,10 +14,6 @@ near-linear curve is the evidence the plans have no quadratic term:
                    scale WITH the corpus (the 100 TB contract in
                    operators/similarity.semantic_dedup) so per-cluster
                    membership — and with it the quadratic — stays bounded
-- semdedup_2l    : the two-level fix for flat training's O(n·k) term
-                   (k ∝ n makes flat O(n²) — measured r8): hierarchical
-                   centroids cost O(n·√k) to train AND assign, so the
-                   same k-∝-corpus growth costs ~mult^1.5, not mult²
 - mixture        : domain-count groupBy + broadcast rate join (vs any
                    per-domain driver loop)
 - qhist          : quantile-histogram build — one scan, sketch-sized
@@ -122,14 +116,6 @@ def main():
 
     families: dict[str, dict] = {}
 
-    def run_minhash(mult):
-        corpus = _expand_docs(docs, mult)
-        n = corpus.count()
-        pairs = dedup.minhash_dedup(corpus, "doc_id", "text",
-                                    num_hashes=64, bands=32, k=3,
-                                    threshold=0.5).count()
-        return f"{n} docs -> {pairs} pairs"
-
     def run_contamination(mult):
         split = _expand_docs(docs, mult).withColumn(
             "split", F.when(F.pmod(F.col("doc_id"), 10) < 8, "train")
@@ -143,16 +129,13 @@ def main():
     def run_embedding(mult):
         corpus = _expand_emb(emb, mult)
         n = corpus.count()
-        pairs = dedup.embedding_cosine_dedup(
-            corpus, threshold=0.4, id_col="vec_id",
-            vec_col="embedding").count()
+        pairs = dedup.embedding_cosine_dedup(corpus).count()
         return f"{n} vecs -> {pairs} pairs"
 
     def run_packing(mult):
         counted = _expand_docs(docs, mult).withColumn(
             "token_count", F.size(F.split(F.col("text"), r"\s+")))
-        packed = text.pack_sequences(counted, "doc_id", "token_count",
-                                     seq_len=512)
+        packed = text.pack_sequences(counted, "doc_id", "token_count")
         row = packed.agg(F.count("*").alias("n"),
                          F.max("pack_id").alias("p")).head()
         return f"{row['n']} docs -> {int(row['p']) + 1} packs"
@@ -163,21 +146,10 @@ def main():
         # centroids scale WITH the corpus — the operator's own 100 TB
         # contract (bounded per-cluster membership bounds the quadratic);
         # a fixed centroid count would measure the quadratic instead
-        out = similarity.semantic_dedup(corpus, threshold=0.4,
-                                        n_centroids=16 * mult)
+        out = similarity.semantic_dedup(corpus, similarity.kmeans_centroids(
+            corpus, n_centroids=16 * mult))
         dups = out.filter("is_dup").count()
         return f"{n} vecs -> {dups} dups ({16 * mult} centroids)"
-
-    def run_semdedup_2l(mult):
-        corpus = _expand_emb(emb, mult)
-        n = corpus.count()
-        # leaf count k = 16*mult (same contract as the flat family), but
-        # trained/assigned hierarchically: n_coarse = n_fine = 4*sqrt(mult)
-        side = max(4, int(round(4 * mult ** 0.5)))
-        out = similarity.semantic_dedup_two_level(
-            corpus, threshold=0.4, n_coarse=side, n_fine=side)
-        dups = out.filter("is_dup").count()
-        return f"{n} vecs -> {dups} dups ({side}x{side} leaf cells)"
 
     def run_mixture(mult):
         corpus = _expand_docs(docs, mult).withColumn(
@@ -208,7 +180,7 @@ def main():
         # scale pass: explode -> combinable groupBy); tracks the scan
         corpus = _expand_docs(docs, mult)
         n = corpus.count()
-        n_post = retrieval.postings(corpus, "doc_id", "text").count()
+        n_post = retrieval.postings(corpus).count()
         return f"{n} docs -> {n_post} postings"
 
     def _expand_events_full(mult, shift_interval=None):
@@ -237,8 +209,7 @@ def main():
                      .select("event_id", "user_id", "ts"))
         clicks = (corpus.filter(F.col("event_type") == "click")
                   .select("user_id", "ts"))
-        matched = (intervals.asof_join(purchases, clicks, on="ts",
-                                       by="user_id", value_cols=[])
+        matched = (intervals.asof_join(purchases, clicks, by="user_id")
                    .filter(F.col("asof_ts").isNotNull()).count())
         return f"{n} events -> {matched} matched purchases"
 
@@ -249,7 +220,7 @@ def main():
         # the log factor CONSTANT in corpus size (it depends on L only)
         corpus = _expand_docs(docs, mult)
         from amazon_kinesis_replay_spark.operators import suffix as sfx
-        spans = sfx.duplicated_runs(corpus, "doc_id", "text", min_len=12)
+        spans = sfx.duplicated_runs(corpus, "doc_id", "text")
         n = spans.count()
         return f"x{mult} -> {n} duplicated spans"
 
@@ -286,11 +257,9 @@ def main():
 
     all_families = [
         ("media", run_media),
-        ("minhash", run_minhash),
         ("bm25", run_bm25),
         ("qhist", run_qhist),
         ("semdedup", run_semdedup),
-        ("semdedup_2l", run_semdedup_2l),
         ("mixture", run_mixture),
         ("contamination", run_contamination),
         ("embedding_dedup", run_embedding),
