@@ -3,7 +3,8 @@
 Three layers of evidence:
 1. python-twin equality of `duplicated_runs` on a crafted corpus
    (planted within-doc, cross-doc, overlapping, and boundary-adjacent
-   repeats) at its 12-token run length, a non-power-of-two;
+   repeats) at its 12-token run length, a non-power-of-two, with the
+   corpus split over several partition counts;
 2. cross-ALGORITHM equality with `dedup.duplicate_spans` on the real
    fixture (window hashing vs prefix-doubling ranks — disjoint code
    paths, identical definition; this pair also rides the dedup_exact
@@ -56,8 +57,12 @@ def _py_runs(docs, min_len):
     return sorted(out)
 
 
-def test_duplicated_runs_matches_python_twin(spark):
-    df = spark.createDataFrame(CRAFTED, "doc_id long, text string")
+@pytest.mark.parametrize("n_parts", [2, 3, 4, 8])
+def test_duplicated_runs_matches_python_twin(spark, n_parts):
+    """Global positions come from a distributed cumsum over input
+    partitions, so the runs must not depend on how the corpus is split."""
+    df = spark.createDataFrame(CRAFTED, "doc_id long, text string") \
+        .repartition(n_parts)
     got = sorted((r["doc_id"], r["span_start"], r["span_end"],
                   r["n_windows"])
                  for r in sx.duplicated_runs(df, "doc_id", "text").collect())
