@@ -50,12 +50,16 @@ class ReplayConfig:
     #: reorder_across_batches is set (the CLI puts it inside the
     #: checkpoint, `<checkpoint>/reorder-state`, since its epochs are
     #: keyed by the checkpoint's batch ids). The held tail (at least
-    #: reader_buffer_size rows) lives as parquet under
-    #: held/gen=<batch_id>, and an epoch is applied once its commit
-    #: marker file exists (written last, like fsutil.gen_commit), so a
-    #: redelivered micro-batch either skips or recomputes from the
-    #: previous committed epoch and cannot corrupt the buffer (emission
-    #: to the sink stays at-least-once, like every replay sink path).
+    #: reader_buffer_size rows) lives as one parquet file under
+    #: held/gen=<batch_id>, which the DRIVER reads and writes through
+    #: the Hadoop FS API: the driver holds the window, at most
+    #: reader_buffer_size rows plus the rows tied at the cutoff (and the
+    #: reader_buffer_size + 1 newest rows of the batch while it merges).
+    #: An epoch is applied once its commit marker file exists (written
+    #: last, like fsutil.gen_commit), so a redelivered micro-batch either
+    #: skips or recomputes from the previous committed epoch and cannot
+    #: corrupt the buffer (emission to the sink stays at-least-once, like
+    #: every replay sink path).
     reorder_state_path: str | None = None
 
     # -- sink (OP-SINK-*) -----------------------------------------------------

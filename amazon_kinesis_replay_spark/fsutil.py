@@ -3,9 +3,10 @@
 The gate's held epochs (`streaming/replay.py`) may live on HDFS or an
 object store, not the driver's local disk — `os.path` probes are
 silently wrong there (always False, so every batch "bootstraps" and
-discards history). These helpers route every existence/list/delete
-through the JVM-side Hadoop FileSystem resolved FOR the path's scheme,
-so the same code is correct on file://, hdfs:// and s3a://.
+discards history). These helpers route every existence/list/delete,
+and the bytes of the gate's epoch files, through the JVM-side Hadoop
+FileSystem resolved FOR the path's scheme, so the same code is correct
+on file://, hdfs:// and s3a://.
 """
 
 from __future__ import annotations
@@ -66,15 +67,53 @@ def read_applied_batch(spark, path: str) -> int:
         return -1
 
 
-def write_text(spark, path: str, content: str) -> None:
-    """Create/overwrite a small text file at `path` (manifests, markers)
-    through the Hadoop FS API — correct on file://, hdfs://, s3a://."""
+#: Bytes per py4j call of `write_bytes`/`read_bytes`: py4j moves a
+#: byte array as one base64 string, so a file moves in bounded pieces.
+_CHUNK = 1 << 22
+
+
+def write_bytes(spark, path: str, data: bytes) -> None:
+    """Create/overwrite the file at `path` with `data` through the
+    Hadoop FS API — correct on file://, hdfs://, s3a://."""
     fs, jpath = _fs(spark, path)
     out = fs.create(jpath(path), True)
     try:
-        out.write(bytearray(content.encode("utf-8")))
+        for i in range(0, len(data), _CHUNK):
+            out.write(bytearray(data[i:i + _CHUNK]))
     finally:
         out.close()
+
+
+def read_bytes(spark, path: str) -> bytes:
+    """The whole file at `path`, read through the Hadoop FS API. Each
+    piece crosses py4j as a base64 STRING encoded on the JVM side: py4j
+    decodes a returned byte[] one Python int per byte (~12 MB/s)."""
+    import base64
+    jvm = spark._jvm
+    fs, jpath = _fs(spark, path)
+    p = jpath(path)
+    left = fs.getFileStatus(p).getLen()
+    copy = jvm.org.apache.commons.io.IOUtils.copyLarge
+    encoder = jvm.java.util.Base64.getEncoder()
+    parts = []
+    inp = fs.open(p)
+    try:
+        while left > 0:
+            k = min(left, _CHUNK)
+            buf = jvm.java.io.ByteArrayOutputStream(4 * k // 3 + 4)
+            out = encoder.wrap(buf)
+            copy(inp, out, 0, k)
+            out.close()                 # flushes the last base64 quantum
+            parts.append(base64.b64decode(buf.toString("US-ASCII")))
+            left -= k
+    finally:
+        inp.close()
+    return b"".join(parts)
+
+
+def write_text(spark, path: str, content: str) -> None:
+    """Create/overwrite a small text file at `path` (manifests, markers)."""
+    write_bytes(spark, path, content.encode("utf-8"))
 
 
 def listdir(spark, path: str) -> list[str]:
@@ -96,8 +135,8 @@ def listdir(spark, path: str) -> list[str]:
 # publishes it with one commit primitive — no rename anywhere, so it is as
 # safe on object stores (where rename is copy+delete) as on HDFS:
 #
-#   <held>/gen=0000000007/part-*.parquet, _GEN_COMMITTED
-#   <held>/gen=0000000008/part-*.parquet     <- crashed batch: no marker
+#   <held>/gen=0000000007/held.parquet, _GEN_COMMITTED
+#   <held>/gen=0000000008/held.parquet       <- crashed batch: no marker
 #
 # The batch writes a COMPLETE generation directory, then publishes it by
 # creating the (empty) marker file LAST — a single atomic file create on

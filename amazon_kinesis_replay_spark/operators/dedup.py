@@ -636,17 +636,14 @@ def _verify_cosine_pairs(withn: DataFrame,
 # --------------------------------------------------------------------------
 
 
-def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
+def dedup_clusters(nodes: DataFrame, pairs: DataFrame,
                    max_iters: int = 20) -> DataFrame:
     """Group near-dup PAIRS into CLUSTERS and pick one representative
     (the min `doc_id`) per cluster — the step that turns any pairwise
     dedup modality (Jaccard, MinHash, SimHash, embedding-cosine) into a
     keep/drop decision.
 
-    `pairs` is an (id_a, id_b) DataFrame OR a parquet path string of one
-    — the path form is the cold-start entry (r6 verdict item 7): a
-    pipeline that already materialized its duplicate pairs clusters them
-    without re-running any shingle/LSH pipeline.
+    `pairs` is an (id_a, id_b) DataFrame.
 
     Connected components by iterative min-label propagation: every node
     starts labeled with its own id; each round, a node's label becomes the
@@ -670,8 +667,6 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame | str,
     Returns (id, cluster_id, cluster_size, is_representative) for EVERY
     node — singletons form their own cluster.
     """
-    if isinstance(pairs, str):
-        pairs = nodes.sparkSession.read.parquet(pairs)
     ids = nodes.select(F.col("doc_id").alias("id")).distinct()
     # Materialize the pair list FIRST: the symmetric-edges union consumes
     # `pairs` twice, so a pair plan whose expensive stages are NOT

@@ -93,10 +93,10 @@ def asof_join(left: DataFrame, right: DataFrame,
                          "(does not scale) — pre-bucket and pass the "
                          "bucket as `by`.")
     # Name-collision contract (r8 advice item): the union plan reserves
-    # __side/__ord/__tb/__r internally and emits `asof_ts`; a left column
+    # __side/__ord/__r internally and emits `asof_ts`; a left column
     # with one of those names would be shadowed or make the final select
     # ambiguous — fail loudly instead.
-    reserved = {"__side", "__ord", "__tb", "__r"}
+    reserved = {"__side", "__ord", "__r"}
     clash = [c for c in left.columns if c in reserved or c == "asof_ts"]
     if clash:
         raise ValueError(
@@ -114,7 +114,6 @@ def asof_join(left: DataFrame, right: DataFrame,
         *[F.col(c) for c in left.columns],
         F.lit(1).alias("__side"),
         null_struct.alias("__r"),
-        F.lit(0).alias("__tb"),
         F.col("ts").alias("__ord"))
     r_side = right.select(
         *[F.col(c) if c in by_keys else
@@ -122,15 +121,10 @@ def asof_join(left: DataFrame, right: DataFrame,
           for c in left.columns],
         F.lit(0).alias("__side"),
         r_struct.alias("__r"),
-        F.lit(0).alias("__tb"),
         F.col("ts").alias("__ord"))
 
-    if direction == "backward":
-        order = [F.col("__ord").asc(), F.col("__side").asc(),
-                 F.col("__tb").asc()]
-    else:
-        order = [F.col("__ord").desc(), F.col("__side").asc(),
-                 F.col("__tb").asc()]
+    order = [F.col("__ord").asc() if direction == "backward"
+             else F.col("__ord").desc(), F.col("__side").asc()]
     w = (Window.partitionBy(*by_keys).orderBy(*order)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 

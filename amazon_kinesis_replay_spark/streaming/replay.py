@@ -14,7 +14,9 @@ This is the inherently-streaming part of the reference (SURVEY §7.3 M4):
 
 Two emission modes, one emission kernel (`_pace_and_send`: pacing,
 request batching, per-request stats) and one opt-in cross-batch reorder
-gate (`_process_gated`, its state durable in `reorder_state_path`):
+gate (`_process_gated`: the bounded window held on the driver, durable
+as one parquet file per batch in `reorder_state_path`, one top-k job
+plus the emit per batch):
 
 - ``driver``      — exact single-stream pacing, mirroring the reference's
                     sequential replay loop (its consumer thread IS single-
@@ -184,6 +186,48 @@ def _pace_and_send(pdfs, sink, cfg: ReplayConfig, first_ts, start: float,
     return n
 
 
+def _read_epoch(spark, epoch: str | None):
+    """The held rows of epoch directory `epoch` (none when None) as one
+    (payload, ts) pandas frame, ts naive UTC as Arrow `toPandas` gives
+    it. Reads every data file of the epoch (every name not starting
+    with `_` or `.`): `_write_epoch` leaves one, an epoch written by
+    Spark's parquet writer several part files beside `_SUCCESS` and
+    `.crc` files."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .. import fsutil
+    schema = pa.schema([("payload", pa.string()), ("ts", pa.timestamp("ns"))])
+    names = [] if epoch is None else sorted(
+        n for n in fsutil.listdir(spark, epoch)
+        if not n.startswith(("_", ".")))
+    tables = [pq.read_table(io.BytesIO(fsutil.read_bytes(
+                  spark, f"{epoch}/{n}")), columns=["payload", "ts"])
+              .cast(schema) for n in names]
+    return pa.concat_tables(tables or [schema.empty_table()]).to_pandas()
+
+
+def _write_epoch(spark, epoch: str, held) -> None:
+    """Write the (payload, ts) frame `held` as the one data file of
+    epoch directory `epoch`, replacing whatever an uncommitted build
+    left there. ts is stored as UTC-adjusted microseconds, the type
+    Spark's own writer gives a timestamp."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .. import fsutil
+    table = pa.Table.from_pandas(held, preserve_index=False).cast(pa.schema(
+        [("payload", pa.string()), ("ts", pa.timestamp("us", tz="UTC"))]))
+    buf = io.BytesIO()
+    pq.write_table(table, buf)
+    fsutil.delete(spark, epoch)
+    fsutil.write_bytes(spark, f"{epoch}/held.parquet", buf.getvalue())
+
+
 class LegacyReorderStateError(RuntimeError):
     """The reorder state dir was written in the old layout (a root
     `applied/` marker), which this gate does not read."""
@@ -200,10 +244,9 @@ class ReplayEngine:
     def __init__(self, cfg: ReplayConfig, sink, mode: str = "driver"):
         if mode not in ("driver", "partitioned"):
             raise ValueError(f"unknown replay mode {mode!r}")
-        # finalize() drains the held tail (at least reader_buffer_size
-        # rows) through _process_driver as ONE frame, which refuses any
-        # frame above driver_mode_max_rows: the replay would run to the
-        # end and then fail to drain
+        # finalize() paces the held tail (at least reader_buffer_size
+        # rows) as ONE frame, and driver_mode_max_rows bounds every
+        # frame driver mode paces
         if (mode == "driver" and cfg.reorder_across_batches
                 and cfg.reader_buffer_size >= cfg.driver_mode_max_rows):
             raise ValueError(
@@ -296,6 +339,10 @@ class ReplayEngine:
                 "collect()ed onto the driver. Use mode='partitioned' "
                 "(per-sender pacing, executor-side sinks) or raise "
                 "driver_mode_max_rows explicitly.")
+        self._send_sorted(pdf)
+
+    def _send_sorted(self, pdf):
+        """Pace one ts-sorted (payload, ts) pandas frame from the driver."""
         if pdf.empty or not self._ensure_anchor(lambda: pdf["ts"].min()):
             return
         n = _pace_and_send([pdf], self.sink, self.cfg, self._first_event_ts,
@@ -304,8 +351,8 @@ class ReplayEngine:
 
     # -- the durable cross-batch reorder gate (both modes) -------------------
 
-    #: Schema of the held state, given explicitly so reading an epoch
-    #: needs no schema-inference job.
+    #: Schema of the held rows handed back to Spark, given explicitly so
+    #: `createDataFrame` infers nothing.
     _HELD_SCHEMA = "payload string, ts timestamp"
 
     def _state_root(self, spark) -> str:
@@ -326,7 +373,7 @@ class ReplayEngine:
         """The reference's bounded priority queue
         (JsonEventBufferedReader.java:39, RePlayer.java:26) at
         micro-batch granularity, for both modes: hold back the ts-LARGEST
-        `reader_buffer_size` rows of (held ∪ batch) as durable parquet
+        `reader_buffer_size` rows of (held ∪ batch) as a durable epoch
         and hand only the older prefix to the mode's emitter. A row is
         emitted only once at least `reader_buffer_size` later-or-equal
         rows exist — the poll-when-full rule — so disorder within the
@@ -336,6 +383,14 @@ class ReplayEngine:
         arrival, schedules their emission. Call `finalize()` after the
         stream terminates to drain the tail.
 
+        - the window lives on the driver, as the reference's queue lives
+          in its one process: at most `reader_buffer_size` held rows plus
+          the rows tied at the cutoff, read from and written to the epoch
+          file with pyarrow through the Hadoop FS API. A steady batch is
+          two Spark jobs: the `bound + 1` newest batch rows (Arrow
+          `toPandas`), then the emit. Only a batch whose (bound+1)-th
+          newest row sits AT the cutoff runs a third, which fetches the
+          batch rows at the cutoff.
         - the split is by ts VALUE (cutoff = the bound-th largest ts),
           not row count: a row-count split of a distributed frame is
           nondeterministic under ties, a ts cutoff is not. Ties at the
@@ -345,7 +400,7 @@ class ReplayEngine:
         - state is one parquet epoch per batch, held/gen=<batch_id>, and
           an epoch is APPLIED iff it holds the generation commit marker
           (`fsutil.gen_commit`), written after both the emit and the
-          held write. A redelivered batch either skips entirely (its
+          epoch write. A redelivered batch either skips entirely (its
           epoch is committed: state and emit already done) or recomputes
           bit-identically from the previous committed epoch and
           overwrites its own uncommitted one. The marker and the state
@@ -355,38 +410,47 @@ class ReplayEngine:
           between emit and commit re-emits), the same contract as
           send_with_retry.
         """
+        import numpy as np
+        import pandas as pd
+
         from .. import fsutil
         spark = self._spark = batch_df.sparkSession
         held_root = self._state_root(spark) + "/held"
         applied, prev = fsutil.gen_latest(spark, held_root)
         if applied >= batch_id:
             return                      # redelivery of an applied batch
-        combined = batch_df.select("payload", "ts") \
+        held = _read_epoch(spark, prev)
+        batch = batch_df.select("payload", "ts") \
             .filter(F.col("ts").isNotNull())
-        if prev is not None:
-            combined = (spark.read.schema(self._HELD_SCHEMA).parquet(prev)
-                        .unionByName(combined))
-        # three downstream actions (cutoff, emit, state write) over one
-        # frame: materialize once; ContextCleaner reclaims the blocks
-        # when the frame goes out of scope (localCheckpoint, not
-        # persist: each branch would otherwise embed the full lineage)
-        combined = combined.localCheckpoint()
         bound = max(1, self.cfg.reader_buffer_size)
-        head = (combined.select("ts").orderBy(F.col("ts").desc())
-                .limit(bound)
-                .agg(F.min("ts").alias("cutoff"),
-                     F.count("*").alias("k")).toPandas().iloc[0])
-        if int(head["k"] or 0) < bound:
-            emit, held = None, combined   # window not yet full: hold all
+        # every batch row the window can keep, and one more that tells
+        # whether rows at the cutoff were left out
+        top = (batch.orderBy(F.col("ts").desc()).limit(bound + 1)
+               .toPandas())
+        ts = np.concatenate([held["ts"].to_numpy(), top["ts"].to_numpy()])
+        emit = None
+        if len(ts) < bound:
+            held = pd.concat([held, top])   # window not yet full: hold all
         else:
+            cutoff = np.partition(ts, len(ts) - bound)[len(ts) - bound]
             # the literal from epoch micros: F.lit of the naive-UTC
             # pandas Timestamp would go through time.mktime and shift by
             # the host's UTC offset
-            cutoff = F.timestamp_micros(F.lit(head["cutoff"].value // 1000))
-            emit = combined.filter(F.col("ts") < cutoff)
-            held = combined.filter(F.col("ts") >= cutoff)
+            lit = F.timestamp_micros(F.lit(pd.Timestamp(cutoff).value
+                                           // 1000))
+            kept = top[top["ts"] >= cutoff]
+            if len(top) > bound and top["ts"].min() == cutoff:
+                kept = pd.concat([top[top["ts"] > cutoff],
+                                  batch.filter(F.col("ts") == lit)
+                                  .toPandas()])
+            emit = batch.filter(F.col("ts") < lit)
+            older = held[held["ts"] < cutoff]
+            if len(older):
+                emit = emit.unionByName(
+                    spark.createDataFrame(older, self._HELD_SCHEMA))
+            held = pd.concat([held[held["ts"] >= cutoff], kept])
         out = fsutil.gen_path(held_root, batch_id)
-        held.write.mode("overwrite").parquet(out)
+        _write_epoch(spark, out, held)
         if emit is not None:
             self._emit_frame(emit)
         fsutil.gen_commit(spark, out)
@@ -395,8 +459,9 @@ class ReplayEngine:
     def finalize(self):
         """Drain the reorder gate — the reference drains its priority
         queue when the S3 iterator is exhausted; a finite (availableNow)
-        stream calls this after awaitTermination. Emits the committed
-        held tail through the mode's emitter and then deletes the state
+        stream calls this after awaitTermination. Reads the committed
+        held tail onto the driver, paces it from there (driver mode) or
+        hands it to the partitioned emitter, and then deletes the state
         directory (the stream is over); a crash between the drain emit
         and the delete redelivers on the next finalize — at-least-once,
         like every sink path here. It reads the state with the session
@@ -418,9 +483,13 @@ class ReplayEngine:
                 "no batch has run on this engine and no session is active")
         root = self._state_root(spark)
         _, tail = fsutil.gen_latest(spark, root + "/held")
-        if tail is not None:
-            self._emit_frame(
-                spark.read.schema(self._HELD_SCHEMA).parquet(tail))
+        held = _read_epoch(spark, tail)
+        if self.mode == "driver":
+            # the tail is on the driver already: pace it from there
+            self._send_sorted(held.sort_values("ts", kind="stable"))
+        elif len(held):
+            self._process_partitioned(
+                spark.createDataFrame(held, self._HELD_SCHEMA))
         fsutil.delete(spark, root)        # stream over: clear the state
 
     # -- partitioned mode: per-sender pacing at scale ------------------------

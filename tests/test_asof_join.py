@@ -164,9 +164,12 @@ def test_asof_join_multi_key_by(spark):
 
 def test_asof_join_rejects_colliding_left_columns(spark):
     """Name-collision contract (r8 advice): a left column named like an
-    internal (__side/__ord/__tb/__r) or the output (asof_ts) must fail
-    loudly, not be shadowed or made ambiguous."""
+    internal (__side/__ord/__r) or the output (asof_ts) must fail
+    loudly, not be shadowed or made ambiguous. `__tb` is no longer an
+    internal name, so a left column of that name passes through."""
     left, right = _frames(spark)
-    for bad in ("__side", "__ord", "__tb", "__r", "asof_ts"):
+    for bad in ("__side", "__ord", "__r", "asof_ts"):
         with pytest.raises(ValueError, match="collide"):
             iv.asof_join(left.withColumn(bad, F.lit(1)), right, by="key")
+    kept = iv.asof_join(left.withColumn("__tb", F.lit(7)), right, by="key")
+    assert {r["__tb"] for r in kept.collect()} == {7}

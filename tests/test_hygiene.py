@@ -28,7 +28,7 @@ COLLECT_ALLOWED = {
     "operators/text.py",         # vocab-capped BPE merge aggregate
 }
 TOPANDAS_ALLOWED = {
-    "streaming/replay.py",       # 1-row anchor / per-partition stat frames
+    "streaming/replay.py",       # anchor, stat frames, gate top-k rows
 }
 
 

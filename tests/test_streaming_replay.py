@@ -2,6 +2,7 @@
 Structured Streaming source -> paced foreachBatch sink, with behavioral
 assertions on ordering, batching, pacing, and statistics."""
 
+import collections
 import json
 from pathlib import Path
 
@@ -441,11 +442,11 @@ def test_reorder_flag_needs_state_path():
 
 
 def test_driver_reorder_tail_must_fit_the_driver_bound():
-    """finalize() drains the held tail (at least reader_buffer_size rows)
-    through the driver-mode emitter as one frame, which refuses frames
-    above driver_mode_max_rows: such an engine would replay the whole
-    stream and then fail to drain, so the constructor refuses it and
-    names both fields. Partitioned mode never collects the tail."""
+    """finalize() paces the held tail (at least reader_buffer_size rows)
+    from the driver as one frame, and driver_mode_max_rows bounds every
+    frame driver mode paces, so the constructor refuses a window that
+    does not fit and names both fields. Partitioned mode paces the tail
+    on the executors."""
     def cfg(buffer_rows):
         return ReplayConfig(speedup_factor=1e12, reorder_across_batches=True,
                             reorder_state_path="/tmp/x",
@@ -714,14 +715,14 @@ def test_reorder_gate_crash_before_commit(spark, tmp_path, monkeypatch,
 
 @pytest.mark.parametrize("mode", ["driver", "partitioned"])
 def test_reorder_gate_job_budget(spark, tmp_path, mode):
-    """The gate's bookkeeping runs no Spark jobs: the commit is one
-    marker-file create, held state is read with an explicit schema, and
-    the per-sender stats are summed on the driver. With AQE off, a
-    steady gated batch is four jobs (localCheckpoint of held ∪ batch,
-    the cutoff, the held write, the emit) and finalize() one (the
-    emit of the held tail), in either mode: driver mode's emit is its
-    one bounded, ts-sorted collect. The applied-marker gate ran 8 and
-    4."""
+    """The gate's bookkeeping runs no Spark jobs: the held window is
+    read, merged and written on the driver, the commit is one
+    marker-file create, and the per-sender stats are summed on the
+    driver. With AQE off, a steady gated batch is two jobs in either
+    mode (the `bound + 1` newest batch rows, the emit; driver mode's
+    emit is its one bounded, ts-sorted collect). finalize() is one job
+    in partitioned mode (the emit of the held tail) and none in driver
+    mode, which paces the tail it read onto the driver."""
     from amazon_kinesis_replay_spark.streaming.sinks import FileSink
     out = str(tmp_path / "sink")
     engine = _gate_engine(tmp_path, lambda: FileSink(out), mode)
@@ -744,9 +745,104 @@ def test_reorder_gate_job_budget(spark, tmp_path, mode):
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert steady == [4, 4], f"jobs per steady gated batch: {steady}"
-    assert fin == 1, f"jobs in finalize(): {fin}"
+    assert steady == [2, 2], f"jobs per steady gated batch: {steady}"
+    assert fin == (0 if mode == "driver" else 1), \
+        f"jobs in finalize(): {fin}"
     assert engine.stats.sink.records_sent == 300
+
+
+@pytest.mark.parametrize("mode", ["driver", "partitioned"])
+def test_reorder_gate_ties_beyond_the_top_k(spark, tmp_path, mode):
+    """A batch with more than `bound + 1` rows at the cutoff ts: the
+    gate's top-k job brings only `bound + 1` of them to the driver, so
+    it must fetch the rest in one more job, or the window loses the
+    ties it never saw. Pinned per batch against the twin."""
+    batches = [list(range(0, 100)),
+               [150] * 200 + list(range(100, 140)),
+               list(range(200, 260))]
+    want, want_tail = _gate_twin(batches)
+    assert want[1] == list(range(140)) and len(want_tail) == 260, \
+        "fixture sanity: the cutoff of batch 1 is 150, tied 200 times"
+    sink, read = _request_journal(str(tmp_path / "journal"))
+    engine = _gate_engine(tmp_path, sink, mode)
+    seen: list = []
+    for i, minutes in enumerate(batches):
+        engine.process_batch(_minute_frame(spark, minutes), i)
+        now = _emitted_minutes(read())
+        diff = collections.Counter(now) - collections.Counter(seen)
+        assert sorted(diff.elements()) == want[i], i
+        seen = now
+    engine.finalize()
+    tail = collections.Counter(_emitted_minutes(read())) \
+        - collections.Counter(seen)
+    assert sorted(tail.elements()) == want_tail
+
+
+@pytest.mark.parametrize("mode", ["driver", "partitioned"])
+def test_reorder_gate_epoch_round_trips_rows_unchanged(spark, tmp_path,
+                                                        mode):
+    """Rows held across a batch go through the epoch file and back into
+    Spark, and must come out as they went in: pre-epoch and
+    microsecond timestamps, unicode, quote, backslash, newline and
+    empty payloads. Batch 0 is all held; batch 1 emits it from the
+    epoch; the tail is batch 1's rows."""
+    import pandas as pd
+
+    micros = [-631_152_000_000_000, -1_000_000, -1, 1,
+              1_600_000_000_123_456, 1_600_000_001_000_000]
+    payloads = ["ü€😀", 'say "hi"', "back\\slash", "", "line\nbreak",
+                "{'k': 1}"]
+    late = [(f"late{i}", 2_000_000_000_000_000 + i) for i in range(8)]
+    batches = [list(zip(payloads, micros)), late]
+    want, want_tail = _gate_twin(
+        [[us for _, us in b] for b in batches], bound=8)
+    assert want == [[], micros] and want_tail == [us for _, us in late], \
+        "fixture sanity"
+    iso = {us: pd.Timestamp(us, unit="us").isoformat()
+           for b in batches for _, us in b}
+    sink, read = _request_journal(str(tmp_path / "journal"))
+    engine = ReplayEngine(
+        ReplayConfig(speedup_factor=1e12, sender_threads=2,
+                     reader_buffer_size=8, reorder_across_batches=True,
+                     anchor_ts="1950-01-01T00:00:00Z",
+                     reorder_state_path=str(tmp_path / "reorder-state")),
+        sink if mode == "partitioned" else sink(), mode=mode)
+    for i, rows in enumerate(batches):
+        engine.process_batch(
+            spark.createDataFrame(rows, "payload string, us long").select(
+                "payload", F.timestamp_micros("us").alias("ts")), i)
+    got = sorted(tuple(r) for req in read() for r in req)
+    assert got == sorted((p, iso[us]) for p, us in batches[0])
+    engine.finalize()
+    got = sorted(tuple(r) for req in read() for r in req)
+    assert got == sorted((p, iso[us]) for b in batches for p, us in b)
+
+
+@pytest.mark.parametrize("mode", ["driver", "partitioned"])
+def test_reorder_gate_drains_a_spark_written_epoch(spark, tmp_path, mode):
+    """An epoch committed by the gate that wrote its window with Spark's
+    parquet writer (several part files, `_SUCCESS` and `.crc` files)
+    still drains: every data file is read, the rest skipped."""
+    import os
+
+    from amazon_kinesis_replay_spark import fsutil
+
+    held = str(tmp_path / "reorder-state" / "held")
+    epoch = fsutil.gen_path(held, 0)
+    _minute_frame(spark, GATE_BATCHES[0]).repartition(3) \
+        .write.parquet(epoch)
+    names = os.listdir(epoch)
+    assert "_SUCCESS" in names and any(n.startswith(".") for n in names)
+    assert sum(n.startswith("part-") for n in names) > 1, names
+    fsutil.gen_commit(spark, epoch)
+    sink, read = _request_journal(str(tmp_path / "journal"))
+    engine = _gate_engine(tmp_path, sink, mode)
+    engine.process_batch(_minute_frame(spark, GATE_BATCHES[1]), 1)
+    want, want_tail = _gate_twin(GATE_BATCHES[:2])
+    assert _emitted_minutes(read()) == want[1]
+    engine.finalize()
+    assert _emitted_minutes(read()) == sorted(GATE_BATCHES[0]
+                                              + GATE_BATCHES[1])
 
 
 @pytest.mark.parametrize("mode", ["driver", "partitioned"])

@@ -6,8 +6,10 @@ engine stage composed in one run over the full sf0.1 events table:
   NDJSON shard directory (planted cross-batch disorder)
     -> streaming source with maxFilesPerTrigger backpressure
        (OP-SRC-* / OP-FLOW-BACKPRESSURE)
-    -> durable distributed reorder gate (OP-SORT-EVENTTIME,
-       reorder_state_path= parquet epochs, each with a commit marker)
+    -> durable reorder gate (OP-SORT-EVENTTIME): the bounded window
+       held on the driver, one top-k job per batch, and a one-file
+       parquet epoch per batch in reorder_state_path= that the driver
+       writes through the Hadoop FS API, each with a commit marker
     -> partitioned per-sender pacing (OP-RATE-PACE / OP-PAR-SENDERS)
     -> Kinesis-shaped sink: <=500-record requests, per-instance
        first-request failure exercising send_with_retry
