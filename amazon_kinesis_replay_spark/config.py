@@ -53,8 +53,9 @@ class ReplayConfig:
     #: reader_buffer_size rows) lives as one parquet file under
     #: held/gen=<batch_id>, which the DRIVER reads and writes through
     #: the Hadoop FS API: the driver holds the window, at most
-    #: reader_buffer_size rows plus the rows tied at the cutoff (and the
-    #: reader_buffer_size + 1 newest rows of the batch while it merges).
+    #: reader_buffer_size rows plus the rows tied at the cutoff (and,
+    #: while it merges, the reader_buffer_size + 1 newest batch rows in
+    #: partitioned mode, the whole batch in driver mode).
     #: An epoch is applied once its commit marker file exists (written
     #: last, like fsutil.gen_commit), so a redelivered micro-batch either
     #: skips or recomputes from the previous committed epoch and cannot
@@ -76,7 +77,8 @@ class ReplayConfig:
     #: Driver-mode replay collect()s each micro-batch for exact global-order
     #: pacing — correct only at small scale. Batches above this row count are
     #: refused with guidance to use partitioned mode (which never collects)
-    #: instead of OOMing the driver.
+    #: instead of OOMing the driver, and so is a reorder gate's held tail
+    #: (finalize() paces it from the driver as one frame).
     driver_mode_max_rows: int = 1_000_000
 
     def __post_init__(self):

@@ -15,8 +15,9 @@ This is the inherently-streaming part of the reference (SURVEY §7.3 M4):
 Two emission modes, one emission kernel (`_pace_and_send`: pacing,
 request batching, per-request stats) and one opt-in cross-batch reorder
 gate (`_process_gated`: the bounded window held on the driver, durable
-as one parquet file per batch in `reorder_state_path`, one top-k job
-plus the emit per batch):
+as one parquet file per batch in `reorder_state_path`; driver mode
+gates its one bounded collect of each batch on the driver, partitioned
+mode runs one top-k job plus the emit per batch):
 
 - ``driver``      — exact single-stream pacing, mirroring the reference's
                     sequential replay loop (its consumer thread IS single-
@@ -186,46 +187,60 @@ def _pace_and_send(pdfs, sink, cfg: ReplayConfig, first_ts, start: float,
     return n
 
 
+def _epoch_schema():
+    """The one Arrow schema of the gate's held rows: in the epoch file,
+    on the driver, and handed back to Spark. ts is UTC-adjusted
+    microseconds, the type Spark's parquet writer and `toArrow` give a
+    timestamp under the UTC session timezone."""
+    import pyarrow as pa
+    return pa.schema([("payload", pa.string()),
+                      ("ts", pa.timestamp("us", tz="UTC"))])
+
+
 def _read_epoch(spark, epoch: str | None):
     """The held rows of epoch directory `epoch` (none when None) as one
-    (payload, ts) pandas frame, ts naive UTC as Arrow `toPandas` gives
-    it. Reads every data file of the epoch (every name not starting
-    with `_` or `.`): `_write_epoch` leaves one, an epoch written by
-    Spark's parquet writer several part files beside `_SUCCESS` and
-    `.crc` files."""
+    Arrow table of `_epoch_schema()`. Reads every data file of the
+    epoch (every name not starting with `_` or `.`): `_write_epoch`
+    leaves one, an epoch written by Spark's parquet writer several part
+    files beside `_SUCCESS` and `.crc` files."""
     import io
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from .. import fsutil
-    schema = pa.schema([("payload", pa.string()), ("ts", pa.timestamp("ns"))])
+    schema = _epoch_schema()
     names = [] if epoch is None else sorted(
         n for n in fsutil.listdir(spark, epoch)
         if not n.startswith(("_", ".")))
-    tables = [pq.read_table(io.BytesIO(fsutil.read_bytes(
-                  spark, f"{epoch}/{n}")), columns=["payload", "ts"])
-              .cast(schema) for n in names]
-    return pa.concat_tables(tables or [schema.empty_table()]).to_pandas()
+    return pa.concat_tables(
+        [pq.read_table(io.BytesIO(fsutil.read_bytes(spark, f"{epoch}/{n}")),
+                       columns=schema.names).cast(schema) for n in names]
+        or [schema.empty_table()])
 
 
 def _write_epoch(spark, epoch: str, held) -> None:
-    """Write the (payload, ts) frame `held` as the one data file of
-    epoch directory `epoch`, replacing whatever an uncommitted build
-    left there. ts is stored as UTC-adjusted microseconds, the type
-    Spark's own writer gives a timestamp."""
+    """Write the Arrow table `held` as the one data file of epoch
+    directory `epoch`, replacing whatever an uncommitted build left
+    there."""
     import io
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from .. import fsutil
-    table = pa.Table.from_pandas(held, preserve_index=False).cast(pa.schema(
-        [("payload", pa.string()), ("ts", pa.timestamp("us", tz="UTC"))]))
     buf = io.BytesIO()
-    pq.write_table(table, buf)
+    pq.write_table(held, buf)
     fsutil.delete(spark, epoch)
     fsutil.write_bytes(spark, f"{epoch}/held.parquet", buf.getvalue())
+
+
+def _frame(table):
+    """A (payload, ts) Arrow table as the pandas frame the emission
+    kernel paces: ts naive UTC nanoseconds, as Arrow `toPandas` gives it
+    under the UTC session timezone."""
+    import pyarrow as pa
+    return table.cast(pa.schema(
+        [("payload", pa.string()), ("ts", pa.timestamp("ns"))])).to_pandas()
 
 
 class LegacyReorderStateError(RuntimeError):
@@ -315,34 +330,42 @@ class ReplayEngine:
     # -- driver mode: exact global-order pacing ------------------------------
 
     def _process_driver(self, batch_df: DataFrame):
-        # ONE job per micro-batch: the size guard is folded into the
-        # collect as LIMIT bound+1 — at most bound+1 (sorted) rows ever
-        # cross to the driver, and an oversized batch is detected from the
-        # collected length instead of a separate probe job (the r3 probe
-        # was a second scan of the source per batch).
-        # Arrow transfer: toPandas moves the batch as columnar Arrow
-        # batches instead of one pickled Row object per record (the
-        # session enables spark.sql.execution.arrow.pyspark.enabled).
-        # Timestamps arrive in the SESSION timezone (UTC per
-        # ensure_engine_conf), so emitted ts isoformat strings are
-        # deterministic UTC regardless of host TZ — the pre-Arrow collect()
-        # path rendered them in host-local time.
+        self._send_sorted(_frame(self._collect_sorted(batch_df)))
+
+    def _collect_sorted(self, df: DataFrame):
+        """The (payload, ts) rows of `df` on the driver, sorted by ts, as
+        one Arrow table: ONE job, with the size guard folded into the
+        collect as LIMIT bound+1 — at most bound+1 (sorted) rows ever
+        cross to the driver, and an oversized frame is detected from the
+        collected length instead of a separate probe job (the r3 probe
+        was a second scan of the source per batch). Timestamps arrive in
+        the SESSION timezone (UTC per ensure_engine_conf), so emitted ts
+        strings are deterministic UTC regardless of host TZ — the
+        pre-Arrow collect() path rendered them in host-local time."""
         bound = self.cfg.driver_mode_max_rows
-        pdf = (batch_df.select("payload", "ts")
-               .orderBy(F.col("ts").asc())           # OP-SORT-EVENTTIME
-               .limit(bound + 1)
-               .toPandas())
-        if len(pdf) > bound:
+        table = (df.select("payload", "ts")
+                 .orderBy(F.col("ts").asc())          # OP-SORT-EVENTTIME
+                 .limit(bound + 1)
+                 .toArrow())
+        self._refuse_over_driver_bound(table.num_rows)
+        return table
+
+    def _refuse_over_driver_bound(self, n: int):
+        """Driver mode paces every frame from the driver: refuse one of
+        more than `driver_mode_max_rows` rows, a collected micro-batch
+        and the gate's drained tail alike."""
+        bound = self.cfg.driver_mode_max_rows
+        if n > bound:
             raise ValueError(
-                f"driver-mode replay refuses a micro-batch exceeding "
-                f"driver_mode_max_rows={bound}: the batch would be "
-                "collect()ed onto the driver. Use mode='partitioned' "
-                "(per-sender pacing, executor-side sinks) or raise "
-                "driver_mode_max_rows explicitly.")
-        self._send_sorted(pdf)
+                f"driver-mode replay refuses a micro-batch or held tail "
+                f"exceeding driver_mode_max_rows={bound}: it would be "
+                "paced from the driver as one frame. Use "
+                "mode='partitioned' (per-sender pacing, executor-side "
+                "sinks) or raise driver_mode_max_rows explicitly.")
 
     def _send_sorted(self, pdf):
         """Pace one ts-sorted (payload, ts) pandas frame from the driver."""
+        self._refuse_over_driver_bound(len(pdf))
         if pdf.empty or not self._ensure_anchor(lambda: pdf["ts"].min()):
             return
         n = _pace_and_send([pdf], self.sink, self.cfg, self._first_event_ts,
@@ -350,10 +373,6 @@ class ReplayEngine:
         self.stats.tick(n, time.time(), self.cfg.statistics_frequency_ms)
 
     # -- the durable cross-batch reorder gate (both modes) -------------------
-
-    #: Schema of the held rows handed back to Spark, given explicitly so
-    #: `createDataFrame` infers nothing.
-    _HELD_SCHEMA = "payload string, ts timestamp"
 
     def _state_root(self, spark) -> str:
         """`reorder_state_path`; the held epochs live under its `held/`.
@@ -385,12 +404,17 @@ class ReplayEngine:
 
         - the window lives on the driver, as the reference's queue lives
           in its one process: at most `reader_buffer_size` held rows plus
-          the rows tied at the cutoff, read from and written to the epoch
-          file with pyarrow through the Hadoop FS API. A steady batch is
-          two Spark jobs: the `bound + 1` newest batch rows (Arrow
-          `toPandas`), then the emit. Only a batch whose (bound+1)-th
-          newest row sits AT the cutoff runs a third, which fetches the
-          batch rows at the cutoff.
+          the rows tied at the cutoff, one Arrow table of
+          `_epoch_schema()`, read from and written to the epoch file with
+          pyarrow through the Hadoop FS API. Driver mode paces every
+          batch row from the driver anyway, so a steady batch is its one
+          bounded collect, gated and paced there. In partitioned mode a
+          steady batch is two Spark jobs, each a scan of the batch's
+          source: the `bound + 1` newest batch rows (Arrow), then the
+          emit of `batch.filter(ts < cutoff)` and the released held
+          rows. Only a batch whose (bound+1)-th newest row sits AT the
+          cutoff runs a third, which fetches the batch rows at the
+          cutoff.
         - the split is by ts VALUE (cutoff = the bound-th largest ts),
           not row count: a row-count split of a distributed frame is
           nondeterministic under ties, a ts cutoff is not. Ties at the
@@ -410,9 +434,6 @@ class ReplayEngine:
           between emit and commit re-emits), the same contract as
           send_with_retry.
         """
-        import numpy as np
-        import pandas as pd
-
         from .. import fsutil
         spark = self._spark = batch_df.sparkSession
         held_root = self._state_root(spark) + "/held"
@@ -422,52 +443,76 @@ class ReplayEngine:
         held = _read_epoch(spark, prev)
         batch = batch_df.select("payload", "ts") \
             .filter(F.col("ts").isNotNull())
-        bound = max(1, self.cfg.reader_buffer_size)
-        # every batch row the window can keep, and one more that tells
-        # whether rows at the cutoff were left out
-        top = (batch.orderBy(F.col("ts").desc()).limit(bound + 1)
-               .toPandas())
-        ts = np.concatenate([held["ts"].to_numpy(), top["ts"].to_numpy()])
-        emit = None
-        if len(ts) < bound:
-            held = pd.concat([held, top])   # window not yet full: hold all
-        else:
-            cutoff = np.partition(ts, len(ts) - bound)[len(ts) - bound]
-            # the literal from epoch micros: F.lit of the naive-UTC
-            # pandas Timestamp would go through time.mktime and shift by
-            # the host's UTC offset
-            lit = F.timestamp_micros(F.lit(pd.Timestamp(cutoff).value
-                                           // 1000))
-            kept = top[top["ts"] >= cutoff]
-            if len(top) > bound and top["ts"].min() == cutoff:
-                kept = pd.concat([top[top["ts"] > cutoff],
-                                  batch.filter(F.col("ts") == lit)
-                                  .toPandas()])
-            emit = batch.filter(F.col("ts") < lit)
-            older = held[held["ts"] < cutoff]
-            if len(older):
-                emit = emit.unionByName(
-                    spark.createDataFrame(older, self._HELD_SCHEMA))
-            held = pd.concat([held[held["ts"] >= cutoff], kept])
         out = fsutil.gen_path(held_root, batch_id)
-        _write_epoch(spark, out, held)
-        if emit is not None:
-            self._emit_frame(emit)
+        if self.mode == "driver":
+            # driver mode paces every batch row from the driver anyway:
+            # its one bounded collect brings the whole batch
+            self._gate(spark, out, held, self._collect_sorted(batch), None)
+        else:
+            # every batch row the window can keep, and one more that tells
+            # whether rows at the cutoff were left out
+            self._gate(spark, out, held,
+                       batch.orderBy(F.col("ts").desc())
+                       .limit(max(1, self.cfg.reader_buffer_size) + 1)
+                       .toArrow(), batch)
         fsutil.gen_commit(spark, out)
         fsutil.gen_gc(spark, held_root)
+
+    def _gate(self, spark, out: str, held, rows, batch):
+        """Cut held ∪ `rows` at the window's cutoff on the driver, write
+        what stays held as epoch `out`, and emit the rest. `rows` is the
+        whole batch (driver mode, `batch` None) or its `bound + 1`
+        newest rows (partitioned mode, `batch` the batch the emit
+        reads)."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        schema = _epoch_schema()
+        rows = rows.cast(schema)
+        bound = max(1, self.cfg.reader_buffer_size)
+        ts = np.concatenate([held["ts"].to_numpy(), rows["ts"].to_numpy()])
+        if len(ts) < bound:             # window not yet full: hold all
+            _write_epoch(spark, out, pa.concat_tables([held, rows]))
+            return
+        cutoff = int(np.partition(ts, len(ts) - bound)[len(ts) - bound]
+                     .astype("int64"))
+        at = pa.scalar(cutoff, schema.field("ts").type)
+        # the literal from epoch micros: F.lit of a Python datetime would
+        # go through time.mktime and shift by the host's UTC offset
+        lit = F.timestamp_micros(F.lit(cutoff))
+        kept = rows.filter(pc.greater_equal(rows["ts"], at))
+        if batch is not None and rows.num_rows > bound \
+                and pc.min(rows["ts"]) == at:
+            kept = pa.concat_tables([
+                rows.filter(pc.greater(rows["ts"], at)),
+                batch.filter(F.col("ts") == lit).toArrow().cast(schema)])
+        older = held.filter(pc.less(held["ts"], at))
+        _write_epoch(spark, out, pa.concat_tables(
+            [held.filter(pc.greater_equal(held["ts"], at)), kept]))
+        if batch is None:
+            below = rows.filter(pc.less(rows["ts"], at))
+            self._send_sorted(_frame(
+                pa.concat_tables([older, below]).sort_by("ts")))
+            return
+        emit = batch.filter(F.col("ts") < lit)
+        if older.num_rows:
+            emit = emit.unionByName(spark.createDataFrame(older))
+        self._process_partitioned(emit)
 
     def finalize(self):
         """Drain the reorder gate — the reference drains its priority
         queue when the S3 iterator is exhausted; a finite (availableNow)
         stream calls this after awaitTermination. Reads the committed
-        held tail onto the driver, paces it from there (driver mode) or
-        hands it to the partitioned emitter, and then deletes the state
-        directory (the stream is over); a crash between the drain emit
-        and the delete redelivers on the next finalize — at-least-once,
-        like every sink path here. It reads the state with the session
-        of the last `process_batch`, else the active session (a restart
-        with no new input runs no batch), and raises when there is
-        neither. A no-op without `reorder_across_batches`."""
+        held tail onto the driver, paces it from there (driver mode,
+        which refuses a tail over `driver_mode_max_rows` like any frame
+        it paces) or hands it to the partitioned emitter, and then
+        deletes the state directory (the stream is over); a crash
+        between the drain emit and the delete redelivers on the next
+        finalize — at-least-once, like every sink path here. It reads
+        the state with the session of the last `process_batch`, else the
+        active session (a restart with no new input runs no batch), and
+        raises when there is neither. A no-op without
+        `reorder_across_batches`."""
         if not self.cfg.reorder_across_batches:
             return
         from pyspark.sql import SparkSession
@@ -486,10 +531,9 @@ class ReplayEngine:
         held = _read_epoch(spark, tail)
         if self.mode == "driver":
             # the tail is on the driver already: pace it from there
-            self._send_sorted(held.sort_values("ts", kind="stable"))
-        elif len(held):
-            self._process_partitioned(
-                spark.createDataFrame(held, self._HELD_SCHEMA))
+            self._send_sorted(_frame(held.sort_by("ts")))
+        elif held.num_rows:
+            self._process_partitioned(spark.createDataFrame(held))
         fsutil.delete(spark, root)        # stream over: clear the state
 
     # -- partitioned mode: per-sender pacing at scale ------------------------

@@ -718,11 +718,12 @@ def test_reorder_gate_job_budget(spark, tmp_path, mode):
     """The gate's bookkeeping runs no Spark jobs: the held window is
     read, merged and written on the driver, the commit is one
     marker-file create, and the per-sender stats are summed on the
-    driver. With AQE off, a steady gated batch is two jobs in either
-    mode (the `bound + 1` newest batch rows, the emit; driver mode's
-    emit is its one bounded, ts-sorted collect). finalize() is one job
-    in partitioned mode (the emit of the held tail) and none in driver
-    mode, which paces the tail it read onto the driver."""
+    driver. With AQE off, a steady gated batch is one job in driver
+    mode (its bounded, ts-sorted collect of the whole batch, gated and
+    paced on the driver) and two in partitioned mode (the `bound + 1`
+    newest batch rows, the emit). finalize() is one job in partitioned
+    mode (the emit of the held tail) and none in driver mode, which
+    paces the tail it read onto the driver."""
     from amazon_kinesis_replay_spark.streaming.sinks import FileSink
     out = str(tmp_path / "sink")
     engine = _gate_engine(tmp_path, lambda: FileSink(out), mode)
@@ -745,7 +746,8 @@ def test_reorder_gate_job_budget(spark, tmp_path, mode):
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert steady == [2, 2], f"jobs per steady gated batch: {steady}"
+    want = [1, 1] if mode == "driver" else [2, 2]
+    assert steady == want, f"jobs per steady gated batch: {steady}"
     assert fin == (0 if mode == "driver" else 1), \
         f"jobs in finalize(): {fin}"
     assert engine.stats.sink.records_sent == 300
@@ -753,10 +755,11 @@ def test_reorder_gate_job_budget(spark, tmp_path, mode):
 
 @pytest.mark.parametrize("mode", ["driver", "partitioned"])
 def test_reorder_gate_ties_beyond_the_top_k(spark, tmp_path, mode):
-    """A batch with more than `bound + 1` rows at the cutoff ts: the
-    gate's top-k job brings only `bound + 1` of them to the driver, so
-    it must fetch the rest in one more job, or the window loses the
-    ties it never saw. Pinned per batch against the twin."""
+    """A batch with more than `bound + 1` rows at the cutoff ts: in
+    partitioned mode the gate's top-k job brings only `bound + 1` of
+    them to the driver, so it must fetch the rest in one more job, or
+    the window loses the ties it never saw; driver mode collects the
+    whole batch. Pinned per batch against the twin in both modes."""
     batches = [list(range(0, 100)),
                [150] * 200 + list(range(100, 140)),
                list(range(200, 260))]
@@ -776,6 +779,25 @@ def test_reorder_gate_ties_beyond_the_top_k(spark, tmp_path, mode):
     tail = collections.Counter(_emitted_minutes(read())) \
         - collections.Counter(seen)
     assert sorted(tail.elements()) == want_tail
+
+
+def test_driver_reorder_refuses_a_tied_tail_over_the_driver_bound(
+        spark, tmp_path):
+    """Rows tied at the cutoff all stay held, so the tail can outgrow
+    `reader_buffer_size`; driver mode paces the tail from the driver as
+    one frame, and finalize() refuses it above driver_mode_max_rows
+    like any other driver-mode frame, sending nothing."""
+    sink = InMemorySink()
+    engine = ReplayEngine(
+        ReplayConfig(speedup_factor=1e12, reader_buffer_size=50,
+                     driver_mode_max_rows=100, reorder_across_batches=True,
+                     reorder_state_path=str(tmp_path / "reorder-state")),
+        sink, mode="driver")
+    for i in range(2):
+        engine.process_batch(_minute_frame(spark, [77] * 60), i)
+    with pytest.raises(ValueError, match="driver_mode_max_rows=100"):
+        engine.finalize()
+    assert engine.stats.sink.records_sent == 0
 
 
 @pytest.mark.parametrize("mode", ["driver", "partitioned"])
