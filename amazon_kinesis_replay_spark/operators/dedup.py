@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .scanwidth import widen_if_narrow
 from .text import tokens_expr
 
@@ -91,20 +92,14 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     vanishing sliver of extra verification work even at 100 TB. Zero
     extra shuffles: the hash is computed in place.
     """
-    # Shingling (the CPU-dominant step) runs ONCE into a per-doc array
-    # cache — one row per document, far smaller than the exploded rows —
-    # and every consumer (frequency counts, prefix ranking, verification)
-    # derives from it: the exploded form is a cheap explode of cached
-    # arrays, and verification intersects the cached arrays directly.
-    # MEMORY_AND_DISK semantics: spills rather than OOMs when the corpus
-    # is large; at 100 TB an explicit materialization (bucketed write)
-    # replaces this.
-    # CACHE LIFETIME (documented leak): the returned DataFrame's plan
-    # depends on these persisted branches, so they cannot be unpersisted
-    # here — the caller consumes the result lazily. Entries stay in the
-    # session's CacheManager until spark.catalog.clearCache() or session
-    # end; storage pressure is bounded by MEMORY_AND_DISK eviction.
-    arrays = shingle_arrays(df, id_col, text_col).persist()
+    # Shingling (the CPU-dominant step) runs ONCE into a materialized
+    # per-doc array table — one row per document, far smaller than the
+    # exploded rows — and every consumer (frequency counts, prefix
+    # ranking, verification) derives from it: the exploded form is a
+    # cheap explode of the arrays, and verification intersects them
+    # directly. At 100 TB an explicit bucketed write replaces this.
+    arrays = materialize(shingle_arrays(df, id_col, text_col),
+                         "ngram_jaccard_pairs: shingle arrays")
     sh = arrays.select("id", F.explode("shs").alias("shingle"))
     sizes = arrays.select("id", F.size("shs").alias("n_shingles"))
     # Candidate generation runs on xxhash64 LONG keys, not shingle
@@ -123,21 +118,21 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     ranked = shh.join(freq, "sid").selectExpr(
         "*", "row_number() OVER (PARTITION BY id "
         "ORDER BY freq ASC, shingle ASC) AS rank")
-    # Persisted: the self-join consumes the prefix index twice, and
+    # Materialized: the self-join consumes the prefix index twice, and
     # exchange reuse across differently-pruned branches is not
-    # guaranteed (see replay_ops.with_global_index) — without the
-    # persist the freq+rank pipeline can execute twice. The index is
-    # a small fraction of the corpus (rarest ~1/3 of each doc's
-    # shingles).
+    # guaranteed (see replay_ops.with_global_index) — without it the
+    # freq+rank pipeline can execute twice. The index is a small
+    # fraction of the corpus (rarest ~1/3 of each doc's shingles).
     # 1e-9 slack inside the ceil: float rounding of t*n (e.g.
     # 0.56*25 = 14.000000000000002) would otherwise round the ceil UP
     # and shrink the prefix by one — a silent recall loss. The slack
     # can only lengthen the prefix (more candidates, never fewer).
-    pref = (ranked.join(sizes, "id")
-            .filter(f"rank <= n_shingles - ceil({threshold!r}D "
-                    f"* n_shingles - 1e-09D) + 1")
-            .select("id", "sid", "rank", "n_shingles")
-            .persist())
+    pref = materialize(
+        ranked.join(sizes, "id")
+        .filter(f"rank <= n_shingles - ceil({threshold!r}D "
+                f"* n_shingles - 1e-09D) + 1")
+        .select("id", "sid", "rank", "n_shingles"),
+        "ngram_jaccard_pairs: prefix index")
     a, b = pref.alias("a"), pref.alias("b")
     # PPJoin's two further EXACT pruning conditions (both admit a
     # superset of true pairs; the 1e-9 slack makes float rounding err
@@ -168,7 +163,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 
 def _verify_jaccard(arrays: DataFrame, cand: DataFrame,
                     threshold: float) -> DataFrame:
-    """EXACT Jaccard of candidate pairs against the cached per-doc
+    """EXACT Jaccard of candidate pairs against the materialized per-doc
     (id, shs) shingle-array table: join candidates to both sides' arrays
     and count the overlap with a codegen'd array_intersect — no per-pair
     row explosion.
@@ -203,8 +198,8 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str,
     """(id, shs) — each document's distinct shingle set as ONE array row.
     The canonical materialization point: shingle construction (the
     CPU-dominant step) happens exactly once per document here; callers
-    persist this and derive both the exploded row form (cheap explode of
-    cached arrays) and array-level verification from it. (Building the
+    materialize this and derive both the exploded row form (cheap explode
+    of the arrays) and array-level verification from it. (Building the
     shingle array inside downstream expressions instead lets Catalyst's
     CollapseProject re-inline the expensive construction into every
     consumer — 60x slower measured on the MinHash hash family.)
@@ -226,7 +221,7 @@ def shingle_arrays(df: DataFrame, id_col: str, text_col: str,
     # `extra`: additional named columns computed in the SAME widened
     # projection (e.g. a token count sharing the tokenize with the shingle
     # build via whole-stage subexpression elimination) — composed pipelines
-    # persist the result once and feed every leg from it.
+    # materialize the result once and feed every leg from it.
     return df.select(
         F.col(id_col).alias("id"),
         F.expr(word_shingles_expr(text_col, k)).alias("shs"),
@@ -322,19 +317,17 @@ def _lsh_pairs_from_signature(sig: DataFrame, num_hashes: int,
     """Banded self-equi-join over a precomputed signature (see
     minhash_lsh_pairs for the banding discussion).
 
-    The band-entry table is PERSISTED: it feeds both sides of the
+    The band-entry table is MATERIALIZED: it feeds both sides of the
     self-join, and exchange reuse does not dedupe the two subtrees (same
-    failure mode as the ngram prefix index — see the `pref` persist in
-    ngram_jaccard_pairs), so without the persist the whole signature
+    failure mode as the ngram prefix index — see `pref` in
+    ngram_jaccard_pairs), so without it the whole signature
     aggregation (explode x num_hashes seeded hashes + groupBy) executed
     once PER JOIN SIDE (r13 profile: two identical ~3 s-CPU map stages
     with byte-identical shuffle writes; interleaved A/B at sf0.1 bench
-    conditions: 4.06 -> 1.63 s whole-query on a like-loaded box). Cache
-    lifetime follows the ngram_jaccard_pairs note: bounded
-    MEMORY_AND_DISK entries, bands x corpus-id rows — a fraction of the
-    shingle cache that already rides the same queries."""
-    band_entries = _band_entries_from_signature(sig, num_hashes,
-                                                bands).persist()
+    conditions: 4.06 -> 1.63 s whole-query on a like-loaded box)."""
+    band_entries = materialize(
+        _band_entries_from_signature(sig, num_hashes, bands),
+        "lsh_pairs: band entries")
     a, b = band_entries.alias("a"), band_entries.alias("b")
     return (
         a.join(b, F.expr("a.band = b.band AND a.bucket = b.bucket "
@@ -369,12 +362,13 @@ def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
     (estimate from signatures is also available; exact verification keeps
     the result deterministic).
 
-    Verification intersects the PERSISTED per-doc shingle arrays (the
-    signature aggregation derives its exploded rows from the same cache,
+    Verification intersects the MATERIALIZED per-doc shingle arrays (the
+    signature aggregation derives its exploded rows from the same table,
     so shingling runs once for the whole query); see `_verify_jaccard`.
 
     Returns confirmed near-dup pairs (id_a, id_b, jaccard)."""
-    arrays = shingle_arrays(df, id_col, text_col).persist()
+    arrays = materialize(shingle_arrays(df, id_col, text_col),
+                         "minhash_dedup: shingle arrays")
     sh = arrays.select("id", F.explode("shs").alias("shingle"))
     sig = _signature_from_rows(sh, 32)
     cand = _lsh_pairs_from_signature(sig, 32, 16)
@@ -401,22 +395,24 @@ def cross_split_contamination(df: DataFrame, id_col: str, text_col: str,
     residual: partitioning shuffles 8-byte longs, correctness never
     depends on collision freedom (mirrors the PPJoin key discussion in
     ngram_jaccard_pairs)."""
-    # Persisted for the same reason as ngram_jaccard_pairs (cache-lifetime
-    # note there) PLUS a plan-shape trap specific to this op: the explode
-    # feeding a JOIN makes InferFiltersFromGenerate push a size(shs)>0
-    # predicate — containing the WHOLE shingle construction — below the
-    # widening repartition, re-evaluating it single-threaded on the narrow
-    # scan (measured 3.5 s vs 0.4 s at sf0.1). The persist is a pushdown
+    # Materialized for the same reason as ngram_jaccard_pairs PLUS a
+    # plan-shape trap specific to this op: the explode feeding a JOIN
+    # makes InferFiltersFromGenerate push a size(shs)>0 predicate —
+    # containing the WHOLE shingle construction — below the widening
+    # repartition, re-evaluating it single-threaded on the narrow scan
+    # (measured 3.5 s vs 0.4 s at sf0.1). The checkpoint is a pushdown
     # barrier, and the two consumers (train grams / eval rows) share one
     # shingle pass instead of recomputing it per branch.
-    # r13 opt: the split label rides the persisted shingle cache
+    # r13 opt: the split label rides the materialized shingle table
     # (`extra=`) instead of being re-attached per branch — the train/eval
     # branches each re-ran the labels broadcast join over ALL exploded
     # shingle rows (interleaved A/B on the full doc_train_split query at
     # sf0.1 bench conditions: 1.57 -> 1.13 s; rows identical). One extra
-    # small string per cached row.
-    arrays = shingle_arrays(df, id_col, text_col,
-                            extra={split_col: F.col(split_col)}).persist()
+    # small string per row.
+    arrays = materialize(
+        shingle_arrays(df, id_col, text_col,
+                       extra={split_col: F.col(split_col)}),
+        "cross_split_contamination: shingle arrays")
     labels = arrays.select("id", split_col)
     sh = arrays.selectExpr(
         "id", "explode(shs) AS shingle", _bt(split_col)) \
@@ -483,12 +479,12 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     hash must agree exactly on >=1 of 4 chunks — pigeonhole), then verify
     with bit_count on the XOR. Avoids the full cross-join.
     """
-    # Persisted for the same both-sides-of-a-self-join reason as the
+    # Materialized for the same both-sides-of-a-self-join reason as the
     # band-entry table in _lsh_pairs_from_signature: without it the
     # token-explode + 64-bit-vote aggregation executes once per join
     # side (exchange reuse does not dedupe the subtrees).
     sim = simhash64(df, id_col, text_col)
-    chunks = sim.select(
+    chunks = materialize(sim.select(
         "id", "simhash",
         F.explode(F.array(*[
             F.struct(F.lit(c).alias("chunk_idx"),
@@ -496,7 +492,8 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                      .bitwiseAND(F.lit(0xFFFF)).alias("chunk"))
             for c in range(4)
         ])).alias("ch"),
-    ).select("id", "simhash", "ch.chunk_idx", "ch.chunk").persist()
+    ).select("id", "simhash", "ch.chunk_idx", "ch.chunk"),
+        "simhash_near_dups: chunks")
     a, b = chunks.alias("a"), chunks.alias("b")
     cand = (
         a.join(b, (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
@@ -656,9 +653,9 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame,
     `max_iters` bounds pathological chains. Convergence is observed with
     one count action per two chained rounds (zero label changes in the
     LAST round of a chain implies fixpoint regardless of earlier
-    rounds). Each action is a Spark job, but an unpersisted chained
-    round's plan embeds its predecessor twice (neighbor branch + carry
-    branch) — re-computing it. At the gate and bench SFs the per-job
+    rounds). Each chain costs a checkpoint job and a count job, and a
+    chained round's plan embeds its predecessor twice (neighbor branch +
+    carry branch) — re-computing it. At the gate and bench SFs the per-job
     launch constant dominates the tiny label shuffles, so chaining two
     rounds per check halves the job count; at 100 TB, where label
     shuffles dwarf job launches, checking every round is the
@@ -670,24 +667,15 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame,
     ids = nodes.select(F.col("doc_id").alias("id")).distinct()
     # Materialize the pair list FIRST: the symmetric-edges union consumes
     # `pairs` twice, so a pair plan whose expensive stages are NOT
-    # internally persisted (a raw join, a filtered scan) would run once
-    # per branch. (For ngram_jaccard_pairs specifically the internal
-    # shingle persists already dedupe the branches — this cache is the
-    # guard for every OTHER pair source, at the cost of one tiny table.)
-    e = (pairs.select(F.col("id_a").alias("src"),
-                      F.col("id_b").alias("dst")).persist())
-    e.count()
+    # internally materialized (a raw join, a filtered scan) would run once
+    # per branch. The union itself is two projections of the checkpoint.
+    e = materialize(pairs.select(F.col("id_a").alias("src"),
+                                 F.col("id_b").alias("dst")),
+                    "dedup_clusters: edges")
     edges = e.unionAll(e.select(F.col("dst").alias("src"),
                                 F.col("src").alias("dst")))
-    edges = edges.persist()
-    labels = ids.withColumn("lbl", F.col("id")).persist()
-    labels.count()
-    # Unpersist must target the frame persist() was CALLED on: from round
-    # 2 on `labels` is a Project over the cached `merged`, and unpersist
-    # on the Project is a no-op (not sameResult with the cache entry) —
-    # every round's cache would leak for the application lifetime (r6
-    # ADVICE). Track the cached handle separately.
-    cached = labels
+    labels = materialize(ids.withColumn("lbl", F.col("id")),
+                         "dedup_clusters: labels")
     converged = False
 
     def one_round(cur: DataFrame) -> DataFrame:
@@ -704,8 +692,8 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame,
     # max_iters bounds the component DIAMETER; observing convergence takes
     # one extra zero-change round, hence max_iters + 1 total rounds — a
     # component of diameter exactly max_iters must not raise. Rounds run
-    # in chains of two with one persist + one count action per chain
-    # (see docstring).
+    # in chains of two with one checkpoint + one count action per chain
+    # (see docstring); the checkpoint also cuts the iterative lineage.
     rounds_left = max_iters + 1
     while rounds_left > 0:
         chain = min(2, rounds_left)
@@ -713,32 +701,18 @@ def dedup_clusters(nodes: DataFrame, pairs: DataFrame,
         merged = one_round(labels)
         for _ in range(chain - 1):
             merged = one_round(merged.drop("__chg"))
-        merged = merged.persist()
-        # The count also MATERIALIZES merged — required before the
-        # unpersist below, since merged's plan reads the previous cache.
+        merged = materialize(
+            merged, f"dedup_clusters: rounds to {max_iters + 1 - rounds_left}")
         changed = merged.filter("__chg").count()
-        cached.unpersist()
-        cached = merged
         labels = merged.drop("__chg")
         if changed == 0:
             converged = True
             break
-    edges.unpersist()
-    e.unpersist()
-    # The FINAL round's cache stays persisted deliberately: the returned
-    # DataFrame is lazily derived from it (two consumers below) and an
-    # eager unpersist here would recompute the whole iteration per
-    # consumer. One bounded (id, lbl) table per call, released with the
-    # session — not the per-round accumulation the leak fix above removes.
     if not converged:
         # Returning partially-propagated labels would silently split one
         # component into several clusters (wrong, and un-flagged vs an
         # exact transitive-closure oracle). Long chains are pathological
-        # for near-dup graphs (star-like, diameter 2-3), so fail loudly —
-        # and release the final round's cache first (r7 review: a caller
-        # that catches and retries with a larger max_iters must not
-        # accumulate one orphaned cache entry per failed attempt).
-        cached.unpersist()
+        # for near-dup graphs (star-like, diameter 2-3), so fail loudly.
         raise RuntimeError(
             f"dedup_clusters did not converge within max_iters={max_iters} "
             "rounds (component diameter exceeds the bound); raise max_iters")
@@ -787,16 +761,7 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     `SPAN_WINDOW`-token window whose exact text occurs more than once in the
     corpus (any doc, including the same one) into per-doc islands.
     Returns (id_col, span_start, span_end, n_windows) with token-index
-    half-open spans [span_start, span_end). The returned frame is
-    eagerly localCheckpoint-ed (the window-occurrence barrier is
-    released before returning, so re-computation without the
-    materialized copy would re-pay the generate-feeds-join trap);
-    unlike a persist() this needs no caller-side unpersist — the
-    ContextCleaner reclaims the checkpoint blocks once the frame is
-    unreferenced (the registry query cannot unpersist after returning
-    its DataFrame — review finding). Trade-off: localCheckpoint blocks
-    do not survive executor loss; on a lossy cluster, recompute or
-    reliable-checkpoint instead.
+    half-open spans [span_start, span_end).
 
     Scale shape (100 TB): the heavy shuffle is the candidate pass on
     xxhash64(win) — 8-byte keys with map-side combine, never the window
@@ -819,22 +784,19 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     pure groupBy/join plan.
     """
     rows = window_occurrences(df, id_col, text_col)
-    # Persist barrier: `rows` (a generator output) feeds both the
-    # candidate agg and the occurrence join — without it,
-    # InferFiltersFromGenerate pushes a size()>0 predicate containing the
-    # whole window-construction expression below the join input (the r6
-    # contamination trap).
-    rows = rows.withColumn("__h", F.xxhash64("win")).persist()
+    # Barrier: `rows` (a generator output) feeds both the candidate agg
+    # and the occurrence join — without it, InferFiltersFromGenerate
+    # pushes a size()>0 predicate containing the whole window-construction
+    # expression below the join input (the r6 contamination trap).
+    rows = materialize(rows.withColumn("__h", F.xxhash64("win")),
+                       "duplicate_spans: window occurrences")
     cand_h = (rows.groupBy("__h").count()
               .filter(F.col("count") > 1).select("__h"))
     cand = rows.join(cand_h, "__h", "left_semi")
     win_cnt = (cand.groupBy("win").count()
                .filter(F.col("count") > 1).select("win"))
     occ = cand.join(win_cnt, "win", "left_semi")
-    # eager localCheckpoint materializes before the barrier is released
-    out = _merge_islands(occ, id_col).localCheckpoint()
-    rows.unpersist()
-    return out
+    return _merge_islands(occ, id_col)
 
 
 def _merge_islands(occ: DataFrame, id_col: str) -> DataFrame:

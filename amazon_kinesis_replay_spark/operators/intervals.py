@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def interval_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """Join each point to every interval containing it ([lo, hi) semantics).
@@ -265,24 +267,19 @@ def multi_resolution_rollup(events: DataFrame) -> DataFrame:
     Plan shape: every resolution is a multiple of the finest (the
     hypertable case — 1min/1h/1day), so the raw data is scanned and
     aggregated ONCE at the finest grain; every coarser level folds the
-    finest level's partials (#fine-buckets rows, persisted) — identical
-    results to independent aggregates because counts are decomposable,
-    but a 100 TB input is read once instead of once per level.
-
-    Cache ownership (r7 review): the returned DataFrame is lazily
-    derived from the persisted finest-grain table, so this operator
-    CANNOT unpersist it — the cache (#fine-buckets rows, bounded) lives
-    until the session ends or the caller releases it via
-    `spark.catalog.clearCache()`. Repeated calls in one session each pin
-    their own copy."""
+    finest level's partials (#fine-buckets rows, materialized) —
+    identical results to independent aggregates because counts are
+    decomposable, but a 100 TB input is read once instead of once per
+    level."""
     def bucket_ms(src_s, res: int):
         return (F.floor(src_s / res) * res * 1000).cast("long")
 
     finest = ROLLUP_RESOLUTIONS_S[0]
-    base = (events.groupBy(
+    base = materialize(events.groupBy(
         bucket_ms(F.unix_timestamp(F.col("ts")), finest)
         .alias("bucket_start_ms"))
-        .agg(F.count("*").alias("n_events"))).persist()  # read per level
+        .agg(F.count("*").alias("n_events")),
+        "multi_resolution_rollup: finest grain")  # read per level
     result = base.withColumn("resolution_s", F.lit(finest).cast("long"))
     for res in ROLLUP_RESOLUTIONS_S[1:]:
         out = (base.groupBy(

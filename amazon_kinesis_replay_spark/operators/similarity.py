@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 #: Cross-engine-exact quantization scale (r10, replacing the mirrored
 #: double->decimal(24,12) cast): q(v) = floor(v*1e12 + 0.5) — floor,
 #: multiply and add are IEEE-deterministic doubles, so BOTH engines
@@ -292,12 +294,10 @@ def pairwise_topk_per_label(emb: DataFrame) -> DataFrame:
             .select("lbl", "id_a", "id_b", "cosine", "rank"))
 
 
-def semantic_dedup(emb: DataFrame, centroids: DataFrame,
-                   n_assign: int = 1,
-                   ranked: DataFrame | None = None) -> DataFrame:
+def semantic_dedup(ranked: DataFrame, n_assign: int = 1) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): k-means-cluster the
-    embedding space (`centroids`, from `kmeans_centroids`), then mark
+    embedding space (centroids from `kmeans_centroids`), then mark
     semantic duplicates WITHIN each cluster — a vector is a duplicate iff
     some lower-id vector in its cluster has cosine >= 0.4 (deterministic
     min-id-wins representative; the paper keeps the member farthest from
@@ -320,31 +320,22 @@ def semantic_dedup(emb: DataFrame, centroids: DataFrame,
     (the PRIMARY assignment) and min-id-wins semantics are unchanged —
     extra assignments only GENERATE candidate pairs.
 
-    `ranked` (r14, guide §5 "cache what is reused"): an optional
-    caller-precomputed `_ranked_assign(emb, cents, >= n_assign)` table
-    (MATERIALIZED — localCheckpoint or persist), letting callers that
-    run several n_assign variants over the SAME corpus and centroids
-    (the pairwise_topk_per_label gate runs n_assign=1 and 2) pay the
-    broadcast-centroid scoring scan once instead of once per variant.
-    Rank-k rows of a wider table are identical to a narrower run's by
-    the window's own definition (rn <= n filtered to rn <= m ==
-    rn <= m), so results are unchanged — pinned by
+    `ranked` (r14, guide §5 "cache what is reused") is the caller's
+    `materialize`d `_ranked_assign(emb, cents, >= n_assign)` table, so
+    callers that run several n_assign variants over the SAME corpus and
+    centroids (the pairwise_topk_per_label gate runs n_assign=1 and 2)
+    pay the broadcast-centroid scoring scan once. Rank-k rows of a wider
+    table are identical to a narrower run's by the window's own
+    definition (rn <= n filtered to rn <= m == rn <= m), and rank-1 rows
+    are ivf_assign's — pinned by
     test_semantic_dedup_shared_ranked_bit_equal.
     """
-    if ranked is not None:
-        asg = (ranked.filter(F.col("assign_rank") == 1)
-               .select("id", "vec", "centroid_id"))
-        if n_assign <= 1:
-            return _mark_semantic_dups(asg)
-        pair_asg = (ranked.filter(F.col("assign_rank") <= n_assign)
-                    .select("id", "vec", "centroid_id"))
-        return _mark_semantic_dups(asg, pair_asg=pair_asg)
-    if n_assign <= 1:
-        return _mark_semantic_dups(ivf_assign(emb, centroids))
-    multi = _ranked_assign(emb, centroids, n_assign).localCheckpoint()
-    asg = (multi.filter(F.col("assign_rank") == 1)
+    asg = (ranked.filter(F.col("assign_rank") == 1)
            .select("id", "vec", "centroid_id"))
-    pair_asg = multi.select("id", "vec", "centroid_id")
+    if n_assign <= 1:
+        return _mark_semantic_dups(asg)
+    pair_asg = (ranked.filter(F.col("assign_rank") <= n_assign)
+                .select("id", "vec", "centroid_id"))
     return _mark_semantic_dups(asg, pair_asg=pair_asg)
 
 
@@ -355,13 +346,10 @@ def _mark_semantic_dups(asg: DataFrame,
     engine-exact cosine >= 0.4. Shared by the flat and two-level
     SemDeDup. `pair_asg` optionally supplies a WIDER (multi-assignment)
     table for candidate-pair generation only — base rows still come from
-    `asg`."""
-    # The assignment feeds THREE plan branches (both self-join sides +
-    # the output base); without a materialization each action would
-    # re-run the assignment (broadcast-centroid scan + per-id window)
-    # three times (review finding). localCheckpoint needs no caller-side
-    # unpersist — the ContextCleaner reclaims it once unreferenced.
-    asg = asg.localCheckpoint()
+    `asg`. The assignment feeds THREE plan branches (both self-join
+    sides + the output base), so both frames must read a materialized
+    table: a lazy one would re-run the assignment (broadcast-centroid
+    scan + per-id window) once per branch (review finding)."""
     # norm-hoisted pair scoring (see _with_norm)
     src = _with_norm(asg if pair_asg is None else pair_asg, "vec")
     a = src.select(F.col("centroid_id"), F.col("id").alias("id_a"),
@@ -419,7 +407,7 @@ def kmeans_centroids_two_level(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     asg1 = ivf_assign(train, coarse) \
         .select("id", "vec", F.col("centroid_id").alias("coarse_id"))
     # training scans the sample 2*n_iters+1 times — cut the lineage once
-    asg1 = asg1.localCheckpoint()
+    asg1 = materialize(asg1, "kmeans_centroids_two_level: coarse assignment")
     # deterministic seeds: first 4 member vectors per coarse cell
     wseed = Window.partitionBy("coarse_id").orderBy(F.col("id").asc())
     fine = (asg1.withColumn("rn", F.row_number().over(wseed))
@@ -502,7 +490,9 @@ def semantic_dedup_two_level(emb: DataFrame) -> DataFrame:
     tests (full assignment coverage, within-cell confinement,
     pure-python dup-set recomputation)."""
     fine, coarse = kmeans_centroids_two_level(emb)
-    return _mark_semantic_dups(ivf_assign_two_level(emb, coarse, fine))
+    return _mark_semantic_dups(materialize(
+        ivf_assign_two_level(emb, coarse, fine),
+        "semantic_dedup_two_level: leaf assignment"))
 
 
 def _ranked_assign(emb: DataFrame, cents: DataFrame,

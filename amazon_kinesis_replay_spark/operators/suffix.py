@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .dedup import SPAN_WINDOW
 from .replay_ops import with_global_cumsum
 from .text import tokens_expr
@@ -108,17 +109,18 @@ def suffix_ranks(tok: DataFrame, upto: int) -> DataFrame:
     and past-corpus-end positions rank uniquely). Rank values carry
     EQUALITY semantics only (min-gpos class ids, not order-dense — see
     `_class_ids`). Prefix doubling: log2(upto) rounds, each = one
-    shifted self-join + one class-id aggregation; per-round
-    localCheckpoint cuts the iterative lineage (the k-means convention
-    — plan analysis must not grow with round count)."""
+    shifted self-join + one class-id aggregation; materializing each
+    round cuts the iterative lineage (the k-means convention — plan
+    analysis must not grow with round count)."""
     if upto < 1 or upto & (upto - 1):
         raise ValueError(f"upto must be a positive power of two: {upto}")
     real = _class_ids(tok.filter(F.col("token").isNotNull())
                       .select("gpos", "token"), ["token"])
     sent = tok.filter(F.col("token").isNull()).select(
         "gpos", (-(F.col("gpos") + 1)).alias("__r"))
-    cur = (real.select("gpos", "__r").unionByName(sent)
-           .withColumnRenamed("__r", "rank").localCheckpoint())
+    cur = materialize(real.select("gpos", "__r").unionByName(sent)
+                      .withColumnRenamed("__r", "rank"),
+                      "suffix_ranks: width 1")
     width = 1
     while width < upto:
         shifted = cur.select((F.col("gpos") - width).alias("gpos"),
@@ -126,10 +128,10 @@ def suffix_ranks(tok: DataFrame, upto: int) -> DataFrame:
         pairs = (cur.join(shifted, "gpos", "left")
                  .select("gpos", "rank",
                          F.coalesce("rank2", F.lit(0)).alias("rank2")))
-        cur = (_class_ids(pairs, ["rank", "rank2"])
-               .select("gpos", F.col("__r").alias("rank"))
-               .localCheckpoint())
         width *= 2
+        cur = materialize(_class_ids(pairs, ["rank", "rank2"])
+                          .select("gpos", F.col("__r").alias("rank")),
+                          f"suffix_ranks: width {width}")
     return cur
 
 
@@ -150,7 +152,8 @@ def duplicated_runs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     windows never cross doc ends (a window containing a sentinel ranks
     uniquely)."""
     min_len = SPAN_WINDOW
-    tok = corpus_tokens(df, id_col, text_col).localCheckpoint()
+    tok = materialize(corpus_tokens(df, id_col, text_col),
+                      "duplicated_runs: corpus tokens")
     a = 1 << (min_len.bit_length() - 1)
     ranks = suffix_ranks(tok, a)
     r2 = ranks.select((F.col("gpos") - (min_len - a)).alias("gpos"),

@@ -74,8 +74,8 @@ def word_piece_counts(df: DataFrame, text_col: str) -> DataFrame:
     groupBy over the corpus, kept to the `MAX_WORDS` MOST FREQUENT
     pieces (ties by piece — determinism). Factored out (r14, r13 verdict
     item 4) so a caller training BOTH tokenizers over one corpus (the
-    doc_pii_redact gate) aggregates the corpus once and persists this
-    table across the two trainings instead of re-scanning per trainer."""
+    doc_pii_redact gate) aggregates the corpus once and materializes this
+    table for the two trainings instead of re-scanning per trainer."""
     return (df.select(F.explode(F.regexp_extract_all(
         F.col(text_col), F.lit(BPE_PRETOKEN_PATTERN), F.lit(0)))
         .alias("piece"))
@@ -90,7 +90,7 @@ def bpe_train(word_counts: DataFrame) -> list[tuple[str, str]]:
     shape of the IVF k-means trainer): pre-tokenization and piece
     counting run as one explode + map-side-combinable groupBy over the
     corpus (JVM regex, no Python; `word_piece_counts`, whose table the
-    caller passes and persists when shared), and only the aggregated
+    caller passes and materializes when shared), and only the aggregated
     piece->count table — at most `MAX_WORDS` rows, vocab-scale not
     corpus-scale — reaches the driver for the classic Sennrich merge
     loop (`functions.bpe.learn_bpe`, cost ∝ vocab × merges, independent
@@ -154,8 +154,8 @@ def unigram_train(word_counts: DataFrame) -> dict[str, float]:
     Returns the piece->log-prob dict (feed to `unigram_encode`); a
     driver-only recompute via `functions.unigram.train_unigram` over the
     same word counts yields the IDENTICAL table (the registry gate's
-    twin contract). The caller owns the persistence of `word_counts`;
-    this function must not unpersist it."""
+    twin contract). The caller materializes `word_counts` when it is
+    shared."""
     from ..functions import unigram as _ug
     words = word_counts.selectExpr("piece AS word", "cnt")
 

@@ -26,7 +26,7 @@ from ..functions import arn as arnf
 from ..functions import jsonf
 from ..operators import dedup, replay_ops, sampling, similarity, stats, text
 from ..operators.scanwidth import widen_if_narrow
-from ..session import ensure_engine_conf
+from ..session import ensure_engine_conf, materialize
 from ..tables import load
 
 # -- deterministic literal anchors (FIXTURES.md determinism rules) ----------
@@ -1077,12 +1077,10 @@ def q_multi_resolution_rollup(spark, sf_dir):
                       "n_events", "resolution_s",
                       F.lit(0).cast("long").alias("filled"))
     # minute feeds FOUR plan branches (spine-agg + join side of both
-    # gap_fill legs): localCheckpoint cuts the duplicated lineage
-    # (Catalyst plans are trees — shared lineage is duplicated per
-    # branch, and deep duplicated lineage can OOM driver-side plan
-    # analysis); bucket-grain, bounded rows
+    # gap_fill legs); each is a projection of the rollup's materialized
+    # finest-grain table, so no lineage is duplicated
     minute = (roll.filter(F.col("resolution_s") == 60)
-              .select("bucket_start_ms", "n_events").localCheckpoint())
+              .select("bucket_start_ms", "n_events"))
     def _dense(mode, series):
         dense = iv.gap_fill(minute, "bucket_start_ms", "n_events",
                             step=60000, mode=mode)
@@ -1489,23 +1487,20 @@ def q_doc_pii_redact(spark, sf_dir):
     d = widen_if_narrow(load(spark, sf_dir, "documents"))
     # r14 (r13 verdict item 4): BOTH tokenizer trainings consume the
     # same capped pre-token frequency table (same regex, same cap
-    # contract) — aggregate the corpus ONCE, persist the vocab-scale
-    # result across the two trainings, and unpersist when both are done
-    # (the trainings are eager; nothing in the returned plan references
-    # the table). Was: two independent corpus scans + aggregations.
-    wc = text.word_piece_counts(d, "text").persist()
-    try:
-        merges = text.bpe_train(wc)
-        # late r10: the unigram-LM tokenizer (SentencePiece hard-EM form,
-        # text.unigram_train — distributed seed + Viterbi E-steps over the
-        # word-count table, exact-integer aggregates) rides this entry the
-        # same way BPE does: the oracle retrains driver-only via
-        # functions.unigram.train_unigram over the SAME capped word counts
-        # and embeds per-doc token counts, so the distributed train+encode
-        # path is hash-checked end-to-end.
-        ug_scores = text.unigram_train(wc)
-    finally:
-        wc.unpersist()
+    # contract) — aggregate the corpus ONCE and materialize the
+    # vocab-scale result for the two trainings. Was: two independent
+    # corpus scans + aggregations.
+    wc = materialize(text.word_piece_counts(d, "text"),
+                     "doc_pii_redact: word piece counts")
+    merges = text.bpe_train(wc)
+    # late r10: the unigram-LM tokenizer (SentencePiece hard-EM form,
+    # text.unigram_train — distributed seed + Viterbi E-steps over the
+    # word-count table, exact-integer aggregates) rides this entry the
+    # same way BPE does: the oracle retrains driver-only via
+    # functions.unigram.train_unigram over the SAME capped word counts
+    # and embeds per-doc token counts, so the distributed train+encode
+    # path is hash-checked end-to-end.
+    ug_scores = text.unigram_train(wc)
     enc = text.bpe_encode(d.select("doc_id", "text"), "text", merges)
     ug_enc = text.unigram_encode(d.select("doc_id", "text"), "text",
                                  ug_scores)
@@ -1592,7 +1587,7 @@ def q_doc_train_split(spark, sf_dir):
         f"CASE WHEN {bucket} < 80 THEN 'train' "
         f"WHEN {bucket} < 90 THEN 'valid' ELSE 'test' END AS split",
         "text")
-    # Composition (re-decided r7 by measurement): contamination persists
+    # Composition (re-decided r7 by measurement): contamination materializes
     # its own NARROW (id, shs) table; the packing and assembly legs scan
     # the parquet directly (pushed-down, cheap). The "one shared widened
     # persisted projection across all legs" variant (r6 verdict item 3)
@@ -2840,11 +2835,11 @@ def q_pairwise_topk_per_label(spark, sf_dir):
     # materialized width-2 table feeds both kinds. Results bit-identical
     # (oracle hash re-verified; parity pinned in
     # test_semantic_dedup_shared_ranked_bit_equal).
-    ranked2 = similarity._ranked_assign(full, cents, 2).localCheckpoint()
+    ranked2 = materialize(similarity._ranked_assign(full, cents, 2),
+                          "pairwise_topk_per_label: ranked assignment")
 
     def _sem_rows(kind: str, n_assign: int):
-        sem = similarity.semantic_dedup(full, cents, n_assign=n_assign,
-                                        ranked=ranked2)
+        sem = similarity.semantic_dedup(ranked2, n_assign=n_assign)
         return sem.select(
             F.lit(kind).alias("kind"),
             F.col("centroid_id").cast("long").alias("label"),

@@ -30,7 +30,7 @@ import sys
 import warnings
 import zipimport
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Configs applied to sessions we build AND re-asserted (when runtime-settable)
 #: on sessions handed to us by the driver.
@@ -199,6 +199,28 @@ def _ship_package(spark: SparkSession) -> None:
         spark._akrs_pyfiles_shipped = True
     except Exception:
         pass  # best-effort: repo-rooted runs work without it
+
+
+def materialize(df: DataFrame, name: str) -> DataFrame:
+    """The package's one way to materialise an intermediate: an eager
+    `localCheckpoint` of `df` run under the job description `name`, so
+    the checkpoint job and the jobs its plan triggers carry the
+    operator's name in a stage profile. The caller's description is
+    restored afterwards; the job group is left alone (harnesses count
+    jobs by group).
+
+    The returned frame's plan is a scan of the checkpoint blocks: it
+    cuts the lineage and is a barrier the optimizer cannot push
+    expressions through. Nothing releases it: the ContextCleaner drops
+    the blocks once the frame is unreferenced and garbage-collected.
+    Checkpoint blocks do not survive executor loss."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", name)
+    try:
+        return df.localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def drop_zip_finders() -> None:

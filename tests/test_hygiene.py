@@ -16,6 +16,7 @@ Each rule encodes a 100 TB scale invariant:
 
 import ast
 import re
+import time
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "amazon_kinesis_replay_spark"
@@ -239,38 +240,137 @@ def test_bench_publish_is_self_describing():
     assert '"quiet_fail_meters": _quiet_failures(best)' in src
 
 
-def test_operator_persists_are_catalog_reclaimable(spark, sf_dir):
-    """r13 verdict item 7: operator-internal persists (shingle arrays,
-    PPJoin prefix index, LSH band entries) are created inside registry
-    queries whose callers never get control back, so they must be
-    CATALOG-scoped — one `spark.catalog.clearCache()` (what bench.py now
-    runs between samples) must reclaim every block. A raw RDD-level
-    persist would dodge the catalog and accrete storage for the life of
-    a long-running session; this pins that none exists on the persisted-
-    subtree query paths. (localCheckpoint blocks are ContextCleaner-
-    reclaimed on GC and are deliberately out of scope here — the checked
-    queries use catalog persists only.)"""
+#: The calls that materialise or release a frame. `session.materialize`
+#: is the package's one way to materialise an intermediate.
+MATERIALIZE_CALLS = {"persist", "cache", "localCheckpoint", "unpersist"}
+#: (file, enclosing function, receiver, call) sites allowed to make one.
+MATERIALIZE_ALLOWED = {
+    ("session.py", "materialize", "df", "localCheckpoint"),
+    # a Broadcast variable, not a DataFrame: one EM iteration's scores,
+    # freed after that iteration's job
+    ("operators/text.py", "unigram_train", "bc", "unpersist"),
+}
+
+
+def _materialize_sites() -> set[tuple[str, str, str, str]]:
+    """(file, enclosing function, receiver source, call) of every
+    MATERIALIZE_CALLS call in the package."""
+    sites = set()
+    for p in _py_sources():
+        tree = ast.parse(p.read_text())
+        parents = {c: n for n in ast.walk(tree)
+                   for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in MATERIALIZE_CALLS):
+                continue
+            fn = parents.get(node)
+            while fn is not None and not isinstance(
+                    fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fn = parents.get(fn)
+            sites.add((_rel(p), fn.name if fn else "<module>",
+                       ast.unparse(node.func.value), node.func.attr))
+    return sites
+
+
+def test_one_materialisation_form():
+    """Every operator-internal materialisation goes through
+    `session.materialize`: one eager, named localCheckpoint that the
+    ContextCleaner reclaims. A catalog persist/cache outlives the query
+    that made it, a lazy one is filled inside its consumer's job (no
+    operator name in a stage profile), and a raw localCheckpoint runs
+    unnamed."""
+    sites = _materialize_sites()
+    offenders = sites - MATERIALIZE_ALLOWED
+    assert not offenders, (
+        f"materialise through session.materialize, not: {sorted(offenders)}")
+    stale = MATERIALIZE_ALLOWED - sites
+    assert not stale, f"stale MATERIALIZE_ALLOWED entries: {sorted(stale)}"
+
+
+def test_materialize_names_its_job_and_restores_the_description(spark):
+    """`materialize` runs its checkpoint job under the given name, then
+    puts the caller's job description back."""
+    from amazon_kinesis_replay_spark.session import materialize
+
+    sc = spark.sparkContext
+    bus, store = sc._jsc.sc().listenerBus(), sc._jsc.sc().statusStore()
+
+    def jobs_after(job_id):
+        """{job id: description} of the recorded jobs newer than
+        `job_id` (the store lists the newest first)."""
+        bus.waitUntilEmpty()     # the listener bus fills the store
+        jobs, out = store.jobsList(None), {}
+        for i in range(jobs.size()):
+            job = jobs.apply(i)
+            if job.jobId() <= job_id:
+                break
+            d = job.description()
+            out[job.jobId()] = d.get() if d.isDefined() else None
+        return out
+
+    key = "spark.job.description"
+    prev = sc.getLocalProperty(key)
+    bus.waitUntilEmpty()
+    recorded = store.jobsList(None)
+    last = recorded.apply(0).jobId() if recorded.size() else -1
+    sc.setLocalProperty(key, "caller description")
+    try:
+        out = materialize(spark.range(10).selectExpr("id * 2 AS x"),
+                          "hygiene: materialize probe")
+        assert sc.getLocalProperty(key) == "caller description"
+    finally:
+        sc.setLocalProperty(key, prev)
+    named = jobs_after(last)
+    assert named, "the checkpoint ran no job"
+    assert set(named.values()) == {"hygiene: materialize probe"}, named
+    assert sorted(r["x"] for r in out.collect()) == list(range(0, 20, 2))
+
+
+def test_operator_materialisations_are_reclaimed_by_gc(spark, sf_dir):
+    """Operator-internal materialisations are made inside registry
+    queries whose callers never get control back, so no code can
+    release them by hand. Once a query's result is dropped, garbage
+    collection alone must reclaim every block they stored — with no
+    `spark.catalog.clearCache()` — or a long-lived session accretes
+    storage with every query it runs."""
+    import gc
+
     from amazon_kinesis_replay_spark.plans import QUERIES
 
     jsc = spark.sparkContext._jsc
-    spark.catalog.clearCache()
-    # only the RDDs the three queries add count: localCheckpoint
-    # leftovers of earlier tests are in the map too, and the
-    # ContextCleaner may drop them at any moment while the queries run
+    # only the RDDs these queries add count: blocks of earlier tests are
+    # in the map too, and the ContextCleaner may drop them at any moment
     before = set(jsc.getPersistentRDDs().keys())
 
     def added():
-        return set(jsc.getPersistentRDDs().keys()) - before
+        # ids read inside the JVM: a `getPersistentRDDs()` map handed to
+        # Python holds its RDDs strongly until py4j detaches it, so
+        # polling through it keeps every RDD alive across each System.gc
+        ids = jsc.sc().persistentRdds().keys().mkString(",")
+        return {int(i) for i in ids.split(",") if i} - before
 
-    for name in ("minhash_dedup", "ngram_jaccard_dedup", "doc_train_split"):
+    for name in ("minhash_dedup", "ngram_jaccard_dedup", "doc_train_split",
+                 "doc_text_profile", "doc_pii_redact", "dedup_clusters",
+                 "dedup_exact", "multi_resolution_rollup",
+                 "pairwise_topk_per_label"):
         QUERIES[name].fn(spark, sf_dir).write.format(
             "noop").mode("overwrite").save()
     assert added(), \
-        "fixture drift: these queries are expected to persist subtrees"
-    spark.catalog.clearCache()
-    assert not added(), (
-        "operator persists survived clearCache — an RDD-level persist "
-        "outside the catalog leaks storage in long-lived sessions")
+        "fixture drift: these queries are expected to materialise subtrees"
+    # the ContextCleaner frees an RDD once the JVM collects its last
+    # reference, a few seconds after the first System.gc()
+    deadline = time.monotonic() + 60
+    while added() and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(1)
+    left = set(jsc.getPersistentRDDs().keys()) - before
+    assert not left, (
+        f"{len(left)} materialised RDDs survived garbage collection: "
+        "a materialisation outside session.materialize leaks storage in "
+        "long-lived sessions")
 
 
 def test_ensure_engine_conf_memoized_per_session(spark):

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from amazon_kinesis_replay_spark.operators import (
     dedup, multimodal, similarity)
+from amazon_kinesis_replay_spark.session import materialize
 from amazon_kinesis_replay_spark.tables import load
 
 
@@ -1966,21 +1967,32 @@ def test_exact_pow10_double_signed(spark):
         assert got == exp, (scale, got, exp)
 
 
+def _semantic_dedup(emb, cents, n_assign=1):
+    """Flat SemDeDup of `emb` against `cents` through its own
+    materialized ranked assignment of width `n_assign`."""
+    ranked = materialize(similarity._ranked_assign(emb, cents, n_assign),
+                         "test: ranked assignment")
+    return similarity.semantic_dedup(ranked, n_assign)
+
+
 def test_semantic_dedup_shared_ranked_bit_equal(spark, sf_dir):
     """r14 (r13 verdict item 5): a caller-shared width-2 ranked
     assignment must reproduce BOTH flat SemDeDup kinds bit-for-bit —
     rank-1 rows of the wider table are ivf_assign's output by the
     window's own tie-break, so n_assign=1 fed from `ranked` equals the
-    self-computed run, and n_assign=2 equals its own."""
+    marking over ivf_assign, and n_assign=2 equals its own run."""
     emb = load(spark, sf_dir, "embeddings")
     cents = similarity.kmeans_centroids(emb, n_centroids=8)
-    ranked2 = similarity._ranked_assign(emb, cents, 2).localCheckpoint()
-    for n_assign in (1, 2):
-        base = {tuple(r) for r in similarity.semantic_dedup(
-            emb, cents, n_assign=n_assign).collect()}
+    ranked2 = materialize(similarity._ranked_assign(emb, cents, 2),
+                          "test: ranked assignment")
+    bases = {1: similarity._mark_semantic_dups(materialize(
+                 similarity.ivf_assign(emb, cents), "test: ivf assignment")),
+             2: _semantic_dedup(emb, cents, 2)}
+    for n_assign, base in bases.items():
         shared = {tuple(r) for r in similarity.semantic_dedup(
-            emb, cents, n_assign=n_assign, ranked=ranked2).collect()}
-        assert shared == base, f"n_assign={n_assign}"
+            ranked2, n_assign=n_assign).collect()}
+        assert shared == {tuple(r) for r in base.collect()}, \
+            f"n_assign={n_assign}"
 
 
 # ---------------------------------------------------------------------------
@@ -2233,7 +2245,6 @@ def test_duplicate_spans_crafted(spark):
     spans = dedup.duplicate_spans(df, "doc_id", "text")
     got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
            for r in spans.collect()}
-    spans.unpersist()
     assert got == {(1, 0, 14, 3), (2, 2, 16, 3), (4, 0, 24, 13)}
 
 
@@ -2269,7 +2280,6 @@ def test_duplicate_spans_matches_python_reference(spark, sf_dir):
     spans = dedup.duplicate_spans(d, "doc_id", "text")
     got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
            for r in spans.collect()}
-    spans.unpersist()
     assert got == expect
 
 
@@ -2283,7 +2293,7 @@ def test_semantic_dedup_crafted(spark):
             (4, [-0.95, 0.05, 0.0, 0.0], 0)]
     emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int")
-    out = {r["id"]: r["is_dup"] for r in similarity.semantic_dedup(
+    out = {r["id"]: r["is_dup"] for r in _semantic_dedup(
         emb, similarity.kmeans_centroids(emb, n_centroids=2)).collect()}
     assert out == {0: False, 1: False, 2: True, 3: False, 4: True}
 
@@ -3498,7 +3508,7 @@ def test_semantic_dedup_multi_assign(spark, sf_dir):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     def run(n_assign):
-        out = similarity.semantic_dedup(emb, cents, n_assign=n_assign)
+        out = _semantic_dedup(emb, cents, n_assign=n_assign)
         rows_ = out.collect()
         assert sorted(r["id"] for r in rows_) == [2, 3, 4]  # 1/id
         return {r["id"] for r in rows_ if r["is_dup"]}, \
@@ -3514,11 +3524,11 @@ def test_semantic_dedup_multi_assign(spark, sf_dir):
     # fixture ordering: flat ⊆ multi ⊆ exact (all-pairs), recall up
     fix = load(spark, sf_dir, "embeddings")
     trained = similarity.kmeans_centroids(fix)
-    d1 = {r["id"] for r in similarity.semantic_dedup(fix, trained)
+    d1 = {r["id"] for r in _semantic_dedup(fix, trained)
           .filter("is_dup").collect()}
-    d2 = {r["id"] for r in similarity.semantic_dedup(
+    d2 = {r["id"] for r in _semantic_dedup(
         fix, trained, n_assign=2).filter("is_dup").collect()}
-    ex = {r["id"] for r in similarity.semantic_dedup(
+    ex = {r["id"] for r in _semantic_dedup(
         fix, similarity.kmeans_centroids(fix, n_centroids=1))
         .filter("is_dup").collect()}
     assert d1 <= d2 <= ex
@@ -3790,7 +3800,8 @@ def test_minhash_signature_struct_agg_bit_equal(spark, sf_dir):
     from amazon_kinesis_replay_spark.operators import dedup
 
     d = load(spark, sf_dir, "documents")
-    arrays = dedup.shingle_arrays(d, "doc_id", "text", 3).persist()
+    arrays = materialize(dedup.shingle_arrays(d, "doc_id", "text", 3),
+                         "test: shingle arrays")
     sh = arrays.select("id", F.explode("shs").alias("shingle"))
 
     new = dedup._signature_from_rows(sh, 8)
@@ -3802,4 +3813,3 @@ def test_minhash_signature_struct_agg_bit_equal(spark, sf_dir):
     a = sorted(tuple(r) for r in old.collect())
     b = sorted(tuple(r) for r in new.collect())
     assert a == b and len(a) > 0
-    arrays.unpersist()

@@ -118,7 +118,6 @@ def test_shingle_rows_repartition_is_conditional(spark):
     at 100 TB."""
     from amazon_kinesis_replay_spark.operators import dedup
     from amazon_kinesis_replay_spark.tables import load
-    spark.catalog.clearCache()   # cached shingles would hide the exchange
     d = load(spark, SF, "documents")
     width = spark.sparkContext.defaultParallelism
     narrow = dedup.shingle_rows(d, "doc_id", "text")
@@ -209,15 +208,18 @@ def test_embedding_lsh_exchange_is_narrow(spark):
 
 def test_multi_resolution_rollup_scans_once(spark):
     """The folded rollup reads the raw table ONCE (finest-grain aggregate
-    persisted) and derives coarser levels from its partials — three
+    materialized) and derives coarser levels from its partials — three
     independent aggregates would scan a 100 TB input three times."""
-    spark.catalog.clearCache()
-    p = _plan(spark, "multi_resolution_rollup")
-    # every level reads the persisted finest-grain partials (the plan
-    # string prints the cached subplan's FileScan once per reference, so
-    # count cache READS, not FileScan occurrences: three InMemoryTableScan
-    # consumers over one materialized relation == one physical scan)
-    assert p.count("InMemoryTableScan") == 3
+    from amazon_kinesis_replay_spark.operators import intervals
+    from amazon_kinesis_replay_spark.tables import load
+    roll = intervals.multi_resolution_rollup(load(spark, SF, "events"))
+    qe = roll._jdf.queryExecution()
+    assert "FileScan" not in qe.executedPlan().toString()
+    # every level reads the one checkpoint of the finest-grain partials
+    leaves = qe.optimizedPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    assert [x.nodeName() for x in scans] == ["LogicalRDD"] * 3
+    assert len({x.rdd().id() for x in scans}) == 1
 
 
 def test_user_event_windows_single_sort(spark):
@@ -365,30 +367,19 @@ def test_assemble_sequences_has_no_unpartitioned_window(spark):
     assert "HashAggregate" in p
 
 
-def test_duplicate_spans_plan_has_no_cartesian(spark, monkeypatch):
+def test_duplicate_spans_plan_has_no_cartesian(spark):
     """Substring dedup must stay equi-join/aggregate shaped: no nested
     loop, no cartesian, and the island merge windows per-doc (no
-    unpartitioned global window). Inspect the REAL lazy composition —
-    the frame duplicate_spans hands to its final localCheckpoint, caught
-    on the way in: the checkpointed frame's plan is just an RDD scan and
-    pins nothing (second review)."""
+    unpartitioned global window). The returned frame is lazy over the
+    materialized window occurrences, so its plan holds the candidate
+    joins and the island merge."""
     import re
 
     from amazon_kinesis_replay_spark.operators import dedup
     from amazon_kinesis_replay_spark.tables import load
     d = load(spark, SF, "documents")
-    checkpointed = []
-    frame_class = type(d)
-    local_checkpoint = frame_class.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        checkpointed.append(self)
-        return local_checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame_class, "localCheckpoint", spy)
-    dedup.duplicate_spans(d, "doc_id", "text")
-    lazy = checkpointed[-1]
-    q = lazy._jdf.queryExecution().executedPlan().toString()
+    spans = dedup.duplicate_spans(d, "doc_id", "text")
+    q = spans._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in q
     assert "BroadcastNestedLoopJoin" not in q
     assert q.count("LeftSemi") >= 2      # hash-candidate + exact-confirm

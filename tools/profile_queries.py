@@ -4,6 +4,8 @@ Runs passes over the registry queries, each query constructed and run to
 Spark's noop sink with cached relations cleared before it (the shape of
 perfbench's `queries_cold` unit), and reports for every query:
 
+- `jobs`: the Spark jobs the query ran, construction included (each
+  query runs in its own job group; `statusTracker().getJobIdsForGroup`);
 - `compiles`: Janino compiles the query caused — the delta of
   `CodegenMetrics.METRIC_COMPILATION_TIME`'s count, which moves only on
   a codegen-cache miss. The cache is keyed on generated source, so a
@@ -161,6 +163,7 @@ def main(argv=None) -> int:
     spark = session.build_spark("profile-queries")
     session.ensure_engine_conf(spark)
     spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
     jvm = spark._jvm
     pid = jvm.java.lang.ProcessHandle.current().pid()
     compile_time = (jvm.org.apache.spark.metrics.source.CodegenMetrics
@@ -175,6 +178,8 @@ def main(argv=None) -> int:
         queries, total, wall = {}, dict.fromkeys(BUCKETS, 0.0), 0.0
         for name in names:
             spark.catalog.clearCache()
+            group = f"profile-{pass_no}-{name}"
+            sc.setJobGroup(group, name)
             n0, s0, p0, t0 = compile_time.getCount(), cpu_snapshot(pid), \
                 pyworker_ticks(pid), time.perf_counter()
             error = None
@@ -184,22 +189,28 @@ def main(argv=None) -> int:
             except Exception as exc:  # noqa: BLE001 - reported per query
                 error = f"{type(exc).__name__}: {exc}"[:300]
             dt = time.perf_counter() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()   # job records
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             cpu = cpu_split(s0, cpu_snapshot(pid))
             cpu["pyworkers"] = round(
                 max(0, pyworker_ticks(pid) - p0) / CLK_TCK, 2)
-            row = {"compiles": compile_time.getCount() - n0,
+            row = {"jobs": jobs, "compiles": compile_time.getCount() - n0,
                    "cpu_s": cpu, "wall_s": round(dt, 3)}
             if error:
                 row["error"] = error
             queries[name] = row
             total = {b: round(total[b] + cpu[b], 2) for b in BUCKETS}
             wall += dt
-            print(f"pass {pass_no} {name}: {row['compiles']} compiles, "
+            print(f"pass {pass_no} {name}: {jobs} jobs, "
+                  f"{row['compiles']} compiles, "
                   f"{sum(cpu.values()):.2f} CPU-s (jit {cpu['jit']:.2f}, "
                   f"executor {cpu['executor']:.2f}, "
                   f"pyworkers {cpu['pyworkers']:.2f}), {dt:.2f} s"
                   + (f" | {error}" if error else ""), file=sys.stderr)
         passes.append({"pass": pass_no,
+                       "jobs": sum(q["jobs"] for q in queries.values()),
                        "compiles": sum(q["compiles"] for q in
                                        queries.values()),
                        "cpu_s": total, "wall_s": round(wall, 2),
@@ -210,6 +221,7 @@ def main(argv=None) -> int:
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
         "codegen_cache_entries": cache_entries,
         "queries": len(names),
+        "jobs_per_pass": [p["jobs"] for p in passes],
         "compiles_per_pass": [p["compiles"] for p in passes],
         "recompiled_on_last_pass": {
             n: q["compiles"] for n, q in passes[-1]["queries"].items()

@@ -34,7 +34,7 @@ def main():
     from pyspark.sql import functions as F
 
     from amazon_kinesis_replay_spark.operators import dedup
-    from amazon_kinesis_replay_spark.session import build_spark
+    from amazon_kinesis_replay_spark.session import build_spark, materialize
     from amazon_kinesis_replay_spark.tables import load
 
     spark = build_spark("recall-probe")
@@ -146,12 +146,16 @@ def main():
     n_vec = emb.count()
     one = S.kmeans_centroids(emb, n_centroids=1)
     cents = S.kmeans_centroids(emb)
-    exact_ids = {r["id"] for r in S.semantic_dedup(emb, one)
-                 .filter("is_dup").collect()}
-    got_ids = {r["id"] for r in S.semantic_dedup(emb, cents)
-               .filter("is_dup").collect()}
-    got2_ids = {r["id"] for r in S.semantic_dedup(emb, cents, n_assign=2)
+
+    def dup_ids(centroids, n_assign):
+        ranked = materialize(S._ranked_assign(emb, centroids, n_assign),
+                             "recall_probe: ranked assignment")
+        return {r["id"] for r in S.semantic_dedup(ranked, n_assign)
                 .filter("is_dup").collect()}
+
+    exact_ids = dup_ids(one, 1)
+    got_ids = dup_ids(cents, 1)
+    got2_ids = dup_ids(cents, 2)
     assert got_ids <= got2_ids <= exact_ids, \
         "dup sets must nest: flat <= multi-assign <= exact"
     rec = len(got_ids) / len(exact_ids) if exact_ids else 1.0

@@ -102,7 +102,7 @@ def main():
 
     from amazon_kinesis_replay_spark.operators import (
         dedup, intervals, retrieval, sampling, similarity, sketches, text)
-    from amazon_kinesis_replay_spark.session import build_spark
+    from amazon_kinesis_replay_spark.session import build_spark, materialize
     from amazon_kinesis_replay_spark.tables import load
 
     spark = build_spark("scale-probe")
@@ -146,8 +146,10 @@ def main():
         # centroids scale WITH the corpus — the operator's own 100 TB
         # contract (bounded per-cluster membership bounds the quadratic);
         # a fixed centroid count would measure the quadratic instead
-        out = similarity.semantic_dedup(corpus, similarity.kmeans_centroids(
-            corpus, n_centroids=16 * mult))
+        cents = similarity.kmeans_centroids(corpus, n_centroids=16 * mult)
+        out = similarity.semantic_dedup(materialize(
+            similarity._ranked_assign(corpus, cents, 1),
+            "scale_probe: ranked assignment"))
         dups = out.filter("is_dup").count()
         return f"{n} vecs -> {dups} dups ({16 * mult} centroids)"
 
