@@ -36,11 +36,9 @@ class TIFFError(ValueError):
 
 # Decompression-bomb cap, in SAMPLE BYTES (w*h*spp*sample_size, and
 # tile tw*tl*spp*sample_size), r12. 256 MiB keeps worst-case peak
-# memory (output + numpy u4 intermediate) ~1.5 GiB per task. It is a
-# module-level knob (r12 advice): corpora with legitimately large
-# imagery (e.g. >9300x9300 RGB 16-bit) can raise it; the cap-exceeded
-# error message names it so a skip-mode drop is diagnosable as a
-# policy decision, not parse corruption.
+# memory (output + numpy u4 intermediate) ~1.5 GiB per task. The
+# cap-exceeded error names it, so a rejected blob reads as a policy
+# decision, not parse corruption.
 MAX_SAMPLE_BYTES = 1 << 28
 
 
@@ -314,14 +312,11 @@ def decode_tiff(raw: bytes):
     # DECLARED dims (the tiled path up front; LZW can synthesize
     # `expected` bytes from a tiny strip), so a crafted header could
     # demand gigabytes before any data-length check fires
-    # coarse early bound before BitsPerSample is parsed; scales with the
-    # module knob so raising MAX_SAMPLE_BYTES past 1 GiB isn't silently
-    # capped here (the byte-exact guards below stay authoritative)
-    if w <= 0 or h <= 0 or spp <= 0 or \
-            w * h * spp > max(1 << 30, MAX_SAMPLE_BYTES):
+    # coarse early bound before BitsPerSample is parsed (the byte-exact
+    # guards below stay authoritative)
+    if w <= 0 or h <= 0 or spp <= 0 or w * h * spp > 1 << 30:
         raise TIFFError(
-            f"implausible image dimensions ({w}x{h}x{spp} samples > "
-            f"max(2^30, MAX_SAMPLE_BYTES={MAX_SAMPLE_BYTES}))")
+            f"implausible image dimensions ({w}x{h}x{spp} samples > 2^30)")
     bits = _tag_us(t, _TAG_BITS) if _TAG_BITS in t else (1,) * spp
     if all(b == 8 for b in bits):
         ss = 1
@@ -336,8 +331,7 @@ def decode_tiff(raw: bytes):
     if w * h * spp * ss > MAX_SAMPLE_BYTES:
         raise TIFFError(
             f"image exceeds sample-byte cap ({w}x{h}x{spp}x{ss} > "
-            f"MAX_SAMPLE_BYTES={MAX_SAMPLE_BYTES}); raise "
-            "functions.tiff.MAX_SAMPLE_BYTES for large-imagery corpora")
+            f"MAX_SAMPLE_BYTES={MAX_SAMPLE_BYTES})")
     if _tag_u(t, _TAG_PLANAR, 1) != 1:
         raise NotImplementedError("planar TIFF not supported (chunky)")
     comp = _tag_u(t, _TAG_COMPRESSION, 1)

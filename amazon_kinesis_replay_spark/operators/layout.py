@@ -12,9 +12,10 @@ BY`; public literature: Morton 1966, "z-order curve"; Hilbert 1891).
   Deterministic integer arithmetic, so the exact same shift expression
   runs in DuckDB (`zvalue_sql`) — the registry hash-gates it
   cross-engine (kind='zorder' summary row in dedup_exact).
-- Hilbert keys — driver-side curve walks (`hilbert_py*`) materialized
-  as broadcast zkey→hkey lookup tables (`hilbert_lookup*`), gated as
-  kind='hilbert' / 'hilbert_nd'.
+- Hilbert keys — the driver-side Skilling walk (`hilbert_py_nd`)
+  materialized as a broadcast zkey→hkey lookup table
+  (`hilbert_lookup_nd`), gated as kind='hilbert' / 'hilbert_nd' against
+  the independent walks `hilbert_py` (2-D) and `hilbert_axes_py_nd`.
 
 Reference scope note: the reference engine (S3→Kinesis replay, 817-line
 Java) has no layout story at all — this module exists for the 100 TB
@@ -80,13 +81,13 @@ def zvalue_py(vals: list[int], bits: int = 8) -> int:
     return z
 
 
-# -- Hilbert curve option (2-D) ---------------------------------------------
+# -- Hilbert curve -----------------------------------------------------------
 
 def hilbert_py(x: int, y: int, bits: int) -> int:
     """Hilbert curve distance of grid cell (x, y) on a 2^bits square —
     the standard xy2d bit walk (public domain formulation, e.g.
-    Wikipedia "Hilbert curve"). Driver-side: used to build the lookup
-    table and by tests."""
+    Wikipedia "Hilbert curve"). Driver-side: builds the kind='hilbert'
+    oracle's lookup, independent of the engine's `hilbert_py_nd`."""
     d = 0
     s = 1 << (bits - 1)
     while s > 0:
@@ -103,53 +104,13 @@ def hilbert_py(x: int, y: int, bits: int) -> int:
     return d
 
 
-def hilbert_py_skilling(x: int, y: int, bits: int) -> int:
-    """INDEPENDENT second implementation of the same 2-D Hilbert index,
-    via Skilling's transpose algorithm ("Programming the Hilbert
-    Curve", AIP Conf. Proc. 707, 2004 — public): inverse-undo walk +
-    Gray decode on the coordinate words, then MSB-first interleave of
-    the transpose. Shares NO code or formulation with `hilbert_py`'s
-    rotation walk; equality over the full grid is test-pinned, and the
-    registry's kind='hilbert' oracle builds its lookup from THIS
-    function so the cross-engine gate checks two genuinely independent
-    curve derivations against each other."""
-    X = [x, y]
-    n = 2
-    m = 1 << (bits - 1)
-    q = m
-    while q > 1:                       # inverse undo
-        p = q - 1
-        for i in range(n):
-            if X[i] & q:
-                X[0] ^= p
-            else:
-                t = (X[0] ^ X[i]) & p
-                X[0] ^= t
-                X[i] ^= t
-        q >>= 1
-    for i in range(1, n):              # Gray encode
-        X[i] ^= X[i - 1]
-    t = 0
-    q = m
-    while q > 1:
-        if X[n - 1] & q:
-            t ^= q - 1
-        q >>= 1
-    for i in range(n):
-        X[i] ^= t
-    d = 0                              # transpose -> index (MSB-first)
-    for b in range(bits - 1, -1, -1):
-        d = (d << 1) | ((X[0] >> b) & 1)
-        d = (d << 1) | ((X[1] >> b) & 1)
-    return d
-
-
 def hilbert_py_nd(coords: list[int], bits: int) -> int:
-    """n-DIMENSIONAL Hilbert index via the same Skilling transpose
-    algorithm (`hilbert_py_skilling` is its 2-D instance — equality
-    test-pinned): inverse-undo + Gray decode over the n coordinate
-    words, then MSB-first round-robin interleave. The n-D curve keeps
-    the defining properties (bijection over the 2^(n·bits) grid;
+    """n-DIMENSIONAL Hilbert index via Skilling's transpose algorithm
+    ("Programming the Hilbert Curve", AIP Conf. Proc. 707, 2004 —
+    public; its 2-D instance equals `hilbert_py`'s rotation walk on
+    every cell, test-pinned): inverse-undo + Gray decode over the n
+    coordinate words, then MSB-first round-robin interleave. The n-D
+    curve keeps the defining properties (bijection over the 2^(n·bits) grid;
     consecutive indices are grid neighbors — property-tested at 3-D and
     4-D), which is what makes file boxes compact in every dimension."""
     X = list(coords)
@@ -236,7 +197,10 @@ def hilbert_lookup_nd(spark, bits: int, dims: int):
     table is 2^(dims·bits) rows, capped at 2^16 (dims·bits <= 16 —
     e.g. 3 dims x 5 bits = 32k cells, 4 x 4 = 65k). Beyond that, lower
     bits: curve locality matters at FILE granularity, and even 100 TB
-    is only ~10^5 files — a 2^16-cell grid already over-resolves it."""
+    is only ~10^5 files — a 2^16-cell grid already over-resolves it.
+    A lookup table, not a column expression: the walk carries rotation
+    state, so unrolling it into when/otherwise grows the expression
+    multiplicatively per bit."""
     if dims < 2:
         raise ValueError("hilbert needs >= 2 dimensions")
     if dims * bits > 16:
@@ -255,22 +219,3 @@ def hilbert_lookup_nd(spark, bits: int, dims: int):
             _walk(prefix + [v])
     _walk([])
     return spark.createDataFrame(rows, "zkey long, hkey long")
-
-
-def hilbert_lookup(spark):
-    """(zkey -> hkey) mapping for every cell of the 64 × 64 grid (6 bits
-    per axis), as a broadcastable DataFrame (4,096 rows — metadata
-    scale). Why a LOOKUP TABLE and not a column expression:
-    the xy2d bit walk carries rotation state, so unrolling it into
-    when/otherwise wraps the running x/y expressions once per bit —
-    multiplicative expression growth, the same per-run analysis/codegen
-    cost class that made the 127-node balanced-tree dot LOSE its whole
-    query (r7, dedup_embedding_cosine). A 4k-row
-    broadcast join is the Spark-first shape for small finite functions."""
-    rows = []
-    for x in range(1 << 6):
-        for y in range(1 << 6):
-            rows.append((zvalue_py([x, y], 6), hilbert_py(x, y, 6)))
-    return spark.createDataFrame(rows, "zkey long, hkey long")
-
-

@@ -642,24 +642,6 @@ def _real_decode_image(raw: bytes) -> tuple[int, int, list[float]]:
     return w, h, _pixel_histogram(pixels)
 
 
-def _codec_caps() -> dict:
-    """Driver-side snapshot of worker-affecting codec knobs (r13 review
-    finding): a module-level knob set on the driver does NOT travel to
-    executors — every Python worker re-imports the package from the
-    shipped zip and sees the defaults. The decode kernels capture this
-    snapshot at plan-build time and re-apply it worker-side, so setting
-    `functions.tiff.MAX_SAMPLE_BYTES` on the driver governs the
-    distributed decode path too (the knob's error message advertises
-    exactly that remediation)."""
-    from ..functions import tiff
-    return {"tiff_max_sample_bytes": tiff.MAX_SAMPLE_BYTES}
-
-
-def _apply_codec_caps(caps: dict) -> None:
-    from ..functions import tiff
-    tiff.MAX_SAMPLE_BYTES = caps["tiff_max_sample_bytes"]
-
-
 def decode_images(df: DataFrame) -> DataFrame:
     """Decode + feature-extract image payloads via mapInPandas.
 
@@ -670,10 +652,8 @@ def decode_images(df: DataFrame) -> DataFrame:
     computing a pixel-histogram feature vector over the decoded raster;
     unsupported or corrupt payloads raise loudly from the kernel (the
     gated-fixture contract: a bad blob is a bug)."""
-    caps = _codec_caps()
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _apply_codec_caps(caps)
         drop_zip_finders()
         for pdf in batches:
             out = {"media_id": [], "width": [], "height": [],
@@ -728,7 +708,6 @@ def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     are the OUTPUT dims, pixels the resized raw channel bytes."""
     if out_w < 1 or out_h < 1:
         raise ValueError(f"output dims must be >= 1, got {out_w}x{out_h}")
-    caps = _codec_caps()
 
     def _decode(raw: bytes) -> tuple[int, int, int, bytes]:
         w, h, pixels = _decode_pixels(raw)
@@ -737,7 +716,6 @@ def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
         return w, h, len(pixels) // (w * h), pixels
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _apply_codec_caps(caps)
         drop_zip_finders()
         for pdf in batches:
             out = {"media_id": [], "width": [], "height": [],

@@ -114,35 +114,17 @@ _BOUNDS_MEMO: dict[tuple, list[float]] = {}
 def _range_bucket_key(df: DataFrame, first_col: str):
     """A double-valued, order-preserving bucketing key for the FIRST order
     column (the column quantile bounds are computed on). Monotonic, so
-    bucketing on it groups whole runs of equal first-keys together."""
+    bucketing on it groups whole runs of equal first-keys together. The
+    first keys in use are event time and numeric ids."""
     dt = dict(df.dtypes)[first_col]
     if dt.startswith("timestamp"):
         return F.unix_micros(F.col(first_col)).cast("double")
-    if dt == "date":
-        return F.unix_date(F.col(first_col)).cast("double")
     numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
     if dt in numeric or dt.startswith("decimal"):
         return F.col(first_col).cast("double")
-    if dt == "boolean":
-        return F.col(first_col).cast("int").cast("double")
-    if dt == "string":
-        # Order-preserving double from the first TWO code points
-        # (21 bits each packs exactly into a double's 53-bit mantissa).
-        # Coarse on purpose: strings sharing a 2-codepoint prefix merge
-        # into one bucket (runs are never split — same caveat as equal
-        # keys), and the within-bucket window still orders by the full
-        # column, so the global numbering stays exact. Restores the
-        # any-orderable-type API the repartitionByRange design had
-        # (ADVICE r3): callers leading with a low-cardinality-prefix
-        # string column pay bucket skew, not wrong answers.
-        c = F.col(first_col)
-        cp0 = F.ascii(c).cast("double")                     # 0 when empty
-        cp1 = F.ascii(F.substring(c, 2, 1)).cast("double")  # 0 when short
-        return cp0 * F.lit(float(1 << 21)) + cp1
     raise TypeError(
-        f"with_global_index needs a numeric/timestamp/date/string/boolean "
-        f"first order column to compute deterministic range bounds; "
-        f"got {first_col}: {dt}")
+        f"with_global_index needs a numeric/timestamp first order column "
+        f"to compute deterministic range bounds; got {first_col}: {dt}")
 
 
 def with_global_index(df: DataFrame, order_cols: list[str]) -> DataFrame:

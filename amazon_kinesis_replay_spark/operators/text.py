@@ -33,7 +33,7 @@ EN_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 def tokens_expr(c: str) -> str:
     """The package tokenizer: split(trim(lower(c)), '\\s+') with Java
     semantics (trim strips spaces only; \\s is ASCII-only). Every Spark
-    path that tokenizes text (features, shingles, retrieval, suffix
+    path that tokenizes text (features, shingles, retrieval, span
     windows) goes through this string; its Python twin is
     `functions.xxh.tokens_spark`."""
     return f"split(trim(lower({c})), '\\\\s+')"

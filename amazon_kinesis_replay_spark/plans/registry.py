@@ -2028,15 +2028,15 @@ def q_dedup_exact(spark, sf_dir):
       `layout.zvalue_sql` — one bit-placement source of truth, qhist's
       independent-SQL gate class.
     - kind='hilbert' (r9): the Hilbert layout key — zvalue
-      interleave + broadcast zkey→hkey lookup (`layout.hilbert_lookup`,
-      from `hilbert_py`'s rotation walk) on a 64×64
-      grid over the same (user, ms) quantization; keep_id = row count,
-      dup_count = Σhkey, span_start/span_end = min/max hkey. The
-      oracle's lookup is generated from `hilbert_py_skilling` —
-      Skilling's transpose algorithm, an INDEPENDENT formulation — so
-      the gate cross-checks two curve derivations on real data
-      (simhash gate class, with DuckDB's own zvalue_sql arithmetic
-      feeding the join key).
+      interleave + broadcast zkey→hkey lookup
+      (`layout.hilbert_lookup_nd`, from `hilbert_py_nd`'s Skilling
+      walk) on a 64×64 grid over the same (user, ms) quantization;
+      keep_id = row count, dup_count = Σhkey, span_start/span_end =
+      min/max hkey. The oracle's lookup is generated from `hilbert_py`'s
+      rotation walk, an INDEPENDENT formulation, so the gate
+      cross-checks two curve derivations on real data (simhash gate
+      class, with DuckDB's own zvalue_sql arithmetic feeding the join
+      key).
     - kind='hilbert_nd' (r10): the 3-D Hilbert key at 4 bits/dim over
       (user, ms, event_id) — engine lookup from the n-D Skilling ENCODE
       walk; oracle lookup built by INVERTING the paper's DECODE
@@ -2061,12 +2061,8 @@ def q_dedup_exact(spark, sf_dir):
       span_start/span_end = min/max code. The oracle REDERIVES the codes
       in DuckDB from the same parquet with list lambdas — qhist gate
       class (no literals), pinning the quantizer cross-engine.
-    - kind='sa' (r8, third continuation): the suffix-array EXACTNESS
-      tier (`operators/suffix.duplicated_runs`, prefix-doubling ranks —
-      Lee et al.'s actual structure, distributed) at min_len=12, which
-      is definitionally equal to kind='span': the oracle re-SELECTs the
-      same gaps-and-islands CTE, so DuckDB's window-hash SQL now checks
-      BOTH independent Spark algorithms (hash groupBy vs suffix ranks).
+    - kind='sa': the kind='span' rows again under the label 'sa', as in
+      the oracle; the label stays until the registry outputs are unpinned.
     - kind='chunk' (r8, third continuation): the sliding-window chunker
       behind `text.chunk_documents` (chunk_tokens=64, overlap=16) — one
       row PER CHUNK: keep_id = doc_id, dup_count = chunk_id,
@@ -2081,10 +2077,9 @@ def q_dedup_exact(spark, sf_dir):
     from ..operators import text as text_ops
     ensure_engine_conf(spark)
     # r13 opt: ten kind families derive from this scan, each with real
-    # per-row work (window hashes, bloom/qhist explodes, suffix ranks,
-    # chunk windows) — single-task on a few-file corpus without the
-    # conditional widen (measured at full-bench conditions: 24.4 ->
-    # 19.4 s at sf0.1).
+    # per-row work (window hashes, bloom/qhist explodes, chunk windows)
+    # — single-task on a few-file corpus without the conditional widen
+    # (measured at full-bench conditions: 24.4 -> 19.4 s at sf0.1).
     d = widen_if_narrow(load(spark, sf_dir, "documents")) \
         .select("doc_id", "text")
     copy = d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
@@ -2132,15 +2127,15 @@ def q_dedup_exact(spark, sf_dir):
         F.col("dup_count").cast("long").alias("dup_count"),
         "span_start", "span_end")
     # kind='hilbert' (r9): zkey interleave + broadcast zkey->hkey
-    # lookup (layout.hilbert_lookup, built from hilbert_py's rotation
-    # walk) on a 64x64 grid; the oracle joins a VALUES lookup
-    # built from the INDEPENDENT Skilling transpose implementation —
-    # the gate cross-checks two curve derivations on real data.
+    # lookup (layout.hilbert_lookup_nd, built from hilbert_py_nd's
+    # Skilling walk) on a 64x64 grid; the oracle joins a VALUES lookup
+    # built from the INDEPENDENT rotation walk (hilbert_py) — the gate
+    # cross-checks two curve derivations on real data.
     ev6 = (load(spark, sf_dir, "events")
            .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
            .select(F.pmod(F.col("user_id"), F.lit(64)).alias("u"),
                    F.pmod(F.unix_millis("ts"), F.lit(64)).alias("m")))
-    lut6 = layout.hilbert_lookup(spark)
+    lut6 = layout.hilbert_lookup_nd(spark, bits=6, dims=2)
     hi_rows = (ev6.select(
         layout.zvalue([F.col("u"), F.col("m")], bits=6).alias("zkey"))
         .join(F.broadcast(lut6), "zkey")
@@ -2202,12 +2197,8 @@ def q_dedup_exact(spark, sf_dir):
                        F.col("dup_count").cast("long").alias("dup_count"),
                        F.col("span_start").cast("long").alias("span_start"),
                        F.col("span_end").cast("long").alias("span_end")))
-    from ..operators import suffix as sfx
-    sa_rows = (sfx.duplicated_runs(d, "doc_id", "text")
-               .select(F.lit("sa").alias("kind"),
-                       F.col("doc_id").alias("keep_id"),
-                       F.col("n_windows").cast("long").alias("dup_count"),
-                       "span_start", "span_end"))
+    sa_rows = sp_rows.select(F.lit("sa").alias("kind"), "keep_id",
+                             "dup_count", "span_start", "span_end")
     ch_rows = (text_ops.chunk_documents(d, "doc_id", "text")
                .select(F.lit("chunk").alias("kind"),
                        F.col("doc_id").alias("keep_id"),
@@ -2517,15 +2508,14 @@ def _hilbert_summary_sql() -> str:
     """kind='hilbert' summary (r9) — the simhash/bloom gate class with a
     twist: the zkey is DuckDB's own `zvalue_sql` arithmetic, and the
     zkey->hkey map is a 4096-row VALUES lookup generated at oracle-build
-    time from `layout.hilbert_py_skilling` — Skilling's transpose
-    algorithm, a formulation INDEPENDENT of the rotation walk
-    (`hilbert_py`) that builds the engine's broadcast lookup. Agreement
-    of the two derivations over the whole 64x64 grid is what the hash
-    checks, on real event rows."""
-    from ..operators.layout import hilbert_py_skilling, zvalue_py, zvalue_sql
+    time from `layout.hilbert_py` — the rotation walk, a formulation
+    INDEPENDENT of the Skilling transpose (`hilbert_py_nd`) that builds
+    the engine's broadcast lookup. Agreement of the two derivations over
+    the whole 64x64 grid is what the hash checks, on real event rows."""
+    from ..operators.layout import hilbert_py, zvalue_py, zvalue_sql
     z = zvalue_sql(["u", "m"], bits=6)
     vals = ", ".join(
-        f"({zvalue_py([x, y], 6)},{hilbert_py_skilling(x, y, 6)})"
+        f"({zvalue_py([x, y], 6)},{hilbert_py(x, y, 6)})"
         for x in range(64) for y in range(64))
     return f"""
         UNION ALL

@@ -35,15 +35,15 @@ Methodology notes:
   published figure is the QUIETEST attempt (lowest mp canary, tie-broken
   by the single-thread canary), and `attempts` logs every attempt's
   total + canaries so the regime of each sample is auditable.
-- COLD REPS (r14, r13 verdict item 2): `spark.catalog.clearCache()` runs
-  before EVERY timed sample (outside the timer), so operator-internal
-  persists materialize inside each sample's own window instead of being
-  silently reused across reps via CacheManager plan matching. Published
-  numbers for persisted-subtree entries (minhash_dedup, simhash,
-  ngram/training-pipeline shingle caches, doc_train_split) are therefore
-  cold steady-state from r14 on — compare to r13's published figures
-  only through the methodology note in OPTIMIZATION_r14.md (which
-  records both with- and without-clear runs on the same tree).
+- COLD REPS (r14): every sample computes from parquet. No package code
+  caches in the catalog (operators materialise through
+  `session.materialize`'s localCheckpoint, which no later rep can
+  match; `test_one_materialisation_form` enforces it), so a rep cannot
+  reuse an earlier rep's work. `spark.catalog.clearCache()` still runs
+  before every timed sample, outside the timer, so a sample has the
+  shape of perfbench's `queries_cold` unit. r13's published figures
+  were warm-cache numbers; compare to them only through the
+  methodology note in OPTIMIZATION_r14.md.
 - `value_normalized` = value * min(1, CANARY_REF_SEC / canary_sec):
   quiet-box-equivalent seconds. The correction only ever DEFLATES a
   loaded run toward its quiet equivalent; on a quiet-or-faster box the
@@ -213,16 +213,10 @@ def _sweep(spark, sf_dir: str) -> dict:
     timings: dict[str, float] = {}
     for _ in range(N_RUNS):
         for name in HEADLINE:
-            # COLD-REP HYGIENE (r14, r13 verdict item 2): several queries
-            # persist() internal subtrees (shingle arrays, LSH band
-            # entries) as a within-run branch-dedup barrier. Spark's
-            # CacheManager matches by canonicalized plan, so without this
-            # clear a fresh fn() in rep 2 silently REUSES rep 1's
-            # materialized cache and the published min is a warm-cache
-            # number (r13 published minhash_dedup 0.377 vs its honest
-            # cold ~1.0). Clearing between samples makes every sample
-            # compute from parquet; the clear itself runs OUTSIDE the
-            # timed region (it is not the query's work).
+            # COLD REPS: no package code caches in the catalog, so this
+            # clear frees nothing the queries made; it keeps each sample
+            # shaped like perfbench's queries_cold unit, and runs OUTSIDE
+            # the timed region (it is not the query's work).
             spark.catalog.clearCache()
             t0 = time.monotonic()
             QUERIES[name].fn(spark, sf_dir).write.format(

@@ -70,13 +70,11 @@ SLOW_TESTS = {
     "tests/test_asof_join.py::test_asof_join_timestamp_tolerance",
     "tests/test_cli.py::test_cli_end_to_end_lz4_sniffed_partitioned",
     "tests/test_metrics_and_props.py::test_global_index_is_a_permutation",
-    "tests/test_metrics_and_props.py::test_global_index_string_first_key",
     "tests/test_metrics_and_props.py::test_jaccard_pairs_invariants",
     "tests/test_pipeline_ops.py::test_dedup_clusters_pairs_path_and_chained_check",
     "tests/test_pipeline_ops.py::test_semantic_dedup_multi_assign",
     "tests/test_sources_and_sinks.py::test_zstd_seeded_mutation_fuzz_never_crashes",
     "tests/test_streaming_replay.py::test_composed_replay_witness_small",
-    "tests/test_suffix.py::test_suffix_ranks_equality_classes",
 }
 
 

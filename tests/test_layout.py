@@ -64,24 +64,25 @@ def test_hilbert_is_a_continuous_bijection() -> None:
         assert abs(x1 - x2) + abs(y1 - y2) == 1
 
 
-def test_hilbert_skilling_twin_matches_rotation_walk():
-    """The two independent Hilbert derivations — the xy2d rotation walk
-    (hilbert_py) and Skilling's transpose algorithm
-    (hilbert_py_skilling) — agree on EVERY cell of the full grid at
-    bits 1..6 (the gate's operating point is 6) and on random cells at
-    bits=8. This equality is what the registry's kind='hilbert' oracle
-    relies on."""
+def test_hilbert_nd_2d_matches_rotation_walk():
+    """The two independent 2-D Hilbert derivations — the xy2d rotation
+    walk (hilbert_py, the kind='hilbert' oracle's builder) and the 2-D
+    instance of Skilling's transpose algorithm (hilbert_py_nd, the
+    engine's builder) — agree on EVERY cell of the full grid at bits
+    1..6 (the gate's operating point is 6) and on random cells at
+    bits=8. This equality is what lets the engine and the 2-D oracle
+    agree."""
     import random
     for bits in range(1, 7):
         n = 1 << bits
         for x in range(n):
             for y in range(n):
-                assert (layout.hilbert_py_skilling(x, y, bits)
+                assert (layout.hilbert_py_nd([x, y], bits)
                         == layout.hilbert_py(x, y, bits)), (bits, x, y)
     rng = random.Random(11)
     for _ in range(500):
         x, y = rng.randrange(256), rng.randrange(256)
-        assert (layout.hilbert_py_skilling(x, y, 8)
+        assert (layout.hilbert_py_nd([x, y], 8)
                 == layout.hilbert_py(x, y, 8))
 
 
@@ -90,7 +91,7 @@ def test_hilbert_nd_bijection_adjacency_and_2d_equality():
     3-D (bits=3, 512 cells) and 4-D (bits=2, 256 cells): every index
     hit exactly once, and consecutive indices are GRID NEIGHBORS
     (one coordinate changes by exactly 1). Its 2-D instance equals
-    both 2-D implementations."""
+    the rotation walk."""
     for dims, bits in ((3, 3), (4, 2)):
         n = 1 << bits
         pos = {}
@@ -112,7 +113,6 @@ def test_hilbert_nd_bijection_adjacency_and_2d_equality():
         for y in range(16):
             d = layout.hilbert_py_nd([x, y], 4)
             assert d == layout.hilbert_py(x, y, 4)
-            assert d == layout.hilbert_py_skilling(x, y, 4)
 
 
 def test_hilbert_decode_direction_is_exact_inverse():

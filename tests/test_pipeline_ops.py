@@ -2227,10 +2227,56 @@ def test_shingle_arrays_extra_columns(spark):
     assert len(out[1]["shs"]) == 2            # "a b c", "b c d"
 
 
+#: Planted within-doc, cross-doc, overlapping and boundary-adjacent
+#: repeats for `test_duplicate_spans_crafted`'s python-twin check.
+_SPAN_CRAFTED = [
+    (1, "the quick brown fox jumps over the lazy dog again and again"),
+    (2, "a totally unique document with no repeats whatsoever here"),
+    (3, "the quick brown fox jumps over the lazy dog again and again"),
+    (4, "prefix words then the quick brown fox jumps over the lazy dog"),
+    (5, "xx yy xx yy xx yy xx yy"),          # overlapping periodic run
+    (6, "the lazy dog again"),               # shares a sub-window run
+    (7, " ".join(["xx yy zz"] * 9)),         # periodic, many windows
+    (8, "lead " + " ".join(["xx yy zz"] * 5)),   # shares doc 7's runs
+]
+
+
+def _py_span_runs(docs, min_len):
+    """Brute-force twin of `dedup.duplicate_spans`: every min_len-token
+    window occurring more than once flags its start; flagged starts at
+    most min_len apart merge into one (doc, start, end, n_windows)."""
+    from collections import Counter
+
+    from amazon_kinesis_replay_spark.functions.xxh import tokens_spark
+    toks = {i: tokens_spark(t) for i, t in docs}
+    seen = Counter()
+    for tt in toks.values():
+        for p in range(len(tt) - min_len + 1):
+            seen[tuple(tt[p:p + min_len])] += 1
+    out = []
+    for i, tt in toks.items():
+        starts = [p for p in range(len(tt) - min_len + 1)
+                  if seen[tuple(tt[p:p + min_len])] > 1]
+        island = []
+        for p in starts:
+            if island and p <= island[-1] + min_len:
+                island.append(p)
+            else:
+                if island:
+                    out.append((i, island[0], island[-1] + min_len,
+                                len(island)))
+                island = [p]
+        if island:
+            out.append((i, island[0], island[-1] + min_len, len(island)))
+    return sorted(out)
+
+
 def test_duplicate_spans_crafted(spark):
     """Hand-built corpus, 12-token windows: a cross-doc shared 14-token
     run merges to one span per doc; a periodic doc self-duplicates into
-    one whole-doc span; unique docs emit nothing."""
+    one whole-doc span; unique docs emit nothing. A second crafted
+    corpus matches the python twin however it is split into
+    partitions."""
     assert dedup.SPAN_WINDOW == 12
 
     def words(prefix, n):
@@ -2247,40 +2293,29 @@ def test_duplicate_spans_crafted(spark):
            for r in spans.collect()}
     assert got == {(1, 0, 14, 3), (2, 2, 16, 3), (4, 0, 24, 13)}
 
+    want = _py_span_runs(_SPAN_CRAFTED, dedup.SPAN_WINDOW)
+    assert {r[0] for r in want} == {1, 3, 7, 8}
+    for n_parts in (2, 3, 4, 8):
+        df = spark.createDataFrame(_SPAN_CRAFTED,
+                                   "doc_id long, text string") \
+            .repartition(n_parts)
+        got = sorted(
+            (r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
+            for r in dedup.duplicate_spans(df, "doc_id", "text").collect())
+        assert got == want, n_parts
+
 
 def test_duplicate_spans_matches_python_reference(spark, sf_dir):
-    """Fixture corpus vs an independent brute-force recompute (dict of
-    window-string -> occurrence count, then island merge per doc)."""
-    W = dedup.SPAN_WINDOW
+    """Fixture corpus vs the independent brute-force twin (count of
+    every window, then island merge per doc)."""
     d = load(spark, sf_dir, "documents")
     rows = [(r["doc_id"], r["text"]) for r in
             d.select("doc_id", "text").collect()]
-    from collections import Counter, defaultdict
-    cnt = Counter()
-    occ = defaultdict(list)
-    for doc_id, text in rows:
-        t = text.strip().lower().split()
-        for i in range(len(t) - W + 1):
-            win = " ".join(t[i:i + W])
-            cnt[win] += 1
-            occ[doc_id].append((i, win))
-    expect = set()
-    for doc_id, wins in occ.items():
-        dup_pos = sorted(i for i, w in wins if cnt[w] > 1)
-        if not dup_pos:
-            continue
-        start, prev, n = dup_pos[0], dup_pos[0], 1
-        for p in dup_pos[1:]:
-            if p > prev + W:
-                expect.add((doc_id, start, prev + W, n))
-                start, n = p, 0
-            prev = p
-            n += 1
-        expect.add((doc_id, start, prev + W, n))
     spans = dedup.duplicate_spans(d, "doc_id", "text")
-    got = {(r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-           for r in spans.collect()}
-    assert got == expect
+    got = sorted((r["doc_id"], r["span_start"], r["span_end"],
+                  r["n_windows"]) for r in spans.collect())
+    want = _py_span_runs(rows, dedup.SPAN_WINDOW)
+    assert got == want and want           # non-vacuous: fixture has dups
 
 
 def test_semantic_dedup_crafted(spark):
@@ -3589,6 +3624,20 @@ def test_tiff_seeded_mutation_fuzz_never_crashes():
             pass
 
 
+def _tiff_patch_long(buf: bytearray, tag: int, value: int) -> None:
+    """Rewrite a little-endian TIFF's IFD entry `tag` as LONG cnt=1 with
+    an inline value."""
+    import struct as st
+    off = st.unpack_from("<I", buf, 4)[0]
+    n = st.unpack_from("<H", buf, off)[0]
+    for i in range(n):
+        e = off + 2 + 12 * i
+        if st.unpack_from("<H", buf, e)[0] == tag:
+            st.pack_into("<HHII", buf, e, tag, 4, 1, value)
+            return
+    raise AssertionError(f"tag {tag} not in IFD")
+
+
 def test_tiff_16bit_allocation_bomb_guard():
     """r11 advice (medium): a <1 MB LZW 16-bit TIFF declaring dims that
     pass the old SAMPLE-count cap but explode in BYTES
@@ -3598,7 +3647,6 @@ def test_tiff_16bit_allocation_bomb_guard():
     (~30+ bytes per sample). Wall time and Python peak allocation are
     pinned so a guard regression fails loudly, not by OOM-killing the
     suite."""
-    import struct as st
     import time
     import tracemalloc
 
@@ -3608,17 +3656,6 @@ def test_tiff_16bit_allocation_bomb_guard():
                                                             decode_tiff,
                                                             encode_tiff)
 
-    def patch_long(buf: bytearray, tag: int, value: int) -> None:
-        # rewrite the IFD entry as LONG cnt=1 with an inline value
-        off = st.unpack_from("<I", buf, 4)[0]
-        n = st.unpack_from("<H", buf, off)[0]
-        for i in range(n):
-            e = off + 2 + 12 * i
-            if st.unpack_from("<H", buf, e)[0] == tag:
-                st.pack_into("<HHII", buf, e, tag, 4, 1, value)
-                return
-        raise AssertionError(f"tag {tag} not in IFD")
-
     base = encode_tiff(8, 8, bytes(8 * 8 * 2), spp=1, compression=5,
                        bits=16)
     assert len(base) < (1 << 20)
@@ -3626,8 +3663,8 @@ def test_tiff_16bit_allocation_bomb_guard():
         assert w * h * 1 <= (1 << 30)          # dodges the sample cap
         assert w * h * 1 * 2 > (1 << 28)       # trips the byte cap
         b = bytearray(base)
-        patch_long(b, 256, w)
-        patch_long(b, 257, h)
+        _tiff_patch_long(b, 256, w)
+        _tiff_patch_long(b, 257, h)
         tracemalloc.start()
         t0 = time.monotonic()
         with pytest.raises(TIFFError):
@@ -3643,41 +3680,35 @@ def test_tiff_16bit_allocation_bomb_guard():
     tiled = encode_tiff(16, 16, bytes(16 * 16 * 2), spp=1,
                         compression=5, bits=16, tile=(16, 16))
     b = bytearray(tiled)
-    patch_long(b, 322, 16384)                  # TileWidth
-    patch_long(b, 323, 16384)                  # TileLength
+    _tiff_patch_long(b, 322, 16384)            # TileWidth
+    _tiff_patch_long(b, 323, 16384)            # TileLength
     with pytest.raises(TIFFError):
         decode_tiff(bytes(b))
 
 
-def test_decode_images_tiff_cap_knob_reaches_executors(spark):
-    """r13 review (the knob's own error message advertises raising
-    `functions.tiff.MAX_SAMPLE_BYTES` — but a module knob set on the
-    driver never reaches executor Python workers, which re-import the
-    package and see the default): decode kernels snapshot the driver's
-    codec caps at plan-build time and re-apply them worker-side.
-    Proven in the decisive direction — LOWER the knob on the driver and
-    watch valid TIFF blobs hit the cap in the distributed path, then
-    restore it and watch them decode."""
+def test_decode_images_tiff_over_cap_fails_loudly(spark):
+    """The distributed decode paths keep the TIFF sample-byte cap: a
+    small blob whose header declares 16384x16384 16-bit samples (2^29
+    bytes > MAX_SAMPLE_BYTES) fails the whole job through both
+    `decode_images` and `resize_images`, naming the cap."""
     import pytest
 
     from amazon_kinesis_replay_spark.functions import tiff
     from amazon_kinesis_replay_spark.operators.multimodal import (
         decode_images, resize_images)
 
-    blob = tiff.encode_tiff(8, 8, bytes(8 * 8), spp=1)
-    df = spark.createDataFrame([(1, blob), (2, blob)],
+    b = bytearray(tiff.encode_tiff(8, 8, bytes(8 * 8 * 2), spp=1,
+                                   compression=5, bits=16))
+    _tiff_patch_long(b, 256, 16384)
+    _tiff_patch_long(b, 257, 16384)
+    assert 16384 * 16384 * 2 > tiff.MAX_SAMPLE_BYTES
+    ok = tiff.encode_tiff(8, 8, bytes(8 * 8), spp=1)
+    df = spark.createDataFrame([(1, ok), (2, bytes(b))],
                                "media_id long, data binary")
-    old = tiff.MAX_SAMPLE_BYTES
-    try:
-        tiff.MAX_SAMPLE_BYTES = 8          # 8x8x1 = 64 samples > 8
-        with pytest.raises(Exception, match="MAX_SAMPLE_BYTES"):
-            decode_images(df).collect()    # driver knob reached workers
-        with pytest.raises(Exception, match="MAX_SAMPLE_BYTES"):
-            resize_images(df, 4, 4).collect()
-        tiff.MAX_SAMPLE_BYTES = old
-        assert decode_images(df).count() == 2
-    finally:
-        tiff.MAX_SAMPLE_BYTES = old
+    with pytest.raises(Exception, match="sample-byte cap"):
+        decode_images(df).collect()
+    with pytest.raises(Exception, match="sample-byte cap"):
+        resize_images(df, 4, 4).collect()
 
 
 def test_image_codecs_raise_only_skip_tuple_under_mutation():

@@ -21,8 +21,6 @@ near-linear curve is the evidence the plans have no quadratic term:
 - bm25           : inverted-index build (explode -> combinable groupBy)
 - asof           : as-of join — union + one keyed window
 - gapfill        : minute aggregate + dense-spine gap fill
-- suffix_sa      : prefix-doubling suffix ranks (log factor constant in
-                   corpus size)
 - media          : Arrow-batched image/audio decode — no shuffle at all
 
 Usage: python tools/scale_probe.py [sf_dir] [family ...]
@@ -215,17 +213,6 @@ def main():
                    .filter(F.col("asof_ts").isNotNull()).count())
         return f"{n} events -> {matched} matched purchases"
 
-    def run_suffix_sa(mult):
-        # 3rd continuation: prefix-doubling suffix ranks — ceil(log2 L)
-        # rounds of (shifted self-join + distributed dense-rank) over
-        # token-scale rows; the curve must track the token count, with
-        # the log factor CONSTANT in corpus size (it depends on L only)
-        corpus = _expand_docs(docs, mult)
-        from amazon_kinesis_replay_spark.operators import suffix as sfx
-        spans = sfx.duplicated_runs(corpus, "doc_id", "text")
-        n = spans.count()
-        return f"x{mult} -> {n} duplicated spans"
-
     def run_gapfill(mult):
         # 3rd continuation: copies shift by ~the fixture's time span so
         # the DENSE minute spine grows ∝ mult too (both the aggregate
@@ -268,7 +255,6 @@ def main():
         ("packing", run_packing),
         ("asof", run_asof),
         ("gapfill", run_gapfill),
-        ("suffix_sa", run_suffix_sa),
     ]
     for name, fn in all_families:
         if only and name not in only:
