@@ -2228,7 +2228,7 @@ def test_shingle_arrays_extra_columns(spark):
 
 
 #: Planted within-doc, cross-doc, overlapping and boundary-adjacent
-#: repeats for `test_duplicate_spans_crafted`'s python-twin check.
+#: repeats for `test_duplicate_spans_matches_python_twin`.
 _SPAN_CRAFTED = [
     (1, "the quick brown fox jumps over the lazy dog again and again"),
     (2, "a totally unique document with no repeats whatsoever here"),
@@ -2274,9 +2274,7 @@ def _py_span_runs(docs, min_len):
 def test_duplicate_spans_crafted(spark):
     """Hand-built corpus, 12-token windows: a cross-doc shared 14-token
     run merges to one span per doc; a periodic doc self-duplicates into
-    one whole-doc span; unique docs emit nothing. A second crafted
-    corpus matches the python twin however it is split into
-    partitions."""
+    one whole-doc span; unique docs emit nothing."""
     assert dedup.SPAN_WINDOW == 12
 
     def words(prefix, n):
@@ -2293,16 +2291,19 @@ def test_duplicate_spans_crafted(spark):
            for r in spans.collect()}
     assert got == {(1, 0, 14, 3), (2, 2, 16, 3), (4, 0, 24, 13)}
 
+
+@pytest.mark.parametrize("n_parts", [2, 3, 4, 8])
+def test_duplicate_spans_matches_python_twin(spark, n_parts):
+    """A crafted corpus of planted repeats matches the python twin
+    however it is split into partitions."""
     want = _py_span_runs(_SPAN_CRAFTED, dedup.SPAN_WINDOW)
     assert {r[0] for r in want} == {1, 3, 7, 8}
-    for n_parts in (2, 3, 4, 8):
-        df = spark.createDataFrame(_SPAN_CRAFTED,
-                                   "doc_id long, text string") \
-            .repartition(n_parts)
-        got = sorted(
-            (r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
-            for r in dedup.duplicate_spans(df, "doc_id", "text").collect())
-        assert got == want, n_parts
+    df = spark.createDataFrame(_SPAN_CRAFTED, "doc_id long, text string") \
+        .repartition(n_parts)
+    got = sorted(
+        (r["doc_id"], r["span_start"], r["span_end"], r["n_windows"])
+        for r in dedup.duplicate_spans(df, "doc_id", "text").collect())
+    assert got == want
 
 
 def test_duplicate_spans_matches_python_reference(spark, sf_dir):
